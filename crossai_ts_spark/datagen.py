@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .schema import SEQUENCES_SCHEMA
+from .workers import worker_kernel
 
 VOCAB = 50257
 SOURCES = ["web", "books", "code", "wiki", "forums", "papers", "news", "chat"]
@@ -87,6 +88,7 @@ def gen_sequences(
     if partitions is None:
         partitions = max(8, math.ceil(n_docs / 2000))
 
+    @worker_kernel
     def make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = [_doc(seed, int(i), max_tok) for i in pdf["id"]]

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from .operators.rollup import cascade_native, rollup_native
 from .operators.salted import salted_tier_source_rollup
 from .sources.tokenize import tokenize_documents
+from .workers import worker_kernel
 
 REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {}
 
@@ -2508,6 +2509,7 @@ def cubic_spline_interp(spark, sf_dir):
         F.count("*").alias("nmin"),
     ).filter(F.col("nmin") >= 8)
 
+    @worker_kernel
     def kernel(batches):
         import numpy as np
         import pandas as pd
@@ -3374,6 +3376,7 @@ def augment_timewarp_stretch(spark, sf_dir):
 
     seqs = tokenize_documents(load(spark, sf_dir, "documents"))
 
+    @worker_kernel
     def kernel(batches):
         import numpy as np
 
@@ -3476,6 +3479,7 @@ def resample_polyphase(spark, sf_dir):
 
     seqs = tokenize_documents(load(spark, sf_dir, "documents"))
 
+    @worker_kernel
     def kernel(batches):
         import numpy as np
 
@@ -4230,6 +4234,7 @@ def eepd_counts(spark, sf_dir):
     bps, lp = _eepd_sos()
     seqs = tokenize_documents(load(spark, sf_dir, "documents"))
 
+    @worker_kernel
     def kernel(batches):
         import numpy as np
 

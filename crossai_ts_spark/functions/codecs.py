@@ -37,6 +37,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
+from ..workers import worker_kernel
+
 # ------------------------------------------------------------------ bits
 
 
@@ -264,7 +266,7 @@ def compress_tiers_grouped(tier_df, value_col: str = "t_mean"):
     from ..schema import COMPRESSED_TIER_SCHEMA
 
     return tier_df.groupBy("doc_id", "tier").applyInPandas(
-        lambda pdf: compress_group(pdf, value_col), schema=COMPRESSED_TIER_SCHEMA
+        worker_kernel(lambda pdf: compress_group(pdf, value_col)), schema=COMPRESSED_TIER_SCHEMA
     )
 
 
@@ -285,10 +287,12 @@ def compress_tiers(tier_df, value_col: str = "t_mean", partitions: int | None = 
     spark = tier_df.sparkSession
     if partitions is None:
         # default to spark.sql.shuffle.partitions (the cluster-tuned knob),
-        # NOT a 4x multiple of it: the encode stage is CPU-bound in the
-        # Python runner, so each extra task costs ~5-10 ms of runner
-        # round-trip — the old 4x count measured 1.74 s vs 0.75 s at 1x on
-        # the sf0.1 tier table at local[32]. An UNPINNED repartition("doc_id")
+        # NOT a 4x multiple of it: every Python task pays a fixed setup
+        # cost. An empty mapInPandas task at local[4] (4-core VM) measured
+        # 0.32-0.39 s before @worker_kernel stopped the per-task zip
+        # directory re-reads, and 0.13-0.16 s after (32 tasks: 2.8-3.1 s
+        # -> 0.9-1.1 s). The old 4x count measured 1.74 s vs 0.75 s at 1x
+        # on the sf0.1 tier table at local[32]. An UNPINNED repartition("doc_id")
         # is wrong in the other direction: AQE's byte-based coalescing sees
         # a few MB and folds the stage to ~1 partition, serializing the
         # encode (measured 4.2 s). Zipf doc-length skew is bounded (a doc
@@ -296,6 +300,7 @@ def compress_tiers(tier_df, value_col: str = "t_mean", partitions: int | None = 
         # cluster-width tasks don't straggle; callers can still pin a count.
         partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
 
+    @worker_kernel
     def kernel(batches):
         pend: pd.DataFrame | None = None
 
@@ -357,6 +362,7 @@ def decompress_tiers(seg_df):
     np.concatenate instead of one pandas frame per segment.
     """
 
+    @worker_kernel
     def decode(batches):
         for pdf in batches:
             offs_l = [dod_decode_fast(bytes(b)) for b in pdf["ts_blob"]]
@@ -387,6 +393,7 @@ def tokens_roundtrip_check(df):
     Runs entirely inside mapInPandas; returns (doc_id, n_tok, ok boolean).
     """
 
+    @worker_kernel
     def check(batches):
         for pdf in batches:
             oks = []
@@ -411,6 +418,7 @@ def tokens_roundtrip_sums(df):
     plain sum would miss).
     """
 
+    @worker_kernel
     def check(batches):
         for pdf in batches:
             oks, sums, wsums = [], [], []

@@ -27,6 +27,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from ..workers import worker_kernel
+
 
 # ----------------------------------------------------------------- core
 
@@ -229,6 +231,7 @@ DSP_SCHEMA = (
 def dsp_features(df: DataFrame, n_fft: int = 128, hop: int = 32) -> DataFrame:
     """Composite DSP feature row per doc (STFT-family + filters), Arrow-batched."""
 
+    @worker_kernel
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
@@ -274,6 +277,7 @@ def stft_frames(df: DataFrame, n_fft: int = 128, hop: int = 64) -> DataFrame:
     """Exploded spectrum rows (doc_id, frame_idx, bin, mag) — the
     FeatureExtractorSpectrum shape (caits/transformers/.../_spectrum.py:8-60)."""
 
+    @worker_kernel
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             outs = []

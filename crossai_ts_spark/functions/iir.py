@@ -37,6 +37,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from ..workers import worker_kernel
+
 # ------------------------------------------------------------- design
 
 
@@ -368,6 +370,7 @@ def butterworth_docs(
     per sequence — the cluster parallelizes across docs."""
     sos = butter_sos(order, cutoff_freq, fs, btype=filter_type)
 
+    @worker_kernel
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, payload = [], []

@@ -29,6 +29,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from ..workers import worker_kernel
+
 SPECTRAL_FIELDS = [
     "sp_centroid",
     "sp_rolloff",
@@ -119,6 +121,7 @@ def spectral_features(df: DataFrame, fs: float = 1.0) -> DataFrame:
     mapInPandas (Arrow batches), numpy inside — never per-row Python.
     """
 
+    @worker_kernel
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []

@@ -35,6 +35,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..workers import worker_kernel
+
 N = 64  # frame length
 K = N // 2 + 1  # rFFT bins
 FS = 64.0  # frame sample rate -> freq of bin k is exactly k
@@ -176,6 +178,7 @@ def spectral_features_exact(df: DataFrame) -> DataFrame:
     64-token frame (docs with n_tok >= 64). Cross-engine bit-exact."""
     src = df.filter(F.col("n_tok") >= N).select("doc_id", "tokens")
 
+    @worker_kernel
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
@@ -221,6 +224,7 @@ def dsp_features_exact(df: DataFrame) -> DataFrame:
     MFCCs over the first 64-token frame."""
     src = df.filter(F.col("n_tok") >= N).select("doc_id", "tokens")
 
+    @worker_kernel
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
@@ -261,6 +265,7 @@ def mfcc_stats_exact(df: DataFrame) -> DataFrame:
     order."""
     src = df.filter(F.col("n_tok") >= 2 * N).select("doc_id", "tokens")
 
+    @worker_kernel
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..workers import worker_kernel
+
 
 def make_spine(doc_lengths: DataFrame, step: int = 1) -> DataFrame:
     """(doc_id, n) -> dense (doc_id, offset) spine, offsets 0..n-1 by step.
@@ -147,6 +149,7 @@ def gapfill_linear_checksum(
     # but enforced explicitly.
     max_points = 4_000_000
 
+    @worker_kernel
     def kernel(pdfs):
         for pdf in pdfs:
             if not len(pdf):

@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..workers import worker_kernel
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.StringType(), False),
@@ -287,6 +289,7 @@ def fake_decoder(payload: bytes, kind: str) -> np.ndarray:
 def synth_media(spark, n: int = 64, seed: int = 42) -> DataFrame:
     """Deterministic synthetic media table (payload = seeded bytes)."""
 
+    @worker_kernel
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         kinds = ["image", "audio", "video"]
         for pdf in batches:
@@ -318,6 +321,7 @@ def synth_image_media(spark, n: int = 16, seed: int = 42, w: int = 24,
     per-row gradient+noise pattern — so the stdlib decode path is
     exercised end-to-end through Spark, mirroring synth_wav_media."""
 
+    @worker_kernel
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
@@ -355,6 +359,7 @@ def synth_wav_media(spark, n: int = 16, seed: int = 42, sr: int = 16000,
     (deterministic per-row sinusoid + noise), so the stdlib decode path is
     exercised end-to-end through Spark, not just unit-tested."""
 
+    @worker_kernel
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
@@ -417,6 +422,7 @@ def extract_features(
     batch on CUMULATIVE PAYLOAD BYTES (max_batch_bytes) and yields per
     slice, bounding peak decode memory regardless of payload size."""
 
+    @worker_kernel
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         def emit(pdf: pd.DataFrame) -> pd.DataFrame:
             feats = [
@@ -474,6 +480,7 @@ def load_audio_resampled(media: DataFrame, target_sr: int = 8000,
     stdlib decode_wav; non-WAV audio without soundfile uses the fake."""
     from ..functions.dsp2 import resample_signal
 
+    @worker_kernel
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []

@@ -36,6 +36,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..schema import DEFAULT_FANOUT, DEFAULT_TIERS, DEFAULT_W, TIER_SCHEMA, tier_width
+from ..workers import worker_kernel
 
 def _tier1_windows_expr(w: int, tokens: str = "tokens", n_tok: str = "n_tok") -> str:
     """SQL expr: array<struct> of tier-1 windows from the raw token array.
@@ -217,6 +218,7 @@ def cascade_pandas(
 
     cols = ["window_start", "t_min", "t_max", "t_sum", "t_cnt", "t_last"]
 
+    @worker_kernel
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if not len(pdf):
@@ -447,6 +449,7 @@ def rollup_histogram_pandas(
     so per-token cost is O(1) and independent of n_buckets: the scale
     path for wide histograms, same narrow no-shuffle topology."""
 
+    @worker_kernel
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         bcols = [f"b{b}" for b in range(n_buckets)]
         for pdf in batches:

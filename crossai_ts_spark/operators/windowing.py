@@ -23,6 +23,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..workers import worker_kernel
+
 
 def sliding_windows(
     df: DataFrame,
@@ -103,6 +105,7 @@ def rolling_rms_pandas(df: DataFrame, frame: int = 8, hop: int = 1) -> DataFrame
     pad semantics) as an Arrow kernel over the sequences table."""
     from ..functions.spectral import rolling_rms_np
 
+    @worker_kernel
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
@@ -130,6 +133,7 @@ def frame_matrix(df: DataFrame, frame_length: int, hop: int) -> DataFrame:
     an array column — strided view inside Arrow kernel, zero Python loops
     over samples."""
 
+    @worker_kernel
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..functions.iir import butter_sos, sosfiltfilt
 from ..functions.spline import spline_eval, spline_slopes
+from ..workers import worker_kernel
 
 STEP = 64  # samples per window (the sr*ws - overlap grid of the reference)
 DUR_MIN = 32  # apply_duration_threshold, in samples
@@ -122,6 +123,7 @@ def ep3_pipeline(ev: DataFrame, n_windows: int = 16) -> DataFrame:
     )
     sos = butter_sos(4, 0.02, 1.0, "lowpass")
 
+    @worker_kernel
     def kernel(batches):
         from ..functions.iir import sosfiltfilt_batch
         from ..functions.spline import spline_eval, spline_slopes

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..schema import SEQUENCES_SCHEMA
+from ..workers import worker_kernel
 
 # pure-SQL variant (oracle-identical) — NOT used on the hot path: Spark's
 # substring(text, i, 1) is O(i) on UTF8String, so the transform is O(n^2)
@@ -45,6 +46,7 @@ def tokenize_documents(docs: DataFrame) -> DataFrame:
             return np.fromiter((ord(c) for c in t), dtype=np.int32, count=len(t))
         return b.astype(np.int32)
 
+    @worker_kernel
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             toks = [one(t) for t in pdf["text"]]

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from ..operators.rollup import rollup_native
 from ..schema import SEQUENCES_SCHEMA
+from ..workers import worker_kernel
 
 
 def read_sequence_stream(spark, path: str, max_files: int = 4) -> DataFrame:
@@ -123,6 +124,7 @@ def incremental_tier1(chunked: DataFrame, w: int = 64,
     import numpy as np
     import pandas as pd
 
+    @worker_kernel
     def fn(key, pdfs, state):
         (doc_id,) = key
         # state: (next_off, mn, mx, sm, cnt, lst, source) — the open
@@ -276,6 +278,7 @@ def streaming_packing(stream: DataFrame, seq_len: int = 2048, by: str = "source"
     if seq_len <= 0:
         raise ValueError(f"seq_len must be positive, got {seq_len}")
 
+    @worker_kernel
     def fn(key, pdfs, state):
         (shard,) = key
         off = state.get[0] if state.exists else 0
@@ -379,6 +382,7 @@ def streaming_hll(stream: DataFrame, key: str = "user_id", ts_col: str = "ts",
         F.col("window_start").isNotNull() & F.col("h").isNotNull()
     )
 
+    @worker_kernel
     def partial(pdfs):
         for pdf in pdfs:
             if not len(pdf):
@@ -405,6 +409,7 @@ def streaming_hll(stream: DataFrame, key: str = "user_id", ts_col: str = "ts",
         partial, "window_start long, regs array<long>, cnt long"
     )
 
+    @worker_kernel
     def fn(fkey, pdfs, state):
         (ws,) = fkey
         if state.hasTimedOut:
@@ -546,6 +551,7 @@ def streaming_kmv(stream: DataFrame, key: str = "user_id", ts_col: str = "ts",
         F.col("window_start").isNotNull() & F.col("h").isNotNull()
     )
 
+    @worker_kernel
     def partial(pdfs):
         for pdf in pdfs:
             if not len(pdf):
@@ -564,6 +570,7 @@ def streaming_kmv(stream: DataFrame, key: str = "user_id", ts_col: str = "ts",
         partial, "window_start long, pk array<long>, cnt long"
     )
 
+    @worker_kernel
     def fn(fkey, pdfs, state):
         (ws,) = fkey
         if state.hasTimedOut:

@@ -59,13 +59,17 @@ def main(argv: list[str] | None = None) -> int:
 
     seqs = with_bucket(seqs, args.buckets)
 
-    todo = pending_buckets(args.out, args.buckets) if args.resume else list(range(args.buckets))
+    params = {"n_buckets": args.buckets, "w": args.w, "fanout": args.fanout, "n_tiers": args.tiers}
+    if args.resume:
+        todo = pending_buckets(args.out, args.buckets, expect={"input_snapshot": snapshot, **params})
+    else:
+        todo = list(range(args.buckets))
     print(f"[rollup_job] buckets total={args.buckets} pending={len(todo)}")
     t0 = time.monotonic()
     for b in todo:
         sub = seqs.filter(F.col("bucket") == b).drop("bucket")
         tiers_df = cascade(sub, strategy=args.strategy, w=args.w, fanout=args.fanout, tiers=args.tiers)
-        m = commit_bucket(tiers_df, args.out, b, input_snapshot=snapshot)
+        m = commit_bucket(tiers_df, args.out, b, input_snapshot=snapshot, params=params)
         toks = sum(t["tokens"] for t in m["tiers"].values())
         print(f"[rollup_job] bucket={b} rows={sum(t['rows'] for t in m['tiers'].values())} "
               f"tokens={toks} wall={m['wall_sec']:.1f}s")

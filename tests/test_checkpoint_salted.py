@@ -116,6 +116,45 @@ def test_rollup_job_end_to_end(spark, tmp_path):
     assert rc == 0
 
 
+def test_recommit_killed_before_rename_leaves_bucket_pending(spark, tiny_df, tmp_path, monkeypatch):
+    """A re-commit dropped between removing the old data and renaming the new
+    data in must not leave the old manifest claiming the bucket."""
+    out = str(tmp_path / "kill_out")
+    tiers = cascade_native(tiny_df, w=64, fanout=8, tiers=1)
+    commit_bucket(tiers, out, 0, "t")
+    assert pending_buckets(out, 1) == []
+
+    def killed(src, dst):
+        raise OSError("killed before rename")
+
+    monkeypatch.setattr(os, "replace", killed)
+    with pytest.raises(OSError, match="killed"):
+        commit_bucket(tiers, out, 0, "t")
+    assert pending_buckets(out, 1) == [0]
+    assert not os.path.exists(os.path.join(out, "_manifests", "0.json"))
+
+
+def test_resume_with_other_bucket_count_raises(spark, tmp_path):
+    from jobs.rollup_job import main
+
+    out = str(tmp_path / "job_out")
+
+    def job(buckets, tiers=2, resume=False):
+        return main(["--input", "synthetic:12", "--out", out, "--buckets", str(buckets),
+                     "--w", "64", "--fanout", "8", "--tiers", str(tiers), "--master", "local[4]"]
+                    + (["--resume"] if resume else []))
+
+    assert job(4) == 0
+    with open(os.path.join(out, "_manifests", "0.json")) as f:
+        m0 = json.load(f)
+    assert (m0["n_buckets"], m0["w"], m0["fanout"], m0["n_tiers"]) == (4, 64, 8, 2)
+    with pytest.raises(ValueError, match="n_buckets"):
+        job(3, resume=True)
+    with pytest.raises(ValueError, match="n_tiers"):
+        job(4, tiers=3, resume=True)
+    assert job(4, resume=True) == 0  # same settings: nothing pending
+
+
 def test_bucketed_join_needs_no_exchange(spark, tmp_path):
     """Tables bucketed on doc_id join WITHOUT a shuffle: the physical plan
     must contain no Exchange (the 100-TB lineage/audit join pattern)."""
