@@ -9,7 +9,8 @@
 Each bucket (pmod(xxhash64(doc_id), B)) commits atomically with a lineage +
 metrics manifest; --resume anti-joins completed manifests and processes only
 pending buckets (north_rule: "resumable from per-partition checkpoints with
-lineage + metrics emitted per retention tier").
+lineage + metrics emitted per retention tier"). A run without --resume first
+drops any bucket >= --buckets left in --out by an earlier, wider run.
 """
 
 from __future__ import annotations
@@ -40,7 +41,7 @@ def main(argv: list[str] | None = None) -> int:
     from crossai_ts_spark.datagen import gen_sequences
     from crossai_ts_spark.functions.codecs import compress_tiers
     from crossai_ts_spark.operators.rollup import cascade
-    from crossai_ts_spark.plans.checkpoint import commit_bucket, pending_buckets, with_bucket
+    from crossai_ts_spark.plans.checkpoint import commit_bucket, drop_buckets_from, pending_buckets, with_bucket
     from crossai_ts_spark.session import get_spark
     from crossai_ts_spark.sources.io import read_sequences, write_table
 
@@ -64,6 +65,9 @@ def main(argv: list[str] | None = None) -> int:
         todo = pending_buckets(args.out, args.buckets, expect={"input_snapshot": snapshot, **params})
     else:
         todo = list(range(args.buckets))
+        dropped = drop_buckets_from(args.out, args.buckets)  # an older run's extra buckets
+        if dropped:
+            print(f"[rollup_job] dropped stale buckets {dropped}")
     print(f"[rollup_job] buckets total={args.buckets} pending={len(todo)}")
     t0 = time.monotonic()
     for b in todo:

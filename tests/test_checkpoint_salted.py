@@ -4,8 +4,10 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -52,7 +54,8 @@ def test_checkpoint_commit_and_resume(spark, tiny_df, tmp_path):
     # commit buckets 0 and 2 only
     for b in (0, 2):
         sub = seqs.filter(F.col("bucket") == b).drop("bucket")
-        m = commit_bucket(cascade_native(sub, w=64, fanout=8, tiers=2), out, b, "test-input")
+        m = commit_bucket(cascade_native(sub, w=64, fanout=8, tiers=2), out, b, "test-input",
+                          params={"n_tiers": 2})
         assert m["bucket"] == b
         assert m["tiers"]  # per-tier lineage metrics present
         for t in m["tiers"].values():
@@ -69,7 +72,7 @@ def test_checkpoint_commit_and_resume(spark, tiny_df, tmp_path):
 
     # re-commit of an already-done bucket is idempotent
     sub = seqs.filter(F.col("bucket") == 0).drop("bucket")
-    commit_bucket(cascade_native(sub, w=64, fanout=8, tiers=2), out, 0, "test-input")
+    commit_bucket(cascade_native(sub, w=64, fanout=8, tiers=2), out, 0, "test-input", params={"n_tiers": 2})
     assert completed_buckets(out) == {0, 2}
 
     # committed data is readable and tier-partitioned
@@ -85,8 +88,8 @@ def test_commit_bucket_uri_guard(spark, tiny_df, tmp_path):
         with pytest.raises(ValueError, match="driver-local"):
             commit_bucket(tiers, bad, 0, "t")
     out = str(tmp_path / "uri_out")
-    commit_bucket(tiers, f"file://{out}", 0, "t")
-    commit_bucket(tiers, f"file:{out}", 1, "t")  # single-slash Hadoop form
+    commit_bucket(tiers, f"file://{out}", 0, "t", params={"n_tiers": 1})
+    commit_bucket(tiers, f"file:{out}", 1, "t", params={"n_tiers": 1})  # single-slash Hadoop form
     assert completed_buckets(out) == {0, 1}
     assert not os.path.exists("file:")  # no relative junk dir
 
@@ -121,7 +124,7 @@ def test_recommit_killed_before_rename_leaves_bucket_pending(spark, tiny_df, tmp
     data in must not leave the old manifest claiming the bucket."""
     out = str(tmp_path / "kill_out")
     tiers = cascade_native(tiny_df, w=64, fanout=8, tiers=1)
-    commit_bucket(tiers, out, 0, "t")
+    commit_bucket(tiers, out, 0, "t", params={"n_tiers": 1})
     assert pending_buckets(out, 1) == []
 
     def killed(src, dst):
@@ -129,7 +132,7 @@ def test_recommit_killed_before_rename_leaves_bucket_pending(spark, tiny_df, tmp
 
     monkeypatch.setattr(os, "replace", killed)
     with pytest.raises(OSError, match="killed"):
-        commit_bucket(tiers, out, 0, "t")
+        commit_bucket(tiers, out, 0, "t", params={"n_tiers": 1})
     assert pending_buckets(out, 1) == [0]
     assert not os.path.exists(os.path.join(out, "_manifests", "0.json"))
 
@@ -153,6 +156,120 @@ def test_resume_with_other_bucket_count_raises(spark, tmp_path):
     with pytest.raises(ValueError, match="n_tiers"):
         job(4, tiers=3, resume=True)
     assert job(4, resume=True) == 0  # same settings: nothing pending
+
+
+def _reread_tiers(spark, path):
+    """Test-only second read: the manifest's per-tier figures by groupBy."""
+    rows = (
+        spark.read.parquet(path)
+        .groupBy("tier")
+        .agg(
+            F.count("*").alias("rows"),
+            F.sum("t_cnt").alias("tokens"),
+            F.countDistinct("doc_id").alias("docs"),
+            F.min("window_start").alias("min_window_start"),
+            F.max("window_start").alias("max_window_start"),
+        )
+        .collect()
+    )
+    return {str(r.tier): {k: int(v) for k, v in r.asDict().items() if k != "tier"} for r in rows}
+
+
+@pytest.mark.parametrize("tiers", [2, 3])
+def test_manifest_matches_reread(spark, tiny_df, tmp_path, tiers):
+    out = str(tmp_path / "reread_out")
+    n_buckets = 3
+    seqs = with_bucket(tiny_df, n_buckets)
+    for b in range(n_buckets):
+        sub = seqs.filter(F.col("bucket") == b).drop("bucket")
+        m = commit_bucket(cascade_native(sub, w=64, fanout=8, tiers=tiers), out, b, "t",
+                          params={"n_tiers": tiers})
+        assert sorted(m["tiers"]) == [str(k) for k in range(1, tiers + 1)]
+        assert m["tiers"] == _reread_tiers(spark, f"{out}/data/bucket={b}")
+        with open(os.path.join(out, "_manifests", f"{b}.json")) as f:
+            assert json.load(f)["tiers"] == m["tiers"]
+
+
+def test_manifest_docs_counts_series_not_ids(spark, tiny_docs, tmp_path):
+    """Two series under one doc_id: docs counts series (2), a distinct-id
+    re-read would say 1."""
+    from crossai_ts_spark.schema import SEQUENCES_SCHEMA
+
+    doc = tiny_docs[tiny_docs["n_tok"] > 0].iloc[[0]]
+    twice = spark.createDataFrame(pd.concat([doc, doc], ignore_index=True), schema=SEQUENCES_SCHEMA)
+    out = str(tmp_path / "dup_out")
+    m = commit_bucket(cascade_native(twice, w=64, fanout=8, tiers=2), out, 0, "t", params={"n_tiers": 2})
+    assert {k: t["docs"] for k, t in m["tiers"].items()} == {"1": 2, "2": 2}
+    assert {k: t["docs"] for k, t in _reread_tiers(spark, f"{out}/data").items()} == {"1": 1, "2": 1}
+
+
+def test_empty_bucket_commits_with_no_tiers(spark, tiny_df, tmp_path):
+    """A bucket no doc hashes to (more buckets than docs) still commits."""
+    out = str(tmp_path / "empty_out")
+    m = commit_bucket(cascade_native(tiny_df.filter("false"), w=64, fanout=8, tiers=2), out, 0, "t",
+                      params={"n_tiers": 2})
+    assert m["tiers"] == {}
+    assert completed_buckets(out) == {0}
+
+
+def test_commit_is_one_spark_job(spark, tiny_df, tmp_path):
+    sc = spark.sparkContext
+    tiers = cascade_native(tiny_df, w=64, fanout=8, tiers=3)
+    group = f"commit-{tmp_path.name}"
+    sc.setJobGroup(group, "commit_bucket")
+    try:
+        commit_bucket(tiers, str(tmp_path / "jobs_out"), 0, "t", params={"n_tiers": 3})
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the status store is fed asynchronously
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+def test_failed_write_raises_and_leaves_bucket_pending(spark, tiny_df, tmp_path):
+    """A tier_df that fails at execution time: commit_bucket raises (does not
+    wait on the observation forever) and writes no manifest."""
+    out = str(tmp_path / "fail_out")
+    bad = cascade_native(tiny_df, w=64, fanout=8, tiers=1).withColumn("t_cnt", F.expr("t_cnt div 0"))
+    err = []
+
+    def run():
+        try:
+            commit_bucket(bad, out, 0, "t", params={"n_tiers": 1})
+        except Exception as e:  # noqa: BLE001 - inspected below
+            err.append(e)
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(300)
+    assert not t.is_alive(), "commit_bucket hung after a failed write"
+    assert err and "DIVIDE_BY_ZERO" in str(err[0])
+    assert pending_buckets(out, 1) == [0]
+    assert not os.path.exists(os.path.join(out, "_manifests", "0.json"))
+    assert not os.path.exists(os.path.join(out, "data", "bucket=0"))
+
+
+def test_rerun_with_fewer_buckets_drops_the_rest(spark, tmp_path):
+    """A run without --resume into the output of a run with more buckets:
+    the extra buckets go, and --compress encodes only what this run wrote."""
+    from jobs.rollup_job import main
+
+    out = str(tmp_path / "job_out")
+
+    def job(buckets):
+        return main(["--input", "synthetic:40", "--out", out, "--buckets", str(buckets), "--w", "64",
+                     "--fanout", "8", "--tiers", "2", "--compress", "--master", "local[4]"])
+
+    assert job(4) == 0
+    assert job(3) == 0
+    assert completed_buckets(out) == {0, 1, 2}
+    assert not os.path.exists(os.path.join(out, "data", "bucket=3"))
+    rows = 0
+    for b in range(3):
+        with open(os.path.join(out, "_manifests", f"{b}.json")) as f:
+            rows += json.load(f)["tiers"]["1"]["rows"]
+    pts = spark.read.parquet(f"{out}/compressed").filter(F.col("tier") == 1).agg(F.sum("n_points")).first()[0]
+    assert pts == rows
 
 
 def test_bucketed_join_needs_no_exchange(spark, tmp_path):
