@@ -11,13 +11,15 @@ Layout:
     session.py    SparkSession factory (Arrow on, AQE on, UTC)
     schema.py     input + tier + long-format schemas
     datagen.py    deterministic synthetic sequences table (FIXTURES.md F1/F2)
+    entry_queries.py  the registered queries, each with its DuckDB oracle SQL
     oracle/       single-machine numpy reference implementation (test golden)
-    operators/    rollup, cascade, gapfill, windowing, events, outliers, dedup,
-                  similarity, textstats, stats
-    functions/    codecs (Gorilla/ΔΔ), spectral pUDFs, scalar column exprs
+    operators/    rollup, cascade, gapfill, salted, dedup, similarity,
+                  textstats, sketches (hll, cms, bloom), packing, augment
+    functions/    codecs (Gorilla/ΔΔ), DSP and spectral kernels, scalar
+                  column exprs
     sources/      io abstraction (iceberg-or-parquet), tokenizer
-    plans/        checkpoint manifests + resume
-    streaming/    structured-streaming rollup (optional surface)
+    plans/        checkpoint manifests + resume, the EP3 chain
+    streaming/    structured-streaming twins of the rollup and sketches
 """
 
 __version__ = "0.1.0"

@@ -1929,7 +1929,7 @@ def spectral_features_q(spark, sf_dir):
     canonical first 64-token frame, FULL oracle: the quantized-integer-
     twiddle DFT + fixed-fold-order features of functions/spectral_exact.py
     are bit-reproducible in DuckDB (raw doubles hash-match, no rounding).
-    The full-doc numpy-rFFT composite (functions/spectral.py) is tied to
+    The full-doc numpy-rFFT reference (oracle/spectral.py) is tied to
     this kernel by parity pytest."""
     from .functions.spectral_exact import spectral_features_exact
 
@@ -4526,15 +4526,14 @@ def rollup_histogram_q(spark, sf_dir):
     (fixed-boundary histograms re-aggregate exactly; the tier identity is
     pytest-verified in histogram_merge).
 
-    r8: routed through the Arrow bincount twin — count-identical to the
-    native HOF shape (frame-equality tested both ways in test_rollup) and
-    per-token O(1) instead of O(n_buckets) interpreted lambda work:
-    interleaved A/B 1.01 s vs 1.37 s at sf0.1, and 0.87 s vs 2.4 s on the
-    255 M-token stress input (BENCH/BASELINE.md r7 numbers)."""
-    from .operators.rollup import rollup_histogram_pandas
+    The Arrow bincount kernel is per-token O(1), where a native HOF fold
+    pays O(n_buckets) interpreted lambda work: interleaved A/B 1.01 s vs
+    1.37 s at sf0.1, and 0.87 s vs 2.4 s on the 255 M-token stress input
+    (BENCH/BASELINE.md r7 numbers)."""
+    from .operators.rollup import rollup_histogram
 
     seqs = tokenize_documents(load(spark, sf_dir, "documents"))
-    return rollup_histogram_pandas(seqs, w=32, n_buckets=16, vmax=128)
+    return rollup_histogram(seqs, w=32, n_buckets=16, vmax=128)
 
 
 # n_tokens^alpha as the cross-engine-exact sqrt chain (mixing.pow_alpha_sql

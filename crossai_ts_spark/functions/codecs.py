@@ -387,27 +387,6 @@ def decompress_tiers(seg_df):
 # ------------------------------------------------- token round-trip codec
 
 
-def tokens_roundtrip_check(df):
-    """decode(encode(tokens)) == tokens, per row — the input_hint invariant.
-
-    Runs entirely inside mapInPandas; returns (doc_id, n_tok, ok boolean).
-    """
-
-    @worker_kernel
-    def check(batches):
-        for pdf in batches:
-            oks = []
-            for toks in pdf["tokens"]:
-                arr = np.asarray(toks, dtype=np.int64)
-                rt = dod_decode_fast(dod_encode_fast(arr))
-                oks.append(bool(np.array_equal(rt, arr)))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "n_tok": pdf["n_tok"], "ok": oks}
-            )
-
-    return df.mapInPandas(check, schema="doc_id string, n_tok int, ok boolean")
-
-
 def tokens_roundtrip_sums(df):
     """Round-trip check + sums recomputed from the DECODED arrays.
 

@@ -267,68 +267,6 @@ def resample_poly_arbitrary(x: np.ndarray, target_len: int) -> np.ndarray:
     return y[:target_len]  # at most a few samples of pad/trim at the tail
 
 
-def resample_fft(x: np.ndarray, num: int) -> np.ndarray:
-    """FFT-domain resampling to `num` samples (caits/core/
-    _core_resample.py:30-44 'fft' branch; scipy.signal.resample method):
-    rfft -> band-limit (downsample) or zero-pad (upsample) the spectrum ->
-    irfft, scaled by num/n. Assumes the signal is periodic over the frame
-    (the usual Fourier-resample caveat).
-
-    Nyquist handling: upsampling an even-length input halves the Nyquist
-    bin before it becomes an interior bin (irfft's Hermitian symmetry
-    contributes the mirror term, reconstructing the original cosine);
-    downsampling to an even length keeps the real part of the bin that
-    lands on the new Nyquist."""
-    x = np.asarray(x, dtype=np.float64)
-    n = x.size
-    if num == n:
-        return x.copy()
-    if num < 1:
-        raise ValueError("num must be >= 1")
-    X = np.fft.rfft(x)
-    Y = np.zeros(num // 2 + 1, dtype=np.complex128)
-    ncopy = min(Y.size, X.size)
-    Y[:ncopy] = X[:ncopy]
-    if num > n and n % 2 == 0 and n // 2 < Y.size:
-        Y[n // 2] *= 0.5
-    if num < n and num % 2 == 0:
-        Y[num // 2] = Y[num // 2].real
-    return np.fft.irfft(Y, num) * (num / n)
-
-
-# soxr_* quality ladder (caits/core/_core_resample.py res_type surface):
-# each maps to the polyphase engine with progressively longer prototype
-# filters — same tap counts ordering as the soxr quick/low/medium/high/
-# very-high presets (no external lib; the FIR designer is ours)
-_SOXR_TAPS = {"soxr_qq": 8, "soxr_lq": 12, "soxr_mq": 16, "soxr_hq": 24, "soxr_vhq": 32}
-
-
-def resample_signal(
-    x: np.ndarray, orig_sr: float, target_sr: float, mode: str = "polyphase"
-) -> np.ndarray:
-    """caits/core/_core_resample.py:14-76 resample surface: 'polyphase'
-    (windowed-sinc, streaming-safe), 'fft' (band-limited, exact integer
-    ratios / periodic frames), or a 'soxr_*' quality preset (polyphase
-    with the matching prototype length; soxr_hq == the polyphase
-    default)."""
-    if orig_sr == target_sr:
-        return np.asarray(x, dtype=np.float64).copy()
-    if int(orig_sr) != orig_sr or int(target_sr) != target_sr:
-        raise ValueError("resampling requires integer sampling rates")
-    g = math.gcd(int(orig_sr), int(target_sr))
-    up, down = int(target_sr) // g, int(orig_sr) // g
-    if mode == "fft":
-        x = np.asarray(x, dtype=np.float64)
-        return resample_fft(x, int(round(x.size * up / down)))
-    if mode in _SOXR_TAPS:
-        return resample_poly(x, up, down, taps_per_phase=_SOXR_TAPS[mode])
-    if mode != "polyphase":
-        raise ValueError(
-            f"unknown resample mode {mode!r} (polyphase|fft|{'|'.join(_SOXR_TAPS)})"
-        )
-    return resample_poly(x, up, down)
-
-
 # ------------------------------------------------------------- time warp
 
 

@@ -1,54 +1,20 @@
-"""Scalar column functions: dB scaling, unit conversions, normalization.
+"""Scalar column functions: mel scale and per-doc normalization.
 
-All pure Catalyst expressions (whole-stage codegen'd) — the reference's
-numpy versions map 1:1 (SURVEY §2.7):
+Pure Catalyst expressions (whole-stage codegen'd) — the reference's numpy
+versions map 1:1 (SURVEY §2.7):
 
-  power_to_db       caits/fe/_spectrum.py:136-214  10*log10(max(amin,S)) - 10*log10(max(amin,ref)), top_db clamp
-  db_to_power       :217-243                        ref * 10^(0.1 db)
-  amplitude_to_db   :246-312                        power_to_db(S^2)
-  ratio_to_db       caits/fe/_loudness.py:43        20*log10(ratio)
-  hz_to_mel/mel_to_hz caits/fe/core_spectrum/_utils.py:234,266 (htk variant)
-  normalize_signal  caits/preprocessing.py:4-21     x / max(|x|)
+  hz_to_mel_htk     caits/fe/core_spectrum/_utils.py:234 (htk variant)
+  normalize_tokens  caits/preprocessing.py:4-21     x / max(|x|)
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def power_to_db(s: Column, ref: float = 1.0, amin: float = 1e-10, top_db: float | None = 80.0) -> Column:
-    log_spec = 10.0 * F.log10(F.greatest(F.lit(amin), s)) - 10.0 * F.log10(
-        F.greatest(F.lit(amin), F.lit(ref))
-    )
-    return log_spec  # top_db clamp needs the global max -> apply via clamp_top_db
-
-
-def clamp_top_db(df: DataFrame, col: str, top_db: float = 80.0, part: list[str] | None = None) -> DataFrame:
-    """log_spec = max(log_spec, max(log_spec) - top_db) per partition
-    (caits/fe/_spectrum.py:209-212)."""
-    w = Window.partitionBy(*(part or []))
-    return df.withColumn(col, F.greatest(F.col(col), F.max(col).over(w) - top_db))
-
-
-def db_to_power(db: Column, ref: float = 1.0) -> Column:
-    return F.lit(ref) * F.pow(F.lit(10.0), db * 0.1)
-
-
-def amplitude_to_db(s: Column, ref: float = 1.0, amin: float = 1e-5) -> Column:
-    return power_to_db(s * s, ref=ref * ref, amin=amin * amin)
-
-
-def ratio_to_db(ratio: Column) -> Column:
-    return 20.0 * F.log10(ratio)
 
 
 def hz_to_mel_htk(f: Column) -> Column:
     return 2595.0 * F.log10(F.lit(1.0) + f / 700.0)
-
-
-def mel_to_hz_htk(m: Column) -> Column:
-    return 700.0 * (F.pow(F.lit(10.0), m / 2595.0) - 1.0)
 
 
 def normalize_tokens(df: DataFrame) -> DataFrame:
@@ -69,8 +35,3 @@ def normalize_tokens(df: DataFrame) -> DataFrame:
             "(x, m) -> cast(x as double) / m)"
         ),
     )
-
-
-def samples_to_time(offset: Column, fs: float) -> Column:
-    """caits/convert.py:81-97."""
-    return offset.cast("double") / F.lit(float(fs))

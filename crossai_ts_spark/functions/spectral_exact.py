@@ -1,7 +1,7 @@
 """Cross-engine EXACT spectral kernels over fixed 64-token frames.
 
-The production spectral/MFCC kernels (functions/spectral.py, functions/
-dsp.py) use numpy's rFFT, whose twiddle factors and pairwise summation are
+The numpy spectral/MFCC kernels (oracle/spectral.py, functions/dsp.py)
+use numpy's rFFT, whose twiddle factors and pairwise summation are
 not bit-reproducible in any SQL engine — so those queries could only get a
 rows-only driver check. This module closes that gap with the same features
 computed over a canonical frame through a DFT built for bitwise

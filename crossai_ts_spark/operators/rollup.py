@@ -32,13 +32,18 @@ from typing import Literal
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..schema import DEFAULT_FANOUT, DEFAULT_TIERS, DEFAULT_W, TIER_SCHEMA, tier_width
 from ..workers import worker_kernel
 
-def _tier1_windows_expr(w: int, tokens: str = "tokens", n_tok: str = "n_tok") -> str:
+# Rows with tokens to roll up. Under ANSI ``size(null)`` is null, so null
+# and empty arrays both drop here, whatever the row's ``n_tok`` says.
+NONEMPTY = "size(tokens) > 0"
+
+
+def _tier1_windows_expr(w: int, tokens: str = "tokens") -> str:
     """SQL expr: array<struct> of tier-1 windows from the raw token array.
 
     O(n) total, no shuffle. Shape: bind each window's slice ONCE in an
@@ -50,12 +55,13 @@ def _tier1_windows_expr(w: int, tokens: str = "tokens", n_tok: str = "n_tok") ->
     keeps the same left-to-right order, min/max are exact, so every value
     is unchanged.
 
-    Requires n_tok >= 1 (guaranteed by datagen; guard with a filter upstream
-    for foreign inputs).
+    The window count comes from ``size(tokens)``, never from ``n_tok``: a
+    row whose ``n_tok`` disagrees with its array still rolls up every token.
+    Requires a non-empty array (callers filter :data:`NONEMPTY`).
     """
     return f"""
     transform(
-      transform(sequence(0, cast(ceil({n_tok} / {w}.0) as int) - 1),
+      transform(sequence(0, cast(ceil(size({tokens}) / {w}.0) as int) - 1),
                 wi -> named_struct('ws', cast(wi as bigint) * {w},
                                    's', slice({tokens}, wi * {w} + 1, {w}))),
       p -> named_struct(
@@ -95,7 +101,7 @@ def _explode_tier(df: DataFrame, windows_col: str, tier: int) -> DataFrame:
     # (InferFiltersFromGenerate) inject a pre-Generate filter that re-evaluates
     # the ENTIRE window expression twice more (size(..)>0 && isnotnull(..)) —
     # measured in .explain; outer generate needs no such filter and empty
-    # docs are already filtered out on n_tok.
+    # docs are already filtered out by NONEMPTY.
     w = F.explode_outer(F.col(windows_col)).alias("w")
     return df.select("doc_id", "source", w).select(
         "doc_id",
@@ -114,7 +120,7 @@ def _explode_tier(df: DataFrame, windows_col: str, tier: int) -> DataFrame:
 def rollup_native(df: DataFrame, w: int = DEFAULT_W, tier: int = 1) -> DataFrame:
     """Tier rollup at width w via higher-order functions — narrow, JVM-side."""
     width = w
-    dfw = df.filter(F.col("n_tok") > 0).withColumn("_w1", F.expr(_tier1_windows_expr(width)))
+    dfw = df.filter(NONEMPTY).withColumn("_w1", F.expr(_tier1_windows_expr(width)))
     return _explode_tier(dfw, "_w1", tier)
 
 
@@ -132,7 +138,7 @@ def cascade_native(
     (single) Generate: a union of per-tier branches would re-evaluate every
     lower tier once per branch (3x tier-1 work — measured in .explain).
     """
-    dfw = df.filter(F.col("n_tok") > 0).withColumn("_t1", F.expr(_tier1_windows_expr(w)))
+    dfw = df.filter(NONEMPTY).withColumn("_t1", F.expr(_tier1_windows_expr(w)))
     for k in range(2, tiers + 1):
         dfw = dfw.withColumn(
             f"_t{k}", F.expr(_next_tier_windows_expr(f"_t{k-1}", fanout, tier_width(k, w, fanout)))
@@ -250,7 +256,7 @@ def cascade_pandas(
             out["t_mean"] = out["t_sum"] / out["t_cnt"]
             yield pd.DataFrame(out)
 
-    return df.filter(F.col("n_tok") > 0).mapInPandas(kernel, schema=TIER_SCHEMA)
+    return df.filter(NONEMPTY).mapInPandas(kernel, schema=TIER_SCHEMA)
 
 
 def rollup_long(
@@ -365,89 +371,16 @@ def rollup_histogram(
     because fixed-boundary histograms re-aggregate exactly (tier k+1 =
     elementwise sum of children; see :func:`histogram_merge`).
 
-    Same narrow shape as rollup_native: one HOF spine per row, one
-    explode, raw tokens never shuffle. Integer-exact in any engine
-    (bucket = least(tok*n_buckets div vmax, n_buckets-1)). Output:
-    (doc_id, window_start, b0..b{n-1}, total, median_bucket) where
-    median_bucket is the first bucket whose cumulative count reaches
-    half the window total.
+    Integer-exact (bucket = min(tok*n_buckets // vmax, n_buckets-1)).
+    Output: (doc_id, window_start, b0..b{n-1}, total, median_bucket) where
+    median_bucket is the first bucket whose cumulative count reaches half
+    the window total.
 
-    Fold shape is ADAPTIVE on n_buckets — HOF lambdas evaluate
-    INTERPRETED per element, so both native shapes carry an O(nb) term
-    and the constant decides (measured head-to-head on the sf0.1 corpus
-    and the 255 M-token stress input, BENCH/BASELINE.md):
-
-      nb <= 16: one fold PER BUCKET over the window slice (tight
-                scalar CASE accumulator; 2.4 s vs 3.2 s at nb=16) —
-                allocation-free beats copy-free at small nb;
-      nb  > 16: bucket each token once, then ONE aggregate carrying the
-                nb-slot count array (two slices + concat per token;
-                348 s vs ~540 s at nb=64 on 255 M tokens).
-
-    Both are count-identical (same oracle). For wide histograms or raw
-    speed at any nb use :func:`rollup_histogram_pandas` (np.bincount,
-    per-token O(1), 0.87 s / 52.7 M tokens/s on the same inputs).
-    """
-    if n_buckets <= 16:
-        folds = ", ".join(
-            f"'b{b}', aggregate(slice(tokens, wi * {w} + 1, {w}), cast(0 as bigint), "
-            f"(a, t) -> a + CASE WHEN least((t * {n_buckets}) div {vmax}, {n_buckets - 1}) = {b} "
-            f"THEN 1 ELSE 0 END)"
-            for b in range(n_buckets)
-        )
-        spine = (
-            f"transform(sequence(0, cast(ceil(n_tok / cast({w} as double)) as int) - 1), "
-            f"wi -> named_struct('window_start', cast(wi as bigint) * {w}, {folds}))"
-        )
-        bcols = [F.col(f"hw.b{b}").alias(f"b{b}") for b in range(n_buckets)]
-    else:
-        bids = (
-            f"transform(slice(tokens, wi * {w} + 1, {w}), "
-            f"t -> cast(least((t * {n_buckets}) div {vmax}, {n_buckets - 1}) as int))"
-        )
-        hist = (
-            f"aggregate({bids}, array_repeat(cast(0 as bigint), {n_buckets}), "
-            f"(acc, j) -> concat(slice(acc, 1, j), array(acc[j] + 1), "
-            f"slice(acc, j + 2, {n_buckets} - j - 1)))"
-        )
-        spine = (
-            f"transform(sequence(0, cast(ceil(n_tok / cast({w} as double)) as int) - 1), "
-            f"wi -> named_struct('window_start', cast(wi as bigint) * {w}, 'h', {hist}))"
-        )
-        bcols = [F.col("hw.h")[b].alias(f"b{b}") for b in range(n_buckets)]
-    out = (
-        df.filter(F.col("n_tok") > 0)
-        .withColumn("_h", F.expr(spine))
-        .select("doc_id", F.explode("_h").alias("hw"))
-        .select("doc_id", F.col("hw.window_start").alias("window_start"), *bcols)
-    )
-    arr = "array(" + ", ".join(f"b{b}" for b in range(n_buckets)) + ")"
-    total = " + ".join(f"b{b}" for b in range(n_buckets))
-    med = (
-        f"size(filter(transform(sequence(0, {n_buckets - 1}), "
-        f"i -> aggregate(slice({arr}, 1, i + 1), cast(0 as bigint), (a, c) -> a + c)), "
-        f"cum -> cum * 2 < total))"
-    )
-    return (
-        out.withColumn("total", F.expr(total).cast("long"))
-        .withColumn("median_bucket", F.expr(med).cast("long"))
-    )
-
-
-def rollup_histogram_pandas(
-    df: DataFrame, w: int = DEFAULT_W, n_buckets: int = 16, vmax: int = 1104
-) -> DataFrame:
-    """Arrow twin of :func:`rollup_histogram` — identical counts/schema
-    (frame-equality tested), np.bincount kernel.
-
-    Why it exists: Spark higher-order-function lambdas evaluate
-    INTERPRETED per element, so any native histogram fold pays
-    O(n_buckets) interpreted work per token (per-bucket re-folds in the
-    round-4 shape, per-token array copies in the single-pass shape) —
-    measured ~4x wall between nb=16 and nb=64 on 515 M tokens. bincount
-    is one vectorized C pass per doc (window*nb + bucket as the flat key),
-    so per-token cost is O(1) and independent of n_buckets: the scale
-    path for wide histograms, same narrow no-shuffle topology."""
+    One np.bincount pass per doc (window*nb + bucket as the flat key) in
+    mapInPandas: per-token cost is O(1) whatever n_buckets is, where a
+    native higher-order-function fold pays O(n_buckets) interpreted lambda
+    work per token (measured ~4x wall between nb=16 and nb=64 on 515 M
+    tokens). Narrow, no shuffle: raw tokens never cross an exchange."""
 
     @worker_kernel
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -479,7 +412,7 @@ def rollup_histogram_pandas(
         f"b{b} long" for b in range(n_buckets)
     ) + ", total long, median_bucket long"
     return (
-        df.filter(F.col("n_tok") > 0)
+        df.filter(NONEMPTY)
         .select(F.col("doc_id").cast("string").alias("doc_id"), "tokens")
         .mapInPandas(kernel, schema=schema)
     )

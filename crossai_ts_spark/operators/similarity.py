@@ -22,13 +22,6 @@ _DOT = (
 )
 
 
-def _cos(a: str, b: str):
-    return (
-        F.expr(_DOT.format(a=a, b=b))
-        / (F.sqrt(F.expr(_DOT.format(a=a, b=a))) * F.sqrt(F.expr(_DOT.format(a=b, b=b))))
-    )
-
-
 def _norm(col: str):
     """sqrt(dot(col, col)) — the per-vector factor of the cosine.
 

@@ -80,17 +80,6 @@ def lang_id(docs: DataFrame) -> DataFrame:
     return d.select("doc_id", "lang_true", pred.alias("lang_pred"), best.cast("long").alias("score"))
 
 
-def fingerprints(docs: DataFrame) -> DataFrame:
-    """Rolling polynomial hash over characters (mod 1e9+7)."""
-    return docs.filter(F.length("text") > 0).select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.expr(
-            "aggregate(transform(sequence(1, length(text)), i -> ascii(substring(text, i, 1))), "
-            "cast(0 as bigint), (a, c) -> pmod(a * 31 + c, 1000000007))"
-        ).alias("fp"),
-    )
-
-
 def repetition_scores(docs: DataFrame) -> DataFrame:
     """Repetition-based quality filters (the Gopher/MassiveText family):
     duplicate-word fraction and most-frequent-bigram fraction per doc —

@@ -1,11 +1,11 @@
-"""Spectral feature kernels as vectorized pandas UDFs.
+"""Numpy reference for the spectral feature set: all features from ONE rFFT.
 
 The reference computes one rFFT PER FEATURE (caits/fe/_spectral.py:499-539
 ``spectral_values`` calls ``underlying_spectral`` :142-175 ten times, and
-skewness/kurtosis re-derive centroid+spread, :100-102/:129-131). Catalyst
-can't CSE inside a UDF boundary, so we do the manual CSE the reference
-missed: ONE kernel computes the rFFT once per sequence and emits a struct
-of all ten features.
+skewness/kurtosis re-derive centroid+spread, :100-102/:129-131).
+:func:`spectral_values_np` computes the rFFT once and derives every
+feature from it; tests/test_spectral_exact.py checks the cross-engine
+fixed-fold kernels of functions/spectral_exact.py against it.
 
 Formulas (parity with caits/fe/_spectral.py):
   magnitude  = |rfft(x)|, freqs = rfftfreq(n, 1/fs)
@@ -18,18 +18,12 @@ Formulas (parity with caits/fe/_spectral.py):
   std        = stddev of psd (ddof=1)                 (:289-314)
   slope      = OLS slope of m on f                    (:317-371)
   decrease   = sum_{k>1}((m_k-m_1)/(k-1))/sum_{k>1}(m_k)  (:374-426)
-  rms / zcr of the raw window for convenience
+  rms of the raw window for convenience
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
-
-from ..workers import worker_kernel
 
 SPECTRAL_FIELDS = [
     "sp_centroid",
@@ -49,11 +43,9 @@ SPECTRAL_FIELDS = [
     "sp_band_high",
 ]
 
-SPECTRAL_SCHEMA = "doc_id string, " + ", ".join(f"{f} double" for f in SPECTRAL_FIELDS)
-
 
 def spectral_values_np(x: np.ndarray, fs: float = 1.0, rolloff_perc: float = 0.85) -> dict[str, float]:
-    """All spectral features from ONE rFFT. Pure numpy (oracle + kernel)."""
+    """All spectral features from ONE rFFT."""
     x = np.asarray(x, dtype=np.float64)
     n = x.size
     if n < 2:
@@ -87,7 +79,7 @@ def spectral_values_np(x: np.ndarray, fs: float = 1.0, rolloff_perc: float = 0.8
     # caits/fe/_spectral.py:178-256), Welch dominant frequency
     # (_statistical.py:542-571), relative band power thirds (:429-496 with
     # fs-proportional bands)
-    from .spectral2 import band_relative_power, dominant_frequency, spectral_bandwidth
+    from ..functions.spectral2 import band_relative_power, dominant_frequency, spectral_bandwidth
 
     bw = spectral_bandwidth(x, fs)
     dom = dominant_frequency(x, fs)
@@ -114,47 +106,3 @@ def spectral_values_np(x: np.ndarray, fs: float = 1.0, rolloff_perc: float = 0.8
         "sp_band_high": float(bands[2]),
     }
 
-
-def spectral_features(df: DataFrame, fs: float = 1.0) -> DataFrame:
-    """(doc_id, tokens) -> one spectral-feature row per doc.
-
-    mapInPandas (Arrow batches), numpy inside — never per-row Python.
-    """
-
-    @worker_kernel
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, toks in zip(pdf["doc_id"], pdf["tokens"]):
-                feats = spectral_values_np(np.asarray(toks, dtype=np.float64), fs=fs)
-                rows.append({"doc_id": doc_id, **feats})
-            yield pd.DataFrame(rows)
-
-    return df.select("doc_id", "tokens").mapInPandas(kernel, schema=SPECTRAL_SCHEMA)
-
-
-# ------------------------------------------------------ rolling kernels
-
-
-def rolling_rms_np(x: np.ndarray, frame_length: int, hop: int) -> np.ndarray:
-    """Centered padded rolling RMS (caits/properties.py:111-172 semantics:
-    pad frame_length//2 constant-0 both sides, frame, sqrt(mean(x^2)))."""
-    x = np.asarray(x, dtype=np.float64)
-    pad = frame_length // 2
-    xp = np.pad(x, pad, mode="constant")
-    sw = np.lib.stride_tricks.sliding_window_view(xp, frame_length)[::hop]
-    return np.sqrt((sw * sw).mean(axis=1))
-
-
-def rolling_zcr_np(x: np.ndarray, frame_length: int, hop: int) -> np.ndarray:
-    """Edge-padded centered rolling zero-crossing rate
-    (caits/properties.py:175-223): sign changes are counted only WITHIN each
-    frame (frame_length-1 diff slots, never across the frame boundary) and
-    divided by frame_length — matching the reference's
-    ``np.diff(np.signbit(frames))`` semantics."""
-    x = np.asarray(x, dtype=np.float64)
-    pad = frame_length // 2
-    xp = np.pad(x, pad, mode="edge")
-    frames = np.lib.stride_tricks.sliding_window_view(xp, frame_length)[::hop]
-    cross = np.abs(np.diff(np.signbit(frames), axis=1)).sum(axis=1)
-    return cross / float(frame_length)

@@ -9,19 +9,7 @@ used by plans/checkpoint.py.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
-
-
-def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName(  # noqa: SLF001
-            "org.apache.iceberg.spark.SparkCatalog"
-        )
-        return True
-    except Exception:
-        return False
 
 
 def s3_available(spark: SparkSession) -> bool:
@@ -132,38 +120,3 @@ def read_sequences(spark: SparkSession, location: str) -> DataFrame:
     """Input_hint table (doc_id, tokens, n_tok, source) from storage."""
     df = read_table(spark, location)
     return df.select("doc_id", "tokens", "n_tok", "source")
-
-
-def ensure_dir(path: str) -> None:
-    os.makedirs(path, exist_ok=True)
-
-
-def load_json(spark, path: str):
-    """json_loader parity (caits/loading): spark.read.json with schema
-    inference disabled-by-sample (cluster-friendly: one pass)."""
-    return spark.read.json(path)
-
-
-def load_yaml_config(path: str) -> dict:
-    """load_yaml_config parity (caits/experiment config loading). The
-    sandbox has no pyyaml; covers the reference's flat `key: value` configs
-    (str/int/float/bool) — nested YAML needs the real parser."""
-    out: dict = {}
-    with open(path) as f:
-        for line in f:
-            line = line.split("#", 1)[0].strip()
-            if not line or ":" not in line:
-                continue
-            k, v = line.split(":", 1)
-            v = v.strip().strip("'\"")
-            if v.lower() in ("true", "false"):
-                out[k.strip()] = v.lower() == "true"
-            else:
-                try:
-                    out[k.strip()] = int(v)
-                except ValueError:
-                    try:
-                        out[k.strip()] = float(v)
-                    except ValueError:
-                        out[k.strip()] = v
-    return out

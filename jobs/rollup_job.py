@@ -4,7 +4,7 @@
         --input <parquet dir | iceberg:tbl | synthetic:N_DOCS> \
         --out /path/to/rollup_out \
         --buckets 16 [--w 64 --fanout 64 --tiers 3] \
-        [--compress] [--resume] [--strategy native|pandas]
+        [--compress] [--resume]
 
 Each bucket (pmod(xxhash64(doc_id), B)) commits atomically with a lineage +
 metrics manifest; --resume anti-joins completed manifests and processes only
@@ -31,7 +31,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--w", type=int, default=64)
     ap.add_argument("--fanout", type=int, default=64)
     ap.add_argument("--tiers", type=int, default=3)
-    ap.add_argument("--strategy", choices=["native", "pandas"], default="pandas")
     ap.add_argument("--compress", action="store_true")
     ap.add_argument("--resume", action="store_true")
     ap.add_argument("--master", default=None)
@@ -40,7 +39,7 @@ def main(argv: list[str] | None = None) -> int:
 
     from crossai_ts_spark.datagen import gen_sequences
     from crossai_ts_spark.functions.codecs import compress_tiers
-    from crossai_ts_spark.operators.rollup import cascade
+    from crossai_ts_spark.operators.rollup import cascade_pandas
     from crossai_ts_spark.plans.checkpoint import commit_bucket, drop_buckets_from, pending_buckets, with_bucket
     from crossai_ts_spark.session import get_spark
     from crossai_ts_spark.sources.io import read_sequences, write_table
@@ -72,7 +71,7 @@ def main(argv: list[str] | None = None) -> int:
     t0 = time.monotonic()
     for b in todo:
         sub = seqs.filter(F.col("bucket") == b).drop("bucket")
-        tiers_df = cascade(sub, strategy=args.strategy, w=args.w, fanout=args.fanout, tiers=args.tiers)
+        tiers_df = cascade_pandas(sub, w=args.w, fanout=args.fanout, tiers=args.tiers)
         m = commit_bucket(tiers_df, args.out, b, input_snapshot=snapshot, params=params)
         toks = sum(t["tokens"] for t in m["tiers"].values())
         print(f"[rollup_job] bucket={b} rows={sum(t['rows'] for t in m['tiers'].values())} "

@@ -106,7 +106,7 @@ def test_rollup_job_end_to_end(spark, tmp_path):
         [
             "--input", "synthetic:40", "--out", out, "--buckets", "3",
             "--w", "64", "--fanout", "8", "--tiers", "2",
-            "--strategy", "pandas", "--compress", "--master", "local[4]",
+            "--compress", "--master", "local[4]",
         ]
     )
     assert rc == 0
@@ -270,34 +270,3 @@ def test_rerun_with_fewer_buckets_drops_the_rest(spark, tmp_path):
             rows += json.load(f)["tiers"]["1"]["rows"]
     pts = spark.read.parquet(f"{out}/compressed").filter(F.col("tier") == 1).agg(F.sum("n_points")).first()[0]
     assert pts == rows
-
-
-def test_bucketed_join_needs_no_exchange(spark, tmp_path):
-    """Tables bucketed on doc_id join WITHOUT a shuffle: the physical plan
-    must contain no Exchange (the 100-TB lineage/audit join pattern)."""
-    from pyspark.sql import functions as F
-
-    from crossai_ts_spark.datagen import gen_local
-    from crossai_ts_spark.operators.rollup import rollup_native
-    from crossai_ts_spark.plans.bucketing import bucketed_join, write_bucketed
-    from crossai_ts_spark.schema import SEQUENCES_SCHEMA
-
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # force SMJ path
-    try:
-        docs = gen_local(seed=5, n_docs=30, max_tok=600)
-        seqs = spark.createDataFrame(docs, schema=SEQUENCES_SCHEMA)
-        t1 = rollup_native(seqs, w=64).select("doc_id", "window_start", "t_sum", "t_cnt")
-        agg = t1.groupBy("doc_id").agg(F.sum("t_cnt").alias("n_tok_total"))
-        write_bucketed(t1, "bt_tier1", n_buckets=4)
-        write_bucketed(agg, "bt_doc_totals", n_buckets=4)
-        j = bucketed_join(spark, "bt_tier1", "bt_doc_totals")
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        # and the join result is right
-        got = j.groupBy("doc_id").agg(F.sum("t_cnt").alias("s"), F.first("n_tok_total").alias("t"))
-        bad = got.filter(F.col("s") != F.col("t")).count()
-        assert bad == 0
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS bt_tier1")
-        spark.sql("DROP TABLE IF EXISTS bt_doc_totals")

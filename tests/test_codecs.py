@@ -123,9 +123,9 @@ def test_compressed_blob_partitioning_invariance(spark, tiny_df):
 
 
 def test_token_roundtrip_invariant(spark, tiny_df):
-    from crossai_ts_spark.functions.codecs import tokens_roundtrip_check
+    from crossai_ts_spark.functions.codecs import tokens_roundtrip_sums
 
-    res = tokens_roundtrip_check(tiny_df).toPandas()
+    res = tokens_roundtrip_sums(tiny_df).toPandas()
     assert res.ok.all()
 
 

@@ -1,4 +1,4 @@
-"""Dedup, similarity-search, text-analysis, multimodal plumbing."""
+"""Dedup, similarity-search and text-analysis operators."""
 
 from __future__ import annotations
 
@@ -94,65 +94,6 @@ def test_textstats(spark, docs_df):
     assert li.loc["6", "lang_pred"] == "fr"
 
 
-def test_multimodal_plumbing(spark):
-    from crossai_ts_spark.operators.multimodal import (
-        extract_features,
-        fake_decoder,
-        frame_sample,
-        real_decoder,
-        synth_media,
-    )
-
-    media = synth_media(spark, n=12)
-    feats = extract_features(media, decoder=fake_decoder).toPandas()
-    assert len(feats) == 12
-    assert all(len(e) == 64 for e in feats.embedding)
-    # determinism: same payload -> same features
-    feats2 = extract_features(media, decoder=fake_decoder).toPandas()
-    a = feats.sort_values("media_id").embedding.map(tuple).tolist()
-    b = feats2.sort_values("media_id").embedding.map(tuple).tolist()
-    assert a == b
-
-    frames = frame_sample(media, every=10).toPandas()
-    assert set(frames.frame_idx) == {0, 10, 20}
-
-    # image decode is stdlib-real now (PPM/BMP); junk bytes raise ValueError
-    with pytest.raises(ValueError, match="not a PPM"):
-        real_decoder(b"x", "image")
-
-
-def test_multimodal_auto_decoder_and_byte_cap(spark):
-    from crossai_ts_spark.operators.multimodal import (
-        auto_decoder,
-        extract_features,
-        fake_decoder,
-        has_real_decoder,
-        real_decoder,
-        synth_media,
-    )
-
-    # sandbox has no PIL/soundfile/av: auto == fake, real raises per-kind
-    for kind in ("image", "audio", "video"):
-        if has_real_decoder(kind):  # pragma: no cover - provisioned image
-            assert real_decoder.__doc__  # decode path exists; skip fake check
-            continue
-        assert (auto_decoder(b"abc", kind) == fake_decoder(b"abc", kind)).all()
-        with pytest.raises(NotImplementedError, match="decoding kind"):
-            real_decoder(b"abc", kind)
-
-    # byte-capped batching: a cap smaller than one payload still emits
-    # every row, identical to the uncapped run
-    media = synth_media(spark, n=12)
-    full = extract_features(media, decoder=fake_decoder).toPandas()
-    capped = extract_features(
-        media, decoder=fake_decoder, max_batch_bytes=100
-    ).toPandas()
-    assert len(capped) == len(full) == 12
-    a = full.sort_values("media_id").embedding.map(tuple).tolist()
-    b = capped.sort_values("media_id").embedding.map(tuple).tolist()
-    assert a == b
-
-
 def test_pathological_universal_shingle_is_df_capped(spark):
     """One shingle shared by EVERY doc: the uncapped self-join would emit
     n^2 rows; with max_df the universal shingle is dropped from the capped
@@ -204,114 +145,6 @@ def test_embedding_near_dups_lsh_default_no_crossjoin(spark):
         emb, threshold=0.99, dim=16, n_bits=4, n_tables=3, seed=1
     )._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
-
-
-def test_audio_loader_resamples_at_load(spark):
-    from crossai_ts_spark.operators.multimodal import (
-        fake_decoder,
-        load_audio_resampled,
-        synth_media,
-    )
-
-    media = synth_media(spark, n=30, seed=7)
-    out = load_audio_resampled(media, target_sr=8000).toPandas()
-    assert (out.sr == 8000).all()
-    assert len(out) == 10  # kinds cycle image/audio/video; audio = i%3==1
-    # fake_decoder emits a fixed 64-sample waveform at meta_sr=16000;
-    # halving the rate must halve the sample count (ceil(64/2))
-    n_orig = fake_decoder(b"x" * 300, "audio").size
-    assert (out.n_samples == -(-n_orig * 8000 // 16000)).all()
-
-
-def test_stdlib_wav_decode_roundtrip():
-    """encode_wav -> decode_wav recovers the signal to PCM16 quantization
-    (|err| <= 1/32767), for mono and with stereo mono-mixing; PCM8/24/32
-    widths parse and scale to [-1, 1]."""
-    import io
-    import wave as _wave
-
-    from crossai_ts_spark.operators.multimodal import decode_wav, encode_wav
-
-    rng = np.random.default_rng(3)
-    sig = (0.8 * np.sin(2 * np.pi * 440 * np.arange(400) / 16000)).astype(np.float32)
-    back = decode_wav(encode_wav(sig, 16000))
-    assert back.dtype == np.float32 and back.shape == sig.shape
-    assert np.abs(back - sig).max() <= 0.501 / 32768  # half-lsb quantization
-
-    # stereo PCM16 mono-mix: L and R average
-    left = rng.integers(-30000, 30000, 100).astype("<i2")
-    right = rng.integers(-30000, 30000, 100).astype("<i2")
-    inter = np.empty(200, dtype="<i2")
-    inter[0::2], inter[1::2] = left, right
-    buf = io.BytesIO()
-    with _wave.open(buf, "wb") as w:
-        w.setnchannels(2)
-        w.setsampwidth(2)
-        w.setframerate(8000)
-        w.writeframes(inter.tobytes())
-    mixed = decode_wav(buf.getvalue())
-    expect = (left.astype(np.float32) + right.astype(np.float32)) / 2 / 32768.0
-    assert np.abs(mixed - expect).max() < 1e-6
-
-    # width sweep: PCM8 (unsigned), PCM24, PCM32 all land in [-1, 1]
-    for width, payload in [
-        (1, np.array([0, 128, 255], dtype=np.uint8).tobytes()),
-        (3, b"\x00\x00\x80" + b"\xff\xff\x7f"),  # min24, max24
-        (4, np.array([-(2**31), 2**31 - 1], dtype="<i4").tobytes()),
-    ]:
-        buf = io.BytesIO()
-        with _wave.open(buf, "wb") as w:
-            w.setnchannels(1)
-            w.setsampwidth(width)
-            w.setframerate(8000)
-            w.writeframes(payload)
-        x = decode_wav(buf.getvalue())
-        assert x.min() >= -1.0 and x.max() <= 1.0
-        assert x.min() < -0.99 and x.max() > 0.98  # extremes reach the rails
-
-
-def test_wav_media_decodes_real_through_spark(spark):
-    """synth_wav_media payloads are genuine RIFF/WAVE; auto_decoder takes
-    the stdlib real path (not the digest fake) inside the Spark kernel, and
-    pooled embeddings reflect the actual sinusoid content."""
-    from crossai_ts_spark.operators.multimodal import (
-        auto_decoder,
-        decode_wav,
-        extract_features,
-        fake_decoder,
-        load_audio_resampled,
-        pool_features,
-        synth_wav_media,
-    )
-
-    media = synth_wav_media(spark, n=6, seed=9, sr=16000, n_samples=800)
-    rows = media.toPandas()
-    assert all(bytes(p)[:4] == b"RIFF" for p in rows.payload)
-
-    feats = extract_features(media).toPandas().sort_values("media_id")
-    assert all(len(e) == 64 for e in feats.embedding)
-    # expected = pool of the stdlib decode, NOT the digest fake
-    for _, r in rows.iterrows():
-        want = pool_features(decode_wav(bytes(r.payload)), 64)
-        got = np.asarray(
-            feats.set_index("media_id").loc[r.media_id, "embedding"], dtype=np.float32
-        )
-        assert np.allclose(got, want, atol=1e-6)
-        fake = pool_features(fake_decoder(bytes(r.payload), "audio"), 64)
-        assert not np.allclose(got, fake)
-
-    # load-time resample consumes the real 800-sample waveform: 16k -> 8k
-    out = load_audio_resampled(media, target_sr=8000).toPandas()
-    assert (out.n_samples == 400).all()
-    assert (out.peak < 1.0).all() and (out.peak > 0.3).all()
-
-    # pooling contract: shorter-than-dim pads, longer pools, exact passes
-    assert pool_features(np.ones(10), 64).shape == (64,)
-    assert pool_features(np.arange(640.0), 64).shape == (64,)
-    assert np.allclose(
-        pool_features(np.arange(640.0), 64),
-        np.arange(640.0).reshape(64, 10).mean(axis=1),
-    )
 
 
 def test_multiprobe_lsh_improves_recall(spark):
@@ -973,115 +806,6 @@ def test_source_mixing_weights_semantics(spark):
     # temperature upweights the small shard relative to raw token share
     raw_small = 100 / 2100
     assert out.loc["small", "mix_weight"] > raw_small
-
-
-def test_auto_decoder_corrupt_riff_falls_back():
-    """A payload that SNIFFS as RIFF but is not a parseable WAV (an AVI
-    container, a truncated WAV) must fall back to the deterministic fake
-    instead of raising wave.Error inside a Spark task; strict=True opts
-    back into the raise for decode-regression debugging."""
-    import pytest
-
-    from crossai_ts_spark.operators.multimodal import (
-        _SOUNDFILE,
-        auto_decoder,
-        fake_decoder,
-    )
-
-    if _SOUNDFILE is not None:  # pragma: no cover - provisioned image
-        pytest.skip("soundfile present: stdlib RIFF sniff path not in play")
-    avi = b"RIFF" + (1000).to_bytes(4, "little") + b"AVI LIST" + b"\x00" * 64
-    truncated = b"RIFF\x24\x00\x00\x00WAVE"
-    for payload in (avi, truncated):
-        got = auto_decoder(payload, "audio")
-        assert (got == fake_decoder(payload, "audio")).all()
-        with pytest.raises(Exception):
-            auto_decoder(payload, "audio", strict=True)
-
-
-def test_stdlib_image_decode_roundtrip_and_formats():
-    """decode_image: P6/BMP encode->decode identity up to 8-bit
-    quantization; P3 ascii, header comments, 16-bit maxval, odd widths
-    (BMP row padding), top-down BMP — all parsed correctly."""
-    import numpy as np
-
-    from crossai_ts_spark.operators.multimodal import (
-        _decode_bmp,
-        decode_image,
-        encode_bmp,
-        encode_ppm,
-    )
-
-    rng = np.random.default_rng(7)
-    img = rng.uniform(0, 1, (11, 13, 3))  # width 13: BMP stride padding
-    for enc in (encode_ppm, encode_bmp):
-        got = decode_image(enc(img))
-        assert got.shape == (11, 13, 3) and got.dtype == np.float32
-        assert np.abs(got - img).max() <= 0.5 / 255 + 1e-7
-
-    # P3 ascii with comments
-    p3 = b"P3\n# a comment\n2 1\n# another\n255\n255 0 0  0 128 255\n"
-    got = decode_image(p3)
-    assert got.shape == (1, 2, 3)
-    assert np.allclose(got[0, 0], [1.0, 0.0, 0.0])
-    assert np.allclose(got[0, 1], [0.0, 128 / 255, 1.0])
-
-    # 16-bit maxval P6 (big-endian samples)
-    px = np.array([[655, 0, 65535]], dtype=">u2")
-    p6_16 = b"P6\n1 1\n65535\n" + px.tobytes()
-    got = decode_image(p6_16)
-    assert np.allclose(got.ravel(), [655 / 65535, 0.0, 1.0])
-
-    # top-down BMP (negative height) decodes to the same pixels
-    bottom_up = encode_bmp(img)
-    import struct
-
-    td = bytearray(bottom_up)
-    hdrw, hdrh = struct.unpack_from("<ii", td, 18)
-    struct.pack_into("<ii", td, 18, hdrw, -hdrh)
-    pix = np.clip(np.round(img * 255), 0, 255).astype(np.uint8)
-    stride = (13 * 3 + 3) // 4 * 4
-    body = np.zeros((11, stride), dtype=np.uint8)
-    body[:, : 13 * 3] = pix[:, :, ::-1].reshape(11, 13 * 3)  # NOT flipped
-    td[54:] = body.tobytes()
-    assert np.array_equal(_decode_bmp(bytes(td)), decode_image(bottom_up))
-
-
-def test_image_media_decodes_real_through_spark(spark):
-    """synth_image_media payloads are genuine PPM/BMP; auto_decoder takes
-    the stdlib real path inside the Spark kernel (mirrors the WAV test),
-    and corrupt image bytes fall back to the fake instead of raising."""
-    import numpy as np
-
-    from crossai_ts_spark.operators.multimodal import (
-        auto_decoder,
-        decode_image,
-        extract_features,
-        fake_decoder,
-        pool_features,
-        synth_image_media,
-    )
-
-    media = synth_image_media(spark, n=6, seed=3)
-    rows = media.toPandas()
-    assert {bytes(p)[:2] for p in rows.payload} == {b"P6", b"BM"}
-
-    feats = extract_features(media).toPandas().sort_values("media_id")
-    assert all(len(e) == 64 for e in feats.embedding)
-    for _, r in rows.iterrows():
-        want = pool_features(decode_image(bytes(r.payload)), 64)
-        got = np.asarray(
-            feats.set_index("media_id").loc[r.media_id, "embedding"], dtype=np.float32
-        )
-        assert np.allclose(got, want, atol=1e-6)
-        fake = pool_features(fake_decoder(bytes(r.payload), "image"), 64)
-        assert not np.allclose(got, fake)
-
-    # corrupt sniffable payloads: fake fallback, strict raises
-    for junk in (b"P6\n-3 2\n255\nxx", b"BM" + b"\x00" * 20):
-        assert (auto_decoder(junk, "image") == fake_decoder(junk, "image")).all()
-    # non-sniffable bytes keep the digest-fake contract
-    assert (auto_decoder(b"\x89PNG1234", "image") == fake_decoder(b"\x89PNG1234", "image")).all()
 
 
 def test_segment_dedup_semantics(spark):

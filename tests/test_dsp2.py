@@ -14,7 +14,6 @@ from crossai_ts_spark.functions.dsp2 import (
     phase_vocoder,
     pitch_shift_ts,
     resample_poly,
-    resample_signal,
     time_stretch_ts,
     time_warp_np,
 )
@@ -108,54 +107,12 @@ def test_resample_poly_sine_parity():
     assert resample_poly(x, 5, 5).size == x.size  # identity via gcd
 
 
-def test_resample_signal_rates():
-    x = np.sin(2 * np.pi * 50 * np.arange(48000) / 48000)
-    y = resample_signal(x, 48000, 16000)
-    assert y.size == 16000
-    with pytest.raises(ValueError):
-        resample_signal(x, 44100.5, 16000)
-
-
 def test_resample_antialiasing():
     """Content above the target Nyquist must be attenuated, not aliased."""
     n = 6000
     hi = np.sin(2 * np.pi * 0.45 * np.arange(n))  # near orig Nyquist
     y = resample_poly(hi, 1, 3)  # target Nyquist = 1/6 cycles/sample
     assert np.sqrt((y[50:-50] ** 2).mean()) < 0.05 * np.sqrt((hi**2).mean())
-
-
-def test_resample_fft_sine_parity():
-    """A periodic-over-the-frame sinusoid resamples EXACTLY (to FFT
-    precision) in the Fourier domain — no filter transition band."""
-    from crossai_ts_spark.functions.dsp2 import resample_fft
-
-    n = 1200
-    k = 37  # integer number of cycles -> periodic over the frame
-    x = np.sin(2 * np.pi * k * np.arange(n) / n)
-    for num in (1800, 600, 800):
-        y = resample_fft(x, num)
-        want = np.sin(2 * np.pi * k * np.arange(num) / num)
-        assert y.size == num
-        assert np.abs(y - want).max() < 1e-9, num
-    # round-trip up then back down is near-identity
-    rt = resample_fft(resample_fft(x, 2400), 1200)
-    assert np.abs(rt - x).max() < 1e-9
-    # Nyquist cosine on even-length input survives upsampling
-    c = np.cos(np.pi * np.arange(64))
-    u = resample_fft(c, 128)
-    assert np.abs(u[::2] - c).max() < 1e-9
-
-
-def test_resample_signal_fft_mode():
-    from crossai_ts_spark.functions.dsp2 import resample_signal
-
-    x = np.sin(2 * np.pi * 60 * np.arange(4800) / 4800)
-    y = resample_signal(x, 48000, 16000, mode="fft")
-    assert y.size == 1600
-    want = np.sin(2 * np.pi * 60 * np.arange(1600) / 1600)
-    assert np.abs(y - want).max() < 1e-9
-    with pytest.raises(ValueError):
-        resample_signal(x, 48000, 16000, mode="nonsense_mode")
 
 
 def test_time_warp_deterministic_and_bounded():
@@ -189,32 +146,6 @@ def test_resample_fir_exact_formula_matches_resample_poly():
     ])
     assert y_poly.size == 43
     np.testing.assert_allclose(y_manual, y_poly, rtol=1e-12, atol=1e-12)
-
-
-def test_resample_soxr_quality_ladder():
-    """soxr_* presets map to the polyphase engine; higher quality = longer
-    prototype = better stopband (less energy above the new Nyquist)."""
-    import numpy as np
-
-    from crossai_ts_spark.functions.dsp2 import resample_signal
-
-    n = 4096
-    t = np.arange(n)
-    # a tone just above the 4 kHz target Nyquist: whatever the anti-alias
-    # filter fails to remove folds to 8000 - 4400 = 3600 Hz in the output
-    x = np.sin(2 * np.pi * 4400 * t / 16000)
-    hq = resample_signal(x, 16000, 8000, mode="soxr_hq")
-    qq = resample_signal(x, 16000, 8000, mode="soxr_qq")
-    assert hq.size == qq.size == n // 2
-    # identical to the default polyphase path at matching taps
-    assert np.array_equal(hq, resample_signal(x, 16000, 8000, mode="polyphase"))
-
-    def alias_energy(y):
-        sp = np.abs(np.fft.rfft(y[64:-64]))
-        f = np.fft.rfftfreq(y[64:-64].size, 1 / 8000)
-        return float((sp[(f > 3500) & (f < 3700)] ** 2).sum())
-
-    assert alias_energy(hq) < alias_energy(qq) / 10  # longer filter rejects more
 
 
 def test_pcen_docs_matches_numpy_fold_and_reference_surface(spark):

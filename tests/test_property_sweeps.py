@@ -11,7 +11,7 @@ import numpy as np
 import pytest
 
 from crossai_ts_spark.datagen import gen_local
-from crossai_ts_spark.operators.rollup import cascade_native, cascade_pandas
+from crossai_ts_spark.operators.rollup import cascade_native, cascade_pandas, rollup_histogram, rollup_native
 from crossai_ts_spark.operators.salted import salted_tier_source_rollup
 from crossai_ts_spark.oracle.rollup import cascade_oracle
 from crossai_ts_spark.schema import SEQUENCES_SCHEMA
@@ -53,6 +53,30 @@ def test_partition_strategy_matrix(spark, sweep_df, sweep_docs, parts, strategy)
     got = fn(sweep_df.repartition(parts), w=32, fanout=4, tiers=2).toPandas()
     exp = cascade_oracle(sweep_docs, w=32, fanout=4, tiers=2)
     _cmp(got, exp)
+
+
+def test_n_tok_disagreeing_with_tokens_rolls_up_every_token(spark):
+    """Rows datagen never makes: ``n_tok`` shorter or longer than the array,
+    an empty array with ``n_tok > 0`` and a null array. Both cascades and
+    rollup_native roll up exactly the tokens present, whatever ``n_tok``
+    says; the null row is dropped like an empty one."""
+    import pandas as pd
+
+    rows = [("short", [7, 8, 9], 2, "s"), ("long", [1, 2, 3, 4, 5], 8, "s"),
+            ("empty", [], 3, "s"), ("null", None, 4, "s")]
+    df = spark.createDataFrame(rows, "doc_id string, tokens array<int>, n_tok int, source string")
+    docs = pd.DataFrame([r for r in rows if r[1] is not None], columns=["doc_id", "tokens", "n_tok", "source"])
+    exp = cascade_oracle(docs, w=2, fanout=2, tiers=2)
+    native = cascade_native(df, w=2, fanout=2, tiers=2).toPandas()
+    arrow = cascade_pandas(df, w=2, fanout=2, tiers=2).toPandas()
+    _cmp(native, exp)
+    _cmp(arrow, exp)
+    _cmp(arrow, native)
+    _cmp(rollup_native(df, w=2).toPandas(), exp[exp.tier == 1])
+    hist = rollup_histogram(df, w=2).toPandas()
+    t1 = exp[exp.tier == 1]
+    assert sorted(zip(hist.doc_id, hist.window_start, hist.total)) == sorted(
+        zip(t1.doc_id, t1.window_start, t1.t_cnt))
 
 
 @pytest.mark.parametrize("salts", [1, 4, 64])

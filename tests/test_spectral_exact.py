@@ -3,8 +3,8 @@
 Three claims under test:
 1. the quantized-twiddle integer DFT is a real DFT — magnitudes match
    numpy's rFFT to ~2^-30 relative;
-2. the fixed-fold features match the production numpy kernel
-   (spectral_values_np) when that kernel runs on the same frame at fs=64;
+2. the fixed-fold features match the numpy reference
+   (oracle.spectral_values_np) when it runs on the same frame at fs=64;
 3. the Spark mapInPandas queries agree BITWISE with their DuckDB oracles
    (the actual driver gate, spot-checked here at sf0.001 scale inputs).
 """
@@ -36,7 +36,7 @@ def test_quantized_dft_matches_numpy_rfft(seed):
 
 @pytest.mark.parametrize("seed", [0, 3])
 def test_exact_features_match_production_kernel(seed):
-    from crossai_ts_spark.functions.spectral import spectral_values_np
+    from crossai_ts_spark.oracle.spectral import spectral_values_np
 
     x = _rand_frame(seed)
     got = se._spectral_feats(x)

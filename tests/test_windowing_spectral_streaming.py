@@ -1,100 +1,10 @@
-"""Windowing operators, spectral pUDF, and the streaming surface."""
+"""The streaming surface: each stream against its batch twin."""
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
-
-from crossai_ts_spark.functions.spectral import (
-    rolling_rms_np,
-    rolling_zcr_np,
-    spectral_features,
-    spectral_values_np,
-)
-from crossai_ts_spark.operators.windowing import (
-    frame_matrix,
-    rolling_rms,
-    rolling_rms_pandas,
-    sliding_windows,
-)
-
-
-def test_sliding_windows_counts(spark, tiny_df, tiny_docs):
-    """Window count = floor((n - ws)/step) + 1 (caits/windowing.py:52-77)."""
-    ws, st = 16, 8
-    got = sliding_windows(tiny_df, ws, st).groupBy("doc_id").count().toPandas()
-    cnt = dict(zip(got.doc_id, got["count"]))
-    for row in tiny_docs.itertuples(index=False):
-        n = len(row.tokens)
-        exp = (n - ws) // st + 1 if n >= ws else 0
-        assert cnt.get(row.doc_id, 0) == exp, row.doc_id
-
-
-def test_sliding_window_values(spark, tiny_df, tiny_docs):
-    got = (
-        sliding_windows(tiny_df, 16, 8)
-        .filter(F.col("doc_id") == "doc-bnd-0004")
-        .orderBy("wstart")
-        .toPandas()
-    )
-    toks = np.asarray(tiny_docs[tiny_docs.doc_id == "doc-bnd-0004"].tokens.iloc[0])
-    for _, r in got.head(5).iterrows():
-        assert list(r["values"]) == toks[r.wstart : r.wstart + 16].tolist()
-
-
-def test_rolling_rms_long_format(spark, tiny_df):
-    """SQL-frame rolling RMS == pandas rolling oracle (right-aligned)."""
-    doc = "doc-bnd-0002"  # 64 tokens
-    long_df = (
-        tiny_df.filter(F.col("doc_id") == doc)
-        .select("doc_id", F.posexplode("tokens").alias("offset", "value"))
-        .select("doc_id", F.col("offset").cast("long").alias("offset"), "value")
-    )
-    got = rolling_rms(long_df, frame=8).orderBy("offset").toPandas()
-    s = pd.Series(got.value.astype(np.float64))
-    exp = np.sqrt((s * s).rolling(8, min_periods=1).mean())
-    assert np.allclose(got.rms.to_numpy(), exp.to_numpy(), rtol=0, atol=1e-9)
-
-
-def test_rolling_rms_pandas_padded(spark, tiny_df, tiny_docs):
-    """Arrow kernel matches the centered+padded numpy oracle bitwise."""
-    got = (
-        rolling_rms_pandas(tiny_df.filter(F.col("doc_id") == "doc-bnd-0002"), frame=8, hop=2)
-        .orderBy("frame_idx")
-        .toPandas()
-    )
-    toks = np.asarray(tiny_docs[tiny_docs.doc_id == "doc-bnd-0002"].tokens.iloc[0], dtype=np.float64)
-    exp = rolling_rms_np(toks, 8, 2)
-    assert got.rms.to_numpy().view(np.int64).tolist() == exp.view(np.int64).tolist()
-
-
-def test_frame_matrix_strides(spark, tiny_df, tiny_docs):
-    got = (
-        frame_matrix(tiny_df.filter(F.col("doc_id") == "doc-bnd-0003"), 32, 16)
-        .orderBy("frame_idx")
-        .toPandas()
-    )
-    toks = np.asarray(tiny_docs[tiny_docs.doc_id == "doc-bnd-0003"].tokens.iloc[0])
-    assert len(got) == (65 - 32) // 16 + 1
-    assert list(got.frame.iloc[1]) == toks[16:48].tolist()
-
-
-def test_spectral_struct_matches_numpy(spark, tiny_df, tiny_docs):
-    """One-FFT struct == per-feature numpy oracle (manual CSE is lossless)."""
-    got = spectral_features(tiny_df).toPandas().set_index("doc_id")
-    for row in tiny_docs.head(5).itertuples(index=False):
-        exp = spectral_values_np(np.asarray(row.tokens, dtype=np.float64))
-        for k, v in exp.items():
-            g = got.loc[row.doc_id, k]
-            assert (np.isnan(v) and np.isnan(g)) or g == v, (row.doc_id, k)
-
-
-def test_rolling_zcr_np_shape():
-    x = np.random.default_rng(42).normal(0, 1, 256)
-    z = rolling_zcr_np(x, 16, 4)
-    assert z.size == (256 + 2 * 8 - 16) // 4 + 1
-    assert ((z >= 0) & (z <= 1)).all()
 
 
 def test_streaming_tier1_equals_batch(spark, tiny_df, tmp_path):
