@@ -57,12 +57,12 @@ def _ordered_names() -> list[str]:
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: tokenize sf0.001 documents -> 3-tier retention cascade."""
-    from crossai_ts_spark.operators.rollup import cascade_native
+    from crossai_ts_spark.operators.rollup import cascade
     from crossai_ts_spark.sources.tokenize import tokenize_documents
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     seqs = tokenize_documents(docs)
-    return cascade_native(seqs, w=32, fanout=8, tiers=3)
+    return cascade(seqs, w=32, fanout=8, tiers=3)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -8,7 +8,8 @@ Two workloads:
      (default /root/testdata/sf0.1), each timed to completion.
 
 Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (local[N]),
-BENCH_DOCS (synthetic corpus size, default 2000), BENCH_STRATEGY.
+BENCH_DOCS (synthetic corpus size, default 2000), BENCH_TRIALS (query
+trials, default 3).
 """
 
 from __future__ import annotations
@@ -82,7 +83,7 @@ HEADLINE_QUERIES = [
 ]
 
 
-def bench_rollup(spark, n_docs: int, strategy: str, n_trials: int = 3) -> dict:
+def bench_rollup(spark, n_docs: int, n_trials: int = 3) -> dict:
     seqs = gen_sequences(spark, n_docs=n_docs, seed=42).cache()
     n_seq = seqs.count()  # materialize input so rollup timing excludes datagen
     n_tokens = int(seqs.selectExpr("sum(cast(n_tok as bigint)) s").collect()[0].s)
@@ -90,12 +91,12 @@ def bench_rollup(spark, n_docs: int, strategy: str, n_trials: int = 3) -> dict:
     # warm-up (uncounted): JVM codegen + Arrow + python workers; then
     # min-of-N like the query loop — a single cold trial swung the headline
     # 3-14 M tokens/s on identical code in this sandbox
-    _count_tiers(spark, cascade(seqs, strategy=strategy, w=64, fanout=64, tiers=3))
+    _count_tiers(spark, cascade(seqs, w=64, fanout=64, tiers=3))
     trials = []
     per_tier = {}
     for _ in range(n_trials):
         t0 = time.monotonic()
-        per_tier = _count_tiers(spark, cascade(seqs, strategy=strategy, w=64, fanout=64, tiers=3))
+        per_tier = _count_tiers(spark, cascade(seqs, w=64, fanout=64, tiers=3))
         trials.append(round(time.monotonic() - t0, 3))
     wall = min(trials)
 
@@ -105,14 +106,14 @@ def bench_rollup(spark, n_docs: int, strategy: str, n_trials: int = 3) -> dict:
     # tier 1 from the corpus, tier k+1 re-aggregated from the persisted
     # tier k. tokens_per_sec keeps the headline definition (corpus tokens
     # over that tier's wall). min-of-2 per tier.
-    from crossai_ts_spark.operators.rollup import cascade_from_tier, rollup_native
+    from crossai_ts_spark.operators.rollup import cascade_from_tier
 
     tier_detail: dict[int, dict] = {}
     for _ in range(2):
         prev = None
         for k in (1, 2, 3):
             cur = (
-                rollup_native(seqs, w=64, tier=1)
+                cascade(seqs, w=64, tiers=1)
                 if k == 1
                 else cascade_from_tier(prev, k - 1, w=64, fanout=64)
             ).persist()
@@ -135,7 +136,6 @@ def bench_rollup(spark, n_docs: int, strategy: str, n_trials: int = 3) -> dict:
     return {
         "n_docs": n_seq,
         "n_tokens": n_tokens,
-        "strategy": strategy,
         "wall_sec": wall,
         "wall_trials": trials,
         "rows_per_tier": per_tier,
@@ -154,10 +154,9 @@ def _count_tiers(spark, tiers) -> dict:
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     n_docs = int(os.environ.get("BENCH_DOCS", "2000"))
-    strategy = os.environ.get("BENCH_STRATEGY", "pandas")
     spark = get_spark(app_name="bench")
 
-    rollup = bench_rollup(spark, n_docs, strategy)
+    rollup = bench_rollup(spark, n_docs)
 
     import __spark_entry__ as e
 

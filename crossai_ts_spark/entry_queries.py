@@ -23,7 +23,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .operators.rollup import cascade_native, rollup_native
+from .operators.rollup import cascade
 from .operators.salted import salted_tier_source_rollup
 from .sources.tokenize import tokenize_documents
 from .workers import worker_kernel
@@ -150,14 +150,14 @@ def _tier_out(tiers: DataFrame) -> DataFrame:
 def rollup_tier1(spark, sf_dir):
     """Tumbling rollup W=32 (caits/windowing.py:188-202 + fe/_statistical.py)."""
     seqs = tokenize_documents(load(spark, sf_dir, "documents"))
-    return _tier_out(rollup_native(seqs, w=32))
+    return _tier_out(cascade(seqs, w=32, tiers=1))
 
 
 @q("rollup_tier2_cascade", _ROLLUP_SQL.format(w=256))
 def rollup_tier2_cascade(spark, sf_dir):
     """Tier-2 from the cascade (re-agg identity) vs direct SQL at W=256."""
     seqs = tokenize_documents(load(spark, sf_dir, "documents"))
-    t = cascade_native(seqs, w=32, fanout=8, tiers=2)
+    t = cascade(seqs, w=32, fanout=8, tiers=2)
     return _tier_out(t.filter(F.col("tier") == 2).drop("tier"))
 
 
@@ -175,7 +175,7 @@ FROM pts GROUP BY source, (off // 32) * 32
 def rollup_source_windows(spark, sf_dir):
     """Cross-doc continuous aggregate w/ salted two-phase shuffle (SURVEY §4.3.1)."""
     seqs = tokenize_documents(load(spark, sf_dir, "documents"))
-    t1 = rollup_native(seqs, w=32)
+    t1 = cascade(seqs, w=32, tiers=1)
     out = salted_tier_source_rollup(t1, n_salts=8).drop("tier", "n_docs")
     return out.select(
         "source",
@@ -3092,7 +3092,7 @@ def compressed_tiers_oracled(spark, sf_dir):
     # harnesses can release the cache after their consuming action.
     from .caching import tracked_persist
 
-    tiers = tracked_persist(cascade_native(seqs, w=32, fanout=8, tiers=2))
+    tiers = tracked_persist(cascade(seqs, w=32, fanout=8, tiers=2))
     segs = compress_tiers(tiers)
     dec = decompress_tiers(segs)
     # join-free multiset equality: per tier, compare a collision-resistant
@@ -3143,7 +3143,7 @@ def compression_ratio(spark, sf_dir):
     from .functions.codecs import compress_tiers
 
     seqs = tokenize_documents(load(spark, sf_dir, "documents"))
-    tiers = cascade_native(seqs, w=32, fanout=8, tiers=2)
+    tiers = cascade(seqs, w=32, fanout=8, tiers=2)
     segs = compress_tiers(tiers)
     return segs.groupBy("tier").agg(
         F.count("*").alias("n_segments"),
@@ -4523,8 +4523,8 @@ def rollup_histogram_q(spark, sf_dir):
     rollup_histogram): per 32-token window, exact counts in 16 equal-width
     value buckets over the ASCII band + window total + median bucket — the continuous
     aggregate that gives approximate quantiles at any retention tier
-    (fixed-boundary histograms re-aggregate exactly; the tier identity is
-    pytest-verified in histogram_merge).
+    (fixed-boundary histograms re-aggregate exactly: tier k+1 counts are
+    the elementwise sums of its children's).
 
     The Arrow bincount kernel is per-token O(1), where a native HOF fold
     pays O(n_buckets) interpreted lambda work: interleaved A/B 1.01 s vs

@@ -15,8 +15,8 @@ implementations of the same public formulas:
   as a first-order-cascade approximation `butterworth_lowpass_fo`)
   hilbert envelope caits/properties.py:9-71 (analytic signal via FFT)
 
-All are per-sequence kernels -> exposed through Arrow (`dsp_features`,
-`stft_frames`) so Spark-side plumbing stays vectorized and narrow.
+All are per-sequence kernels -> exposed through Arrow (`dsp_features`) so
+Spark-side plumbing stays vectorized and narrow.
 """
 
 from __future__ import annotations
@@ -271,35 +271,3 @@ def dsp_features(df: DataFrame, n_fft: int = 128, hop: int = 32) -> DataFrame:
             yield pd.DataFrame(rows)
 
     return df.select("doc_id", "tokens").mapInPandas(kernel, schema=DSP_SCHEMA)
-
-
-def stft_frames(df: DataFrame, n_fft: int = 128, hop: int = 64) -> DataFrame:
-    """Exploded spectrum rows (doc_id, frame_idx, bin, mag) — the
-    FeatureExtractorSpectrum shape (caits/transformers/.../_spectrum.py:8-60)."""
-
-    @worker_kernel
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for doc_id, toks in zip(pdf["doc_id"], pdf["tokens"]):
-                x = np.asarray(toks, dtype=np.float64)
-                if x.size < n_fft:
-                    continue
-                S = np.abs(stft(x, n_fft, hop, center=False))
-                nb, nf = S.shape
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "doc_id": np.repeat(doc_id, nb * nf),
-                            "frame_idx": np.tile(np.arange(nf, dtype=np.int64), nb),
-                            "bin": np.repeat(np.arange(nb, dtype=np.int64), nf),
-                            "mag": S.ravel(),
-                        }
-                    )
-                )
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-    return df.select("doc_id", "tokens").mapInPandas(
-        kernel, schema="doc_id string, frame_idx long, bin long, mag double"
-    )

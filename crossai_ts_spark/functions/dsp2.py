@@ -5,8 +5,6 @@ the reference wraps:
   pcen_base       caits/fe/_pcen.py:140-238 — Wang et al. 2017:
                   M(t) = (1-s)M(t-1) + s E(t)  (zero-init, forward IIR)
                   PCEN  = (E/(eps+M)^alpha + delta)^r - delta^r
-  pcen            caits/fe/_pcen.py:18-138 — librosa-style surface:
-                  b from time_constant, gain/bias/power naming
   hpss            caits/hpss.py:9-299 (Fitzgerald 2010 / librosa):
                   harmonic = median over time, percussive = median over
                   frequency, soft masks |H|^p/(|H|^p+|P|^p)
@@ -83,31 +81,6 @@ def pcen_docs(seqs, s: float = 0.1, eps: float = 1e-6, delta: float = 2.0,
         "doc_id",
         F.aggregate(F.col("tokens"), init, step)["chk"].cast("long").alias("pcen_chk"),
     )
-
-
-def pcen(
-    S: np.ndarray,
-    sr: float = 22050,
-    hop_length: int = 512,
-    gain: float = 0.98,
-    bias: float = 2.0,
-    power: float = 0.5,
-    time_constant: float = 0.400,
-    eps: float = 1e-6,
-    b: float | None = None,
-) -> np.ndarray:
-    """librosa-style surface (caits/fe/_pcen.py:18-138): smoother
-    coefficient derived from the time constant."""
-    if power <= 0 or eps <= 0 or time_constant <= 0:
-        raise ValueError("power, eps, time_constant must be strictly positive")
-    if gain < 0 or bias < 0:
-        raise ValueError("gain and bias must be non-negative")
-    if b is None:
-        t_frames = time_constant * sr / float(hop_length)
-        b = (math.sqrt(1 + 4 * t_frames**2) - 1) / (2 * t_frames**2)
-    if not 0 <= b <= 1:
-        raise ValueError(f"b={b} must be between 0 and 1")
-    return pcen_base(np.abs(S), alpha=gain, delta=bias, r=power, s=b, eps=eps)
 
 
 # ------------------------------------------------------------------ hpss

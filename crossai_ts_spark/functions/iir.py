@@ -291,27 +291,6 @@ def sosfiltfilt(sos: np.ndarray, x: np.ndarray, padlen: int | None = None) -> np
     return y
 
 
-def filter_butterworth(
-    x: np.ndarray,
-    fs: float,
-    filter_type: str = "lowpass",
-    cutoff_freq: float | tuple[float, float] | None = None,
-    order: int = 5,
-    method: str = "sosfiltfilt",
-    zi_enable: bool = False,
-) -> np.ndarray:
-    """caits/filtering.py:72-163 surface (methods 'sosfilt'/'sosfiltfilt';
-    the deprecated transfer-function 'filtfilt' path maps to sosfiltfilt —
-    same filter, numerically better realization)."""
-    sos = butter_sos(order, cutoff_freq, fs, btype=filter_type)
-    if method == "sosfilt":
-        zi = sosfilt_zi(sos) * x[0] if zi_enable else None
-        return sosfilt(sos, x, zi=zi)
-    if method in ("sosfiltfilt", "filtfilt"):
-        return sosfiltfilt(sos, x)
-    raise ValueError(f"invalid method {method!r}")
-
-
 # ------------------------------------------------------------- analysis
 
 

@@ -25,16 +25,6 @@ SEQUENCES_SCHEMA = T.StructType(
     ]
 )
 
-# long ("exploded") form: one row per observed sample
-LONG_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("source", T.StringType(), False),
-        T.StructField("offset", T.LongType(), False),
-        T.StructField("value", T.IntegerType(), True),  # null = gap
-    ]
-)
-
 # ---------------------------------------------------------------- tiers
 # window_start is in raw-offset units; tier width = W * FANOUT**(tier-1)
 TIER_FIELDS = [

@@ -22,21 +22,12 @@ from pyspark.sql import functions as F
 from ..schema import SEQUENCES_SCHEMA
 from ..workers import worker_kernel
 
-# pure-SQL variant (oracle-identical) — NOT used on the hot path: Spark's
-# substring(text, i, 1) is O(i) on UTF8String, so the transform is O(n^2)
-# per doc, and Catalyst inlines the whole expression into every downstream
-# window slice (measured: 28 s for 5000 short docs in rollup_tier1).
-TOKENS_EXPR = "transform(sequence(1, length(text)), i -> ascii(substring(text, i, 1)))"
-
-# DuckDB equivalent used by oracle SQL (kept adjacent so they evolve together)
-TOKENS_SQL_DUCKDB = "list_transform(range(1, length(text) + 1), i -> unicode(text[i]))"
-
 
 def tokenize_documents(docs: DataFrame) -> DataFrame:
     """(doc_id, text, source, ...) -> (doc_id string, tokens, n_tok, source).
 
     Arrow kernel: np.frombuffer over the ASCII bytes — O(n), vectorized, and
-    a hard optimizer boundary so downstream HOF rollups see a materialized
+    a hard optimizer boundary so downstream HOF folds see a materialized
     array column instead of re-evaluating tokenization per window slice.
     """
 

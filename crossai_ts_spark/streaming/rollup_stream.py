@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.rollup import rollup_native
+from ..operators.rollup import cascade
 from ..schema import SEQUENCES_SCHEMA
 from ..workers import worker_kernel
 
@@ -34,7 +34,7 @@ def read_sequence_stream(spark, path: str, max_files: int = 4) -> DataFrame:
 
 def streaming_tier1(stream: DataFrame, w: int = 64) -> DataFrame:
     """Stateless per-doc rollup — identical results to the batch engine."""
-    return rollup_native(stream, w=w)
+    return cascade(stream, w=w, tiers=1)
 
 
 def streaming_source_counts(stream: DataFrame, ingest_col: str = "ingest_ts") -> DataFrame:
@@ -104,7 +104,7 @@ def incremental_tier1(chunked: DataFrame, w: int = 64,
     window's partial aggregates across triggers; completed windows emit
     immediately, the ragged tail emits on is_last. Exactly the batch
     rollup identities (min/max/sum/cnt/last/mean) — parity with
-    rollup_native is asserted in tests.
+    the batch oracle is asserted in tests.
 
     Ordering contract: chunks of one doc must arrive in chunk_idx order
     across triggers (in production: per-key ordered source partitions,

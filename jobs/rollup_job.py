@@ -39,7 +39,7 @@ def main(argv: list[str] | None = None) -> int:
 
     from crossai_ts_spark.datagen import gen_sequences
     from crossai_ts_spark.functions.codecs import compress_tiers
-    from crossai_ts_spark.operators.rollup import cascade_pandas
+    from crossai_ts_spark.operators.rollup import cascade
     from crossai_ts_spark.plans.checkpoint import commit_bucket, drop_buckets_from, pending_buckets, with_bucket
     from crossai_ts_spark.session import get_spark
     from crossai_ts_spark.sources.io import read_sequences, write_table
@@ -71,7 +71,7 @@ def main(argv: list[str] | None = None) -> int:
     t0 = time.monotonic()
     for b in todo:
         sub = seqs.filter(F.col("bucket") == b).drop("bucket")
-        tiers_df = cascade_pandas(sub, w=args.w, fanout=args.fanout, tiers=args.tiers)
+        tiers_df = cascade(sub, w=args.w, fanout=args.fanout, tiers=args.tiers)
         m = commit_bucket(tiers_df, args.out, b, input_snapshot=snapshot, params=params)
         toks = sum(t["tokens"] for t in m["tiers"].values())
         print(f"[rollup_job] bucket={b} rows={sum(t['rows'] for t in m['tiers'].values())} "

@@ -11,7 +11,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from crossai_ts_spark.operators.rollup import cascade_native
+from crossai_ts_spark.operators.rollup import cascade
 from crossai_ts_spark.operators.salted import (
     salted_source_stats,
     salted_tier_source_rollup,
@@ -35,7 +35,7 @@ def test_salted_equals_unsalted(spark, tiny_df):
 
 
 def test_salted_tier_rollup_invariance(spark, tiny_df):
-    tiers = cascade_native(tiny_df, w=64, fanout=8, tiers=2)
+    tiers = cascade(tiny_df, w=64, fanout=8, tiers=2)
     a = salted_tier_source_rollup(tiers, n_salts=4).toPandas()
     b = salted_tier_source_rollup(tiers.repartition(11), n_salts=16).toPandas()
     key = ["source", "tier", "window_start"]
@@ -54,7 +54,7 @@ def test_checkpoint_commit_and_resume(spark, tiny_df, tmp_path):
     # commit buckets 0 and 2 only
     for b in (0, 2):
         sub = seqs.filter(F.col("bucket") == b).drop("bucket")
-        m = commit_bucket(cascade_native(sub, w=64, fanout=8, tiers=2), out, b, "test-input",
+        m = commit_bucket(cascade(sub, w=64, fanout=8, tiers=2), out, b, "test-input",
                           params={"n_tiers": 2})
         assert m["bucket"] == b
         assert m["tiers"]  # per-tier lineage metrics present
@@ -72,7 +72,7 @@ def test_checkpoint_commit_and_resume(spark, tiny_df, tmp_path):
 
     # re-commit of an already-done bucket is idempotent
     sub = seqs.filter(F.col("bucket") == 0).drop("bucket")
-    commit_bucket(cascade_native(sub, w=64, fanout=8, tiers=2), out, 0, "test-input", params={"n_tiers": 2})
+    commit_bucket(cascade(sub, w=64, fanout=8, tiers=2), out, 0, "test-input", params={"n_tiers": 2})
     assert completed_buckets(out) == {0, 2}
 
     # committed data is readable and tier-partitioned
@@ -83,7 +83,7 @@ def test_checkpoint_commit_and_resume(spark, tiny_df, tmp_path):
 def test_commit_bucket_uri_guard(spark, tiny_df, tmp_path):
     """Remote schemes rejected; file:// and Hadoop-style file:/ both land in
     the same local directory instead of a relative './file:...' dir."""
-    tiers = cascade_native(tiny_df, w=64, fanout=8, tiers=1)
+    tiers = cascade(tiny_df, w=64, fanout=8, tiers=1)
     for bad in ("hdfs://nn/x", "s3a://bucket/x", "hdfs:/x"):
         with pytest.raises(ValueError, match="driver-local"):
             commit_bucket(tiers, bad, 0, "t")
@@ -123,7 +123,7 @@ def test_recommit_killed_before_rename_leaves_bucket_pending(spark, tiny_df, tmp
     """A re-commit dropped between removing the old data and renaming the new
     data in must not leave the old manifest claiming the bucket."""
     out = str(tmp_path / "kill_out")
-    tiers = cascade_native(tiny_df, w=64, fanout=8, tiers=1)
+    tiers = cascade(tiny_df, w=64, fanout=8, tiers=1)
     commit_bucket(tiers, out, 0, "t", params={"n_tiers": 1})
     assert pending_buckets(out, 1) == []
 
@@ -182,7 +182,7 @@ def test_manifest_matches_reread(spark, tiny_df, tmp_path, tiers):
     seqs = with_bucket(tiny_df, n_buckets)
     for b in range(n_buckets):
         sub = seqs.filter(F.col("bucket") == b).drop("bucket")
-        m = commit_bucket(cascade_native(sub, w=64, fanout=8, tiers=tiers), out, b, "t",
+        m = commit_bucket(cascade(sub, w=64, fanout=8, tiers=tiers), out, b, "t",
                           params={"n_tiers": tiers})
         assert sorted(m["tiers"]) == [str(k) for k in range(1, tiers + 1)]
         assert m["tiers"] == _reread_tiers(spark, f"{out}/data/bucket={b}")
@@ -198,7 +198,7 @@ def test_manifest_docs_counts_series_not_ids(spark, tiny_docs, tmp_path):
     doc = tiny_docs[tiny_docs["n_tok"] > 0].iloc[[0]]
     twice = spark.createDataFrame(pd.concat([doc, doc], ignore_index=True), schema=SEQUENCES_SCHEMA)
     out = str(tmp_path / "dup_out")
-    m = commit_bucket(cascade_native(twice, w=64, fanout=8, tiers=2), out, 0, "t", params={"n_tiers": 2})
+    m = commit_bucket(cascade(twice, w=64, fanout=8, tiers=2), out, 0, "t", params={"n_tiers": 2})
     assert {k: t["docs"] for k, t in m["tiers"].items()} == {"1": 2, "2": 2}
     assert {k: t["docs"] for k, t in _reread_tiers(spark, f"{out}/data").items()} == {"1": 1, "2": 1}
 
@@ -206,7 +206,7 @@ def test_manifest_docs_counts_series_not_ids(spark, tiny_docs, tmp_path):
 def test_empty_bucket_commits_with_no_tiers(spark, tiny_df, tmp_path):
     """A bucket no doc hashes to (more buckets than docs) still commits."""
     out = str(tmp_path / "empty_out")
-    m = commit_bucket(cascade_native(tiny_df.filter("false"), w=64, fanout=8, tiers=2), out, 0, "t",
+    m = commit_bucket(cascade(tiny_df.filter("false"), w=64, fanout=8, tiers=2), out, 0, "t",
                       params={"n_tiers": 2})
     assert m["tiers"] == {}
     assert completed_buckets(out) == {0}
@@ -214,7 +214,7 @@ def test_empty_bucket_commits_with_no_tiers(spark, tiny_df, tmp_path):
 
 def test_commit_is_one_spark_job(spark, tiny_df, tmp_path):
     sc = spark.sparkContext
-    tiers = cascade_native(tiny_df, w=64, fanout=8, tiers=3)
+    tiers = cascade(tiny_df, w=64, fanout=8, tiers=3)
     group = f"commit-{tmp_path.name}"
     sc.setJobGroup(group, "commit_bucket")
     try:
@@ -230,7 +230,7 @@ def test_failed_write_raises_and_leaves_bucket_pending(spark, tiny_df, tmp_path)
     """A tier_df that fails at execution time: commit_bucket raises (does not
     wait on the observation forever) and writes no manifest."""
     out = str(tmp_path / "fail_out")
-    bad = cascade_native(tiny_df, w=64, fanout=8, tiers=1).withColumn("t_cnt", F.expr("t_cnt div 0"))
+    bad = cascade(tiny_df, w=64, fanout=8, tiers=1).withColumn("t_cnt", F.expr("t_cnt div 0"))
     err = []
 
     def run():

@@ -92,9 +92,9 @@ def test_dod_roundtrip_property(xs):
 
 def test_compress_decompress_tiers(spark, tiny_df, tiny_docs):
     from crossai_ts_spark.functions.codecs import compress_tiers, decompress_tiers
-    from crossai_ts_spark.operators.rollup import cascade_native
+    from crossai_ts_spark.operators.rollup import cascade
 
-    tiers = cascade_native(tiny_df, w=64, fanout=8, tiers=2)
+    tiers = cascade(tiny_df, w=64, fanout=8, tiers=2)
     segs = compress_tiers(tiers)
     back = decompress_tiers(segs).toPandas().sort_values(["doc_id", "tier", "window_start"])
     exp = tiers.toPandas().sort_values(["doc_id", "tier", "window_start"])
@@ -108,9 +108,9 @@ def test_compress_decompress_tiers(spark, tiny_df, tiny_docs):
 def test_compressed_blob_partitioning_invariance(spark, tiny_df):
     """Blobs identical regardless of input partitioning (secondary sort works)."""
     from crossai_ts_spark.functions.codecs import compress_tiers
-    from crossai_ts_spark.operators.rollup import cascade_native
+    from crossai_ts_spark.operators.rollup import cascade
 
-    tiers = cascade_native(tiny_df, w=64, fanout=8, tiers=2)
+    tiers = cascade(tiny_df, w=64, fanout=8, tiers=2)
     a = {
         (r.doc_id, r.tier): (bytes(r.ts_blob), bytes(r.val_blob))
         for r in compress_tiers(tiers.repartition(1)).collect()
@@ -131,9 +131,9 @@ def test_token_roundtrip_invariant(spark, tiny_df):
 
 def test_batched_equals_grouped_compression(spark, tiny_df):
     from crossai_ts_spark.functions.codecs import compress_tiers, compress_tiers_grouped
-    from crossai_ts_spark.operators.rollup import cascade_native
+    from crossai_ts_spark.operators.rollup import cascade
 
-    tiers = cascade_native(tiny_df, w=64, fanout=8, tiers=2)
+    tiers = cascade(tiny_df, w=64, fanout=8, tiers=2)
     a = {
         (r.doc_id, r.tier): (bytes(r.ts_blob), bytes(r.val_blob), r.n_points)
         for r in compress_tiers(tiers, partitions=3).collect()

@@ -123,14 +123,3 @@ def test_dsp_features_spark(spark, tiny_df):
     assert len(got) == tiny_df.count()
     assert (got.n_frames > 0).all()
     assert np.isfinite(got.mel_energy).all()
-
-
-def test_stft_frames_spark(spark, tiny_df, tiny_docs):
-    from crossai_ts_spark.functions.dsp import stft_frames
-
-    got = stft_frames(tiny_df.filter(tiny_df.doc_id == "doc-bnd-0004"), n_fft=128, hop=64).toPandas()
-    toks = np.asarray(tiny_docs[tiny_docs.doc_id == "doc-bnd-0004"].tokens.iloc[0], dtype=np.float64)
-    S = np.abs(stft(toks, 128, 64, center=False))
-    assert len(got) == S.size
-    g = got.sort_values(["bin", "frame_idx"]).mag.to_numpy()
-    assert np.allclose(g, S.ravel(), atol=1e-9)

@@ -9,7 +9,6 @@ import pytest
 from crossai_ts_spark.functions.dsp2 import (
     hpss,
     hpss_signal,
-    pcen,
     pcen_base,
     phase_vocoder,
     pitch_shift_ts,
@@ -26,16 +25,6 @@ def test_pcen_steady_state_closed_form():
     out = pcen_base(E, s=0.5)
     expect = (4.0 / (1e-6 + 4.0) ** 0.98 + 2) ** 0.5 - 2**0.5
     np.testing.assert_allclose(out[:, -1], expect, rtol=1e-9)
-
-
-def test_pcen_surface_b_from_time_constant():
-    S = np.abs(np.random.default_rng(0).normal(size=(8, 50)))
-    out = pcen(S, sr=100, hop_length=10, time_constant=0.4)
-    assert out.shape == S.shape and np.all(np.isfinite(out))
-    with pytest.raises(ValueError):
-        pcen(S, power=0)
-    with pytest.raises(ValueError):
-        pcen(S, b=1.5)
 
 
 def test_pcen_flattens_dynamics():

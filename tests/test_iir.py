@@ -17,7 +17,6 @@ import pytest
 from crossai_ts_spark.functions.iir import (
     butter_analog_mag,
     butter_sos,
-    filter_butterworth,
     sos_freq_response,
     sosfilt,
     sosfilt_zi,
@@ -81,33 +80,11 @@ def test_sosfilt_zi_step_no_transient():
     np.testing.assert_allclose(y, x * dc, rtol=1e-12)
 
 
-def test_filter_butterworth_surface_matches_reference_shapes():
-    """caits filter_butterworth sweep: output shape == input shape for every
-    type/order/method (the reference's own test contract)."""
-    rng = np.random.default_rng(0)
-    x = rng.normal(size=300)
-    for btype, cut in [
-        ("lowpass", 40.0),
-        ("highpass", 40.0),
-        ("bandpass", (20.0, 60.0)),
-        ("bandstop", (20.0, 60.0)),
-    ]:
-        for order in (1, 3, 5, 10):
-            for method in ("sosfilt", "sosfiltfilt"):
-                y = filter_butterworth(
-                    x, fs=200.0, filter_type=btype, cutoff_freq=cut, order=order, method=method
-                )
-                assert y.shape == x.shape
-                assert np.all(np.isfinite(y))
-
-
 def test_invalid_args():
     with pytest.raises(ValueError):
         butter_sos(4, 600.0, 1000.0, "lowpass")  # beyond Nyquist
     with pytest.raises(ValueError):
         butter_sos(4, 100.0, 1000.0, "bandess")
-    with pytest.raises(ValueError):
-        filter_butterworth(np.ones(10), 10.0, cutoff_freq=2.0, method="nope")
 
 
 def test_stability_all_poles_inside_unit_circle():

@@ -11,7 +11,7 @@ import numpy as np
 import pytest
 
 from crossai_ts_spark.datagen import gen_local
-from crossai_ts_spark.operators.rollup import cascade_native, cascade_pandas, rollup_histogram, rollup_native
+from crossai_ts_spark.operators.rollup import cascade, rollup_histogram
 from crossai_ts_spark.operators.salted import salted_tier_source_rollup
 from crossai_ts_spark.oracle.rollup import cascade_oracle
 from crossai_ts_spark.schema import SEQUENCES_SCHEMA
@@ -41,24 +41,23 @@ def _cmp(got, exp):
 @pytest.mark.parametrize("w,fanout", [(7, 3), (32, 4), (100, 5), (64, 64)])
 def test_w_fanout_sweep(spark, sweep_df, sweep_docs, w, fanout):
     """Odd window widths, small fanouts, ragged everything — still bitwise."""
-    got = cascade_native(sweep_df, w=w, fanout=fanout, tiers=3).toPandas()
+    got = cascade(sweep_df, w=w, fanout=fanout, tiers=3).toPandas()
     exp = cascade_oracle(sweep_docs, w=w, fanout=fanout, tiers=3)
     _cmp(got, exp)
 
 
 @pytest.mark.parametrize("parts", [1, 5, 17])
-@pytest.mark.parametrize("strategy", ["native", "pandas"])
+@pytest.mark.parametrize("strategy", ["pandas"])
 def test_partition_strategy_matrix(spark, sweep_df, sweep_docs, parts, strategy):
-    fn = cascade_native if strategy == "native" else cascade_pandas
-    got = fn(sweep_df.repartition(parts), w=32, fanout=4, tiers=2).toPandas()
+    got = cascade(sweep_df.repartition(parts), w=32, fanout=4, tiers=2, strategy=strategy).toPandas()
     exp = cascade_oracle(sweep_docs, w=32, fanout=4, tiers=2)
     _cmp(got, exp)
 
 
 def test_n_tok_disagreeing_with_tokens_rolls_up_every_token(spark):
     """Rows datagen never makes: ``n_tok`` shorter or longer than the array,
-    an empty array with ``n_tok > 0`` and a null array. Both cascades and
-    rollup_native roll up exactly the tokens present, whatever ``n_tok``
+    an empty array with ``n_tok > 0`` and a null array. The cascade and
+    rollup_histogram roll up exactly the tokens present, whatever ``n_tok``
     says; the null row is dropped like an empty one."""
     import pandas as pd
 
@@ -67,22 +66,32 @@ def test_n_tok_disagreeing_with_tokens_rolls_up_every_token(spark):
     df = spark.createDataFrame(rows, "doc_id string, tokens array<int>, n_tok int, source string")
     docs = pd.DataFrame([r for r in rows if r[1] is not None], columns=["doc_id", "tokens", "n_tok", "source"])
     exp = cascade_oracle(docs, w=2, fanout=2, tiers=2)
-    native = cascade_native(df, w=2, fanout=2, tiers=2).toPandas()
-    arrow = cascade_pandas(df, w=2, fanout=2, tiers=2).toPandas()
-    _cmp(native, exp)
-    _cmp(arrow, exp)
-    _cmp(arrow, native)
-    _cmp(rollup_native(df, w=2).toPandas(), exp[exp.tier == 1])
+    _cmp(cascade(df, w=2, fanout=2, tiers=2).toPandas(), exp)
+    _cmp(cascade(df, w=2, tiers=1).toPandas(), exp[exp.tier == 1])
     hist = rollup_histogram(df, w=2).toPandas()
     t1 = exp[exp.tier == 1]
     assert sorted(zip(hist.doc_id, hist.window_start, hist.total)) == sorted(
         zip(t1.doc_id, t1.window_start, t1.t_cnt))
 
 
+def test_null_token_element_is_a_named_error(spark):
+    """A null INSIDE a token array (an external input whose list elements
+    are nullable, as pyarrow writes them by default) is a named error from
+    the cascade and the histogram, never a number: Arrow hands such a batch
+    to pandas as float64 with NaN, which an int cast turns into INT32_MIN."""
+    df = spark.createDataFrame([("holed", [1, None, 3], 3, "s"), ("ok", [5, 6], 2, "s")],
+                               "doc_id string, tokens array<int>, n_tok int, source string")
+    named = r"ValueError: doc_id 'holed': tokens array holds a null element"
+    with pytest.raises(Exception, match=named):
+        cascade(df, w=2, fanout=2, tiers=2).collect()
+    with pytest.raises(Exception, match=named):
+        rollup_histogram(df, w=2).collect()
+
+
 @pytest.mark.parametrize("salts", [1, 4, 64])
 def test_salt_count_sweep(spark, sweep_df, salts):
     """Salted source rollup identical at any salt count."""
-    t1 = cascade_native(sweep_df, w=32, fanout=4, tiers=1)
+    t1 = cascade(sweep_df, w=32, fanout=4, tiers=1)
     base = salted_tier_source_rollup(t1, n_salts=2).toPandas()
     got = salted_tier_source_rollup(t1, n_salts=salts).toPandas()
     key = ["source", "tier", "window_start"]

@@ -10,14 +10,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from crossai_ts_spark.operators.rollup import (
-    cascade_from_tier,
-    cascade_native,
-    cascade_pandas,
-    full_windows_only,
-    rollup_long,
-    rollup_native,
-)
+from crossai_ts_spark.operators.rollup import cascade, cascade_from_tier, rollup_long
 from crossai_ts_spark.oracle.rollup import cascade_oracle, rollup_frame
 
 KEY = ["doc_id", "tier", "window_start"]
@@ -41,37 +34,43 @@ def assert_bitwise(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame):
     assert (av == bv).all(), "t_mean not bitwise-identical"
 
 
-def test_rollup_native_matches_oracle(spark, tiny_df, tiny_docs):
-    got = rollup_native(tiny_df, w=W).toPandas()
+def test_tier1_matches_oracle(spark, tiny_df, tiny_docs):
+    got = cascade(tiny_df, w=W, tiers=1).toPandas()
     exp = rollup_frame(tiny_docs, W, tier=1)
     assert_bitwise(got, exp)
 
 
-@pytest.mark.parametrize("strategy", ["native", "pandas"])
+@pytest.mark.parametrize("strategy", ["pandas"])
 def test_cascade_matches_oracle(spark, tiny_df, tiny_docs, strategy):
-    fn = cascade_native if strategy == "native" else cascade_pandas
-    got = fn(tiny_df, w=W, fanout=FANOUT, tiers=TIERS).toPandas()
+    got = cascade(tiny_df, w=W, fanout=FANOUT, tiers=TIERS, strategy=strategy).toPandas()
     exp = cascade_oracle(tiny_docs, w=W, fanout=FANOUT, tiers=TIERS)
     assert_bitwise(got, exp)
 
 
+def test_cascade_strategy_accepts_only_pandas(spark, tiny_df, tiny_docs):
+    got = cascade(tiny_df, w=W, fanout=FANOUT, tiers=2, strategy="pandas").toPandas()
+    assert_bitwise(got, cascade_oracle(tiny_docs, w=W, fanout=FANOUT, tiers=2))
+    with pytest.raises(ValueError, match="native"):
+        cascade(tiny_df, strategy="native")
+
+
 def test_cascade_from_tier_identity(spark, tiny_df, tiny_docs):
     """groupBy re-aggregation of tier1 == direct tier2 from raw (partial-agg identity)."""
-    t1 = rollup_native(tiny_df, w=W, tier=1)
+    t1 = cascade(tiny_df, w=W, tiers=1)
     t2 = cascade_from_tier(t1, from_tier=1, w=W, fanout=FANOUT).toPandas()
     exp = cascade_oracle(tiny_docs, w=W, fanout=FANOUT, tiers=2)
     assert_bitwise(t2, exp[exp.tier == 2])
 
 
-def test_rollup_long_matches_native(spark, tiny_df):
-    """Shuffle path == narrow path (partitioning invariance)."""
+def test_rollup_long_matches_oracle(spark, tiny_df, tiny_docs):
+    """Shuffle path == the numpy oracle the narrow cascade matches (partitioning invariance)."""
     from pyspark.sql import functions as F
 
     long_df = tiny_df.select(
         "doc_id", "source", F.posexplode("tokens").alias("offset", "value")
     ).select("doc_id", "source", F.col("offset").cast("long").alias("offset"), "value")
     got = rollup_long(long_df, w=W).toPandas()
-    exp = rollup_native(tiny_df, w=W).toPandas()
+    exp = rollup_frame(tiny_docs, W, tier=1)
     assert_bitwise(got, exp)
 
 
@@ -79,13 +78,13 @@ def test_partition_count_invariance(spark, tiny_df, tiny_docs):
     """Same bitwise result at 1 and 13 partitions (north_rule §4.3)."""
     exp = cascade_oracle(tiny_docs, w=W, fanout=FANOUT, tiers=TIERS)
     for n in (1, 13):
-        got = cascade_native(tiny_df.repartition(n), w=W, fanout=FANOUT, tiers=TIERS).toPandas()
+        got = cascade(tiny_df.repartition(n), w=W, fanout=FANOUT, tiers=TIERS).toPandas()
         assert_bitwise(got, exp)
 
 
 def test_boundary_docs(spark, tiny_df):
     """FIXTURES F1 pinned docs: window counts at W=64."""
-    got = rollup_native(tiny_df, w=64).toPandas()
+    got = cascade(tiny_df, w=64, tiers=1).toPandas()
     cnt = got.groupby("doc_id").size()
     assert cnt["doc-bnd-0000"] == 1  # n=1
     assert cnt["doc-bnd-0001"] == 1  # n=63 → one ragged window
@@ -94,13 +93,6 @@ def test_boundary_docs(spark, tiny_df):
     assert cnt["doc-bnd-0004"] == 64  # n=4096
     tail = got[(got.doc_id == "doc-bnd-0003") & (got.window_start == 64)]
     assert tail.t_cnt.iloc[0] == 1
-
-
-def test_full_windows_only_filter(spark, tiny_df):
-    got = full_windows_only(rollup_native(tiny_df, w=64), w=64, fanout=FANOUT).toPandas()
-    cnt = got.groupby("doc_id").size()
-    assert "doc-bnd-0001" not in cnt.index  # n=63: no full window
-    assert cnt["doc-bnd-0003"] == 1  # tail dropped
 
 
 def test_rollup_histogram_counts_and_median(spark):
@@ -127,36 +119,6 @@ def test_rollup_histogram_counts_and_median(spark):
         cum = np.cumsum(counts)
         expect = int(np.argmax(cum * 2 >= len(seg)))
         assert got.loc[ws, "median_bucket"] == expect
-
-
-def test_histogram_merge_equals_direct(spark):
-    """Tier-2 histograms merged from tier-1 equal histograms computed
-    directly from raw at the wider width — the exact re-aggregation
-    identity that makes the sketch valid at every retention tier."""
-    import numpy as np
-    import pandas as pd
-
-    from crossai_ts_spark.operators.rollup import histogram_merge, rollup_histogram
-
-    rng = np.random.default_rng(11)
-    rows = []
-    for i, n in enumerate([257, 64, 100, 31]):
-        toks = rng.integers(0, 1104, size=n, dtype=np.int32)
-        rows.append((f"d{i}", [int(t) for t in toks], n, "s"))
-    df = spark.createDataFrame(
-        rows, "doc_id string, tokens array<int>, n_tok int, source string"
-    )
-    w, fanout = 16, 4
-    t1 = rollup_histogram(df, w=w)
-    merged = (
-        histogram_merge(t1.drop("total", "median_bucket"), w=w, fanout=fanout)
-        .toPandas().sort_values(["doc_id", "window_start"]).reset_index(drop=True)
-    )
-    direct = (
-        rollup_histogram(df, w=w * fanout)
-        .toPandas().sort_values(["doc_id", "window_start"]).reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(merged, direct[merged.columns], check_dtype=False)
 
 
 def test_histogram_wide_equals_numpy(spark):

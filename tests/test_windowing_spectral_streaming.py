@@ -7,9 +7,9 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 
-def test_streaming_tier1_equals_batch(spark, tiny_df, tmp_path):
-    """Streaming rollup == batch rollup on the same files (stateless op)."""
-    from crossai_ts_spark.operators.rollup import rollup_native
+def test_streaming_tier1_equals_batch(spark, tiny_df, tiny_docs, tmp_path):
+    """Streaming rollup == the batch oracle on the same files (stateless op)."""
+    from crossai_ts_spark.oracle.rollup import rollup_frame
     from crossai_ts_spark.streaming.rollup_stream import (
         read_sequence_stream,
         run_to_memory,
@@ -21,7 +21,7 @@ def test_streaming_tier1_equals_batch(spark, tiny_df, tmp_path):
     stream = read_sequence_stream(spark, path, max_files=2)
     run_to_memory(streaming_tier1(stream, w=64), "t1_stream")
     got = spark.sql("SELECT * FROM t1_stream").toPandas()
-    exp = rollup_native(spark.read.parquet(path), w=64).toPandas()
+    exp = rollup_frame(tiny_docs, 64)
     key = ["doc_id", "window_start"]
     got = got.sort_values(key).reset_index(drop=True)
     exp = exp.sort_values(key).reset_index(drop=True)
@@ -32,24 +32,21 @@ def test_streaming_tier1_equals_batch(spark, tiny_df, tmp_path):
 
 def test_incremental_tier1_stateful_matches_batch(spark, tmp_path):
     """applyInPandasWithState incremental rollup over chunked arrivals ==
-    batch rollup_native, including ragged tails, across trigger boundaries
+    the batch oracle, including ragged tails, across trigger boundaries
     (one chunk-file per trigger; exact-boundary chunks exercise the
     cnt==0 state carry)."""
     import numpy as np
     import pandas as pd
 
     from crossai_ts_spark.datagen import gen_local
-    from crossai_ts_spark.operators.rollup import rollup_native
+    from crossai_ts_spark.oracle.rollup import rollup_frame
     from crossai_ts_spark.streaming.rollup_stream import incremental_tier1
 
     docs = gen_local(seed=11, n_docs=12, max_tok=700)
     w = 64
     # batch expectation
-    seqs = spark.createDataFrame(docs)
     want = (
-        rollup_native(seqs, w=w)
-        .select("doc_id", "window_start", "t_min", "t_max", "t_sum", "t_cnt", "t_last", "t_mean")
-        .toPandas()
+        rollup_frame(docs, w)[["doc_id", "window_start", "t_min", "t_max", "t_sum", "t_cnt", "t_last", "t_mean"]]
         .sort_values(["doc_id", "window_start"])
         .reset_index(drop=True)
     )
@@ -118,16 +115,13 @@ def test_incremental_tier1_restart_from_checkpoint(spark, tmp_path):
     import pandas as pd
 
     from crossai_ts_spark.datagen import gen_local
-    from crossai_ts_spark.operators.rollup import rollup_native
+    from crossai_ts_spark.oracle.rollup import rollup_frame
     from crossai_ts_spark.streaming.rollup_stream import incremental_tier1
 
     docs = gen_local(seed=21, n_docs=10, max_tok=600)
     w = 64
-    seqs = spark.createDataFrame(docs)
     want = (
-        rollup_native(seqs, w=w)
-        .select("doc_id", "window_start", "t_min", "t_max", "t_sum", "t_cnt", "t_last", "t_mean")
-        .toPandas()
+        rollup_frame(docs, w)[["doc_id", "window_start", "t_min", "t_max", "t_sum", "t_cnt", "t_last", "t_mean"]]
         .sort_values(["doc_id", "window_start"])
         .reset_index(drop=True)
     )
@@ -489,7 +483,7 @@ def test_incremental_tier1_multi_arrow_chunk_trigger(spark, tmp_path):
     (per-chunk sorting would scramble offsets)."""
     import pandas as pd
 
-    from crossai_ts_spark.operators.rollup import rollup_native
+    from crossai_ts_spark.oracle.rollup import rollup_frame
     from crossai_ts_spark.streaming.rollup_stream import incremental_tier1, run_to_memory
 
     w = 64
@@ -518,13 +512,8 @@ def test_incremental_tier1_multi_arrow_chunk_trigger(spark, tmp_path):
         spark.sql("SELECT * FROM inc_chunky").toPandas()
         .sort_values("window_start").reset_index(drop=True)
     )
-    seqs = spark.createDataFrame(
-        [("d0", toks, len(toks), "s")], "doc_id string, tokens array<int>, n_tok long, source string"
-    )
-    want = (
-        rollup_native(seqs, w=w).toPandas()
-        .sort_values("window_start").reset_index(drop=True)
-    )
+    seqs = pd.DataFrame([("d0", toks, len(toks), "s")], columns=["doc_id", "tokens", "n_tok", "source"])
+    want = rollup_frame(seqs, w).sort_values("window_start").reset_index(drop=True)
     cols = ["doc_id", "window_start", "t_min", "t_max", "t_sum", "t_cnt", "t_last", "t_mean"]
     pd.testing.assert_frame_equal(got[cols], want[cols], check_dtype=False)
 

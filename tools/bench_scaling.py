@@ -56,7 +56,7 @@ def job(limit=None):
     seqs = spark.read.parquet({path!r})
     if limit:
         seqs = seqs.limit(limit)
-    tiers = cascade(seqs, strategy="pandas", w=64, fanout=64, tiers=3)
+    tiers = cascade(seqs, w=64, fanout=64, tiers=3)
     segs = compress_tiers(tiers)
     return segs.count()
 
@@ -95,7 +95,7 @@ def job(limit=None):
     seqs = spark.read.parquet({path!r})
     if limit:
         seqs = seqs.limit(limit)
-    tiers = cascade(seqs, strategy="pandas", w=64, fanout=64, tiers=3)
+    tiers = cascade(seqs, w=64, fanout=64, tiers=3)
     segs = compress_tiers(tiers)
     return segs.count()
 
