@@ -1,10 +1,11 @@
-"""Deterministic synthetic sequences table (FIXTURES.md F1/F2).
+"""Deterministic synthetic sequences table (FIXTURES.md F1).
 
 Pure function of (seed, n_docs): every doc's tokens are regenerable on any
 executor from ``np.random.default_rng([seed, i])`` — so the generator is a
 distributed *source* (spark.range → mapInPandas), no external data and no
-driver-side materialization. Boundary docs (doc-bnd-*) and gap docs
-(doc-gap-*) from FIXTURES.md are pinned at the head of the id space.
+driver-side materialization. Boundary docs (doc-bnd-*) from FIXTURES.md
+are pinned at the head of the id space. The F2 gapped series live with
+their one user, tests/test_gapfill_runs.py.
 
 Distribution (F1):
   n_tok  : 80% U[64, 2048], 15% U[2048, 16384], 5% U[16384, 65536]
@@ -20,7 +21,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .schema import SEQUENCES_SCHEMA
 from .workers import worker_kernel
@@ -104,47 +104,4 @@ def gen_sequences(
     return (
         spark.range(0, n_docs, numPartitions=partitions)
         .mapInPandas(make, schema=SEQUENCES_SCHEMA)
-    )
-
-
-# ---------------------------------------------------------------- gapped (F2)
-
-GAP_DOCS = {
-    # doc suffix -> (n_tok, gap offsets builder)
-    "doc-gap-0000": (512, lambda n: np.arange(0, 10)),              # leading gap
-    "doc-gap-0001": (512, lambda n: np.arange(100, 200)),           # interior run
-    "doc-gap-0002": (512, lambda n: np.arange(n - 10, n)),          # trailing gap
-    "doc-gap-0003": (512, lambda n: np.arange(1, n, 2)),            # alternating
-}
-
-
-def gen_gapped_local(seed: int = 42, n_docs: int = 20, drop_frac: float = 0.10) -> pd.DataFrame:
-    """Long-format gapped series: (doc_id, offset:int64, value:int32).
-
-    Pinned gap docs first, then random docs with drop_frac offsets removed.
-    """
-    rows: list[pd.DataFrame] = []
-    for j, (doc_id, (n_tok, gaps)) in enumerate(sorted(GAP_DOCS.items())):
-        rng = np.random.default_rng([seed, 10_000 + j])
-        vals = rng.integers(0, VOCAB, size=n_tok, dtype=np.int32)
-        keep = np.setdiff1d(np.arange(n_tok), gaps(n_tok))
-        rows.append(pd.DataFrame({"doc_id": doc_id, "offset": keep.astype(np.int64), "value": vals[keep]}))
-    for i in range(n_docs):
-        rng = np.random.default_rng([seed, 20_000 + i])
-        n_tok = int(rng.integers(64, 1024))
-        vals = rng.integers(0, VOCAB, size=n_tok, dtype=np.int32)
-        drop = rng.random(n_tok) < drop_frac
-        keep = np.where(~drop)[0]
-        rows.append(
-            pd.DataFrame({"doc_id": f"doc-gapped-{i:06d}", "offset": keep.astype(np.int64), "value": vals[keep]})
-        )
-    return pd.concat(rows, ignore_index=True)
-
-
-def gapped_to_spark(spark: SparkSession, pdf: pd.DataFrame) -> DataFrame:
-    df = spark.createDataFrame(pdf)
-    return df.select(
-        F.col("doc_id"),
-        F.col("offset").cast("long").alias("offset"),
-        F.col("value").cast("int").alias("value"),
     )

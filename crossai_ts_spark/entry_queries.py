@@ -1949,8 +1949,7 @@ def dsp_features_q(spark, sf_dir):
     the canonical first 64-token frame, FULL oracle: mel energies are
     bit-exact doubles (integer DFT + literal filterbank + fixed folds);
     MFCCs pass through log so they're floor(x*2^14)-quantized on both
-    engines. The full-doc STFT composite (functions/dsp.py) stays covered
-    by round-trip/parity pytest."""
+    engines."""
     from .functions.spectral_exact import dsp_features_exact
 
     seqs = tokenize_documents(load(spark, sf_dir, "documents"))
@@ -2390,7 +2389,7 @@ def butterworth_sosfilt(spark, sf_dir):
 
 def _spline_oracle_sql(n: int = 8, quantize: float = 1048576.0) -> str:
     """Unrolled not-a-knot cubic spline (n knots) + integer-grid Hermite
-    evaluation + floor checksum, mirroring functions/spline.spline_chk_scalar
+    evaluation + floor checksum, mirroring oracle/signal.spline_chk_scalar
     OPERATION FOR OPERATION (same literals, same associativity) so the
     DuckDB doubles are bitwise-identical to the kernel's."""
     xs = [f"x{i}" for i in range(1, n + 1)]
@@ -2514,7 +2513,7 @@ def cubic_spline_interp(spark, sf_dir):
         import numpy as np
         import pandas as pd
 
-        # vectorized spline path: bitwise-identical to spline_chk_scalar
+        # vectorized spline path: bitwise-identical to oracle/signal.spline_chk_scalar
         # (the op-order twin the oracle unrolls) — proven by
         # tests/test_spline.py::test_scalar_chk_matches_vectorized
         for pdf in batches:
@@ -4220,8 +4219,8 @@ def eepd_counts(spark, sf_dir):
     order-1 Butterworth bandpass (forward sosfilt, zero state) -> square
     -> order-2 lowpass at 10 Hz -> peak count (scipy default semantics,
     plateaus once, edges excluded). The reference's zero-phase filtfilt
-    variant stays numpy-verified in tests/test_spectral2.py; this query
-    composes the proven forward-biquad fold so DuckDB reproduces every
+    variant is not implemented: this query composes the proven
+    forward-biquad fold so DuckDB reproduces every
     envelope double bitwise. Max-normalization is dropped on BOTH sides —
     it cannot change peak count. Demeaning uses the exact integer token
     sum (S/n as one double division) so both engines subtract the

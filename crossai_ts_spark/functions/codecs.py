@@ -94,42 +94,6 @@ class BitReader:
 # ------------------------------------------------------------ gorilla f64
 
 
-def gorilla_encode(values: np.ndarray) -> bytes:
-    """Encode float64 array -> bytes (header: 8-byte big-endian count)."""
-    values = np.ascontiguousarray(values, dtype=np.float64)
-    bits = values.view(np.uint64)
-    n = values.size
-    w = BitWriter()
-    w.write(n, 64)
-    if n == 0:
-        return w.getvalue()
-    prev = int(bits[0])
-    w.write(prev, 64)
-    # vectorized precompute of xors + leading/trailing zero counts
-    if n > 1:
-        xors = bits[1:] ^ bits[:-1]
-        prev_lead, prev_sig = -1, -1
-        for x in map(int, xors):
-            if x == 0:
-                w.write(0, 1)
-                continue
-            lead = min(64 - x.bit_length(), 31)
-            trail = (x & -x).bit_length() - 1
-            sig = 64 - lead - trail
-            prev_trail = 64 - prev_lead - prev_sig
-            if prev_lead >= 0 and lead >= prev_lead and trail >= prev_trail:
-                # reuse previous block: '10' + prev_sig bits
-                w.write(0b10, 2)
-                w.write(x >> (64 - prev_lead - prev_sig), prev_sig)
-            else:
-                w.write(0b11, 2)
-                w.write(lead, 5)
-                w.write(sig - 1, 6)
-                w.write(x >> trail, sig)
-                prev_lead, prev_sig = lead, sig
-    return w.getvalue()
-
-
 def gorilla_decode(blob: bytes) -> np.ndarray:
     r = BitReader(blob)
     n = r.read(64)
@@ -194,80 +158,13 @@ def dod_encode(offsets: np.ndarray) -> bytes:
     return w.getvalue()
 
 
-def _toi64(u: int) -> int:
-    return u - (1 << 64) if u >= (1 << 63) else u
-
-
-def dod_decode(blob: bytes) -> np.ndarray:
-    r = BitReader(blob)
-    n = r.read(64)
-    out = np.empty(n, dtype=np.int64)
-    if n == 0:
-        return out
-    mask = (1 << 64) - 1
-    cur = r.read(64)  # kept unsigned mod 2^64 (wrap-consistent with encoder)
-    out[0] = _toi64(cur)
-    if n == 1:
-        return out
-    delta = r.read(64)
-    for i in range(1, n):
-        if i > 1:
-            if r.read(1) == 1:
-                if r.read(1) == 0:
-                    d = r.read(7) - 63
-                elif r.read(1) == 0:
-                    d = r.read(9) - 255
-                elif r.read(1) == 0:
-                    d = r.read(12) - 2047
-                else:
-                    d = r.read(64)
-                delta = (delta + d) & mask
-        cur = (cur + delta) & mask
-        out[i] = _toi64(cur)
-    return out
-
-
 # --------------------------------------------------------- spark surface
 
 
-# Vectorized fast paths (bit-identical to the golden encoders above;
-# verified by tests/test_codecs_fast.py). The golden per-value encoders stay
-# as the reference the fast paths must bit-match.
+# Vectorized fast paths, bit-identical to the golden per-value encoders
+# (``dod_encode`` above, ``gorilla_encode`` in oracle/codecs.py; verified by
+# tests/test_codecs_fast.py).
 from .codecs_fast import dod_decode_fast, dod_encode_fast, gorilla_encode_fast  # noqa: E402
-
-
-def compress_group(pdf: pd.DataFrame, value_col: str = "t_mean") -> pd.DataFrame:
-    """One (doc_id, tier) group -> one compressed-segment row.
-
-    Sorts by window_start inside the group (secondary sort) so the blob is
-    identical under any shuffle/partitioning.
-    """
-    pdf = pdf.sort_values("window_start")
-    offs = pdf["window_start"].to_numpy(dtype=np.int64)
-    vals = pdf[value_col].to_numpy(dtype=np.float64)
-    return pd.DataFrame(
-        {
-            "doc_id": [pdf["doc_id"].iloc[0]],
-            "source": [pdf["source"].iloc[0]],
-            "tier": [np.int32(pdf["tier"].iloc[0])],
-            "n_points": [np.int64(len(pdf))],
-            "codec": ["gorilla+dod/v1"],
-            "ts_blob": [dod_encode(offs)],
-            "val_blob": [gorilla_encode(vals)],
-        }
-    )
-
-
-def compress_tiers_grouped(tier_df, value_col: str = "t_mean"):
-    """Reference implementation: one applyInPandas call per (doc_id, tier).
-
-    Correct but slow at scale — Spark materializes a pandas DataFrame PER
-    GROUP (~180k tiny frames for 60k docs x 3 tiers); use compress_tiers."""
-    from ..schema import COMPRESSED_TIER_SCHEMA
-
-    return tier_df.groupBy("doc_id", "tier").applyInPandas(
-        worker_kernel(lambda pdf: compress_group(pdf, value_col)), schema=COMPRESSED_TIER_SCHEMA
-    )
 
 
 def compress_tiers(tier_df, value_col: str = "t_mean", partitions: int | None = None):
@@ -280,7 +177,8 @@ def compress_tiers(tier_df, value_col: str = "t_mean", partitions: int | None = 
     split across Arrow batch boundaries are carried over and merged (the
     partition-level sort makes group rows contiguous).
 
-    Blobs are bitwise-identical to compress_tiers_grouped (tested).
+    Blobs are bitwise-identical to oracle/codecs.compress_tiers_grouped
+    (tested).
     """
     from ..schema import COMPRESSED_TIER_SCHEMA
 

@@ -2,9 +2,10 @@
 polyphase resampling — pure numpy re-derivations of the public algorithms
 the reference wraps:
 
-  pcen_base       caits/fe/_pcen.py:140-238 — Wang et al. 2017:
+  pcen_docs       caits/fe/_pcen.py:18-238 — Wang et al. 2017:
                   M(t) = (1-s)M(t-1) + s E(t)  (zero-init, forward IIR)
                   PCEN  = (E/(eps+M)^alpha + delta)^r - delta^r
+                  (numpy reference: oracle/signal.pcen_base)
   hpss            caits/hpss.py:9-299 (Fitzgerald 2010 / librosa):
                   harmonic = median over time, percussive = median over
                   frequency, soft masks |H|^p/(|H|^p+|P|^p)
@@ -23,26 +24,6 @@ import numpy as np
 from .dsp import istft, median_filter, stft
 
 # ------------------------------------------------------------------ pcen
-
-
-def pcen_base(
-    E: np.ndarray,
-    alpha: float = 0.98,
-    delta: float = 2.0,
-    r: float = 0.5,
-    s: float = 0.025,
-    eps: float = 1e-6,
-) -> np.ndarray:
-    """PCEN over (freq, time) energy: forward first-order IIR smoother
-    (zero-initialized, as the reference documents) + dynamic range
-    compression."""
-    E = np.asarray(E, dtype=np.float64)
-    M = np.empty_like(E)
-    prev = np.zeros(E.shape[0])
-    for t in range(E.shape[1]):
-        prev = (1.0 - s) * prev + s * E[:, t]
-        M[:, t] = prev
-    return (E / (eps + M) ** alpha + delta) ** r - delta**r
 
 
 def pcen_docs(seqs, s: float = 0.1, eps: float = 1e-6, delta: float = 2.0,

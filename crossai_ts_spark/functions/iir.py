@@ -21,8 +21,9 @@ Application:
                forward pass seeded with zi*x[0], backward pass with
                zi*y[-1] — zero-phase, squared magnitude response
 
-Verification strategy (tests/test_iir.py): the bilinear transform maps the
-digital response EXACTLY onto the analog prototype response at the
+Verification strategy (tests/test_iir.py against oracle/signal.py's
+``sos_freq_response`` and ``butter_analog_mag``): the bilinear transform
+maps the digital response EXACTLY onto the analog prototype response at the
 prewarped frequency, so for every (order, type, cutoff, fs) in the sweep
 |H_d(e^{j w})|  must equal  1/sqrt(1 + (W(w)/W(wc))^{2*order})  (lowpass;
 analogous closed forms for hp/bp/bs) to float tolerance. This checks the
@@ -289,47 +290,6 @@ def sosfiltfilt(sos: np.ndarray, x: np.ndarray, padlen: int | None = None) -> np
     if padlen > 0:
         y = y[padlen:-padlen]
     return y
-
-
-# ------------------------------------------------------------- analysis
-
-
-def sos_freq_response(sos: np.ndarray, w: np.ndarray) -> np.ndarray:
-    """|H(e^{jw})| of the cascade at radian frequencies w (tests)."""
-    z = np.exp(-1j * np.asarray(w, dtype=np.float64))
-    h = np.ones_like(z, dtype=complex)
-    for b0, b1, b2, _, a1, a2 in sos:
-        h *= (b0 + b1 * z + b2 * z**2) / (1.0 + a1 * z + a2 * z**2)
-    return np.abs(h)
-
-
-def butter_analog_mag(
-    w: np.ndarray, order: int, cutoff, fs: float, btype: str
-) -> np.ndarray:
-    """Closed-form magnitude the digital design MUST hit at frequency w
-    (radians/sample): bilinear maps w -> analog W = 2*fs_b*tan(w/2), and
-    the analog Butterworth magnitude is 1/sqrt(1 + (W/Wc)^2n) (lowpass),
-    with the standard band transforms for the other types."""
-    nyq = 0.5 * fs
-    W = 4.0 * np.tan(np.asarray(w, dtype=np.float64) / 2.0)  # 2*fs_b*tan, fs_b=2
-    if btype in ("lowpass", "highpass"):
-        Wc = _prewarp(float(cutoff) / nyq)
-        if btype == "lowpass":
-            r = W / Wc
-        else:
-            with np.errstate(divide="ignore"):
-                r = Wc / W
-    else:
-        lo, hi = (float(cutoff[0]) / nyq, float(cutoff[1]) / nyq)
-        W1, W2 = _prewarp(lo), _prewarp(hi)
-        Wo, Bw = np.sqrt(W1 * W2), W2 - W1
-        with np.errstate(divide="ignore", invalid="ignore"):
-            if btype == "bandpass":
-                r = (W**2 - Wo**2) / (Bw * W)
-            else:
-                r = (Bw * W) / (W**2 - Wo**2)
-    with np.errstate(over="ignore"):
-        return 1.0 / np.sqrt(1.0 + np.abs(r) ** (2 * order))
 
 
 # --------------------------------------------------------- spark surface

@@ -1,132 +1,17 @@
-"""Spectral completion kernels: Welch PSD, dominant frequency, spectral
-bandwidth, banded relative power, Savitzky-Golay delta, find_peaks, and
-envelope-energy peak detection — pure numpy (no scipy in the sandbox),
-re-derived from the public formulas the reference wraps:
+"""Peak picking in pure numpy (no scipy in the sandbox), re-derived from
+the public formula the reference wraps:
 
-  power_spectral_density  caits/fe/_spectral.py:429-496  (scipy.welch +
-                          simpson band integration, relative band power)
-  dominant_frequency      caits/fe/_statistical.py:542-571 (welch argmax,
-                          nperseg = len(x) — a single segment)
-  spectral_bandwidth      caits/fe/_spectral.py:178-256 (std of the
-                          normalized one-sided power spectrum)
-  delta (savgol)          caits/fe/_spectrum.py:465-529 (savgol_filter,
-                          polyorder=order, deriv=order, mode='interp')
-  envelope_energy_peak_detection caits/fe/_statistical.py:476-538
-                          (per-band bandpass filtfilt -> squared ->
-                          lowpass filtfilt -> normalize -> count peaks)
+  find_peaks_simple  scipy.signal.find_peaks defaults, as used by
+                     caits/fe/_statistical.py:476-538
+                     (envelope_energy_peak_detection)
 
-Welch follows scipy.signal.welch defaults: periodic Hann, constant
-detrend per segment, noverlap = nperseg//2, density scaling
-(2/(fs*sum(w^2)) with DC and Nyquist not doubled).
+The ``eepd_counts`` query runs it per band inside its Arrow kernel. The
+Welch / Simpson / bandwidth references live in oracle/spectral.py.
 """
 
 from __future__ import annotations
 
 import numpy as np
-
-from .dsp import hann
-from .iir import butter_sos, sosfiltfilt
-
-# ------------------------------------------------------------------ welch
-
-
-def welch_psd(
-    x: np.ndarray, fs: float, nperseg: int, noverlap: int | None = None
-) -> tuple[np.ndarray, np.ndarray]:
-    """(freqs, psd) — scipy.signal.welch semantics (density, hann,
-    constant detrend, mean over segments)."""
-    x = np.asarray(x, dtype=np.float64)
-    nperseg = int(min(nperseg, x.size))
-    if noverlap is None:
-        noverlap = nperseg // 2
-    noverlap = int(min(noverlap, nperseg - 1)) if nperseg > 1 else 0
-    step = nperseg - noverlap
-    w = hann(nperseg)
-    scale = 1.0 / (fs * (w * w).sum())
-    n_seg = max(1, (x.size - noverlap) // step)
-    psd_acc = np.zeros(nperseg // 2 + 1)
-    for s in range(n_seg):
-        seg = x[s * step : s * step + nperseg]
-        seg = seg - seg.mean()  # detrend='constant'
-        spec = np.fft.rfft(seg * w)
-        p = (spec.real**2 + spec.imag**2) * scale
-        psd_acc += p
-    psd = psd_acc / n_seg
-    if nperseg % 2 == 0:
-        psd[1:-1] *= 2.0  # one-sided doubling, Nyquist bin excluded
-    else:
-        psd[1:] *= 2.0
-    freqs = np.fft.rfftfreq(nperseg, d=1.0 / fs)
-    return freqs, psd
-
-
-def dominant_frequency(x: np.ndarray, fs: float) -> float:
-    """caits/fe/_statistical.py:542-571: welch with nperseg = len(x)
-    (single segment), frequency of the PSD argmax."""
-    freqs, psd = welch_psd(x, fs, nperseg=len(x))
-    return float(freqs[int(np.argmax(psd))])
-
-
-def simpson_dx(y: np.ndarray, dx: float) -> float:
-    """Composite Simpson integration on a uniform grid (scipy.simpson
-    semantics for even sample counts: Cartwright last-interval
-    correction, matching modern scipy's default)."""
-    y = np.asarray(y, dtype=np.float64)
-    n = y.size
-    if n < 2:
-        return 0.0
-    if n == 2:
-        return float(0.5 * dx * (y[0] + y[1]))
-    if n % 2 == 1:
-        return float(dx / 3.0 * (y[0] + y[-1] + 4 * y[1:-1:2].sum() + 2 * y[2:-2:2].sum()))
-    # even count: Simpson over first n-1 points + corrected last interval
-    core = dx / 3.0 * (y[0] + y[-2] + 4 * y[1:-2:2].sum() + 2 * y[2:-3:2].sum())
-    last = dx * (5.0 * y[-1] + 8.0 * y[-2] - y[-3]) / 12.0
-    return float(core + last)
-
-
-def band_relative_power(
-    x: np.ndarray,
-    fs: float,
-    nperseg_th: int = 900,
-    noverlap_th: int = 600,
-    freq_cuts: list[tuple[float, float]] | None = None,
-) -> np.ndarray:
-    """power_spectral_density parity (caits/fe/_spectral.py:429-496):
-    Welch PSD, Simpson total power, per-band Simpson / total."""
-    if freq_cuts is None:
-        freq_cuts = [(0, 200), (300, 425), (500, 650), (950, 1150),
-                     (1400, 1800), (2300, 2400), (2850, 2950), (3800, 3900)]
-    nperseg = min(nperseg_th, len(x))
-    noverlap = int(min(noverlap_th, nperseg / 2))
-    freqs, psd = welch_psd(x, fs, nperseg=nperseg, noverlap=noverlap)
-    dxf = freqs[1] - freqs[0] if freqs.size > 1 else 1.0
-    total = simpson_dx(psd, dxf)
-    out = []
-    for lf, hf in freq_cuts:
-        m = (freqs >= lf) & (freqs <= hf)
-        out.append(simpson_dx(psd[m], dxf) / total if total > 0 else 0.0)
-    return np.asarray(out)
-
-
-def spectral_bandwidth(x: np.ndarray, fs: float) -> float:
-    """caits/fe/_spectral.py:178-256: std of the normalized one-sided
-    power spectrum (two-sided FFT power, positive half doubled)."""
-    x = np.asarray(x, dtype=np.float64)
-    n = x.size
-    ps = np.abs(np.fft.fft(x)) ** 2
-    half = n // 2 if n % 2 == 0 else (n - 1) // 2
-    ps = ps[:half] * 2
-    tot = ps.sum()
-    if tot <= 0:
-        return 0.0
-    ps = ps / tot
-    freqs = np.fft.fftfreq(n, d=1.0 / fs)[: n // 2][:half]
-    mean_freq = (freqs * ps).sum()
-    return float(np.sqrt((((freqs - mean_freq) ** 2) * ps).sum()))
-
-
-# ------------------------------------------------------------------ peaks
 
 
 def find_peaks_simple(y: np.ndarray) -> np.ndarray:
@@ -149,80 +34,3 @@ def find_peaks_simple(y: np.ndarray) -> np.ndarray:
         else:
             i += 1
     return np.asarray(peaks, dtype=np.int64)
-
-
-def envelope_energy_peak_detection(
-    x: np.ndarray,
-    fs: float,
-    start: int = 50,
-    stop: int = 1000,
-    freq_step: int = 50,
-    fcl_add: int = 50,
-) -> np.ndarray:
-    """caits/fe/_statistical.py:476-538: per band [fcl, fcl+fcl_add):
-    order-1 Butterworth bandpass (zero-phase), square, order-2 lowpass
-    at 10 Hz, normalize by max, count peaks. (Realized as SOS filtfilt —
-    numerically better than the reference's transfer-function filtfilt,
-    same filter.)"""
-    x = np.asarray(x, dtype=np.float64)
-    out = []
-    lp = butter_sos(2, 10.0, fs, "lowpass")
-    for fcl in range(start, stop, freq_step):
-        bp = butter_sos(1, (float(fcl), float(fcl + fcl_add)), fs, "bandpass")
-        y = sosfiltfilt(bp, x)
-        eed = sosfiltfilt(lp, y * y)
-        eed = eed / np.max(eed + 1e-17)
-        out.append(find_peaks_simple(eed).size)
-    return np.asarray(out, dtype=np.int64)
-
-
-# ------------------------------------------------------- savitzky-golay
-
-
-def savgol_coeffs(width: int, polyorder: int, deriv: int) -> np.ndarray:
-    """SG FIR coefficients: project onto degree-`polyorder` polynomials
-    over the centered window, take the deriv-th derivative at 0."""
-    if width % 2 != 1 or width < 3:
-        raise ValueError("width must be an odd integer >= 3")
-    half = width // 2
-    pos = np.arange(-half, half + 1, dtype=np.float64)
-    # least squares: A c = e_deriv * deriv!  (standard construction)
-    import math
-
-    A = np.vander(pos, polyorder + 1, increasing=True)  # (width, p+1)
-    y = np.zeros(polyorder + 1)
-    y[deriv] = float(math.factorial(deriv))
-    coeffs, *_ = np.linalg.lstsq(A.T, y, rcond=None)
-    return coeffs
-
-
-def savgol_delta(x: np.ndarray, width: int = 9, order: int = 1) -> np.ndarray:
-    """delta parity (caits/fe/_spectrum.py:465-529): savgol_filter with
-    polyorder=order, deriv=order, mode='interp' — interior via FIR
-    convolution, edges via an exact polynomial fit to the first/last
-    window (scipy's 'interp' mode)."""
-    x = np.asarray(x, dtype=np.float64)
-    n = x.size
-    if width > n:
-        raise ValueError(f"when mode='interp', width={width} cannot exceed {n}")
-    if order <= 0:
-        raise ValueError("order must be a positive integer")
-    polyorder = order
-    c = savgol_coeffs(width, polyorder, order)
-    half = width // 2
-    out = np.convolve(x, c[::-1], mode="same")
-    # 'interp' edges: fit degree-polyorder polynomial to the first/last
-    # window, evaluate its deriv-th derivative at the edge positions
-    import math
-
-    def edge_fit(seg: np.ndarray, positions: np.ndarray) -> np.ndarray:
-        t = np.arange(seg.size, dtype=np.float64)
-        coef = np.polyfit(t, seg, polyorder)  # highest power first
-        dcoef = coef.copy()
-        for _ in range(order):
-            dcoef = dcoef[:-1] * np.arange(len(dcoef) - 1, 0, -1)
-        return np.polyval(dcoef, positions) if len(dcoef) else np.zeros_like(positions)
-
-    out[:half] = edge_fit(x[:width], np.arange(half, dtype=np.float64))
-    out[n - half :] = edge_fit(x[n - width :], np.arange(width - half, width, dtype=np.float64))
-    return out

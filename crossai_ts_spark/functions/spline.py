@@ -22,11 +22,10 @@ knot — the scipy default):
 Evaluation is the cubic Hermite form on each interval; out-of-range points
 use the first/last interval polynomial (scipy extrapolate=True).
 
-Two implementations:
-  * spline_slopes / spline_eval      vectorized numpy (engine kernels)
-  * spline_chk_scalar                scalar Thomas + Horner evaluation with
-    a FIXED, documented operation order — the DuckDB oracle in
-    entry_queries mirrors it op-for-op, so checksums match bitwise.
+``spline_slopes`` / ``spline_eval`` are the vectorized engine kernels (the
+EP3 chain and the spline queries). The scalar reference with a FIXED
+operation order that the DuckDB oracle in entry_queries mirrors op-for-op
+is ``oracle/signal.spline_chk_scalar``.
 
 n == 2 degenerates to the straight line, n == 3 to the unique parabola
 (scipy behaves identically for not-a-knot).
@@ -113,108 +112,3 @@ def spline_eval(x: np.ndarray, y: np.ndarray, m: np.ndarray, t: np.ndarray) -> n
         + (-2 * s3 + 3 * s2) * y1
         + (s3 - s2) * m1
     )
-
-
-def interpolate_probabilities(
-    probabilities: np.ndarray,
-    sr: int,
-    ws: float,
-    overlap_percentage: float,
-    interp_choice: int = 2,
-) -> np.ndarray:
-    """caits/performance/utils.py:51-107 parity: spline-upsample each class
-    column of the (windows x classes) probability matrix from window rate to
-    sample rate."""
-    probabilities = np.asarray(probabilities, dtype=np.float64)
-    ws_samples = int(ws * sr)
-    op_samples = int(ws_samples * overlap_percentage)
-    non_op_step = ws_samples - op_samples
-    n_instances, num_classes = probabilities.shape
-    start_idx = np.arange(n_instances) * non_op_step
-    end_idx = start_idx + non_op_step
-    if interp_choice == 1:
-        interp_idx = start_idx
-    elif interp_choice == 2:
-        interp_idx = (start_idx + end_idx) // 2
-    elif interp_choice == 3:
-        interp_idx = end_idx
-    else:
-        raise ValueError("Invalid interp_choice. Choose 1 (start), 2 (middle), or 3 (end).")
-    final_end = int(end_idx[-1])
-    t = np.arange(final_end, dtype=np.float64)
-    out = np.zeros((final_end, num_classes))
-    xk = interp_idx.astype(np.float64)
-    for c in range(num_classes):
-        m = spline_slopes(xk, probabilities[:, c])
-        out[:, c] = spline_eval(xk, probabilities[:, c], m, t)
-    return out
-
-
-# ------------------------------------------------ oracle-matched scalar path
-
-
-def spline_chk_scalar(xs: list[float], ys: list[float], quantize: float = 1048576.0) -> float:
-    """Not-a-knot spline through EXACTLY len(xs) knots, evaluated at every
-    integer t in [xs[0], xs[-1]], checksummed as sum(floor(p(t)*Q)).
-
-    Scalar, fixed op order — entry_queries' unrolled DuckDB oracle mirrors
-    every operation, so the result is bitwise identical across engines.
-    Requires n >= 4 (the query shapes its input that way).
-    """
-    n = len(xs)
-    h = [xs[i + 1] - xs[i] for i in range(n - 1)]
-    d = [(ys[i + 1] - ys[i]) / h[i] for i in range(n - 1)]
-    lo = [0.0] * n
-    di = [0.0] * n
-    up = [0.0] * n
-    b = [0.0] * n
-    di[0] = h[1]
-    up[0] = h[0] + h[1]
-    b[0] = ((h[0] + 2.0 * (h[0] + h[1])) * h[1] * d[0] + h[0] * h[0] * d[1]) / (h[0] + h[1])
-    for i in range(1, n - 1):
-        lo[i] = h[i]
-        di[i] = 2.0 * (h[i - 1] + h[i])
-        up[i] = h[i - 1]
-        b[i] = 3.0 * (h[i] * d[i - 1] + h[i - 1] * d[i])
-    lo[n - 1] = h[n - 2] + h[n - 3]
-    di[n - 1] = h[n - 3]
-    b[n - 1] = (
-        h[n - 2] * h[n - 2] * d[n - 3]
-        + (2.0 * (h[n - 2] + h[n - 3]) + h[n - 2]) * h[n - 3] * d[n - 2]
-    ) / (h[n - 2] + h[n - 3])
-    cp = [0.0] * n
-    bp = [0.0] * n
-    cp[0] = up[0] / di[0]
-    bp[0] = b[0] / di[0]
-    for k in range(1, n):
-        den = di[k] - lo[k] * cp[k - 1]
-        cp[k] = (up[k] / den) if k < n - 1 else 0.0
-        bp[k] = (b[k] - lo[k] * bp[k - 1]) / den
-    m = [0.0] * n
-    m[n - 1] = bp[n - 1]
-    for k in range(n - 2, -1, -1):
-        m[k] = bp[k] - cp[k] * m[k + 1]
-    chk = 0.0
-    t = xs[0]
-    import math
-
-    while t <= xs[-1]:
-        # interval search identical to the SQL: largest i with xs[i] <= t,
-        # clamped to n-2
-        i = n - 2
-        for j in range(n - 1):
-            if xs[j] <= t < xs[j + 1]:
-                i = j
-                break
-        s = (t - xs[i]) / h[i]
-        s2 = s * s
-        s3 = s2 * s
-        val = (
-            (2.0 * s3 - 3.0 * s2 + 1.0) * ys[i]
-            + (s3 - 2.0 * s2 + s) * (m[i] * h[i])
-            + (-2.0 * s3 + 3.0 * s2) * ys[i + 1]
-            + (s3 - s2) * (m[i + 1] * h[i])
-        )
-        chk += math.floor(val * quantize)
-        t += 1.0
-    return chk

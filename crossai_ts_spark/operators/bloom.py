@@ -59,16 +59,6 @@ def bloom_bitset(blocks: DataFrame, m: int = 16384) -> list[int]:
     return [got.get(b, 0) for b in range(m // 32)]
 
 
-def bloom_prune(probe: DataFrame, bitset: list[int], key: str, m: int = 16384, k: int = 3) -> DataFrame:
-    """Keep probe rows whose key has ALL k bits set (possible members).
-
-    The bitset ships as ONE array literal inside the plan, so pruning is a
-    pure narrow map — k hash+test column expressions per row, no explode,
-    no join, no shuffle. This is exactly how engine-native bloom join
-    pruning behaves; here it is an explicit, oracle-checkable operator."""
-    return probe.filter(bloom_test_col(bitset, F.col(key), m, k))
-
-
 def bloom_test_col(bitset: list[int], key_col, m: int = 16384, k: int = 3):
     """Boolean Column: all k bloom bits set for this key (possible member;
     guaranteed true for every built key — no false negatives)."""

@@ -1,17 +1,18 @@
-"""Gap-fill: dense spine generation + LOCF / linear interpolation.
+"""Gap-fill over the observed span: LOCF / linear interpolation.
 
-Spark-first shape:
-  * The spine is GENERATED per doc (``sequence(0, n-1)`` + explode) and
-    left-joined to observations — but because both sides are keyed by
-    doc_id, we avoid the join entirely in the common case: observations are
-    re-attached to the spine with a single ``Window.partitionBy(doc_id)``
-    pass (one shuffle on doc_id, then O(n) window functions, all JVM-side).
-  * LOCF  = ``last(value, ignorenulls=True) over (unbounded preceding, 0)``
-    — the zero-order-hold of caits/core/_core_resample.py:45-54.
-  * linear = prev/next anchor windows + the exact expression
-    ``prev + (next-prev)/(next_off-prev_off) * (off-prev_off)`` in float64,
-    matching oracle/gapfill.py bitwise (np.interp semantics,
-    caits/preprocessing.py:55: backfill head, carry tail).
+Spark-first shape: no dense spine is generated, joined or shuffled. ONE
+``lead`` window over the (sparse) observations pairs each observation with
+the next; each inter-observation run is then emitted directly —
+:func:`gapfill_runs` explodes ``sequence(off, next_off - 1)`` per run,
+:func:`gapfill_linear_checksum` expands runs inside an Arrow kernel and
+reduces them per doc before anything is shuffled.
+
+  * LOCF   = the run's anchor value — the zero-order-hold of
+    caits/core/_core_resample.py:45-54.
+  * linear = ``v + (next-v)/(next_off-off) * (k-off)`` in float64, the
+    expression order of oracle/gapfill.py (np.interp semantics,
+    caits/preprocessing.py:55), so both are bitwise-equal to the oracle
+    sliced to each doc's observed bounds (tested).
 
 At 100 TB the shuffle on doc_id is unavoidable for long-format input (the
 data arrives keyed by sample); skew is bounded because a doc caps at 64 Ki
@@ -24,80 +25,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..workers import worker_kernel
-
-
-def make_spine(doc_lengths: DataFrame, step: int = 1) -> DataFrame:
-    """(doc_id, n) -> dense (doc_id, offset) spine, offsets 0..n-1 by step.
-
-    explode(sequence(...)) is a narrow generator — no shuffle, no driver data.
-    """
-    return doc_lengths.select(
-        "doc_id",
-        F.explode(F.sequence(F.lit(0).cast("long"), F.col("n").cast("long") - 1, F.lit(step).cast("long"))).alias(
-            "offset"
-        ),
-    )
-
-
-def _with_spine(observed: DataFrame, spine: DataFrame, value: str) -> DataFrame:
-    """Left-join observations onto the spine (doc_id, offset)."""
-    return spine.join(observed.select("doc_id", "offset", value), ["doc_id", "offset"], "left")
-
-
-def gapfill_locf(observed: DataFrame, spine: DataFrame, value: str = "value") -> DataFrame:
-    """Dense series with last-observation-carried-forward.
-
-    Leading gap stays null (no anchor) — the documented contract of
-    oracle/gapfill.py. Output: (doc_id, offset, filled double).
-    """
-    df = _with_spine(observed, spine, value)
-    w = Window.partitionBy("doc_id").orderBy("offset").rowsBetween(Window.unboundedPreceding, 0)
-    return df.select(
-        "doc_id",
-        "offset",
-        F.last(F.col(value).cast("double"), ignorenulls=True).over(w).alias("filled"),
-    )
-
-
-def gapfill_linear(observed: DataFrame, spine: DataFrame, value: str = "value") -> DataFrame:
-    """Dense series with linear interpolation between anchors.
-
-    np.interp edge semantics: backfill before first anchor, carry after
-    last. Expression order mirrors oracle/gapfill.py exactly for bitwise
-    parity: prev + (next-prev)/(next_off-prev_off) * (off-prev_off).
-    """
-    df = _with_spine(observed, spine, value)
-    v = F.col(value).cast("double")
-    # Both anchor scans are EXPANDING frames (unbounded preceding -> current),
-    # which Spark's WindowExec evaluates incrementally in O(n). The naive
-    # "current -> unbounded following" frame for the next anchor is O(n^2)
-    # per partition (full-frame rescan per row) — measured 9+ min on 42k-row
-    # partitions — so the forward scan runs over DESCENDING offset instead.
-    wp = Window.partitionBy("doc_id").orderBy("offset").rowsBetween(Window.unboundedPreceding, 0)
-    wn = (
-        Window.partitionBy("doc_id")
-        .orderBy(F.desc("offset"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    df = df.select(
-        "doc_id",
-        "offset",
-        v.alias("_v"),
-        F.last(v, ignorenulls=True).over(wp).alias("_pv"),
-        F.last(F.when(v.isNotNull(), F.col("offset")), ignorenulls=True).over(wp).alias("_po"),
-        F.last(v, ignorenulls=True).over(wn).alias("_nv"),
-        F.last(F.when(v.isNotNull(), F.col("offset")), ignorenulls=True).over(wn).alias("_no"),
-    )
-    x = F.col("offset").cast("double")
-    slope = (F.col("_nv") - F.col("_pv")) / (F.col("_no").cast("double") - F.col("_po").cast("double"))
-    interp = F.col("_pv") + slope * (x - F.col("_po").cast("double"))
-    filled = (
-        F.when(F.col("_v").isNotNull(), F.col("_v"))
-        .when(F.col("_pv").isNull(), F.col("_nv"))  # leading gap: backfill
-        .when(F.col("_nv").isNull(), F.col("_pv"))  # trailing gap: carry
-        .otherwise(interp)
-    )
-    return df.select("doc_id", "offset", filled.alias("filled"))
 
 
 def gapfill_linear_checksum(
@@ -202,9 +129,9 @@ def gapfill_runs(
     narrow explode of `sequence(off, next_off - 1)`. The dense grid exists
     only as generator output — it is never shuffled, joined, or sorted.
 
-    Equivalent to gapfill_locf / gapfill_linear on a spine spanning exactly
-    the observed bounds (no leading/trailing gap by construction); tested
-    for bitwise equality against the spine path.
+    Bitwise-equal to oracle/gapfill.py's dense LOCF / linear series
+    sliced to each doc's observed bounds (no leading/trailing gap by
+    construction; tested).
     """
     if mode not in ("locf", "linear"):
         raise ValueError(f"mode must be locf|linear, got {mode!r}")

@@ -111,41 +111,3 @@ def pack_sequences(
     if seq_len <= 0:
         raise ValueError(f"seq_len must be positive, got {seq_len}")
     return _pack_assign(_bucketed_cumsum(seqs, by, n_buckets), seq_len, by)
-
-
-def _pack_sequences_global(seqs: DataFrame, seq_len: int = 2048, by: str = "source") -> DataFrame:
-    """The naive one-window-per-shard plan — kept only to prove bitwise
-    equality of the two-phase cumsum in tests (the unsalted_source_stats
-    pattern); serializes each shard on one task, so never the hot path."""
-    if seq_len <= 0:
-        raise ValueError(f"seq_len must be positive, got {seq_len}")
-    w = Window.partitionBy(by).orderBy("doc_id")
-    c = (
-        seqs.select(
-            F.col("doc_id").cast("string").alias("doc_id"),
-            F.col(by),
-            F.col("n_tok").cast("long").alias("n_tok"),
-        )
-        .filter(F.col("n_tok") > 0)
-        .withColumn("cum_end", F.sum("n_tok").over(w))
-        .withColumn("cum_start", F.col("cum_end") - F.col("n_tok"))
-    )
-    return _pack_assign(c, seq_len, by)
-
-
-def pack_summary(packed: DataFrame, seq_len: int = 2048, by: str = "source") -> DataFrame:
-    """Per-pack inventory from :func:`pack_sequences` output: docs
-    STARTING in each pack, tokens contributed by those docs, and the
-    boundary-straddler count — the stats a packing run reports per shard.
-    (The final pack of a shard is ragged; all earlier packs hold exactly
-    seq_len tokens by construction, which callers can assert.)
-    """
-    return (
-        packed.groupBy(by, "pack_id")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_tok").alias("toks_started"),
-            F.sum(F.col("spans_packs").cast("long")).alias("n_straddlers"),
-        )
-        .select(by, "pack_id", "n_docs", "toks_started", "n_straddlers")
-    )

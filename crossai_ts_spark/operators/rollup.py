@@ -11,8 +11,7 @@ Scale design (the part that matters at 10^12 sequences / 100 TB):
   last∘last. So the entire 3-tier rollup of 100 TB of tokens is one narrow
   map stage; only the (tiny) tier rows are ever shuffled — and only if a
   later op asks for it.
-* ``rollup_long`` (long-format inputs, post gap-fill) and
-  ``cascade_from_tier`` (tier k already in storage) are the shuffle paths:
+* ``cascade_from_tier`` (tier k already in storage) is the shuffle path:
   a plain groupBy — Spark's partial aggregation does map-side combine, and
   ``salted`` variants exist in operators/salted.py for skewed global keys.
 
@@ -74,13 +73,18 @@ def cascade(
 
     Rows with null or empty ``tokens`` drop (:data:`NONEMPTY`); windows are
     counted from the array, never from ``n_tok``. A null element inside an
-    array raises ``ValueError`` naming the doc.
+    array raises ``ValueError`` naming the doc. ``w``, ``fanout`` or
+    ``tiers`` below 1 raises ``ValueError`` naming the argument when the
+    plan is built.
 
     ``strategy`` accepts only ``"pandas"``: the benchmark under
     ``perfbench/`` still passes it, and it goes once that call drops it.
     """
     if strategy != "pandas":
         raise ValueError(f"unknown strategy {strategy!r}")
+    for name, v in (("w", w), ("fanout", fanout), ("tiers", tiers)):
+        if v < 1:
+            raise ValueError(f"{name} must be >= 1, got {v}")
     widths = [tier_width(k, w, fanout) for k in range(1, tiers + 1)]
 
     def batch_rollup(flat_i32, doc_base, doc_len, width):
@@ -155,51 +159,6 @@ def cascade(
             yield pd.DataFrame(out)
 
     return df.filter(NONEMPTY).mapInPandas(kernel, schema=TIER_SCHEMA)
-
-
-def rollup_long(
-    df_long: DataFrame,
-    w: int = DEFAULT_W,
-    tier: int = 1,
-    value: str = "value",
-) -> DataFrame:
-    """Tumbling rollup over long format (doc_id, source, offset, value).
-
-    The shuffle path (one exchange on (doc_id, window)); Spark's partial
-    hash aggregation combines map-side so the exchange carries only window
-    rows, not samples. Used after gap-fill and as a cross-check of the
-    narrow :func:`cascade`.
-
-    t_sum keeps the value column's native numeric family: integral inputs
-    sum as long (exact); floating inputs (e.g. linear gap-fill output) sum
-    as double — casting those to long per row would silently truncate.
-    """
-    integral = dict(df_long.dtypes).get(value) in ("tinyint", "smallint", "int", "bigint")
-    sum_col = F.sum(F.col(value).cast("long" if integral else "double")).alias("t_sum")
-    win = (F.col("offset") / F.lit(w)).cast("long")
-    g = (
-        df_long.filter(F.col(value).isNotNull())
-        .groupBy("doc_id", "source", (win * w).alias("window_start"))
-        .agg(
-            F.min(value).alias("t_min"),
-            F.max(value).alias("t_max"),
-            sum_col,
-            F.count(value).alias("t_cnt"),
-            F.max_by(value, "offset").alias("t_last"),
-        )
-    )
-    return g.select(
-        "doc_id",
-        "source",
-        F.lit(tier).cast("int").alias("tier"),
-        "window_start",
-        "t_min",
-        "t_max",
-        "t_sum",
-        "t_cnt",
-        "t_last",
-        (F.col("t_sum").cast("double") / F.col("t_cnt").cast("double")).alias("t_mean"),
-    )
 
 
 def cascade_from_tier(

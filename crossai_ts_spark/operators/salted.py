@@ -9,56 +9,14 @@ is the classic partial/final decomposition made explicit:
   phase 2: groupBy(key) merging the partials (sum∘sum, min∘min, ...)
 
 All merge identities are the exact integer forms, so the result is
-bitwise-identical to the unsalted plan (tested). AQE skew handling stays on
-as backup, not substitute.
+bitwise-identical under any salt count or partitioning (tested). AQE skew
+handling stays on as backup, not substitute.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def add_salt(df: DataFrame, n_salts: int = 32, on: str = "doc_id") -> DataFrame:
-    return df.withColumn("_salt", F.pmod(F.xxhash64(F.col(on)), F.lit(n_salts)).cast("int"))
-
-
-def salted_source_stats(seqs: DataFrame, n_salts: int = 32) -> DataFrame:
-    """Per-source corpus stats over the sequences table, skew-proof.
-
-    Output: source, n_docs, n_tokens, min_len, max_len, mean_len (float64 =
-    exact int division), distinct-ish doc check left to callers.
-    """
-    partial = (
-        add_salt(seqs, n_salts)
-        .groupBy("source", "_salt")
-        .agg(
-            F.count("*").alias("p_docs"),
-            F.sum(F.col("n_tok").cast("long")).alias("p_tokens"),
-            F.min("n_tok").alias("p_min"),
-            F.max("n_tok").alias("p_max"),
-        )
-    )
-    return (
-        partial.groupBy("source")
-        .agg(
-            F.sum("p_docs").alias("n_docs"),
-            F.sum("p_tokens").alias("n_tokens"),
-            F.min("p_min").alias("min_len"),
-            F.max("p_max").alias("max_len"),
-        )
-        .withColumn("mean_len", F.col("n_tokens").cast("double") / F.col("n_docs").cast("double"))
-    )
-
-
-def unsalted_source_stats(seqs: DataFrame) -> DataFrame:
-    """The naive plan — used only to prove bitwise equality in tests."""
-    return seqs.groupBy("source").agg(
-        F.count("*").alias("n_docs"),
-        F.sum(F.col("n_tok").cast("long")).alias("n_tokens"),
-        F.min("n_tok").alias("min_len"),
-        F.max("n_tok").alias("max_len"),
-    ).withColumn("mean_len", F.col("n_tokens").cast("double") / F.col("n_docs").cast("double"))
 
 
 def salted_tier_source_rollup(tier_df: DataFrame, n_salts: int = 32) -> DataFrame:

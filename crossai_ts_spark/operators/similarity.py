@@ -1,8 +1,8 @@
 """Similarity search over embedding columns (array<float>).
 
-Baseline: brute-force cosine top-k — broadcast the (small) query set,
-JVM-side sequential fold for the dot product, row_number top-k. One narrow
-pass over the corpus; the only shuffle is the final per-query top-k (tiny).
+The exact brute-force baseline (broadcast the small query set, JVM-side
+fold for the dot product, row_number top-k) is oracle/plans.cosine_topk;
+tests score the searches here by recall against it.
 
 Scale path: LSH by random-hyperplane sign buckets — corpus hashed once to
 B-bit bucket ids; queries probe their own bucket (+ optional multi-probe),
@@ -49,22 +49,6 @@ def _arr_sql(vals) -> str:
     plane literals of the 3-table near-dup bucket cost ~1.06 s of driver
     time via F.lit lists, ~0 via expression strings)."""
     return "array(" + ",".join(f"CAST('{x!r}' AS DOUBLE)" for x in vals) + ")"
-
-
-def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
-    """Brute-force cosine top-k; queries broadcast (must be the small side)."""
-    qv = queries.select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("qe"), _norm("embedding").alias("_na")
-    )
-    cv = corpus.select("vec_id", "embedding", _norm("embedding").alias("_nb"))
-    pairs = F.broadcast(qv).crossJoin(cv).filter(F.col("vec_id") != F.col("q_id"))
-    scored = pairs.select("q_id", "vec_id", _cos_with_norms("qe", "embedding").alias("cos_sim"))
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), "vec_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "vec_id", "cos_sim")
-    )
 
 
 def _hyperplanes(dim: int, n_bits: int, seed: int) -> list[list[float]]:

@@ -2,6 +2,9 @@
 
 This is the golden source for pytest: the Spark engine's rolled-up points
 must bitwise-match these per retention tier (BASELINE.json north_rule).
+No query, job or stream imports this package; it also holds the golden
+codecs (``codecs``), the signal-kernel references (``signal``) and the
+brute-force Spark plans the scale paths are checked against (``plans``).
 Semantics mirror the reference library:
   - tumbling chunks keep the ragged tail (caits/windowing.py:188-202)
   - aggregates are full-window reductions (caits/fe/_statistical.py)

@@ -1,0 +1,56 @@
+"""Brute-force Spark plans that tests check the production plans against.
+
+  cosine_topk             exact cosine top-k over every (query, corpus)
+                          pair; the LSH and IVF searches of
+                          operators/similarity.py are scored by their
+                          recall against it
+  _pack_sequences_global  one running-sum window per shard; the two-phase
+                          cumsum of operators/packing.pack_sequences must
+                          equal it bitwise
+
+No query, job or stream runs them.
+"""
+
+from __future__ import annotations
+
+from pyspark.sql import DataFrame, Window
+from pyspark.sql import functions as F
+
+from ..operators.packing import _pack_assign
+from ..operators.similarity import _cos_with_norms, _norm
+
+
+def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
+    """Brute-force cosine top-k; queries broadcast (must be the small side)."""
+    qv = queries.select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("qe"), _norm("embedding").alias("_na")
+    )
+    cv = corpus.select("vec_id", "embedding", _norm("embedding").alias("_nb"))
+    pairs = F.broadcast(qv).crossJoin(cv).filter(F.col("vec_id") != F.col("q_id"))
+    scored = pairs.select("q_id", "vec_id", _cos_with_norms("qe", "embedding").alias("cos_sim"))
+    w = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), "vec_id")
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("q_id", "rank", "vec_id", "cos_sim")
+    )
+
+
+def _pack_sequences_global(seqs: DataFrame, seq_len: int = 2048, by: str = "source") -> DataFrame:
+    """The naive one-window-per-shard plan — kept only to prove bitwise
+    equality of the two-phase cumsum in tests; serializes each shard on
+    one task, so never the hot path."""
+    if seq_len <= 0:
+        raise ValueError(f"seq_len must be positive, got {seq_len}")
+    w = Window.partitionBy(by).orderBy("doc_id")
+    c = (
+        seqs.select(
+            F.col("doc_id").cast("string").alias("doc_id"),
+            F.col(by),
+            F.col("n_tok").cast("long").alias("n_tok"),
+        )
+        .filter(F.col("n_tok") > 0)
+        .withColumn("cum_end", F.sum("n_tok").over(w))
+        .withColumn("cum_start", F.col("cum_end") - F.col("n_tok"))
+    )
+    return _pack_assign(c, seq_len, by)

@@ -19,11 +19,19 @@ Formulas (parity with caits/fe/_spectral.py):
   slope      = OLS slope of m on f                    (:317-371)
   decrease   = sum_{k>1}((m_k-m_1)/(k-1))/sum_{k>1}(m_k)  (:374-426)
   rms of the raw window for convenience
+  bandwidth  = std of the normalized one-sided power spectrum (:178-256)
+  dominant   = argmax of a one-segment Welch PSD (_statistical.py:542-571)
+  band power = per-band Simpson / total Simpson of a Welch PSD (:429-496)
+
+The Welch, Simpson and band-power kernels below are checked on their own
+by tests/test_spectral2.py.
 """
 
 from __future__ import annotations
 
 import numpy as np
+
+from ..functions.dsp import hann
 
 SPECTRAL_FIELDS = [
     "sp_centroid",
@@ -79,8 +87,6 @@ def spectral_values_np(x: np.ndarray, fs: float = 1.0, rolloff_perc: float = 0.8
     # caits/fe/_spectral.py:178-256), Welch dominant frequency
     # (_statistical.py:542-571), relative band power thirds (:429-496 with
     # fs-proportional bands)
-    from ..functions.spectral2 import band_relative_power, dominant_frequency, spectral_bandwidth
-
     bw = spectral_bandwidth(x, fs)
     dom = dominant_frequency(x, fs)
     nyq = fs / 2.0
@@ -106,3 +112,105 @@ def spectral_values_np(x: np.ndarray, fs: float = 1.0, rolloff_perc: float = 0.8
         "sp_band_high": float(bands[2]),
     }
 
+
+# ------------------------------------------------- welch and band power
+#
+# Welch follows scipy.signal.welch defaults: periodic Hann, constant
+# detrend per segment, noverlap = nperseg//2, density scaling
+# (2/(fs*sum(w^2)) with DC and Nyquist not doubled).
+
+
+def welch_psd(
+    x: np.ndarray, fs: float, nperseg: int, noverlap: int | None = None
+) -> tuple[np.ndarray, np.ndarray]:
+    """(freqs, psd) — scipy.signal.welch semantics (density, hann,
+    constant detrend, mean over segments)."""
+    x = np.asarray(x, dtype=np.float64)
+    nperseg = int(min(nperseg, x.size))
+    if noverlap is None:
+        noverlap = nperseg // 2
+    noverlap = int(min(noverlap, nperseg - 1)) if nperseg > 1 else 0
+    step = nperseg - noverlap
+    w = hann(nperseg)
+    scale = 1.0 / (fs * (w * w).sum())
+    n_seg = max(1, (x.size - noverlap) // step)
+    psd_acc = np.zeros(nperseg // 2 + 1)
+    for s in range(n_seg):
+        seg = x[s * step : s * step + nperseg]
+        seg = seg - seg.mean()  # detrend='constant'
+        spec = np.fft.rfft(seg * w)
+        p = (spec.real**2 + spec.imag**2) * scale
+        psd_acc += p
+    psd = psd_acc / n_seg
+    if nperseg % 2 == 0:
+        psd[1:-1] *= 2.0  # one-sided doubling, Nyquist bin excluded
+    else:
+        psd[1:] *= 2.0
+    freqs = np.fft.rfftfreq(nperseg, d=1.0 / fs)
+    return freqs, psd
+
+
+def dominant_frequency(x: np.ndarray, fs: float) -> float:
+    """caits/fe/_statistical.py:542-571: welch with nperseg = len(x)
+    (single segment), frequency of the PSD argmax."""
+    freqs, psd = welch_psd(x, fs, nperseg=len(x))
+    return float(freqs[int(np.argmax(psd))])
+
+
+def simpson_dx(y: np.ndarray, dx: float) -> float:
+    """Composite Simpson integration on a uniform grid (scipy.simpson
+    semantics for even sample counts: Cartwright last-interval
+    correction, matching modern scipy's default)."""
+    y = np.asarray(y, dtype=np.float64)
+    n = y.size
+    if n < 2:
+        return 0.0
+    if n == 2:
+        return float(0.5 * dx * (y[0] + y[1]))
+    if n % 2 == 1:
+        return float(dx / 3.0 * (y[0] + y[-1] + 4 * y[1:-1:2].sum() + 2 * y[2:-2:2].sum()))
+    # even count: Simpson over first n-1 points + corrected last interval
+    core = dx / 3.0 * (y[0] + y[-2] + 4 * y[1:-2:2].sum() + 2 * y[2:-3:2].sum())
+    last = dx * (5.0 * y[-1] + 8.0 * y[-2] - y[-3]) / 12.0
+    return float(core + last)
+
+
+def band_relative_power(
+    x: np.ndarray,
+    fs: float,
+    nperseg_th: int = 900,
+    noverlap_th: int = 600,
+    freq_cuts: list[tuple[float, float]] | None = None,
+) -> np.ndarray:
+    """power_spectral_density parity (caits/fe/_spectral.py:429-496):
+    Welch PSD, Simpson total power, per-band Simpson / total."""
+    if freq_cuts is None:
+        freq_cuts = [(0, 200), (300, 425), (500, 650), (950, 1150),
+                     (1400, 1800), (2300, 2400), (2850, 2950), (3800, 3900)]
+    nperseg = min(nperseg_th, len(x))
+    noverlap = int(min(noverlap_th, nperseg / 2))
+    freqs, psd = welch_psd(x, fs, nperseg=nperseg, noverlap=noverlap)
+    dxf = freqs[1] - freqs[0] if freqs.size > 1 else 1.0
+    total = simpson_dx(psd, dxf)
+    out = []
+    for lf, hf in freq_cuts:
+        m = (freqs >= lf) & (freqs <= hf)
+        out.append(simpson_dx(psd[m], dxf) / total if total > 0 else 0.0)
+    return np.asarray(out)
+
+
+def spectral_bandwidth(x: np.ndarray, fs: float) -> float:
+    """caits/fe/_spectral.py:178-256: std of the normalized one-sided
+    power spectrum (two-sided FFT power, positive half doubled)."""
+    x = np.asarray(x, dtype=np.float64)
+    n = x.size
+    ps = np.abs(np.fft.fft(x)) ** 2
+    half = n // 2 if n % 2 == 0 else (n - 1) // 2
+    ps = ps[:half] * 2
+    tot = ps.sum()
+    if tot <= 0:
+        return 0.0
+    ps = ps / tot
+    freqs = np.fft.fftfreq(n, d=1.0 / fs)[: n // 2][:half]
+    mean_freq = (freqs * ps).sum()
+    return float(np.sqrt((((freqs - mean_freq) ** 2) * ps).sum()))

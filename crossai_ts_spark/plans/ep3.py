@@ -13,8 +13,8 @@ runs as ONE lazy plan: minute-bucket aggregation (JVM), one Arrow kernel
 per user computing the numeric chain (numpy; the heavy per-sequence work),
 then a single global aggregate for the metric row. No driver-side actions.
 
-The per-user kernel is exposed as ``ep3_user_counts`` so tests can check it
-against hand-constructed scenarios independent of Spark.
+The per-user chain's numpy reference, checked against hand-constructed
+scenarios and against this plan, is ``oracle/signal.ep3_user_counts``.
 """
 
 from __future__ import annotations
@@ -23,8 +23,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.iir import butter_sos, sosfiltfilt
-from ..functions.spline import spline_eval, spline_slopes
+from ..functions.iir import butter_sos
 from ..workers import worker_kernel
 
 STEP = 64  # samples per window (the sr*ws - overlap grid of the reference)
@@ -52,49 +51,6 @@ def _iou(a: tuple[int, int], b: tuple[int, int]) -> float:
     inter = max(0, min(a[1], b[1]) - max(a[0], b[0]))
     union = (a[1] - a[0]) + (b[1] - b[0]) - inter
     return inter / union if union > 0 else 0.0
-
-
-def ep3_user_counts(
-    click_probs: np.ndarray,
-    error_fracs: np.ndarray,
-    step: int = STEP,
-    dur_min: int = DUR_MIN,
-    prob_th: float = PROB_TH,
-    iou_th: float = IOU_TH,
-    sos: np.ndarray | None = None,
-) -> tuple[int, int, int, int]:
-    """(corrects, deletions, substitutions, insertions) for one recording.
-
-    click_probs: per-window probabilities (knots at window midpoints,
-    interp_choice=2); error_fracs: per-window ground-truth signal — windows
-    with error_frac >= GT_ERR_FRAC become GT events spanning the window.
-    """
-    n_w = click_probs.size
-    if sos is None:
-        sos = butter_sos(4, 0.02, 1.0, "lowpass")
-    # 1. spline upsample to the sample grid (interp_choice=2 midpoints)
-    xk = np.arange(n_w, dtype=np.float64) * step + step // 2
-    m = spline_slopes(xk, click_probs)
-    t = np.arange(n_w * step, dtype=np.float64)
-    interp = spline_eval(xk, click_probs, m, t)
-    # 2. Butterworth zero-phase smoothing
-    smooth = sosfiltfilt(sos, interp)
-    # 3-5. threshold -> continuous events -> duration threshold
-    pred = [(s, e) for s, e in _runs(smooth >= prob_th) if e - s >= dur_min]
-    # ground truth events: contiguous runs of GT windows merge into one
-    # event (get_gt_events_from_dict yields intervals, not single windows)
-    gt = [(ws * step, we * step) for ws, we in _runs(np.asarray(error_fracs) >= GT_ERR_FRAC)]
-    # 6. classify (single-class: no substitutions possible)
-    C = D = S = I = 0
-    for pe in pred:
-        best = max((_iou(pe, g) for g in gt), default=0.0)
-        if best == 0.0:
-            I += 1
-        elif best < iou_th:
-            D += 1
-        else:
-            C += 1
-    return C, D, S, I
 
 
 def ep3_pipeline(ev: DataFrame, n_windows: int = 16) -> DataFrame:

@@ -12,19 +12,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
-def s3_available(spark: SparkSession) -> bool:
-    """True when the hadoop-aws S3A filesystem is on the classpath
-    (absent in this sandbox — the s3 surface is jar-gated exactly like
-    Iceberg; injection = add hadoop-aws + aws-sdk-bundle jars)."""
-    try:
-        spark._jvm.java.lang.Class.forName(  # noqa: SLF001
-            "org.apache.hadoop.fs.s3a.S3AFileSystem"
-        )
-        return True
-    except Exception:
-        return False
-
-
 def s3a_path(location: str, spark: SparkSession | None = None,
              keep_scheme: bool = False) -> str:
     """Normalize an S3 URI scheme to the client Spark/Hadoop will
@@ -57,40 +44,10 @@ def s3a_path(location: str, spark: SparkSession | None = None,
     return location
 
 
-def configure_s3(
-    spark: SparkSession,
-    endpoint: str | None = None,
-    access_key: str | None = None,
-    secret_key: str | None = None,
-    path_style: bool = False,
-    anonymous: bool = False,
-) -> None:
-    """Set the S3A client config on the live session's hadoop conf.
-
-    Defaults follow the provider chain (env vars / instance profile —
-    the right setup on a real cluster); pass ``endpoint``/``path_style``
-    for S3-compatible stores (MinIO, Ceph), explicit keys for static
-    credentials, or ``anonymous=True`` for public buckets. Settings are
-    cluster-wide and take effect for filesystems opened AFTER the call."""
-    conf = spark.sparkContext._jsc.hadoopConfiguration()  # noqa: SLF001
-    if endpoint is not None:
-        conf.set("fs.s3a.endpoint", endpoint)
-    if access_key is not None:
-        conf.set("fs.s3a.access.key", access_key)
-    if secret_key is not None:
-        conf.set("fs.s3a.secret.key", secret_key)
-    if path_style:
-        conf.set("fs.s3a.path.style.access", "true")
-    if anonymous:
-        conf.set(
-            "fs.s3a.aws.credentials.provider",
-            "org.apache.hadoop.fs.s3a.AnonymousAWSCredentialsProvider",
-        )
-
-
 def read_table(spark: SparkSession, location: str) -> DataFrame:
     """Read a table: ``iceberg:catalog.db.tbl``, an ``s3://``/``s3a://``
-    object-store prefix (jar-gated, see :func:`s3_available`), or a
+    object-store prefix (needs the hadoop-aws jar on the classpath; S3A
+    client settings come as ``--conf spark.hadoop.fs.s3a.*``), or a
     parquet path/dir."""
     if location.startswith("iceberg:"):
         return spark.read.format("iceberg").load(location[len("iceberg:") :])

@@ -36,6 +36,9 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--master", default=None)
     ap.add_argument("--seed", type=int, default=42)
     args = ap.parse_args(argv)
+    for flag in ("buckets", "w", "fanout", "tiers"):
+        if getattr(args, flag) < 1:  # before the session, before any drop
+            ap.error(f"--{flag} must be >= 1, got {getattr(args, flag)}")
 
     from crossai_ts_spark.datagen import gen_sequences
     from crossai_ts_spark.functions.codecs import compress_tiers

@@ -12,26 +12,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from crossai_ts_spark.operators.rollup import cascade
-from crossai_ts_spark.operators.salted import (
-    salted_source_stats,
-    salted_tier_source_rollup,
-    unsalted_source_stats,
-)
+from crossai_ts_spark.operators.salted import salted_tier_source_rollup
 from crossai_ts_spark.plans.checkpoint import (
     commit_bucket,
     completed_buckets,
     pending_buckets,
     with_bucket,
 )
-
-
-def test_salted_equals_unsalted(spark, tiny_df):
-    a = salted_source_stats(tiny_df, n_salts=8).toPandas().sort_values("source").reset_index(drop=True)
-    b = unsalted_source_stats(tiny_df).toPandas().sort_values("source").reset_index(drop=True)
-    assert a[["source", "n_docs", "n_tokens", "min_len", "max_len"]].equals(
-        b[["source", "n_docs", "n_tokens", "min_len", "max_len"]]
-    )
-    assert (a.mean_len.to_numpy().view(np.int64) == b.mean_len.to_numpy().view(np.int64)).all()
 
 
 def test_salted_tier_rollup_invariance(spark, tiny_df):
@@ -270,3 +257,23 @@ def test_rerun_with_fewer_buckets_drops_the_rest(spark, tmp_path):
             rows += json.load(f)["tiers"]["1"]["rows"]
     pts = spark.read.parquet(f"{out}/compressed").filter(F.col("tier") == 1).agg(F.sum("n_points")).first()[0]
     assert pts == rows
+
+
+def test_rollup_job_rejects_counts_below_one(spark, tmp_path):
+    """--buckets 0 (or --w/--fanout/--tiers 0) is a usage error, exit 2,
+    raised before anything in --out is touched: it used to drop every
+    committed bucket as stale and exit 0."""
+    from jobs.rollup_job import main
+
+    out = str(tmp_path / "job_out")
+    base = ["--input", "synthetic:20", "--out", out, "--w", "64", "--fanout", "8",
+            "--tiers", "2", "--compress", "--master", "local[4]"]
+    assert main([*base, "--buckets", "2"]) == 0
+    for flag in ("--buckets", "--w", "--fanout", "--tiers"):
+        with pytest.raises(SystemExit) as e:
+            main([*base, "--buckets", "2", flag, "0"])
+        assert e.value.code == 2, flag
+    assert completed_buckets(out) == {0, 1}
+    for b in (0, 1):
+        assert os.path.exists(os.path.join(out, "_manifests", f"{b}.json"))
+        assert os.path.isdir(os.path.join(out, "data", f"bucket={b}"))

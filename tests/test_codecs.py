@@ -7,12 +7,8 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from crossai_ts_spark.functions.codecs import (
-    dod_decode,
-    dod_encode,
-    gorilla_decode,
-    gorilla_encode,
-)
+from crossai_ts_spark.functions.codecs import dod_encode, gorilla_decode
+from crossai_ts_spark.oracle.codecs import dod_decode, gorilla_encode
 
 RNG = np.random.default_rng(42)
 
@@ -130,8 +126,9 @@ def test_token_roundtrip_invariant(spark, tiny_df):
 
 
 def test_batched_equals_grouped_compression(spark, tiny_df):
-    from crossai_ts_spark.functions.codecs import compress_tiers, compress_tiers_grouped
+    from crossai_ts_spark.functions.codecs import compress_tiers
     from crossai_ts_spark.operators.rollup import cascade
+    from crossai_ts_spark.oracle.codecs import compress_tiers_grouped
 
     tiers = cascade(tiny_df, w=64, fanout=8, tiers=2)
     a = {

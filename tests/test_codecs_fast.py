@@ -1,5 +1,6 @@
 """Vectorized codec fast paths must be BIT-IDENTICAL to the golden
-per-value encoders (functions/codecs.py), including IEEE edge payloads."""
+per-value encoders (functions/codecs.py, oracle/codecs.py), including
+IEEE edge payloads."""
 
 from __future__ import annotations
 
@@ -8,12 +9,8 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from crossai_ts_spark.functions.codecs import (
-    dod_decode,
-    dod_encode,
-    gorilla_decode,
-    gorilla_encode,
-)
+from crossai_ts_spark.functions.codecs import dod_encode, gorilla_decode
+from crossai_ts_spark.oracle.codecs import dod_decode, gorilla_encode
 from crossai_ts_spark.functions.codecs_fast import (
     dod_decode_fast,
     dod_encode_fast,

@@ -66,7 +66,8 @@ def test_simhash_identical_docs_match(spark, docs_df):
 
 
 def test_cosine_topk_and_lsh(spark):
-    from crossai_ts_spark.operators.similarity import cosine_topk, lsh_topk
+    from crossai_ts_spark.operators.similarity import lsh_topk
+    from crossai_ts_spark.oracle.plans import cosine_topk
 
     rng = np.random.default_rng(42)
     base = rng.normal(0, 1, (20, 16)).astype(np.float32)
@@ -148,7 +149,8 @@ def test_embedding_near_dups_lsh_default_no_crossjoin(spark):
 
 
 def test_multiprobe_lsh_improves_recall(spark):
-    from crossai_ts_spark.operators.similarity import cosine_topk, lsh_topk
+    from crossai_ts_spark.operators.similarity import lsh_topk
+    from crossai_ts_spark.oracle.plans import cosine_topk
 
     rng = np.random.default_rng(4)
     emb = rng.normal(size=(400, 16)).astype("float32")
@@ -169,7 +171,8 @@ def test_multiprobe_lsh_improves_recall(spark):
 
 
 def test_ivf_ann_recall_and_probe_monotonicity(spark):
-    from crossai_ts_spark.operators.similarity import cosine_topk, ivf_assign, ivf_centroids, ivf_topk
+    from crossai_ts_spark.operators.similarity import ivf_assign, ivf_centroids, ivf_topk
+    from crossai_ts_spark.oracle.plans import cosine_topk
 
     rng = np.random.default_rng(7)
     emb = rng.normal(size=(400, 16)).astype("float32")
@@ -352,14 +355,15 @@ def test_asof_join_semantics(spark):
 
 
 def test_bloom_build_prune_no_false_negatives(spark):
-    from crossai_ts_spark.operators.bloom import bloom_bitset, bloom_build, bloom_prune
+    from crossai_ts_spark.operators.bloom import bloom_bitset, bloom_build, bloom_test_col
 
     build = spark.range(0, 2000, 2).withColumnRenamed("id", "key")  # evens < 2000
     probe = spark.range(0, 8000).withColumnRenamed("id", "key")
     bits = bloom_bitset(bloom_build(build, "key", m=16384, k=3), m=16384)
     assert len(bits) == 512 and any(b != 0 for b in bits)
 
-    passed = set(r.key for r in bloom_prune(probe, bits, "key", m=16384, k=3).collect())
+    pruned = probe.filter(bloom_test_col(bits, F.col("key"), m=16384, k=3))
+    passed = set(r.key for r in pruned.collect())
     members = set(range(0, 2000, 2))
     assert members <= passed                      # NO false negatives, ever
     fp = len(passed - members)
@@ -699,7 +703,7 @@ def test_gopher_rules_semantics(spark):
 
 
 def test_sequence_packing_semantics(spark):
-    from crossai_ts_spark.operators.packing import pack_sequences, pack_summary
+    from crossai_ts_spark.operators.packing import pack_sequences
 
     rows = [
         ("a01", "s1", 30), ("a02", "s1", 30), ("a03", "s1", 50),  # s1: 110 toks
@@ -718,9 +722,10 @@ def test_sequence_packing_semantics(spark):
     assert out.loc["b02", "pack_id"] == 1 and out.loc["b02", "pack_off"] == 0
     assert bool(out.loc["b02", "spans_packs"]) is False
 
-    s = pack_summary(pack_sequences(seqs, seq_len=64, by="source"), 64).toPandas()
-    s1p0 = s[(s.source == "s1") & (s.pack_id == 0)].iloc[0]
-    assert s1p0.n_docs == 3 and s1p0.toks_started == 110 and s1p0.n_straddlers == 1
+    # per-pack inventory of s1's pack 0: docs starting there, their tokens,
+    # boundary straddlers
+    s1p0 = out[(out.source == "s1") & (out.pack_id == 0)]
+    assert len(s1p0) == 3 and s1p0.n_tok.sum() == 110 and s1p0.spans_packs.sum() == 1
 
     # shards are independent: repartitioning must not change the packing
     out13 = (
@@ -737,11 +742,8 @@ def test_packing_two_phase_equals_global_and_bounds_hot_shard(spark):
     buckets instead of serializing on one task."""
     import math
 
-    from crossai_ts_spark.operators.packing import (
-        _bucketed_cumsum,
-        _pack_sequences_global,
-        pack_sequences,
-    )
+    from crossai_ts_spark.operators.packing import _bucketed_cumsum, pack_sequences
+    from crossai_ts_spark.oracle.plans import _pack_sequences_global
 
     n = 4000
     rows = [

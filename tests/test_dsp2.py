@@ -9,13 +9,13 @@ import pytest
 from crossai_ts_spark.functions.dsp2 import (
     hpss,
     hpss_signal,
-    pcen_base,
     phase_vocoder,
     pitch_shift_ts,
     resample_poly,
     time_stretch_ts,
     time_warp_np,
 )
+from crossai_ts_spark.oracle.signal import pcen_base
 
 
 def test_pcen_steady_state_closed_form():
@@ -144,7 +144,7 @@ def test_pcen_docs_matches_numpy_fold_and_reference_surface(spark):
     which may differ from sqrt by an ulp)."""
     import numpy as np
 
-    from crossai_ts_spark.functions.dsp2 import pcen_base, pcen_docs
+    from crossai_ts_spark.functions.dsp2 import pcen_docs
     from crossai_ts_spark.sources.tokenize import tokenize_documents
 
     rows = [(i, "the quick brown fox %d jumps" % i * (i + 1), "en", "t") for i in range(8)]

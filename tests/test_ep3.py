@@ -5,7 +5,8 @@ from __future__ import annotations
 
 import numpy as np
 
-from crossai_ts_spark.plans.ep3 import STEP, ep3_user_counts, ep3_pipeline, _runs, _iou
+from crossai_ts_spark.oracle.signal import ep3_user_counts
+from crossai_ts_spark.plans.ep3 import _iou, _runs, ep3_pipeline
 
 
 def test_runs_and_iou_primitives():

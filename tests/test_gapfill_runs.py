@@ -1,18 +1,57 @@
-"""gapfill_runs (join-free) == spine path restricted to observed bounds."""
+"""gapfill_runs (join-free) == the numpy oracle restricted to observed bounds."""
 
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from crossai_ts_spark.datagen import gapped_to_spark, gen_gapped_local
-from crossai_ts_spark.operators.gapfill import (
-    gapfill_linear,
-    gapfill_locf,
-    gapfill_runs,
-    make_spine,
-)
+from crossai_ts_spark.datagen import VOCAB
+from crossai_ts_spark.operators.gapfill import gapfill_runs
+from crossai_ts_spark.oracle.gapfill import gapfill_linear, gapfill_locf
+
+# ------------------------------------------------ gapped series (FIXTURES F2)
+
+GAP_DOCS = {
+    # doc suffix -> (n_tok, gap offsets builder)
+    "doc-gap-0000": (512, lambda n: np.arange(0, 10)),              # leading gap
+    "doc-gap-0001": (512, lambda n: np.arange(100, 200)),           # interior run
+    "doc-gap-0002": (512, lambda n: np.arange(n - 10, n)),          # trailing gap
+    "doc-gap-0003": (512, lambda n: np.arange(1, n, 2)),            # alternating
+}
+
+
+def gen_gapped_local(seed: int = 42, n_docs: int = 20, drop_frac: float = 0.10) -> pd.DataFrame:
+    """Long-format gapped series: (doc_id, offset:int64, value:int32).
+
+    Pinned gap docs first, then random docs with drop_frac offsets removed.
+    """
+    rows: list[pd.DataFrame] = []
+    for j, (doc_id, (n_tok, gaps)) in enumerate(sorted(GAP_DOCS.items())):
+        rng = np.random.default_rng([seed, 10_000 + j])
+        vals = rng.integers(0, VOCAB, size=n_tok, dtype=np.int32)
+        keep = np.setdiff1d(np.arange(n_tok), gaps(n_tok))
+        rows.append(pd.DataFrame({"doc_id": doc_id, "offset": keep.astype(np.int64), "value": vals[keep]}))
+    for i in range(n_docs):
+        rng = np.random.default_rng([seed, 20_000 + i])
+        n_tok = int(rng.integers(64, 1024))
+        vals = rng.integers(0, VOCAB, size=n_tok, dtype=np.int32)
+        drop = rng.random(n_tok) < drop_frac
+        keep = np.where(~drop)[0]
+        rows.append(
+            pd.DataFrame({"doc_id": f"doc-gapped-{i:06d}", "offset": keep.astype(np.int64), "value": vals[keep]})
+        )
+    return pd.concat(rows, ignore_index=True)
+
+
+def gapped_to_spark(spark, pdf: pd.DataFrame):
+    df = spark.createDataFrame(pdf)
+    return df.select(
+        F.col("doc_id"),
+        F.col("offset").cast("long").alias("offset"),
+        F.col("value").cast("int").alias("value"),
+    )
 
 
 @pytest.fixture(scope="module")
@@ -24,13 +63,17 @@ def gapped2(spark):
 @pytest.mark.parametrize("mode", ["locf", "linear"])
 def test_runs_equals_spine_on_observed_span(spark, gapped2, mode):
     pdf, sdf = gapped2
-    # spine over observed bounds per doc (exactly what gapfill_runs covers)
-    bounds = sdf.groupBy("doc_id").agg(
-        F.min("offset").alias("mn"), F.max("offset").alias("mx")
-    )
-    spine = bounds.select("doc_id", F.explode(F.sequence("mn", "mx")).alias("offset"))
-    spine_fn = gapfill_locf if mode == "locf" else gapfill_linear
-    exp = spine_fn(sdf, spine).toPandas().sort_values(["doc_id", "offset"]).reset_index(drop=True)
+    # the oracle's dense spine sliced to each doc's observed bounds (exactly
+    # what gapfill_runs covers)
+    oracle_fn = gapfill_locf if mode == "locf" else gapfill_linear
+    parts = []
+    for doc_id, g in pdf.groupby("doc_id"):
+        mn, mx = int(g.offset.min()), int(g.offset.max())
+        dense = oracle_fn(g.offset.to_numpy(), g.value.to_numpy(), mx + 1)
+        parts.append(pd.DataFrame(
+            {"doc_id": doc_id, "offset": np.arange(mn, mx + 1), "filled": dense[mn:]}
+        ))
+    exp = pd.concat(parts).sort_values(["doc_id", "offset"]).reset_index(drop=True)
     got = (
         gapfill_runs(sdf, mode=mode)
         .toPandas()

@@ -1,5 +1,5 @@
-"""Storage-layer surface: scheme normalization, S3A config injection,
-jar-gating, and the parquet read/write round trip (SURVEY §2.1)."""
+"""Storage-layer surface: scheme normalization and the parquet read/write
+round trip (SURVEY §2.1)."""
 
 from __future__ import annotations
 
@@ -32,36 +32,6 @@ def test_s3a_rewrite_gated_on_bound_handler(spark):
         conf.unset("fs.s3.impl")
     assert s3a_path("s3://b/x", spark) == "s3a://b/x"
     assert s3a_path("s3://b/x", keep_scheme=True) == "s3://b/x"
-
-
-def test_configure_s3_sets_hadoop_conf(spark):
-    from crossai_ts_spark.sources.io import configure_s3
-
-    configure_s3(
-        spark,
-        endpoint="http://minio.local:9000",
-        access_key="ak",
-        secret_key="sk",
-        path_style=True,
-    )
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    assert conf.get("fs.s3a.endpoint") == "http://minio.local:9000"
-    assert conf.get("fs.s3a.access.key") == "ak"
-    assert conf.get("fs.s3a.secret.key") == "sk"
-    assert conf.get("fs.s3a.path.style.access") == "true"
-    configure_s3(spark, anonymous=True)
-    assert "AnonymousAWSCredentialsProvider" in conf.get(
-        "fs.s3a.aws.credentials.provider"
-    )
-
-
-def test_s3_gating_matches_classpath(spark):
-    """The sandbox ships no hadoop-aws jar: the gate must say so (on a
-    real cluster with the jar, the same probe flips true and read_table
-    serves s3:// prefixes through the normalized s3a path)."""
-    from crossai_ts_spark.sources.io import s3_available
-
-    assert s3_available(spark) is False
 
 
 def test_read_write_table_parquet_roundtrip(spark, tmp_path):

@@ -192,10 +192,8 @@ def test_streaming_hll_native_plan_is_zero_python(spark, tmp_path):
     """r7: streaming_hll_native's whole value is that the ingest path never
     leaves the JVM — the EXECUTED streaming plan must be a pure stateful
     HashAggregate over SQL expressions, with NO Python/Arrow evaluation
-    node anywhere. (The GroupState streaming_hll, by contrast,
-    legitimately carries a FlatMapGroupsInPandasWithState.) Asserted on
-    the live query's explainInternal after one micro-batch, which is the
-    plan that actually ran."""
+    node anywhere. Asserted on the live query's explainInternal after one
+    micro-batch, which is the plan that actually ran."""
     from pyspark.sql import functions as F  # noqa: F811
 
     from crossai_ts_spark.streaming.rollup_stream import streaming_hll_native

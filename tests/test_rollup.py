@@ -10,7 +10,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from crossai_ts_spark.operators.rollup import cascade, cascade_from_tier, rollup_long
+from crossai_ts_spark.operators.rollup import cascade, cascade_from_tier
 from crossai_ts_spark.oracle.rollup import cascade_oracle, rollup_frame
 
 KEY = ["doc_id", "tier", "window_start"]
@@ -54,24 +54,20 @@ def test_cascade_strategy_accepts_only_pandas(spark, tiny_df, tiny_docs):
         cascade(tiny_df, strategy="native")
 
 
+@pytest.mark.parametrize("name,value", [("w", 0), ("w", -4), ("fanout", 0), ("tiers", 0)])
+def test_cascade_rejects_counts_below_one(spark, tiny_df, name, value):
+    """Raised while the plan is built, naming the argument — not as a
+    worker PythonException at the first action."""
+    with pytest.raises(ValueError, match=rf"^{name} must be >= 1, got {value}$"):
+        cascade(tiny_df, **{"w": W, "fanout": FANOUT, "tiers": 2, name: value})
+
+
 def test_cascade_from_tier_identity(spark, tiny_df, tiny_docs):
     """groupBy re-aggregation of tier1 == direct tier2 from raw (partial-agg identity)."""
     t1 = cascade(tiny_df, w=W, tiers=1)
     t2 = cascade_from_tier(t1, from_tier=1, w=W, fanout=FANOUT).toPandas()
     exp = cascade_oracle(tiny_docs, w=W, fanout=FANOUT, tiers=2)
     assert_bitwise(t2, exp[exp.tier == 2])
-
-
-def test_rollup_long_matches_oracle(spark, tiny_df, tiny_docs):
-    """Shuffle path == the numpy oracle the narrow cascade matches (partitioning invariance)."""
-    from pyspark.sql import functions as F
-
-    long_df = tiny_df.select(
-        "doc_id", "source", F.posexplode("tokens").alias("offset", "value")
-    ).select("doc_id", "source", F.col("offset").cast("long").alias("offset"), "value")
-    got = rollup_long(long_df, w=W).toPandas()
-    exp = rollup_frame(tiny_docs, W, tier=1)
-    assert_bitwise(got, exp)
 
 
 def test_partition_count_invariance(spark, tiny_df, tiny_docs):

@@ -1,20 +1,18 @@
-"""Welch/bandwidth/band-power/peaks/savgol kernels (functions/spectral2.py).
+"""Peak picking (functions/spectral2.py) and the Welch/bandwidth/band-power
+references (oracle/spectral.py).
 
 Scipy-free verification via analytic properties: Parseval for Welch,
-bin-exact dominant frequency, polynomial-exact Savitzky-Golay, plateau
-semantics for find_peaks, monotone band power concentration."""
+bin-exact dominant frequency, plateau semantics for find_peaks, monotone
+band power concentration."""
 
 from __future__ import annotations
 
 import numpy as np
-import pytest
 
-from crossai_ts_spark.functions.spectral2 import (
+from crossai_ts_spark.functions.spectral2 import find_peaks_simple
+from crossai_ts_spark.oracle.spectral import (
     band_relative_power,
     dominant_frequency,
-    envelope_energy_peak_detection,
-    find_peaks_simple,
-    savgol_delta,
     simpson_dx,
     spectral_bandwidth,
     welch_psd,
@@ -73,40 +71,6 @@ def test_find_peaks_strict_and_plateau():
     assert list(find_peaks_simple(y)) == [1, 4, 7, 9]
     assert find_peaks_simple(np.array([1.0, 1.0, 1.0])).size == 0
     assert find_peaks_simple(np.array([0.0, 5.0, 0.0])).tolist() == [1]
-
-
-@pytest.mark.parametrize("slope", [3.0, -1.5])
-def test_savgol_linear_exact(slope):
-    x = slope * np.arange(60.0) + 7
-    d = savgol_delta(x, width=9, order=1)
-    np.testing.assert_allclose(d, slope, rtol=1e-9)
-
-
-def test_savgol_second_derivative_exact():
-    x = 2.5 * np.arange(60.0) ** 2 + 3 * np.arange(60.0) - 1
-    d2 = savgol_delta(x, width=11, order=2)
-    np.testing.assert_allclose(d2, 5.0, rtol=1e-7)
-
-
-def test_savgol_interp_edges_and_validation():
-    with pytest.raises(ValueError):
-        savgol_delta(np.arange(5.0), width=9)
-    with pytest.raises(ValueError):
-        savgol_delta(np.arange(20.0), width=8)
-    # edges of a cubic under polyorder-1 fit are the first-window line fit:
-    # just check finiteness + shape
-    d = savgol_delta(np.arange(20.0) ** 3, width=9, order=1)
-    assert d.shape == (20,) and np.all(np.isfinite(d))
-
-
-def test_eepd_counts_bands():
-    fs = 4000.0
-    t = np.arange(4096) / fs
-    x = np.sin(2 * np.pi * 120 * t) * (1 + 0.8 * np.sin(2 * np.pi * 2 * t))
-    out = envelope_energy_peak_detection(x, fs, start=50, stop=250, freq_step=50)
-    assert out.shape == (4,)
-    assert (out >= 0).all()
-    assert out[1] > 0  # the 100-150 band contains the carrier's envelope
 
 
 def test_island_peak_count_matches_find_peaks():

@@ -10,12 +10,8 @@ import math
 import numpy as np
 import pytest
 
-from crossai_ts_spark.functions.spline import (
-    interpolate_probabilities,
-    spline_chk_scalar,
-    spline_eval,
-    spline_slopes,
-)
+from crossai_ts_spark.functions.spline import spline_eval, spline_slopes
+from crossai_ts_spark.oracle.signal import spline_chk_scalar
 
 
 @pytest.mark.parametrize("trial", range(10))
@@ -60,18 +56,6 @@ def test_interpolation_passes_through_knots():
     y = rng.normal(size=9)
     m = spline_slopes(x, y)
     np.testing.assert_allclose(spline_eval(x, y, m, x), y, rtol=1e-12, atol=1e-12)
-
-
-def test_interpolate_probabilities_shape_and_knot_values():
-    rng = np.random.default_rng(1)
-    probs = rng.uniform(size=(10, 3))
-    out = interpolate_probabilities(probs, sr=100, ws=0.5, overlap_percentage=0.5)
-    ws_samples = 50
-    step = ws_samples - 25
-    assert out.shape == (10 * step, 3)
-    mids = (np.arange(10) * step + (np.arange(10) * step + step)) // 2
-    for c in range(3):
-        np.testing.assert_allclose(out[mids, c], probs[:, c], rtol=1e-12)
 
 
 def test_scalar_chk_matches_vectorized():

@@ -8,18 +8,16 @@ from pyspark.sql import functions as F
 
 
 def test_streaming_tier1_equals_batch(spark, tiny_df, tiny_docs, tmp_path):
-    """Streaming rollup == the batch oracle on the same files (stateless op)."""
+    """The batch cascade run on a stream == the batch oracle on the same
+    files (stateless op)."""
+    from crossai_ts_spark.operators.rollup import cascade
     from crossai_ts_spark.oracle.rollup import rollup_frame
-    from crossai_ts_spark.streaming.rollup_stream import (
-        read_sequence_stream,
-        run_to_memory,
-        streaming_tier1,
-    )
+    from crossai_ts_spark.streaming.rollup_stream import read_sequence_stream, run_to_memory
 
     path = str(tmp_path / "seq_stream")
     tiny_df.write.mode("overwrite").parquet(path)
     stream = read_sequence_stream(spark, path, max_files=2)
-    run_to_memory(streaming_tier1(stream, w=64), "t1_stream")
+    run_to_memory(cascade(stream, w=64, tiers=1), "t1_stream")
     got = spark.sql("SELECT * FROM t1_stream").toPandas()
     exp = rollup_frame(tiny_docs, 64)
     key = ["doc_id", "window_start"]
@@ -101,6 +99,35 @@ def test_incremental_tier1_stateful_matches_batch(spark, tmp_path):
         .reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(got, want[got.columns], check_dtype=False)
+
+
+def test_incremental_tier1_null_token_element_is_a_named_error(spark, tmp_path):
+    """A null INSIDE a chunk's token array fails the query with the error
+    that names the doc, as the batch cascade does — never INT64_MIN
+    window stats."""
+    import pytest
+
+    from crossai_ts_spark.streaming.rollup_stream import incremental_tier1
+
+    schema = "doc_id string, chunk_idx long, tokens array<int>, is_last boolean, source string"
+    in_dir = tmp_path / "holed"
+    spark.createDataFrame([("holed", 0, [1, None, 3], True, "s")], schema).coalesce(1) \
+        .write.parquet(str(in_dir / "t000"))
+    stream = spark.readStream.schema(schema).parquet(str(in_dir / "t*"))
+    q = (
+        incremental_tier1(stream, w=2)
+        .writeStream.outputMode("append")
+        .format("memory")
+        .queryName("inc_tier1_holed")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    try:
+        with pytest.raises(Exception, match=r"doc_id 'holed': tokens array holds a null element"):
+            q.processAllAvailable()
+    finally:
+        q.stop()
+    assert spark.sql("SELECT count(*) c FROM inc_tier1_holed").first()["c"] == 0
 
 
 def test_incremental_tier1_restart_from_checkpoint(spark, tmp_path):
@@ -370,110 +397,6 @@ def test_streaming_packing_multi_chunk_trigger(spark, tmp_path):
     )
     assert len(got) == 200
     pd.testing.assert_frame_equal(got[batch.columns], batch, check_dtype=False)
-
-
-def test_streaming_hll_matches_batch(spark, tmp_path):
-    """GroupState HLL: bounded per-window register state across triggers;
-    the LAST emission per window (max n_events) equals the batch
-    hll_estimate EXACTLY — same hash, same fold order, same doubles."""
-    import pandas as pd
-
-    from crossai_ts_spark.operators.hll import hll_estimate, hll_sketch
-    from crossai_ts_spark.streaming.rollup_stream import run_until_rows, streaming_hll
-
-    rows = [(i, f"2024-01-01 0{i % 4}:1{i % 5}:2{i % 3}", i * 13 % 97) for i in range(600)]
-    schema = "event_id long, ts_s string, user_id long"
-    in_dir = tmp_path / "hll_stream"
-    # null-bearing rows ride ONLY the stream (ADVICE r7): a null
-    # timestamp (what try_to_timestamp yields for malformed input) and a
-    # null key must be dropped at ingest — not kill the query with a
-    # NaN->int64 cast — and must not change any estimate
-    bad = [(1000, None, 5), (1001, "2024-01-01 00:10:20", None)]
-    spark.createDataFrame(rows[:300], schema).coalesce(1).write.parquet(str(in_dir / "b0"))
-    spark.createDataFrame(rows[300:] + bad, schema).coalesce(1).write.parquet(str(in_dir / "b1"))
-
-    raw = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(
-        str(in_dir) + "/*"
-    )
-    ev = raw.select("event_id", F.to_timestamp("ts_s").alias("ts"), "user_id")
-    # 2 file-triggers x 4 windows each = 8 emissions; the ProcessingTime
-    # timeout keeps empty timer batches coming, so processAllAvailable()
-    # would never return — poll the sink instead
-    run_until_rows(streaming_hll(ev, window_sec=3600), "hll_stream_out", 8)
-    emitted = spark.sql("SELECT * FROM hll_stream_out").toPandas()
-    final = (
-        emitted.sort_values("n_events").groupby("window_start").last().reset_index()
-    )
-
-    batch_ev = spark.createDataFrame(rows, schema).select(
-        "event_id", F.to_timestamp("ts_s").alias("ts"), "user_id"
-    )
-    want = (
-        hll_estimate(hll_sketch(batch_ev, window_sec=3600))
-        .toPandas().sort_values("window_start").reset_index(drop=True)
-    )
-    got = final.sort_values("window_start").reset_index(drop=True)
-    assert len(got) == len(want) == 4
-    pd.testing.assert_frame_equal(
-        got[["window_start", "v_empty", "est_distinct"]],
-        want[["window_start", "v_empty", "est_distinct"]],
-        check_dtype=False,
-    )
-
-
-def test_streaming_hll_state_ttl_expires(spark, tmp_path):
-    """ADVICE r5-D: a window's GroupState must expire state_ttl_sec of
-    processing time after its last event, so an unbounded stream holds
-    only TTL-recent windows. Observable contract: events arriving AFTER
-    expiry restart the sketch from empty — the post-gap emission equals
-    the batch estimate of the post-gap events ALONE, not the union."""
-    import time
-
-    import pandas as pd
-
-    from crossai_ts_spark.operators.hll import hll_estimate, hll_sketch
-    from crossai_ts_spark.streaming.rollup_stream import run_until_rows, streaming_hll
-
-    schema = "event_id long, ts_s string, user_id long"
-    # one 3600s window; disjoint user sets before/after the TTL gap
-    rows_a = [(i, "2024-01-01 05:00:01", 100 + i) for i in range(40)]
-    rows_b = [(1000 + i, "2024-01-01 05:59:59", 900 + i) for i in range(25)]
-    in_dir = tmp_path / "hll_ttl"
-    spark.createDataFrame(rows_a, schema).coalesce(1).write.parquet(str(in_dir / "b0"))
-
-    raw = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(
-        str(in_dir) + "/*"
-    )
-    ev = raw.select("event_id", F.to_timestamp("ts_s").alias("ts"), "user_id")
-    out = streaming_hll(ev, window_sec=3600, state_ttl_sec=2)
-    q = out.writeStream.outputMode("append").format("memory").queryName("hll_ttl_out").start()
-    try:
-        deadline = time.monotonic() + 120
-        while spark.sql("SELECT count(*) c FROM hll_ttl_out").first()["c"] < 1:
-            assert time.monotonic() < deadline, "first emission never arrived"
-            time.sleep(0.25)
-        # let the 2s processing-time timer fire (empty timer batches run
-        # continuously); generous margin for a loaded box
-        time.sleep(8)
-        spark.createDataFrame(rows_b, schema).coalesce(1).write.parquet(str(in_dir / "b1"))
-        deadline = time.monotonic() + 120
-        while spark.sql("SELECT count(*) c FROM hll_ttl_out").first()["c"] < 2:
-            assert time.monotonic() < deadline, "post-expiry emission never arrived"
-            time.sleep(0.25)
-    finally:
-        q.stop()
-    emitted = spark.sql("SELECT * FROM hll_ttl_out").toPandas()
-    # n_events proves the restart: the post-gap emission counted ONLY
-    # rows_b (25), not a 40+25 continuation
-    assert len(emitted) == 2, emitted
-    assert set(emitted["n_events"]) == {40, 25}, emitted
-    only_b = spark.createDataFrame(rows_b, schema).select(
-        "event_id", F.to_timestamp("ts_s").alias("ts"), "user_id"
-    )
-    want_b = hll_estimate(hll_sketch(only_b, window_sec=3600)).toPandas().iloc[0]
-    got_b = emitted[emitted["n_events"] == 25].iloc[0]
-    assert got_b["v_empty"] == want_b["v_empty"]
-    assert got_b["est_distinct"] == want_b["est_distinct"]
 
 
 def test_incremental_tier1_multi_arrow_chunk_trigger(spark, tmp_path):
