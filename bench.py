@@ -102,9 +102,8 @@ def bench_rollup(spark, n_docs: int, n_trials: int = 3) -> dict:
 
     # per-tier walls (BASELINE.json metric contract: throughput "per
     # retention tier"): the fused cascade is ONE plan, so per-tier timing
-    # uses the incremental path each tier takes in the checkpointed job —
-    # tier 1 from the corpus, tier k+1 re-aggregated from the persisted
-    # tier k. tokens_per_sec keeps the headline definition (corpus tokens
+    # rolls up tier 1 from the corpus and re-aggregates tier k+1 from the
+    # persisted tier k (cascade_from_tier). tokens_per_sec keeps the headline definition (corpus tokens
     # over that tier's wall). min-of-2 per tier.
     from crossai_ts_spark.operators.rollup import cascade_from_tier
 

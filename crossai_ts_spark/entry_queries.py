@@ -423,7 +423,7 @@ def gapfill_locf(spark, sf_dir):
         .agg(F.max("cents").alias("value"))
         .select(F.col("user_id").cast("string").alias("doc_id"), F.col("minute").alias("offset"), "value")
     )
-    filled = gapfill_runs(obs, mode="locf")
+    filled = gapfill_runs(obs)
     return filled.groupBy(F.col("doc_id").cast("long").alias("user_id")).agg(
         F.count("*").alias("n_points"),
         F.sum(F.when(F.col("filled").isNull(), 1).otherwise(0)).cast("long").alias("n_null"),
@@ -489,10 +489,9 @@ def gapfill_linear(spark, sf_dir):
         .select(F.col("user_id").cast("string").alias("doc_id"), F.col("minute").alias("offset"), "value")
     )
     # r8: the checksum aggregate runs through the vectorized run-expansion
-    # kernel — bitwise-identical to gapfill_runs + groupBy (parity-tested;
-    # same JVM anchor/slope expressions, same IEEE per-point ops in numpy)
-    # without generating the 63M-point dense grid through explode +
-    # per-point hash-aggregate probes
+    # kernel — bitwise-equal to floor-checksums of the numpy oracle
+    # (tested) — without generating the 63M-point dense grid through
+    # explode + per-point hash-aggregate probes
     out = gapfill_linear_checksum(obs, quantize=1024.0)
     return out.select(
         F.col("doc_id").cast("long").alias("user_id"), "n_points", "chk"
@@ -2377,10 +2376,7 @@ def butterworth_sosfilt(spark, sf_dir):
     from .functions.iir import butterworth_docs
 
     seqs = tokenize_documents(load(spark, sf_dir, "documents"))
-    out = butterworth_docs(
-        seqs, fs=32.0, filter_type="lowpass", cutoff_freq=4.0, order=4,
-        method="sosfilt", quantize=1024,
-    )
+    out = butterworth_docs(seqs, fs=32.0, filter_type="lowpass", cutoff_freq=4.0, order=4)
     return out.select("doc_id", F.col("filt_chk").cast("long").alias("filt_chk"))
 
 
@@ -3535,7 +3531,7 @@ def lm_perplexity(spark, sf_dir):
     double folds are not cross-engine exact)."""
     from .operators.textstats import lm_bigram_nll
 
-    return lm_bigram_nll(load(spark, sf_dir, "documents"), quantize=20)
+    return lm_bigram_nll(load(spark, sf_dir, "documents"))
 
 
 @q(
@@ -4923,7 +4919,7 @@ SQL_HLL = """
 WITH e AS (
   SELECT (floor(epoch(ts))::BIGINT // 3600) * 3600 AS window_start,
          ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT AS h
-  FROM events
+  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
 ), r AS (
   SELECT window_start, h % 64 AS reg, h // 64 AS p FROM e
 ), rk AS (
@@ -5109,7 +5105,7 @@ SQL_KMV = """
 WITH e AS (
   SELECT (floor(epoch(ts))::BIGINT // 3600) * 3600 AS window_start,
          ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT AS h
-  FROM events
+  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
 ), d AS (
   SELECT DISTINCT window_start, h FROM e
 ), s AS (

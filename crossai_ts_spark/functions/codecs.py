@@ -26,10 +26,12 @@ Bit-pattern fidelity: NaN payloads, ±0.0, infs and denormals round-trip
 bit-exactly (everything goes through uint64 views, never through float
 arithmetic).
 
-The Spark surface is ``compress_tiers`` / ``decompress_tiers``:
-grouped ``applyInPandas`` per (doc_id, tier), input sorted by window_start
-INSIDE the group (secondary sort in pandas — SURVEY §4.3.3) so encoded
-blobs are deterministic under any partitioning.
+The Spark surface is ``compress_tiers`` / ``decompress_tiers``: one
+``mapInPandas`` pass over rows sorted by (doc_id, tier, window_start)
+inside each doc_id partition (SURVEY §4.3.3), so encoded blobs are
+deterministic under any partitioning. The encoders are the vectorized
+ones in functions/codecs_fast.py; the golden per-value encoders they
+must match bit for bit are in oracle/codecs.py.
 """
 
 from __future__ import annotations
@@ -38,35 +40,9 @@ import numpy as np
 import pandas as pd
 
 from ..workers import worker_kernel
+from .codecs_fast import dod_decode_fast, dod_encode_fast, gorilla_encode_fast
 
 # ------------------------------------------------------------------ bits
-
-
-class BitWriter:
-    """Append-only bit stream (MSB-first within each byte)."""
-
-    __slots__ = ("buf", "acc", "nbits")
-
-    def __init__(self) -> None:
-        self.buf = bytearray()
-        self.acc = 0  # bit accumulator (int)
-        self.nbits = 0  # bits currently in acc
-
-    def write(self, value: int, nbits: int) -> None:
-        if nbits == 0:
-            return
-        self.acc = (self.acc << nbits) | (value & ((1 << nbits) - 1))
-        self.nbits += nbits
-        while self.nbits >= 8:
-            self.nbits -= 8
-            self.buf.append((self.acc >> self.nbits) & 0xFF)
-        self.acc &= (1 << self.nbits) - 1
-
-    def getvalue(self) -> bytes:
-        out = bytearray(self.buf)
-        if self.nbits:
-            out.append((self.acc << (8 - self.nbits)) & 0xFF)
-        return bytes(out)
 
 
 class BitReader:
@@ -120,55 +96,11 @@ def gorilla_decode(blob: bytes) -> np.ndarray:
     return out.view(np.float64)
 
 
-# -------------------------------------------------------- delta-of-delta
-
-
-def dod_encode(offsets: np.ndarray) -> bytes:
-    """Encode int64 array -> bytes (header: count, first, first delta)."""
-    offsets = np.ascontiguousarray(offsets, dtype=np.int64)
-    n = offsets.size
-    w = BitWriter()
-    w.write(n, 64)
-    if n == 0:
-        return w.getvalue()
-    w.write(int(offsets[0]) & ((1 << 64) - 1), 64)
-    if n == 1:
-        return w.getvalue()
-    # deltas in Python ints (mod-2^64 consistent with the decoder) so
-    # adjacent values near ±2^62 can't overflow an int64 diff
-    py = [int(v) for v in offsets]
-    deltas = [b - a for a, b in zip(py, py[1:])]
-    w.write(deltas[0] & ((1 << 64) - 1), 64)
-    dods = [b - a for a, b in zip(deltas, deltas[1:])]
-    for d in dods:
-        if d == 0:
-            w.write(0, 1)
-        elif -63 <= d <= 64:
-            w.write(0b10, 2)
-            w.write(d + 63, 7)
-        elif -255 <= d <= 256:
-            w.write(0b110, 3)
-            w.write(d + 255, 9)
-        elif -2047 <= d <= 2048:
-            w.write(0b1110, 4)
-            w.write(d + 2047, 12)
-        else:
-            w.write(0b1111, 4)
-            w.write(d & ((1 << 64) - 1), 64)
-    return w.getvalue()
-
-
 # --------------------------------------------------------- spark surface
 
 
-# Vectorized fast paths, bit-identical to the golden per-value encoders
-# (``dod_encode`` above, ``gorilla_encode`` in oracle/codecs.py; verified by
-# tests/test_codecs_fast.py).
-from .codecs_fast import dod_decode_fast, dod_encode_fast, gorilla_encode_fast  # noqa: E402
-
-
-def compress_tiers(tier_df, value_col: str = "t_mean", partitions: int | None = None):
-    """tier rows -> compressed segments, one per (doc_id, tier).
+def compress_tiers(tier_df):
+    """tier rows -> compressed segments of ``t_mean``, one per (doc_id, tier).
 
     Batched path: repartition on doc_id (one shuffle), sortWithinPartitions
     (doc_id, tier, window_start) for deterministic blobs, then a single
@@ -182,21 +114,18 @@ def compress_tiers(tier_df, value_col: str = "t_mean", partitions: int | None = 
     """
     from ..schema import COMPRESSED_TIER_SCHEMA
 
-    spark = tier_df.sparkSession
-    if partitions is None:
-        # default to spark.sql.shuffle.partitions (the cluster-tuned knob),
-        # NOT a 4x multiple of it: every Python task pays a fixed setup
-        # cost. An empty mapInPandas task at local[4] (4-core VM) measured
-        # 0.32-0.39 s before @worker_kernel stopped the per-task zip
-        # directory re-reads, and 0.13-0.16 s after (32 tasks: 2.8-3.1 s
-        # -> 0.9-1.1 s). The old 4x count measured 1.74 s vs 0.75 s at 1x
-        # on the sf0.1 tier table at local[32]. An UNPINNED repartition("doc_id")
-        # is wrong in the other direction: AQE's byte-based coalescing sees
-        # a few MB and folds the stage to ~1 partition, serializing the
-        # encode (measured 4.2 s). Zipf doc-length skew is bounded (a doc
-        # caps at 64 Ki tokens -> <=2048 tier-1 windows), so 1x
-        # cluster-width tasks don't straggle; callers can still pin a count.
-        partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    # spark.sql.shuffle.partitions tasks (the cluster-tuned knob), NOT a
+    # 4x multiple of it: every Python task pays a fixed setup cost. An
+    # empty mapInPandas task at local[4] (4-core VM) measured 0.32-0.39 s
+    # before @worker_kernel stopped the per-task zip directory re-reads,
+    # and 0.13-0.16 s after (32 tasks: 2.8-3.1 s -> 0.9-1.1 s). The old 4x
+    # count measured 1.74 s vs 0.75 s at 1x on the sf0.1 tier table at
+    # local[32]. An UNPINNED repartition("doc_id") is wrong in the other
+    # direction: AQE's byte-based coalescing sees a few MB and folds the
+    # stage to ~1 partition, serializing the encode (measured 4.2 s). Zipf
+    # doc-length skew is bounded (a doc caps at 64 Ki tokens -> <=2048
+    # tier-1 windows), so 1x cluster-width tasks don't straggle.
+    partitions = int(tier_df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
 
     @worker_kernel
     def kernel(batches):
@@ -210,7 +139,7 @@ def compress_tiers(tier_df, value_col: str = "t_mean", partitions: int | None = 
             brk = np.nonzero(keys[1:] != keys[:-1])[0] + 1
             bounds = np.concatenate(([0], brk, [len(pdf)]))
             offs_all = pdf["window_start"].to_numpy(dtype=np.int64)
-            vals_all = pdf[value_col].to_numpy(dtype=np.float64)
+            vals_all = pdf["t_mean"].to_numpy(dtype=np.float64)
             starts, ends = bounds[:-1], bounds[1:]
             # columnar assembly: per-group work is just the two encoders
             # (no per-group pandas scalar lookups / row tuples)

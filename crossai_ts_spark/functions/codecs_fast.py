@@ -1,5 +1,5 @@
 """Vectorized Gorilla / delta-of-delta codecs — bit-identical to the
-reference (golden) encoders in functions/codecs.py, but numpy-vectorized:
+reference (golden) encoders in oracle/codecs.py, but numpy-vectorized:
 the golden path writes ~10 Python-level ops per VALUE; this path does a
 constant number of numpy passes per ARRAY.
 
@@ -58,7 +58,7 @@ def ctz64(x: np.ndarray) -> np.ndarray:
 def pack_bits(vals: np.ndarray, nbits: np.ndarray) -> bytes:
     """Pack fields (vals[i] in nbits[i] bits, MSB-first) into bytes.
 
-    Exactly matches BitWriter: values masked to width, stream padded with
+    Exactly matches oracle/codecs.BitWriter: values masked to width, stream padded with
     zeros to a byte boundary. nbits in [0, 64]; zero-width fields allowed.
     """
     vals = vals.astype(np.uint64, copy=False)
@@ -108,7 +108,7 @@ def pack_bits(vals: np.ndarray, nbits: np.ndarray) -> bytes:
 
 
 def gorilla_encode_fast(values: np.ndarray) -> bytes:
-    """Bit-identical to codecs.gorilla_encode, vectorized."""
+    """Bit-identical to oracle/codecs.gorilla_encode, vectorized."""
     values = np.ascontiguousarray(values, dtype=np.float64)
     bits = values.view(np.uint64)
     n = values.size
@@ -197,48 +197,45 @@ def gorilla_encode_fast(values: np.ndarray) -> bytes:
 
 
 def dod_encode_fast(offsets: np.ndarray) -> bytes:
-    """Bit-identical to codecs.dod_encode, vectorized. Falls back to the
-    golden encoder if int64 delta/dod arithmetic could wrap (adjacent
-    values further apart than 2^62 — never in offset streams)."""
-    from .codecs import dod_encode as dod_encode_golden  # lazy: avoids cycle
+    """Bit-identical to the golden oracle/codecs.dod_encode, vectorized.
 
-    offsets = np.ascontiguousarray(offsets, dtype=np.int64)
-    n = offsets.size
-    if n <= 1 or n == 2:
-        return dod_encode_golden(offsets)
-    lim = np.int64(1) << 62
-    if np.abs(offsets).max() > lim:
-        return dod_encode_golden(offsets)  # wrap risk: golden handles py-ints
-    d = offsets[1:] - offsets[:-1]
-    if np.abs(d).max() > lim:
-        return dod_encode_golden(offsets)
+    The header (count, first value, first delta) is three big-endian u64
+    fields, so a blob of n <= 2 values is just its header. Deltas and
+    delta-of-deltas are taken mod 2^64 in int64, which is what the golden
+    encoder writes for a 64-bit field. A delta-of-delta whose true value
+    exceeds 2^62 in magnitude (its float64 estimate x[i+2] - 2*x[i+1] +
+    x[i] is off by < 2^14) may have wrapped into a small int64, so it goes
+    to the 64-bit bucket, as in the golden encoder."""
+    x = np.ascontiguousarray(offsets, dtype=np.int64)
+    n = x.size
+    d = x[1:] - x[:-1]  # int64 array arithmetic wraps mod 2^64
+    head = np.concatenate((np.array([n], dtype=np.uint64), x[:1].view(np.uint64), d[:1].view(np.uint64)))
+    if n <= 2:
+        return head.astype(">u8").tobytes()
     dd = d[1:] - d[:-1]
+    xf = x.astype(np.float64)
+    big = np.abs(xf[2:] - 2.0 * xf[1:-1] + xf[:-2]) > float(1 << 62)
     m = dd.size
     fv = np.zeros((m, 2), dtype=np.uint64)
     fb = np.zeros((m, 2), dtype=np.int64)
-    z = dd == 0
+    z = ~big & (dd == 0)
     fb[z, 0] = 1
-    b1 = (~z) & (dd >= -63) & (dd <= 64)
+    b1 = ~big & ~z & (dd >= -63) & (dd <= 64)
     fv[b1, 0] = (np.uint64(0b10) << np.uint64(7)) | (dd[b1] + 63).astype(np.uint64)
     fb[b1, 0] = 9
-    b2 = (~z) & ~b1 & (dd >= -255) & (dd <= 256)
+    b2 = ~big & ~z & ~b1 & (dd >= -255) & (dd <= 256)
     fv[b2, 0] = (np.uint64(0b110) << np.uint64(9)) | (dd[b2] + 255).astype(np.uint64)
     fb[b2, 0] = 12
-    b3 = (~z) & ~b1 & ~b2 & (dd >= -2047) & (dd <= 2048)
+    b3 = ~big & ~z & ~b1 & ~b2 & (dd >= -2047) & (dd <= 2048)
     fv[b3, 0] = (np.uint64(0b1110) << np.uint64(12)) | (dd[b3] + 2047).astype(np.uint64)
     fb[b3, 0] = 16
-    b4 = (~z) & ~b1 & ~b2 & ~b3
+    b4 = ~z & ~b1 & ~b2 & ~b3
     fv[b4, 0] = np.uint64(0b1111)
     fb[b4, 0] = 4
     fv[b4, 1] = dd[b4].view(np.uint64)  # two's complement == mod 2^64
     fb[b4, 1] = 64
-    head_v = np.empty(3, dtype=np.uint64)
-    head_v[0] = np.uint64(n)
-    head_v[1] = np.uint64(int(offsets[0]) & 0xFFFFFFFFFFFFFFFF)
-    head_v[2] = np.uint64(int(d[0]) & 0xFFFFFFFFFFFFFFFF)
-    head_b = np.array([64, 64, 64], dtype=np.int64)
-    all_v = np.concatenate([head_v, fv.ravel()])
-    all_b = np.concatenate([head_b, fb.ravel()])
+    all_v = np.concatenate([head, fv.ravel()])
+    all_b = np.concatenate([np.full(3, 64, dtype=np.int64), fb.ravel()])
     return pack_bits(all_v, all_b)
 
 
@@ -248,7 +245,7 @@ _DOD_LEN_LUT = np.array([1, 1, 1, 1, 1, 1, 1, 1, 9, 9, 9, 9, 12, 12, 16, 68], dt
 
 
 def dod_decode_fast(blob: bytes) -> np.ndarray:
-    """Vectorized dod decoder, same format as codecs.dod_decode.
+    """Vectorized dod decoder, same format as oracle/codecs.dod_decode.
 
     Field lengths are LOCAL to each field's leading control bits, so field
     starts form a pointer chain  next[p] = p + len(peek4(p)); the chain is

@@ -17,9 +17,12 @@ Application:
   sosfilt      direct-form II transposed cascade (zero or given state)
   sosfilt_zi   per-section steady-state of the step response (scipy
                semantics: states scaled by the cascaded DC gains)
-  sosfiltfilt  odd-reflection padding (padlen = 3*(2*n_sections+1)),
+  sosfiltfilt_batch
+               odd-reflection padding (padlen = 3*(2*n_sections+1)),
                forward pass seeded with zi*x[0], backward pass with
-               zi*y[-1] — zero-phase, squared magnitude response
+               zi*y[-1] — zero-phase, squared magnitude response — over a
+               batch of equal-length rows (the per-row reference
+               ``sosfiltfilt`` is in oracle/signal.py)
 
 Verification strategy (tests/test_iir.py against oracle/signal.py's
 ``sos_freq_response`` and ``butter_analog_mag``): the bilinear transform
@@ -267,31 +270,6 @@ def sosfilt_zi(sos: np.ndarray) -> np.ndarray:
     return zi
 
 
-def sosfiltfilt(sos: np.ndarray, x: np.ndarray, padlen: int | None = None) -> np.ndarray:
-    """Zero-phase forward-backward filtering (scipy.sosfiltfilt semantics:
-    odd-reflection padding, zi scaled by the edge samples)."""
-    x = np.asarray(x, dtype=np.float64)
-    n_sec = sos.shape[0]
-    if padlen is None:
-        padlen = 3 * (2 * n_sec + 1)
-    if x.size <= padlen:
-        padlen = max(0, x.size - 1)
-    if padlen > 0:
-        left = 2.0 * x[0] - x[padlen:0:-1]
-        right = 2.0 * x[-1] - x[-2 : -padlen - 2 : -1]
-        ext = np.concatenate([left, x, right])
-    else:
-        ext = x
-    zi = sosfilt_zi(sos)
-    y = sosfilt(sos, ext, zi=zi * ext[0])
-    y = y[::-1]
-    y = sosfilt(sos, y, zi=zi * y[0])
-    y = y[::-1]
-    if padlen > 0:
-        y = y[padlen:-padlen]
-    return y
-
-
 # --------------------------------------------------------- spark surface
 
 
@@ -301,40 +279,22 @@ def butterworth_docs(
     filter_type: str = "lowpass",
     cutoff_freq=4.0,
     order: int = 5,
-    method: str = "sosfiltfilt",
-    quantize: int | None = None,
 ) -> DataFrame:
-    """Filter each doc's token signal; emit the filtered array (or a
-    floor(y*Q) checksum when quantize is set). Arrow-batched; numpy/python
-    per sequence — the cluster parallelizes across docs."""
+    """Forward-filter (sosfilt, zero initial state) each doc's token signal
+    and emit (doc_id, filt_chk = sum(floor(y * 1024))). Arrow-batched;
+    numpy/python per sequence — the cluster parallelizes across docs."""
     sos = butter_sos(order, cutoff_freq, fs, btype=filter_type)
 
     @worker_kernel
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            ids, payload = [], []
-            for doc_id, toks in zip(pdf["doc_id"], pdf["tokens"]):
-                x = np.asarray(toks, dtype=np.float64)
-                if method == "sosfiltfilt":
-                    y = sosfiltfilt(sos, x)
-                else:
-                    y = sosfilt(sos, x)
-                ids.append(doc_id)
-                if quantize is not None:
-                    payload.append(np.floor(y * float(quantize)).sum())
-                else:
-                    payload.append(y)
-            if quantize is not None:
-                yield pd.DataFrame({"doc_id": ids, "filt_chk": np.asarray(payload)})
-            else:
-                yield pd.DataFrame({"doc_id": ids, "filtered": payload})
+            chk = [
+                np.floor(sosfilt(sos, np.asarray(toks, dtype=np.float64)) * 1024.0).sum()
+                for toks in pdf["tokens"]
+            ]
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "filt_chk": np.asarray(chk)})
 
-    schema = (
-        "doc_id string, filt_chk double"
-        if quantize is not None
-        else "doc_id string, filtered array<double>"
-    )
-    return df.select("doc_id", "tokens").mapInPandas(kernel, schema=schema)
+    return df.select("doc_id", "tokens").mapInPandas(kernel, schema="doc_id string, filt_chk double")
 
 
 # ----------------------------------------------------------- batched form

@@ -20,41 +20,30 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _cell(key_col, i: int, w: int, hash: str = "md5"):
-    """Row-i cell index for a key.
-
-    ``md5`` (default): md5_60("i:" || key) mod w — engine-portable (the
-    DuckDB oracle reproduces every cell bit-for-bit), at the cost of a
-    hex-string detour per position (~4 md5+conv per item at d=4).
-    ``xxhash64``: the JVM-native seeded hash — no hex detour, measured
-    ~5x the md5 throughput at 255 M items (BENCH/BASELINE.md round-6);
-    same estimate guarantees, but cells are Spark-reproducible only, so
-    production pipelines use it and the oracle query keeps md5."""
-    if hash == "md5":
-        h = F.conv(
-            F.substring(
-                F.md5(F.concat_ws(":", F.lit(i), key_col.cast("string")).cast("binary")), 1, 15
-            ),
-            16,
-            10,
-        ).cast("long")
-        return h % w
-    if hash == "xxhash64":
-        return F.pmod(F.xxhash64(F.lit(i), key_col.cast("string")), F.lit(w))
-    raise ValueError(f"unknown hash {hash!r}")
+def _cell(key_col, i: int, w: int):
+    """Row-i cell index for a key: md5_60("i:" || key) mod w —
+    engine-portable (the DuckDB oracle reproduces every cell bit-for-bit),
+    at the cost of a hex-string detour per position (~4 md5+conv per item
+    at d=4)."""
+    h = F.conv(
+        F.substring(
+            F.md5(F.concat_ws(":", F.lit(i), key_col.cast("string")).cast("binary")), 1, 15
+        ),
+        16,
+        10,
+    ).cast("long")
+    return h % w
 
 
-def cms_build(items: DataFrame, key: str, d: int = 4, w: int = 8192,
-              hash: str = "md5") -> DataFrame:
+def cms_build(items: DataFrame, key: str, d: int = 4, w: int = 8192) -> DataFrame:
     """Sketch an item stream: one (row, cell, cnt) table of <= d*w rows.
 
     One explode (d rows per item) into a map-side-combined groupBy —
     partial aggregation collapses each partition to <= d*w cells before
     the (tiny) shuffle, which is exactly how the sketch merges: cells
-    from anywhere add elementwise. ``hash`` picks the position family
-    (see :func:`_cell`); build and lookup must agree."""
+    from anywhere add elementwise."""
     pos = F.array(*[
-        F.struct(F.lit(i).alias("row"), _cell(F.col(key), i, w, hash).alias("cell"))
+        F.struct(F.lit(i).alias("row"), _cell(F.col(key), i, w).alias("cell"))
         for i in range(d)
     ])
     return (
@@ -66,17 +55,15 @@ def cms_build(items: DataFrame, key: str, d: int = 4, w: int = 8192,
 
 
 def cms_lookup(
-    cms: DataFrame, queries: DataFrame, key: str, d: int = 4, w: int = 8192,
-    hash: str = "md5"
+    cms: DataFrame, queries: DataFrame, key: str, d: int = 4, w: int = 8192
 ) -> DataFrame:
     """Estimate each query key's count: min over the d rows' cells.
 
     The sketch side is <= d*w rows and is BROADCAST — the query side
     never shuffles; absent cells count 0 (a key the sketch never saw
-    estimates 0 only if some cell stayed empty; estimate >= truth always).
-    ``hash`` must match the build's."""
+    estimates 0 only if some cell stayed empty; estimate >= truth always)."""
     pos = F.array(*[
-        F.struct(F.lit(i).alias("row"), _cell(F.col(key), i, w, hash).alias("cell"))
+        F.struct(F.lit(i).alias("row"), _cell(F.col(key), i, w).alias("cell"))
         for i in range(d)
     ])
     q = queries.select(F.col(key), F.explode(pos).alias("p")).select(

@@ -99,31 +99,30 @@ def lsh_candidate_pairs(
     bt = sig.select("doc_id", F.explode(bands).alias("bk")).select(
         "doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
     )
-    if max_bucket is not None:
-        # oversized-bucket set is tiny by construction (each member is a
-        # bucket with > max_bucket rows), so: map-side-combined groupBy ->
-        # broadcast left_anti. No sort, and the band table itself never
-        # shuffles for the cap (the r2 window-count version sorted the full
-        # band table and cost 1.9x on minhash_lsh).
-        #
-        # The band table feeds BOTH the cap aggregate (a separate broadcast
-        # job) and the join probe; without a persist the whole
-        # shingle->minhash upstream (two shuffles) runs twice. It is the
-        # signature "model" — n_docs x n_bands narrow rows, orders of
-        # magnitude smaller than the corpus — so MEMORY_AND_DISK is safe at
-        # any scale (a production pipeline would write it to a table).
-        # Tracked so harnesses can caching.release_tracked() after the
-        # consuming action rather than pinning storage for the app lifetime.
-        from ..caching import tracked_persist
+    # oversized-bucket set is tiny by construction (each member is a
+    # bucket with > max_bucket rows), so: map-side-combined groupBy ->
+    # broadcast left_anti. No sort, and the band table itself never
+    # shuffles for the cap (the r2 window-count version sorted the full
+    # band table and cost 1.9x on minhash_lsh).
+    #
+    # The band table feeds BOTH the cap aggregate (a separate broadcast
+    # job) and the join probe; without a persist the whole
+    # shingle->minhash upstream (two shuffles) runs twice. It is the
+    # signature "model" — n_docs x n_bands narrow rows, orders of
+    # magnitude smaller than the corpus — so MEMORY_AND_DISK is safe at
+    # any scale (a production pipeline would write it to a table).
+    # Tracked so harnesses can caching.release_tracked() after the
+    # consuming action rather than pinning storage for the app lifetime.
+    from ..caching import tracked_persist
 
-        bt = tracked_persist(bt, StorageLevel.MEMORY_AND_DISK)
-        big = (
-            bt.groupBy("band", "key")
-            .agg(F.count("*").alias("_bn"))
-            .filter(F.col("_bn") > max_bucket)
-            .select("band", "key")
-        )
-        bt = bt.join(F.broadcast(big), ["band", "key"], "left_anti")
+    bt = tracked_persist(bt, StorageLevel.MEMORY_AND_DISK)
+    big = (
+        bt.groupBy("band", "key")
+        .agg(F.count("*").alias("_bn"))
+        .filter(F.col("_bn") > max_bucket)
+        .select("band", "key")
+    )
+    bt = bt.join(F.broadcast(big), ["band", "key"], "left_anti")
     a = bt.alias("a")
     b = bt.alias("b")
     return (
@@ -238,7 +237,6 @@ def embedding_near_dups(
     n_tables: int = 4,
     seed: int = 42,
     max_bucket: int = 10000,
-    exact: bool = False,
 ) -> DataFrame:
     """Cosine near-dup pairs above threshold.
 
@@ -250,8 +248,6 @@ def embedding_near_dups(
     degenerate buckets are capped at max_bucket (identical vectors — exact
     dedup's job). Recall for cos >= 0.95 pairs with 8-bit tables is
     (1 - (1-p^8)^4), p = 1 - acos(0.95)/pi ~ 0.9, i.e. ~97%.
-
-    exact=True keeps the brute-force cross join (test/oracle sizes only).
     """
     a = emb.select(
         F.col("vec_id").alias("id_a"), F.col("embedding").alias("ea"),
@@ -261,10 +257,6 @@ def embedding_near_dups(
         F.col("vec_id").alias("id_b"), F.col("embedding").alias("eb"),
         _norm_expr("embedding").alias("_nb"),
     )
-    if exact:
-        pairs = a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
-        return _cos_pairs(pairs, threshold)
-
     from .similarity import lsh_bucket_col
 
     base = emb.select("vec_id", "embedding")
@@ -292,16 +284,15 @@ def embedding_near_dups(
     from ..caching import tracked_persist
 
     tabs = tracked_persist(tabs, StorageLevel.MEMORY_AND_DISK)
-    if max_bucket is not None:
-        # oversized buckets are a tiny set -> broadcast left_anti (the full
-        # bucket table never shuffles for the cap)
-        big = (
-            tabs.groupBy("tbl", "bucket")
-            .agg(F.count("*").alias("_bn"))
-            .filter(F.col("_bn") > max_bucket)
-            .select("tbl", "bucket")
-        )
-        tabs = tabs.join(F.broadcast(big), ["tbl", "bucket"], "left_anti")
+    # oversized buckets are a tiny set -> broadcast left_anti (the full
+    # bucket table never shuffles for the cap)
+    big = (
+        tabs.groupBy("tbl", "bucket")
+        .agg(F.count("*").alias("_bn"))
+        .filter(F.col("_bn") > max_bucket)
+        .select("tbl", "bucket")
+    )
+    tabs = tabs.join(F.broadcast(big), ["tbl", "bucket"], "left_anti")
     ta = tabs.alias("a")
     tb = tabs.alias("b")
     cand = (

@@ -3,9 +3,9 @@
 Spark-first shape: no dense spine is generated, joined or shuffled. ONE
 ``lead`` window over the (sparse) observations pairs each observation with
 the next; each inter-observation run is then emitted directly —
-:func:`gapfill_runs` explodes ``sequence(off, next_off - 1)`` per run,
-:func:`gapfill_linear_checksum` expands runs inside an Arrow kernel and
-reduces them per doc before anything is shuffled.
+:func:`gapfill_runs` (LOCF) explodes ``sequence(off, next_off - 1)`` per
+run, :func:`gapfill_linear_checksum` expands runs inside an Arrow kernel
+and reduces them per doc before anything is shuffled.
 
   * LOCF   = the run's anchor value — the zero-order-hold of
     caits/core/_core_resample.py:45-54.
@@ -32,19 +32,20 @@ def gapfill_linear_checksum(
 ) -> DataFrame:
     """Per-doc (doc_id, n_points, chk) of the linear gap-fill WITHOUT
     materializing the dense grid in the JVM: chk = Σ floor(filled * q)
-    over the same dense points :func:`gapfill_runs` (mode='linear') emits.
+    over every point of the doc's observed span [min_offset, max_offset].
 
-    Bitwise-identical to ``gapfill_runs + groupBy`` (tested): the anchor
-    windows, run bounds and per-run slope are the SAME JVM expressions
-    (so long→double casts round identically), and the per-point fill
-    ``v + slope * d`` / ``floor(filled * q)`` are the same IEEE float64
-    ops in numpy. The win (guide §4.2): the JVM path generates the dense
-    grid through ``explode(sequence(...))`` — one array allocation per
-    run plus a hash-aggregate probe per dense point (63 M rows at sf0.1)
-    — while this kernel expands each Arrow batch of runs with
-    repeat/arange vector math and reduces per run with ``np.add.reduceat``
-    before anything is shuffled. Only run-level rows (one per
-    observation) ever cross the Arrow boundary in either direction.
+    Bitwise-equal to floor-checksums of oracle/gapfill.py's linear series
+    sliced to the observed span (tested): the anchor windows, run bounds
+    and per-run slope are JVM expressions over the sparse observations,
+    and the per-point fill ``v + slope * d`` / ``floor(filled * q)`` are
+    the oracle's IEEE float64 ops in numpy. The win (guide §4.2): a JVM
+    dense grid through ``explode(sequence(...))`` costs one array
+    allocation per run plus a hash-aggregate probe per dense point (63 M
+    rows at sf0.1), while this kernel expands each Arrow batch of runs
+    with repeat/arange vector math and reduces per run with
+    ``np.add.reduceat`` before anything is shuffled. Only run-level rows
+    (one per observation) ever cross the Arrow boundary in either
+    direction.
     """
     import numpy as np
     import pandas as pd
@@ -58,7 +59,7 @@ def gapfill_linear_checksum(
         F.lead(F.col("offset").cast("long")).over(w).alias("_no"),
         F.lead(v).over(w).alias("_nv"),
     )
-    # run_end and slope in the JVM with gapfill_runs' exact expressions
+    # run_end and slope in the JVM
     run_end = F.when(F.col("_no").isNull(), F.col("offset")).otherwise(F.col("_no") - 1)
     slope = (F.col("_nv") - F.col("_v")) / (
         F.col("_no").cast("double") - F.col("offset").cast("double")
@@ -116,12 +117,8 @@ def gapfill_linear_checksum(
     )
 
 
-def gapfill_runs(
-    observed: DataFrame,
-    mode: str = "locf",
-    value: str = "value",
-) -> DataFrame:
-    """Join-free gap-fill over the observed span [min_offset, max_offset].
+def gapfill_runs(observed: DataFrame, value: str = "value") -> DataFrame:
+    """Join-free LOCF gap-fill over the observed span [min_offset, max_offset].
 
     Instead of spine + left-join + anchor windows (3 shuffles of the DENSE
     grid — measured 405 s on a 63M-point grid), emit each inter-observation
@@ -129,12 +126,10 @@ def gapfill_runs(
     narrow explode of `sequence(off, next_off - 1)`. The dense grid exists
     only as generator output — it is never shuffled, joined, or sorted.
 
-    Bitwise-equal to oracle/gapfill.py's dense LOCF / linear series
-    sliced to each doc's observed bounds (no leading/trailing gap by
-    construction; tested).
+    Bitwise-equal to oracle/gapfill.py's dense LOCF series sliced to each
+    doc's observed bounds (no leading/trailing gap by construction;
+    tested).
     """
-    if mode not in ("locf", "linear"):
-        raise ValueError(f"mode must be locf|linear, got {mode!r}")
     w = Window.partitionBy("doc_id").orderBy("offset")
     v = F.col(value).cast("double")
     d = observed.filter(v.isNotNull()).select(
@@ -142,16 +137,7 @@ def gapfill_runs(
         F.col("offset").cast("long").alias("offset"),
         v.alias("_v"),
         F.lead(F.col("offset").cast("long")).over(w).alias("_no"),
-        F.lead(v).over(w).alias("_nv"),
     )
     run_end = F.when(F.col("_no").isNull(), F.col("offset")).otherwise(F.col("_no") - 1)
     d = d.withColumn("_k", F.explode(F.sequence(F.col("offset"), run_end)))
-    x = F.col("_k").cast("double")
-    slope = (F.col("_nv") - F.col("_v")) / (F.col("_no").cast("double") - F.col("offset").cast("double"))
-    if mode == "locf":
-        filled = F.col("_v")
-    else:
-        filled = F.when(F.col("_k") == F.col("offset"), F.col("_v")).otherwise(
-            F.col("_v") + slope * (x - F.col("offset").cast("double"))
-        )
-    return d.select("doc_id", F.col("_k").alias("offset"), filled.alias("filled"))
+    return d.select("doc_id", F.col("_k").alias("offset"), F.col("_v").alias("filled"))

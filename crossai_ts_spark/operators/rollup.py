@@ -11,9 +11,11 @@ Scale design (the part that matters at 10^12 sequences / 100 TB):
   last∘last. So the entire 3-tier rollup of 100 TB of tokens is one narrow
   map stage; only the (tiny) tier rows are ever shuffled — and only if a
   later op asks for it.
-* ``cascade_from_tier`` (tier k already in storage) is the shuffle path:
-  a plain groupBy — Spark's partial aggregation does map-side combine, and
-  ``salted`` variants exist in operators/salted.py for skewed global keys.
+* ``cascade_from_tier`` re-aggregates a tier k table into tier k+1 with
+  a plain groupBy (Spark's partial aggregation does the map-side
+  combine). Only bench.py's per-tier timing calls it; the checkpointed
+  job runs :func:`cascade` per bucket. ``operators/salted.py`` holds the
+  salted two-phase rollup for skewed global keys.
 
 Exactness: int64 sums of int32 tokens; mean = one float64 division
 t_sum/t_cnt ⇒ bitwise-stable under any partitioning or tier path
@@ -169,8 +171,8 @@ def cascade_from_tier(
 ) -> DataFrame:
     """Re-aggregate tier k rows into tier k+1 rows via groupBy.
 
-    The relational form of the partial-agg identities — used by the
-    incremental/checkpointed job where tier k already sits in storage.
+    The relational form of the partial-agg identities. bench.py times
+    each tier with it; the checkpointed job does not call it.
     """
     width_next = tier_width(from_tier + 1, w, fanout)
     win = (F.col("window_start") / F.lit(width_next)).cast("long")

@@ -122,7 +122,7 @@ def repetition_scores(docs: DataFrame) -> DataFrame:
     )
 
 
-def lm_bigram_nll(docs: DataFrame, quantize: int | None = None) -> DataFrame:
+def lm_bigram_nll(docs: DataFrame) -> DataFrame:
     """CCNet/Gopher-style language-model quality score: fit an add-1
     smoothed bigram LM on the corpus itself, score each doc by mean
     negative log-likelihood (high = out-of-distribution/garbled).
@@ -130,13 +130,12 @@ def lm_bigram_nll(docs: DataFrame, quantize: int | None = None) -> DataFrame:
     Distributed fit = two count aggregations over the exploded bigram
     table; scoring joins the model back (at web scale: shuffle joins on
     the bigram key — the model IS data-sized, never driver-collected).
-    The per-doc sum folds a position-ordered list so the float addition
-    order is fixed — a plain groupBy SUM over doubles is partition-order-
-    dependent and can't be mirrored exactly by another engine. With
-    `quantize` = q, each term ships as floor(-ln(p) * 2^q) and the sum is
-    pure int64 (`nll_q` column): JVM Math.log and C libm ln disagree in
-    the last ulp on some inputs, so a raw double fold is NOT cross-engine
-    exact — the measured failure that motivated this knob.
+    Each term ships as floor(-ln(p) * 2^20) and the per-doc sum is pure
+    int64 (`nll_q` column): JVM Math.log and C libm ln disagree in the
+    last ulp on some inputs, so a double fold of the raw terms would not
+    be cross-engine exact. The sum folds a position-ordered list. Output:
+    (doc_id, n_bigrams, nll_q); nll_q / 2^20 / n_bigrams approximates the
+    mean NLL to within 2^-20.
     """
     words = _words()
     d = docs.select(F.col("doc_id").cast("string").alias("doc_id"), words.alias("ws"))
@@ -175,18 +174,12 @@ def lm_bigram_nll(docs: DataFrame, quantize: int | None = None) -> DataFrame:
         F.count("*").alias("n_bigrams"),
         F.sort_array(F.collect_list(F.struct("pos", "term"))).alias("terms"),
     )
-    if quantize is not None:
-        scale = float(1 << quantize)
-        nll_q = F.aggregate(
-            F.col("terms"),
-            F.lit(0).cast("long"),
-            lambda a, t: a + F.floor(-t["term"] * F.lit(scale)).cast("long"),
-        )
-        return g.select("doc_id", "n_bigrams", nll_q.alias("nll_q"))
-    nll = -F.aggregate(
-        F.col("terms"), F.lit(0.0).cast("double"), lambda a, t: a + t["term"]
-    ) / F.col("n_bigrams").cast("double")
-    return g.select("doc_id", "n_bigrams", nll.alias("avg_nll"))
+    nll_q = F.aggregate(
+        F.col("terms"),
+        F.lit(0).cast("long"),
+        lambda a, t: a + F.floor(-t["term"] * F.lit(float(1 << 20))).cast("long"),
+    )
+    return g.select("doc_id", "n_bigrams", nll_q.alias("nll_q"))
 
 
 # Okapi BM25 term-score expression, shared VERBATIM between the Spark plan

@@ -11,8 +11,73 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from ..functions.codecs import BitReader, BitWriter, dod_encode
+from ..functions.codecs import BitReader
 from ..workers import worker_kernel
+
+
+class BitWriter:
+    """Append-only bit stream (MSB-first within each byte)."""
+
+    __slots__ = ("buf", "acc", "nbits")
+
+    def __init__(self) -> None:
+        self.buf = bytearray()
+        self.acc = 0  # bit accumulator (int)
+        self.nbits = 0  # bits currently in acc
+
+    def write(self, value: int, nbits: int) -> None:
+        if nbits == 0:
+            return
+        self.acc = (self.acc << nbits) | (value & ((1 << nbits) - 1))
+        self.nbits += nbits
+        while self.nbits >= 8:
+            self.nbits -= 8
+            self.buf.append((self.acc >> self.nbits) & 0xFF)
+        self.acc &= (1 << self.nbits) - 1
+
+    def getvalue(self) -> bytes:
+        out = bytearray(self.buf)
+        if self.nbits:
+            out.append((self.acc << (8 - self.nbits)) & 0xFF)
+        return bytes(out)
+
+
+# -------------------------------------------------------- delta-of-delta
+
+
+def dod_encode(offsets: np.ndarray) -> bytes:
+    """Encode int64 array -> bytes (header: count, first, first delta)."""
+    offsets = np.ascontiguousarray(offsets, dtype=np.int64)
+    n = offsets.size
+    w = BitWriter()
+    w.write(n, 64)
+    if n == 0:
+        return w.getvalue()
+    w.write(int(offsets[0]) & ((1 << 64) - 1), 64)
+    if n == 1:
+        return w.getvalue()
+    # deltas in Python ints (mod-2^64 consistent with the decoder) so
+    # adjacent values near ±2^62 can't overflow an int64 diff
+    py = [int(v) for v in offsets]
+    deltas = [b - a for a, b in zip(py, py[1:])]
+    w.write(deltas[0] & ((1 << 64) - 1), 64)
+    dods = [b - a for a, b in zip(deltas, deltas[1:])]
+    for d in dods:
+        if d == 0:
+            w.write(0, 1)
+        elif -63 <= d <= 64:
+            w.write(0b10, 2)
+            w.write(d + 63, 7)
+        elif -255 <= d <= 256:
+            w.write(0b110, 3)
+            w.write(d + 255, 9)
+        elif -2047 <= d <= 2048:
+            w.write(0b1110, 4)
+            w.write(d + 2047, 12)
+        else:
+            w.write(0b1111, 4)
+            w.write(d & ((1 << 64) - 1), 64)
+    return w.getvalue()
 
 
 def gorilla_encode(values: np.ndarray) -> bytes:

@@ -7,6 +7,10 @@
   _pack_sequences_global  one running-sum window per shard; the two-phase
                           cumsum of operators/packing.pack_sequences must
                           equal it bitwise
+  kmv_sketch_unfiltered   the two-phase salted bottom-k over every hashed
+                          event; the prefiltered operators/hll.kmv_sketch
+                          (threshold pass + exactness fallback) must equal
+                          it bitwise
 
 No query, job or stream runs them.
 """
@@ -16,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..operators.hll import _kmv_bottom_k, _kmv_estimate, _kmv_hashed
 from ..operators.packing import _pack_assign
 from ..operators.similarity import _cos_with_norms, _norm
 
@@ -54,3 +59,18 @@ def _pack_sequences_global(seqs: DataFrame, seq_len: int = 2048, by: str = "sour
         .withColumn("cum_start", F.col("cum_end") - F.col("n_tok"))
     )
     return _pack_assign(c, seq_len, by)
+
+
+def kmv_sketch_unfiltered(
+    events: DataFrame,
+    key: str = "user_id",
+    ts: str = "ts",
+    window_sec: int = 3600,
+    k: int = 8,
+    n_salts: int = 16,
+) -> DataFrame:
+    """Bottom-k (KMV) sketch per window without the HLL candidate filter:
+    every window's whole distinct-hash set enters the salted two-phase
+    bottom-k, so a hot window buffers O(D / n_salts) hashes per shard."""
+    e = _kmv_hashed(events, key, ts, window_sec)
+    return _kmv_estimate(_kmv_bottom_k(e, k, n_salts), k)

@@ -14,6 +14,9 @@ runs them.
   sos_freq_response / butter_analog_mag
                       the digital response of an SOS cascade and the closed
                       form the bilinear design must hit (tests/test_iir.py)
+  sosfiltfilt         per-row zero-phase filtering (scipy.sosfiltfilt
+                      semantics); ``iir.sosfiltfilt_batch`` must equal it
+                      bitwise row by row (tests/test_iir.py)
   ep3_user_counts     one recording through the EP3 chain of
                       plans/ep3.py (tests/test_ep3.py)
 """
@@ -22,9 +25,34 @@ from __future__ import annotations
 
 import numpy as np
 
-from ..functions.iir import _prewarp, butter_sos, sosfiltfilt
+from ..functions.iir import _prewarp, butter_sos, sosfilt, sosfilt_zi
 from ..functions.spline import spline_eval, spline_slopes
 from ..plans.ep3 import DUR_MIN, GT_ERR_FRAC, IOU_TH, PROB_TH, STEP, _iou, _runs
+
+
+def sosfiltfilt(sos: np.ndarray, x: np.ndarray, padlen: int | None = None) -> np.ndarray:
+    """Zero-phase forward-backward filtering (scipy.sosfiltfilt semantics:
+    odd-reflection padding, zi scaled by the edge samples)."""
+    x = np.asarray(x, dtype=np.float64)
+    n_sec = sos.shape[0]
+    if padlen is None:
+        padlen = 3 * (2 * n_sec + 1)
+    if x.size <= padlen:
+        padlen = max(0, x.size - 1)
+    if padlen > 0:
+        left = 2.0 * x[0] - x[padlen:0:-1]
+        right = 2.0 * x[-1] - x[-2 : -padlen - 2 : -1]
+        ext = np.concatenate([left, x, right])
+    else:
+        ext = x
+    zi = sosfilt_zi(sos)
+    y = sosfilt(sos, ext, zi=zi * ext[0])
+    y = y[::-1]
+    y = sosfilt(sos, y, zi=zi * y[0])
+    y = y[::-1]
+    if padlen > 0:
+        y = y[padlen:-padlen]
+    return y
 
 
 def spline_chk_scalar(xs: list[float], ys: list[float], quantize: float = 1048576.0) -> float:

@@ -137,7 +137,6 @@ def commit_bucket(
     out_dir: str,
     bucket: int,
     input_snapshot: str,
-    extra_metrics: dict | None = None,
     params: dict | None = None,
 ) -> dict:
     """Materialize one bucket's tier rows with the atomic commit protocol.
@@ -215,7 +214,6 @@ def commit_bucket(
             for k in range(1, n_tiers + 1)
             if stats[f"rows_{k}"]
         },
-        **(extra_metrics or {}),
     }
     write_manifest(out_dir, bucket, payload)
     return payload

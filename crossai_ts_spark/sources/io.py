@@ -12,8 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
-def s3a_path(location: str, spark: SparkSession | None = None,
-             keep_scheme: bool = False) -> str:
+def s3a_path(location: str, spark: SparkSession | None = None) -> str:
     """Normalize an S3 URI scheme to the client Spark/Hadoop will
     actually use: ``s3://`` and the legacy ``s3n://`` map to ``s3a://``
     (reference parity: caits loaders address buckets with plain s3 URLs;
@@ -24,10 +23,7 @@ def s3a_path(location: str, spark: SparkSession | None = None,
     ``fs.s3n.impl`` — on EMR that is EMRFS, the supported,
     consistency-tuned client there), the scheme is preserved — forcing
     s3a would swap the filesystem implementation, committer, and
-    credential chain behind the caller's back. ``keep_scheme=True``
-    skips normalization unconditionally."""
-    if keep_scheme:
-        return location
+    credential chain behind the caller's back."""
     for scheme, impl_key in (("s3://", "fs.s3.impl"), ("s3n://", "fs.s3n.impl")):
         if location.startswith(scheme):
             if spark is not None:

@@ -316,8 +316,7 @@ def streaming_packing(stream: DataFrame, seq_len: int = 2048, by: str = "source"
 
 def streaming_hll_native(stream: DataFrame, key: str = "user_id",
                          ts_col: str = "ts", window_sec: int = 3600,
-                         watermark: str = "2 hours",
-                         hash: str = "md5") -> DataFrame:
+                         watermark: str = "2 hours") -> DataFrame:
     """Zero-Python streaming HLL register stream — the ``streaming_cms``
     move applied to distinct counting: the batch ``hll_sketch`` fold
     (groupBy window+register, MAX rank) is itself an incremental
@@ -335,12 +334,15 @@ def streaming_hll_native(stream: DataFrame, key: str = "user_id",
     per-key M is monotone, so max-per-key over the sink = final) or
     'append' (final registers once the watermark passes window end).
     Estimator assembly happens downstream, off the ingest path, exactly
-    as in the batch tiering."""
+    as in the batch tiering. Events with a null key or timestamp are
+    dropped, as the batch sketch drops them."""
     from ..operators.hll import _hash60, _reg_rank_fold
 
-    e = stream.withWatermark(ts_col, watermark).select(
+    e = stream.withWatermark(ts_col, watermark).filter(
+        F.col(key).isNotNull() & F.col(ts_col).isNotNull()
+    ).select(
         F.window(F.col(ts_col), f"{window_sec} seconds").alias("win"),
-        _hash60(F.col(key), hash).alias("h"),
+        _hash60(F.col(key)).alias("h"),
     )
     return _reg_rank_fold(e, "win").select(
         F.unix_timestamp(F.col("win.start")).cast("long").alias("window_start"),
@@ -349,8 +351,7 @@ def streaming_hll_native(stream: DataFrame, key: str = "user_id",
     )
 
 
-def streaming_cms(stream: DataFrame, key: str, d: int = 4, w: int = 8192,
-                  hash: str = "md5") -> DataFrame:
+def streaming_cms(stream: DataFrame, key: str, d: int = 4, w: int = 8192) -> DataFrame:
     """Continuous count-min sketch (the streaming face of operators/cms):
     the batch plan — explode d (row, cell) positions per item into a
     groupBy sum — IS the streaming plan, because CMS cells merge by
@@ -366,12 +367,12 @@ def streaming_cms(stream: DataFrame, key: str, d: int = 4, w: int = 8192,
     guarantee at every point in time."""
     from ..operators.cms import cms_build
 
-    return cms_build(stream, key=key, d=d, w=w, hash=hash)
+    return cms_build(stream, key=key, d=d, w=w)
 
 
 def streaming_kmv(stream: DataFrame, key: str = "user_id", ts_col: str = "ts",
                   window_sec: int = 3600, k: int = 8,
-                  state_ttl_sec: int = 6 * 3600, hash: str = "md5") -> DataFrame:
+                  state_ttl_sec: int = 6 * 3600) -> DataFrame:
     """Stateful streaming bottom-k (KMV) sketch — the streaming face of
     operators/hll.kmv_sketch, closing the "every mergeable summary has a
     streaming twin" set (HLL r5, CMS r6, KMV r6). GroupState per tumbling
@@ -379,8 +380,9 @@ def streaming_kmv(stream: DataFrame, key: str = "user_id", ts_col: str = "ts",
     definitionally bounded state — and each trigger emits the refreshed
     (ks, n_distinct_est) plus the monotone n_events cursor (latest row
     per window = current sketch). The hash projection is the BATCH
-    `_kmv_hashed` expression itself (``hash`` picks the md5 oracle family
-    or the xxhash64 production family, exactly as in batch) and the
+    `_kmv_hashed` expression itself (which drops null-key and null-
+    timestamp rows before they reach pandas, where a null would arrive as
+    a float64 NaN whose int64 cast terminates the query) and the
     estimator repeats the batch IEEE op order, so the final emission per
     window equals kmv_sketch(same events) BITWISE (parity-tested).
 
@@ -404,13 +406,7 @@ def streaming_kmv(stream: DataFrame, key: str = "user_id", ts_col: str = "ts",
 
     from ..operators.hll import _H60, _kmv_hashed
 
-    # null window/hash rows (unparseable ts, null key) are dropped before
-    # the Arrow partial: a null reaches pandas as float64 NaN whose int64
-    # cast would terminate the query (ADVICE r7)
-    hashed = _kmv_hashed(stream, key=key, ts=ts_col, window_sec=window_sec,
-                         hash=hash).filter(
-        F.col("window_start").isNotNull() & F.col("h").isNotNull()
-    )
+    hashed = _kmv_hashed(stream, key=key, ts=ts_col, window_sec=window_sec)
 
     @worker_kernel
     def partial(pdfs):

@@ -7,8 +7,8 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from crossai_ts_spark.functions.codecs import dod_encode, gorilla_decode
-from crossai_ts_spark.oracle.codecs import dod_decode, gorilla_encode
+from crossai_ts_spark.functions.codecs import gorilla_decode
+from crossai_ts_spark.oracle.codecs import dod_decode, dod_encode, gorilla_encode
 
 RNG = np.random.default_rng(42)
 
@@ -131,10 +131,15 @@ def test_batched_equals_grouped_compression(spark, tiny_df):
     from crossai_ts_spark.oracle.codecs import compress_tiers_grouped
 
     tiers = cascade(tiny_df, w=64, fanout=8, tiers=2)
-    a = {
-        (r.doc_id, r.tier): (bytes(r.ts_blob), bytes(r.val_blob), r.n_points)
-        for r in compress_tiers(tiers, partitions=3).collect()
-    }
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "3")
+    try:
+        a = {
+            (r.doc_id, r.tier): (bytes(r.ts_blob), bytes(r.val_blob), r.n_points)
+            for r in compress_tiers(tiers).collect()
+        }
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
     b = {
         (r.doc_id, r.tier): (bytes(r.ts_blob), bytes(r.val_blob), r.n_points)
         for r in compress_tiers_grouped(tiers).collect()

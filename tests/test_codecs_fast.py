@@ -1,6 +1,6 @@
 """Vectorized codec fast paths must be BIT-IDENTICAL to the golden
-per-value encoders (functions/codecs.py, oracle/codecs.py), including
-IEEE edge payloads."""
+per-value encoders (oracle/codecs.py), including IEEE edge payloads and
+the full int64 range."""
 
 from __future__ import annotations
 
@@ -9,19 +9,17 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from crossai_ts_spark.functions.codecs import dod_encode, gorilla_decode
-from crossai_ts_spark.oracle.codecs import dod_decode, gorilla_encode
+from crossai_ts_spark.functions.codecs import gorilla_decode
 from crossai_ts_spark.functions.codecs_fast import (
     dod_decode_fast,
     dod_encode_fast,
     gorilla_encode_fast,
     pack_bits,
 )
+from crossai_ts_spark.oracle.codecs import BitWriter, dod_decode, dod_encode, gorilla_encode
 
 
 def test_pack_bits_matches_bitwriter():
-    from crossai_ts_spark.functions.codecs import BitWriter
-
     rng = np.random.default_rng(1)
     for _ in range(30):
         k = int(rng.integers(1, 200))
@@ -76,7 +74,12 @@ DOD_EDGE = [
     np.array([0, 0, 0, 0], dtype=np.int64),
     np.arange(0, 6400, 64, dtype=np.int64),
     np.array([0, 2**62, -(2**62), 17, -1], dtype=np.int64),
-    np.array([2**63 - 1, -(2**63), 2**63 - 1], dtype=np.int64),  # wrap: golden fallback
+    # true dod 2^65 - 2 wraps to -2 in int64: must still take the 64-bit bucket
+    np.array([2**63 - 1, -(2**63), 2**63 - 1], dtype=np.int64),
+    # n <= 2 blobs are the header alone; the first delta wraps mod 2^64
+    np.array([-(2**63)], dtype=np.int64),
+    np.array([2**63 - 1, -(2**63)], dtype=np.int64),
+    np.array([-(2**63), 2**63 - 1], dtype=np.int64),
 ]
 
 
@@ -91,6 +94,21 @@ def test_dod_fast_edges(arr):
 @settings(max_examples=150, deadline=None)
 @given(st.lists(st.integers(-(2**40), 2**40), max_size=150))
 def test_dod_fast_hypothesis(xs):
+    arr = np.array(xs, dtype=np.int64)
+    blob = dod_encode_fast(arr)
+    assert blob == dod_encode(arr)
+    assert np.array_equal(dod_decode_fast(blob), arr)
+
+
+INT64 = st.integers(-(2**63), 2**63 - 1)
+INT64_EDGES = st.sampled_from([-(2**63), -(2**63) + 1, -(2**62), -1, 0, 1, 2**62, 2**63 - 2, 2**63 - 1])
+
+
+@settings(max_examples=400, deadline=None)
+@given(st.lists(INT64 | INT64_EDGES, max_size=12))
+def test_dod_fast_hypothesis_full_int64(xs):
+    """Any int64 values, n from 0: deltas and delta-of-deltas that wrap
+    mod 2^64 must land in the golden encoder's buckets."""
     arr = np.array(xs, dtype=np.int64)
     blob = dod_encode_fast(arr)
     assert blob == dod_encode(arr)

@@ -60,22 +60,25 @@ def gapped2(spark):
     return pdf, gapped_to_spark(spark, pdf).cache()
 
 
-@pytest.mark.parametrize("mode", ["locf", "linear"])
-def test_runs_equals_spine_on_observed_span(spark, gapped2, mode):
-    pdf, sdf = gapped2
-    # the oracle's dense spine sliced to each doc's observed bounds (exactly
-    # what gapfill_runs covers)
-    oracle_fn = gapfill_locf if mode == "locf" else gapfill_linear
-    parts = []
+def _oracle_on_observed_span(pdf: pd.DataFrame, oracle_fn) -> dict[str, tuple[int, np.ndarray]]:
+    """Per doc, (min_offset, the oracle's dense series sliced to
+    [min_offset, max_offset]) — exactly the span gapfill_runs and
+    gapfill_linear_checksum cover."""
+    out = {}
     for doc_id, g in pdf.groupby("doc_id"):
         mn, mx = int(g.offset.min()), int(g.offset.max())
-        dense = oracle_fn(g.offset.to_numpy(), g.value.to_numpy(), mx + 1)
-        parts.append(pd.DataFrame(
-            {"doc_id": doc_id, "offset": np.arange(mn, mx + 1), "filled": dense[mn:]}
-        ))
-    exp = pd.concat(parts).sort_values(["doc_id", "offset"]).reset_index(drop=True)
+        out[doc_id] = mn, oracle_fn(g.offset.to_numpy(), g.value.to_numpy(), mx + 1)[mn:]
+    return out
+
+
+def test_runs_equals_spine_on_observed_span(spark, gapped2):
+    pdf, sdf = gapped2
+    exp = pd.concat([
+        pd.DataFrame({"doc_id": doc_id, "offset": np.arange(mn, mn + dense.size), "filled": dense})
+        for doc_id, (mn, dense) in _oracle_on_observed_span(pdf, gapfill_locf).items()
+    ]).sort_values(["doc_id", "offset"]).reset_index(drop=True)
     got = (
-        gapfill_runs(sdf, mode=mode)
+        gapfill_runs(sdf)
         .toPandas()
         .sort_values(["doc_id", "offset"])
         .reset_index(drop=True)
@@ -84,28 +87,27 @@ def test_runs_equals_spine_on_observed_span(spark, gapped2, mode):
     assert got.offset.tolist() == exp.offset.tolist()
     a = got.filled.to_numpy()
     b = exp.filled.to_numpy()
-    assert (a.view(np.int64) == b.view(np.int64)).all()  # bitwise, incl. interp
+    assert (a.view(np.int64) == b.view(np.int64)).all()  # bitwise
 
 
 def test_linear_checksum_kernel_bitwise_equals_runs_path(spark, gapped2):
     """r8: gapfill_linear_checksum (vectorized run-expansion kernel) must
-    reproduce gapfill_runs(mode='linear') + groupBy floor-checksums
-    BITWISE — same anchors, same slope expression, same IEEE per-point
-    ops — including single-point (trailing) runs where slope is null."""
+    reproduce the floor-checksums of the numpy linear oracle over each
+    doc's observed span BITWISE — same anchors, same slope, same IEEE
+    per-point ops — including single-point (trailing) runs where slope is
+    null."""
     from crossai_ts_spark.operators.gapfill import gapfill_linear_checksum
 
-    _, sdf = gapped2
-    want = (
-        gapfill_runs(sdf, mode="linear")
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_points"),
-            F.sum(F.floor(F.col("filled") * 1024.0).cast("long")).cast("long").alias("chk"),
-        )
-        .toPandas().sort_values("doc_id").reset_index(drop=True)
+    pdf, sdf = gapped2
+    want = pd.DataFrame(
+        [
+            (doc_id, dense.size, int(np.floor(dense * 1024.0).astype(np.int64).sum()))
+            for doc_id, (_, dense) in sorted(_oracle_on_observed_span(pdf, gapfill_linear).items())
+        ],
+        columns=["doc_id", "n_points", "chk"],
     )
     got = (
         gapfill_linear_checksum(sdf, quantize=1024.0)
         .toPandas().sort_values("doc_id").reset_index(drop=True)
     )
-    assert got[["doc_id", "n_points", "chk"]].equals(want[["doc_id", "n_points", "chk"]])
+    assert got[["doc_id", "n_points", "chk"]].equals(want)

@@ -14,8 +14,8 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from crossai_ts_spark.functions.iir import butter_sos, sosfilt, sosfilt_zi, sosfiltfilt
-from crossai_ts_spark.oracle.signal import butter_analog_mag, sos_freq_response
+from crossai_ts_spark.functions.iir import butter_sos, sosfilt, sosfilt_zi
+from crossai_ts_spark.oracle.signal import butter_analog_mag, sos_freq_response, sosfiltfilt
 
 GRID = [
     (order, btype, cut, fs)

@@ -18,7 +18,7 @@ def test_s3a_rewrite_gated_on_bound_handler(spark):
     """ADVICE r6: when the hadoop conf binds a dedicated filesystem to
     s3:// (EMRFS on EMR), the scheme must be PRESERVED — rewriting to
     s3a would swap implementation/committer/credentials behind the
-    caller's back. keep_scheme=True skips normalization outright."""
+    caller's back."""
     from crossai_ts_spark.sources.io import s3a_path
 
     conf = spark.sparkContext._jsc.hadoopConfiguration()
@@ -31,7 +31,6 @@ def test_s3a_rewrite_gated_on_bound_handler(spark):
     finally:
         conf.unset("fs.s3.impl")
     assert s3a_path("s3://b/x", spark) == "s3a://b/x"
-    assert s3a_path("s3://b/x", keep_scheme=True) == "s3://b/x"
 
 
 def test_read_write_table_parquet_roundtrip(spark, tmp_path):

@@ -150,7 +150,7 @@ def test_hll_plan_map_side_combines_registers(spark):
 
 
 def test_kmv_prefilter_caches_hashed_events_and_threshold(spark):
-    """VERDICT r6 #2: kmv_sketch(prefilter=True) must compute the hashed
+    """VERDICT r6 #2: kmv_sketch must compute the hashed
     events projection and the HLL-derived threshold ONCE each — the
     threshold/candidate/redo passes all read persisted intermediates.
     Plan evidence: every consumer site reads InMemoryTableScan, and after
@@ -167,7 +167,7 @@ def test_kmv_prefilter_caches_hashed_events_and_threshold(spark):
     ev = spark.read.parquet(f"{SF}/events.parquet").select(
         F.col("ts").cast("timestamp").alias("ts"), "user_id"
     )
-    km = kmv_sketch(ev, k=8, n_salts=4, prefilter=True)
+    km = kmv_sketch(ev, k=8, n_salts=4)
     try:
         plan = _plan(km)
         # both the candidate pass and the threshold joins read caches
@@ -207,7 +207,7 @@ def test_streaming_hll_native_plan_is_zero_python(spark, tmp_path):
         "event_id long, ts_s string, user_id string"
     ).parquet(str(in_dir) + "/*")
     ev = raw.select("event_id", F.to_timestamp("ts_s").alias("ts"), "user_id")
-    out = streaming_hll_native(ev, window_sec=3600, hash="xxhash64")
+    out = streaming_hll_native(ev, window_sec=3600)
     q = (out.writeStream.outputMode("update").format("memory")
          .queryName("nat_plan_out").start())
     try:

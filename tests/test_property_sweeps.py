@@ -123,9 +123,7 @@ def test_round2_queries_partition_invariant(spark):
     def run(parts):
         df = base.repartition(parts)
         b = (
-            butterworth_docs(
-                df, fs=32.0, cutoff_freq=4.0, order=4, method="sosfilt", quantize=1024
-            )
+            butterworth_docs(df, fs=32.0, cutoff_freq=4.0, order=4)
             .toPandas()
             .sort_values("doc_id")
             .reset_index(drop=True)
@@ -191,9 +189,9 @@ def test_round3_queries_partition_invariant(spark, tmp_path):
 def test_round6_sketches_partition_invariant(spark):
     """Round-6 surfaces must give BITWISE-identical results at any input
     partitioning: the prefiltered KMV (HLL threshold + fallback), the
-    xxhash64 HLL registers/estimate, the xxhash64 CMS cells, and the
-    dyadic-alpha mixing weights all depend only on values and
-    deterministic hashes, never on physical layout."""
+    HLL registers/estimate, the CMS cells, and the dyadic-alpha mixing
+    weights all depend only on values and deterministic hashes, never on
+    physical layout."""
     import pandas as pd
     from pyspark.sql import functions as F
 
@@ -212,14 +210,13 @@ def test_round6_sketches_partition_invariant(spark):
         kv = [(int(w), tuple(ks), float(e)) for w, ks, e in
               zip(km.window_start, km.ks, km.n_distinct_est)]
         hl = (
-            hll_estimate(hll_sketch(ev, hash="xxhash64"))
+            hll_estimate(hll_sketch(ev))
             .toPandas().sort_values("window_start")
         )
         hv = [(int(w), int(v), float(e)) for w, v, e in
               zip(hl.window_start, hl.v_empty, hl.est_distinct)]
         cm = (
-            cms_build(ev.select(F.col("user_id").alias("k")), key="k",
-                      d=4, w=256, hash="xxhash64")
+            cms_build(ev.select(F.col("user_id").alias("k")), key="k", d=4, w=256)
             .toPandas().sort_values(["row", "cell"])
         )
         cv = list(map(tuple, cm.itertuples(index=False)))
@@ -233,7 +230,7 @@ def test_round6_sketches_partition_invariant(spark):
 
     r1 = run(1)
     r13 = run(13)
-    for a, b, name in zip(r1, r13, ["kmv", "hll_xxh", "cms_xxh", "mixing"]):
+    for a, b, name in zip(r1, r13, ["kmv", "hll", "cms", "mixing"]):
         assert a == b, f"{name} results depend on partitioning!"
 
 
@@ -243,30 +240,29 @@ def test_kmv_prefilter_fallback_partition_invariant(spark):
     too-deep threshold (candidate_factor < 1 keeps ~0.8 expected hashes
     per window, far short of k=8, so EVERY filtered window takes the
     broadcast redo) and assert the output is BITWISE equal to the
-    unfiltered two-phase plan at 2/8/32 shuffle partitions."""
+    unfiltered two-phase plan (oracle/plans.py) at 2/8/32 shuffle
+    partitions."""
     from pyspark.sql import functions as F
 
     from crossai_ts_spark.operators.hll import kmv_sketch
+    from crossai_ts_spark.oracle.plans import kmv_sketch_unfiltered
 
     rows = [(i, f"2024-01-01 0{i % 3}:10:2{i % 5}", i * 7 % 311) for i in range(1500)]
     base = spark.createDataFrame(rows, "event_id long, ts_s string, user_id long")
     ev = base.select("event_id", F.to_timestamp("ts_s").alias("ts"), "user_id")
 
-    def sketch(prefilter, cf=64.0):
-        km = (
-            kmv_sketch(ev, k=8, n_salts=4, prefilter=prefilter, candidate_factor=cf)
-            .toPandas().sort_values("window_start")
-        )
+    def as_rows(sk):
+        km = sk.toPandas().sort_values("window_start")
         return [(int(w), tuple(ks), float(e)) for w, ks, e in
                 zip(km.window_start, km.ks, km.n_distinct_est)]
 
     old = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "2")
-        want = sketch(prefilter=False)
+        want = as_rows(kmv_sketch_unfiltered(ev, k=8, n_salts=4))
         for parts in (2, 8, 32):
             spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-            got = sketch(prefilter=True, cf=0.1)  # every window -> redo
+            got = as_rows(kmv_sketch(ev, k=8, n_salts=4, candidate_factor=0.1))  # every window -> redo
             assert got == want, f"fallback diverges at {parts} partitions"
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)

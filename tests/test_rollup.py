@@ -172,6 +172,7 @@ def test_hll_merge_identity_and_accuracy(spark):
     import pandas as pd
 
     from crossai_ts_spark.operators.hll import (
+        M_REGS,
         hll_estimate,
         hll_merge,
         hll_sketch,
@@ -193,6 +194,8 @@ def test_hll_merge_identity_and_accuracy(spark):
     a = t2.toPandas().sort_values(key).reset_index(drop=True)
     b = direct.toPandas().sort_values(key).reset_index(drop=True)
     pd.testing.assert_frame_equal(a, b, check_dtype=False)
+    # bounded state: at most one register row per register per window
+    assert t1.toPandas().groupby("window_start").size().max() <= M_REGS
 
     # one coarse window holds users {0..499}: estimate within 3 sigma
     est = hll_estimate(direct).toPandas()
@@ -255,6 +258,7 @@ def test_kmv_prefilter_hot_window_boundedness(spark):
         _kmv_thresholds,
         kmv_sketch,
     )
+    from crossai_ts_spark.oracle.plans import kmv_sketch_unfiltered
 
     k, c = 8, 64
     ev = spark.range(1_000_000).select(
@@ -271,7 +275,7 @@ def test_kmv_prefilter_hot_window_boundedness(spark):
     assert k <= n_cand <= 8 * c * k
 
     filtered = kmv_sketch(ev, window_sec=3600, k=k, n_salts=16).toPandas()
-    plain = kmv_sketch(ev, window_sec=3600, k=k, n_salts=16, prefilter=False).toPandas()
+    plain = kmv_sketch_unfiltered(ev, window_sec=3600, k=k, n_salts=16).toPandas()
     assert list(filtered.iloc[0].ks) == list(plain.iloc[0].ks)
     assert filtered.iloc[0].n_distinct_est == plain.iloc[0].n_distinct_est
 
@@ -286,40 +290,54 @@ def test_kmv_prefilter_hot_window_boundedness(spark):
     assert list(starved.iloc[0].ks) == list(plain.iloc[0].ks)
 
 
-def test_hll_kmv_xxhash64_production_path(spark):
-    """The xxhash64 hash family (JVM-native, no hex-conv detour — the r6
-    scale path) carries the same contracts as md5: <= 64 register rows
-    per window, estimate within the ~13% standard-error band, KMV k-list
-    ascending/distinct with its estimator in the same band, and the KMV
-    pre-filter stays bitwise-identical to the unfiltered plan under the
-    new family. The md5 default stays the oracle family."""
-    import pandas as pd
+def _events_with_null_rows(spark):
+    """(clean, dirty): 50 users in one hour; dirty adds one row with a null
+    user_id and one with a null ts."""
     from pyspark.sql import functions as F
 
-    from crossai_ts_spark.operators.hll import (
-        M_REGS,
-        hll_estimate,
-        hll_sketch,
-        kmv_sketch,
-    )
+    schema = "event_id long, ts_s string, user_id long"
+    rows = [(i, f"2024-01-01 05:{i:02d}:00", i) for i in range(50)]
+    bad = [(50, "2024-01-01 05:30:00", None), (51, None, 7)]
 
-    n_distinct = 500
-    rows = [(i, "2024-01-01 05:00:01", i % n_distinct) for i in range(2000)]
-    ev = spark.createDataFrame(rows, "event_id long, ts_s string, user_id long").select(
-        "event_id", F.to_timestamp("ts_s").alias("ts"), "user_id"
-    )
-    sk = hll_sketch(ev, hash="xxhash64")
-    spdf = sk.toPandas()
-    assert len(spdf) <= M_REGS
-    est = hll_estimate(sk).toPandas()
-    assert len(est) == 1
-    assert abs(est.est_distinct.iloc[0] - n_distinct) / n_distinct < 3 * 1.04 / 8.0
+    def ev(r):
+        return spark.createDataFrame(r, schema).select(
+            "event_id", F.to_timestamp("ts_s").alias("ts"), "user_id"
+        )
 
-    km = kmv_sketch(ev, k=8, hash="xxhash64").toPandas()
-    assert len(km) == 1
-    ks = list(km.ks.iloc[0])
-    assert ks == sorted(set(ks)) and len(ks) == 8
-    assert abs(km.n_distinct_est.iloc[0] - n_distinct) / n_distinct < 0.75
-    km2 = kmv_sketch(ev, k=8, hash="xxhash64", prefilter=False).toPandas()
-    assert list(km2.ks.iloc[0]) == ks
-    assert km2.n_distinct_est.iloc[0] == km.n_distinct_est.iloc[0]
+    return ev(rows), ev(rows + bad)
+
+
+def test_hll_drops_null_key_and_ts_rows(spark):
+    """A null user_id or ts is dropped before hashing, as SQL
+    COUNT(DISTINCT user_id) drops it: the registers and the estimate equal
+    those of the same events without the null rows (a null hash used to
+    become a NULL register that turned est_distinct NULL, and a null ts a
+    window with a NULL start)."""
+    from crossai_ts_spark.operators.hll import hll_estimate, hll_sketch
+
+    clean, dirty = _events_with_null_rows(spark)
+    key = ["window_start", "reg"]
+    got = hll_sketch(dirty).toPandas().sort_values(key).reset_index(drop=True)
+    want = hll_sketch(clean).toPandas().sort_values(key).reset_index(drop=True)
+    pd.testing.assert_frame_equal(got, want)
+    est = hll_estimate(hll_sketch(dirty)).toPandas()
+    assert est.to_dict("records") == hll_estimate(hll_sketch(clean)).toPandas().to_dict("records")
+
+
+def test_kmv_drops_null_key_and_ts_rows(spark):
+    """kmv_sketch drops null-key and null-ts rows before hashing: the
+    window equals the sketch of the same events without them (a null hash
+    used to make the threshold pass NULL and drop the whole window)."""
+    from crossai_ts_spark.operators.hll import kmv_sketch
+
+    clean, dirty = _events_with_null_rows(spark)
+
+    def rows(sk):
+        return [
+            (w, None if ks is None else list(ks), e)
+            for w, ks, e in sk.toPandas().itertuples(index=False)
+        ]
+
+    want = rows(kmv_sketch(clean, k=8))
+    assert len(want) == 1
+    assert rows(kmv_sketch(dirty, k=8)) == want

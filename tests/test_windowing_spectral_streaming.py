@@ -599,9 +599,8 @@ def test_streaming_hll_native_matches_batch_bitwise(spark, tmp_path):
     """r7: the zero-Python native twin — the batch hll_sketch fold run AS
     a streaming aggregation. Max-per-(window,reg) over the update-mode
     sink must be BITWISE the batch hll_sketch register rows (shared
-    _reg_rank_fold plan), for both the md5 oracle family and the
-    xxhash64 production family; hll_estimate over those registers is
-    then the batch estimate by construction."""
+    _reg_rank_fold plan); hll_estimate over those registers is then the
+    batch estimate by construction."""
     import pandas as pd
 
     from crossai_ts_spark.operators.hll import hll_estimate, hll_sketch
@@ -616,48 +615,81 @@ def test_streaming_hll_native_matches_batch_bitwise(spark, tmp_path):
     spark.createDataFrame(rows[:300], schema).coalesce(1).write.parquet(str(in_dir / "b0"))
     spark.createDataFrame(rows[300:], schema).coalesce(1).write.parquet(str(in_dir / "b1"))
 
-    for fam, sink in (("md5", "hll_native_out"), ("xxhash64", "hll_native_xx_out")):
-        raw = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(
-            str(in_dir) + "/*"
+    raw = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(
+        str(in_dir) + "/*"
+    )
+    ev = raw.select("event_id", F.to_timestamp("ts_s").alias("ts"), "user_id")
+    # pure streaming agg, no timers -> processAllAvailable() terminates
+    run_to_memory(streaming_hll_native(ev, window_sec=3600), "hll_native_out", "update")
+    # update mode re-emits a (window,reg) row whenever its M grows;
+    # per-key M is monotone, so max over the sink = final register
+    got = (
+        spark.sql(
+            "SELECT window_start, reg, max(M) AS M FROM hll_native_out "
+            "GROUP BY window_start, reg"
         )
-        ev = raw.select("event_id", F.to_timestamp("ts_s").alias("ts"), "user_id")
-        # pure streaming agg, no timers -> processAllAvailable() terminates
-        run_to_memory(
-            streaming_hll_native(ev, window_sec=3600, hash=fam), sink, "update"
-        )
-        # update mode re-emits a (window,reg) row whenever its M grows;
-        # per-key M is monotone, so max over the sink = final register
-        got = (
-            spark.sql(
-                f"SELECT window_start, reg, max(M) AS M FROM {sink} "
-                "GROUP BY window_start, reg"
-            )
-            .toPandas()
-            .sort_values(["window_start", "reg"])
-            .reset_index(drop=True)
-        )
+        .toPandas()
+        .sort_values(["window_start", "reg"])
+        .reset_index(drop=True)
+    )
 
-        batch_ev = spark.createDataFrame(rows, schema).select(
-            "event_id", F.to_timestamp("ts_s").alias("ts"), "user_id"
-        )
-        want = (
-            hll_sketch(batch_ev, window_sec=3600, hash=fam)
-            .toPandas()
-            .sort_values(["window_start", "reg"])
-            .reset_index(drop=True)
-        )
-        pd.testing.assert_frame_equal(got, want[got.columns], check_dtype=False)
+    batch_ev = spark.createDataFrame(rows, schema).select(
+        "event_id", F.to_timestamp("ts_s").alias("ts"), "user_id"
+    )
+    want = (
+        hll_sketch(batch_ev, window_sec=3600)
+        .toPandas()
+        .sort_values(["window_start", "reg"])
+        .reset_index(drop=True)
+    )
+    pd.testing.assert_frame_equal(got, want[got.columns], check_dtype=False)
 
-        # and the estimator over the streamed registers is the batch estimate
-        est_stream = (
-            hll_estimate(spark.createDataFrame(got))
-            .toPandas().sort_values("window_start").reset_index(drop=True)
+    # and the estimator over the streamed registers is the batch estimate
+    est_stream = (
+        hll_estimate(spark.createDataFrame(got))
+        .toPandas().sort_values("window_start").reset_index(drop=True)
+    )
+    est_batch = (
+        hll_estimate(hll_sketch(batch_ev, window_sec=3600))
+        .toPandas().sort_values("window_start").reset_index(drop=True)
+    )
+    assert list(est_stream["est_distinct"]) == list(est_batch["est_distinct"])
+
+
+def test_streaming_hll_native_drops_null_key_and_ts_rows(spark, tmp_path):
+    """A stream event with a null user_id or a null ts is dropped before
+    hashing, as the batch sketch drops it: the streamed registers equal
+    the batch sketch of the same events without the null rows (a null
+    hash used to become a register row with a NULL reg)."""
+    import pandas as pd
+
+    from crossai_ts_spark.operators.hll import hll_sketch
+    from crossai_ts_spark.streaming.rollup_stream import (
+        run_to_memory,
+        streaming_hll_native,
+    )
+
+    rows = [(i, f"2024-01-01 05:{i:02d}:00", i) for i in range(50)]
+    bad = [(50, "2024-01-01 05:30:00", None), (51, None, 7)]
+    schema = "event_id long, ts_s string, user_id long"
+    in_dir = tmp_path / "hll_native_nulls"
+    spark.createDataFrame(rows + bad, schema).coalesce(1).write.parquet(str(in_dir / "b0"))
+    raw = spark.readStream.schema(schema).parquet(str(in_dir) + "/*")
+    ev = raw.select("event_id", F.to_timestamp("ts_s").alias("ts"), "user_id")
+    run_to_memory(streaming_hll_native(ev, window_sec=3600), "hll_native_nulls_out", "update")
+    key = ["window_start", "reg"]
+    got = (
+        spark.sql(
+            "SELECT window_start, reg, max(M) AS M FROM hll_native_nulls_out "
+            "GROUP BY window_start, reg"
         )
-        est_batch = (
-            hll_estimate(hll_sketch(batch_ev, window_sec=3600, hash=fam))
-            .toPandas().sort_values("window_start").reset_index(drop=True)
-        )
-        assert list(est_stream["est_distinct"]) == list(est_batch["est_distinct"])
+        .toPandas().sort_values(key).reset_index(drop=True)
+    )
+    clean = spark.createDataFrame(rows, schema).select(
+        "event_id", F.to_timestamp("ts_s").alias("ts"), "user_id"
+    )
+    want = hll_sketch(clean, window_sec=3600).toPandas().sort_values(key).reset_index(drop=True)
+    pd.testing.assert_frame_equal(got, want[got.columns], check_dtype=False)
 
 
 def test_streaming_hll_native_append_mode_emits_after_watermark(spark, tmp_path):
@@ -688,8 +720,7 @@ def test_streaming_hll_native_append_mode_emits_after_watermark(spark, tmp_path)
         str(in_dir) + "/*"
     )
     ev = raw.select("event_id", F.to_timestamp("ts_s").alias("ts"), "user_id")
-    out = streaming_hll_native(ev, window_sec=3600, watermark="2 hours",
-                               hash="xxhash64")
+    out = streaming_hll_native(ev, window_sec=3600, watermark="2 hours")
     # append mode: rows arrive only once the watermark finalizes a window.
     # 2 early windows x up to 64 regs; poll until both windows surface.
     q = (out.writeStream.outputMode("append").format("memory")
@@ -721,7 +752,7 @@ def test_streaming_hll_native_append_mode_emits_after_watermark(spark, tmp_path)
         "event_id", F.to_timestamp("ts_s").alias("ts"), "user_id"
     )
     want = (
-        hll_sketch(batch_ev, window_sec=3600, hash="xxhash64")
+        hll_sketch(batch_ev, window_sec=3600)
         .toPandas().sort_values(["window_start", "reg"]).reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(got[want.columns], want, check_dtype=False)
