@@ -29,9 +29,10 @@ arithmetic).
 The Spark surface is ``compress_tiers`` / ``decompress_tiers``: one
 ``mapInPandas`` pass over rows sorted by (doc_id, tier, window_start)
 inside each doc_id partition (SURVEY §4.3.3), so encoded blobs are
-deterministic under any partitioning. The encoders are the vectorized
-ones in functions/codecs_fast.py; the golden per-value encoders they
-must match bit for bit are in oracle/codecs.py.
+deterministic under any partitioning. Every kernel makes one call per codec
+per Arrow batch to the batch codecs in functions/codecs_fast.py, which
+write bit for bit what the golden per-value encoders in oracle/codecs.py
+write (the golden decoders are there too).
 """
 
 from __future__ import annotations
@@ -40,61 +41,7 @@ import numpy as np
 import pandas as pd
 
 from ..workers import worker_kernel
-from .codecs_fast import dod_decode_fast, dod_encode_fast, gorilla_encode_fast
-
-# ------------------------------------------------------------------ bits
-
-
-class BitReader:
-    """MSB-first bit stream reader."""
-
-    __slots__ = ("data", "pos")
-
-    def __init__(self, data: bytes) -> None:
-        self.data = data
-        self.pos = 0  # bit position
-
-    def read(self, nbits: int) -> int:
-        if nbits == 0:
-            return 0
-        end = self.pos + nbits
-        first_byte = self.pos >> 3
-        last_byte = (end + 7) >> 3
-        chunk = int.from_bytes(self.data[first_byte:last_byte], "big")
-        total_bits = (last_byte - first_byte) * 8
-        chunk >>= total_bits - (end - first_byte * 8)
-        self.pos = end
-        return chunk & ((1 << nbits) - 1)
-
-
-# ------------------------------------------------------------ gorilla f64
-
-
-def gorilla_decode(blob: bytes) -> np.ndarray:
-    r = BitReader(blob)
-    n = r.read(64)
-    out = np.empty(n, dtype=np.uint64)
-    if n == 0:
-        return out.view(np.float64)
-    cur = r.read(64)
-    out[0] = cur
-    lead, sig = 0, 0
-    for i in range(1, n):
-        if r.read(1) == 0:
-            out[i] = cur
-            continue
-        if r.read(1) == 0:  # '10': reuse block
-            mean_bits = r.read(sig)
-            x = mean_bits << (64 - lead - sig)
-        else:  # '11': new block
-            lead = r.read(5)
-            sig = r.read(6) + 1
-            mean_bits = r.read(sig)
-            x = mean_bits << (64 - lead - sig)
-        cur ^= x
-        out[i] = cur
-    return out.view(np.float64)
-
+from .codecs_fast import dod_decode_batch, dod_encode_batch, gorilla_decode_batch, gorilla_encode_batch
 
 # --------------------------------------------------------- spark surface
 
@@ -104,10 +51,10 @@ def compress_tiers(tier_df):
 
     Batched path: repartition on doc_id (one shuffle), sortWithinPartitions
     (doc_id, tier, window_start) for deterministic blobs, then a single
-    mapInPandas kernel that slices groups out of each Arrow batch with
-    numpy boundary detection — no per-group pandas materialization. Groups
-    split across Arrow batch boundaries are carried over and merged (the
-    partition-level sort makes group rows contiguous).
+    mapInPandas kernel that finds the groups of each Arrow batch with numpy
+    boundary detection and encodes all of them with one call per codec. A
+    group split across Arrow batch boundaries is carried over to the next
+    batch (the partition-level sort makes group rows contiguous).
 
     Blobs are bitwise-identical to oracle/codecs.compress_tiers_grouped
     (tested).
@@ -127,52 +74,38 @@ def compress_tiers(tier_df):
     # tier-1 windows), so 1x cluster-width tasks don't straggle.
     partitions = int(tier_df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
 
+    def encode(pdf: pd.DataFrame, starts: np.ndarray) -> pd.DataFrame:
+        """The groups starting at rows ``starts`` of ``pdf`` -> segments."""
+        n = np.diff(np.append(starts, len(pdf)))
+        return pd.DataFrame(
+            {
+                "doc_id": pdf["doc_id"].to_numpy()[starts],
+                "source": pdf["source"].to_numpy()[starts],
+                "tier": pdf["tier"].to_numpy()[starts].astype(np.int32),
+                "n_points": n,
+                "codec": np.repeat("gorilla+dod/v1", starts.size),
+                "ts_blob": dod_encode_batch(pdf["window_start"].to_numpy(dtype=np.int64), n),
+                "val_blob": gorilla_encode_batch(pdf["t_mean"].to_numpy(dtype=np.float64), n),
+            }
+        )
+
     @worker_kernel
     def kernel(batches):
         pend: pd.DataFrame | None = None
-
-        def encode_block(pdf: pd.DataFrame):
-            doc_np = pdf["doc_id"].to_numpy()
-            tier_np = pdf["tier"].to_numpy()
-            src_np = pdf["source"].to_numpy()
-            keys = (pdf["doc_id"].astype(str) + "\x1f" + pdf["tier"].astype(str)).to_numpy()
-            brk = np.nonzero(keys[1:] != keys[:-1])[0] + 1
-            bounds = np.concatenate(([0], brk, [len(pdf)]))
-            offs_all = pdf["window_start"].to_numpy(dtype=np.int64)
-            vals_all = pdf["t_mean"].to_numpy(dtype=np.float64)
-            starts, ends = bounds[:-1], bounds[1:]
-            # columnar assembly: per-group work is just the two encoders
-            # (no per-group pandas scalar lookups / row tuples)
-            return pd.DataFrame(
-                {
-                    "doc_id": doc_np[starts],
-                    "source": src_np[starts],
-                    "tier": tier_np[starts].astype(np.int32),
-                    "n_points": (ends - starts).astype(np.int64),
-                    "codec": np.repeat("gorilla+dod/v1", starts.size),
-                    "ts_blob": [dod_encode_fast(offs_all[s:e]) for s, e in zip(starts, ends)],
-                    "val_blob": [gorilla_encode_fast(vals_all[s:e]) for s, e in zip(starts, ends)],
-                }
-            )
-
         for pdf in batches:
             if pend is not None:
                 pdf = pd.concat([pend, pdf], ignore_index=True)
-                pend = None
             if len(pdf) == 0:
                 continue
+            doc, tier = pdf["doc_id"].to_numpy(), pdf["tier"].to_numpy()
+            brk = np.nonzero((doc[1:] != doc[:-1]) | (tier[1:] != tier[:-1]))[0] + 1
+            starts = np.concatenate(([0], brk))
             # hold back the trailing group: it may continue in the next batch
-            last_doc = pdf["doc_id"].iloc[-1]
-            last_tier = pdf["tier"].iloc[-1]
-            tail_mask = (pdf["doc_id"] == last_doc) & (pdf["tier"] == last_tier)
-            # rows are sorted, so the tail group is a contiguous suffix
-            split = len(pdf) - int(tail_mask.to_numpy()[::-1].argmin()) if not tail_mask.all() else 0
-            pend = pdf.iloc[split:].copy()
-            head = pdf.iloc[:split]
-            if len(head):
-                yield encode_block(head)
+            pend = pdf.iloc[starts[-1]:]
+            if starts.size > 1:
+                yield encode(pdf.iloc[: starts[-1]], starts[:-1])
         if pend is not None and len(pend):
-            yield encode_block(pend)
+            yield encode(pend, np.zeros(1, dtype=np.int64))
 
     ordered = tier_df.repartition(partitions, "doc_id").sortWithinPartitions(
         "doc_id", "tier", "window_start"
@@ -183,27 +116,29 @@ def compress_tiers(tier_df):
 def decompress_tiers(seg_df):
     """Compressed segments -> (doc_id, source, tier, window_start, value) rows.
 
-    Per-segment work is just the two decoders (offsets via the vectorized
-    dod_decode_fast — bit-identical to the golden decoder, tested); the
-    output batch is assembled once per Arrow batch with np.repeat /
-    np.concatenate instead of one pandas frame per segment.
+    One call per codec decodes all the segments of an Arrow batch; the
+    output batch is assembled with np.repeat. A segment whose two blobs
+    disagree on its point count raises ``ValueError`` naming it.
     """
 
     @worker_kernel
     def decode(batches):
         for pdf in batches:
-            offs_l = [dod_decode_fast(bytes(b)) for b in pdf["ts_blob"]]
-            vals_l = [gorilla_decode(bytes(b)) for b in pdf["val_blob"]]
-            if not offs_l:
+            if not len(pdf):
                 continue
-            n = np.array([o.size for o in offs_l], dtype=np.int64)
+            offs, n = dod_decode_batch(pdf["ts_blob"].tolist())
+            vals, n_vals = gorilla_decode_batch(pdf["val_blob"].tolist())
+            if not np.array_equal(n, n_vals):
+                j = int(np.argmax(n != n_vals))
+                raise ValueError(f"doc_id {pdf['doc_id'].iloc[j]!r} tier {pdf['tier'].iloc[j]}: "
+                                 f"ts_blob holds {n[j]} points, val_blob {n_vals[j]}")
             yield pd.DataFrame(
                 {
                     "doc_id": np.repeat(pdf["doc_id"].to_numpy(), n),
                     "source": np.repeat(pdf["source"].to_numpy(), n),
                     "tier": np.repeat(pdf["tier"].to_numpy().astype(np.int32), n),
-                    "window_start": np.concatenate(offs_l),
-                    "value": np.concatenate(vals_l),
+                    "window_start": offs,
+                    "value": vals,
                 }
             )
 
@@ -214,6 +149,13 @@ def decompress_tiers(seg_df):
 # ------------------------------------------------- token round-trip codec
 
 
+def _segment_sums(x: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Per-segment int64 sums (mod 2^64, like ``ndarray.sum``)."""
+    c = np.concatenate(([0], np.cumsum(x, dtype=np.int64)))
+    e = np.cumsum(lens)
+    return c[e] - c[e - lens]
+
+
 def tokens_roundtrip_sums(df):
     """Round-trip check + sums recomputed from the DECODED arrays.
 
@@ -221,25 +163,31 @@ def tokens_roundtrip_sums(df):
     the input — so a cross-engine oracle that recomputes the same sums from
     the source text independently verifies the codec (any decode corruption
     shifts the sums; the position-weighted sum catches reorderings that a
-    plain sum would miss).
+    plain sum would miss). ``ok`` is per-doc array equality. Each Arrow
+    batch makes one encode and one decode call.
     """
 
     @worker_kernel
     def check(batches):
         for pdf in batches:
-            oks, sums, wsums = [], [], []
-            for toks in pdf["tokens"]:
-                arr = np.asarray(toks, dtype=np.int64)
-                rt = dod_decode_fast(dod_encode_fast(arr))
-                oks.append(bool(np.array_equal(rt, arr)))
-                sums.append(int(rt.sum()))
-                wsums.append(int((rt * np.arange(1, len(rt) + 1)).sum()))
+            if not len(pdf):
+                continue
+            toks = pdf["tokens"].tolist()
+            lens = np.fromiter(map(len, toks), dtype=np.int64, count=len(toks))
+            arr = np.concatenate(toks).astype(np.int64)
+            dec, n = dod_decode_batch(dod_encode_batch(arr, lens))
+            same = n == lens
+            ok = same.copy()
+            # element mismatches of every doc whose decoded length matches
+            diff = arr[np.repeat(same, lens)] != dec[np.repeat(same, n)]
+            ok[same] = _segment_sums(diff, lens[same]) == 0
+            pos = np.arange(dec.size) - np.repeat(np.cumsum(n) - n, n) + 1
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
-                    "ok": oks,
-                    "dec_sum": np.asarray(sums, dtype=np.int64),
-                    "dec_wsum": np.asarray(wsums, dtype=np.int64),
+                    "ok": ok,
+                    "dec_sum": _segment_sums(dec, n),
+                    "dec_wsum": _segment_sums(dec * pos, n),
                 }
             )
 

@@ -1,8 +1,8 @@
 """Golden per-value codec encoders/decoders and the per-group compress plan.
 
 The parity reference for functions/codecs.py and functions/codecs_fast.py:
-tests require the production blobs to equal these bit for bit. No query,
-job or stream runs them. The bit streams and the format are documented in
+tests require the production blobs to equal these bit for bit, and the
+batch decoders to invert them. No query, job or stream runs them. The bit streams and the format are documented in
 functions/codecs.py.
 """
 
@@ -11,8 +11,29 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from ..functions.codecs import BitReader
 from ..workers import worker_kernel
+
+
+class BitReader:
+    """MSB-first bit stream reader."""
+
+    __slots__ = ("data", "pos")
+
+    def __init__(self, data: bytes) -> None:
+        self.data = data
+        self.pos = 0  # bit position
+
+    def read(self, nbits: int) -> int:
+        if nbits == 0:
+            return 0
+        end = self.pos + nbits
+        first_byte = self.pos >> 3
+        last_byte = (end + 7) >> 3
+        chunk = int.from_bytes(self.data[first_byte:last_byte], "big")
+        total_bits = (last_byte - first_byte) * 8
+        chunk >>= total_bits - (end - first_byte * 8)
+        self.pos = end
+        return chunk & ((1 << nbits) - 1)
 
 
 class BitWriter:
@@ -114,6 +135,32 @@ def gorilla_encode(values: np.ndarray) -> bytes:
                 w.write(x >> trail, sig)
                 prev_lead, prev_sig = lead, sig
     return w.getvalue()
+
+
+def gorilla_decode(blob: bytes) -> np.ndarray:
+    r = BitReader(blob)
+    n = r.read(64)
+    out = np.empty(n, dtype=np.uint64)
+    if n == 0:
+        return out.view(np.float64)
+    cur = r.read(64)
+    out[0] = cur
+    lead, sig = 0, 0
+    for i in range(1, n):
+        if r.read(1) == 0:
+            out[i] = cur
+            continue
+        if r.read(1) == 0:  # '10': reuse block
+            mean_bits = r.read(sig)
+            x = mean_bits << (64 - lead - sig)
+        else:  # '11': new block
+            lead = r.read(5)
+            sig = r.read(6) + 1
+            mean_bits = r.read(sig)
+            x = mean_bits << (64 - lead - sig)
+        cur ^= x
+        out[i] = cur
+    return out.view(np.float64)
 
 
 def _toi64(u: int) -> int:

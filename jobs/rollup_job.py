@@ -11,12 +11,17 @@ metrics manifest; --resume anti-joins completed manifests and processes only
 pending buckets (north_rule: "resumable from per-partition checkpoints with
 lineage + metrics emitted per retention tier"). A run without --resume first
 drops any bucket >= --buckets left in --out by an earlier, wider run.
+--compress rewrites compressed/ whenever a bucket ran or an earlier compress
+step did not finish: a run with pending buckets first removes
+compressed/_SUCCESS, so the marker only vouches for a compress step that
+ran after the last bucket commit.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 import time
 
@@ -71,6 +76,9 @@ def main(argv: list[str] | None = None) -> int:
         if dropped:
             print(f"[rollup_job] dropped stale buckets {dropped}")
     print(f"[rollup_job] buckets total={args.buckets} pending={len(todo)}")
+    done_marker = os.path.join(args.out, "compressed", "_SUCCESS")
+    if todo and os.path.exists(done_marker):
+        os.remove(done_marker)  # the segments no longer match data/
     t0 = time.monotonic()
     for b in todo:
         sub = seqs.filter(F.col("bucket") == b).drop("bucket")
@@ -80,7 +88,9 @@ def main(argv: list[str] | None = None) -> int:
         print(f"[rollup_job] bucket={b} rows={sum(t['rows'] for t in m['tiers'].values())} "
               f"tokens={toks} wall={m['wall_sec']:.1f}s")
 
-    if args.compress and todo:
+    # also when every bucket is done but an earlier compress step died
+    # before it finished (Spark writes _SUCCESS last)
+    if args.compress and (todo or not os.path.exists(done_marker)):
         tiers_all = spark.read.parquet(f"{args.out}/data")
         segs = compress_tiers(tiers_all)
         write_table(segs, f"{args.out}/compressed", mode="overwrite", partition_by=["tier"])

@@ -259,6 +259,48 @@ def test_rerun_with_fewer_buckets_drops_the_rest(spark, tmp_path):
     assert pts == rows
 
 
+@pytest.mark.parametrize("earlier_input", [None, "synthetic:25"], ids=["fresh_out", "stale_compressed"])
+def test_resume_redoes_a_compress_step_killed_after_every_bucket_committed(spark, tmp_path, monkeypatch,
+                                                                           earlier_input):
+    """A kill after the last bucket commit and before the compress write
+    finishes leaves every bucket committed: the resume has no pending bucket
+    but must still write the segments, byte for byte what an uninterrupted
+    run writes. With ``stale_compressed`` the --out already holds a finished
+    compressed/ (and its _SUCCESS) from a run over another input, which the
+    killed run must not leave standing as if it were its own."""
+    from crossai_ts_spark.sources import io
+    from jobs.rollup_job import main
+
+    def job(out, *extra, input="synthetic:40"):
+        return main(["--input", input, "--out", out, "--buckets", "3", "--w", "64",
+                     "--fanout", "8", "--tiers", "2", "--compress", "--master", "local[4]", *extra])
+
+    def segments(out):
+        return sorted((r.doc_id, r.tier, r.n_points, bytes(r.ts_blob), bytes(r.val_blob))
+                      for r in spark.read.parquet(f"{out}/compressed").collect())
+
+    whole, killed = str(tmp_path / "whole"), str(tmp_path / "killed")
+    assert job(whole) == 0
+    if earlier_input:
+        assert job(killed, input=earlier_input) == 0
+        assert segments(killed) != segments(whole)
+    real = io.write_table
+
+    def dies_on_compress(df, location, *a, **kw):
+        if location.endswith("/compressed"):
+            raise OSError("killed in the compress write")
+        return real(df, location, *a, **kw)
+
+    monkeypatch.setattr(io, "write_table", dies_on_compress)
+    with pytest.raises(OSError, match="killed"):
+        job(killed)
+    monkeypatch.setattr(io, "write_table", real)
+    assert completed_buckets(killed) == {0, 1, 2}
+    assert not os.path.exists(os.path.join(killed, "compressed", "_SUCCESS"))
+    assert job(killed, "--resume") == 0
+    assert segments(killed) == segments(whole)
+
+
 def test_rollup_job_rejects_counts_below_one(spark, tmp_path):
     """--buckets 0 (or --w/--fanout/--tiers 0) is a usage error, exit 2,
     raised before anything in --out is touched: it used to drop every
