@@ -101,35 +101,24 @@ def bench_rollup(spark, n_docs: int, n_trials: int = 3) -> dict:
     wall = min(trials)
 
     # per-tier walls (BASELINE.json metric contract: throughput "per
-    # retention tier"): the fused cascade is ONE plan, so per-tier timing
-    # rolls up tier 1 from the corpus and re-aggregates tier k+1 from the
-    # persisted tier k (cascade_from_tier). tokens_per_sec keeps the headline definition (corpus tokens
-    # over that tier's wall). min-of-2 per tier.
-    from crossai_ts_spark.operators.rollup import cascade_from_tier
-
+    # retention tier"): tier k's wall is the job's kernel run through tier
+    # k, cascade(seqs, w=64, fanout=64, tiers=k), to a count; rows is tier
+    # k's row count from that run and tokens_per_sec is corpus tokens over
+    # that wall (so a deeper tier includes its shallower tiers' work).
+    # min-of-2 per tier.
     tier_detail: dict[int, dict] = {}
     for _ in range(2):
-        prev = None
         for k in (1, 2, 3):
-            cur = (
-                cascade(seqs, w=64, tiers=1)
-                if k == 1
-                else cascade_from_tier(prev, k - 1, w=64, fanout=64)
-            ).persist()
             t0 = time.monotonic()
-            n = cur.count()
+            rows = _count_tiers(spark, cascade(seqs, w=64, fanout=64, tiers=k))
             wk = time.monotonic() - t0
             best = tier_detail.get(k)
             if best is None or wk < best["sec"]:
                 tier_detail[k] = {
-                    "rows": n,
+                    "rows": rows[k],
                     "sec": round(wk, 3),
                     "tokens_per_sec": round(n_tokens / wk, 1),
                 }
-            if prev is not None:
-                prev.unpersist()
-            prev = cur
-        prev.unpersist()
 
     seqs.unpersist()
     return {
@@ -238,7 +227,7 @@ def build_records(rollup, q_secs, q_trials, sf, n_tiers: int = 3, q_loads=None):
         "n_tokens": rollup["n_tokens"],
         "wall_sec": round(rollup["wall_sec"], 2),
         "tokens_per_sec": round(rollup["tokens_per_sec"], 1),
-        # metric contract: throughput per retention tier (incremental path)
+        # metric contract: throughput per retention tier (cascade through tier k)
         "per_tier": {
             str(k): {"rows": d["rows"], "tps": d["tokens_per_sec"]}
             for k, d in sorted(tier_detail.items())

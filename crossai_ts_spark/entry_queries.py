@@ -3685,10 +3685,16 @@ def asof_join_events(spark, sf_dir):
     is DuckDB's native ASOF LEFT JOIN. Right side deduped to one row per
     (user, ts) — max event_id — so the nearest-tie is deterministic on
     both engines."""
+    return _asof_clicks_to_views(spark, sf_dir, F.desc("event_id"), "backward")
+
+
+def _asof_clicks_to_views(spark, sf_dir, tie_order, direction: str):
+    """Clicks as-of joined to the same user's views; the views are deduped
+    to one row per (user, ts) by ``tie_order`` on event_id."""
     from .operators.asof import asof_join
 
     ev = load(spark, sf_dir, "events")
-    wdedup = Window.partitionBy("user_id", "ts").orderBy(F.desc("event_id"))
+    wdedup = Window.partitionBy("user_id", "ts").orderBy(tie_order)
     r = (
         ev.filter(F.col("event_type") == "view")
         .select("user_id", "ts", "event_id", "value")
@@ -3697,7 +3703,7 @@ def asof_join_events(spark, sf_dir):
         .drop("rn")
     )
     left = ev.filter(F.col("event_type") == "click").select("user_id", "ts", "event_id")
-    j = asof_join(left, r, on="ts", by=["user_id"], direction="backward")
+    j = asof_join(left, r, on="ts", by=["user_id"], direction=direction)
     epoch = "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', {c})"
     return j.select(
         "user_id",
@@ -3727,37 +3733,13 @@ FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts <= r.ts
 """,
 )
 def asof_bucketed_events(spark, sf_dir):
-    """Time-bucketed two-phase as-of join (operators/asof.py
-    asof_join_bucketed, the hot-key refinement), FORWARD direction: every
-    click matched to the same user's next view at or after it. The ordered
-    window runs per (user, 6h-bucket) with a boundary carry, so no single
-    user's timeline ever sorts in one task; oracle is DuckDB's native
-    forward ASOF LEFT JOIN (l.ts <= r.ts). Right side deduped to one row
-    per (user, ts) — min event_id — so the nearest-tie is deterministic."""
-    from .operators.asof import asof_join_bucketed
-
-    ev = load(spark, sf_dir, "events")
-    wdedup = Window.partitionBy("user_id", "ts").orderBy(F.asc("event_id"))
-    r = (
-        ev.filter(F.col("event_type") == "view")
-        .select("user_id", "ts", "event_id", "value")
-        .withColumn("rn", F.row_number().over(wdedup))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
-    left = ev.filter(F.col("event_type") == "click").select("user_id", "ts", "event_id")
-    j = asof_join_bucketed(
-        left, r, on="ts", by=["user_id"], direction="forward", bucket_us=6 * 3_600_000_000
-    )
-    epoch = "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', {c})"
-    return j.select(
-        "user_id",
-        F.col("event_id").alias("l_event_id"),
-        F.expr(epoch.format(c="ts")).alias("l_ts_us"),
-        F.col("r_event_id"),
-        F.expr(epoch.format(c="r_ts")).alias("r_ts_us"),
-        F.col("r_value"),
-    )
+    """FORWARD as-of join: every click matched to the same user's next
+    view at or after it, by the same key-partitioned operator as
+    asof_join_events. The query no longer time-buckets; the name is kept
+    only for the registry. Oracle is DuckDB's native forward
+    ASOF LEFT JOIN (l.ts <= r.ts). Right side deduped to one row per
+    (user, ts) — min event_id — so the nearest-tie is deterministic."""
+    return _asof_clicks_to_views(spark, sf_dir, F.asc("event_id"), "forward")
 
 
 def _fir_exact_taps() -> list[float]:

@@ -1,9 +1,8 @@
 """As-of join — the timeseries join Spark lacks as a built-in.
 
 For each left row, attach the nearest right row of the same key at or
-before (backward) / at or after (forward) its timestamp, optionally within
-a tolerance — pandas.merge_asof / DuckDB ASOF JOIN semantics (both
-inclusive at equal timestamps).
+before (backward) / at or after (forward) its timestamp — pandas.merge_asof
+/ DuckDB ASOF JOIN semantics (both inclusive at equal timestamps).
 
 Scale shape: the naive formulation is a range join (quadratic blow-up per
 key); this one is the union-tag + ordered-window LOCF form — ONE shuffle of
@@ -13,16 +12,8 @@ and one that doesn't. Right rows must be unique per (by, on) for a
 deterministic match (dedup upstream; the nearest-tie among right rows is
 otherwise plan-dependent on every engine).
 
-Skew: one hot key lands its whole timeline in one task, like every
-ordered-window op. ``asof_join_bucketed`` is the standard refinement for
-when a single key outgrows an executor: time-bucketed two-phase
-processing — partition by (key, time_bucket), compute each bucket's last
-right row (a map-side-combined aggregate), LOCF the per-bucket lasts
-across buckets on the tiny (key, bucket) spine, and inject each bucket's
-carry as a boundary row — so the ordered window runs per (key, bucket)
-with bounded input while preserving the exact semantics of the plain
-path (equality-tested on random data, both directions, with and without
-tolerance).
+Skew: one key's timeline sorts in one task, as in every other
+ordered-window operator (sessionization, islands, gap-fill, rolling).
 """
 
 from __future__ import annotations
@@ -37,13 +28,9 @@ def asof_join(
     on: str = "ts",
     by: list[str] | None = None,
     direction: str = "backward",
-    tolerance_us: int | None = None,
-    prefix: str = "r_",
 ) -> DataFrame:
     """Left as-of join. Output = every left row + the matched right row's
-    payload columns (renamed ``prefix<col>``, null when no match or the
-    match falls outside ``tolerance_us`` microseconds — merge_asof
-    semantics: out-of-tolerance rows stay, their match nulls out)."""
+    payload columns (renamed ``r_<col>``, null when no match)."""
     if direction not in ("backward", "forward"):
         raise ValueError(f"direction must be backward|forward, got {direction!r}")
     by = list(by or ["user_id"])
@@ -72,161 +59,19 @@ def asof_join(
     )
     u = l2.unionByName(r2)
 
+    w = Window.partitionBy(*by).orderBy(F.col("_t").asc(), F.col("_tag").asc())
+    rp = F.when(F.col("_tag") == 1 - tag_left, F.col("_rp"))
     if direction == "backward":
-        w = (
-            Window.partitionBy(*by)
-            .orderBy(F.col("_t").asc(), F.col("_tag").asc())
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        match = F.last(F.when(F.col("_tag") == 1 - tag_left, F.col("_rp")), ignorenulls=True).over(w)
-        mts = F.last(F.when(F.col("_tag") == 1 - tag_left, F.col("_t")), ignorenulls=True).over(w)
+        w = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        match = F.last(rp, ignorenulls=True).over(w)
     else:
-        w = (
-            Window.partitionBy(*by)
-            .orderBy(F.col("_t").asc(), F.col("_tag").asc())
-            .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-        )
-        match = F.first(F.when(F.col("_tag") == 1 - tag_left, F.col("_rp")), ignorenulls=True).over(w)
-        mts = F.first(F.when(F.col("_tag") == 1 - tag_left, F.col("_t")), ignorenulls=True).over(w)
+        w = w.rowsBetween(Window.currentRow, Window.unboundedFollowing)
+        match = F.first(rp, ignorenulls=True).over(w)
 
-    out = (
-        u.withColumn("_match", match)
-        .withColumn("_mts", mts)
-        .filter(F.col("_tag") == tag_left)
-    )
-    # tz-free microsecond gap (parquet event times are TIMESTAMP_NTZ, which
-    # unix_micros rejects); numeric `on` columns subtract directly
-    if str(u.schema["_t"].dataType).lower().startswith("timestamp"):
-        gap = F.abs(F.expr("timestampdiff(MICROSECOND, _mts, _t)"))
-    else:
-        gap = F.abs(F.col("_t") - F.col("_mts"))
-    if tolerance_us is not None:
-        out = out.withColumn(
-            "_match", F.when(gap <= F.lit(tolerance_us), F.col("_match"))
-        ).withColumn("_mts", F.when(gap <= F.lit(tolerance_us), F.col("_mts")))
+    out = u.withColumn("_match", match).filter(F.col("_tag") == tag_left)
     sel = (
         [F.col(c) for c in by]
         + [F.col(f"_lp.{c}").alias(c) for c in lpayload]
-        + [F.col(f"_match.{c}").alias(f"{prefix}{c}") for c in rpayload]
-    )
-    return out.select(*sel)
-
-
-def asof_join_bucketed(
-    left: DataFrame,
-    right: DataFrame,
-    on: str = "ts",
-    by: list[str] | None = None,
-    direction: str = "backward",
-    tolerance_us: int | None = None,
-    bucket_us: int = 3_600_000_000,
-    prefix: str = "r_",
-) -> DataFrame:
-    """Hot-key-safe as-of join: same semantics as :func:`asof_join`, but the
-    ordered window runs per (key, time_bucket) instead of per key, so one
-    key holding half the corpus never lands its whole timeline in one task.
-
-    Two phases:
-      1. per-(key, bucket) LAST right row (max_by — a map-side-combined
-         aggregate, no window), then LOCF those lasts across buckets on the
-         (key, bucket) spine — a table with one row per key per active
-         bucket, orders of magnitude smaller than the data — giving each
-         bucket its boundary carry from all earlier buckets;
-      2. union left rows + in-bucket right rows + one carry row per bucket
-         (sorted first via tag -1), ordered window inside (key, bucket).
-
-    ``forward`` is run as ``backward`` on the negated time axis (the carry
-    then flows from later buckets, which is exactly the forward boundary).
-    The matched right row's REAL timestamp rides inside the carry struct,
-    so tolerance filtering is unchanged. Right rows must be unique per
-    (by, on), as in the plain path.
-    """
-    if direction not in ("backward", "forward"):
-        raise ValueError(f"direction must be backward|forward, got {direction!r}")
-    if bucket_us <= 0:
-        raise ValueError(f"bucket_us must be positive, got {bucket_us}")
-    by = list(by or ["user_id"])
-    lpayload = [c for c in left.columns if c not in by]
-    rpayload = [c for c in right.columns if c not in by]
-
-    def mic(df: DataFrame):
-        dt = df.schema[on].dataType
-        if str(dt).lower().startswith("timestamp"):
-            # TIMESTAMP_NTZ-safe epoch micros (unix_micros rejects NTZ)
-            return F.expr(
-                f"timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', "
-                f"cast(`{on}` as timestamp_ntz))"
-            )
-        return F.col(on).cast("long")
-
-    sgn = 1 if direction == "backward" else -1
-    lp = F.struct(*[F.col(c) for c in lpayload])
-    rp = F.struct(*[F.col(c) for c in rpayload])
-    l2 = left.select(
-        *by,
-        (mic(left) * sgn).alias("_s"),
-        mic(left).alias("_tus"),
-        lp.alias("_lp"),
-    )
-    r2 = right.select(
-        *by,
-        (mic(right) * sgn).alias("_s"),
-        F.struct(mic(right).alias("rt"), rp.alias("rp")).alias("_r"),
-    )
-    ltype = l2.schema["_lp"].dataType
-    rtype = r2.schema["_r"].dataType
-    B = int(bucket_us)
-    # exact floor bucketing for any sign (div truncates toward zero)
-    l3 = l2.withColumn("_b", F.expr(f"(_s - pmod(_s, {B})) div {B}"))
-    r3 = r2.withColumn("_b", F.expr(f"(_s - pmod(_s, {B})) div {B}"))
-
-    rb = r3.groupBy(*by, "_b").agg(F.max_by("_r", "_s").alias("_last"))
-    spine = l3.select(*by, "_b").union(r3.select(*by, "_b")).distinct()
-    wsp = (
-        Window.partitionBy(*by)
-        .orderBy("_b")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carry = (
-        spine.join(rb, [*by, "_b"], "left")
-        .withColumn("_carry", F.last("_last", ignorenulls=True).over(wsp))
-        .filter(F.col("_carry").isNotNull())
-        .select(
-            *by,
-            F.col("_b"),
-            (F.col("_b") * B).alias("_s"),
-            F.lit(-1).alias("_tag"),
-            F.lit(None).cast("long").alias("_tus"),
-            F.lit(None).cast(ltype).alias("_lp"),
-            F.col("_carry").alias("_r"),
-        )
-    )
-    l4 = l3.select(
-        *by, "_b", "_s", F.lit(1).alias("_tag"), "_tus", "_lp",
-        F.lit(None).cast(rtype).alias("_r"),
-    )
-    r4 = r3.select(
-        *by, "_b", "_s", F.lit(0).alias("_tag"),
-        F.lit(None).cast("long").alias("_tus"),
-        F.lit(None).cast(ltype).alias("_lp"), "_r",
-    )
-    u = l4.unionByName(r4).unionByName(carry)
-
-    w = (
-        Window.partitionBy(*by, "_b")
-        .orderBy(F.col("_s").asc(), F.col("_tag").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    out = (
-        u.withColumn("_match", F.last(F.when(F.col("_tag") != 1, F.col("_r")), ignorenulls=True).over(w))
-        .filter(F.col("_tag") == 1)
-    )
-    if tolerance_us is not None:
-        gap = F.abs(F.col("_tus") - F.col("_match.rt"))
-        out = out.withColumn("_match", F.when(gap <= F.lit(tolerance_us), F.col("_match")))
-    sel = (
-        [F.col(c) for c in by]
-        + [F.col(f"_lp.{c}").alias(c) for c in lpayload]
-        + [F.col(f"_match.rp.{c}").alias(f"{prefix}{c}") for c in rpayload]
+        + [F.col(f"_match.{c}").alias(f"r_{c}") for c in rpayload]
     )
     return out.select(*sel)

@@ -206,29 +206,6 @@ def simhash_signatures(sh: DataFrame, bits: int = 32) -> DataFrame:
     return votes.select("doc_id", sig.alias("simhash"))
 
 
-def _cos_pairs(pairs: DataFrame, threshold: float) -> DataFrame:
-    """Score (ea, eb) pairs that carry pre-attached norms _na/_nb.
-
-    The norms are computed ONCE per vector row (see similarity._norm) so a
-    pair costs one O(dim) fold, not three; dot/(na*nb) is bit-identical to
-    the inlined dot/(sqrt(aa)*sqrt(bb)) — the same fold produces na/nb,
-    and the multiply/divide order is unchanged."""
-    dot = (
-        "aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * cast(y as double)), "
-        "cast(0.0 as double), (acc, v) -> acc + v)"
-    )
-    cos = F.expr(dot.format(a="ea", b="eb")) / (F.col("_na") * F.col("_nb"))
-    return pairs.select("id_a", "id_b", cos.alias("cos_sim")).filter(F.col("cos_sim") >= threshold)
-
-
-def _norm_expr(col: str):
-    dot = (
-        "aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * cast(y as double)), "
-        "cast(0.0 as double), (acc, v) -> acc + v)"
-    )
-    return F.sqrt(F.expr(dot.format(a=col, b=col)))
-
-
 def embedding_near_dups(
     emb: DataFrame,
     threshold: float = 0.95,
@@ -249,15 +226,18 @@ def embedding_near_dups(
     dedup's job). Recall for cos >= 0.95 pairs with 8-bit tables is
     (1 - (1-p^8)^4), p = 1 - acos(0.95)/pi ~ 0.9, i.e. ~97%.
     """
+    from .similarity import _cos_with_norms, _norm, lsh_bucket_col
+
+    # norms are computed ONCE per vector row, so a pair costs one O(dim)
+    # fold, not three (similarity._norm)
     a = emb.select(
         F.col("vec_id").alias("id_a"), F.col("embedding").alias("ea"),
-        _norm_expr("embedding").alias("_na"),
+        _norm("embedding").alias("_na"),
     )
     b = emb.select(
         F.col("vec_id").alias("id_b"), F.col("embedding").alias("eb"),
-        _norm_expr("embedding").alias("_nb"),
+        _norm("embedding").alias("_nb"),
     )
-    from .similarity import lsh_bucket_col
 
     base = emb.select("vec_id", "embedding")
     # every table's bucket in ONE projection over ONE scan (the 4-way
@@ -302,7 +282,9 @@ def embedding_near_dups(
         .distinct()
     )
     pairs = cand.join(a, "id_a").join(b, "id_b")
-    return _cos_pairs(pairs, threshold)
+    return pairs.select("id_a", "id_b", _cos_with_norms("ea", "eb").alias("cos_sim")).filter(
+        F.col("cos_sim") >= threshold
+    )
 
 
 def _windows(docs: DataFrame, w: int, text: str = "text") -> DataFrame:

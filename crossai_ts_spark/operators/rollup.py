@@ -11,11 +11,11 @@ Scale design (the part that matters at 10^12 sequences / 100 TB):
   last∘last. So the entire 3-tier rollup of 100 TB of tokens is one narrow
   map stage; only the (tiny) tier rows are ever shuffled — and only if a
   later op asks for it.
-* ``cascade_from_tier`` re-aggregates a tier k table into tier k+1 with
-  a plain groupBy (Spark's partial aggregation does the map-side
-  combine). Only bench.py's per-tier timing calls it; the checkpointed
-  job runs :func:`cascade` per bucket. ``operators/salted.py`` holds the
-  salted two-phase rollup for skewed global keys.
+* :func:`cascade` is the only tier rollup: the checkpointed job runs it
+  per bucket and bench.py times tier k as ``cascade(..., tiers=k)``. The
+  relational groupBy re-aggregation of a stored tier is a test reference
+  in ``oracle/rollup.py``. ``operators/salted.py`` holds the salted
+  two-phase rollup for skewed global keys.
 
 Exactness: int64 sums of int32 tokens; mean = one float64 division
 t_sum/t_cnt ⇒ bitwise-stable under any partitioning or tier path
@@ -161,45 +161,6 @@ def cascade(
             yield pd.DataFrame(out)
 
     return df.filter(NONEMPTY).mapInPandas(kernel, schema=TIER_SCHEMA)
-
-
-def cascade_from_tier(
-    tier_df: DataFrame,
-    from_tier: int,
-    w: int = DEFAULT_W,
-    fanout: int = DEFAULT_FANOUT,
-) -> DataFrame:
-    """Re-aggregate tier k rows into tier k+1 rows via groupBy.
-
-    The relational form of the partial-agg identities. bench.py times
-    each tier with it; the checkpointed job does not call it.
-    """
-    width_next = tier_width(from_tier + 1, w, fanout)
-    win = (F.col("window_start") / F.lit(width_next)).cast("long")
-    g = (
-        tier_df.filter(F.col("tier") == from_tier)
-        .withColumn("_ws_next", win * width_next)
-        .groupBy("doc_id", "source", "_ws_next")
-        .agg(
-            F.min("t_min").alias("t_min"),
-            F.max("t_max").alias("t_max"),
-            F.sum("t_sum").alias("t_sum"),
-            F.sum("t_cnt").alias("t_cnt"),
-            F.max_by("t_last", "window_start").alias("t_last"),
-        )
-    )
-    return g.select(
-        "doc_id",
-        "source",
-        F.lit(from_tier + 1).cast("int").alias("tier"),
-        F.col("_ws_next").alias("window_start"),
-        "t_min",
-        "t_max",
-        "t_sum",
-        "t_cnt",
-        "t_last",
-        (F.col("t_sum").cast("double") / F.col("t_cnt").cast("double")).alias("t_mean"),
-    )
 
 
 def rollup_histogram(

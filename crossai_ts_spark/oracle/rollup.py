@@ -10,12 +10,19 @@ Exactness contract (matches the Spark engine bit-for-bit):
 Tumbling semantics follow caits/windowing.py:188-202 ``create_chunks``:
 ceil(n/W) windows, ragged tail KEPT. (The full-windows-only variant of
 caits/windowing.py:40-44 is a post-filter: t_cnt == W.)
+
+``cascade_from_tier`` is the one Spark reference here: the groupBy
+re-aggregation of a stored tier k into tier k+1.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+from ..schema import tier_width
 
 
 def rollup_doc(tokens: np.ndarray, w: int) -> dict[str, np.ndarray]:
@@ -91,3 +98,43 @@ def cascade_oracle(
     """
     frames = [rollup_frame(docs, w * fanout ** (t - 1), tier=t) for t in range(1, tiers + 1)]
     return pd.concat(frames, ignore_index=True)
+
+
+def cascade_from_tier(
+    tier_df: DataFrame,
+    from_tier: int,
+    w: int = 64,
+    fanout: int = 64,
+) -> DataFrame:
+    """Re-aggregate tier k rows into tier k+1 rows via groupBy.
+
+    The relational form of the partial-agg identities (a Spark plan, not
+    numpy): re-aggregating the kernel's tier 1 with it must give tier 2
+    of :func:`cascade_oracle` bitwise. No job or bench runs it.
+    """
+    width_next = tier_width(from_tier + 1, w, fanout)
+    win = (F.col("window_start") / F.lit(width_next)).cast("long")
+    g = (
+        tier_df.filter(F.col("tier") == from_tier)
+        .withColumn("_ws_next", win * width_next)
+        .groupBy("doc_id", "source", "_ws_next")
+        .agg(
+            F.min("t_min").alias("t_min"),
+            F.max("t_max").alias("t_max"),
+            F.sum("t_sum").alias("t_sum"),
+            F.sum("t_cnt").alias("t_cnt"),
+            F.max_by("t_last", "window_start").alias("t_last"),
+        )
+    )
+    return g.select(
+        "doc_id",
+        "source",
+        F.lit(from_tier + 1).cast("int").alias("tier"),
+        F.col("_ws_next").alias("window_start"),
+        "t_min",
+        "t_max",
+        "t_sum",
+        "t_cnt",
+        "t_last",
+        (F.col("t_sum").cast("double") / F.col("t_cnt").cast("double")).alias("t_mean"),
+    )

@@ -348,11 +348,52 @@ def test_asof_join_semantics(spark):
     assert fwd.loc[101, "r_event_id"] == 902
     assert fwd.loc[102, "r_event_id"] == 900
 
-    tol = asof_join(left, right, direction="backward", tolerance_us=2_000_000)
-    tolp = tol.toPandas().set_index("event_id")
-    assert tolp.loc[100, "r_event_id"] == 901        # gap 0 <= 2s
-    assert np.isnan(tolp.loc[101, "r_event_id"])     # gap 10s > 2s -> nulled
-    assert len(tolp) == 4                            # merge_asof: rows kept
+
+@pytest.mark.parametrize("direction", ["backward", "forward"])
+def test_asof_join_matches_merge_asof(spark, direction):
+    """Random data against pandas.merge_asof: a `long` on column, equal
+    left/right timestamps (both inclusive), several left rows on one
+    timestamp, and keys with no right rows."""
+    import random
+
+    import pandas as pd
+
+    from crossai_ts_spark.operators.asof import asof_join
+
+    rng = random.Random(11)
+    # u5/u6 hold left rows only; 2,000 timestamps for 550 rows forces
+    # equal timestamps within and across the two sides
+    lrows = [(f"u{rng.randrange(7)}", rng.randrange(0, 2_000), i) for i in range(400)]
+    # right unique per (key, ts); it takes the first left rows' (key, ts)
+    # too, so equal-timestamp matches occur whatever the draw
+    rkeys = {(k, t) for k, t, _ in lrows[:20] if k < "u5"}
+    while len(rkeys) < 150:
+        rkeys.add((f"u{rng.randrange(5)}", rng.randrange(0, 2_000)))
+    rrows = [(k, t, i * 10) for i, (k, t) in enumerate(sorted(rkeys))]
+    left = spark.createDataFrame(lrows, "user_id string, ts long, lseq long")
+    right = spark.createDataFrame(rrows, "user_id string, ts long, rval long")
+
+    got = (
+        asof_join(left, right, on="ts", by=["user_id"], direction=direction)
+        .toPandas().set_index("lseq").sort_index()
+    )
+    lp = pd.DataFrame(lrows, columns=["user_id", "ts", "lseq"]).sort_values("ts")
+    rp = pd.DataFrame(rrows, columns=["user_id", "r_ts", "rval"]).sort_values("r_ts")
+    exp = (
+        pd.merge_asof(lp, rp, left_on="ts", right_on="r_ts", by="user_id",
+                      direction=direction, allow_exact_matches=True)
+        .rename(columns={"rval": "r_rval"}).set_index("lseq").sort_index()
+    )
+    assert len(got) == len(lrows) and got.index.equals(exp.index)
+    assert got.user_id.tolist() == exp.user_id.tolist()
+    assert got.ts.tolist() == exp.ts.tolist()
+    for c in ("r_ts", "r_rval"):
+        g, e = got[c].astype("float64"), exp[c].astype("float64")
+        assert g.isna().equals(e.isna()), c
+        assert (g[g.notna()] == e[e.notna()]).all(), c
+    assert got.r_rval.isna().any() and got.r_rval.notna().any()
+    assert got[got.user_id.isin(["u5", "u6"])].r_rval.isna().all()
+    assert (got.ts == got.r_ts).any()  # an equal-timestamp match was taken
 
 
 def test_bloom_build_prune_no_false_negatives(spark):
@@ -525,78 +566,6 @@ def test_connected_components_check_every(spark):
         got = connected_components(df, check_every=k).toPandas().set_index("node").comp.to_dict()
         assert got == base
     assert base["0063"] == "0000" and base["9001"] == "9000"
-
-
-def test_asof_join_bucketed_equals_plain(spark):
-    """Time-bucketed two-phase as-of must equal the plain path exactly —
-    random data, both directions, with and without tolerance."""
-    import random
-
-    from crossai_ts_spark.operators.asof import asof_join, asof_join_bucketed
-
-    rng = random.Random(7)
-    lrows = [(f"u{rng.randrange(5)}", rng.randrange(0, 100_000), i) for i in range(400)]
-    # right unique per (key, ts)
-    seen, rrows = set(), []
-    while len(rrows) < 150:
-        k, t = f"u{rng.randrange(5)}", rng.randrange(0, 100_000)
-        if (k, t) not in seen:
-            seen.add((k, t))
-            rrows.append((k, t, len(rrows) * 10))
-    left = spark.createDataFrame(lrows, "user_id string, ts long, lseq long")
-    right = spark.createDataFrame(rrows, "user_id string, ts long, rval long")
-
-    for direction in ("backward", "forward"):
-        for tol in (None, 5_000):
-            plain = asof_join(left, right, on="ts", by=["user_id"],
-                              direction=direction, tolerance_us=tol)
-            buck = asof_join_bucketed(left, right, on="ts", by=["user_id"],
-                                      direction=direction, tolerance_us=tol,
-                                      bucket_us=7_000)
-            cols = sorted(plain.columns)
-            assert sorted(buck.columns) == cols
-            diff = plain.select(cols).exceptAll(buck.select(cols)).count() \
-                + buck.select(cols).exceptAll(plain.select(cols)).count()
-            assert diff == 0, (direction, tol)
-
-
-def test_asof_join_bucketed_timestamp_and_hot_key(spark):
-    """Timestamp `on` column works, and a hot key (one user = 50% of rows)
-    has its per-(key,bucket) window input bounded far below its per-key
-    total — the whole point of the refinement."""
-    from datetime import datetime, timedelta
-
-    from crossai_ts_spark.operators.asof import asof_join, asof_join_bucketed
-
-    t0 = datetime(2024, 1, 1)
-    n = 2000
-    lrows = [("hot" if i % 2 == 0 else f"u{i % 7}", t0 + timedelta(seconds=i * 3), i)
-             for i in range(n)]
-    rrows = [("hot" if i % 2 == 0 else f"u{i % 7}", t0 + timedelta(seconds=i * 11), i * 100)
-             for i in range(n // 4)]
-    left = spark.createDataFrame(lrows, "user_id string, ts timestamp, lseq long")
-    right = spark.createDataFrame(rrows, "user_id string, ts timestamp, rval long")
-
-    bucket_us = 300 * 1_000_000  # 5-minute buckets
-    plain = asof_join(left, right, on="ts", by=["user_id"], direction="backward")
-    buck = asof_join_bucketed(left, right, on="ts", by=["user_id"],
-                              direction="backward", bucket_us=bucket_us)
-    cols = sorted(plain.columns)
-    diff = plain.select(cols).exceptAll(buck.select(cols)).count() \
-        + buck.select(cols).exceptAll(plain.select(cols)).count()
-    assert diff == 0
-
-    # boundedness: the hot key's largest (key,bucket) group is a small
-    # fraction of its full timeline (which is what the plain path sorts
-    # inside ONE task)
-    hot_total = sum(1 for r in lrows if r[0] == "hot") + sum(1 for r in rrows if r[0] == "hot")
-    per_bucket = (
-        left.unionByName(right.withColumnRenamed("rval", "lseq"))
-        .filter(F.col("user_id") == "hot")
-        .withColumn("b", F.expr(f"unix_micros(cast(ts as timestamp)) div {bucket_us}"))
-        .groupBy("b").count().agg(F.max("count")).collect()[0][0]
-    )
-    assert per_bucket * 4 < hot_total
 
 
 def test_contamination_scores_semantics(spark):

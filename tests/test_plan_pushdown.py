@@ -65,16 +65,20 @@ def test_bm25_plan_broadcasts_stats_not_corpus(spark):
     assert "BroadcastNestedLoopJoin BuildRight, Cross" in plan or "BroadcastExchange" in plan, plan
 
 
-def test_asof_bucketed_plan_partitions_by_bucket(spark):
-    """The main ordered window hash-partitions on (key, bucket), not on the
-    key alone — the whole point of the hot-key refinement."""
-    from crossai_ts_spark.operators.asof import asof_join_bucketed
+def test_asof_plan_one_key_exchange_no_join(spark):
+    """The as-of join is one hash exchange of left+right on the key feeding
+    the ordered window: no join node, no second exchange on the key."""
+    from crossai_ts_spark.operators.asof import asof_join
 
     ev = spark.read.parquet(f"{SF}/events.parquet")
     l = ev.filter("event_type = 'click'").select("user_id", "ts", "event_id")
     r = ev.filter("event_type = 'view'").select("user_id", "ts", "value")
-    plan = _plan(asof_join_bucketed(l, r, on="ts", by=["user_id"], bucket_us=3_600_000_000))
-    assert "hashpartitioning(user_id" in plan and "_b#" in plan.split("hashpartitioning(user_id", 1)[1][:80], plan
+    for direction in ("backward", "forward"):
+        plan = _plan(asof_join(l, r, on="ts", by=["user_id"], direction=direction))
+        assert plan.count("Exchange hashpartitioning(user_id") == 1, plan
+        assert "Join" not in plan, plan
+        window = plan.split("Window [", 1)[1]
+        assert "Exchange hashpartitioning(user_id" in window, plan
 
 
 def test_bucketed_tables_join_without_exchange(spark, tmp_path):

@@ -10,8 +10,8 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from crossai_ts_spark.operators.rollup import cascade, cascade_from_tier
-from crossai_ts_spark.oracle.rollup import cascade_oracle, rollup_frame
+from crossai_ts_spark.operators.rollup import cascade
+from crossai_ts_spark.oracle.rollup import cascade_from_tier, cascade_oracle, rollup_frame
 
 KEY = ["doc_id", "tier", "window_start"]
 W, FANOUT, TIERS = 64, 8, 3  # fanout 8 so tier3 (W*64=4096) is exercised by tiny docs
