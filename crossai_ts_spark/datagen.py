@@ -77,7 +77,6 @@ def gen_sequences(
     spark: SparkSession,
     n_docs: int = 5000,
     seed: int = 42,
-    max_tok: int | None = None,
     partitions: int | None = None,
 ) -> DataFrame:
     """Distributed generation: spark.range(n_docs) → mapInPandas.
@@ -91,7 +90,7 @@ def gen_sequences(
     @worker_kernel
     def make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = [_doc(seed, int(i), max_tok) for i in pdf["id"]]
+            rows = [_doc(seed, int(i), None) for i in pdf["id"]]
             yield pd.DataFrame(
                 {
                     "doc_id": [r[0] for r in rows],

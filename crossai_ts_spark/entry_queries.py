@@ -23,6 +23,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .functions.spectral_exact import dsp_exact_sql, mfcc_stats_sql, spectral_exact_sql
 from .operators.rollup import cascade
 from .operators.salted import salted_tier_source_rollup
 from .sources.tokenize import tokenize_documents
@@ -492,7 +493,7 @@ def gapfill_linear(spark, sf_dir):
     # kernel — bitwise-equal to floor-checksums of the numpy oracle
     # (tested) — without generating the 63M-point dense grid through
     # explode + per-point hash-aggregate probes
-    out = gapfill_linear_checksum(obs, quantize=1024.0)
+    out = gapfill_linear_checksum(obs)
     return out.select(
         F.col("doc_id").cast("long").alias("user_id"), "n_points", "chk"
     )
@@ -1389,18 +1390,22 @@ def ngram_jaccard(spark, sf_dir):
     document-frequency cap, never O(n^2)) — operators/dedup.py."""
     from .operators.dedup import ngram_jaccard_pairs, shingles
 
-    sh = shingles(load(spark, sf_dir, "documents"), n=3)
+    sh = shingles(load(spark, sf_dir, "documents"))
     return ngram_jaccard_pairs(sh, threshold=0.1, max_df=1000)
 
 
-def _minhash_sql(k: int = 8) -> str:
-    p = 2147483647
+def _minhash_sql() -> str:
+    from .operators.dedup import LSH_BAND, MINHASH_K, MINHASH_PRIME
+
+    p = MINHASH_PRIME
     mins = ",\n         ".join(
-        f"MIN(((s % {p}) * {2 * i + 1} + {i * 40503 + 17}) % {p}) AS mh{i}" for i in range(k)
+        f"MIN(((s % {p}) * {2 * i + 1} + {i * 40503 + 17}) % {p}) AS mh{i}" for i in range(MINHASH_K)
     )
     bands = "\n  UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band, CAST(mh{2*b} AS VARCHAR) || '_' || CAST(mh{2*b+1} AS VARCHAR) AS key FROM mh"
-        for b in range(k // 2)
+        f"SELECT doc_id, {b} AS band, "
+        + " || '_' || ".join(f"CAST(mh{LSH_BAND * b + j} AS VARCHAR)" for j in range(LSH_BAND))
+        + " AS key FROM mh"
+        for b in range(MINHASH_K // LSH_BAND)
     )
     return (
         SQL_SH
@@ -1422,7 +1427,7 @@ FROM btc a JOIN btc b ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_
     )
 
 
-@q("minhash_lsh", _minhash_sql(8))
+@q("minhash_lsh", _minhash_sql())
 def minhash_lsh(spark, sf_dir):
     """MinHash+LSH candidate pairs (K=8, bands of 2, bucket-size cap) —
     operators/dedup.py."""
@@ -1431,18 +1436,18 @@ def minhash_lsh(spark, sf_dir):
     # distinct=False: min over the shingle multiset == min over its set, so
     # signatures (and the oracle hash) are unchanged while the shingle-table
     # dedup exchange disappears
-    sh = shingles(load(spark, sf_dir, "documents"), n=3, distinct=False)
-    sig = minhash_signatures(sh, k=8)
-    return lsh_candidate_pairs(sig, k=8, band_size=2, max_bucket=1000)
+    sh = shingles(load(spark, sf_dir, "documents"), distinct=False)
+    sig = minhash_signatures(sh)
+    return lsh_candidate_pairs(sig, max_bucket=1000)
 
 
-def _dedup_clusters_sql(k: int = 8) -> str:
+def _dedup_clusters_sql() -> str:
     # transitive closure by recursive CTE (UNION dedups -> fixpoint), then
     # component id = min reachable id — the same pure function of the edge
     # set that min-label propagation converges to on the Spark side
     return f"""
 WITH RECURSIVE pairs AS (
-  {_minhash_sql(k)}
+  {_minhash_sql()}
 ), sym AS (
   SELECT doc_a AS a, doc_b AS b FROM pairs
   UNION ALL
@@ -1456,7 +1461,7 @@ SELECT node AS doc_id, MIN(r) AS cluster_id FROM cc GROUP BY node
 """
 
 
-@q("dedup_clusters", _dedup_clusters_sql(8))
+@q("dedup_clusters", _dedup_clusters_sql())
 def dedup_clusters(spark, sf_dir):
     """Near-dup clusters: MinHash-LSH candidate pairs -> connected
     components (min-label propagation, operators/dedup.py) -> (doc,
@@ -1468,9 +1473,9 @@ def dedup_clusters(spark, sf_dir):
 
     # distinct=False: identical MinHash signatures without the shingle
     # dedup exchange (min over multiset == min over set)
-    sh = shingles(load(spark, sf_dir, "documents"), n=3, distinct=False)
-    sig = minhash_signatures(sh, k=8)
-    pairs = lsh_candidate_pairs(sig, k=8, band_size=2, max_bucket=1000)
+    sh = shingles(load(spark, sf_dir, "documents"), distinct=False)
+    sig = minhash_signatures(sh)
+    pairs = lsh_candidate_pairs(sig, max_bucket=1000)
     # operator default check_every=2 kept deliberately: probing every
     # round was tried in r8 (LSH clusters converge in 2-3 rounds, so one
     # spare round looked wasteful) and measured SLOWER interleaved
@@ -1480,11 +1485,13 @@ def dedup_clusters(spark, sf_dir):
     return cc.select(F.col("node").alias("doc_id"), F.col("comp").alias("cluster_id"))
 
 
-def _simhash_sql(bits: int = 16) -> str:
+def _simhash_sql() -> str:
+    from .operators.dedup import SIMHASH_BITS
+
     votes = ",\n         ".join(
-        f"SUM(CASE WHEN (s >> {i}) & 1 = 1 THEN 1 ELSE -1 END) AS v{i}" for i in range(bits)
+        f"SUM(CASE WHEN (s >> {i}) & 1 = 1 THEN 1 ELSE -1 END) AS v{i}" for i in range(SIMHASH_BITS)
     )
-    sig = " + ".join(f"(CASE WHEN v{i} > 0 THEN {1 << i} ELSE 0 END)" for i in range(bits))
+    sig = " + ".join(f"(CASE WHEN v{i} > 0 THEN {1 << i} ELSE 0 END)" for i in range(SIMHASH_BITS))
     return (
         SQL_SH
         + f"""
@@ -1498,13 +1505,13 @@ SELECT doc_id, ({sig})::BIGINT AS simhash FROM votes
     )
 
 
-@q("simhash", _simhash_sql(16))
+@q("simhash", _simhash_sql())
 def simhash(spark, sf_dir):
     """SimHash signatures (16-bit here; 64 at scale) — operators/dedup.py."""
     from .operators.dedup import shingles, simhash_signatures
 
-    sh = shingles(load(spark, sf_dir, "documents"), n=3)
-    return simhash_signatures(sh, bits=16)
+    sh = shingles(load(spark, sf_dir, "documents"))
+    return simhash_signatures(sh)
 
 
 @q(
@@ -1706,8 +1713,8 @@ def augment_gain_noise(spark, sf_dir):
     from .operators.augment import add_white_noise, random_gain
 
     seqs = tokenize_documents(load(spark, sf_dir, "documents"))
-    g = random_gain(seqs, 0.8, 1.2)
-    n = add_white_noise(seqs.select("doc_id", "tokens"), k=10.0).select(
+    g = random_gain(seqs)
+    n = add_white_noise(seqs.select("doc_id", "tokens")).select(
         "doc_id",
         (
             F.floor(
@@ -1915,13 +1922,7 @@ def detection_metrics(spark, sf_dir):
     )
 
 
-def _spectral_exact_sql_lazy() -> str:
-    from .functions.spectral_exact import spectral_exact_sql
-
-    return spectral_exact_sql()
-
-
-@q("spectral_features", _spectral_exact_sql_lazy())
+@q("spectral_features", spectral_exact_sql())
 def spectral_features_q(spark, sf_dir):
     """Spectral feature struct (centroid/rolloff/spread/skewness/kurtosis/
     std/slope/decrease/rms — caits/fe/_spectral.py:8-426 formulas) over the
@@ -1936,13 +1937,7 @@ def spectral_features_q(spark, sf_dir):
     return spectral_features_exact(seqs)
 
 
-def _dsp_exact_sql_lazy() -> str:
-    from .functions.spectral_exact import dsp_exact_sql
-
-    return dsp_exact_sql()
-
-
-@q("dsp_features", _dsp_exact_sql_lazy())
+@q("dsp_features", dsp_exact_sql())
 def dsp_features_q(spark, sf_dir):
     """Mel energies + MFCCs (caits/fe/_spectrum.py:339-462 pipeline) over
     the canonical first 64-token frame, FULL oracle: mel energies are
@@ -1955,13 +1950,7 @@ def dsp_features_q(spark, sf_dir):
     return dsp_features_exact(seqs)
 
 
-def _mfcc_stats_sql_lazy() -> str:
-    from .functions.spectral_exact import mfcc_stats_sql
-
-    return mfcc_stats_sql()
-
-
-@q("mfcc_stats", _mfcc_stats_sql_lazy())
+@q("mfcc_stats", mfcc_stats_sql())
 def mfcc_stats_q(spark, sf_dir):
     """mfcc_stats composite (caits/fe/_spectrum.py:432-462: per-coefficient
     mean (+) std across frames) over up to 8 non-overlapping 64-token
@@ -1983,7 +1972,7 @@ def _plane_sql(p) -> str:
     return "[" + ", ".join(f"'{float(x)!r}'::DOUBLE" for x in p) + "]"
 
 
-def _bucket_sql(dim: int, n_bits: int, seed: int, vec: str = "embedding") -> str:
+def _bucket_sql(dim: int, n_bits: int, seed: int) -> str:
     """DuckDB expression computing the SAME random-hyperplane LSH bucket as
     operators/similarity.lsh_bucket: identical literals, identical left-fold
     dot product, identical sign test — bitwise-deterministic both engines."""
@@ -1991,16 +1980,13 @@ def _bucket_sql(dim: int, n_bits: int, seed: int, vec: str = "embedding") -> str
 
     planes = _hyperplanes(dim, n_bits, seed)
     bits = [
-        f"(CASE WHEN {SQL_DOT.format(a=vec, b=_plane_sql(p))} > 0 THEN {1 << i} ELSE 0 END)"
+        f"(CASE WHEN {SQL_DOT.format(a='embedding', b=_plane_sql(p))} > 0 THEN {1 << i} ELSE 0 END)"
         for i, p in enumerate(planes)
     ]
     return "(" + " + ".join(bits) + ")::BIGINT"
 
 
-def _emb_near_dup_sql(
-    threshold: float, dim: int, n_bits: int, n_tables: int, seed: int,
-    max_bucket: int = 10000,
-) -> str:
+def _emb_near_dup_sql(threshold: float, dim: int, n_bits: int, n_tables: int, seed: int) -> str:
     tables = "\n  UNION ALL ".join(
         f"SELECT {t} AS tbl, vec_id, {_bucket_sql(dim, n_bits, seed + 1000003 * t)} AS bucket "
         "FROM embeddings"
@@ -2011,13 +1997,13 @@ def _emb_near_dup_sql(
         + f" / (sqrt({SQL_DOT.format(a='ea.embedding', b='ea.embedding')})"
         + f" * sqrt({SQL_DOT.format(a='eb.embedding', b='eb.embedding')}))"
     )
-    # mirror the engine's max_bucket cap so both plans drop the SAME
+    # mirror the engine's max_bucket cap (10000) so both plans drop the SAME
     # degenerate buckets (operators/dedup.embedding_near_dups default)
     return f"""
 WITH bt0 AS (
   {tables}
 ), keep AS (
-  SELECT tbl, bucket FROM bt0 GROUP BY tbl, bucket HAVING COUNT(*) <= {max_bucket}
+  SELECT tbl, bucket FROM bt0 GROUP BY tbl, bucket HAVING COUNT(*) <= 10000
 ), bt AS (
   SELECT bt0.* FROM bt0 JOIN keep USING (tbl, bucket)
 ), cand AS (
@@ -2042,13 +2028,17 @@ def embedding_near_dups_q(spark, sf_dir):
     return ed(e, threshold=0.42, dim=64, n_bits=6, n_tables=3, seed=42)
 
 
-def _lsh_ann_sql(k: int, n_bits: int, seed: int, dim: int, n_probes: int = 1) -> str:
+# lsh_ann probes: each query's own bucket and its first Hamming-1 neighbours
+LSH_ANN_PROBES = 3
+
+
+def _lsh_ann_sql(k: int, n_bits: int, seed: int, dim: int) -> str:
     cos = (
         SQL_DOT.format(a="q.qe", b="c.embedding")
         + f" / (sqrt({SQL_DOT.format(a='q.qe', b='q.qe')})"
         + f" * sqrt({SQL_DOT.format(a='c.embedding', b='c.embedding')}))"
     )
-    probes = ", ".join(["bucket"] + [f"xor(bucket, {1 << i})" for i in range(n_probes - 1)])
+    probes = ", ".join(["bucket"] + [f"xor(bucket, {1 << i})" for i in range(LSH_ANN_PROBES - 1)])
     return f"""
 WITH cb AS (
   SELECT vec_id, embedding, {_bucket_sql(dim, n_bits, seed)} AS bucket FROM embeddings
@@ -2069,7 +2059,7 @@ SELECT q_id, r AS rank, vec_id, cos_sim FROM rk WHERE r <= {k}
 
 # upgrade lsh_ann from rows-only to a FULL oracle (deterministic literal
 # hyperplanes are SQL-expressible) — replaces the round-1 rows-only entry
-@q("lsh_ann", _lsh_ann_sql(5, 6, 42, 64, n_probes=3))
+@q("lsh_ann", _lsh_ann_sql(5, 6, 42, 64))
 def lsh_ann_oracle(spark, sf_dir):
     """Multi-probe LSH approximate NN (operators/similarity.py scale path):
     each query probes its own bucket + the two Hamming-1 neighbors. Full
@@ -2078,7 +2068,7 @@ def lsh_ann_oracle(spark, sf_dir):
 
     e = load(spark, sf_dir, "embeddings")
     q_ = e.filter(F.col("vec_id") < 10)
-    res = lsh_topk(e, q_, dim=64, k=5, n_bits=6, seed=42, n_probes=3)
+    res = lsh_topk(e, q_, dim=64, k=5, n_bits=6, seed=42, n_probes=LSH_ANN_PROBES)
     return res.select("q_id", F.col("rank").cast("long").alias("rank"), "vec_id", "cos_sim")
 
 
@@ -2134,7 +2124,7 @@ def ivf_ann(spark, sf_dir):
     from .operators.similarity import ivf_topk
 
     e = load(spark, sf_dir, "embeddings")
-    res = ivf_topk(e, e.filter(F.col("vec_id") < 10), n_cent=16, n_probe=3, k=5)
+    res = ivf_topk(e, e.filter(F.col("vec_id") < 10), n_cent=16, n_probe=3)
     return res.select("q_id", F.col("rank").cast("long").alias("rank"), "vec_id", "cos_sim")
 
 
@@ -2303,7 +2293,7 @@ def high_corr_pairs(spark, sf_dir):
 # -------------------------------------------------- Butterworth (full oracle)
 
 
-def _sosfilt_chk_sql(sos, quantize: int = 1024) -> str:
+def _sosfilt_chk_sql(sos) -> str:
     """DuckDB expression: fold each doc's token list through the DF2T biquad
     cascade (zero initial state, EXACT op order of functions/iir.sosfilt)
     accumulating sum(floor(y*Q)). Struct-typed fold state carries the 2
@@ -2340,7 +2330,7 @@ def _sosfilt_chk_sql(sos, quantize: int = 1024) -> str:
         slots.append(f"{lit(b1)} * {yin} - {lit(a1)} * {y_s} + {z2(s)}")
         slots.append(f"{lit(b2)} * {yin} - {lit(a2)} * {y_s}")
         yin = y_s
-    slots.append(f"acc[{chk_slot}] + floor({ys[-1]} * {float(quantize)!r})")
+    slots.append(f"acc[{chk_slot}] + floor({ys[-1]} * 1024.0)")
     zero_list = ", ".join(["0.0::DOUBLE"] * chk_slot)
     elem_list = ", ".join(["t::DOUBLE"] + ["0.0::DOUBLE"] * (chk_slot - 1))
     return (
@@ -2351,9 +2341,9 @@ def _sosfilt_chk_sql(sos, quantize: int = 1024) -> str:
 
 
 def _butter_query_sos():
-    from .functions.iir import butter_sos
+    from .functions.iir import DOCS_FILTER, butter_sos
 
-    return butter_sos(4, 4.0, 32.0, "lowpass")
+    return butter_sos(*DOCS_FILTER)
 
 
 SQL_BUTTER = f"""
@@ -2376,18 +2366,25 @@ def butterworth_sosfilt(spark, sf_dir):
     from .functions.iir import butterworth_docs
 
     seqs = tokenize_documents(load(spark, sf_dir, "documents"))
-    out = butterworth_docs(seqs, fs=32.0, filter_type="lowpass", cutoff_freq=4.0, order=4)
+    out = butterworth_docs(seqs)
     return out.select("doc_id", F.col("filt_chk").cast("long").alias("filt_chk"))
 
 
 # ------------------------------------------- cubic spline (full oracle)
 
 
-def _spline_oracle_sql(n: int = 8, quantize: float = 1048576.0) -> str:
-    """Unrolled not-a-knot cubic spline (n knots) + integer-grid Hermite
-    evaluation + floor checksum, mirroring oracle/signal.spline_chk_scalar
-    OPERATION FOR OPERATION (same literals, same associativity) so the
-    DuckDB doubles are bitwise-identical to the kernel's."""
+# cubic_spline_interp's knots per user and checksum quantizer
+SPLINE_KNOTS = 8
+SPLINE_Q = 1048576.0
+
+
+def _spline_oracle_sql() -> str:
+    """Unrolled not-a-knot cubic spline (SPLINE_KNOTS knots) + integer-grid
+    Hermite evaluation + floor checksum, mirroring
+    oracle/signal.spline_chk_scalar OPERATION FOR OPERATION (same literals,
+    same associativity) so the DuckDB doubles are bitwise-identical to the
+    kernel's."""
+    n = SPLINE_KNOTS
     xs = [f"x{i}" for i in range(1, n + 1)]
     cols = []
     for i in range(1, n + 1):
@@ -2479,12 +2476,12 @@ def _spline_oracle_sql(n: int = 8, quantize: float = 1048576.0) -> str:
 ), v AS (
   SELECT user_id, s, s * s AS s2, s * s * s AS s3, yi, yi1, mi, mi1, hi FROM ev2
 )
-SELECT user_id, SUM(floor(({val}) * {quantize!r}))::BIGINT AS spline_chk
+SELECT user_id, SUM(floor(({val}) * {SPLINE_Q!r}))::BIGINT AS spline_chk
 FROM v GROUP BY user_id
 """
 
 
-@q("cubic_spline_interp", SQL_EV + _spline_oracle_sql(8))
+@q("cubic_spline_interp", SQL_EV + _spline_oracle_sql())
 def cubic_spline_interp(spark, sf_dir):
     """Not-a-knot cubic spline (caits/performance/utils.py:51-107 /
     scipy.CubicSpline default) through each user's first 8 minute-bucket
@@ -2499,10 +2496,10 @@ def cubic_spline_interp(spark, sf_dir):
     )
     g = mb.groupBy("user_id").agg(
         F.slice(
-            F.sort_array(F.collect_list(F.struct("minute", "clicks", "total"))), 1, 8
+            F.sort_array(F.collect_list(F.struct("minute", "clicks", "total"))), 1, SPLINE_KNOTS
         ).alias("k"),
         F.count("*").alias("nmin"),
-    ).filter(F.col("nmin") >= 8)
+    ).filter(F.col("nmin") >= SPLINE_KNOTS)
 
     @worker_kernel
     def kernel(batches):
@@ -2519,7 +2516,7 @@ def cubic_spline_interp(spark, sf_dir):
                 ys = np.array([float(kk["clicks"]) / float(kk["total"]) for kk in knots])
                 m = spline_slopes(xs, ys)
                 t = np.arange(xs[0], xs[-1] + 1.0)
-                chk = np.floor(spline_eval(xs, ys, m, t) * 1048576.0).sum()
+                chk = np.floor(spline_eval(xs, ys, m, t) * SPLINE_Q).sum()
                 uids.append(uid)
                 chks.append(int(chk))
             yield pd.DataFrame({"user_id": uids, "spline_chk": chks})
@@ -2715,10 +2712,10 @@ def _ep3_oracle_sql() -> str:
     import numpy as np
 
     from .functions.iir import butter_sos, sosfilt_zi
-    from .plans.ep3 import DUR_MIN, GT_ERR_FRAC, IOU_TH, PROB_TH, STEP
+    from .plans.ep3 import DUR_MIN, GT_ERR_FRAC, IOU_TH, N_WINDOWS, PROB_TH, SMOOTH, STEP
 
-    n = 16
-    sos = butter_sos(4, 0.02, 1.0, "lowpass")
+    n = N_WINDOWS
+    sos = butter_sos(*SMOOTH)
     assert sos.shape[0] == 2
     zi = sosfilt_zi(sos)
 
@@ -3202,8 +3199,8 @@ def augment_pool_quantize(spark, sf_dir):
         F.expr("size(tokens) >= 2 AND array_min(tokens) < array_max(tokens)")
     )
     chk = "aggregate(transform(tokens_aug, v -> cast(floor(v * 1048576.0) as bigint)), cast(0 as bigint), (a, b) -> a + b)"
-    p = pool_ave(seqs, 4).select("doc_id", F.expr(chk).alias("pool_chk"), "tokens")
-    qn = quantize_uniform(p.select("doc_id", "tokens", "pool_chk"), 10).select(
+    p = pool_ave(seqs).select("doc_id", F.expr(chk).alias("pool_chk"), "tokens")
+    qn = quantize_uniform(p.select("doc_id", "tokens", "pool_chk")).select(
         "doc_id", "pool_chk", F.expr(chk).alias("quant_chk")
     )
     return qn.select("doc_id", "pool_chk", "quant_chk")
@@ -3244,14 +3241,14 @@ def augment_crop_resize(spark, sf_dir):
     seqs = tokenize_documents(load(spark, sf_dir, "documents")).filter(
         F.expr("size(tokens) >= 32")
     )
-    c = crop_ts(seqs, 32).select(
+    c = crop_ts(seqs).select(
         "doc_id",
         F.expr(
             "aggregate(tokens_aug, cast(0 as bigint), (a, b) -> a + cast(b as bigint))"
         ).alias("crop_sum"),
         "tokens",
     )
-    r = resize_linear(c.select("doc_id", "tokens", "crop_sum"), 64).select(
+    r = resize_linear(c.select("doc_id", "tokens", "crop_sum")).select(
         "doc_id",
         "crop_sum",
         F.expr(
@@ -3262,10 +3259,12 @@ def augment_crop_resize(spark, sf_dir):
     return r
 
 
-def _drift_sql(max_drift: float = 0.5, n_anchors: int = 5) -> str:
-    K = n_anchors - 1
+def _drift_sql() -> str:
+    from .operators.augment import MAX_DRIFT, N_ANCHORS
+
+    K = N_ANCHORS - 1
     walk = ["0.0::DOUBLE"]
-    for j in range(1, n_anchors):
+    for j in range(1, N_ANCHORS):
         walk.append(f"({walk[-1]} + ({_duck_u32(j)} / 4294967296.0 - 0.5))")
     anchors = "[" + ", ".join(walk) + "]"
     pos = f"(i * {K}.0::DOUBLE / greatest(n - 1, 1))"
@@ -3274,7 +3273,7 @@ def _drift_sql(max_drift: float = 0.5, n_anchors: int = 5) -> str:
     mx = f"list_aggregate(list_transform({anchors}, a -> abs(a)), 'max')"
     dr = (
         f"(({anchors})[{j0} + 1] * (1.0 - {frac}) + ({anchors})[{j0} + 2] * {frac})"
-        f" / nullif({mx}, 0.0) * {max_drift}"
+        f" / nullif({mx}, 0.0) * {MAX_DRIFT}"
         f" * (list_aggregate(toks, 'max')::DOUBLE - list_aggregate(toks, 'min')::DOUBLE)"
     )
     return (
@@ -3298,7 +3297,7 @@ def augment_drift(spark, sf_dir):
     seqs = tokenize_documents(load(spark, sf_dir, "documents")).filter(
         F.expr("size(tokens) >= 2")
     )
-    d = drift_additive(seqs, max_drift=0.5, n_anchors=5)
+    d = drift_additive(seqs)
     return d.select(
         "doc_id",
         F.expr(
@@ -3416,23 +3415,23 @@ def hashlib_md5_u32(doc_id: str) -> int:
     return int(hashlib.md5(f"{doc_id}:tw".encode()).hexdigest()[:8], 16)
 
 
-def _pcen_chk_sql(s: float = 0.1, eps: float = 1e-6, delta: float = 2.0,
-                  quantize: float = 1048576.0) -> str:
+def _pcen_chk_sql() -> str:
     """DuckDB expression folding functions/dsp2.pcen_docs' exact recursion:
     first-order IIR smoother + sqrt-form DRC (alpha=1, r=1/2 — division
     and sqrt are correctly rounded, so same literals + same op order =
     bitwise-equal doubles), accumulating sum(floor(v*Q)). List accumulator
     [M, chk] for the same struct-mutation reason as _sosfilt_chk_sql."""
+    from .functions.dsp2 import PCEN_DELTA, PCEN_EPS, PCEN_Q, PCEN_S
 
     def lit(v: float) -> str:
         return f"'{float(v)!r}'::DOUBLE"
 
-    m_new = f"({lit(1.0 - s)} * acc[1] + {lit(s)} * e[1])"
-    v = f"(sqrt(e[1] / ({lit(eps)} + {m_new}) + {lit(delta)}) - sqrt({lit(delta)}))"
+    m_new = f"({lit(1.0 - PCEN_S)} * acc[1] + {lit(PCEN_S)} * e[1])"
+    v = f"(sqrt(e[1] / ({lit(PCEN_EPS)} + {m_new}) + {lit(PCEN_DELTA)}) - sqrt({lit(PCEN_DELTA)}))"
     return (
         "(list_reduce(list_prepend([0.0::DOUBLE, 0.0::DOUBLE], "
         "list_transform(toks, t -> [t::DOUBLE, 0.0::DOUBLE])), "
-        f"(acc, e) -> [{m_new}, acc[2] + floor({v} * {lit(quantize)})]))[2]::BIGINT"
+        f"(acc, e) -> [{m_new}, acc[2] + floor({v} * {lit(PCEN_Q)})]))[2]::BIGINT"
     )
 
 
@@ -3703,7 +3702,7 @@ def _asof_clicks_to_views(spark, sf_dir, tie_order, direction: str):
         .drop("rn")
     )
     left = ev.filter(F.col("event_type") == "click").select("user_id", "ts", "event_id")
-    j = asof_join(left, r, on="ts", by=["user_id"], direction=direction)
+    j = asof_join(left, r, direction=direction)
     epoch = "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', {c})"
     return j.select(
         "user_id",
@@ -4321,11 +4320,11 @@ def multichannel_features(spark, sf_dir):
     )
 
 
-def _convolve_sql(size: int = 7) -> str:
-    import numpy as np
-
+def _convolve_sql() -> str:
     from .functions.dsp import hann
+    from .operators.augment import CONV_SIZE
 
+    size = CONV_SIZE
     w = hann(size)
     w = w / w.sum()
     half = size // 2
@@ -4461,10 +4460,15 @@ def sequence_packing(spark, sf_dir):
     docs = load(spark, sf_dir, "documents").select(
         "doc_id", "source", F.length("text").alias("n_tok")
     )
-    return pack_sequences(docs, seq_len=512, by="source")
+    return pack_sequences(docs, seq_len=512)
 
 
-def _hist_sql(w: int = 32, nb: int = 16, vmax: int = 1104) -> str:
+# rollup_histogram's window, bucket count and value ceiling (the ASCII band)
+HIST_W, HIST_NB, HIST_VMAX = 32, 16, 128
+
+
+def _hist_sql() -> str:
+    w, nb, vmax = HIST_W, HIST_NB, HIST_VMAX
     folds = ",\n         ".join(
         f"list_reduce(list_prepend(0::BIGINT, list_transform(toks[wi*{w}+1 : wi*{w}+{w}], "
         f"t -> CASE WHEN least((t * {nb}) // {vmax}, {nb - 1}) = {b} THEN 1 ELSE 0 END::BIGINT)), "
@@ -4494,7 +4498,7 @@ FROM tot
     )
 
 
-@q("rollup_histogram", _hist_sql(32, 16, 128))
+@q("rollup_histogram", _hist_sql())
 def rollup_histogram_q(spark, sf_dir):
     """Mergeable fixed-boundary histogram rollup (operators/rollup.py
     rollup_histogram): per 32-token window, exact counts in 16 equal-width
@@ -4510,7 +4514,7 @@ def rollup_histogram_q(spark, sf_dir):
     from .operators.rollup import rollup_histogram
 
     seqs = tokenize_documents(load(spark, sf_dir, "documents"))
-    return rollup_histogram(seqs, w=32, n_buckets=16, vmax=128)
+    return rollup_histogram(seqs, w=HIST_W, n_buckets=HIST_NB, vmax=HIST_VMAX)
 
 
 # n_tokens^alpha as the cross-engine-exact sqrt chain (mixing.pow_alpha_sql
@@ -4673,7 +4677,7 @@ def decontamination(spark, sf_dir):
     return contamination_scores(tr, ev, w=25)
 
 
-def _bm25_sql(terms: list[str], k1: str = "1.2", b: str = "0.75") -> str:
+def _bm25_sql(terms: list[str]) -> str:
     from .operators.textstats import BM25_TERM_Q
 
     tl = ", ".join(f"'{t}'" for t in terms)
@@ -4695,7 +4699,7 @@ WITH base AS (
   SELECT w, COUNT(*)::BIGINT AS df FROM tf GROUP BY w
 ), scored AS (
   SELECT tf.doc_id,
-         CAST({BM25_TERM_Q.format(k1=k1, b=b)} AS BIGINT) AS term_q
+         CAST({BM25_TERM_Q} AS BIGINT) AS term_q
   FROM tf JOIN dft USING (w) CROSS JOIN stats
 ), per_doc AS (
   SELECT doc_id, COUNT(*)::BIGINT AS n_hit_terms, SUM(term_q)::BIGINT AS bm25_q
@@ -4771,14 +4775,14 @@ def substring_dedup_clean(spark, sf_dir):
     )
 
 
-@q("augment_convolve", _convolve_sql(7))
+@q("augment_convolve", _convolve_sql())
 def augment_convolve(spark, sf_dir):
     """convolve_ts hann(7) 'same' parity (_augment_1d.py:144) — weighted
     sums over centered windows with zero-padded edges; shared float-literal
     kernel, identical left folds: full oracle."""
     from .operators.augment import convolve_hann
 
-    c = convolve_hann(tokenize_documents(load(spark, sf_dir, "documents")), 7)
+    c = convolve_hann(tokenize_documents(load(spark, sf_dir, "documents")))
     return c.select(
         "doc_id",
         F.expr(
@@ -4851,11 +4855,13 @@ def ngram_topk_q(spark, sf_dir):
     n-gram universe."""
     from .operators.textstats import ngram_topk
 
-    return ngram_topk(load(spark, sf_dir, "documents"), n=2, k=50)
+    return ngram_topk(load(spark, sf_dir, "documents"), k=50)
 
 
-def _centroid_sql(q: float = 1048576.0, tau: float = 1.0) -> str:
-    qs = f"{q!r}"
+def _centroid_sql() -> str:
+    from .operators.similarity import CENTROID_Q, OUTLIER_DIST2
+
+    qs = f"{CENTROID_Q!r}"
     diff = (
         f"(floor(emb[i]::DOUBLE * {qs}) / {qs} - carr[i])"
     )
@@ -4879,7 +4885,7 @@ WITH e AS (
            (acc, x) -> acc + x) AS dist2
   FROM e JOIN cent USING (label)
 )
-SELECT vec_id, label, dist2, dist2 >= '{tau!r}'::DOUBLE AS is_outlier FROM d
+SELECT vec_id, label, dist2, dist2 >= '{OUTLIER_DIST2!r}'::DOUBLE AS is_outlier FROM d
 """
 
 
@@ -4894,7 +4900,7 @@ def centroid_outliers(spark, sf_dir):
     from .operators.similarity import centroid_distances
 
     e = load(spark, sf_dir, "embeddings")
-    return centroid_distances(e, by="label")
+    return centroid_distances(e)
 
 
 SQL_HLL = """
@@ -4979,7 +4985,7 @@ def _bigrams(docs, extra_filter=None):
     from .operators.textstats import _words
 
     d = docs if extra_filter is None else docs.filter(extra_filter)
-    wdocs = d.select(_words("text").alias("_w")).filter(F.size("_w") >= 2)
+    wdocs = d.select(_words().alias("_w")).filter(F.size("_w") >= 2)
     grams = F.transform(
         F.sequence(F.lit(0), F.size(F.col("_w")) - 2),
         lambda i: F.concat_ws(" ", F.slice(F.col("_w"), i + 1, 2)),
@@ -5113,7 +5119,7 @@ def kmv_windows(spark, sf_dir):
     from .operators.hll import kmv_sketch
 
     ev = load(spark, sf_dir, "events")
-    out = kmv_sketch(ev, window_sec=3600, k=8)
+    out = kmv_sketch(ev, k=8)
     return out.select(
         "window_start",
         F.concat_ws(",", F.transform(F.col("ks"), lambda x: x.cast("string"))).alias("ks_csv"),

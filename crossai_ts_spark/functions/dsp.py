@@ -17,6 +17,10 @@ from __future__ import annotations
 
 import numpy as np
 
+# the STFT frame of every kernel that resynthesizes through istft
+N_FFT = 256
+HOP = 64
+
 
 # ----------------------------------------------------------------- core
 
@@ -34,16 +38,10 @@ def hann(n: int) -> np.ndarray:
     return 0.5 * (1.0 - np.cos(2.0 * np.pi * np.arange(n) / n))
 
 
-def stft(
-    x: np.ndarray,
-    n_fft: int = 256,
-    hop: int = 64,
-    center: bool = True,
-    window: np.ndarray | None = None,
-) -> np.ndarray:
-    """Complex STFT, shape (1 + n_fft//2, n_frames)."""
+def stft(x: np.ndarray, n_fft: int = N_FFT, hop: int = HOP, center: bool = True) -> np.ndarray:
+    """Complex Hann-windowed STFT, shape (1 + n_fft//2, n_frames)."""
     x = np.asarray(x, dtype=np.float64)
-    w = hann(n_fft) if window is None else window
+    w = hann(n_fft)
     if center:
         x = np.pad(x, n_fft // 2, mode="reflect") if x.size > n_fft // 2 else np.pad(
             x, n_fft // 2, mode="constant"
@@ -52,23 +50,20 @@ def stft(
     return np.fft.rfft(frames * w, axis=1).T
 
 
-def istft(
-    S: np.ndarray, n_fft: int = 256, hop: int = 64, center: bool = True,
-    length: int | None = None,
-) -> np.ndarray:
-    """Inverse STFT via overlap-add with window-sum-square normalization."""
-    w = hann(n_fft)
-    frames = np.fft.irfft(S.T, n=n_fft, axis=1) * w
-    n = n_fft + hop * (frames.shape[0] - 1)
+def istft(S: np.ndarray, length: int | None = None) -> np.ndarray:
+    """Inverse of the centered N_FFT/HOP :func:`stft` via overlap-add with
+    window-sum-square normalization."""
+    w = hann(N_FFT)
+    frames = np.fft.irfft(S.T, n=N_FFT, axis=1) * w
+    n = N_FFT + HOP * (frames.shape[0] - 1)
     out = np.zeros(n)
     wss = np.zeros(n)
     for i, f in enumerate(frames):
-        out[i * hop : i * hop + n_fft] += f
-        wss[i * hop : i * hop + n_fft] += w * w
+        out[i * HOP : i * HOP + N_FFT] += f
+        wss[i * HOP : i * HOP + N_FFT] += w * w
     nz = wss > 1e-12
     out[nz] /= wss[nz]
-    if center:
-        out = out[n_fft // 2 :]
+    out = out[N_FFT // 2 :]
     if length is not None:
         out = out[:length]
     return out

@@ -21,13 +21,19 @@ import math
 
 import numpy as np
 
-from .dsp import istft, median_filter, stft
+from .dsp import HOP, istft, median_filter, stft
 
 # ------------------------------------------------------------------ pcen
 
+# PCEN smoother coefficient, floor, bias and checksum quantizer; the DuckDB
+# oracle builds its fold from the same values
+PCEN_S = 0.1
+PCEN_EPS = 1e-6
+PCEN_DELTA = 2.0
+PCEN_Q = 1048576.0
 
-def pcen_docs(seqs, s: float = 0.1, eps: float = 1e-6, delta: float = 2.0,
-              quantize: float = 1048576.0):
+
+def pcen_docs(seqs):
     """Exact distributed PCEN (caits/fe/_pcen.py:18-138 surface with
     gain(alpha)=1.0, power(r)=0.5, bias(delta)=2.0 and the smoother
     coefficient b pinned to ``s``): per doc, fold the token stream as the
@@ -36,7 +42,8 @@ def pcen_docs(seqs, s: float = 0.1, eps: float = 1e-6, delta: float = 2.0,
         M(t) = (1-s) M(t-1) + s E(t)        (zero-init forward IIR)
         v(t) = sqrt(E/(eps+M) + delta) - sqrt(delta)
 
-    accumulating sum(floor(v * quantize)) — a single JVM-side
+    with s, eps, delta = PCEN_S, PCEN_EPS, PCEN_DELTA, accumulating
+    sum(floor(v * PCEN_Q)) — a single JVM-side
     ``F.aggregate`` higher-order fold, no Python in the loop. alpha=1 and
     r=1/2 make the DRC stage one division plus one sqrt: both are
     correctly-rounded IEEE ops, so a DuckDB list_reduce with the same
@@ -46,15 +53,16 @@ def pcen_docs(seqs, s: float = 0.1, eps: float = 1e-6, delta: float = 2.0,
     """
     from pyspark.sql import functions as F
 
-    one_ms = 1.0 - s
+    one_ms = 1.0 - PCEN_S
+    delta = F.lit(PCEN_DELTA)
 
     def step(acc, t):
         e = t.cast("double")
-        m_new = F.lit(one_ms) * acc["m"] + F.lit(s) * e
-        v = F.sqrt(e / (F.lit(eps) + m_new) + F.lit(delta)) - F.sqrt(F.lit(delta))
+        m_new = F.lit(one_ms) * acc["m"] + F.lit(PCEN_S) * e
+        v = F.sqrt(e / (F.lit(PCEN_EPS) + m_new) + delta) - F.sqrt(delta)
         return F.struct(
             m_new.alias("m"),
-            (acc["chk"] + F.floor(v * F.lit(quantize)).cast("double")).alias("chk"),
+            (acc["chk"] + F.floor(v * F.lit(PCEN_Q)).cast("double")).alias("chk"),
         )
 
     init = F.struct(F.lit(0.0).alias("m"), F.lit(0.0).alias("chk"))
@@ -67,66 +75,44 @@ def pcen_docs(seqs, s: float = 0.1, eps: float = 1e-6, delta: float = 2.0,
 # ------------------------------------------------------------------ hpss
 
 
-def _softmask(X: np.ndarray, X_ref: np.ndarray, power: float = 2.0) -> np.ndarray:
-    """librosa.util.softmask: X^p / (X^p + ref^p), safe at zeros."""
+def _softmask(X: np.ndarray, X_ref: np.ndarray) -> np.ndarray:
+    """librosa.util.softmask with power 2: X^2 / (X^2 + ref^2), safe at zeros."""
     Z = np.maximum(X, X_ref)
     bad = Z < np.finfo(np.float64).tiny
     Zs = np.where(bad, 1.0, Z)
-    m = (X / Zs) ** power / ((X / Zs) ** power + (X_ref / Zs) ** power)
+    m = (X / Zs) ** 2.0 / ((X / Zs) ** 2.0 + (X_ref / Zs) ** 2.0)
     return np.where(bad, 0.5, m)
 
 
-def hpss(
-    S: np.ndarray,
-    kernel_size: int | tuple[int, int] = 31,
-    power: float = 2.0,
-    margin: float | tuple[float, float] = 1.0,
-) -> tuple[np.ndarray, np.ndarray]:
+def hpss(S: np.ndarray, kernel_size: int = 31) -> tuple[np.ndarray, np.ndarray]:
     """Harmonic/percussive separation of a magnitude (or complex) STFT
-    (caits/hpss.py:59-299): harmonic enhanced by a median filter along
-    time, percussive along frequency, combined through soft masks. Returns
-    (H, P) with the same dtype semantics as the input (masks multiply S)."""
+    (caits/hpss.py:59-299, power 2, margin 1): harmonic enhanced by a
+    median filter along time, percussive along frequency, combined through
+    soft masks. Returns (H, P) with the same dtype semantics as the input
+    (masks multiply S)."""
     mag = np.abs(S)
-    kt, kf = (kernel_size, kernel_size) if isinstance(kernel_size, int) else kernel_size
-    mh, mp = (margin, margin) if not isinstance(margin, tuple) else margin
-    if mh < 1 or mp < 1:
-        raise ValueError("margins must be >= 1.0")
-    harm = np.apply_along_axis(median_filter, 1, mag, kt)  # along time
-    perc = np.apply_along_axis(median_filter, 0, mag, kf)  # along frequency
-    mask_h = _softmask(harm, perc * mh, power=power)
-    mask_p = _softmask(perc, harm * mp, power=power)
-    return S * mask_h, S * mask_p
+    harm = np.apply_along_axis(median_filter, 1, mag, kernel_size)  # along time
+    perc = np.apply_along_axis(median_filter, 0, mag, kernel_size)  # along frequency
+    return S * _softmask(harm, perc), S * _softmask(perc, harm)
 
 
-def hpss_signal(
-    x: np.ndarray, n_fft: int = 256, hop: int = 64, **kw
-) -> tuple[np.ndarray, np.ndarray]:
+def hpss_signal(x: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """Time-domain HPSS: stft -> masks -> istft (caits/hpss.py:9-56)."""
     x = np.asarray(x, dtype=np.float64)
-    D = stft(x, n_fft=n_fft, hop=hop)
-    H, P = hpss(D, **kw)
-    return (
-        istft(H, n_fft=n_fft, hop=hop, length=x.size),
-        istft(P, n_fft=n_fft, hop=hop, length=x.size),
-    )
+    H, P = hpss(stft(x))
+    return istft(H, length=x.size), istft(P, length=x.size)
 
 
 # --------------------------------------------------------- phase vocoder
 
 
-def phase_vocoder(
-    D: np.ndarray, rate: float, hop_length: int | None = None, n_fft: int | None = None
-) -> np.ndarray:
-    """Speed up by `rate` (caits/fe/core_spectrum/_phase.py:12-80, the
-    classic Laroche/Dolson algorithm): linear magnitude interpolation at
+def phase_vocoder(D: np.ndarray, rate: float) -> np.ndarray:
+    """Speed up an N_FFT/HOP STFT by `rate` (caits/fe/core_spectrum/_phase.py:12-80,
+    the classic Laroche/Dolson algorithm): linear magnitude interpolation at
     fractional frames + phase accumulation by deviation from the expected
     per-bin advance."""
-    if n_fft is None:
-        n_fft = 2 * (D.shape[0] - 1)
-    if hop_length is None:
-        hop_length = n_fft // 4
     time_steps = np.arange(0, D.shape[1], rate, dtype=np.float64)
-    phi_advance = np.linspace(0, np.pi * hop_length, D.shape[0])
+    phi_advance = np.linspace(0, np.pi * HOP, D.shape[0])
     out = np.zeros((D.shape[0], len(time_steps)), dtype=complex)
     phase_acc = np.angle(D[:, 0])
     Dpad = np.concatenate([D, np.zeros((D.shape[0], 2), dtype=D.dtype)], axis=1)
@@ -142,25 +128,22 @@ def phase_vocoder(
     return out
 
 
-def time_stretch_ts(x: np.ndarray, rate: float, n_fft: int = 256, hop: int = 64) -> np.ndarray:
+def time_stretch_ts(x: np.ndarray, rate: float) -> np.ndarray:
     """caits/augmentation/_augment_1d.py:708-741: stft -> phase_vocoder ->
     istft with length round(n/rate)."""
     if rate <= 0:
         raise ValueError("rate must be positive")
     x = np.asarray(x, dtype=np.float64)
-    D = stft(x, n_fft=n_fft, hop=hop)
-    D2 = phase_vocoder(D, rate=rate, hop_length=hop, n_fft=n_fft)
-    return istft(D2, n_fft=n_fft, hop=hop, length=int(round(x.size / rate)))
+    D2 = phase_vocoder(stft(x), rate=rate)
+    return istft(D2, length=int(round(x.size / rate)))
 
 
-def pitch_shift_ts(
-    x: np.ndarray, sr: float, n_steps: float, bins_per_octave: int = 12,
-    n_fft: int = 256, hop: int = 64,
-) -> np.ndarray:
+def pitch_shift_ts(x: np.ndarray, sr: float, n_steps: float) -> np.ndarray:
     """caits/augmentation/_augment_1d.py:743-800: time-stretch by
-    2^(-steps/bpo) then resample back to the original length."""
-    rate = 2.0 ** (-float(n_steps) / bins_per_octave)
-    stretched = time_stretch_ts(x, rate, n_fft=n_fft, hop=hop)
+    2^(-steps/12) (12 bins per octave) then resample back to the original
+    length."""
+    rate = 2.0 ** (-float(n_steps) / 12)
+    stretched = time_stretch_ts(x, rate)
     out = resample_poly_arbitrary(stretched, x.size)
     return out[: x.size]
 
@@ -178,18 +161,18 @@ def _sinc_fir(num_taps: int, cutoff: float) -> np.ndarray:
     return h / h.sum()
 
 
-def resample_poly(x: np.ndarray, up: int, down: int, taps_per_phase: int = 24) -> np.ndarray:
+def resample_poly(x: np.ndarray, up: int, down: int) -> np.ndarray:
     """Polyphase rational resampling (scipy.resample_poly semantics:
-    zero-stuff by `up`, windowed-sinc lowpass at min(1/up, 1/down) of the
-    upsampled Nyquist with gain `up`, decimate by `down`; output length
-    ceil(len * up / down))."""
+    zero-stuff by `up`, windowed-sinc lowpass (24 taps per phase) at
+    min(1/up, 1/down) of the upsampled Nyquist with gain `up`, decimate by
+    `down`; output length ceil(len * up / down))."""
     x = np.asarray(x, dtype=np.float64)
     g = math.gcd(up, down)
     up //= g
     down //= g
     if up == 1 and down == 1:
         return x.copy()
-    n_taps = 2 * taps_per_phase * max(up, down) + 1
+    n_taps = 2 * 24 * max(up, down) + 1
     h = _sinc_fir(n_taps, min(1.0 / up, 1.0 / down)) * up
     ups = np.zeros(x.size * up)
     ups[::up] = x
@@ -224,9 +207,10 @@ def resample_poly_arbitrary(x: np.ndarray, target_len: int) -> np.ndarray:
 # ------------------------------------------------------------- time warp
 
 
-def time_warp_np(x: np.ndarray, seed: int, n_speed_change: int = 3, max_ratio: float = 2.0) -> np.ndarray:
+def time_warp_np(x: np.ndarray, seed: int) -> np.ndarray:
     """time_warp_ts parity (caits/augmentation/_augment_1d.py:598-655,
-    tsaug TimeWarp): a random smooth monotonic time warp — knot positions
+    tsaug TimeWarp with 3 speed changes and max ratio 2): a random smooth
+    monotonic time warp — knot positions
     jittered within their segments (keeping monotonicity), signal linearly
     interpolated at the warped grid. Deterministic via the explicit seed
     (the Spark layer derives it from doc_id)."""
@@ -235,11 +219,11 @@ def time_warp_np(x: np.ndarray, seed: int, n_speed_change: int = 3, max_ratio: f
     if n < 4:
         return x.copy()
     rng = np.random.default_rng(seed)
-    k = n_speed_change + 1
+    k = 4
     src = np.linspace(0, n - 1, k + 1)
     dst = src.copy()
     seg = (n - 1) / k
-    jitter = rng.uniform(-0.5 * (1 - 1 / max_ratio), 0.5 * (1 - 1 / max_ratio), size=k - 1)
+    jitter = rng.uniform(-0.5 * (1 - 1 / 2.0), 0.5 * (1 - 1 / 2.0), size=k - 1)
     dst[1:k] = src[1:k] + jitter * seg
     dst.sort()  # monotone guard
     warped_t = np.interp(np.arange(n, dtype=np.float64), dst, src)

@@ -18,7 +18,7 @@ Application:
   sosfilt_zi   per-section steady-state of the step response (scipy
                semantics: states scaled by the cascaded DC gains)
   sosfiltfilt_batch
-               odd-reflection padding (padlen = 3*(2*n_sections+1)),
+               odd-reflection padding (3*(2*n_sections+1) samples),
                forward pass seeded with zi*x[0], backward pass with
                zi*y[-1] — zero-phase, squared magnitude response — over a
                batch of equal-length rows (the per-row reference
@@ -43,6 +43,10 @@ from pyspark.sql import DataFrame
 
 from ..workers import worker_kernel
 
+# butterworth_docs' filter, butter_sos(order, cutoff Hz, fs Hz, btype); the
+# DuckDB oracle designs its SQL coefficients from the same tuple
+DOCS_FILTER = (4, 4.0, 32.0, "lowpass")
+
 # ------------------------------------------------------------- design
 
 
@@ -52,8 +56,9 @@ def butter_prototype(order: int) -> np.ndarray:
     return np.exp(1j * np.pi * (2 * k + order + 1) / (2 * order))
 
 
-def _prewarp(wn, fs: float = 2.0):
-    return 2.0 * fs * np.tan(np.pi * np.asarray(wn, dtype=np.float64) / fs)
+def _prewarp(wn):
+    """Analog cutoff of a normalized (fs = 2) digital cutoff."""
+    return 4.0 * np.tan(np.pi * np.asarray(wn, dtype=np.float64) / 2.0)
 
 
 def lp2lp_zpk(z, p, k, wo):
@@ -95,8 +100,9 @@ def lp2bs_zpk(z, p, k, wo, bw):
     return zb, pb, kb
 
 
-def bilinear_zpk(z, p, k, fs: float = 2.0):
-    fs2 = 2.0 * fs
+def bilinear_zpk(z, p, k):
+    """s -> 2*fs*(z-1)/(z+1) at the normalized fs = 2."""
+    fs2 = 4.0
     degree = len(p) - len(z)
     zd = (fs2 + z) / (fs2 - z) if len(z) else np.array([], dtype=complex)
     pd_ = (fs2 + p) / (fs2 - p)
@@ -273,17 +279,12 @@ def sosfilt_zi(sos: np.ndarray) -> np.ndarray:
 # --------------------------------------------------------- spark surface
 
 
-def butterworth_docs(
-    df: DataFrame,
-    fs: float = 32.0,
-    filter_type: str = "lowpass",
-    cutoff_freq=4.0,
-    order: int = 5,
-) -> DataFrame:
-    """Forward-filter (sosfilt, zero initial state) each doc's token signal
-    and emit (doc_id, filt_chk = sum(floor(y * 1024))). Arrow-batched;
-    numpy/python per sequence — the cluster parallelizes across docs."""
-    sos = butter_sos(order, cutoff_freq, fs, btype=filter_type)
+def butterworth_docs(df: DataFrame) -> DataFrame:
+    """Forward-filter (sosfilt with DOCS_FILTER, zero initial state) each
+    doc's token signal and emit (doc_id, filt_chk = sum(floor(y * 1024))).
+    Arrow-batched; numpy/python per sequence — the cluster parallelizes
+    across docs."""
+    sos = butter_sos(*DOCS_FILTER)
 
     @worker_kernel
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -300,19 +301,19 @@ def butterworth_docs(
 # ----------------------------------------------------------- batched form
 
 
-def sosfilt_batch(sos: np.ndarray, X: np.ndarray, zi: np.ndarray | None = None) -> np.ndarray:
+def sosfilt_batch(sos: np.ndarray, X: np.ndarray, zi: np.ndarray) -> np.ndarray:
     """DF2T cascade over a BATCH of equal-length signals, shape
     (n_signals, n). The recursion runs over the time axis with vectorized
     state across signals — for B signals the Python-level loop count drops
     from B*n to n (measured ~40x on 150x1024 batches). Bitwise-identical
     per row to sosfilt (same op order per sample).
 
-    zi: (n_sections, n_signals, 2) or None.
+    zi: (n_sections, n_signals, 2) initial states.
     """
     X = np.asarray(X, dtype=np.float64)
     n_sec = sos.shape[0]
     B, n = X.shape
-    st = np.zeros((n_sec, B, 2)) if zi is None else np.array(zi, dtype=np.float64)
+    st = np.array(zi, dtype=np.float64)
     Y = X.copy()
     for s in range(n_sec):
         b0, b1, b2, _, a1, a2 = sos[s]
@@ -330,15 +331,14 @@ def sosfilt_batch(sos: np.ndarray, X: np.ndarray, zi: np.ndarray | None = None) 
     return Y
 
 
-def sosfiltfilt_batch(sos: np.ndarray, X: np.ndarray, padlen: int | None = None) -> np.ndarray:
+def sosfiltfilt_batch(sos: np.ndarray, X: np.ndarray) -> np.ndarray:
     """Zero-phase forward-backward filtering of a batch of equal-length
     rows — same semantics as sosfiltfilt per row (odd reflection, zi
     scaled by each row's edge sample)."""
     X = np.asarray(X, dtype=np.float64)
     B, n = X.shape
     n_sec = sos.shape[0]
-    if padlen is None:
-        padlen = 3 * (2 * n_sec + 1)
+    padlen = 3 * (2 * n_sec + 1)
     if n <= padlen:
         padlen = max(0, n - 1)
     if padlen > 0:

@@ -59,13 +59,12 @@ def resample_2d(
     chans: list[str],
     native_sr: int,
     target_sr: int,
-    suffix: str = "_rs",
 ) -> DataFrame:
     """Per-channel linear resample (caits/preprocessing.py:63-100 /
     resample_signal:24-60 semantics): duration = n/native_sr, output length
     m = floor(duration * target_sr)  (the reference's int() truncation),
     sample positions = linspace over the source index axis, values =
-    np.interp. Adds one ``<chan><suffix>`` array column per channel plus
+    np.interp. Adds one ``<chan>_rs`` array column per channel plus
     ``n_rs`` (the output length). Pure native expressions; every channel
     shares the one materialized position array.
     """
@@ -94,5 +93,5 @@ def resample_2d(
         ),
     )
     for c in chans:
-        out = out.withColumn(f"{c}{suffix}", F.expr(_interp_expr(c, "_n2d", "_pos2d")))
+        out = out.withColumn(f"{c}_rs", F.expr(_interp_expr(c, "_n2d", "_pos2d")))
     return out.drop("_n2d", "_pos2d")

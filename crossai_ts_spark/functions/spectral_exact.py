@@ -312,14 +312,14 @@ def _fold_sql(lst: str) -> str:
     return f"list_reduce(list_prepend(0.0::DOUBLE, {lst}), (a, b) -> a + b)"
 
 
-def _dft_ctes(min_tok: int = N) -> str:
+def _dft_ctes() -> str:
     """x -> per-(doc,k) integer DFT -> per-doc ordered magnitude list ms."""
     return f"""
 WITH x AS (
   SELECT CAST(doc_id AS VARCHAR) AS doc_id, (i - 1) AS off,
          unicode(text[i])::BIGINT AS tok
   FROM documents, unnest(range(1, {N + 1})) t(i)
-  WHERE length(text) >= {min_tok}
+  WHERE length(text) >= {N}
 ), dft AS (
   SELECT doc_id, k,
          SUM(tok * ({_int_list(CQ)})[((k * off) % {N}) + 1]) AS rei,
@@ -389,10 +389,10 @@ FROM f4 JOIN rq ON rq.doc_id = f4.doc_id
     )
 
 
-def _logmel_list_sql(psd: str = "psd") -> str:
+def _logmel_list_sql() -> str:
     mels = ", ".join(
         "ln("
-        + _fold_sql(f"list_transform({psd}, (v, i) -> ({_dbl_list(MEL_W[m])})[i] * v)")
+        + _fold_sql(f"list_transform(psd, (v, i) -> ({_dbl_list(MEL_W[m])})[i] * v)")
         + " + 1e-10)"
         for m in range(N_MELS)
     )

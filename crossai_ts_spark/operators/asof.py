@@ -8,7 +8,7 @@ Scale shape: the naive formulation is a range join (quadratic blow-up per
 key); this one is the union-tag + ordered-window LOCF form — ONE shuffle of
 left+right on the key, one sort inside each partition, no candidate-pair
 expansion. At 10^12 rows that is the difference between a plan that runs
-and one that doesn't. Right rows must be unique per (by, on) for a
+and one that doesn't. Right rows must be unique per (user_id, ts) for a
 deterministic match (dedup upstream; the nearest-tie among right rows is
 otherwise plan-dependent on every engine).
 
@@ -22,18 +22,13 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def asof_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str = "ts",
-    by: list[str] | None = None,
-    direction: str = "backward",
-) -> DataFrame:
-    """Left as-of join. Output = every left row + the matched right row's
-    payload columns (renamed ``r_<col>``, null when no match)."""
+def asof_join(left: DataFrame, right: DataFrame, direction: str = "backward") -> DataFrame:
+    """Left as-of join on ``ts`` per ``user_id``. Output = every left row +
+    the matched right row's payload columns (renamed ``r_<col>``, null when
+    no match)."""
     if direction not in ("backward", "forward"):
         raise ValueError(f"direction must be backward|forward, got {direction!r}")
-    by = list(by or ["user_id"])
+    by = ["user_id"]
     lpayload = [c for c in left.columns if c not in by]
     rpayload = [c for c in right.columns if c not in by]
     rstruct = F.struct(*[F.col(c) for c in rpayload])
@@ -45,14 +40,14 @@ def asof_join(
     tag_left = 1 if direction == "backward" else 0
     l2 = left.select(
         *by,
-        F.col(on).alias("_t"),
+        F.col("ts").alias("_t"),
         F.lit(tag_left).alias("_tag"),
         F.struct(*[F.col(c) for c in lpayload]).alias("_lp"),
         F.lit(None).cast(rtype).alias("_rp"),
     )
     r2 = right.select(
         *by,
-        F.col(on).alias("_t"),
+        F.col("ts").alias("_t"),
         F.lit(1 - tag_left).alias("_tag"),
         F.lit(None).cast(l2.schema["_lp"].dataType).alias("_lp"),
         rstruct.alias("_rp"),

@@ -1,7 +1,7 @@
 """Distributed Bloom-filter build + join pruning.
 
 The 100-TB join optimization: hash the small side's join keys into an
-m-bit Bloom bitset (k hashes each), broadcast the ~KB bitset, and drop
+M-bit Bloom bitset (K hashes each), broadcast the ~KB bitset, and drop
 probe-side rows that cannot match BEFORE the exact join — the shuffle
 then carries only survivors (true matches + the filter's small false-
 positive rate) instead of the whole fact table.
@@ -18,11 +18,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+M = 16384  # filter bits: M / 32 blocks, 2 KB
+K = 3  # hashes per key
 
-def _positions(key_col, m: int, k: int):
-    """k bit positions per key: h_i(key) = md5_64("i:" || key) mod m."""
+
+def _positions(key_col):
+    """K bit positions per key: h_i(key) = md5_64("i:" || key) mod M."""
     cols = []
-    for i in range(k):
+    for i in range(K):
         h = F.conv(
             F.substring(
                 F.md5(F.concat_ws(":", F.lit(i), key_col.cast("string")).cast("binary")), 1, 15
@@ -30,14 +33,14 @@ def _positions(key_col, m: int, k: int):
             16,
             10,
         ).cast("long")
-        cols.append(h % m)
+        cols.append(h % M)
     return F.array(*cols)
 
 
-def bloom_build(df: DataFrame, key: str, m: int = 16384, k: int = 3) -> DataFrame:
-    """(block, bits) bitset rows — m/32 rows regardless of build size; one
-    map-side-combined groupBy (bit_or) over k rows per key."""
-    pos = _positions(F.col(key), m, k)
+def bloom_build(df: DataFrame, key: str) -> DataFrame:
+    """(block, bits) bitset rows — M/32 rows regardless of build size; one
+    map-side-combined groupBy (bit_or) over K rows per key."""
+    pos = _positions(F.col(key))
     return (
         df.select(F.explode(pos).alias("pos"))
         .select(
@@ -51,20 +54,20 @@ def bloom_build(df: DataFrame, key: str, m: int = 16384, k: int = 3) -> DataFram
     )
 
 
-def bloom_bitset(blocks: DataFrame, m: int = 16384) -> list[int]:
-    """Collect the (block, bits) rows into a dense m/32-long bitset —
-    control-plane: the whole filter is m/8 bytes (2 KB at m=16384), the
+def bloom_bitset(blocks: DataFrame) -> list[int]:
+    """Collect the (block, bits) rows into a dense M/32-long bitset —
+    control-plane: the whole filter is M/8 bytes (2 KB), the
     same ship-a-tiny-model move as the LSH planes / IVF centroids."""
     got = {int(r.block): int(r.bits) for r in blocks.collect()}
-    return [got.get(b, 0) for b in range(m // 32)]
+    return [got.get(b, 0) for b in range(M // 32)]
 
 
-def bloom_test_col(bitset: list[int], key_col, m: int = 16384, k: int = 3):
-    """Boolean Column: all k bloom bits set for this key (possible member;
+def bloom_test_col(bitset: list[int], key_col):
+    """Boolean Column: all K bloom bits set for this key (possible member;
     guaranteed true for every built key — no false negatives)."""
     arr = F.lit(bitset).cast("array<long>")
     cond = None
-    for i in range(k):
+    for i in range(K):
         h = F.conv(
             F.substring(
                 F.md5(F.concat_ws(":", F.lit(i), key_col.cast("string")).cast("binary")), 1, 15
@@ -72,7 +75,7 @@ def bloom_test_col(bitset: list[int], key_col, m: int = 16384, k: int = 3):
             16,
             10,
         ).cast("long")
-        pos = h % m
+        pos = h % M
         bit_ok = (
             F.element_at(arr, ((pos / 32).cast("long") + 1).cast("int"))
             .bitwiseAND(F.pow(F.lit(2.0), (pos % 32).cast("double")).cast("long"))

@@ -25,25 +25,33 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+# MinHash: K hashes mod a Mersenne prime, banded LSH_BAND at a time; SimHash
+# signature width. The DuckDB oracles build their SQL from the same values.
+MINHASH_K = 8
+MINHASH_PRIME = 2147483647
+LSH_BAND = 2
+SIMHASH_BITS = 16
+
+
 # md5-hex -> bigint: same value in DuckDB via ('0x'||substr(md5(s),1,15))::BIGINT
 def _h64(col):
     return F.conv(F.substring(F.md5(col.cast("binary")), 1, 15), 16, 10).cast("long")
 
 
-def shingles(docs: DataFrame, n: int = 3, text: str = "text", distinct: bool = True) -> DataFrame:
-    """(doc_id, shingle_hash) — word n-gram fingerprints per doc.
+def shingles(docs: DataFrame, distinct: bool = True) -> DataFrame:
+    """(doc_id, shingle_hash) — word 3-gram fingerprints per doc.
 
     distinct=True (default) dedups per doc — required by set-semantics
     consumers (Jaccard counts, simhash votes would change). MinHash-only
     consumers pass distinct=False: min over a multiset equals min over its
     set, so the signatures are identical while the pipeline skips its
     single biggest exchange (the full-shingle-table dedup shuffle)."""
-    words = F.filter(F.split(F.col(text), " "), lambda w: w != "")
+    words = F.filter(F.split(F.col("text"), " "), lambda w: w != "")
     d = docs.select(F.col("doc_id").cast("string").alias("doc_id"), words.alias("ws"))
-    d = d.filter(F.size("ws") >= n)
+    d = d.filter(F.size("ws") >= 3)
     sh = F.transform(
-        F.sequence(F.lit(0), F.size("ws") - n),
-        lambda i: F.concat_ws("\x1f", F.slice("ws", i + 1, n)),
+        F.sequence(F.lit(0), F.size("ws") - 3),
+        lambda i: F.concat_ws("\x1f", F.slice("ws", i + 1, 3)),
     )
     out = d.select("doc_id", F.explode(sh).alias("shingle")).select(
         "doc_id", _h64(F.col("shingle")).alias("sh")
@@ -51,9 +59,11 @@ def shingles(docs: DataFrame, n: int = 3, text: str = "text", distinct: bool = T
     return out.distinct() if distinct else out
 
 
-def dedup_exact(docs: DataFrame, text: str = "text") -> DataFrame:
+def dedup_exact(docs: DataFrame) -> DataFrame:
     """Hash-groupBy exact dedup: keep min doc_id per content hash."""
-    h = docs.select(F.col("doc_id").cast("string").alias("doc_id"), F.md5(F.col(text).cast("binary")).alias("h"))
+    h = docs.select(
+        F.col("doc_id").cast("string").alias("doc_id"), F.md5(F.col("text").cast("binary")).alias("h")
+    )
     w = Window.partitionBy("h").orderBy("doc_id")
     return (
         h.withColumn("rn", F.row_number().over(w))
@@ -62,38 +72,37 @@ def dedup_exact(docs: DataFrame, text: str = "text") -> DataFrame:
     )
 
 
-def minhash_signatures(sh: DataFrame, k: int = 16, prime: int = 2147483647) -> DataFrame:
-    """K minhashes per doc in ONE aggregation over the shingle table.
+def minhash_signatures(sh: DataFrame) -> DataFrame:
+    """MINHASH_K minhashes per doc in ONE aggregation over the shingle table.
 
     h_i(x) = (a_i * x + b_i) mod p with fixed odd constants — portable SQL.
     """
+    p = MINHASH_PRIME
     aggs = [
-        F.min((F.col("sh") % prime * (2 * i + 1) + (i * 40503 + 17)) % prime).alias(f"mh{i}")
-        for i in range(k)
+        F.min((F.col("sh") % p * (2 * i + 1) + (i * 40503 + 17)) % p).alias(f"mh{i}")
+        for i in range(MINHASH_K)
     ]
     return sh.groupBy("doc_id").agg(*aggs)
 
 
-def lsh_candidate_pairs(
-    sig: DataFrame, k: int = 16, band_size: int = 2, max_bucket: int = 1000
-) -> DataFrame:
-    """Band the signature, bucket-join, emit candidate pairs (a < b).
+def lsh_candidate_pairs(sig: DataFrame, max_bucket: int = 1000) -> DataFrame:
+    """Band the signature LSH_BAND minhashes at a time, bucket-join, emit
+    candidate pairs (a < b).
 
     Degenerate buckets (> max_bucket docs — e.g. a corpus full of identical
     boilerplate) would emit O(bucket^2) join rows; they are dropped before
     the self-join. Such docs are near-identical and caught by exact dedup;
     the cap turns a quadratic blow-up into a bounded per-bucket cost.
     """
-    n_bands = k // band_size
     bands = F.array(
         *[
             F.struct(
                 F.lit(b).alias("band"),
                 F.concat_ws(
-                    "_", *[F.col(f"mh{b * band_size + j}").cast("string") for j in range(band_size)]
+                    "_", *[F.col(f"mh{b * LSH_BAND + j}").cast("string") for j in range(LSH_BAND)]
                 ).alias("key"),
             )
-            for b in range(n_bands)
+            for b in range(MINHASH_K // LSH_BAND)
         ]
     )
     bt = sig.select("doc_id", F.explode(bands).alias("bk")).select(
@@ -186,21 +195,21 @@ def ngram_jaccard_pairs(
     return j.filter(F.col("jaccard") >= threshold).select("doc_a", "doc_b", "common", "jaccard")
 
 
-def simhash_signatures(sh: DataFrame, bits: int = 32) -> DataFrame:
+def simhash_signatures(sh: DataFrame) -> DataFrame:
     """SimHash: per-bit majority vote over shingle hashes.
 
     bit_i(doc) = 1 if sum over shingles of (2*bit_i(h)-1) > 0.
-    Expressed as `bits` conditional sums in one groupBy — portable SQL.
+    Expressed as SIMHASH_BITS conditional sums in one groupBy — portable SQL.
     """
     aggs = [
         F.sum(
             F.when(F.shiftright(F.col("sh"), i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
         ).alias(f"v{i}")
-        for i in range(bits)
+        for i in range(SIMHASH_BITS)
     ]
     votes = sh.groupBy("doc_id").agg(*aggs)
     sig = None
-    for i in range(bits):
+    for i in range(SIMHASH_BITS):
         term = F.when(F.col(f"v{i}") > 0, F.lit(2**i).cast("long")).otherwise(F.lit(0).cast("long"))
         sig = term if sig is None else sig + term
     return votes.select("doc_id", sig.alias("simhash"))
@@ -287,16 +296,16 @@ def embedding_near_dups(
     )
 
 
-def _windows(docs: DataFrame, w: int, text: str = "text") -> DataFrame:
+def _windows(docs: DataFrame, w: int) -> DataFrame:
     """(doc_id, off, h): every stride-1 w-token window's 64-bit hash.
     Rows are round-robined to defaultParallelism first when the scan has
     fewer partitions — the explode multiplies ROWS by n_tok while scan
     parallelism follows BYTES (no-op at real table sizes)."""
     d = docs.select(
         F.col("doc_id").cast("string").alias("doc_id"),
-        F.col(text).alias("t"),
-        F.length(text).cast("long").alias("n_tok"),
-    ).filter(F.length(text) >= w)
+        F.col("text").alias("t"),
+        F.length("text").cast("long").alias("n_tok"),
+    ).filter(F.length("text") >= w)
     spark = docs.sparkSession
     par = spark.sparkContext.defaultParallelism
     if d.rdd.getNumPartitions() < par:
@@ -308,9 +317,7 @@ def _windows(docs: DataFrame, w: int, text: str = "text") -> DataFrame:
     ).select("doc_id", "off", _h64(F.expr(f"substring(t, off + 1, {w})")).alias("h"))
 
 
-def contamination_scores(
-    train: DataFrame, eval_docs: DataFrame, w: int = 50, text: str = "text"
-) -> DataFrame:
+def contamination_scores(train: DataFrame, eval_docs: DataFrame, w: int = 50) -> DataFrame:
     """Benchmark decontamination (the public GPT-3/PaLM-style n-gram
     overlap pass): for each training doc, the fraction of its w-token
     windows that appear anywhere in the eval/benchmark set.
@@ -328,8 +335,8 @@ def contamination_scores(
     # slower (1.57 s vs 1.42 s) — storing the 8M-row table costs more
     # than one recompute. duplicated_spans persists the same table because
     # three heavier consumers read it there.
-    wt = _windows(train, w, text)
-    eh = _windows(eval_docs, w, text).select("h").distinct()
+    wt = _windows(train, w)
+    eh = _windows(eval_docs, w).select("h").distinct()
     hits = wt.join(eh, "h", "semi").groupBy("doc_id").agg(
         F.count("*").alias("n_contaminated")
     )
@@ -353,9 +360,7 @@ def contamination_scores(
     )
 
 
-def duplicated_spans(
-    docs: DataFrame, w: int = 50, text: str = "text", keep_first: bool = False
-) -> DataFrame:
+def duplicated_spans(docs: DataFrame, w: int = 50, keep_first: bool = False) -> DataFrame:
     """Substring-level dedup, find+merge stages (public method: Lee et al.
     2022, "Deduplicating Training Data Makes Language Models Better"):
     every w-token window that occurs more than once ANYWHERE in the corpus
@@ -388,7 +393,7 @@ def duplicated_spans(
     # it spills rather than evicts at scale, tracked for release.
     from ..caching import tracked_persist
 
-    wins = tracked_persist(_windows(docs, w, text), StorageLevel.MEMORY_AND_DISK)
+    wins = tracked_persist(_windows(docs, w), StorageLevel.MEMORY_AND_DISK)
     dup = wins.groupBy("h").agg(F.count("*").alias("_c")).filter(F.col("_c") > 1).select("h")
     dw = wins.join(dup, "h", "semi")
     if keep_first:
@@ -416,20 +421,18 @@ def duplicated_spans(
     )
 
 
-def substring_dedup_stats(
-    docs: DataFrame, w: int = 50, text: str = "text", keep_first: bool = False
-) -> DataFrame:
+def substring_dedup_stats(docs: DataFrame, w: int = 50, keep_first: bool = False) -> DataFrame:
     """Per-doc duplicated-span inventory: (doc_id, n_tok, n_spans,
     dup_tokens, dup_frac). Docs shorter than w or with no duplicated
     window report 0 spans."""
-    spans = duplicated_spans(docs, w, text, keep_first=keep_first)
+    spans = duplicated_spans(docs, w, keep_first=keep_first)
     agg = spans.groupBy("doc_id").agg(
         F.count("*").alias("n_spans"),
         F.sum(F.col("span_end") - F.col("span_start")).alias("dup_tokens"),
     )
     base = docs.select(
         F.col("doc_id").cast("string").alias("doc_id"),
-        F.length(text).cast("long").alias("n_tok"),
+        F.length("text").cast("long").alias("n_tok"),
     ).filter(F.col("n_tok") > 0)
     return (
         base.join(agg, "doc_id", "left")
@@ -443,9 +446,7 @@ def substring_dedup_stats(
     )
 
 
-def apply_substring_dedup(
-    docs: DataFrame, w: int = 50, text: str = "text", keep_first: bool = False
-) -> DataFrame:
+def apply_substring_dedup(docs: DataFrame, w: int = 50, keep_first: bool = False) -> DataFrame:
     """Removal mask applied: drop the marked duplicated spans (both copies
     by default; keep_first=True leaves the canonical occurrence of each
     duplicated window in place — the Lee et al. keep-one semantics) and
@@ -464,12 +465,12 @@ def apply_substring_dedup(
     from ..caching import tracked_persist
 
     spans = tracked_persist(
-        duplicated_spans(docs, w, text, keep_first=keep_first), StorageLevel.MEMORY_AND_DISK
+        duplicated_spans(docs, w, keep_first=keep_first), StorageLevel.MEMORY_AND_DISK
     )
     base = docs.select(
         F.col("doc_id").cast("string").alias("doc_id"),
-        F.col(text).alias("t"),
-        F.length(text).cast("long").alias("n_tok"),
+        F.col("text").alias("t"),
+        F.length("text").cast("long").alias("n_tok"),
     ).filter(F.col("n_tok") > 0)
     wspec = Window.partitionBy("doc_id").orderBy("span_start")
     gaps = spans.select(
@@ -513,7 +514,6 @@ def apply_substring_dedup(
 def segment_dedup(
     docs: DataFrame,
     seg_words: int = 10,
-    text: str = "text",
     sep: str = " ",
 ) -> DataFrame:
     """Repeated-segment inventory — the CCNet/RefinedWeb line-level dedup
@@ -542,7 +542,7 @@ def segment_dedup(
     # never interpolated into SQL text, so quotes/regex metachars are safe
     base = docs.select(
         F.col("doc_id").cast("string").alias("doc_id"),
-        F.split(F.col(text), re.escape(sep)).alias("_w"),
+        F.split(F.col("text"), re.escape(sep)).alias("_w"),
     ).filter(F.size("_w") > 0)
     n_segs_col = F.ceil(F.size("_w") / F.lit(float(seg_words))).cast("int")
     segs_col = F.transform(
@@ -572,12 +572,11 @@ def segment_dedup(
 
 def connected_components(
     edges: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
     max_iter: int = 25,
     check_every: int = 2,
 ) -> DataFrame:
-    """Dedup clusters: connected components over a near-dup pair graph via
+    """Dedup clusters: connected components over a near-dup pair graph
+    (``doc_a``, ``doc_b``) via
     min-label propagation — each node's label drops to the smallest id
     reachable (component id = min member id, so the output is a pure
     function of the edge set, independent of plan or iteration count).
@@ -607,7 +606,7 @@ def connected_components(
     # the edge pipeline (often a full LSH candidate computation) is
     # materialized ONCE; the symmetric closure is built from the cached
     # edges (the old sym.union(sym.swap) checkpoint ran the upstream twice)
-    e0 = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).localCheckpoint()
+    e0 = edges.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b")).localCheckpoint()
     nodes = e0.select(F.col("a").alias("n")).union(e0.select(F.col("b").alias("n"))).distinct()
     # self-loops fold the own-label term into the neighbor-min aggregate:
     # min over {own} ∪ neighbors in ONE join+groupBy per round instead of a

@@ -27,17 +27,16 @@ from pyspark.sql import functions as F
 from ..workers import worker_kernel
 
 
-def gapfill_linear_checksum(
-    observed: DataFrame, quantize: float = 1024.0, value: str = "value"
-) -> DataFrame:
-    """Per-doc (doc_id, n_points, chk) of the linear gap-fill WITHOUT
-    materializing the dense grid in the JVM: chk = Σ floor(filled * q)
-    over every point of the doc's observed span [min_offset, max_offset].
+def gapfill_linear_checksum(observed: DataFrame) -> DataFrame:
+    """Per-doc (doc_id, n_points, chk) of the linear gap-fill of ``value``
+    WITHOUT materializing the dense grid in the JVM: chk = Σ floor(filled
+    * 1024) over every point of the doc's observed span [min_offset,
+    max_offset].
 
     Bitwise-equal to floor-checksums of oracle/gapfill.py's linear series
     sliced to the observed span (tested): the anchor windows, run bounds
     and per-run slope are JVM expressions over the sparse observations,
-    and the per-point fill ``v + slope * d`` / ``floor(filled * q)`` are
+    and the per-point fill ``v + slope * d`` / ``floor(filled * 1024)`` are
     the oracle's IEEE float64 ops in numpy. The win (guide §4.2): a JVM
     dense grid through ``explode(sequence(...))`` costs one array
     allocation per run plus a hash-aggregate probe per dense point (63 M
@@ -51,7 +50,7 @@ def gapfill_linear_checksum(
     import pandas as pd
 
     w = Window.partitionBy("doc_id").orderBy("offset")
-    v = F.col(value).cast("double")
+    v = F.col("value").cast("double")
     d = observed.filter(v.isNotNull()).select(
         "doc_id",
         F.col("offset").cast("long").alias("offset"),
@@ -67,8 +66,6 @@ def gapfill_linear_checksum(
     runs = d.select(
         "doc_id", "offset", "_v", run_end.alias("_re"), slope.alias("_slope")
     )
-
-    q = float(quantize)
 
     # memory bound: one Arrow batch of runs expands to sum(run lengths)
     # dense points; slice batches so no expansion exceeds ~4M points
@@ -106,7 +103,7 @@ def gapfill_linear_checksum(
                     filled = np.where(
                         widx == 0, vr, vr + np.repeat(sl, n) * widx.astype(np.float64)
                     )
-                contrib = np.floor(filled * q).astype(np.int64)
+                contrib = np.floor(filled * 1024.0).astype(np.int64)
                 chk = np.add.reduceat(contrib, base) if n.size else contrib[:0]
                 yield pd.DataFrame({"doc_id": pdf["doc_id"].iloc[s:t], "n": n, "chk": chk})
 
@@ -117,8 +114,9 @@ def gapfill_linear_checksum(
     )
 
 
-def gapfill_runs(observed: DataFrame, value: str = "value") -> DataFrame:
-    """Join-free LOCF gap-fill over the observed span [min_offset, max_offset].
+def gapfill_runs(observed: DataFrame) -> DataFrame:
+    """Join-free LOCF gap-fill of ``value`` over the observed span
+    [min_offset, max_offset].
 
     Instead of spine + left-join + anchor windows (3 shuffles of the DENSE
     grid — measured 405 s on a 63M-point grid), emit each inter-observation
@@ -131,7 +129,7 @@ def gapfill_runs(observed: DataFrame, value: str = "value") -> DataFrame:
     tested).
     """
     w = Window.partitionBy("doc_id").orderBy("offset")
-    v = F.col(value).cast("double")
+    v = F.col("value").cast("double")
     d = observed.filter(v.isNotNull()).select(
         "doc_id",
         F.col("offset").cast("long").alias("offset"),

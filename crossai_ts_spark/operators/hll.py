@@ -35,17 +35,12 @@ def _hash60(key_col):
     ).cast("long")
 
 
-def hll_sketch(
-    events: DataFrame,
-    key: str = "user_id",
-    ts: str = "ts",
-    window_sec: int = 3600,
-) -> DataFrame:
+def hll_sketch(events: DataFrame, window_sec: int = 3600) -> DataFrame:
     """Tier-1 sketches: (window_start, reg, M) — max rank per register per
-    tumbling window. One map-side-combined groupBy; rows per window are
-    capped at m=64 regardless of event volume. Rows with a null key or
-    timestamp are dropped (:func:`_kmv_hashed`)."""
-    return _reg_rank_fold(_kmv_hashed(events, key, ts, window_sec), "window_start")
+    tumbling window of ``user_id`` values by ``ts``. One map-side-combined
+    groupBy; rows per window are capped at m=64 regardless of event volume.
+    Rows with a null key or timestamp are dropped (:func:`_kmv_hashed`)."""
+    return _reg_rank_fold(_kmv_hashed(events, window_sec), "window_start")
 
 
 def _reg_rank_fold(e: DataFrame, *group_cols: str) -> DataFrame:
@@ -70,11 +65,12 @@ def _reg_rank_fold(e: DataFrame, *group_cols: str) -> DataFrame:
     )
 
 
-def hll_merge(sketch: DataFrame, fanout: int, window_sec: int = 3600) -> DataFrame:
-    """Tier k+1 sketches from tier k: elementwise register MAX per parent
-    window — the exact re-aggregation identity (equals sketching the raw
-    events at the coarser window directly; tested bitwise)."""
-    parent = window_sec * fanout
+def hll_merge(sketch: DataFrame, fanout: int) -> DataFrame:
+    """Tier k+1 sketches from hourly tier-k sketches: elementwise register
+    MAX per parent window — the exact re-aggregation identity (equals
+    sketching the raw events at the coarser window directly; tested
+    bitwise)."""
+    parent = 3600 * fanout
     ws = F.expr(f"window_start div {parent} * {parent}").alias("window_start")
     return sketch.groupBy(ws, "reg").agg(F.max("M").alias("M"))
 
@@ -105,18 +101,12 @@ def hll_estimate(sketch: DataFrame) -> DataFrame:
     )
 
 
-def hll_rollup(
-    events: DataFrame,
-    key: str = "user_id",
-    ts: str = "ts",
-    window_sec: int = 3600,
-    fanout: int = 4,
-) -> DataFrame:
-    """Two-tier distinct-user rollup: tier 1 at window_sec, tier 2 merged
-    from tier 1 registers (never from raw events). Output:
+def hll_rollup(events: DataFrame) -> DataFrame:
+    """Two-tier distinct-user rollup: tier 1 hourly, tier 2 (4 hours)
+    merged from tier 1 registers (never from raw events). Output:
     (tier, window_start, v_empty, est_distinct)."""
-    t1 = hll_sketch(events, key, ts, window_sec)
-    t2 = hll_merge(t1, fanout, window_sec)
+    t1 = hll_sketch(events)
+    t2 = hll_merge(t1, 4)
     e1 = hll_estimate(t1).select(F.lit(1).cast("int").alias("tier"), "*")
     e2 = hll_estimate(t2).select(F.lit(2).cast("int").alias("tier"), "*")
     return e1.unionByName(e2)
@@ -125,16 +115,16 @@ def hll_rollup(
 _H60 = 1152921504606846976  # 2^60; key hashes are uniform on [0, 2^60)
 
 
-def _kmv_hashed(events: DataFrame, key: str, ts: str, window_sec: int) -> DataFrame:
-    """(window_start, h) projection shared by the HLL sketch and every KMV
-    phase (:func:`_hash60`). Rows whose key or timestamp is null are
-    dropped first, as SQL ``COUNT(DISTINCT key)`` drops them: a null hash
-    would otherwise become a register or sample of its own, and a null
-    timestamp a window with a null start."""
-    h = _hash60(F.col(key))
-    return events.filter(F.col(key).isNotNull() & F.col(ts).isNotNull()).select(
+def _kmv_hashed(events: DataFrame, window_sec: int) -> DataFrame:
+    """(window_start, h) projection of ``user_id`` by ``ts`` shared by the
+    HLL sketch and every KMV phase (:func:`_hash60`). Rows whose key or
+    timestamp is null are dropped first, as SQL ``COUNT(DISTINCT key)``
+    drops them: a null hash would otherwise become a register or sample of
+    its own, and a null timestamp a window with a null start."""
+    h = _hash60(F.col("user_id"))
+    return events.filter(F.col("user_id").isNotNull() & F.col("ts").isNotNull()).select(
         (
-            (F.unix_timestamp(F.col(ts)).cast("long") / window_sec).cast("long")
+            (F.unix_timestamp(F.col("ts")).cast("long") / window_sec).cast("long")
             * window_sec
         ).alias("window_start"),
         h.alias("h"),
@@ -180,14 +170,11 @@ def _kmv_bottom_k(e: DataFrame, k: int, n_salts: int) -> DataFrame:
 
 def kmv_sketch(
     events: DataFrame,
-    key: str = "user_id",
-    ts: str = "ts",
-    window_sec: int = 3600,
     k: int = 8,
     n_salts: int = 16,
     candidate_factor: float = 64.0,
 ) -> DataFrame:
-    """Bottom-k (KMV) sketch per tumbling window: the k smallest distinct
+    """Bottom-k (KMV) sketch per hourly window: the k smallest distinct
     60-bit key hashes — simultaneously a MERGEABLE uniform sample of the
     window's distinct keys (min-hash sampling: the bottom-k of a hash
     order is a uniform draw without replacement) and a second distinct
@@ -241,7 +228,7 @@ def kmv_sketch(
 
     from ..caching import tracked_persist
 
-    e = tracked_persist(_kmv_hashed(events, key, ts, window_sec), StorageLevel.MEMORY_AND_DISK)
+    e = tracked_persist(_kmv_hashed(events, 3600), StorageLevel.MEMORY_AND_DISK)
     thr = tracked_persist(
         _kmv_thresholds(e, k, candidate_factor),
         StorageLevel.MEMORY_AND_DISK,

@@ -28,29 +28,24 @@ _Q60 = 1152921504606846976.0  # 2^60, exact in a double
 # for n up to 10^13 with pow). Every intermediate double in the chain is
 # bitwise identical across engines, so w_q is deterministic at ANY n.
 ALPHA_Q16 = 45875
+ALPHA_BITS = [(ALPHA_Q16 >> (16 - i)) & 1 for i in range(1, 17)]  # b1..b16
 
 
-def _alpha_bits(alpha_q16: int) -> list[int]:
-    if not 0 < alpha_q16 < 65536:
-        raise ValueError(f"alpha_q16 must be in (0, 65536), got {alpha_q16}")
-    return [(alpha_q16 >> (16 - i)) & 1 for i in range(1, 17)]  # b1..b16
-
-
-def pow_alpha(n_col, alpha_q16: int = ALPHA_Q16):
-    """n^(alpha_q16/2^16) as a Spark Column via the Horner sqrt chain:
+def pow_alpha(n_col):
+    """n^(ALPHA_Q16/2^16) as a Spark Column via the Horner sqrt chain:
     r = 1; for b in b16..b1: r = sqrt(r * n^b). Deterministic cross-engine
     (see ALPHA_Q16 note); ~16 sqrts on an already-aggregated tiny frame."""
     r = F.lit(1.0)
     n = n_col.cast("double")
-    for bit in reversed(_alpha_bits(alpha_q16)):
+    for bit in reversed(ALPHA_BITS):
         r = F.sqrt(r * n) if bit else F.sqrt(r)
     return r
 
 
-def pow_alpha_sql(n_expr: str, alpha_q16: int = ALPHA_Q16) -> str:
+def pow_alpha_sql(n_expr: str) -> str:
     """The identical sqrt chain as ANSI/DuckDB SQL text (for oracles)."""
     expr = "CAST(1.0 AS DOUBLE)"
-    for bit in reversed(_alpha_bits(alpha_q16)):
+    for bit in reversed(ALPHA_BITS):
         expr = f"sqrt({expr} * ({n_expr}))" if bit else f"sqrt({expr})"
     return expr
 
@@ -66,29 +61,27 @@ def _mix_hash(doc_id_col):
     ).cast("long")
 
 
-def mixing_thresholds(
-    docs: DataFrame, target_tokens, alpha_q16: int = ALPHA_Q16, text: str = "text"
-) -> DataFrame:
+def mixing_thresholds(docs: DataFrame, target_tokens) -> DataFrame:
     """Per-source keep thresholds: rate_s = min(1, T * share_s / n_tokens_s)
     with share_s from the quantized n_tokens^alpha weights (the exact
     recipe of the source_mixing_weights query), thr_s = floor(rate * 2^60).
     ``target_tokens`` may be a Column (e.g. half the corpus) or an int.
 
-    alpha is DYADIC (alpha_q16/2^16, default 45875 = 0.699997): w_q =
+    alpha is DYADIC (ALPHA_Q16/2^16 = 45875/2^16 = 0.699997): w_q =
     floor(n^alpha * 2^20) is computed by the sqrt-multiply chain
     (``pow_alpha``), whose every intermediate is an IEEE correctly-rounded
     op — bitwise identical in Spark and DuckDB at any n, unlike libm
     pow() (r6 fix for ADVICE r5-E: pow's 1-ulp slack measurably flipped
     floor boundaries for n >~ 10^11). Sweep-tested in
     tests/test_mixing_pow_agreement."""
-    d = docs.filter(F.length(text) > 0)
+    d = docs.filter(F.length("text") > 0)
     s = d.groupBy("source").agg(
         F.count("*").alias("n_docs"),
-        F.sum(F.length(text)).cast("long").alias("n_tokens"),
+        F.sum(F.length("text")).cast("long").alias("n_tokens"),
     )
     p = s.withColumn(
         "w_q",
-        F.floor(pow_alpha(F.col("n_tokens"), alpha_q16) * F.lit(1048576.0)).cast("long"),
+        F.floor(pow_alpha(F.col("n_tokens")) * F.lit(1048576.0)).cast("long"),
     )
     g = p.agg(
         F.sum("w_q").alias("_tot"), F.sum("n_tokens").alias("_all_tok")
@@ -112,15 +105,13 @@ def mixing_thresholds(
     )
 
 
-def apply_mixing(
-    docs: DataFrame, target_tokens, alpha_q16: int = ALPHA_Q16, text: str = "text"
-) -> DataFrame:
+def apply_mixing(docs: DataFrame, target_tokens) -> DataFrame:
     """The mixed corpus: docs whose hash clears their source's threshold.
     Expected kept tokens per source ~ min(n_tokens, T * share) without any
     global coordination; rerunning (or resuming) keeps EXACTLY the same
     docs."""
-    thr = mixing_thresholds(docs, target_tokens, alpha_q16, text).select("source", "thr")
-    d = docs.filter(F.length(text) > 0).withColumn("_h", _mix_hash(F.col("doc_id")))
+    thr = mixing_thresholds(docs, target_tokens).select("source", "thr")
+    d = docs.filter(F.length("text") > 0).withColumn("_h", _mix_hash(F.col("doc_id")))
     return (
         d.join(F.broadcast(thr), "source")
         .filter(F.col("_h") < F.col("thr"))

@@ -29,9 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _bucketed_cumsum(
-    seqs: DataFrame, by: str, n_buckets: int | None
-) -> DataFrame:
+def _bucketed_cumsum(seqs: DataFrame, n_buckets: int | None) -> DataFrame:
     """Phases 1-3: rows + (_bucket, cum_start, cum_end), exposed separately
     so tests can assert per-(shard, bucket) boundedness on the hot shard."""
     spark = seqs.sparkSession
@@ -39,7 +37,7 @@ def _bucketed_cumsum(
         n_buckets = max(64, spark.sparkContext.defaultParallelism * 4)
     c = seqs.select(
         F.col("doc_id").cast("string").alias("doc_id"),
-        F.col(by),
+        F.col("source"),
         F.col("n_tok").cast("long").alias("n_tok"),
     ).filter(F.col("n_tok") > 0)
     # contiguous range buckets over the packing order; explicit numPartitions
@@ -52,38 +50,38 @@ def _bucketed_cumsum(
     from ..caching import tracked_persist
 
     b = tracked_persist(
-        c.repartitionByRange(n_buckets, F.col(by), F.col("doc_id")).withColumn(
+        c.repartitionByRange(n_buckets, F.col("source"), F.col("doc_id")).withColumn(
             "_bucket", F.spark_partition_id()
         )
     )
-    wloc = Window.partitionBy(by, "_bucket").orderBy("doc_id")
+    wloc = Window.partitionBy("source", "_bucket").orderBy("doc_id")
     b = b.withColumn("_loc_end", F.sum("n_tok").over(wloc))
     # exclusive prefix of per-bucket totals: <= n_buckets + n_shards rows,
     # so the ordered window below is control-plane sized
-    totals = b.groupBy(by, "_bucket").agg(F.sum("n_tok").alias("_bkt_tok"))
+    totals = b.groupBy("source", "_bucket").agg(F.sum("n_tok").alias("_bkt_tok"))
     wpre = (
-        Window.partitionBy(by)
+        Window.partitionBy("source")
         .orderBy("_bucket")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     prefix = totals.select(
-        by,
+        "source",
         "_bucket",
         F.coalesce(F.sum("_bkt_tok").over(wpre), F.lit(0).cast("long")).alias("_prefix"),
     )
     return (
-        b.join(F.broadcast(prefix), [by, "_bucket"])
+        b.join(F.broadcast(prefix), ["source", "_bucket"])
         .withColumn("cum_end", F.col("_prefix") + F.col("_loc_end"))
         .withColumn("cum_start", F.col("cum_end") - F.col("n_tok"))
     )
 
 
-def _pack_assign(c: DataFrame, seq_len: int, by: str) -> DataFrame:
+def _pack_assign(c: DataFrame, seq_len: int) -> DataFrame:
     pack_id = F.floor(F.col("cum_start") / seq_len).cast("long")
     last_pack = F.floor((F.col("cum_end") - 1) / seq_len).cast("long")
     return c.select(
         "doc_id",
-        by,
+        "source",
         "n_tok",
         "cum_start",
         pack_id.alias("pack_id"),
@@ -96,18 +94,17 @@ def _pack_assign(c: DataFrame, seq_len: int, by: str) -> DataFrame:
 def pack_sequences(
     seqs: DataFrame,
     seq_len: int = 2048,
-    by: str = "source",
     n_buckets: int | None = None,
 ) -> DataFrame:
     """Assign every doc its position in the packed token stream of its
-    shard: (pack_id, pack_off) of the doc's first token, whether it
+    ``source`` shard: (pack_id, pack_off) of the doc's first token, whether it
     straddles a pack boundary, and how many packs it touches.
 
-    Columns out: doc_id, <by>, n_tok, cum_start, pack_id, pack_off,
+    Columns out: doc_id, source, n_tok, cum_start, pack_id, pack_off,
     spans_packs (bool), n_packs_touched. ``n_buckets`` sizes the two-phase
     cumsum (default 4x parallelism, min 64); the output is independent of
     its value.
     """
     if seq_len <= 0:
         raise ValueError(f"seq_len must be positive, got {seq_len}")
-    return _pack_assign(_bucketed_cumsum(seqs, by, n_buckets), seq_len, by)
+    return _pack_assign(_bucketed_cumsum(seqs, n_buckets), seq_len)

@@ -21,6 +21,11 @@ _DOT = (
     "cast(0.0 as double), (acc, v) -> acc + v)"
 )
 
+# centroid_distances: embedding quantizer (2^20) and the squared-distance
+# outlier threshold; the DuckDB oracle builds its SQL from the same values
+CENTROID_Q = 1048576.0
+OUTLIER_DIST2 = 1.0
+
 
 def _norm(col: str):
     """sqrt(dot(col, col)) — the per-vector factor of the cosine.
@@ -34,9 +39,9 @@ def _norm(col: str):
     return F.sqrt(F.expr(_DOT.format(a=col, b=col)))
 
 
-def _cos_with_norms(a: str, b: str, na: str = "_na", nb: str = "_nb"):
-    """dot(a,b) / (na * nb) with norms precomputed by :func:`_norm`."""
-    return F.expr(_DOT.format(a=a, b=b)) / (F.col(na) * F.col(nb))
+def _cos_with_norms(a: str, b: str):
+    """dot(a,b) / (_na * _nb) with norms precomputed by :func:`_norm`."""
+    return F.expr(_DOT.format(a=a, b=b)) / (F.col("_na") * F.col("_nb"))
 
 
 def _arr_sql(vals) -> str:
@@ -56,7 +61,7 @@ def _hyperplanes(dim: int, n_bits: int, seed: int) -> list[list[float]]:
     return rng.normal(0, 1, size=(n_bits, dim)).tolist()
 
 
-def lsh_bucket_col(dim: int, n_bits: int = 8, seed: int = 42, vec: str = "embedding"):
+def lsh_bucket_col(dim: int, n_bits: int = 8, seed: int = 42):
     """Random-hyperplane signature as a Column:
     bucket = sum_i (dot(v, h_i) > 0) << i. Hyperplanes ship as literal
     arrays inside the plan (broadcast by value); each bit is one JVM-side
@@ -71,7 +76,7 @@ def lsh_bucket_col(dim: int, n_bits: int = 8, seed: int = 42, vec: str = "embedd
     # literals bit-identical to F.lit floats.
     terms = []
     for i, p in enumerate(planes):
-        dot = _DOT.format(a=vec, b=_arr_sql(float(x) for x in p))
+        dot = _DOT.format(a="embedding", b=_arr_sql(float(x) for x in p))
         terms.append(
             f"(CASE WHEN {dot} > 0 THEN CAST({1 << i} AS BIGINT) "
             f"ELSE CAST(0 AS BIGINT) END)"
@@ -79,13 +84,12 @@ def lsh_bucket_col(dim: int, n_bits: int = 8, seed: int = 42, vec: str = "embedd
     return F.expr("(" + " + ".join(terms) + ")")
 
 
-def lsh_bucket(df: DataFrame, dim: int, n_bits: int = 8, seed: int = 42,
-               vec: str = "embedding") -> DataFrame:
+def lsh_bucket(df: DataFrame, dim: int, n_bits: int = 8, seed: int = 42) -> DataFrame:
     """Random-hyperplane bucketing of a DataFrame (see lsh_bucket_col)."""
-    return df.withColumn("bucket", lsh_bucket_col(dim, n_bits, seed, vec))
+    return df.withColumn("bucket", lsh_bucket_col(dim, n_bits, seed))
 
 
-def ivf_centroids(corpus: DataFrame, n_cent: int, vec: str = "embedding") -> list[list[float]]:
+def ivf_centroids(corpus: DataFrame, n_cent: int) -> list[list[float]]:
     """Deterministic IVF 'training': the n_cent corpus vectors whose
     md5(vec_id) sorts smallest — a hash-random sample standing in for
     k-means centroids, so an independent engine can rebuild the identical
@@ -94,7 +98,7 @@ def ivf_centroids(corpus: DataFrame, n_cent: int, vec: str = "embedding") -> lis
     standard train-small-model-then-broadcast IVF shape (a k-means refit
     would slot in here without touching the search plan)."""
     rows = (
-        corpus.select("vec_id", vec)
+        corpus.select("vec_id", "embedding")
         .orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
         .limit(n_cent)
         .collect()
@@ -132,10 +136,10 @@ def ivf_assign(df: DataFrame, cents: list[list[float]], vec: str = "embedding") 
 
 
 def ivf_topk(corpus: DataFrame, queries: DataFrame, n_cent: int = 16,
-             n_probe: int = 3, k: int = 5, vec: str = "embedding") -> DataFrame:
+             n_probe: int = 3) -> DataFrame:
     """IVF approximate NN: partition the corpus into `n_cent` Voronoi cells
     around deterministic centroids, then each query searches only its
-    `n_probe` nearest cells (exact cosine re-rank inside).
+    `n_probe` nearest cells (exact cosine re-rank inside) for its top 5.
 
     Scale shape (the IVF contract): the model is tiny and broadcast; cell
     assignment is a narrow map over the corpus (n_cent folds/row, no
@@ -144,11 +148,11 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, n_cent: int = 16,
     is the final per-query top-k over ~n_probe/n_cent of the corpus.
     Complements lsh_topk: IVF adapts to the data distribution (cells follow
     the vectors), LSH is oblivious (fixed hyperplanes)."""
-    cents = ivf_centroids(corpus, n_cent, vec)
-    cb = ivf_assign(corpus, cents, vec).select(
-        "vec_id", vec, "cell", _norm(vec).alias("_nb")
+    cents = ivf_centroids(corpus, n_cent)
+    cb = ivf_assign(corpus, cents).select(
+        "vec_id", "embedding", "cell", _norm("embedding").alias("_nb")
     )
-    qv = queries.select(F.col("vec_id").alias("q_id"), F.col(vec).alias("qe"))
+    qv = queries.select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("qe"))
     qb = ivf_assign(qv, cents, vec="qe")
     qp = qb.select(
         "q_id", "qe", _norm("qe").alias("_na"), F.posexplode("cscore").alias("cid0", "score")
@@ -160,11 +164,11 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, n_cent: int = 16,
         .select("q_id", "qe", "_na", (F.col("cid0") + 1).cast("long").alias("cell"))
     )
     pairs = F.broadcast(qp).join(cb, "cell").filter(F.col("vec_id") != F.col("q_id"))
-    scored = pairs.select("q_id", "vec_id", _cos_with_norms("qe", vec).alias("cos_sim"))
+    scored = pairs.select("q_id", "vec_id", _cos_with_norms("qe", "embedding").alias("cos_sim"))
     w = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), "vec_id")
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 5)
         .select("q_id", "rank", "vec_id", "cos_sim")
     )
 
@@ -211,56 +215,50 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5,
     )
 
 
-def centroid_distances(
-    corpus: DataFrame,
-    by: str = "label",
-    vec: str = "embedding",
-    quantize: float = 1048576.0,
-    outlier_dist2: float = 1.0,
-) -> DataFrame:
-    """Per-group centroid + each vector's squared distance to its group's
+def centroid_distances(corpus: DataFrame) -> DataFrame:
+    """Per-label centroid + each vector's squared distance to its group's
     centroid — the cluster-conditioned curation primitive (public recipe:
     SemDeDup prunes near-centroid semantic duplicates inside a cluster,
     prototype/noise filters drop far outliers; both read this table).
 
     Cross-engine exactness: the centroid per dimension is built from
-    EXACT integer sums of floor(v * quantize) (order-independent — a
+    EXACT integer sums of floor(v * CENTROID_Q) (order-independent — a
     float sum across rows would be partition-order-dependent and never
     hash-stable), divided back in a fixed op order; the distance is a
-    per-row left-to-right fold over the dims. quantize = 2^20 keeps the
+    per-row left-to-right fold over the dims. CENTROID_Q = 2^20 keeps the
     quantization error at 1e-6 of a unit vector while / quantize stays
     EXACT (power of two). Integer headroom: |v|<=~30 -> ~2^25 per
     element, overflow only past ~2^38 rows per group.
 
-    Output: (vec_id, <by>, dist2 double, is_outlier = dist2 >= tau).
+    Output: (vec_id, label, dist2 double, is_outlier = dist2 >= OUTLIER_DIST2).
 
     Scale shape: one posexplode (linear in rows x dims) into a map-side-
     combined (group, dim) aggregate -> centroid table of groups x dims
     rows (tiny), reassembled into per-group arrays and BROADCAST back —
     the corpus itself never shuffles for the distance pass.
     """
-    q = float(quantize)
+    q = CENTROID_Q
     ex = corpus.select(
-        F.col(by), F.posexplode(F.col(vec)).alias("dim", "v")
-    ).select(by, "dim", F.floor(F.col("v").cast("double") * q).cast("long").alias("fq"))
-    sums = ex.groupBy(by, "dim").agg(
+        F.col("label"), F.posexplode(F.col("embedding")).alias("dim", "v")
+    ).select("label", "dim", F.floor(F.col("v").cast("double") * q).cast("long").alias("fq"))
+    sums = ex.groupBy("label", "dim").agg(
         F.sum("fq").alias("s"), F.count("*").alias("n")
     )
     # centroid dim value: (int_sum / n) / Q — both divisions deterministic,
     # the second exact (Q = power of two); same op order in the oracle
     cent = sums.select(
-        by,
+        "label",
         "dim",
         ((F.col("s").cast("double") / F.col("n").cast("double")) / F.lit(q)).alias("c"),
     )
-    carr = cent.groupBy(by).agg(
+    carr = cent.groupBy("label").agg(
         F.transform(
             F.sort_array(F.collect_list(F.struct("dim", "c"))), lambda s: s["c"]
         ).alias("_cent")
     )
-    joined = corpus.select("vec_id", by, vec).join(F.broadcast(carr), by)
+    joined = corpus.select("vec_id", "label", "embedding").join(F.broadcast(carr), "label")
     diff = F.zip_with(
-        F.col(vec),
+        F.col("embedding"),
         F.col("_cent"),
         lambda v, c: (F.floor(v.cast("double") * F.lit(q)) / F.lit(q) - c)
         * (F.floor(v.cast("double") * F.lit(q)) / F.lit(q) - c),
@@ -268,7 +266,7 @@ def centroid_distances(
     dist2 = F.aggregate(diff, F.lit(0.0), lambda acc, x: acc + x)
     return joined.select(
         F.col("vec_id").cast("long").alias("vec_id"),
-        by,
+        "label",
         dist2.alias("dist2"),
-        (dist2 >= F.lit(float(outlier_dist2))).alias("is_outlier"),
+        (dist2 >= F.lit(OUTLIER_DIST2)).alias("is_outlier"),
     )

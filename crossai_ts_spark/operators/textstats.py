@@ -21,8 +21,8 @@ LANG_MARKERS = {
 }
 
 
-def _words(text_col: str = "text"):
-    return F.filter(F.split(F.col(text_col), " "), lambda w: w != "")
+def _words():
+    return F.filter(F.split(F.col("text"), " "), lambda w: w != "")
 
 
 def token_counts(docs: DataFrame) -> DataFrame:
@@ -182,25 +182,23 @@ def lm_bigram_nll(docs: DataFrame) -> DataFrame:
     return g.select("doc_id", "n_bigrams", nll_q.alias("nll_q"))
 
 
-# Okapi BM25 term-score expression, shared VERBATIM between the Spark plan
-# and the DuckDB oracle so both engines evaluate the identical double
-# arithmetic (Lucene/Robertson idf, k1/b saturation, floor(x * 2^20)
-# quantization of each term's contribution — the lm_perplexity precedent
-# for transcendental folds).
+# Okapi BM25 term-score expression (k1 = 1.2, b = 0.75), shared VERBATIM
+# between the Spark plan and the DuckDB oracle so both engines evaluate the
+# identical double arithmetic (Lucene/Robertson idf, k1/b saturation,
+# floor(x * 2^20) quantization of each term's contribution — the
+# lm_perplexity precedent for transcendental folds).
 BM25_TERM_Q = (
     "floor("
     "ln(cast(1 as double) + (cast(n_docs as double) - cast(df as double) + cast(0.5 as double))"
     " / (cast(df as double) + cast(0.5 as double)))"
-    " * (cast(tf as double) / (cast(tf as double) + cast({k1} as double)"
-    " * (cast(1 as double) - cast({b} as double) + cast({b} as double)"
+    " * (cast(tf as double) / (cast(tf as double) + cast(1.2 as double)"
+    " * (cast(1 as double) - cast(0.75 as double) + cast(0.75 as double)"
     " * cast(dl as double) / (cast(sum_dl as double) / cast(n_docs as double)))))"
     " * cast(1048576 as double))"
 )
 
 
-def bm25_scores(
-    docs: DataFrame, terms: list[str], k1: str = "1.2", b: str = "0.75"
-) -> DataFrame:
+def bm25_scores(docs: DataFrame, terms: list[str]) -> DataFrame:
     """Okapi BM25 relevance of every doc against a fixed term set — the
     classic keyword-retrieval scorer a corpus-quality pipeline uses for
     topic filtering. idf = ln(1 + (N - df + 0.5)/(df + 0.5)) (Lucene's
@@ -210,8 +208,8 @@ def bm25_scores(
     immediately (predicate inside the generate's child), tf/df are
     map-side-combined aggregates, df (<= |terms| rows) and the 1-row
     corpus stats broadcast — the corpus shuffles once, on (doc, term).
-    k1/b arrive as SQL literal strings so the Spark plan and the DuckDB
-    oracle evaluate byte-identical expressions; per-term scores are
+    the score is the SQL text ``BM25_TERM_Q``, so the Spark plan and the
+    DuckDB oracle evaluate byte-identical expressions; per-term scores are
     floor(x * 2^20)-quantized before the per-doc sum. Returns (doc_id,
     n_hit_terms, bm25_q) with zero rows for docs matching no term.
     """
@@ -230,11 +228,10 @@ def bm25_scores(
     stats = dl_all.agg(
         F.count("*").alias("n_docs"), F.sum("dl").alias("sum_dl")
     )
-    term_q = BM25_TERM_Q.format(k1=k1, b=b)
     scored = (
         tf.join(F.broadcast(df_t), "w")
         .crossJoin(F.broadcast(stats))
-        .withColumn("term_q", F.expr(term_q).cast("long"))
+        .withColumn("term_q", F.expr(BM25_TERM_Q).cast("long"))
     )
     per_doc = scored.groupBy("doc_id").agg(
         F.count("*").alias("n_hit_terms"), F.sum("term_q").alias("bm25_q")
@@ -250,22 +247,13 @@ def bm25_scores(
     )
 
 
-def gopher_rules(
-    docs: DataFrame,
-    min_words: int = 50,
-    max_words: int = 100_000,
-    min_mean_wlen: str = "3.0",
-    max_mean_wlen: str = "10.0",
-    max_symbol_ratio: str = "0.1",
-    min_alpha_frac: str = "0.8",
-    min_stopwords: int = 2,
-) -> DataFrame:
+def gopher_rules(docs: DataFrame) -> DataFrame:
     """Gopher-family rule-set quality filter (the published public
     thresholds: word count in [50, 100k], mean word length in [3, 10],
     symbol-to-word ratio <= 0.1, >= 80% of words containing an alphabetic
     char, >= 2 stopwords). Pure columnar expressions — no shuffle, no
-    Python; thresholds are SQL literal strings so an oracle can evaluate
-    the byte-identical predicate. Returns per-rule booleans + `keep`.
+    Python; the double thresholds are SQL literals so an oracle can
+    evaluate the byte-identical predicate. Returns per-rule booleans + `keep`.
     """
     words = _words()
     base = docs.select(
@@ -293,20 +281,20 @@ def gopher_rules(
         "doc_id",
         "n_words",
         mean_wlen.alias("mean_wlen"),
-        (F.col("n_words").between(min_words, max_words)).alias("ok_nwords"),
+        (F.col("n_words").between(50, 100_000)).alias("ok_nwords"),
         (
-            (mean_wlen >= F.expr(f"cast({min_mean_wlen} as double)"))
-            & (mean_wlen <= F.expr(f"cast({max_mean_wlen} as double)"))
+            (mean_wlen >= F.expr("cast(3.0 as double)"))
+            & (mean_wlen <= F.expr("cast(10.0 as double)"))
         ).alias("ok_wlen"),
         (
             F.col("n_sym").cast("double") / F.col("n_words").cast("double")
-            <= F.expr(f"cast({max_symbol_ratio} as double)")
+            <= F.expr("cast(0.1 as double)")
         ).alias("ok_symbols"),
         (
             F.col("n_alpha").cast("double") / F.col("n_words").cast("double")
-            >= F.expr(f"cast({min_alpha_frac} as double)")
+            >= F.expr("cast(0.8 as double)")
         ).alias("ok_alpha"),
-        (F.col("n_stop") >= min_stopwords).alias("ok_stopwords"),
+        (F.col("n_stop") >= 2).alias("ok_stopwords"),
     )
     keep = (
         F.col("ok_nwords")
@@ -318,8 +306,8 @@ def gopher_rules(
     return rules.withColumn("keep", keep)
 
 
-def ngram_topk(docs: DataFrame, n: int = 2, k: int = 50, text: str = "text") -> DataFrame:
-    """Corpus-wide most-frequent word n-grams — the vocabulary/artifact
+def ngram_topk(docs: DataFrame, k: int = 50) -> DataFrame:
+    """Corpus-wide most-frequent word bigrams — the vocabulary/artifact
     scan a pretraining pipeline runs to spot templated boilerplate and
     scraping junk before it trains into the model (the public data-audit
     recipe; per-doc repetition is `repetition_scores`, this is the
@@ -333,14 +321,14 @@ def ngram_topk(docs: DataFrame, n: int = 2, k: int = 50, text: str = "text") -> 
     executes as TakeOrderedAndProject (per-partition heap + driver merge
     of k rows), never a full sort of the n-gram universe.
     """
-    if n <= 0 or k <= 0:
-        raise ValueError(f"n and k must be positive, got n={n} k={k}")
-    # docs shorter than n words contribute nothing; the filter also keeps
+    if k <= 0:
+        raise ValueError(f"k must be positive, got k={k}")
+    # docs shorter than 2 words contribute nothing; the filter also keeps
     # sequence() away from a negative stop (Spark would infer step -1)
-    wdocs = docs.select(_words(text).alias("_w")).filter(F.size("_w") >= n)
+    wdocs = docs.select(_words().alias("_w")).filter(F.size("_w") >= 2)
     grams_expr = F.transform(
-        F.sequence(F.lit(0), F.size(F.col("_w")) - n),
-        lambda i: F.concat_ws(" ", F.slice(F.col("_w"), i + 1, n)),
+        F.sequence(F.lit(0), F.size(F.col("_w")) - 2),
+        lambda i: F.concat_ws(" ", F.slice(F.col("_w"), i + 1, 2)),
     )
     grams = wdocs.select(F.explode(grams_expr).alias("ngram"))
     counted = grams.groupBy("ngram").agg(F.count("*").alias("cnt"))

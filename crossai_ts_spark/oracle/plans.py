@@ -41,36 +41,29 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     )
 
 
-def _pack_sequences_global(seqs: DataFrame, seq_len: int = 2048, by: str = "source") -> DataFrame:
+def _pack_sequences_global(seqs: DataFrame, seq_len: int = 2048) -> DataFrame:
     """The naive one-window-per-shard plan — kept only to prove bitwise
     equality of the two-phase cumsum in tests; serializes each shard on
     one task, so never the hot path."""
     if seq_len <= 0:
         raise ValueError(f"seq_len must be positive, got {seq_len}")
-    w = Window.partitionBy(by).orderBy("doc_id")
+    w = Window.partitionBy("source").orderBy("doc_id")
     c = (
         seqs.select(
             F.col("doc_id").cast("string").alias("doc_id"),
-            F.col(by),
+            F.col("source"),
             F.col("n_tok").cast("long").alias("n_tok"),
         )
         .filter(F.col("n_tok") > 0)
         .withColumn("cum_end", F.sum("n_tok").over(w))
         .withColumn("cum_start", F.col("cum_end") - F.col("n_tok"))
     )
-    return _pack_assign(c, seq_len, by)
+    return _pack_assign(c, seq_len)
 
 
-def kmv_sketch_unfiltered(
-    events: DataFrame,
-    key: str = "user_id",
-    ts: str = "ts",
-    window_sec: int = 3600,
-    k: int = 8,
-    n_salts: int = 16,
-) -> DataFrame:
-    """Bottom-k (KMV) sketch per window without the HLL candidate filter:
+def kmv_sketch_unfiltered(events: DataFrame, k: int = 8, n_salts: int = 16) -> DataFrame:
+    """Bottom-k (KMV) sketch per hourly window without the HLL candidate filter:
     every window's whole distinct-hash set enters the salted two-phase
     bottom-k, so a hot window buffers O(D / n_salts) hashes per shard."""
-    e = _kmv_hashed(events, key, ts, window_sec)
+    e = _kmv_hashed(events, 3600)
     return _kmv_estimate(_kmv_bottom_k(e, k, n_salts), k)

@@ -46,8 +46,8 @@ from pyspark.sql import functions as F
 from .. import __version__
 
 
-def with_bucket(df: DataFrame, n_buckets: int, key: str = "doc_id") -> DataFrame:
-    return df.withColumn("bucket", F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int"))
+def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
+    return df.withColumn("bucket", F.pmod(F.xxhash64(F.col("doc_id")), F.lit(n_buckets)).cast("int"))
 
 
 def manifest_dir(out_dir: str) -> str:
@@ -137,15 +137,14 @@ def commit_bucket(
     out_dir: str,
     bucket: int,
     input_snapshot: str,
-    params: dict | None = None,
+    params: dict,
 ) -> dict:
     """Materialize one bucket's tier rows with the atomic commit protocol.
 
     Returns the manifest payload (also written to disk). ``params`` (the
     run's n_buckets, w, fanout, n_tiers) go into the manifest next to
     ``input_snapshot`` for ``pending_buckets`` to check on resume;
-    ``params["n_tiers"]`` is required, since it names the tiers whose
-    figures the write observes.
+    ``params["n_tiers"]`` names the tiers whose figures the write observes.
 
     Per tier k the manifest holds rows, tokens (sum of ``t_cnt``), min/max
     ``window_start`` and ``docs``. ``docs`` counts doc SERIES, i.e. rows

@@ -26,7 +26,9 @@ from pyspark.sql import DataFrame, functions as F
 from ..functions.iir import butter_sos
 from ..workers import worker_kernel
 
+N_WINDOWS = 16  # minute windows per user: users with fewer are skipped
 STEP = 64  # samples per window (the sr*ws - overlap grid of the reference)
+SMOOTH = (4, 0.02, 1.0, "lowpass")  # butter_sos(order, cutoff, fs, type)
 DUR_MIN = 32  # apply_duration_threshold, in samples
 PROB_TH = 0.3  # apply_probability_threshold
 IOU_TH = 0.25
@@ -53,10 +55,10 @@ def _iou(a: tuple[int, int], b: tuple[int, int]) -> float:
     return inter / union if union > 0 else 0.0
 
 
-def ep3_pipeline(ev: DataFrame, n_windows: int = 16) -> DataFrame:
+def ep3_pipeline(ev: DataFrame) -> DataFrame:
     """events (user_id, event_type, minute ints) -> ONE metric row.
 
-    Minute buckets aggregate JVM-side; users with >= n_windows distinct
+    Minute buckets aggregate JVM-side; users with >= N_WINDOWS distinct
     minutes run the numeric chain in an Arrow kernel; a single global agg
     emits C/D/S/I + detection_ratio + reliability + erer. Lazy end-to-end.
     """
@@ -71,13 +73,13 @@ def ep3_pipeline(ev: DataFrame, n_windows: int = 16) -> DataFrame:
             F.slice(
                 F.sort_array(F.collect_list(F.struct("minute", "clicks", "errors", "total"))),
                 1,
-                n_windows,
+                N_WINDOWS,
             ).alias("w"),
             F.count("*").alias("nmin"),
         )
-        .filter(F.col("nmin") >= n_windows)
+        .filter(F.col("nmin") >= N_WINDOWS)
     )
-    sos = butter_sos(4, 0.02, 1.0, "lowpass")
+    sos = butter_sos(*SMOOTH)
 
     @worker_kernel
     def kernel(batches):
@@ -88,7 +90,7 @@ def ep3_pipeline(ev: DataFrame, n_windows: int = 16) -> DataFrame:
             if not len(pdf):
                 continue
             uids = list(pdf["user_id"])
-            n_w = n_windows
+            n_w = N_WINDOWS
             t = np.arange(n_w * STEP, dtype=np.float64)
             xk = np.arange(n_w, dtype=np.float64) * STEP + STEP // 2
             interp = np.empty((len(uids), t.size))

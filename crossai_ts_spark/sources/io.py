@@ -50,23 +50,13 @@ def read_table(spark: SparkSession, location: str) -> DataFrame:
     return spark.read.parquet(s3a_path(location, spark))
 
 
-def write_table(
-    df: DataFrame,
-    location: str,
-    mode: str = "append",
-    partition_by: list[str] | None = None,
-) -> None:
+def write_table(df: DataFrame, location: str) -> None:
+    """Replace the table at ``location`` with ``df``; a parquet table is
+    laid out ``tier=K`` (hive-style, prunable on the tier)."""
     if location.startswith("iceberg:"):
-        tbl = location[len("iceberg:") :]
-        if mode == "append":
-            df.writeTo(tbl).append()
-        else:
-            df.writeTo(tbl).createOrReplace()
+        df.writeTo(location[len("iceberg:") :]).createOrReplace()
         return
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(s3a_path(location, df.sparkSession))
+    df.write.mode("overwrite").partitionBy("tier").parquet(s3a_path(location, df.sparkSession))
 
 
 def read_sequences(spark: SparkSession, location: str) -> DataFrame:

@@ -10,8 +10,9 @@ continuously at the 10^12 design point:
     same shuffle-free property as the batch path.
   * docs arriving in chunks carry the open window across triggers in
     GroupState (:func:`incremental_tier1`).
-  * the sketches (HLL registers, CMS, KMV), sessions, dedup and packing
-    have one streaming path each.
+  * the sketches (HLL registers, KMV), sessions, dedup and packing have
+    one streaming path each; the batch ``cms_build`` runs on a stream
+    unchanged (its groupBy sum is an incremental aggregation).
 
 Local smoke: parquet-dir source -> memory sink -> processAllAvailable().
 """
@@ -26,10 +27,10 @@ from ..schema import SEQUENCES_SCHEMA
 from ..workers import worker_kernel
 
 
-def read_sequence_stream(spark, path: str, max_files: int = 4) -> DataFrame:
+def read_sequence_stream(spark, path: str) -> DataFrame:
     return (
         spark.readStream.schema(SEQUENCES_SCHEMA)
-        .option("maxFilesPerTrigger", max_files)
+        .option("maxFilesPerTrigger", 2)
         .parquet(path)
     )
 
@@ -197,12 +198,11 @@ def incremental_tier1(chunked: DataFrame, w: int = 64,
     )
 
 
-def streaming_dedup(stream: DataFrame, text: str = "text", watermark: str = "1 minute",
-                    event_ts: str | None = None) -> DataFrame:
+def streaming_dedup(stream: DataFrame, event_ts: str | None = None) -> DataFrame:
     """Streaming exact dedup: the first-seen doc per content hash survives.
 
     The streaming counterpart of operators/dedup.dedup_exact: dedup state
-    is BOUNDED by the watermark (hash keys age out once the watermark
+    is BOUNDED by a 1-minute watermark (hash keys age out once the watermark
     passes them), so state size tracks the ingest window, not the corpus —
     the property that makes continuous dedup viable at the 10^12-doc
     design point.
@@ -221,24 +221,23 @@ def streaming_dedup(stream: DataFrame, text: str = "text", watermark: str = "1 m
         s = stream.withColumn("ingest_ts", F.col(event_ts).cast("timestamp"))
     else:
         s = stream.withColumn("ingest_ts", F.current_timestamp())
-    s = s.withColumn("h", F.md5(F.col(text).cast("binary")))
-    return s.withWatermark("ingest_ts", watermark).dropDuplicatesWithinWatermark(["h"])
+    s = s.withColumn("h", F.md5(F.col("text").cast("binary")))
+    return s.withWatermark("ingest_ts", "1 minute").dropDuplicatesWithinWatermark(["h"])
 
 
-def streaming_sessions(stream: DataFrame, ts_col: str = "ts", gap: str = "60 seconds",
-                       delay: str = "10 seconds") -> DataFrame:
+def streaming_sessions(stream: DataFrame) -> DataFrame:
     """Stateful NATIVE session windows over an event stream: sessions merge
-    while the event gap stays within `gap`, and a session is emitted
-    (append mode) once the event-time watermark passes its end — i.e. the
-    state store holds only open sessions inside the watermark horizon.
-    The streaming twin of the batch session_window_native query.
+    while the event gap stays within 60 seconds, and a session is emitted
+    (append mode) once the 10-second event-time watermark passes its end —
+    i.e. the state store holds only open sessions inside the watermark
+    horizon. The streaming twin of the batch session_window_native query.
 
-    Watermarks require TIMESTAMP (tz-aware): an NTZ event-time column is
+    Watermarks require TIMESTAMP (tz-aware): an NTZ ``ts`` column is
     cast in place (session TZ; wall-clock preserved)."""
-    stream = stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
+    stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
     return (
-        stream.withWatermark(ts_col, delay)
-        .groupBy("user_id", F.session_window(F.col(ts_col), gap))
+        stream.withWatermark("ts", "10 seconds")
+        .groupBy("user_id", F.session_window(F.col("ts"), "60 seconds"))
         .agg(F.count("*").alias("n_events"))
         .select(
             "user_id",
@@ -249,9 +248,9 @@ def streaming_sessions(stream: DataFrame, ts_col: str = "ts", gap: str = "60 sec
     )
 
 
-def streaming_packing(stream: DataFrame, seq_len: int = 2048, by: str = "source") -> DataFrame:
+def streaming_packing(stream: DataFrame, seq_len: int = 2048) -> DataFrame:
     """Stateful streaming sequence packing (the streaming face of
-    operators/packing.pack_sequences): docs arrive per shard; GroupState
+    operators/packing.pack_sequences): docs arrive per ``source`` shard; GroupState
     carries the shard's running token offset across triggers, so each doc
     gets the (pack_id, pack_off) the batch packer would assign if fed in
     the same order. ARRIVAL order is the packing order — the streaming
@@ -300,25 +299,24 @@ def streaming_packing(stream: DataFrame, seq_len: int = 2048, by: str = "source"
                 off += n
         state.update((off,))
         cols = [
-            "doc_id", by, "n_tok", "cum_start", "pack_id", "pack_off",
+            "doc_id", "source", "n_tok", "cum_start", "pack_id", "pack_off",
             "spans_packs", "n_packs_touched",
         ]
         yield pd.DataFrame(rows, columns=cols)
 
     out_schema = (
-        f"doc_id string, {by} string, n_tok long, cum_start long, pack_id long, "
+        "doc_id string, source string, n_tok long, cum_start long, pack_id long, "
         "pack_off long, spans_packs boolean, n_packs_touched long"
     )
-    return stream.groupBy(by).applyInPandasWithState(
+    return stream.groupBy("source").applyInPandasWithState(
         fn, out_schema, "off long", "append", "NoTimeout"
     )
 
 
-def streaming_hll_native(stream: DataFrame, key: str = "user_id",
-                         ts_col: str = "ts", window_sec: int = 3600,
-                         watermark: str = "2 hours") -> DataFrame:
-    """Zero-Python streaming HLL register stream — the ``streaming_cms``
-    move applied to distinct counting: the batch ``hll_sketch`` fold
+def streaming_hll_native(stream: DataFrame) -> DataFrame:
+    """Zero-Python streaming HLL register stream — the streaming CMS move
+    (``cms_build`` run on a stream) applied to distinct counting: the
+    batch hourly ``hll_sketch`` fold
     (groupBy window+register, MAX rank) is itself an incremental
     aggregation, so run AS the streaming plan it keeps <= 64 register
     rows of JVM HashAggregate state per active window and never leaves
@@ -329,7 +327,7 @@ def streaming_hll_native(stream: DataFrame, key: str = "user_id",
     estimate.
 
     It emits raw (window_start, reg, M) register rows and scopes state by
-    event-time WATERMARK:
+    a 2-hour event-time WATERMARK:
     run with outputMode('update') (changed registers per trigger;
     per-key M is monotone, so max-per-key over the sink = final) or
     'append' (final registers once the watermark passes window end).
@@ -338,11 +336,11 @@ def streaming_hll_native(stream: DataFrame, key: str = "user_id",
     dropped, as the batch sketch drops them."""
     from ..operators.hll import _hash60, _reg_rank_fold
 
-    e = stream.withWatermark(ts_col, watermark).filter(
-        F.col(key).isNotNull() & F.col(ts_col).isNotNull()
+    e = stream.withWatermark("ts", "2 hours").filter(
+        F.col("user_id").isNotNull() & F.col("ts").isNotNull()
     ).select(
-        F.window(F.col(ts_col), f"{window_sec} seconds").alias("win"),
-        _hash60(F.col(key)).alias("h"),
+        F.window(F.col("ts"), "3600 seconds").alias("win"),
+        _hash60(F.col("user_id")).alias("h"),
     )
     return _reg_rank_fold(e, "win").select(
         F.unix_timestamp(F.col("win.start")).cast("long").alias("window_start"),
@@ -351,32 +349,11 @@ def streaming_hll_native(stream: DataFrame, key: str = "user_id",
     )
 
 
-def streaming_cms(stream: DataFrame, key: str, d: int = 4, w: int = 8192) -> DataFrame:
-    """Continuous count-min sketch (the streaming face of operators/cms):
-    the batch plan — explode d (row, cell) positions per item into a
-    groupBy sum — IS the streaming plan, because CMS cells merge by
-    elementwise addition, which is exactly what an incremental streaming
-    aggregation maintains. No custom state UDF: Spark's stateful
-    HashAggregate keeps <= d*w running cells (bounded by construction,
-    never by watermark) and each trigger folds the new items' partial
-    counts in map-side before touching state. Run with
-    outputMode('update') (changed cells per trigger) or 'complete' (the
-    whole refreshed sketch); the result after consuming any prefix of the
-    stream equals cms_build over that prefix EXACTLY (parity-tested),
-    so estimates via operators/cms.cms_lookup carry the same one-sided
-    guarantee at every point in time."""
-    from ..operators.cms import cms_build
-
-    return cms_build(stream, key=key, d=d, w=w)
-
-
-def streaming_kmv(stream: DataFrame, key: str = "user_id", ts_col: str = "ts",
-                  window_sec: int = 3600, k: int = 8,
-                  state_ttl_sec: int = 6 * 3600) -> DataFrame:
+def streaming_kmv(stream: DataFrame, state_ttl_sec: int = 6 * 3600) -> DataFrame:
     """Stateful streaming bottom-k (KMV) sketch — the streaming face of
     operators/hll.kmv_sketch, closing the "every mergeable summary has a
-    streaming twin" set (HLL r5, CMS r6, KMV r6). GroupState per tumbling
-    window holds the k smallest DISTINCT 60-bit key hashes — k longs, the
+    streaming twin" set (HLL r5, CMS r6, KMV r6). GroupState per hourly
+    window holds the k = 8 smallest DISTINCT 60-bit key hashes — k longs, the
     definitionally bounded state — and each trigger emits the refreshed
     (ks, n_distinct_est) plus the monotone n_events cursor (latest row
     per window = current sketch). The hash projection is the BATCH
@@ -406,7 +383,8 @@ def streaming_kmv(stream: DataFrame, key: str = "user_id", ts_col: str = "ts",
 
     from ..operators.hll import _H60, _kmv_hashed
 
-    hashed = _kmv_hashed(stream, key=key, ts=ts_col, window_sec=window_sec)
+    k = 8
+    hashed = _kmv_hashed(stream, 3600)
 
     @worker_kernel
     def partial(pdfs):

@@ -93,7 +93,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.compress and (todo or not os.path.exists(done_marker)):
         tiers_all = spark.read.parquet(f"{args.out}/data")
         segs = compress_tiers(tiers_all)
-        write_table(segs, f"{args.out}/compressed", mode="overwrite", partition_by=["tier"])
+        write_table(segs, f"{args.out}/compressed")
         print("[rollup_job] compressed segments written")
 
     wall = time.monotonic() - t0

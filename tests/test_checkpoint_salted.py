@@ -73,7 +73,7 @@ def test_commit_bucket_uri_guard(spark, tiny_df, tmp_path):
     tiers = cascade(tiny_df, w=64, fanout=8, tiers=1)
     for bad in ("hdfs://nn/x", "s3a://bucket/x", "hdfs:/x"):
         with pytest.raises(ValueError, match="driver-local"):
-            commit_bucket(tiers, bad, 0, "t")
+            commit_bucket(tiers, bad, 0, "t", params={"n_tiers": 1})
     out = str(tmp_path / "uri_out")
     commit_bucket(tiers, f"file://{out}", 0, "t", params={"n_tiers": 1})
     commit_bucket(tiers, f"file:{out}", 1, "t", params={"n_tiers": 1})  # single-slash Hadoop form

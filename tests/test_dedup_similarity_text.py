@@ -32,7 +32,7 @@ def test_dedup_exact_canonical(spark, docs_df):
 def test_ngram_jaccard_finds_near_dup(spark, docs_df):
     from crossai_ts_spark.operators.dedup import ngram_jaccard_pairs, shingles
 
-    sh = shingles(docs_df, n=3)
+    sh = shingles(docs_df)
     pairs = ngram_jaccard_pairs(sh, threshold=0.3).toPandas()
     key = set(zip(pairs.doc_a, pairs.doc_b))
     assert ("1", "2") in key  # exact dup -> jaccard 1.0
@@ -49,8 +49,8 @@ def test_minhash_lsh_candidates(spark, docs_df):
         shingles,
     )
 
-    sig = minhash_signatures(shingles(docs_df, n=3), k=8)
-    pairs = lsh_candidate_pairs(sig, k=8, band_size=2).toPandas()
+    sig = minhash_signatures(shingles(docs_df))
+    pairs = lsh_candidate_pairs(sig).toPandas()
     key = set(zip(pairs.doc_a, pairs.doc_b))
     assert ("1", "2") in key  # identical signatures always collide
 
@@ -58,7 +58,7 @@ def test_minhash_lsh_candidates(spark, docs_df):
 def test_simhash_identical_docs_match(spark, docs_df):
     from crossai_ts_spark.operators.dedup import shingles, simhash_signatures
 
-    sig = simhash_signatures(shingles(docs_df, n=3), bits=16).toPandas().set_index("doc_id")
+    sig = simhash_signatures(shingles(docs_df)).toPandas().set_index("doc_id")
     assert sig.loc["1", "simhash"] == sig.loc["2", "simhash"]
     h13 = int(sig.loc["1", "simhash"]) ^ int(sig.loc["3", "simhash"])
     h15 = int(sig.loc["1", "simhash"]) ^ int(sig.loc["5", "simhash"])
@@ -105,7 +105,7 @@ def test_pathological_universal_shingle_is_df_capped(spark):
     rows = [(i, f"common boiler plate unique{i} tail{i} word{i}", "en", "web") for i in range(n)]
     rows.append((n, "common boiler plate unique0 tail0 word0", "en", "web"))  # dup of 0
     docs = spark.createDataFrame(rows, "doc_id long, text string, lang string, source string")
-    sh = shingles(docs, n=3)
+    sh = shingles(docs)
     pairs = ngram_jaccard_pairs(sh, threshold=0.5, max_df=5).toPandas()
     # 'common boiler plate' (df = 61 > 5) never enters the join: no n^2
     # candidate blow-up, and the only surviving pair is the true dup
@@ -123,11 +123,11 @@ def test_lsh_bucket_cap_drops_degenerate_bucket(spark):
     # 40 identical docs -> identical signatures -> one bucket of 40 per band
     rows = [(i, "same exact words every single time here now", "en", "web") for i in range(40)]
     docs = spark.createDataFrame(rows, "doc_id long, text string, lang string, source string")
-    sig = minhash_signatures(shingles(docs, n=3), k=8)
-    capped = lsh_candidate_pairs(sig, k=8, band_size=2, max_bucket=10).toPandas()
+    sig = minhash_signatures(shingles(docs))
+    capped = lsh_candidate_pairs(sig, max_bucket=10).toPandas()
     assert len(capped) == 0  # degenerate bucket dropped (exact dedup's job)
     # a cap above the input size keeps the 40-doc bucket
-    uncapped = lsh_candidate_pairs(sig, k=8, band_size=2, max_bucket=41).toPandas()
+    uncapped = lsh_candidate_pairs(sig, max_bucket=41).toPandas()
     assert len(uncapped) == 40 * 39 // 2
 
 
@@ -185,9 +185,9 @@ def test_ivf_ann_recall_and_probe_monotonicity(spark):
         return set(zip(res.q_id, res.vec_id))
 
     truth = pairs(cosine_topk(df, q, k=5).toPandas())
-    p1 = pairs(ivf_topk(df, q, n_cent=8, n_probe=1, k=5).toPandas())
-    p3 = pairs(ivf_topk(df, q, n_cent=8, n_probe=3, k=5).toPandas())
-    p8 = pairs(ivf_topk(df, q, n_cent=8, n_probe=8, k=5).toPandas())
+    p1 = pairs(ivf_topk(df, q, n_cent=8, n_probe=1).toPandas())
+    p3 = pairs(ivf_topk(df, q, n_cent=8, n_probe=3).toPandas())
+    p8 = pairs(ivf_topk(df, q, n_cent=8, n_probe=8).toPandas())
     r1, r3 = len(p1 & truth) / len(truth), len(p3 & truth) / len(truth)
     assert r3 >= r1  # more cells probed can only add candidates
     assert r3 > 0.3
@@ -231,8 +231,8 @@ def test_skewed_corpus_candidate_pairs_stay_linear(spark):
     counts = {}
     for n in (1500, 3000):
         docs = _boilerplate_corpus(spark, n)
-        sig = minhash_signatures(shingles(docs), k=8)
-        pairs = lsh_candidate_pairs(sig, k=8, band_size=2, max_bucket=100)
+        sig = minhash_signatures(shingles(docs))
+        pairs = lsh_candidate_pairs(sig, max_bucket=100)
         counts[n] = pairs.count()
     # quadratic growth would be 4x; linear is 2x. Allow slack for the
     # random unique-doc collisions (also ~linear).
@@ -240,8 +240,8 @@ def test_skewed_corpus_candidate_pairs_stay_linear(spark):
     # and the boilerplate block itself contributed ZERO pairs (capped):
     # any boilerplate pair would be (a, b) with both ids < 450
     docs = _boilerplate_corpus(spark, 1500)
-    sig = minhash_signatures(shingles(docs), k=8)
-    pairs = lsh_candidate_pairs(sig, k=8, band_size=2, max_bucket=100).toPandas()
+    sig = minhash_signatures(shingles(docs))
+    pairs = lsh_candidate_pairs(sig, max_bucket=100).toPandas()
     boiler_pairs = [
         (a, b) for a, b in zip(pairs.doc_a, pairs.doc_b)
         if int(a) < 450 and int(b) < 450
@@ -374,7 +374,7 @@ def test_asof_join_matches_merge_asof(spark, direction):
     right = spark.createDataFrame(rrows, "user_id string, ts long, rval long")
 
     got = (
-        asof_join(left, right, on="ts", by=["user_id"], direction=direction)
+        asof_join(left, right, direction=direction)
         .toPandas().set_index("lseq").sort_index()
     )
     lp = pd.DataFrame(lrows, columns=["user_id", "ts", "lseq"]).sort_values("ts")
@@ -401,10 +401,10 @@ def test_bloom_build_prune_no_false_negatives(spark):
 
     build = spark.range(0, 2000, 2).withColumnRenamed("id", "key")  # evens < 2000
     probe = spark.range(0, 8000).withColumnRenamed("id", "key")
-    bits = bloom_bitset(bloom_build(build, "key", m=16384, k=3), m=16384)
+    bits = bloom_bitset(bloom_build(build, "key"))
     assert len(bits) == 512 and any(b != 0 for b in bits)
 
-    pruned = probe.filter(bloom_test_col(bits, F.col("key"), m=16384, k=3))
+    pruned = probe.filter(bloom_test_col(bits, F.col("key")))
     passed = set(r.key for r in pruned.collect())
     members = set(range(0, 2000, 2))
     assert members <= passed                      # NO false negatives, ever
@@ -682,7 +682,7 @@ def test_sequence_packing_semantics(spark):
         ("b01", "s2", 64), ("b02", "s2", 64),                      # s2: exact fits
     ]
     seqs = spark.createDataFrame(rows, "doc_id string, source string, n_tok long")
-    out = pack_sequences(seqs, seq_len=64, by="source").toPandas().set_index("doc_id")
+    out = pack_sequences(seqs, seq_len=64).toPandas().set_index("doc_id")
     # s1: a01 [0,30) pack0; a02 [30,60) pack0; a03 [60,110) straddles 0->1
     assert out.loc["a01", "pack_id"] == 0 and out.loc["a01", "pack_off"] == 0
     assert out.loc["a02", "pack_id"] == 0 and out.loc["a02", "pack_off"] == 30
@@ -701,7 +701,7 @@ def test_sequence_packing_semantics(spark):
 
     # shards are independent: repartitioning must not change the packing
     out13 = (
-        pack_sequences(seqs.repartition(13), seq_len=64, by="source")
+        pack_sequences(seqs.repartition(13), seq_len=64)
         .toPandas().set_index("doc_id")
     )
     assert out13.sort_index().equals(out.sort_index())
@@ -737,7 +737,7 @@ def test_packing_two_phase_equals_global_and_bounds_hot_shard(spark):
 
     # hot-shard boundedness: no (shard, bucket) group — i.e. no single
     # window task input — holds more than a few range-partitions' worth
-    bk = _bucketed_cumsum(seqs, "source", 64)
+    bk = _bucketed_cumsum(seqs, 64)
     per = bk.groupBy("source", "_bucket").count().toPandas()
     hot = per[per.source == "hot"]
     assert len(hot) >= 16, f"hot shard landed in only {len(hot)} buckets"
@@ -766,10 +766,10 @@ def test_source_mixing_weights_semantics(spark):
     # reference recipe: the dyadic-alpha sqrt chain in pure-Python IEEE
     # doubles (bitwise-identical to the Spark/DuckDB chain by design)
     def w_q(n):
-        from crossai_ts_spark.operators.mixing import _alpha_bits, ALPHA_Q16
+        from crossai_ts_spark.operators.mixing import ALPHA_BITS
 
         r = 1.0
-        for bit in reversed(_alpha_bits(ALPHA_Q16)):
+        for bit in reversed(ALPHA_BITS):
             r = math.sqrt(r * float(n)) if bit else math.sqrt(r)
         return math.floor(r * 1048576.0)
 
@@ -834,7 +834,7 @@ def test_ngram_topk_counts_and_tiebreak(spark):
         (3, "q", "en", "t"),           # shorter than n: contributes nothing
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string, lang string, source string")
-    got = ngram_topk(docs, n=2, k=3).toPandas()
+    got = ngram_topk(docs, k=3).toPandas()
     assert list(got.ngram) == ["a b", "b a", "b c"]  # 3 then ties text-asc
     assert list(got.cnt) == [3, 1, 1]
     assert list(got["rank"]) == [1, 2, 3]
@@ -854,7 +854,7 @@ def test_centroid_distances_exact_vs_numpy(spark):
         [(i, vecs[i].tolist(), labels[i]) for i in range(30)],
         "vec_id long, embedding array<float>, label int",
     )
-    got = centroid_distances(emb, by="label").toPandas().set_index("vec_id")
+    got = centroid_distances(emb).toPandas().set_index("vec_id")
 
     Q = 1048576.0
     fq = np.floor(vecs.astype(np.float64) * Q)
@@ -985,8 +985,8 @@ def test_minhash_signatures_invariant_to_shingle_distinct(spark, docs_df):
         "x y z x y z x y z",
     ])]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    s_set = minhash_signatures(shingles(docs, n=3, distinct=True), k=8).toPandas()
-    s_multi = minhash_signatures(shingles(docs, n=3, distinct=False), k=8).toPandas()
+    s_set = minhash_signatures(shingles(docs, distinct=True)).toPandas()
+    s_multi = minhash_signatures(shingles(docs, distinct=False)).toPandas()
     key = "doc_id"
     a = s_set.sort_values(key).reset_index(drop=True)
     b = s_multi.sort_values(key).reset_index(drop=True)

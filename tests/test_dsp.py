@@ -21,7 +21,7 @@ def test_stft_shapes(n):
 def test_stft_istft_roundtrip():
     x = RNG.normal(0, 1, 1024)
     S = stft(x, n_fft=256, hop=64)
-    y = istft(S, n_fft=256, hop=64, length=1024)
+    y = istft(S, length=1024)
     assert np.allclose(x, y, atol=1e-8)
 
 

@@ -107,7 +107,7 @@ def test_linear_checksum_kernel_bitwise_equals_runs_path(spark, gapped2):
         columns=["doc_id", "n_points", "chk"],
     )
     got = (
-        gapfill_linear_checksum(sdf, quantize=1024.0)
+        gapfill_linear_checksum(sdf)
         .toPandas().sort_values("doc_id").reset_index(drop=True)
     )
     assert got[["doc_id", "n_points", "chk"]].equals(want)

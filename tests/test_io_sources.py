@@ -40,7 +40,7 @@ def test_read_write_table_parquet_roundtrip(spark, tmp_path):
         [("a", 1, 10), ("b", 1, 20), ("c", 2, 30)], "doc_id string, tier int, v int"
     )
     loc = str(tmp_path / "t")
-    write_table(df, loc, mode="overwrite", partition_by=["tier"])
+    write_table(df, loc)
     back = read_table(spark, loc)
     assert back.count() == 3
     # hive-layout partition pruning works on the partition column

@@ -74,7 +74,7 @@ def test_asof_plan_one_key_exchange_no_join(spark):
     l = ev.filter("event_type = 'click'").select("user_id", "ts", "event_id")
     r = ev.filter("event_type = 'view'").select("user_id", "ts", "value")
     for direction in ("backward", "forward"):
-        plan = _plan(asof_join(l, r, on="ts", by=["user_id"], direction=direction))
+        plan = _plan(asof_join(l, r, direction=direction))
         assert plan.count("Exchange hashpartitioning(user_id") == 1, plan
         assert "Join" not in plan, plan
         window = plan.split("Window [", 1)[1]
@@ -211,7 +211,7 @@ def test_streaming_hll_native_plan_is_zero_python(spark, tmp_path):
         "event_id long, ts_s string, user_id string"
     ).parquet(str(in_dir) + "/*")
     ev = raw.select("event_id", F.to_timestamp("ts_s").alias("ts"), "user_id")
-    out = streaming_hll_native(ev, window_sec=3600)
+    out = streaming_hll_native(ev)
     q = (out.writeStream.outputMode("update").format("memory")
          .queryName("nat_plan_out").start())
     try:

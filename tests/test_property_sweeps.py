@@ -123,13 +123,13 @@ def test_round2_queries_partition_invariant(spark):
     def run(parts):
         df = base.repartition(parts)
         b = (
-            butterworth_docs(df, fs=32.0, cutoff_freq=4.0, order=4)
+            butterworth_docs(df)
             .toPandas()
             .sort_values("doc_id")
             .reset_index(drop=True)
         )
         d = (
-            drift_additive(df, 0.5, 5)
+            drift_additive(df)
             .select(
                 "doc_id",
                 F.expr(

@@ -1,5 +1,6 @@
 """Every package module, and every top-level symbol in it, is reached from
-a production root.
+a production root; every keyword option of a package function takes two
+values somewhere in the repo.
 
 Walks ``import`` / ``from ... import`` statements and name references
 (``ast``, no Spark) from the entry points that run the engine:
@@ -14,6 +15,8 @@ from __future__ import annotations
 
 import ast
 import pathlib
+import re
+from collections import defaultdict
 
 ROOT = pathlib.Path(__file__).resolve().parents[1]
 PACKAGE = ROOT / "crossai_ts_spark"
@@ -112,9 +115,9 @@ _FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
 class _Module:
     """One file's top-level symbols, import bindings and import-time code."""
 
-    def __init__(self, f: pathlib.Path, root: pathlib.Path):
+    def __init__(self, f: pathlib.Path, root: pathlib.Path, source: str | None = None):
         self.f = f
-        tree = ast.parse(f.read_text(), str(f))
+        self.tree = tree = ast.parse(f.read_text() if source is None else source, str(f))
         # a script's own directory is on sys.path (see _imports)
         bases = (root,) if root / "crossai_ts_spark" in f.parents else (root, f.parent)
         self.tops: dict[str, list[ast.AST]] = {}
@@ -277,3 +280,234 @@ def test_symbol_walk_flags_each_form(tmp_path):
         "mod:reference: only oracle/ reaches it; move it to oracle/",
         "mod:test_only: no query, job, stream or benchmark reaches it",
     ]
+
+
+# -- options that take one value ---------------------------------------------
+#
+# An option is a defaulted parameter of a top-level package function outside
+# oracle/. Each call anywhere in the repo (the package with oracle/, jobs/,
+# tools/, perfbench/, bench*.py, tests/, and the Python programs scripts hold
+# in strings) gives it a value: the literal it passes, the default when it
+# omits it, the values of the caller's own parameter when it forwards that
+# unchanged, and a value of its own for anything else. An option every call
+# sets alike is a constant.
+
+OPTION_EXEMPT = {
+    "operators.rollup:cascade(strategy)":
+        "perfbench passes it until a benchmark change drops the argument",
+    "streaming.rollup_stream:streaming_kmv(state_ttl_sec)": "bounds streaming state",
+}
+
+_FMT = re.compile(r"\{\{|\}\}|\{[^{}]*\}")
+
+
+def _sources(root: pathlib.Path) -> list[pathlib.Path]:
+    files = sorted(root.glob("*.py"))
+    for d in ("crossai_ts_spark", "jobs", "perfbench", "tools", "tests"):
+        files += sorted((root / d).rglob("*.py"))
+    return files
+
+
+def _code_strings(tree: ast.AST):
+    """The package-calling programs a file holds in string constants; a
+    ``str.format`` template's fields read as a name."""
+    for n in ast.walk(tree):
+        if not (isinstance(n, ast.Constant) and isinstance(n.value, str)
+                and "crossai_ts_spark" in n.value and "\n" in n.value):
+            continue
+        for text in (n.value, _FMT.sub(lambda m: {"{{": "{", "}}": "}"}.get(m[0], "_"), n.value)):
+            try:
+                ast.parse(text)
+            except SyntaxError:
+                continue
+            yield text
+            break
+
+
+def _params(fn: ast.AST) -> list[ast.arg]:
+    a = fn.args
+    return a.posonlyargs + a.args + a.kwonlyargs
+
+
+def _defaults(fn: ast.AST) -> dict[str, ast.AST]:
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    out = {p.arg: d for p, d in zip(pos[len(pos) - len(a.defaults):], a.defaults)}
+    out.update({p.arg: d for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None})
+    return out
+
+
+def _literal(node: ast.AST):
+    try:
+        v = ast.literal_eval(node)
+    except (ValueError, TypeError, SyntaxError, MemoryError, RecursionError):
+        return None
+    return ("lit", type(v).__name__, repr(v))
+
+
+def _bound(fn: ast.AST, call: ast.Call, p: str):
+    """The argument node ``call`` binds to parameter ``p`` of ``fn``: None
+    when it omits it, ``...`` when a ``*``/``**`` argument may carry it."""
+    for kw in call.keywords:
+        if kw.arg == p:
+            return kw.value
+    pos = [a.arg for a in fn.args.posonlyargs + fn.args.args]
+    if p in pos:
+        i = pos.index(p)
+        for j, a in enumerate(call.args):
+            if isinstance(a, ast.Starred):
+                return ...
+            if j == i:
+                return a
+    if any(kw.arg is None for kw in call.keywords):
+        return ...
+    return None
+
+
+def option_report(root: pathlib.Path = ROOT) -> list[str]:
+    """One ``module:function(param)`` line per option that every call site
+    sets to one value, outside :data:`OPTION_EXEMPT`."""
+    package = root / "crossai_ts_spark"
+    oracle = package / "oracle"
+    mods: dict[pathlib.Path, _Module] = {}
+
+    def mod(f: pathlib.Path) -> _Module:
+        if f not in mods:
+            mods[f] = _Module(f, root)
+        return mods[f]
+
+    for f in _sources(root):
+        for i, text in enumerate(_code_strings(mod(f).tree)):
+            fake = f.with_name(f"{f.name}<{i}>")
+            mods[fake] = _Module(fake, root, text)
+
+    def target(m: _Module, node: ast.AST):
+        """The ``(file, name)`` of the function ``node`` names, re-exports followed."""
+        hit, seen = m.resolve(node), set()
+        while hit is not None and hit[0] == "sym" and hit[1:] not in seen:
+            seen.add(hit[1:])
+            if hit[1] not in mods and not hit[1].is_file():
+                return None
+            t = mod(hit[1])
+            if any(isinstance(d, _FUNCS) for d in t.tops.get(hit[2], [])):
+                return hit[1:]
+            hit = t.bindings.get(hit[2])
+        return None
+
+    def fdef(key):
+        return [d for d in mod(key[0]).tops[key[1]] if isinstance(d, _FUNCS)][-1]
+
+    calls: dict[tuple, list] = defaultdict(list)  # (file, name) -> [(module, call, scope)]
+    escaped: set[tuple] = set()  # functions passed around as values
+
+    def visit(m: _Module, node: ast.AST, scope: tuple, callee: set):
+        for c in ast.iter_child_nodes(node):
+            if isinstance(c, ast.Call):
+                t = target(m, c.func)
+                if t is not None:
+                    calls[t].append((m, c, scope))
+                callee = callee | {id(c.func)}
+            elif isinstance(c, (ast.Name, ast.Attribute)) and id(c) not in callee \
+                    and isinstance(c.ctx, ast.Load):
+                t = target(m, c)
+                if t is not None:
+                    escaped.add(t)
+            inner = scope + (c,) if isinstance(c, (*_FUNCS, ast.Lambda, ast.ClassDef)) else scope
+            visit(m, c, inner, callee)
+
+    for m in list(map(mod, _sources(root))) + [m for f, m in mods.items() if not f.is_file()]:
+        visit(m, m.tree, (), set())
+
+    memo: dict[tuple, set] = {}
+
+    def arg_values(m: _Module, node: ast.AST, scope: tuple) -> set:
+        lit = _literal(node)
+        if lit is not None:
+            return {lit}
+        if isinstance(node, ast.Name):
+            for i in range(len(scope) - 1, -1, -1):
+                fn = scope[i]
+                if isinstance(fn, ast.ClassDef) or node.id not in {p.arg for p in _params(fn)}:
+                    continue
+                rebound = any(isinstance(n, ast.Name) and n.id == node.id
+                              and not isinstance(n.ctx, ast.Load) for n in ast.walk(fn))
+                if i == 0 and not isinstance(fn, ast.Lambda) and not rebound:
+                    return values((m.f, fn.name, node.id))  # forwarded unchanged
+                break
+        return {("opaque", str(m.f), node.lineno, node.col_offset)}
+
+    def values(key: tuple) -> set:
+        if key in memo:
+            return memo[key]
+        memo[key] = set()  # a forwarding cycle adds nothing
+        f, name, p = key
+        fn = fdef((f, name))
+        default = _defaults(fn).get(p)
+        dflt = set() if default is None else {_literal(default) or ("expr", str(f), ast.dump(default))}
+        sites = calls.get((f, name), [])
+        if (f, name) in escaped or (not sites and default is None):
+            out = {("opaque", key)}
+        elif not sites:
+            out = dflt
+        else:
+            out = set()
+            for m, call, scope in sites:
+                arg = _bound(fn, call, p)
+                if arg is ...:
+                    out.add(("opaque", str(m.f), call.lineno, call.col_offset))
+                elif arg is None:
+                    out |= dflt or {("opaque", key)}
+                else:
+                    out |= arg_values(m, arg, scope)
+        memo[key] = out
+        return out
+
+    lines = []
+    for f in sorted(package.rglob("*.py")):
+        if oracle in f.parents:
+            continue
+        rel = ".".join(p for p in f.relative_to(package).with_suffix("").parts if p != "__init__")
+        for name in sorted(mod(f).tops):
+            if not any(isinstance(d, _FUNCS) for d in mod(f).tops[name]):
+                continue
+            fn = fdef((f, name))
+            for p in _defaults(fn):
+                line = f"{rel}:{name}({p})"
+                if len(values((f, name, p))) <= 1 and line not in OPTION_EXEMPT:
+                    lines.append(line)
+    return lines
+
+
+def test_every_option_takes_two_values():
+    lines = option_report()
+    assert not lines, ("options every call site sets alike; make each a constant:\n"
+                       + "\n".join(lines))
+
+
+def test_option_walk_flags_each_form(tmp_path):
+    """An option every call sets alike is flagged, also when it reaches the
+    option through a caller's forwarded parameter; one that gets a second
+    value through an aliased import, and one whose caller forwards its own
+    two-valued parameter, are not."""
+    pkg = tmp_path / "crossai_ts_spark"
+    pkg.mkdir()
+    (tmp_path / "jobs").mkdir()
+    (tmp_path / "tests").mkdir()
+    (pkg / "__init__.py").write_text("")
+    (pkg / "mod.py").write_text(
+        "def planted(x, w=4):\n    return x * w\n\n\n"
+        "def aliased(x, k=8):\n    return x + k\n\n\n"
+        "def forwarded(x, n=2):\n    return x - n\n\n\n"
+        "def outer(x, n=2):\n    return forwarded(x, n=n)\n\n\n"
+        "def relay(x, m=1):\n    return x + m\n\n\n"
+        "def outer_one(x, m=1):\n    return relay(x, m)\n"
+    )
+    (tmp_path / "jobs" / "job.py").write_text(
+        "from crossai_ts_spark.mod import aliased, outer, outer_one, planted\n\n"
+        "planted(1, w=4)\naliased(1)\nouter(1)\nouter_one(1, m=1)\n"
+    )
+    (tmp_path / "tests" / "test_mod.py").write_text(
+        "import crossai_ts_spark.mod as m\n\n\n"
+        "def test_it():\n    m.planted(2)\n    m.aliased(2, k=16)\n    m.outer(2, n=3)\n"
+    )
+    assert option_report(tmp_path) == ["mod:outer_one(m)", "mod:planted(w)", "mod:relay(m)"]

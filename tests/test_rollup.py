@@ -188,7 +188,7 @@ def test_hll_merge_identity_and_accuracy(spark):
         "event_id", F.to_timestamp("ts_s").alias("ts"), "user_id"
     )
     t1 = hll_sketch(ev, window_sec=3600)
-    t2 = hll_merge(t1, fanout=4, window_sec=3600)
+    t2 = hll_merge(t1, fanout=4)
     direct = hll_sketch(ev, window_sec=14400)
     key = ["window_start", "reg"]
     a = t2.toPandas().sort_values(key).reset_index(drop=True)
@@ -219,7 +219,7 @@ def test_kmv_merge_identity_and_estimate(spark):
     ev = spark.createDataFrame(rows, "event_id long, ts_s string, user_id long").select(
         "event_id", F.to_timestamp("ts_s").alias("ts"), "user_id"
     )
-    whole = kmv_sketch(ev, window_sec=3600, k=8).toPandas().iloc[0]
+    whole = kmv_sketch(ev, k=8).toPandas().iloc[0]
 
     # exactness of the sample: recompute the 8 smallest distinct hashes
     import hashlib
@@ -231,8 +231,8 @@ def test_kmv_merge_identity_and_estimate(spark):
     assert list(whole.ks) == hs
 
     # merge rule: split events, take per-half bottom-k, merge, compare
-    h1 = kmv_sketch(ev.filter("event_id < 1500"), window_sec=3600, k=8).toPandas().iloc[0]
-    h2 = kmv_sketch(ev.filter("event_id >= 1500"), window_sec=3600, k=8).toPandas().iloc[0]
+    h1 = kmv_sketch(ev.filter("event_id < 1500"), k=8).toPandas().iloc[0]
+    h2 = kmv_sketch(ev.filter("event_id >= 1500"), k=8).toPandas().iloc[0]
     merged = sorted(set(list(h1.ks) + list(h2.ks)))[:8]
     assert merged == list(whole.ks)
 
@@ -240,7 +240,7 @@ def test_kmv_merge_identity_and_estimate(spark):
     # k=8 has ~1/sqrt(k-2) ~ 40% sigma: only assert the right magnitude,
     # then check real accuracy at k=64 (~13% sigma, 3-sigma band)
     assert 0.2 < whole.n_distinct_est / true_distinct < 4
-    wide = kmv_sketch(ev, window_sec=3600, k=64).toPandas().iloc[0]
+    wide = kmv_sketch(ev, k=64).toPandas().iloc[0]
     assert abs(wide.n_distinct_est - true_distinct) / true_distinct < 0.4
 
 
@@ -265,7 +265,7 @@ def test_kmv_prefilter_hot_window_boundedness(spark):
         F.lit("2024-01-01 00:00:00").cast("timestamp").alias("ts"),
         F.col("id").alias("user_id"),
     )
-    e = _kmv_hashed(ev, "user_id", "ts", 3600)
+    e = _kmv_hashed(ev, 3600)
     thr = _kmv_thresholds(e, k, c)
     trow = thr.toPandas().iloc[0]
     assert bool(trow.filtered)  # 10^6 >> c*k: the filter must engage
@@ -274,8 +274,8 @@ def test_kmv_prefilter_hot_window_boundedness(spark):
     # the HLL estimate's error band, and never fewer than k
     assert k <= n_cand <= 8 * c * k
 
-    filtered = kmv_sketch(ev, window_sec=3600, k=k, n_salts=16).toPandas()
-    plain = kmv_sketch_unfiltered(ev, window_sec=3600, k=k, n_salts=16).toPandas()
+    filtered = kmv_sketch(ev, k=k, n_salts=16).toPandas()
+    plain = kmv_sketch_unfiltered(ev, k=k, n_salts=16).toPandas()
     assert list(filtered.iloc[0].ks) == list(plain.iloc[0].ks)
     assert filtered.iloc[0].n_distinct_est == plain.iloc[0].n_distinct_est
 
@@ -285,7 +285,7 @@ def test_kmv_prefilter_hot_window_boundedness(spark):
     n_starved = e.join(F.broadcast(thr_starved), "window_start").filter("h < thr").count()
     assert n_starved < k
     starved = kmv_sketch(
-        ev, window_sec=3600, k=k, n_salts=16, candidate_factor=0.1
+        ev, k=k, n_salts=16, candidate_factor=0.1
     ).toPandas()
     assert list(starved.iloc[0].ks) == list(plain.iloc[0].ks)
 

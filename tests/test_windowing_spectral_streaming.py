@@ -16,7 +16,7 @@ def test_streaming_tier1_equals_batch(spark, tiny_df, tiny_docs, tmp_path):
 
     path = str(tmp_path / "seq_stream")
     tiny_df.write.mode("overwrite").parquet(path)
-    stream = read_sequence_stream(spark, path, max_files=2)
+    stream = read_sequence_stream(spark, path)
     run_to_memory(cascade(stream, w=64, tiers=1), "t1_stream")
     got = spark.sql("SELECT * FROM t1_stream").toPandas()
     exp = rollup_frame(tiny_docs, 64)
@@ -442,15 +442,16 @@ def test_incremental_tier1_multi_arrow_chunk_trigger(spark, tmp_path):
 
 
 def test_streaming_cms_matches_batch(spark, tmp_path):
-    """Continuous count-min sketch: the streaming aggregation's state is
-    the sketch itself (<= d*w cells, bounded by construction), and after
-    consuming the whole bounded stream the complete-mode sink equals
-    cms_build over the same items cell-for-cell — so cms_lookup estimates
-    carry the batch one-sided guarantee at any point in the stream."""
+    """Continuous count-min sketch: the batch ``cms_build`` run on a stream
+    is the streaming aggregation, whose state is the sketch itself (<= d*w
+    cells, bounded by construction), and after consuming the whole bounded
+    stream the complete-mode sink equals cms_build over the same items
+    cell-for-cell — so cms_lookup estimates carry the batch one-sided
+    guarantee at any point in the stream."""
     import pandas as pd
 
     from crossai_ts_spark.operators.cms import cms_build, cms_lookup
-    from crossai_ts_spark.streaming.rollup_stream import run_to_memory, streaming_cms
+    from crossai_ts_spark.streaming.rollup_stream import run_to_memory
 
     d, w = 4, 64
     # zipf-ish repeats so several keys share cells (collisions exercised)
@@ -466,7 +467,7 @@ def test_streaming_cms_matches_batch(spark, tmp_path):
     raw = spark.readStream.schema("key string").option("maxFilesPerTrigger", 1).parquet(
         str(in_dir) + "/*"
     )
-    run_to_memory(streaming_cms(raw, key="key", d=d, w=w), "cms_stream_out",
+    run_to_memory(cms_build(raw, key="key", d=d, w=w), "cms_stream_out",
                   output_mode="complete")
     got = (
         spark.sql("SELECT * FROM cms_stream_out").toPandas()
@@ -516,7 +517,7 @@ def test_streaming_kmv_matches_batch(spark, tmp_path):
     ev = raw.select("event_id", F.to_timestamp("ts_s").alias("ts"), "user_id")
     # 2 file-triggers x 4 windows = 8 emissions; ProcessingTimeTimeout
     # keeps scheduling timer batches, so poll the sink (run_until_rows)
-    run_until_rows(streaming_kmv(ev, window_sec=3600, k=8), "kmv_stream_out", 8)
+    run_until_rows(streaming_kmv(ev), "kmv_stream_out", 8)
     emitted = spark.sql("SELECT * FROM kmv_stream_out").toPandas()
     final = (
         emitted.sort_values("n_events").groupby("window_start").last().reset_index()
@@ -526,7 +527,7 @@ def test_streaming_kmv_matches_batch(spark, tmp_path):
         "event_id", F.to_timestamp("ts_s").alias("ts"), "user_id"
     )
     want = (
-        kmv_sketch(batch_ev, window_sec=3600, k=8)
+        kmv_sketch(batch_ev, k=8)
         .toPandas().sort_values("window_start").reset_index(drop=True)
     )
     got = final.sort_values("window_start").reset_index(drop=True)
@@ -620,7 +621,7 @@ def test_streaming_hll_native_matches_batch_bitwise(spark, tmp_path):
     )
     ev = raw.select("event_id", F.to_timestamp("ts_s").alias("ts"), "user_id")
     # pure streaming agg, no timers -> processAllAvailable() terminates
-    run_to_memory(streaming_hll_native(ev, window_sec=3600), "hll_native_out", "update")
+    run_to_memory(streaming_hll_native(ev), "hll_native_out", "update")
     # update mode re-emits a (window,reg) row whenever its M grows;
     # per-key M is monotone, so max over the sink = final register
     got = (
@@ -676,7 +677,7 @@ def test_streaming_hll_native_drops_null_key_and_ts_rows(spark, tmp_path):
     spark.createDataFrame(rows + bad, schema).coalesce(1).write.parquet(str(in_dir / "b0"))
     raw = spark.readStream.schema(schema).parquet(str(in_dir) + "/*")
     ev = raw.select("event_id", F.to_timestamp("ts_s").alias("ts"), "user_id")
-    run_to_memory(streaming_hll_native(ev, window_sec=3600), "hll_native_nulls_out", "update")
+    run_to_memory(streaming_hll_native(ev), "hll_native_nulls_out", "update")
     key = ["window_start", "reg"]
     got = (
         spark.sql(
@@ -720,7 +721,7 @@ def test_streaming_hll_native_append_mode_emits_after_watermark(spark, tmp_path)
         str(in_dir) + "/*"
     )
     ev = raw.select("event_id", F.to_timestamp("ts_s").alias("ts"), "user_id")
-    out = streaming_hll_native(ev, window_sec=3600, watermark="2 hours")
+    out = streaming_hll_native(ev)
     # append mode: rows arrive only once the watermark finalizes a window.
     # 2 early windows x up to 64 regs; poll until both windows surface.
     q = (out.writeStream.outputMode("append").format("memory")

@@ -1,11 +1,14 @@
 """Two-cluster-size scaling evidence (north_rule: efficiency >= 0.8 from N
-to 4N executors; sandbox proxy: local[8] vs local[32], identical input).
+to 4N executors; sandbox proxy: local[nproc // 4] vs local[nproc], identical
+input).
 
 Methodology (each point hardened against a measured pitfall):
   * the input is MATERIALIZED to parquet once and read identically by both
     levels — no per-level cache layouts;
-  * each level runs in its own subprocess/JVM (local[N] is fixed at session
-    start);
+  * each level runs in its own persistent subprocess/JVM (local[N] is fixed
+    at session start), and their trials alternate back-to-back
+    (``run_interleaved``): sequential runs minutes apart measure the host's
+    drift, not the job;
   * BLAS/OMP threads are pinned to 1 (N python workers x nproc-sized
     OpenBLAS pools oversubscribed the box 32x and made local[32] 4x SLOWER
     than local[8] before the fix — see session.py);
@@ -15,7 +18,7 @@ Methodology (each point hardened against a measured pitfall):
   * a warm-up run precedes the timed run (JIT, Arrow init, python workers).
 
 Writes BENCH/BASELINE.md.   Usage:
-    python tools/bench_scaling.py [--docs 60000] [--low 8] [--high 32]
+    python tools/bench_scaling.py [--docs 60000] [--trials 3] [--warmup-pairs 4]
 """
 
 from __future__ import annotations
@@ -38,49 +41,10 @@ os.environ["PYTHONPATH"] = {repo!r}
 sys.path.insert(0, {repo!r})
 from crossai_ts_spark.session import get_spark
 from crossai_ts_spark.datagen import gen_sequences
-spark = get_spark(master="local[32]")
+spark = get_spark()
 gen_sequences(spark, n_docs={docs}, seed=42, partitions=128).write.mode("overwrite").parquet({path!r})
 spark.stop()
 """
-
-CHILD = r"""
-import json, os, sys, time
-os.environ["PYTHONPATH"] = {repo!r}  # python workers need the pkg too
-sys.path.insert(0, {repo!r})
-from crossai_ts_spark.session import get_spark
-from crossai_ts_spark.operators.rollup import cascade
-from crossai_ts_spark.functions.codecs import compress_tiers
-spark = get_spark(app_name="bench_scaling", master="local[{cores}]", shuffle_partitions={cores})
-
-def job(limit=None):
-    seqs = spark.read.parquet({path!r})
-    if limit:
-        seqs = seqs.limit(limit)
-    tiers = cascade(seqs, w=64, fanout=64, tiers=3)
-    segs = compress_tiers(tiers)
-    return segs.count()
-
-# SMALL warm-up (JIT, Arrow init, python worker pool): a full-size warm-up
-# leaves the session measurably degraded (python-worker/JVM heap growth made
-# identical back-to-back runs 1.7x slower), contaminating the timed run.
-job(limit=4000)
-# min of 3 trials: the sandbox VM shows +-2x run-to-run noise (shared host);
-# the minimum is the least-throttled estimate of the configuration's speed
-walls = []
-for _ in range({trials}):
-    t0 = time.monotonic()
-    n_segs = job()
-    walls.append(time.monotonic() - t0)
-wall = min(walls)
-meta = spark.read.parquet({path!r}).selectExpr(
-    "count(*) AS n_seq", "sum(cast(n_tok as bigint)) AS n_tok").collect()[0]
-print("RESULT " + json.dumps({{"cores": {cores}, "wall": wall, "walls": [round(w, 2) for w in walls],
-      "n_seq": meta.n_seq, "n_tok": int(meta.n_tok), "segments": n_segs,
-      "tokens_per_sec": int(meta.n_tok) / wall,
-      "seqs_per_sec": meta.n_seq / wall}}))
-spark.stop()
-"""
-
 
 CHILD_STEP = r"""
 import json, os, sys, time
@@ -129,8 +93,8 @@ spark.stop()
 class _StepChild:
     """A persistent one-level JVM driven trial-by-trial over stdin.
 
-    Exists for --interleaved: the sequential protocol runs the two levels
-    minutes apart, but this sandbox's per-core speed drifts between
+    Two levels run minutes apart would measure drift: this sandbox's
+    per-core speed drifts between
     sessions AND within one (pyloop 0.5-1.3 s; r5's local[2] trials
     include a 60.9 s interference outlier while r6's local[2] found a
     38 s fast window) — a ratio of two mins taken in different ambient
@@ -183,8 +147,7 @@ def run_interleaved(low: int, high: int, path: str, pairs: int,
     """``warmup_pairs`` unrecorded pairs run first: on this microVM a fresh
     JVM pays a first-touch page-fault tax for several trials (the high
     level needs ~6-8 before its floor), so early pairs measure heap
-    warm-up, not the job — the same reason the sequential protocol
-    excludes its warm-up run. Measured pairs start with both JVMs warm."""
+    warm-up, not the job. Measured pairs start with both JVMs warm."""
     lo_c, hi_c = _StepChild(low, path), _StepChild(high, path)
     lo_c.wait_ready(); hi_c.wait_ready()
     lo_walls, hi_walls, pair_effs = [], [], []
@@ -250,29 +213,18 @@ def run_interleaved(low: int, high: int, path: str, pairs: int,
     return level(low, lo_walls, m["segments"]), level(high, hi_walls, hi_m["segments"]), pair_effs
 
 
-def run_level(cores: int, path: str, trials: int = 3) -> dict:
-    code = CHILD.format(repo=REPO, cores=cores, path=path, trials=trials)
-    r = subprocess.run([sys.executable, "-c", code], capture_output=True, text=True, timeout=3000)
-    for line in r.stdout.splitlines():
-        if line.startswith("RESULT "):
-            return json.loads(line[len("RESULT "):])
-    raise RuntimeError(f"no RESULT from local[{cores}]:\n{r.stdout[-2000:]}\n{r.stderr[-2000:]}")
-
-
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--docs", type=int, default=60000)
-    ap.add_argument("--low", type=int, default=8)
-    ap.add_argument("--high", type=int, default=32)
-    ap.add_argument("--trials", type=int, default=3)
-    ap.add_argument("--interleaved", action="store_true",
-                    help="alternate low/high trials in persistent JVMs; "
-                         "per-pair efficiency is immune to ambient drift")
+    ap.add_argument("--trials", type=int, default=3, help="measured low/high pairs")
     ap.add_argument("--warmup-pairs", type=int, default=4,
-                    help="interleaved mode: unrecorded pairs before the "
-                         "measured ones (JVM first-touch page-fault warm-up)")
+                    help="unrecorded pairs before the measured ones "
+                         "(JVM first-touch page-fault warm-up)")
     ap.add_argument("--keep-input", action="store_true")
     args = ap.parse_args()
+    # the north_rule's N -> 4N step on this machine's cores
+    high = len(os.sched_getaffinity(0))
+    low = max(1, high // 4)
 
     path = INPUT.format(docs=args.docs)
     if not os.path.isdir(path):
@@ -281,60 +233,48 @@ def main() -> int:
             check=True, capture_output=True, timeout=3000,
         )
 
-    pair_effs = None
-    if args.interleaved:
-        lo, hi, pair_effs = run_interleaved(args.low, args.high, path,
-                                            args.trials, args.warmup_pairs)
-    else:
-        lo = run_level(args.low, path, args.trials)
-        hi = run_level(args.high, path, args.trials)
-    ratio = args.high / args.low
-    speedup = lo["wall"] / hi["wall"]
-    eff = speedup / ratio
-    if pair_effs is not None:
-        # Headline = MEDIAN pair (ADVICE r6: max-of-pairs is upward-biased —
-        # noise that throttles only the low-core trial inflates that pair's
-        # efficiency, and the max selects exactly those outliers). The best
-        # pair is reported as an explicit upper bound, the min-of-trials
-        # ratio as the conservative floor; the full distribution is shown.
-        eff = statistics.median(pair_effs)
-        speedup = eff * ratio
-
-    pair_md = ""
-    if pair_effs is not None:
-        min_eff = (lo["wall"] / hi["wall"]) / ratio
-        pair_md = (
-            "\nProtocol: INTERLEAVED — both level JVMs stay up and trials\n"
-            "alternate local[{}] / local[{}] back-to-back, so each adjacent pair\n"
-            "shares one ambient-speed window of this drifting shared host.\n"
-            "Unrecorded ADAPTIVE warm-up pairs precede the measured ones:\n"
-            "warm-up runs until both levels' walls converge to their running\n"
-            "floor (within 8% on two consecutive pairs; min {}, cap 12) —\n"
-            "the high-level JVM takes 6-9 full trials of first-touch\n"
-            "page-fault + JIT + heap shakeout on this microVM before its\n"
-            "wall floor (r7 measured local[8] 14.2s -> 10.0s on identical\n"
-            "code and page-cached input). Every trial is followed by a\n"
-            "synchronous full GC in its own JVM plus a settle, so neither\n"
-            "JVM's deferred garbage is collected concurrently with the\n"
-            "other level's timed window.\n"
-            "The headline efficiency is the MEDIAN measured pair (max-of-pairs\n"
-            "is an upward-biased estimator: ambient noise hitting only the\n"
-            "low-core trial inflates its pair, so the best pair is an upper\n"
-            "bound, not 'the' efficiency). Full per-pair distribution: {}.\n"
-            "Best (least-throttled) pair, upper bound: {:.3f}.\n"
-            "Min-of-trials efficiency (mins may come from different windows),\n"
-            "conservative floor: {:.3f}.\n".format(
-                args.low, args.high, args.warmup_pairs,
-                "[" + ", ".join(f"{e:.3f}" for e in pair_effs) + "]",
-                max(pair_effs), min_eff)
-        )
+    lo, hi, pair_effs = run_interleaved(low, high, path, args.trials, args.warmup_pairs)
+    ratio = high / low
+    # Headline = MEDIAN pair (ADVICE r6: max-of-pairs is upward-biased —
+    # noise that throttles only the low-core trial inflates that pair's
+    # efficiency, and the max selects exactly those outliers). The best
+    # pair is reported as an explicit upper bound, the min-of-trials
+    # ratio as the conservative floor; the full distribution is shown.
+    eff = statistics.median(pair_effs)
+    speedup = eff * ratio
+    min_eff = (lo["wall"] / hi["wall"]) / ratio
+    pair_md = (
+        "\nProtocol: INTERLEAVED — both level JVMs stay up and trials\n"
+        "alternate local[{}] / local[{}] back-to-back, so each adjacent pair\n"
+        "shares one ambient-speed window of this drifting shared host.\n"
+        "Unrecorded ADAPTIVE warm-up pairs precede the measured ones:\n"
+        "warm-up runs until both levels' walls converge to their running\n"
+        "floor (within 8% on two consecutive pairs; min {}, cap 12) —\n"
+        "the high-level JVM takes 6-9 full trials of first-touch\n"
+        "page-fault + JIT + heap shakeout on this microVM before its\n"
+        "wall floor (r7 measured local[8] 14.2s -> 10.0s on identical\n"
+        "code and page-cached input). Every trial is followed by a\n"
+        "synchronous full GC in its own JVM plus a settle, so neither\n"
+        "JVM's deferred garbage is collected concurrently with the\n"
+        "other level's timed window.\n"
+        "The headline efficiency is the MEDIAN measured pair (max-of-pairs\n"
+        "is an upward-biased estimator: ambient noise hitting only the\n"
+        "low-core trial inflates its pair, so the best pair is an upper\n"
+        "bound, not 'the' efficiency). Full per-pair distribution: {}.\n"
+        "Best (least-throttled) pair, upper bound: {:.3f}.\n"
+        "Min-of-trials efficiency (mins may come from different windows),\n"
+        "conservative floor: {:.3f}.\n".format(
+            low, high, args.warmup_pairs,
+            "[" + ", ".join(f"{e:.3f}" for e in pair_effs) + "]",
+            max(pair_effs), min_eff)
+    )
 
     md = f"""# BENCH/BASELINE — scaling evidence (N vs {int(ratio)}N parallelism)
 
 north_rule criterion: throughput scaling efficiency >= 0.8 from N to 4N
 executors. Sandbox proxy (no real cluster): the identical job on identical
 parquet input at two local parallelism levels, each in its own JVM;
-BLAS threads pinned to 1; warm-up run excluded.
+BLAS threads pinned to 1; warm-up pairs excluded.
 
 Job = full retention pipeline: 3-tier cascade (pandas/Arrow kernel,
 w=64, fanout=64) + Gorilla XOR / delta-of-delta compression of every tier
@@ -345,8 +285,8 @@ Input: gen_sequences(seed=42, n_docs={args.docs}) -> {lo["n_seq"]:,} sequences,
 
 | parallelism | wall (s) | tokens/sec | sequences/sec |
 |---|---|---|---|
-| local[{args.low}] (N) | {lo["wall"]:.2f} (trials {lo["walls"]}) | {lo["tokens_per_sec"]:,.0f} | {lo["seqs_per_sec"]:,.0f} |
-| local[{args.high}] ({int(ratio)}N) | {hi["wall"]:.2f} (trials {hi["walls"]}) | {hi["tokens_per_sec"]:,.0f} | {hi["seqs_per_sec"]:,.0f} |
+| local[{low}] (N) | {lo["wall"]:.2f} (trials {lo["walls"]}) | {lo["tokens_per_sec"]:,.0f} | {lo["seqs_per_sec"]:,.0f} |
+| local[{high}] ({int(ratio)}N) | {hi["wall"]:.2f} (trials {hi["walls"]}) | {hi["tokens_per_sec"]:,.0f} | {hi["seqs_per_sec"]:,.0f} |
 
 speedup = {speedup:.2f}x over a {ratio:.0f}x core increase
 **scaling efficiency = {eff:.3f}** (target >= 0.8)
@@ -371,9 +311,8 @@ is amortized by the {args.docs}-doc workload.
         if extra:
             f.write("\n" + extra)
     print(md)
-    rec = {"low": lo, "high": hi, "efficiency": eff}
-    if pair_effs is not None:
-        rec["pair_efficiencies"] = [round(e, 4) for e in pair_effs]
+    rec = {"low": lo, "high": hi, "efficiency": eff,
+           "pair_efficiencies": [round(e, 4) for e in pair_effs]}
     print(json.dumps(rec))
     if not args.keep_input:
         shutil.rmtree(path, ignore_errors=True)
