@@ -64,7 +64,7 @@ def _doc(seed: int, i: int, max_tok: int | None) -> tuple[str, np.ndarray, str]:
     return doc_id, tokens, source
 
 
-def gen_local(seed: int = 42, n_docs: int = 100, max_tok: int | None = None) -> pd.DataFrame:
+def gen_local(seed: int, n_docs: int, max_tok: int | None = None) -> pd.DataFrame:
     """Driver-side generation (tests, oracle input)."""
     rows = []
     for i in range(n_docs):

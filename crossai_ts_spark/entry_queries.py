@@ -24,8 +24,26 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .functions.spectral_exact import dsp_exact_sql, mfcc_stats_sql, spectral_exact_sql
-from .operators.rollup import cascade
+from .operators.cms import CMS_D, CMS_W, cms_build, cms_lookup
+from .operators.dedup import (
+    EMB_BITS, EMB_COS_MIN, EMB_MAX_BUCKET, EMB_SEED, EMB_TABLES, LSH_BAND, LSH_MAX_BUCKET,
+    MINHASH_K, MINHASH_PRIME, NGRAM_JACCARD_MIN, NGRAM_MAX_DF, SEG_WORDS, SIMHASH_BITS, SUBSTR_W,
+    apply_substring_dedup, connected_components, contamination_scores, embedding_near_dups,
+    lsh_candidate_pairs, minhash_signatures, ngram_jaccard_pairs, segment_dedup, shingles,
+    simhash_signatures, substring_dedup_stats,
+)
+from .operators.hll import KMV_K, WINDOW_SEC, hll_rollup, kmv_sketch
+from .operators.packing import PACK_SEQ_LEN, pack_sequences
+from .operators.rollup import HIST_NB, HIST_VMAX, HIST_W, cascade, rollup_histogram
 from .operators.salted import salted_tier_source_rollup
+from .operators.similarity import (
+    ANN_K, CENTROID_Q, EMB_DIM, IVF_CENT, IVF_PROBE, LSH_BITS, LSH_PROBES, LSH_SEED, OUTLIER_DIST2,
+    _hyperplanes, centroid_distances, ivf_topk, lsh_topk,
+)
+from .operators.textstats import (
+    BM25_TERM_Q, LANG_MARKERS, NGRAM_TOPK, _words, bm25_scores, gopher_rules, lm_bigram_nll,
+    ngram_topk,
+)
 from .sources.tokenize import tokenize_documents
 from .workers import worker_kernel
 
@@ -177,7 +195,7 @@ def rollup_source_windows(spark, sf_dir):
     """Cross-doc continuous aggregate w/ salted two-phase shuffle (SURVEY §4.3.1)."""
     seqs = tokenize_documents(load(spark, sf_dir, "documents"))
     t1 = cascade(seqs, w=32, tiers=1)
-    out = salted_tier_source_rollup(t1, n_salts=8).drop("tier", "n_docs")
+    out = salted_tier_source_rollup(t1).drop("tier", "n_docs")
     return out.select(
         "source",
         "window_start",
@@ -1367,11 +1385,11 @@ WITH w AS (
 @q(
     "ngram_jaccard",
     SQL_SH
-    + """
+    + f"""
 , shc AS (
   SELECT sh.doc_id, sh.s FROM sh
   JOIN (SELECT s, COUNT(*)::BIGINT AS df FROM sh GROUP BY s) d
-    ON d.s = sh.s AND d.df <= 1000
+    ON d.s = sh.s AND d.df <= {NGRAM_MAX_DF}
 ), sz AS (
   SELECT doc_id, COUNT(*)::BIGINT AS n FROM shc GROUP BY doc_id
 ), common AS (
@@ -1382,21 +1400,17 @@ WITH w AS (
 SELECT doc_a, doc_b, common,
        common::DOUBLE / (x.n + y.n - common)::DOUBLE AS jaccard
 FROM common JOIN sz x ON x.doc_id = doc_a JOIN sz y ON y.doc_id = doc_b
-WHERE common::DOUBLE / (x.n + y.n - common)::DOUBLE >= 0.1
+WHERE common::DOUBLE / (x.n + y.n - common)::DOUBLE >= {NGRAM_JACCARD_MIN}
 """,
 )
 def ngram_jaccard(spark, sf_dir):
     """n-gram Jaccard near-dup pairs (shared-shingle candidates with a
     document-frequency cap, never O(n^2)) — operators/dedup.py."""
-    from .operators.dedup import ngram_jaccard_pairs, shingles
-
     sh = shingles(load(spark, sf_dir, "documents"))
-    return ngram_jaccard_pairs(sh, threshold=0.1, max_df=1000)
+    return ngram_jaccard_pairs(sh)
 
 
 def _minhash_sql() -> str:
-    from .operators.dedup import LSH_BAND, MINHASH_K, MINHASH_PRIME
-
     p = MINHASH_PRIME
     mins = ",\n         ".join(
         f"MIN(((s % {p}) * {2 * i + 1} + {i * 40503 + 17}) % {p}) AS mh{i}" for i in range(MINHASH_K)
@@ -1419,7 +1433,7 @@ def _minhash_sql() -> str:
 ), btc AS (
   SELECT bt.doc_id, bt.band, bt.key FROM bt
   JOIN (SELECT band, key, COUNT(*)::BIGINT AS bn FROM bt GROUP BY band, key) c
-    ON c.band = bt.band AND c.key = bt.key AND c.bn <= 1000
+    ON c.band = bt.band AND c.key = bt.key AND c.bn <= {LSH_MAX_BUCKET}
 )
 SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
 FROM btc a JOIN btc b ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id
@@ -1431,14 +1445,12 @@ FROM btc a JOIN btc b ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_
 def minhash_lsh(spark, sf_dir):
     """MinHash+LSH candidate pairs (K=8, bands of 2, bucket-size cap) —
     operators/dedup.py."""
-    from .operators.dedup import lsh_candidate_pairs, minhash_signatures, shingles
-
     # distinct=False: min over the shingle multiset == min over its set, so
     # signatures (and the oracle hash) are unchanged while the shingle-table
     # dedup exchange disappears
     sh = shingles(load(spark, sf_dir, "documents"), distinct=False)
     sig = minhash_signatures(sh)
-    return lsh_candidate_pairs(sig, max_bucket=1000)
+    return lsh_candidate_pairs(sig)
 
 
 def _dedup_clusters_sql() -> str:
@@ -1469,16 +1481,14 @@ def dedup_clusters(spark, sf_dir):
     training-data pipeline runs right after pair generation to pick one
     canonical doc per cluster. Oracle computes the identical fixpoint by
     recursive-CTE transitive closure."""
-    from .operators.dedup import connected_components, lsh_candidate_pairs, minhash_signatures, shingles
-
     # distinct=False: identical MinHash signatures without the shingle
     # dedup exchange (min over multiset == min over set)
     sh = shingles(load(spark, sf_dir, "documents"), distinct=False)
     sig = minhash_signatures(sh)
-    pairs = lsh_candidate_pairs(sig, max_bucket=1000)
-    # operator default check_every=2 kept deliberately: probing every
-    # round was tried in r8 (LSH clusters converge in 2-3 rounds, so one
-    # spare round looked wasteful) and measured SLOWER interleaved
+    pairs = lsh_candidate_pairs(sig)
+    # connected_components probes every second round on purpose: probing
+    # every round was tried in r8 (LSH clusters converge in 2-3 rounds, so
+    # one spare round looked wasteful) and measured SLOWER interleaved
     # (4.37 s vs 3.77 s) — a probe is itself a join+count job, costing
     # more than the no-op round it saves.
     cc = connected_components(pairs)
@@ -1486,8 +1496,6 @@ def dedup_clusters(spark, sf_dir):
 
 
 def _simhash_sql() -> str:
-    from .operators.dedup import SIMHASH_BITS
-
     votes = ",\n         ".join(
         f"SUM(CASE WHEN (s >> {i}) & 1 = 1 THEN 1 ELSE -1 END) AS v{i}" for i in range(SIMHASH_BITS)
     )
@@ -1508,8 +1516,6 @@ SELECT doc_id, ({sig})::BIGINT AS simhash FROM votes
 @q("simhash", _simhash_sql())
 def simhash(spark, sf_dir):
     """SimHash signatures (16-bit here; 64 at scale) — operators/dedup.py."""
-    from .operators.dedup import shingles, simhash_signatures
-
     sh = shingles(load(spark, sf_dir, "documents"))
     return simhash_signatures(sh)
 
@@ -1622,8 +1628,6 @@ def repetition_scores(spark, sf_dir):
 
 
 def _langid_sql() -> str:
-    from .operators.textstats import LANG_MARKERS
-
     langs = list(LANG_MARKERS)
     score_cols = ",\n       ".join(
         "len(list_filter(ws, x -> x IN ({m})))::BIGINT AS s_{lang}".format(
@@ -1972,13 +1976,12 @@ def _plane_sql(p) -> str:
     return "[" + ", ".join(f"'{float(x)!r}'::DOUBLE" for x in p) + "]"
 
 
-def _bucket_sql(dim: int, n_bits: int, seed: int) -> str:
+def _bucket_sql(n_bits: int, seed: int) -> str:
     """DuckDB expression computing the SAME random-hyperplane LSH bucket as
-    operators/similarity.lsh_bucket: identical literals, identical left-fold
-    dot product, identical sign test — bitwise-deterministic both engines."""
-    from .operators.similarity import _hyperplanes
-
-    planes = _hyperplanes(dim, n_bits, seed)
+    operators/similarity.lsh_bucket_col: identical literals, identical
+    left-fold dot product, identical sign test — bitwise-deterministic both
+    engines."""
+    planes = _hyperplanes(EMB_DIM, n_bits, seed)
     bits = [
         f"(CASE WHEN {SQL_DOT.format(a='embedding', b=_plane_sql(p))} > 0 THEN {1 << i} ELSE 0 END)"
         for i, p in enumerate(planes)
@@ -1986,24 +1989,23 @@ def _bucket_sql(dim: int, n_bits: int, seed: int) -> str:
     return "(" + " + ".join(bits) + ")::BIGINT"
 
 
-def _emb_near_dup_sql(threshold: float, dim: int, n_bits: int, n_tables: int, seed: int) -> str:
+def _emb_near_dup_sql() -> str:
     tables = "\n  UNION ALL ".join(
-        f"SELECT {t} AS tbl, vec_id, {_bucket_sql(dim, n_bits, seed + 1000003 * t)} AS bucket "
+        f"SELECT {t} AS tbl, vec_id, {_bucket_sql(EMB_BITS, EMB_SEED + 1000003 * t)} AS bucket "
         "FROM embeddings"
-        for t in range(n_tables)
+        for t in range(EMB_TABLES)
     )
     cos = (
         SQL_DOT.format(a="ea.embedding", b="eb.embedding")
         + f" / (sqrt({SQL_DOT.format(a='ea.embedding', b='ea.embedding')})"
         + f" * sqrt({SQL_DOT.format(a='eb.embedding', b='eb.embedding')}))"
     )
-    # mirror the engine's max_bucket cap (10000) so both plans drop the SAME
-    # degenerate buckets (operators/dedup.embedding_near_dups default)
+    # the engine's bucket cap, so both plans drop the SAME degenerate buckets
     return f"""
 WITH bt0 AS (
   {tables}
 ), keep AS (
-  SELECT tbl, bucket FROM bt0 GROUP BY tbl, bucket HAVING COUNT(*) <= 10000
+  SELECT tbl, bucket FROM bt0 GROUP BY tbl, bucket HAVING COUNT(*) <= {EMB_MAX_BUCKET}
 ), bt AS (
   SELECT bt0.* FROM bt0 JOIN keep USING (tbl, bucket)
 ), cand AS (
@@ -2012,36 +2014,29 @@ WITH bt0 AS (
 )
 SELECT id_a, id_b, {cos} AS cos_sim
 FROM cand JOIN embeddings ea ON ea.vec_id = id_a JOIN embeddings eb ON eb.vec_id = id_b
-WHERE {cos} >= {threshold}
+WHERE {cos} >= {EMB_COS_MIN}
 """
 
 
-@q("embedding_near_dups", _emb_near_dup_sql(0.42, 64, 6, 3, 42))
+@q("embedding_near_dups", _emb_near_dup_sql())
 def embedding_near_dups_q(spark, sf_dir):
-    """Embedding near-dup pairs via multi-table hyperplane LSH (the default
-    scale path of operators/dedup.embedding_near_dups — never corpus^2).
+    """Embedding near-dup pairs via multi-table hyperplane LSH
+    (operators/dedup.embedding_near_dups — never corpus^2).
     FULL oracle: the hyperplanes are deterministic literals embedded in both
     plans, so DuckDB reproduces buckets, candidates, and cosines exactly."""
-    from .operators.dedup import embedding_near_dups as ed
-
-    e = load(spark, sf_dir, "embeddings")
-    return ed(e, threshold=0.42, dim=64, n_bits=6, n_tables=3, seed=42)
+    return embedding_near_dups(load(spark, sf_dir, "embeddings"))
 
 
-# lsh_ann probes: each query's own bucket and its first Hamming-1 neighbours
-LSH_ANN_PROBES = 3
-
-
-def _lsh_ann_sql(k: int, n_bits: int, seed: int, dim: int) -> str:
+def _lsh_ann_sql() -> str:
     cos = (
         SQL_DOT.format(a="q.qe", b="c.embedding")
         + f" / (sqrt({SQL_DOT.format(a='q.qe', b='q.qe')})"
         + f" * sqrt({SQL_DOT.format(a='c.embedding', b='c.embedding')}))"
     )
-    probes = ", ".join(["bucket"] + [f"xor(bucket, {1 << i})" for i in range(LSH_ANN_PROBES - 1)])
+    probes = ", ".join(["bucket"] + [f"xor(bucket, {1 << i})" for i in range(LSH_PROBES - 1)])
     return f"""
 WITH cb AS (
-  SELECT vec_id, embedding, {_bucket_sql(dim, n_bits, seed)} AS bucket FROM embeddings
+  SELECT vec_id, embedding, {_bucket_sql(LSH_BITS, LSH_SEED)} AS bucket FROM embeddings
 ), qb0 AS (
   SELECT vec_id AS q_id, embedding AS qe, bucket FROM cb WHERE vec_id < 10
 ), qb AS (
@@ -2053,26 +2048,23 @@ WITH cb AS (
   SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos_sim DESC, vec_id) AS r
   FROM pairs
 )
-SELECT q_id, r AS rank, vec_id, cos_sim FROM rk WHERE r <= {k}
+SELECT q_id, r AS rank, vec_id, cos_sim FROM rk WHERE r <= {ANN_K}
 """
 
 
 # upgrade lsh_ann from rows-only to a FULL oracle (deterministic literal
 # hyperplanes are SQL-expressible) — replaces the round-1 rows-only entry
-@q("lsh_ann", _lsh_ann_sql(5, 6, 42, 64))
+@q("lsh_ann", _lsh_ann_sql())
 def lsh_ann_oracle(spark, sf_dir):
     """Multi-probe LSH approximate NN (operators/similarity.py scale path):
     each query probes its own bucket + the two Hamming-1 neighbors. Full
     DuckDB oracle reproducing buckets, probes, and cosines exactly."""
-    from .operators.similarity import lsh_topk
-
     e = load(spark, sf_dir, "embeddings")
-    q_ = e.filter(F.col("vec_id") < 10)
-    res = lsh_topk(e, q_, dim=64, k=5, n_bits=6, seed=42, n_probes=LSH_ANN_PROBES)
+    res = lsh_topk(e, e.filter(F.col("vec_id") < 10), EMB_DIM)
     return res.select("q_id", F.col("rank").cast("long").alias("rank"), "vec_id", "cos_sim")
 
 
-def _ivf_ann_sql(n_cent: int, n_probe: int, k: int) -> str:
+def _ivf_ann_sql() -> str:
     # cosine folds identical to the Spark plan: a / (sqrt(b) * sqrt(c)),
     # every dot a left fold in index order (SQL_DOT == Spark `aggregate`)
     cos_ec = (
@@ -2090,7 +2082,7 @@ WITH cent AS (
   SELECT row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS cid,
          embedding AS ce
   FROM (SELECT vec_id, embedding FROM embeddings
-        ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {n_cent})
+        ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {IVF_CENT})
 ), asg AS (
   SELECT e.vec_id, e.embedding, c.cid, {cos_ec} AS score
   FROM embeddings e CROSS JOIN cent c
@@ -2101,7 +2093,7 @@ WITH cent AS (
   SELECT vec_id, embedding, cid AS cell FROM ranked WHERE pr = 1
 ), qp AS (
   SELECT vec_id AS q_id, embedding AS qe, cid AS cell
-  FROM ranked WHERE vec_id < 10 AND pr <= {n_probe}
+  FROM ranked WHERE vec_id < 10 AND pr <= {IVF_PROBE}
 ), pairs AS (
   SELECT q.q_id, c.vec_id, {cos_qc} AS cos_sim
   FROM qp q JOIN cells c ON c.cell = q.cell AND c.vec_id != q.q_id
@@ -2109,11 +2101,11 @@ WITH cent AS (
   SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos_sim DESC, vec_id) AS r
   FROM pairs
 )
-SELECT q_id, r AS rank, vec_id, cos_sim FROM rk WHERE r <= {k}
+SELECT q_id, r AS rank, vec_id, cos_sim FROM rk WHERE r <= {ANN_K}
 """
 
 
-@q("ivf_ann", _ivf_ann_sql(16, 3, 5))
+@q("ivf_ann", _ivf_ann_sql())
 def ivf_ann(spark, sf_dir):
     """IVF approximate NN (operators/similarity.py ivf_topk — the
     data-adaptive scale path next to the oblivious LSH one): 16
@@ -2121,10 +2113,8 @@ def ivf_ann(spark, sf_dir):
     cells; each query exact-cosine-re-ranks only its 3 nearest cells.
     Oracle rebuilds the identical model (same md5 centroid choice, same
     fold order), cells, probes, and ranking in DuckDB."""
-    from .operators.similarity import ivf_topk
-
     e = load(spark, sf_dir, "embeddings")
-    res = ivf_topk(e, e.filter(F.col("vec_id") < 10), n_cent=16, n_probe=3)
+    res = ivf_topk(e, e.filter(F.col("vec_id") < 10))
     return res.select("q_id", F.col("rank").cast("long").alias("rank"), "vec_id", "cos_sim")
 
 
@@ -3528,8 +3518,6 @@ def lm_perplexity(spark, sf_dir):
     position-ordered fold of floor-quantized terms (pure int64 sum —
     JVM and DuckDB ln() differ in the last ulp on some inputs, so raw
     double folds are not cross-engine exact)."""
-    from .operators.textstats import lm_bigram_nll
-
     return lm_bigram_nll(load(spark, sf_dir, "documents"))
 
 
@@ -3974,8 +3962,6 @@ def shuffle_ranks(spark, sf_dir):
 
 
 def _hann_literals(n: int) -> list[float]:
-    import numpy as np
-
     from .functions.dsp import hann
 
     return [float(v) for v in hann(n)]
@@ -4349,7 +4335,7 @@ FROM cl
     )
 
 
-def _substr_spans_sql(w: int, keep_first: bool = False) -> str:
+def _substr_spans_sql(keep_first: bool = False) -> str:
     # shared CTE chain: docs -> stride-1 w-char window hashes -> windows
     # whose hash repeats anywhere in the corpus (keep_first exempts each
     # hash's (doc, off)-smallest occurrence) -> per-doc merged maximal
@@ -4369,19 +4355,19 @@ WITH d AS (
   SELECT CAST(doc_id AS VARCHAR) AS doc_id, text AS t, length(text)::BIGINT AS n_tok
   FROM documents
 ), ex AS (
-  SELECT doc_id, t, unnest(range(1, n_tok - {w} + 2)) AS i FROM d WHERE n_tok >= {w}
+  SELECT doc_id, t, unnest(range(1, n_tok - {SUBSTR_W} + 2)) AS i FROM d WHERE n_tok >= {SUBSTR_W}
 ), wins AS (
   SELECT doc_id, (i - 1)::BIGINT AS o,
-         ('0x' || substr(md5(substr(t, i::INT, {w})), 1, 15))::BIGINT AS h
+         ('0x' || substr(md5(substr(t, i::INT, {SUBSTR_W})), 1, 15))::BIGINT AS h
   FROM ex
 ), dup AS (
   SELECT h FROM wins GROUP BY h HAVING COUNT(*) > 1
 ), dw AS (
 {dw}), isl AS (
   SELECT doc_id, o,
-         CASE WHEN max(o + {w}) OVER (PARTITION BY doc_id ORDER BY o
+         CASE WHEN max(o + {SUBSTR_W}) OVER (PARTITION BY doc_id ORDER BY o
               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) IS NULL
-              OR o > max(o + {w}) OVER (PARTITION BY doc_id ORDER BY o
+              OR o > max(o + {SUBSTR_W}) OVER (PARTITION BY doc_id ORDER BY o
               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
          THEN 1 ELSE 0 END AS ni
   FROM dw
@@ -4390,15 +4376,15 @@ WITH d AS (
          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
   FROM isl
 ), spans AS (
-  SELECT doc_id, island, min(o)::BIGINT AS s, (max(o) + {w})::BIGINT AS e
+  SELECT doc_id, island, min(o)::BIGINT AS s, (max(o) + {SUBSTR_W})::BIGINT AS e
   FROM grp GROUP BY doc_id, island
 )
 """
 
 
-def _substr_stats_sql(w: int, keep_first: bool = False) -> str:
+def _substr_stats_sql(keep_first: bool = False) -> str:
     return (
-        _substr_spans_sql(w, keep_first)
+        _substr_spans_sql(keep_first)
         + """
 , agg AS (
   SELECT doc_id, COUNT(*)::BIGINT AS n_spans, SUM(e - s)::BIGINT AS dup_tokens
@@ -4413,20 +4399,18 @@ FROM d LEFT JOIN agg a USING (doc_id) WHERE d.n_tok > 0
     )
 
 
-@q("dedup_substring", _substr_stats_sql(25))
+@q("dedup_substring", _substr_stats_sql())
 def dedup_substring(spark, sf_dir):
     """Substring-level dedup inventory (Lee et al. 2022): per doc, merged
     maximal spans of 25-token windows that repeat anywhere in the corpus —
     the standard training-data pass doc-level dedup misses. Linear window
     hashing (no pairing), operators/dedup.py duplicated_spans."""
-    from .operators.dedup import substring_dedup_stats
-
-    return substring_dedup_stats(load(spark, sf_dir, "documents"), w=25)
+    return substring_dedup_stats(load(spark, sf_dir, "documents"))
 
 
 @q(
     "sequence_packing",
-    """
+    f"""
 WITH d AS (
   SELECT CAST(doc_id AS VARCHAR) AS doc_id, source,
          length(text)::BIGINT AS n_tok
@@ -4438,9 +4422,9 @@ WITH d AS (
   FROM d
 ), p AS (
   SELECT doc_id, source, n_tok, (cum_end - n_tok)::BIGINT AS cum_start,
-         ((cum_end - n_tok) // 512)::BIGINT AS pack_id,
-         ((cum_end - n_tok) % 512)::BIGINT AS pack_off,
-         ((cum_end - 1) // 512)::BIGINT AS last_pack
+         ((cum_end - n_tok) // {PACK_SEQ_LEN})::BIGINT AS pack_id,
+         ((cum_end - n_tok) % {PACK_SEQ_LEN})::BIGINT AS pack_off,
+         ((cum_end - 1) // {PACK_SEQ_LEN})::BIGINT AS last_pack
   FROM c
 )
 SELECT doc_id, source, n_tok, cum_start, pack_id, pack_off,
@@ -4455,16 +4439,10 @@ def sequence_packing(spark, sf_dir):
     and offset of its first token plus boundary-straddle facts. The
     cumulative sum runs PER SOURCE SHARD — all shards in parallel, no
     global single-task prefix sum — operators/packing.py."""
-    from .operators.packing import pack_sequences
-
     docs = load(spark, sf_dir, "documents").select(
         "doc_id", "source", F.length("text").alias("n_tok")
     )
-    return pack_sequences(docs, seq_len=512)
-
-
-# rollup_histogram's window, bucket count and value ceiling (the ASCII band)
-HIST_W, HIST_NB, HIST_VMAX = 32, 16, 128
+    return pack_sequences(docs)
 
 
 def _hist_sql() -> str:
@@ -4511,10 +4489,8 @@ def rollup_histogram_q(spark, sf_dir):
     pays O(n_buckets) interpreted lambda work: interleaved A/B 1.01 s vs
     1.37 s at sf0.1, and 0.87 s vs 2.4 s on the 255 M-token stress input
     (BENCH/BASELINE.md r7 numbers)."""
-    from .operators.rollup import rollup_histogram
-
     seqs = tokenize_documents(load(spark, sf_dir, "documents"))
-    return rollup_histogram(seqs, w=HIST_W, n_buckets=HIST_NB, vmax=HIST_VMAX)
+    return rollup_histogram(seqs)
 
 
 # n_tokens^alpha as the cross-engine-exact sqrt chain (mixing.pow_alpha_sql
@@ -4613,40 +4589,34 @@ def gopher_rules_q(spark, sf_dir):
     word count, mean word length, symbol ratio, alpha-word fraction,
     stopword presence) — operators/textstats.py gopher_rules, pure
     columnar, per-rule booleans + composite keep."""
-    from .operators.textstats import gopher_rules
-
     return gopher_rules(load(spark, sf_dir, "documents"))
 
 
-@q("substring_dedup_keepfirst", _substr_stats_sql(25, keep_first=True))
+@q("substring_dedup_keepfirst", _substr_stats_sql(keep_first=True))
 def substring_dedup_keepfirst(spark, sf_dir):
     """Keep-one substring dedup (the Lee et al. paper semantics): each
     duplicated window's canonical (doc, off)-smallest occurrence is exempt
     from removal, so exactly one copy of every duplicated region survives;
     spans are merged over the remaining occurrences only. The row_number
     runs over the already-restricted duplicated rows, not the corpus."""
-    from .operators.dedup import substring_dedup_stats
-
-    return substring_dedup_stats(
-        load(spark, sf_dir, "documents"), w=25, keep_first=True
-    )
+    return substring_dedup_stats(load(spark, sf_dir, "documents"), keep_first=True)
 
 
 @q(
     "decontamination",
-    """
+    f"""
 WITH d AS (
   SELECT CAST(doc_id AS VARCHAR) AS doc_id, text AS t, source,
          length(text)::BIGINT AS n_tok
   FROM documents
 ), tw AS (
-  SELECT doc_id, ('0x' || substr(md5(substr(t, i::INT, 25)), 1, 15))::BIGINT AS h
-  FROM (SELECT doc_id, t, unnest(range(1, n_tok - 25 + 2)) AS i FROM d
-        WHERE source NOT IN ('src0', 'src1') AND n_tok >= 25)
+  SELECT doc_id, ('0x' || substr(md5(substr(t, i::INT, {SUBSTR_W})), 1, 15))::BIGINT AS h
+  FROM (SELECT doc_id, t, unnest(range(1, n_tok - {SUBSTR_W} + 2)) AS i FROM d
+        WHERE source NOT IN ('src0', 'src1') AND n_tok >= {SUBSTR_W})
 ), eh AS (
-  SELECT DISTINCT ('0x' || substr(md5(substr(t, i::INT, 25)), 1, 15))::BIGINT AS h
-  FROM (SELECT t, unnest(range(1, n_tok - 25 + 2)) AS i FROM d
-        WHERE source IN ('src0', 'src1') AND n_tok >= 25)
+  SELECT DISTINCT ('0x' || substr(md5(substr(t, i::INT, {SUBSTR_W})), 1, 15))::BIGINT AS h
+  FROM (SELECT t, unnest(range(1, n_tok - {SUBSTR_W} + 2)) AS i FROM d
+        WHERE source IN ('src0', 'src1') AND n_tok >= {SUBSTR_W})
 ), tot AS (
   SELECT doc_id, COUNT(*)::BIGINT AS n_windows FROM tw GROUP BY doc_id
 ), hit AS (
@@ -4669,17 +4639,13 @@ def decontamination(spark, sf_dir):
     the fraction of its 25-token windows found anywhere in the eval set —
     operators/dedup.py contamination_scores (distinct'd eval hashes,
     semi join, linear in training tokens)."""
-    from .operators.dedup import contamination_scores
-
     docs = load(spark, sf_dir, "documents")
     ev = docs.filter(F.col("source").isin("src0", "src1"))
     tr = docs.filter(~F.col("source").isin("src0", "src1"))
-    return contamination_scores(tr, ev, w=25)
+    return contamination_scores(tr, ev)
 
 
 def _bm25_sql(terms: list[str]) -> str:
-    from .operators.textstats import BM25_TERM_Q
-
     tl = ", ".join(f"'{t}'" for t in terms)
     return f"""
 WITH base AS (
@@ -4719,16 +4685,14 @@ def bm25_scores_q(spark, sf_dir):
     saturation, per-term contributions floor(x*2^20)-quantized before the
     per-doc sum; the scoring expression string is shared verbatim with the
     DuckDB oracle."""
-    from .operators.textstats import bm25_scores
-
     return bm25_scores(
         load(spark, sf_dir, "documents"), ["join", "scan", "slow", "merge"]
     )
 
 
-def _substr_clean_sql(w: int) -> str:
+def _substr_clean_sql() -> str:
     return (
-        _substr_spans_sql(w)
+        _substr_spans_sql()
         + """
 , gapsq AS (
   SELECT doc_id,
@@ -4759,14 +4723,12 @@ WHERE d.n_tok > 0
     )
 
 
-@q("substring_dedup_clean", _substr_clean_sql(25))
+@q("substring_dedup_clean", _substr_clean_sql())
 def substring_dedup_clean(spark, sf_dir):
     """The removal mask APPLIED: duplicated spans cut out, kept segments
     stitched in offset order (operators/dedup.py apply_substring_dedup);
     verified by length + md5 of the cleaned text per doc."""
-    from .operators.dedup import apply_substring_dedup
-
-    c = apply_substring_dedup(load(spark, sf_dir, "documents"), w=25)
+    c = apply_substring_dedup(load(spark, sf_dir, "documents"))
     return c.select(
         "doc_id",
         "n_tok",
@@ -4795,14 +4757,14 @@ def augment_convolve(spark, sf_dir):
 # ---------------------------------------------- round-5: segment dedup,
 # corpus n-gram inventory, cluster-centroid curation
 
-SQL_SEGMENT_DEDUP = """
+SQL_SEGMENT_DEDUP = f"""
 WITH base AS (
   SELECT CAST(doc_id AS VARCHAR) AS doc_id, string_split(text, ' ') AS w
   FROM documents WHERE len(string_split(text, ' ')) > 0
 ), segs AS (
   SELECT doc_id,
-         array_to_string(w[si*10+1 : si*10+10], ' ') AS seg
-  FROM base, UNNEST(range(0, CAST(ceil(len(w) / 10.0) AS INT))) t(si)
+         array_to_string(w[si*{SEG_WORDS}+1 : si*{SEG_WORDS}+{SEG_WORDS}], ' ') AS seg
+  FROM base, UNNEST(range(0, CAST(ceil(len(w) / {float(SEG_WORDS)!r}) AS INT))) t(si)
 ), dup AS (
   SELECT seg FROM segs GROUP BY seg HAVING COUNT(*) > 1
 )
@@ -4824,12 +4786,10 @@ def segment_dedup_q(spark, sf_dir):
     corpus; per doc the duplicated-segment fraction drives the drop/clean
     decision. Linear — one explode, one groupBy on segment text, no
     pairing stage."""
-    from .operators.dedup import segment_dedup
-
-    return segment_dedup(load(spark, sf_dir, "documents"), seg_words=10)
+    return segment_dedup(load(spark, sf_dir, "documents"))
 
 
-SQL_NGRAM_TOPK = """
+SQL_NGRAM_TOPK = f"""
 WITH w AS (
   SELECT list_filter(string_split(text, ' '), x -> x != '') AS w
   FROM documents
@@ -4842,7 +4802,7 @@ WITH w AS (
 )
 SELECT ngram, cnt,
        CAST(row_number() OVER (ORDER BY cnt DESC, ngram) AS BIGINT) AS rank
-FROM c ORDER BY cnt DESC, ngram LIMIT 50
+FROM c ORDER BY cnt DESC, ngram LIMIT {NGRAM_TOPK}
 """
 
 
@@ -4853,14 +4813,10 @@ def ngram_topk_q(spark, sf_dir):
     count-then-text tie-break. Spark executes the top-k as
     TakeOrderedAndProject (per-partition heaps), never a full sort of the
     n-gram universe."""
-    from .operators.textstats import ngram_topk
-
-    return ngram_topk(load(spark, sf_dir, "documents"), k=50)
+    return ngram_topk(load(spark, sf_dir, "documents"))
 
 
 def _centroid_sql() -> str:
-    from .operators.similarity import CENTROID_Q, OUTLIER_DIST2
-
     qs = f"{CENTROID_Q!r}"
     diff = (
         f"(floor(emb[i]::DOUBLE * {qs}) / {qs} - carr[i])"
@@ -4897,15 +4853,13 @@ def centroid_outliers(spark, sf_dir):
     squared distance via an in-order fold — the SemDeDup / prototype-
     filter primitive. Corpus never shuffles for the distance pass
     (centroid table is broadcast)."""
-    from .operators.similarity import centroid_distances
-
     e = load(spark, sf_dir, "embeddings")
     return centroid_distances(e)
 
 
-SQL_HLL = """
+SQL_HLL = f"""
 WITH e AS (
-  SELECT (floor(epoch(ts))::BIGINT // 3600) * 3600 AS window_start,
+  SELECT (floor(epoch(ts))::BIGINT // {WINDOW_SEC}) * {WINDOW_SEC} AS window_start,
          ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT AS h
   FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
 ), r AS (
@@ -4917,7 +4871,7 @@ WITH e AS (
 ), s1 AS (
   SELECT window_start, reg, MAX(rank)::BIGINT AS M FROM rk GROUP BY window_start, reg
 ), s2 AS (
-  SELECT (window_start // 14400) * 14400 AS window_start, reg, MAX(M) AS M
+  SELECT (window_start // {4 * WINDOW_SEC}) * {4 * WINDOW_SEC} AS window_start, reg, MAX(M) AS M
   FROM s1 GROUP BY 1, reg
 ), u AS (
   SELECT 1 AS tier, * FROM s1 UNION ALL SELECT 2 AS tier, * FROM s2
@@ -4944,12 +4898,10 @@ def hll_rollup_q(spark, sf_dir):
     ships. Engine-portable md5 hash + integer-ops rank + shift-built
     2^-M terms make even the double estimate bitwise reproducible in
     DuckDB."""
-    from .operators.hll import hll_rollup
-
     return hll_rollup(load(spark, sf_dir, "events"))
 
 
-SQL_CMS = """
+SQL_CMS = f"""
 WITH wd AS (
   SELECT doc_id, list_filter(string_split(text, ' '), x -> x != '') AS w
   FROM documents
@@ -4960,8 +4912,8 @@ WITH wd AS (
 ), cms AS (
   SELECT row, cell, COUNT(*)::BIGINT AS cnt FROM (
     SELECT t2.i AS row,
-           (('0x' || substr(md5(t2.i::VARCHAR || ':' || ngram), 1, 15))::BIGINT % 8192) AS cell
-    FROM g, UNNEST(range(0, 4)) t2(i)
+           (('0x' || substr(md5(t2.i::VARCHAR || ':' || ngram), 1, 15))::BIGINT % {CMS_W}) AS cell
+    FROM g, UNNEST(range(0, {CMS_D})) t2(i)
   ) GROUP BY row, cell
 ), qk AS (
   SELECT DISTINCT array_to_string(w[i+1 : i+2], ' ') AS ngram
@@ -4970,8 +4922,8 @@ WITH wd AS (
 ), est AS (
   SELECT ngram, MIN(COALESCE(cnt, 0))::BIGINT AS est FROM (
     SELECT qk.ngram, t2.i AS row,
-           (('0x' || substr(md5(t2.i::VARCHAR || ':' || qk.ngram), 1, 15))::BIGINT % 8192) AS cell
-    FROM qk, UNNEST(range(0, 4)) t2(i)
+           (('0x' || substr(md5(t2.i::VARCHAR || ':' || qk.ngram), 1, 15))::BIGINT % {CMS_W}) AS cell
+    FROM qk, UNNEST(range(0, {CMS_D})) t2(i)
   ) qp LEFT JOIN cms USING (row, cell) GROUP BY ngram
 ), exact AS (
   SELECT ngram, COUNT(*)::BIGINT AS exact_cnt FROM g GROUP BY ngram
@@ -4982,8 +4934,6 @@ FROM est e LEFT JOIN exact x USING (ngram)
 
 
 def _bigrams(docs, extra_filter=None):
-    from .operators.textstats import _words
-
     d = docs if extra_filter is None else docs.filter(extra_filter)
     wdocs = d.select(_words().alias("_w")).filter(F.size("_w") >= 2)
     grams = F.transform(
@@ -5007,13 +4957,9 @@ def cms_counts(spark, sf_dir):
     n-gram universe) is VERIFICATION SCAFFOLDING for the sf0.01 oracle
     only: it shuffles exactly what the sketch exists to avoid. A
     production pipeline stops at ``cms_build(...)`` + ``cms_lookup(...)``
-    — bounded d x w state, broadcast lookups, zero corpus-wide shuffle:
-
-        cms = cms_build(grams, "ngram", d=4, w=2**20)
-        answers = cms_lookup(cms, queries, "ngram", d=4, w=2**20)
+    — bounded CMS_D x CMS_W state, broadcast lookups, zero corpus-wide
+    shuffle.
     """
-    from .operators.cms import cms_build, cms_lookup
-
     docs = load(spark, sf_dir, "documents")
     # grams feeds both the sketch build and the exact branch but is NOT
     # persisted (r8): the shared subtree is a cheap codegen split+explode,
@@ -5021,9 +4967,9 @@ def cms_counts(spark, sf_dir):
     # vs 1.52 s) — caching 1.2M string rows costs more than recomputing
     # them. (Contrast the md5-heavy _windows table, where persist wins.)
     grams = _bigrams(docs)
-    cms = cms_build(grams, "ngram", d=4, w=8192)
+    cms = cms_build(grams, "ngram")
     queries = _bigrams(docs, F.col("doc_id") < 20).distinct()
-    est = cms_lookup(cms, queries, "ngram", d=4, w=8192)
+    est = cms_lookup(cms, queries, "ngram")
     # guide §3.2 shape: the exact branch only needs counts for the QUERY
     # ngrams (the left join discards the rest), so semi-filter with the
     # broadcast query set BEFORE the groupBy — at scale this turns an
@@ -5089,20 +5035,20 @@ def apply_mixing_q(spark, sf_dir):
     )
 
 
-SQL_KMV = """
+SQL_KMV = f"""
 WITH e AS (
-  SELECT (floor(epoch(ts))::BIGINT // 3600) * 3600 AS window_start,
+  SELECT (floor(epoch(ts))::BIGINT // {WINDOW_SEC}) * {WINDOW_SEC} AS window_start,
          ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT AS h
   FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
 ), d AS (
   SELECT DISTINCT window_start, h FROM e
 ), s AS (
-  SELECT window_start, list(h ORDER BY h)[1:8] AS ks
+  SELECT window_start, list(h ORDER BY h)[1:{KMV_K}] AS ks
   FROM d GROUP BY window_start
 )
 SELECT window_start, array_to_string(ks, ',') AS ks_csv,
-       CASE WHEN len(ks) < 8 THEN len(ks)::DOUBLE
-            ELSE CAST(7 AS DOUBLE) / (ks[8]::DOUBLE / 1152921504606846976.0)
+       CASE WHEN len(ks) < {KMV_K} THEN len(ks)::DOUBLE
+            ELSE CAST({KMV_K - 1} AS DOUBLE) / (ks[{KMV_K}]::DOUBLE / 1152921504606846976.0)
        END AS n_distinct_est
 FROM s
 """
@@ -5116,10 +5062,8 @@ def kmv_windows(spark, sf_dir):
     (per-hash-shard partial bottom-ks, then a k-length merge) so no
     reducer holds a whole window's key set. Sample hashes joined to a
     CSV column for a stable cross-engine value hash."""
-    from .operators.hll import kmv_sketch
-
     ev = load(spark, sf_dir, "events")
-    out = kmv_sketch(ev, k=8)
+    out = kmv_sketch(ev)
     return out.select(
         "window_start",
         F.concat_ws(",", F.transform(F.col("ks"), lambda x: x.cast("string"))).alias("ks_csv"),

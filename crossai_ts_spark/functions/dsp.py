@@ -38,16 +38,13 @@ def hann(n: int) -> np.ndarray:
     return 0.5 * (1.0 - np.cos(2.0 * np.pi * np.arange(n) / n))
 
 
-def stft(x: np.ndarray, n_fft: int = N_FFT, hop: int = HOP, center: bool = True) -> np.ndarray:
-    """Complex Hann-windowed STFT, shape (1 + n_fft//2, n_frames)."""
+def stft(x: np.ndarray) -> np.ndarray:
+    """Complex Hann-windowed centered N_FFT/HOP STFT, shape
+    (1 + N_FFT//2, n_frames)."""
     x = np.asarray(x, dtype=np.float64)
-    w = hann(n_fft)
-    if center:
-        x = np.pad(x, n_fft // 2, mode="reflect") if x.size > n_fft // 2 else np.pad(
-            x, n_fft // 2, mode="constant"
-        )
-    frames = frame(x, n_fft, hop)
-    return np.fft.rfft(frames * w, axis=1).T
+    pad = "reflect" if x.size > N_FFT // 2 else "constant"
+    frames = frame(np.pad(x, N_FFT // 2, mode=pad), N_FFT, HOP)
+    return np.fft.rfft(frames * hann(N_FFT), axis=1).T
 
 
 def istft(S: np.ndarray, length: int | None = None) -> np.ndarray:

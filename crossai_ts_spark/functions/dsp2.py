@@ -84,15 +84,15 @@ def _softmask(X: np.ndarray, X_ref: np.ndarray) -> np.ndarray:
     return np.where(bad, 0.5, m)
 
 
-def hpss(S: np.ndarray, kernel_size: int = 31) -> tuple[np.ndarray, np.ndarray]:
+def hpss(S: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """Harmonic/percussive separation of a magnitude (or complex) STFT
     (caits/hpss.py:59-299, power 2, margin 1): harmonic enhanced by a
-    median filter along time, percussive along frequency, combined through
-    soft masks. Returns (H, P) with the same dtype semantics as the input
-    (masks multiply S)."""
+    31-bin median filter along time, percussive along frequency, combined
+    through soft masks. Returns (H, P) with the same dtype semantics as the
+    input (masks multiply S)."""
     mag = np.abs(S)
-    harm = np.apply_along_axis(median_filter, 1, mag, kernel_size)  # along time
-    perc = np.apply_along_axis(median_filter, 0, mag, kernel_size)  # along frequency
+    harm = np.apply_along_axis(median_filter, 1, mag, 31)  # along time
+    perc = np.apply_along_axis(median_filter, 0, mag, 31)  # along frequency
     return S * _softmask(harm, perc), S * _softmask(perc, harm)
 
 

@@ -19,12 +19,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# sketch rows (hash functions) and cells per row; the DuckDB oracle builds
+# its SQL from the same values
+CMS_D, CMS_W = 4, 8192
 
-def _cell(key_col, i: int, w: int):
-    """Row-i cell index for a key: md5_60("i:" || key) mod w —
+
+def _cell(key_col, i: int):
+    """Row-i cell index for a key: md5_60("i:" || key) mod CMS_W —
     engine-portable (the DuckDB oracle reproduces every cell bit-for-bit),
-    at the cost of a hex-string detour per position (~4 md5+conv per item
-    at d=4)."""
+    at the cost of a hex-string detour per position (CMS_D md5+conv per
+    item)."""
     h = F.conv(
         F.substring(
             F.md5(F.concat_ws(":", F.lit(i), key_col.cast("string")).cast("binary")), 1, 15
@@ -32,41 +36,39 @@ def _cell(key_col, i: int, w: int):
         16,
         10,
     ).cast("long")
-    return h % w
+    return h % CMS_W
 
 
-def cms_build(items: DataFrame, key: str, d: int = 4, w: int = 8192) -> DataFrame:
-    """Sketch an item stream: one (row, cell, cnt) table of <= d*w rows.
+def _positions(key: str):
+    """The key's CMS_D (row, cell) positions as an array of structs."""
+    return F.array(*[
+        F.struct(F.lit(i).alias("row"), _cell(F.col(key), i).alias("cell"))
+        for i in range(CMS_D)
+    ])
 
-    One explode (d rows per item) into a map-side-combined groupBy —
-    partial aggregation collapses each partition to <= d*w cells before
+
+def cms_build(items: DataFrame, key: str) -> DataFrame:
+    """Sketch an item stream: one (row, cell, cnt) table of <= CMS_D*CMS_W rows.
+
+    One explode (CMS_D rows per item) into a map-side-combined groupBy —
+    partial aggregation collapses each partition to <= CMS_D*CMS_W cells before
     the (tiny) shuffle, which is exactly how the sketch merges: cells
     from anywhere add elementwise."""
-    pos = F.array(*[
-        F.struct(F.lit(i).alias("row"), _cell(F.col(key), i, w).alias("cell"))
-        for i in range(d)
-    ])
     return (
-        items.select(F.explode(pos).alias("p"))
+        items.select(F.explode(_positions(key)).alias("p"))
         .select("p.row", "p.cell")
         .groupBy("row", "cell")
         .agg(F.count("*").alias("cnt"))
     )
 
 
-def cms_lookup(
-    cms: DataFrame, queries: DataFrame, key: str, d: int = 4, w: int = 8192
-) -> DataFrame:
-    """Estimate each query key's count: min over the d rows' cells.
+def cms_lookup(cms: DataFrame, queries: DataFrame, key: str) -> DataFrame:
+    """Estimate each query key's count: min over the CMS_D rows' cells.
 
-    The sketch side is <= d*w rows and is BROADCAST — the query side
+    The sketch side is <= CMS_D*CMS_W rows and is BROADCAST — the query side
     never shuffles; absent cells count 0 (a key the sketch never saw
     estimates 0 only if some cell stayed empty; estimate >= truth always)."""
-    pos = F.array(*[
-        F.struct(F.lit(i).alias("row"), _cell(F.col(key), i, w).alias("cell"))
-        for i in range(d)
-    ])
-    q = queries.select(F.col(key), F.explode(pos).alias("p")).select(
+    q = queries.select(F.col(key), F.explode(_positions(key)).alias("p")).select(
         key, "p.row", "p.cell"
     )
     joined = q.join(F.broadcast(cms), ["row", "cell"], "left").select(

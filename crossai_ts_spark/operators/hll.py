@@ -25,6 +25,11 @@ from pyspark.sql import functions as F
 M_REGS = 64  # 2^6 registers; standard error 1.04/sqrt(64) ~ 13%
 _MAX_RANK = 55  # payload is 60 - 6 = 54 bits; all-zero payload -> 55
 _ALPHA = "0.709"  # alpha_64 (Flajolet et al. 2007, m = 64)
+# tier-1 window of every sketch, in seconds; the DuckDB oracles use it too
+WINDOW_SEC = 3600
+# kmv_sketch: distinct hashes kept per window, salt shards of the bottom-k,
+# and candidates kept per kept hash by the HLL threshold pass
+KMV_K, KMV_SALTS, KMV_CANDIDATE_FACTOR = 8, 16, 64.0
 
 
 def _hash60(key_col):
@@ -35,12 +40,13 @@ def _hash60(key_col):
     ).cast("long")
 
 
-def hll_sketch(events: DataFrame, window_sec: int = 3600) -> DataFrame:
+def hll_sketch(events: DataFrame) -> DataFrame:
     """Tier-1 sketches: (window_start, reg, M) — max rank per register per
-    tumbling window of ``user_id`` values by ``ts``. One map-side-combined
-    groupBy; rows per window are capped at m=64 regardless of event volume.
+    WINDOW_SEC tumbling window of ``user_id`` values by ``ts``. One
+    map-side-combined groupBy; rows per window are capped at m=64
+    regardless of event volume.
     Rows with a null key or timestamp are dropped (:func:`_kmv_hashed`)."""
-    return _reg_rank_fold(_kmv_hashed(events, window_sec), "window_start")
+    return _reg_rank_fold(_kmv_hashed(events), "window_start")
 
 
 def _reg_rank_fold(e: DataFrame, *group_cols: str) -> DataFrame:
@@ -66,11 +72,11 @@ def _reg_rank_fold(e: DataFrame, *group_cols: str) -> DataFrame:
 
 
 def hll_merge(sketch: DataFrame, fanout: int) -> DataFrame:
-    """Tier k+1 sketches from hourly tier-k sketches: elementwise register
-    MAX per parent window — the exact re-aggregation identity (equals
-    sketching the raw events at the coarser window directly; tested
-    bitwise)."""
-    parent = 3600 * fanout
+    """Tier k+1 sketches from tier-1 (WINDOW_SEC) sketches: elementwise
+    register MAX per parent window — the exact re-aggregation identity
+    (equals sketching the raw events at the coarser window directly;
+    tested bitwise)."""
+    parent = WINDOW_SEC * fanout
     ws = F.expr(f"window_start div {parent} * {parent}").alias("window_start")
     return sketch.groupBy(ws, "reg").agg(F.max("M").alias("M"))
 
@@ -115,17 +121,17 @@ def hll_rollup(events: DataFrame) -> DataFrame:
 _H60 = 1152921504606846976  # 2^60; key hashes are uniform on [0, 2^60)
 
 
-def _kmv_hashed(events: DataFrame, window_sec: int) -> DataFrame:
-    """(window_start, h) projection of ``user_id`` by ``ts`` shared by the
-    HLL sketch and every KMV phase (:func:`_hash60`). Rows whose key or
+def _kmv_hashed(events: DataFrame) -> DataFrame:
+    """(window_start, h) projection of ``user_id`` by WINDOW_SEC windows of
+    ``ts``, shared by the HLL sketch and every KMV phase (:func:`_hash60`). Rows whose key or
     timestamp is null are dropped first, as SQL ``COUNT(DISTINCT key)``
     drops them: a null hash would otherwise become a register or sample of
     its own, and a null timestamp a window with a null start."""
     h = _hash60(F.col("user_id"))
     return events.filter(F.col("user_id").isNotNull() & F.col("ts").isNotNull()).select(
         (
-            (F.unix_timestamp(F.col("ts")).cast("long") / window_sec).cast("long")
-            * window_sec
+            (F.unix_timestamp(F.col("ts")).cast("long") / WINDOW_SEC).cast("long")
+            * WINDOW_SEC
         ).alias("window_start"),
         h.alias("h"),
     )
@@ -168,14 +174,9 @@ def _kmv_bottom_k(e: DataFrame, k: int, n_salts: int) -> DataFrame:
     )
 
 
-def kmv_sketch(
-    events: DataFrame,
-    k: int = 8,
-    n_salts: int = 16,
-    candidate_factor: float = 64.0,
-) -> DataFrame:
-    """Bottom-k (KMV) sketch per hourly window: the k smallest distinct
-    60-bit key hashes — simultaneously a MERGEABLE uniform sample of the
+def kmv_sketch(events: DataFrame) -> DataFrame:
+    """Bottom-k (KMV) sketch per hourly window: the k = KMV_K smallest
+    distinct 60-bit key hashes — simultaneously a MERGEABLE uniform sample of the
     window's distinct keys (min-hash sampling: the bottom-k of a hash
     order is a uniform draw without replacement) and a second distinct
     estimator, (k-1) / (h_k / 2^60) (Bar-Yossef et al. 2002), cross-
@@ -187,15 +188,16 @@ def kmv_sketch(
     projection, never an unbounded buffer):
 
     1. HLL threshold pass (`_kmv_thresholds`): per-window distinct
-       estimate from 64-register state; thr = candidate_factor * k /
-       D_est * 2^60, broadcast back (one row per window).
-    2. Candidate pass: `h < thr` keeps ~candidate_factor * k hashes per
-       window before any aggregation buffer — a window with 10^9 distinct
-       keys contributes ~512 candidates at the defaults, not 10^9 (the
+       estimate from 64-register state; thr = c * k / D_est * 2^60 with
+       c = KMV_CANDIDATE_FACTOR, broadcast back (one row per window).
+    2. Candidate pass: `h < thr` keeps ~c * k hashes per window before
+       any aggregation buffer — a window with 10^9 distinct keys
+       contributes ~c * k = 512 candidates, not 10^9 (the
        pre-r6 version collect_set the full ~D/n_salts per-shard distinct
        set). The surviving candidates run the exact two-phase salted
-       bottom-k (`_kmv_bottom_k`), still salted so even a pathological
-       estimate only concentrates ~c*k/n_salts rows per buffer.
+       bottom-k (`_kmv_bottom_k`) over KMV_SALTS shards, so even a
+       pathological estimate only concentrates ~c*k/KMV_SALTS rows per
+       buffer.
     3. Exactness fallback (statistically ~never taken): a filtered window
        yielding fewer than k survivors proves the threshold cut too deep
        (if >= k distinct hashes lie below thr, the true bottom-k all do),
@@ -228,9 +230,10 @@ def kmv_sketch(
 
     from ..caching import tracked_persist
 
-    e = tracked_persist(_kmv_hashed(events, 3600), StorageLevel.MEMORY_AND_DISK)
+    k, n_salts = KMV_K, KMV_SALTS
+    e = tracked_persist(_kmv_hashed(events), StorageLevel.MEMORY_AND_DISK)
     thr = tracked_persist(
-        _kmv_thresholds(e, k, candidate_factor),
+        _kmv_thresholds(e, k, KMV_CANDIDATE_FACTOR),
         StorageLevel.MEMORY_AND_DISK,
     )
     cand = (

@@ -28,13 +28,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+# tokens per packed training sequence; the DuckDB oracle chops at it too
+PACK_SEQ_LEN = 512
 
-def _bucketed_cumsum(seqs: DataFrame, n_buckets: int | None) -> DataFrame:
+
+def _bucketed_cumsum(seqs: DataFrame) -> DataFrame:
     """Phases 1-3: rows + (_bucket, cum_start, cum_end), exposed separately
-    so tests can assert per-(shard, bucket) boundedness on the hot shard."""
-    spark = seqs.sparkSession
-    if n_buckets is None:
-        n_buckets = max(64, spark.sparkContext.defaultParallelism * 4)
+    so tests can assert per-(shard, bucket) boundedness on the hot shard.
+    B = 4x the default parallelism, at least 64."""
+    n_buckets = max(64, seqs.sparkSession.sparkContext.defaultParallelism * 4)
     c = seqs.select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.col("source"),
@@ -76,35 +78,29 @@ def _bucketed_cumsum(seqs: DataFrame, n_buckets: int | None) -> DataFrame:
     )
 
 
-def _pack_assign(c: DataFrame, seq_len: int) -> DataFrame:
-    pack_id = F.floor(F.col("cum_start") / seq_len).cast("long")
-    last_pack = F.floor((F.col("cum_end") - 1) / seq_len).cast("long")
+def _pack_assign(c: DataFrame) -> DataFrame:
+    pack_id = F.floor(F.col("cum_start") / PACK_SEQ_LEN).cast("long")
+    last_pack = F.floor((F.col("cum_end") - 1) / PACK_SEQ_LEN).cast("long")
     return c.select(
         "doc_id",
         "source",
         "n_tok",
         "cum_start",
         pack_id.alias("pack_id"),
-        (F.col("cum_start") % seq_len).cast("long").alias("pack_off"),
+        (F.col("cum_start") % PACK_SEQ_LEN).cast("long").alias("pack_off"),
         (last_pack != pack_id).alias("spans_packs"),
         (last_pack - pack_id + 1).cast("long").alias("n_packs_touched"),
     )
 
 
-def pack_sequences(
-    seqs: DataFrame,
-    seq_len: int = 2048,
-    n_buckets: int | None = None,
-) -> DataFrame:
-    """Assign every doc its position in the packed token stream of its
-    ``source`` shard: (pack_id, pack_off) of the doc's first token, whether it
-    straddles a pack boundary, and how many packs it touches.
+def pack_sequences(seqs: DataFrame) -> DataFrame:
+    """Assign every doc its position in the packed PACK_SEQ_LEN-token stream
+    of its ``source`` shard: (pack_id, pack_off) of the doc's first token,
+    whether it straddles a pack boundary, and how many packs it touches.
 
     Columns out: doc_id, source, n_tok, cum_start, pack_id, pack_off,
-    spans_packs (bool), n_packs_touched. ``n_buckets`` sizes the two-phase
-    cumsum (default 4x parallelism, min 64); the output is independent of
-    its value.
+    spans_packs (bool), n_packs_touched. The two-phase cumsum cuts 4x the
+    default parallelism (at least 64) buckets; the output is independent
+    of their number.
     """
-    if seq_len <= 0:
-        raise ValueError(f"seq_len must be positive, got {seq_len}")
-    return _pack_assign(_bucketed_cumsum(seqs, n_buckets), seq_len)
+    return _pack_assign(_bucketed_cumsum(seqs))

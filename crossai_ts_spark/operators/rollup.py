@@ -42,6 +42,10 @@ from ..workers import worker_kernel
 # and empty arrays both drop here, whatever the row's ``n_tok`` says.
 NONEMPTY = "size(tokens) > 0"
 
+# rollup_histogram's window, bucket count and value ceiling (the ASCII
+# band); the DuckDB oracle builds its SQL from the same values
+HIST_W, HIST_NB, HIST_VMAX = 32, 16, 128
+
 
 def _reject_null_elements(flat: np.ndarray, doc_base: np.ndarray, doc_ids) -> None:
     """Raise if a token array holds a null element.
@@ -163,15 +167,13 @@ def cascade(
     return df.filter(NONEMPTY).mapInPandas(kernel, schema=TIER_SCHEMA)
 
 
-def rollup_histogram(
-    df: DataFrame, w: int = DEFAULT_W, n_buckets: int = 16, vmax: int = 1104
-) -> DataFrame:
+def rollup_histogram(df: DataFrame) -> DataFrame:
     """Mergeable fixed-boundary histogram rollup: per tumbling window of
-    ``w`` tokens, the count in each of ``n_buckets`` equal-width value
-    buckets over [0, vmax) — the continuous-aggregate companion to
-    min/max/sum/count that supports approximate quantiles AT ANY TIER,
-    because fixed-boundary histograms re-aggregate exactly (tier k+1 =
-    elementwise sum of children).
+    w = HIST_W tokens, the count in each of n_buckets = HIST_NB equal-width
+    value buckets over [0, vmax = HIST_VMAX) — the continuous-aggregate
+    companion to min/max/sum/count that supports approximate quantiles AT
+    ANY TIER, because fixed-boundary histograms re-aggregate exactly (tier
+    k+1 = elementwise sum of children).
 
     Integer-exact (bucket = min(tok*n_buckets // vmax, n_buckets-1)).
     Output: (doc_id, window_start, b0..b{n-1}, total, median_bucket) where
@@ -184,6 +186,9 @@ def rollup_histogram(
     work per token (measured ~4x wall between nb=16 and nb=64 on 515 M
     tokens). Narrow, no shuffle: raw tokens never cross an exchange. A null
     element inside an array raises ``ValueError`` naming the doc."""
+    # the kernel runs in Python workers: it closes over these locals, read
+    # while the plan is built, so a test may monkeypatch the constants
+    w, n_buckets, vmax = HIST_W, HIST_NB, HIST_VMAX
 
     @worker_kernel
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

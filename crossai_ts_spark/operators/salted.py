@@ -19,15 +19,19 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def salted_tier_source_rollup(tier_df: DataFrame, n_salts: int = 32) -> DataFrame:
+# salt shards S of the hot key
+SALTS = 8
+
+
+def salted_tier_source_rollup(tier_df: DataFrame) -> DataFrame:
     """Cross-doc per-(source, tier, window_start) continuous aggregate.
 
     This is the one genuinely hot-keyed shuffle in the engine (all docs of a
     source contribute to the same window rows); two-phase salting bounds any
-    single reducer's share at ~1/S.
+    single reducer's share at ~1/SALTS.
     """
     partial = (
-        tier_df.withColumn("_salt", F.pmod(F.xxhash64("doc_id"), F.lit(n_salts)).cast("int"))
+        tier_df.withColumn("_salt", F.pmod(F.xxhash64("doc_id"), F.lit(SALTS)).cast("int"))
         .groupBy("source", "tier", "window_start", "_salt")
         .agg(
             F.min("t_min").alias("p_min"),

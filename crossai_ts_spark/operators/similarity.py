@@ -5,8 +5,9 @@ fold for the dot product, row_number top-k) is oracle/plans.cosine_topk;
 tests score the searches here by recall against it.
 
 Scale path: LSH by random-hyperplane sign buckets — corpus hashed once to
-B-bit bucket ids; queries probe their own bucket (+ optional multi-probe),
-so each query touches ~corpus/2^B vectors instead of all of them.
+B-bit bucket ids; queries probe their own bucket and its Hamming-1
+neighbours, so each query touches ~probes x corpus/2^B vectors instead of
+all of them.
 Hyperplanes are derived deterministically from a seed and broadcast.
 """
 
@@ -25,6 +26,16 @@ _DOT = (
 # outlier threshold; the DuckDB oracle builds its SQL from the same values
 CENTROID_Q = 1048576.0
 OUTLIER_DIST2 = 1.0
+
+# the width of the `embeddings` table's vectors
+EMB_DIM = 64
+# nearest neighbours each ANN search keeps per query
+ANN_K = 5
+# lsh_topk: bits per bucket id, hyperplane seed, and buckets probed per
+# query (its own and the first Hamming-1 neighbours)
+LSH_BITS, LSH_SEED, LSH_PROBES = 6, 42, 3
+# ivf_topk: centroids (Voronoi cells) and cells probed per query
+IVF_CENT, IVF_PROBE = 16, 3
 
 
 def _norm(col: str):
@@ -61,7 +72,7 @@ def _hyperplanes(dim: int, n_bits: int, seed: int) -> list[list[float]]:
     return rng.normal(0, 1, size=(n_bits, dim)).tolist()
 
 
-def lsh_bucket_col(dim: int, n_bits: int = 8, seed: int = 42):
+def lsh_bucket_col(dim: int, n_bits: int, seed: int):
     """Random-hyperplane signature as a Column:
     bucket = sum_i (dot(v, h_i) > 0) << i. Hyperplanes ship as literal
     arrays inside the plan (broadcast by value); each bit is one JVM-side
@@ -82,11 +93,6 @@ def lsh_bucket_col(dim: int, n_bits: int = 8, seed: int = 42):
             f"ELSE CAST(0 AS BIGINT) END)"
         )
     return F.expr("(" + " + ".join(terms) + ")")
-
-
-def lsh_bucket(df: DataFrame, dim: int, n_bits: int = 8, seed: int = 42) -> DataFrame:
-    """Random-hyperplane bucketing of a DataFrame (see lsh_bucket_col)."""
-    return df.withColumn("bucket", lsh_bucket_col(dim, n_bits, seed))
 
 
 def ivf_centroids(corpus: DataFrame, n_cent: int) -> list[list[float]]:
@@ -135,20 +141,20 @@ def ivf_assign(df: DataFrame, cents: list[list[float]], vec: str = "embedding") 
     )
 
 
-def ivf_topk(corpus: DataFrame, queries: DataFrame, n_cent: int = 16,
-             n_probe: int = 3) -> DataFrame:
-    """IVF approximate NN: partition the corpus into `n_cent` Voronoi cells
+def ivf_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+    """IVF approximate NN: partition the corpus into IVF_CENT Voronoi cells
     around deterministic centroids, then each query searches only its
-    `n_probe` nearest cells (exact cosine re-rank inside) for its top 5.
+    IVF_PROBE nearest cells (exact cosine re-rank inside) for its top ANN_K.
 
     Scale shape (the IVF contract): the model is tiny and broadcast; cell
-    assignment is a narrow map over the corpus (n_cent folds/row, no
+    assignment is a narrow map over the corpus (IVF_CENT folds/row, no
     shuffle); the candidate join is broadcast-hash on the (queries x
-    n_probe)-row probe side so the corpus never shuffles; the only shuffle
-    is the final per-query top-k over ~n_probe/n_cent of the corpus.
+    IVF_PROBE)-row probe side so the corpus never shuffles; the only
+    shuffle is the final per-query top-k over ~IVF_PROBE/IVF_CENT of the
+    corpus.
     Complements lsh_topk: IVF adapts to the data distribution (cells follow
     the vectors), LSH is oblivious (fixed hyperplanes)."""
-    cents = ivf_centroids(corpus, n_cent)
+    cents = ivf_centroids(corpus, IVF_CENT)
     cb = ivf_assign(corpus, cents).select(
         "vec_id", "embedding", "cell", _norm("embedding").alias("_nb")
     )
@@ -160,7 +166,7 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, n_cent: int = 16,
     wp = Window.partitionBy("q_id").orderBy(F.desc("score"), "cid0")
     qp = (
         qp.withColumn("pr", F.row_number().over(wp))
-        .filter(F.col("pr") <= n_probe)
+        .filter(F.col("pr") <= IVF_PROBE)
         .select("q_id", "qe", "_na", (F.col("cid0") + 1).cast("long").alias("cell"))
     )
     pairs = F.broadcast(qp).join(cb, "cell").filter(F.col("vec_id") != F.col("q_id"))
@@ -168,40 +174,35 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, n_cent: int = 16,
     w = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), "vec_id")
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
+        .filter(F.col("rank") <= ANN_K)
         .select("q_id", "rank", "vec_id", "cos_sim")
     )
 
 
-def lsh_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5,
-             n_bits: int = 8, seed: int = 42, n_probes: int = 1) -> DataFrame:
-    """ANN top-k restricted to the query's LSH bucket(s).
+def lsh_topk(corpus: DataFrame, queries: DataFrame, dim: int) -> DataFrame:
+    """ANN top-ANN_K restricted to the query's LSH buckets.
 
-    Multi-probe: with n_probes > 1 each query also probes the buckets at
-    Hamming distance 1 from its own (one sign-flip away — where a
-    borderline neighbor most likely landed), up to n_probes buckets total.
+    Multi-probe: each query probes its own LSH_BITS-bit bucket and the
+    first LSH_PROBES - 1 buckets at Hamming distance 1 from it (one
+    sign-flip away — where a borderline neighbor most likely landed).
     Recall rises from p^B toward coverage of the adjacent half-spaces at
-    the cost of (n_probes x) candidate volume; the probe fan-out explodes
+    the cost of (LSH_PROBES x) candidate volume; the probe fan-out explodes
     on the (tiny, broadcast) QUERY side only — the corpus is still hashed
     exactly once.
     """
-    cb = lsh_bucket(corpus, dim, n_bits, seed).withColumn("_nb", _norm("embedding"))
-    qb0 = lsh_bucket(queries, dim, n_bits, seed).select(
+    bucket = lsh_bucket_col(dim, LSH_BITS, LSH_SEED)
+    cb = corpus.withColumn("bucket", bucket).withColumn("_nb", _norm("embedding"))
+    qb0 = queries.withColumn("bucket", bucket).select(
         F.col("vec_id").alias("q_id"),
         F.col("embedding").alias("qe"),
         _norm("embedding").alias("_na"),
         "bucket",
     )
-    if n_probes > 1:
-        flips = [F.col("bucket").cast("long")] + [
-            F.col("bucket").cast("long").bitwiseXOR(F.lit(1 << i).cast("long"))
-            for i in range(min(n_probes - 1, n_bits))
-        ]
-        qb = qb0.select(
-            "q_id", "qe", "_na", F.explode(F.array(*flips)).alias("bucket")
-        )
-    else:
-        qb = qb0
+    flips = [F.col("bucket").cast("long")] + [
+        F.col("bucket").cast("long").bitwiseXOR(F.lit(1 << i).cast("long"))
+        for i in range(LSH_PROBES - 1)
+    ]
+    qb = qb0.select("q_id", "qe", "_na", F.explode(F.array(*flips)).alias("bucket"))
     # the probe buckets of one query are pairwise-distinct XOR values and a
     # corpus vector lives in exactly one bucket, so no candidate repeats —
     # no dedup shuffle needed
@@ -210,7 +211,7 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5,
     w = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), "vec_id")
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= ANN_K)
         .select("q_id", "rank", "vec_id", "cos_sim")
     )
 

@@ -20,6 +20,9 @@ LANG_MARKERS = {
     "zh": ["de", "le", "shi"],
 }
 
+# ngram_topk: bigrams kept; the DuckDB oracle's LIMIT reads it too
+NGRAM_TOPK = 50
+
 
 def _words():
     return F.filter(F.split(F.col("text"), " "), lambda w: w != "")
@@ -306,23 +309,21 @@ def gopher_rules(docs: DataFrame) -> DataFrame:
     return rules.withColumn("keep", keep)
 
 
-def ngram_topk(docs: DataFrame, k: int = 50) -> DataFrame:
+def ngram_topk(docs: DataFrame) -> DataFrame:
     """Corpus-wide most-frequent word bigrams — the vocabulary/artifact
     scan a pretraining pipeline runs to spot templated boilerplate and
     scraping junk before it trains into the model (the public data-audit
     recipe; per-doc repetition is `repetition_scores`, this is the
     CROSS-doc inventory).
 
-    Output: (ngram, cnt, rank) for the top-k by count, ties broken by
-    ngram text ascending — fully deterministic.
+    Output: (ngram, cnt, rank) for the top NGRAM_TOPK by count, ties broken
+    by ngram text ascending — fully deterministic.
 
     Scale shape: one explode (linear in corpus words), one map-side-
     combined groupBy on the n-gram, then a global top-k which Spark
     executes as TakeOrderedAndProject (per-partition heap + driver merge
     of k rows), never a full sort of the n-gram universe.
     """
-    if k <= 0:
-        raise ValueError(f"k must be positive, got k={k}")
     # docs shorter than 2 words contribute nothing; the filter also keeps
     # sequence() away from a negative stop (Spark would infer step -1)
     wdocs = docs.select(_words().alias("_w")).filter(F.size("_w") >= 2)
@@ -332,6 +333,6 @@ def ngram_topk(docs: DataFrame, k: int = 50) -> DataFrame:
     )
     grams = wdocs.select(F.explode(grams_expr).alias("ngram"))
     counted = grams.groupBy("ngram").agg(F.count("*").alias("cnt"))
-    top = counted.orderBy(F.col("cnt").desc(), F.col("ngram").asc()).limit(k)
+    top = counted.orderBy(F.col("cnt").desc(), F.col("ngram").asc()).limit(NGRAM_TOPK)
     w = Window.orderBy(F.col("cnt").desc(), F.col("ngram").asc())
     return top.select("ngram", "cnt", F.row_number().over(w).cast("long").alias("rank"))

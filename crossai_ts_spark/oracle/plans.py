@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..operators.hll import _kmv_bottom_k, _kmv_estimate, _kmv_hashed
+from ..operators.hll import KMV_K, KMV_SALTS, _kmv_bottom_k, _kmv_estimate, _kmv_hashed
 from ..operators.packing import _pack_assign
 from ..operators.similarity import _cos_with_norms, _norm
 
@@ -41,12 +41,10 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     )
 
 
-def _pack_sequences_global(seqs: DataFrame, seq_len: int = 2048) -> DataFrame:
+def _pack_sequences_global(seqs: DataFrame) -> DataFrame:
     """The naive one-window-per-shard plan — kept only to prove bitwise
     equality of the two-phase cumsum in tests; serializes each shard on
     one task, so never the hot path."""
-    if seq_len <= 0:
-        raise ValueError(f"seq_len must be positive, got {seq_len}")
     w = Window.partitionBy("source").orderBy("doc_id")
     c = (
         seqs.select(
@@ -58,12 +56,13 @@ def _pack_sequences_global(seqs: DataFrame, seq_len: int = 2048) -> DataFrame:
         .withColumn("cum_end", F.sum("n_tok").over(w))
         .withColumn("cum_start", F.col("cum_end") - F.col("n_tok"))
     )
-    return _pack_assign(c, seq_len)
+    return _pack_assign(c)
 
 
-def kmv_sketch_unfiltered(events: DataFrame, k: int = 8, n_salts: int = 16) -> DataFrame:
-    """Bottom-k (KMV) sketch per hourly window without the HLL candidate filter:
-    every window's whole distinct-hash set enters the salted two-phase
-    bottom-k, so a hot window buffers O(D / n_salts) hashes per shard."""
-    e = _kmv_hashed(events, 3600)
-    return _kmv_estimate(_kmv_bottom_k(e, k, n_salts), k)
+def kmv_sketch_unfiltered(events: DataFrame) -> DataFrame:
+    """Bottom-KMV_K sketch per hourly window without the HLL candidate
+    filter: every window's whole distinct-hash set enters the salted
+    two-phase bottom-k, so a hot window buffers O(D / KMV_SALTS) hashes per
+    shard."""
+    e = _kmv_hashed(events)
+    return _kmv_estimate(_kmv_bottom_k(e, KMV_K, KMV_SALTS), KMV_K)

@@ -68,7 +68,7 @@ def completed_buckets(out_dir: str) -> set[int]:
     return out
 
 
-def pending_buckets(out_dir: str, n_buckets: int, expect: dict | None = None) -> list[int]:
+def pending_buckets(out_dir: str, n_buckets: int, expect: dict) -> list[int]:
     """Buckets without a manifest. ``expect`` maps manifest fields to this
     run's values; a completed manifest that disagrees raises ValueError."""
     done = completed_buckets(out_dir)
@@ -76,7 +76,7 @@ def pending_buckets(out_dir: str, n_buckets: int, expect: dict | None = None) ->
         path = os.path.join(manifest_dir(out_dir), f"{b}.json")
         with open(path) as f:
             m = json.load(f)
-        for field, want in (expect or {}).items():
+        for field, want in expect.items():
             if m.get(field) != want:
                 raise ValueError(
                     f"cannot resume: {path} has {field}={m.get(field)!r}, "

@@ -82,7 +82,7 @@ def run_until_rows(df: DataFrame, name: str, n_rows: int, timeout_sec: float = 2
 # ------------------------------------------------ stateful incremental tier
 
 
-def incremental_tier1(chunked: DataFrame, w: int = 64,
+def incremental_tier1(chunked: DataFrame, w: int,
                       state_ttl_sec: int | None = None) -> DataFrame:
     """Stateful streaming tier-1: token arrays arrive in per-doc CHUNKS
     (doc_id, chunk_idx, tokens, is_last); GroupState carries the open
@@ -248,12 +248,12 @@ def streaming_sessions(stream: DataFrame) -> DataFrame:
     )
 
 
-def streaming_packing(stream: DataFrame, seq_len: int = 2048) -> DataFrame:
+def streaming_packing(stream: DataFrame) -> DataFrame:
     """Stateful streaming sequence packing (the streaming face of
-    operators/packing.pack_sequences): docs arrive per ``source`` shard; GroupState
-    carries the shard's running token offset across triggers, so each doc
-    gets the (pack_id, pack_off) the batch packer would assign if fed in
-    the same order. ARRIVAL order is the packing order — the streaming
+    operators/packing.pack_sequences, PACK_SEQ_LEN-token packs): docs arrive
+    per ``source`` shard; GroupState carries the shard's running token
+    offset across triggers, so each doc gets the (pack_id, pack_off) the
+    batch packer would assign if fed in the same order. ARRIVAL order is the packing order — the streaming
     contract (a live packer cannot sort the future); within a trigger,
     rows are doc_id-sorted for determinism. Feeding doc_id-ordered
     triggers reproduces the batch assignment exactly (parity-tested).
@@ -262,8 +262,9 @@ def streaming_packing(stream: DataFrame, seq_len: int = 2048) -> DataFrame:
     """
     import pandas as pd
 
-    if seq_len <= 0:
-        raise ValueError(f"seq_len must be positive, got {seq_len}")
+    from ..operators.packing import PACK_SEQ_LEN
+
+    seq_len = PACK_SEQ_LEN  # the worker-side kernel closes over this local
 
     @worker_kernel
     def fn(key, pdfs, state):
@@ -334,12 +335,12 @@ def streaming_hll_native(stream: DataFrame) -> DataFrame:
     Estimator assembly happens downstream, off the ingest path, exactly
     as in the batch tiering. Events with a null key or timestamp are
     dropped, as the batch sketch drops them."""
-    from ..operators.hll import _hash60, _reg_rank_fold
+    from ..operators.hll import WINDOW_SEC, _hash60, _reg_rank_fold
 
     e = stream.withWatermark("ts", "2 hours").filter(
         F.col("user_id").isNotNull() & F.col("ts").isNotNull()
     ).select(
-        F.window(F.col("ts"), "3600 seconds").alias("win"),
+        F.window(F.col("ts"), f"{WINDOW_SEC} seconds").alias("win"),
         _hash60(F.col("user_id")).alias("h"),
     )
     return _reg_rank_fold(e, "win").select(
@@ -353,10 +354,10 @@ def streaming_kmv(stream: DataFrame, state_ttl_sec: int = 6 * 3600) -> DataFrame
     """Stateful streaming bottom-k (KMV) sketch — the streaming face of
     operators/hll.kmv_sketch, closing the "every mergeable summary has a
     streaming twin" set (HLL r5, CMS r6, KMV r6). GroupState per hourly
-    window holds the k = 8 smallest DISTINCT 60-bit key hashes — k longs, the
-    definitionally bounded state — and each trigger emits the refreshed
-    (ks, n_distinct_est) plus the monotone n_events cursor (latest row
-    per window = current sketch). The hash projection is the BATCH
+    window holds the k = KMV_K smallest DISTINCT 60-bit key hashes — k
+    longs, the definitionally bounded state — and each trigger emits the
+    refreshed (ks, n_distinct_est) plus the monotone n_events cursor
+    (latest row per window = current sketch). The hash projection is the BATCH
     `_kmv_hashed` expression itself (which drops null-key and null-
     timestamp rows before they reach pandas, where a null would arrive as
     a float64 NaN whose int64 cast terminates the query) and the
@@ -381,10 +382,10 @@ def streaming_kmv(stream: DataFrame, state_ttl_sec: int = 6 * 3600) -> DataFrame
     import numpy as np
     import pandas as pd
 
-    from ..operators.hll import _H60, _kmv_hashed
+    from ..operators.hll import KMV_K, _H60, _kmv_hashed
 
-    k = 8
-    hashed = _kmv_hashed(stream, 3600)
+    k = KMV_K  # the worker-side kernels close over this local
+    hashed = _kmv_hashed(stream)
 
     @worker_kernel
     def partial(pdfs):

@@ -21,10 +21,13 @@ from crossai_ts_spark.plans.checkpoint import (
 )
 
 
-def test_salted_tier_rollup_invariance(spark, tiny_df):
+def test_salted_tier_rollup_invariance(spark, tiny_df, monkeypatch):
+    from crossai_ts_spark.operators import salted
+
     tiers = cascade(tiny_df, w=64, fanout=8, tiers=2)
-    a = salted_tier_source_rollup(tiers, n_salts=4).toPandas()
-    b = salted_tier_source_rollup(tiers.repartition(11), n_salts=16).toPandas()
+    a = salted_tier_source_rollup(tiers).toPandas()
+    monkeypatch.setattr(salted, "SALTS", 16)
+    b = salted_tier_source_rollup(tiers.repartition(11)).toPandas()
     key = ["source", "tier", "window_start"]
     a = a.sort_values(key).reset_index(drop=True)
     b = b.sort_values(key).reset_index(drop=True)
@@ -49,7 +52,7 @@ def test_checkpoint_commit_and_resume(spark, tiny_df, tmp_path):
             assert t["rows"] > 0 and t["tokens"] > 0
 
     assert completed_buckets(out) == {0, 2}
-    assert pending_buckets(out, n_buckets) == [1, 3]
+    assert pending_buckets(out, n_buckets, {}) == [1, 3]
 
     # manifests are valid JSON with lineage fields
     with open(os.path.join(out, "_manifests", "0.json")) as f:
@@ -112,7 +115,7 @@ def test_recommit_killed_before_rename_leaves_bucket_pending(spark, tiny_df, tmp
     out = str(tmp_path / "kill_out")
     tiers = cascade(tiny_df, w=64, fanout=8, tiers=1)
     commit_bucket(tiers, out, 0, "t", params={"n_tiers": 1})
-    assert pending_buckets(out, 1) == []
+    assert pending_buckets(out, 1, {}) == []
 
     def killed(src, dst):
         raise OSError("killed before rename")
@@ -120,7 +123,7 @@ def test_recommit_killed_before_rename_leaves_bucket_pending(spark, tiny_df, tmp
     monkeypatch.setattr(os, "replace", killed)
     with pytest.raises(OSError, match="killed"):
         commit_bucket(tiers, out, 0, "t", params={"n_tiers": 1})
-    assert pending_buckets(out, 1) == [0]
+    assert pending_buckets(out, 1, {}) == [0]
     assert not os.path.exists(os.path.join(out, "_manifests", "0.json"))
 
 
@@ -231,7 +234,7 @@ def test_failed_write_raises_and_leaves_bucket_pending(spark, tiny_df, tmp_path)
     t.join(300)
     assert not t.is_alive(), "commit_bucket hung after a failed write"
     assert err and "DIVIDE_BY_ZERO" in str(err[0])
-    assert pending_buckets(out, 1) == [0]
+    assert pending_buckets(out, 1, {}) == [0]
     assert not os.path.exists(os.path.join(out, "_manifests", "0.json"))
     assert not os.path.exists(os.path.join(out, "data", "bucket=0"))
 

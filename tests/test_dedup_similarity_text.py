@@ -33,7 +33,7 @@ def test_ngram_jaccard_finds_near_dup(spark, docs_df):
     from crossai_ts_spark.operators.dedup import ngram_jaccard_pairs, shingles
 
     sh = shingles(docs_df)
-    pairs = ngram_jaccard_pairs(sh, threshold=0.3).toPandas()
+    pairs = ngram_jaccard_pairs(sh).toPandas()
     key = set(zip(pairs.doc_a, pairs.doc_b))
     assert ("1", "2") in key  # exact dup -> jaccard 1.0
     assert ("1", "3") in key  # near dup
@@ -78,7 +78,7 @@ def test_cosine_topk_and_lsh(spark):
     got = cosine_topk(emb, emb.filter(F.col("vec_id") == 0), k=3).toPandas()
     assert got.iloc[0].vec_id == 1 and got.iloc[0].cos_sim > 0.99
 
-    ann = lsh_topk(emb, emb.filter(F.col("vec_id") == 0), dim=16, k=3, n_bits=4).toPandas()
+    ann = lsh_topk(emb, emb.filter(F.col("vec_id") == 0), 16).toPandas()
     assert 1 in set(ann.vec_id)  # near-identical vectors share every bucket
 
 
@@ -95,25 +95,29 @@ def test_textstats(spark, docs_df):
     assert li.loc["6", "lang_pred"] == "fr"
 
 
-def test_pathological_universal_shingle_is_df_capped(spark):
+def test_pathological_universal_shingle_is_df_capped(spark, monkeypatch):
     """One shingle shared by EVERY doc: the uncapped self-join would emit
-    n^2 rows; with max_df the universal shingle is dropped from the capped
-    universe and only genuinely-similar pairs survive."""
+    n^2 rows; with the df cap the universal shingle is dropped from the
+    capped universe and only genuinely-similar pairs survive."""
+    from crossai_ts_spark.operators import dedup
     from crossai_ts_spark.operators.dedup import ngram_jaccard_pairs, shingles
+
+    monkeypatch.setattr(dedup, "NGRAM_MAX_DF", 5)
 
     n = 60
     rows = [(i, f"common boiler plate unique{i} tail{i} word{i}", "en", "web") for i in range(n)]
     rows.append((n, "common boiler plate unique0 tail0 word0", "en", "web"))  # dup of 0
     docs = spark.createDataFrame(rows, "doc_id long, text string, lang string, source string")
     sh = shingles(docs)
-    pairs = ngram_jaccard_pairs(sh, threshold=0.5, max_df=5).toPandas()
+    pairs = ngram_jaccard_pairs(sh).toPandas()
     # 'common boiler plate' (df = 61 > 5) never enters the join: no n^2
     # candidate blow-up, and the only surviving pair is the true dup
     assert set(zip(pairs.doc_a, pairs.doc_b)) == {("0", str(n))}
     assert pairs.jaccard.iloc[0] == 1.0
 
 
-def test_lsh_bucket_cap_drops_degenerate_bucket(spark):
+def test_lsh_bucket_cap_drops_degenerate_bucket(spark, monkeypatch):
+    from crossai_ts_spark.operators import dedup
     from crossai_ts_spark.operators.dedup import (
         lsh_candidate_pairs,
         minhash_signatures,
@@ -124,55 +128,36 @@ def test_lsh_bucket_cap_drops_degenerate_bucket(spark):
     rows = [(i, "same exact words every single time here now", "en", "web") for i in range(40)]
     docs = spark.createDataFrame(rows, "doc_id long, text string, lang string, source string")
     sig = minhash_signatures(shingles(docs))
-    capped = lsh_candidate_pairs(sig, max_bucket=10).toPandas()
+    monkeypatch.setattr(dedup, "LSH_MAX_BUCKET", 10)
+    capped = lsh_candidate_pairs(sig).toPandas()
     assert len(capped) == 0  # degenerate bucket dropped (exact dedup's job)
     # a cap above the input size keeps the 40-doc bucket
-    uncapped = lsh_candidate_pairs(sig, max_bucket=41).toPandas()
+    monkeypatch.setattr(dedup, "LSH_MAX_BUCKET", 41)
+    uncapped = lsh_candidate_pairs(sig).toPandas()
     assert len(uncapped) == 40 * 39 // 2
 
 
 def test_embedding_near_dups_lsh_default_no_crossjoin(spark):
     from crossai_ts_spark.operators.dedup import embedding_near_dups
+    from crossai_ts_spark.operators.similarity import EMB_DIM
 
     rng = np.random.default_rng(7)
-    base = rng.normal(size=(30, 16)).astype("float32")
-    base[5] = base[3] + rng.normal(scale=1e-3, size=16).astype("float32")  # planted near-dup
+    base = rng.normal(size=(30, EMB_DIM)).astype("float32")
+    base[5] = base[3] + rng.normal(scale=1e-3, size=EMB_DIM).astype("float32")  # planted near-dup
     rows = [(i, [float(x) for x in base[i]]) for i in range(30)]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    got = embedding_near_dups(emb, threshold=0.99, dim=16, n_bits=4, n_tables=3, seed=1).toPandas()
-    assert ("crossJoin" not in got.attrs.get("plan", "")), "sanity"
+    near = embedding_near_dups(emb)
+    got = near.toPandas()
     assert {(3, 5)} == set(zip(got.id_a, got.id_b))
     # the physical plan must not contain a cartesian product
-    plan = embedding_near_dups(
-        emb, threshold=0.99, dim=16, n_bits=4, n_tables=3, seed=1
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
+    assert "CartesianProduct" not in near._jdf.queryExecution().executedPlan().toString()
 
 
-def test_multiprobe_lsh_improves_recall(spark):
-    from crossai_ts_spark.operators.similarity import lsh_topk
-    from crossai_ts_spark.oracle.plans import cosine_topk
-
-    rng = np.random.default_rng(4)
-    emb = rng.normal(size=(400, 16)).astype("float32")
-    rows = [(i, [float(x) for x in emb[i]]) for i in range(400)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    q = df.filter("vec_id < 8")
-
-    def pairs(res):
-        return set(zip(res.q_id, res.vec_id))
-
-    truth = pairs(cosine_topk(df, q, k=5).toPandas())
-    p1 = pairs(lsh_topk(df, q, dim=16, k=5, n_bits=5, seed=1, n_probes=1).toPandas())
-    p3 = pairs(lsh_topk(df, q, dim=16, k=5, n_bits=5, seed=1, n_probes=4).toPandas())
-    r1 = len(p1 & truth) / len(truth)
-    r3 = len(p3 & truth) / len(truth)
-    assert r3 >= r1  # probing adjacent half-spaces can only add candidates
-    assert r3 > 0.3
-
-
-def test_ivf_ann_recall_and_probe_monotonicity(spark):
-    from crossai_ts_spark.operators.similarity import ivf_assign, ivf_centroids, ivf_topk
+def test_ivf_cells_and_full_probe_is_exact(spark, monkeypatch):
+    """Every corpus vector lands in one of the IVF_CENT cells, and probing
+    every cell is the exhaustive search."""
+    from crossai_ts_spark.operators import similarity
+    from crossai_ts_spark.operators.similarity import IVF_CENT, ivf_assign, ivf_centroids, ivf_topk
     from crossai_ts_spark.oracle.plans import cosine_topk
 
     rng = np.random.default_rng(7)
@@ -184,20 +169,14 @@ def test_ivf_ann_recall_and_probe_monotonicity(spark):
     def pairs(res):
         return set(zip(res.q_id, res.vec_id))
 
-    truth = pairs(cosine_topk(df, q, k=5).toPandas())
-    p1 = pairs(ivf_topk(df, q, n_cent=8, n_probe=1).toPandas())
-    p3 = pairs(ivf_topk(df, q, n_cent=8, n_probe=3).toPandas())
-    p8 = pairs(ivf_topk(df, q, n_cent=8, n_probe=8).toPandas())
-    r1, r3 = len(p1 & truth) / len(truth), len(p3 & truth) / len(truth)
-    assert r3 >= r1  # more cells probed can only add candidates
-    assert r3 > 0.3
-    assert p8 == truth  # probing every cell == exhaustive search
+    truth = pairs(cosine_topk(df, q, k=similarity.ANN_K).toPandas())
+    monkeypatch.setattr(similarity, "IVF_PROBE", IVF_CENT)
+    assert pairs(ivf_topk(df, q).toPandas()) == truth
 
-    # every corpus vector lands in exactly one of the n_cent cells
-    cents = ivf_centroids(df, 8)
-    assert len(cents) == 8 and all(len(c) == 16 for c in cents)
+    cents = ivf_centroids(df, IVF_CENT)
+    assert len(cents) == IVF_CENT and all(len(c) == 16 for c in cents)
     cells = ivf_assign(df, cents).select("cell").toPandas().cell
-    assert cells.between(1, 8).all()
+    assert cells.between(1, IVF_CENT).all()
 
 
 def _boilerplate_corpus(spark, n_docs: int, dup_frac: float = 0.3, seed: int = 9):
@@ -217,23 +196,24 @@ def _boilerplate_corpus(spark, n_docs: int, dup_frac: float = 0.3, seed: int = 9
     return spark.createDataFrame(rows, "doc_id string, text string, lang string, source string")
 
 
-def test_skewed_corpus_candidate_pairs_stay_linear(spark):
+def test_skewed_corpus_candidate_pairs_stay_linear(spark, monkeypatch):
     """30% identical boilerplate: uncapped LSH would emit O((0.3n)^2)
     candidate pairs from the boilerplate buckets alone. With the bucket
     cap, candidate counts must grow ~linearly in n (the cap drops the
     degenerate buckets; exact dedup owns identical docs)."""
+    from crossai_ts_spark.operators import dedup
     from crossai_ts_spark.operators.dedup import (
         lsh_candidate_pairs,
         minhash_signatures,
         shingles,
     )
 
+    monkeypatch.setattr(dedup, "LSH_MAX_BUCKET", 100)
     counts = {}
     for n in (1500, 3000):
         docs = _boilerplate_corpus(spark, n)
         sig = minhash_signatures(shingles(docs))
-        pairs = lsh_candidate_pairs(sig, max_bucket=100)
-        counts[n] = pairs.count()
+        counts[n] = lsh_candidate_pairs(sig).count()
     # quadratic growth would be 4x; linear is 2x. Allow slack for the
     # random unique-doc collisions (also ~linear).
     assert counts[3000] <= 2.5 * max(counts[1500], 1), counts
@@ -241,7 +221,7 @@ def test_skewed_corpus_candidate_pairs_stay_linear(spark):
     # any boilerplate pair would be (a, b) with both ids < 450
     docs = _boilerplate_corpus(spark, 1500)
     sig = minhash_signatures(shingles(docs))
-    pairs = lsh_candidate_pairs(sig, max_bucket=100).toPandas()
+    pairs = lsh_candidate_pairs(sig).toPandas()
     boiler_pairs = [
         (a, b) for a, b in zip(pairs.doc_a, pairs.doc_b)
         if int(a) < 450 and int(b) < 450
@@ -249,22 +229,22 @@ def test_skewed_corpus_candidate_pairs_stay_linear(spark):
     assert boiler_pairs == []
 
 
-def test_skewed_embeddings_bucket_cap_engages(spark):
+def test_skewed_embeddings_bucket_cap_engages(spark, monkeypatch):
     """30% identical embedding vectors: the per-table bucket cap drops the
     degenerate buckets, keeping within-bucket pair cost bounded."""
-    from crossai_ts_spark.operators.dedup import embedding_near_dups
+    from crossai_ts_spark.operators import dedup
+    from crossai_ts_spark.operators.similarity import EMB_DIM
 
     rng = np.random.default_rng(3)
-    base = rng.normal(size=16).astype("float64")
+    base = rng.normal(size=EMB_DIM).astype("float64")
     rows = []
     n = 900
     for i in range(n):
-        v = base if i < 270 else rng.normal(size=16)
+        v = base if i < 270 else rng.normal(size=EMB_DIM)
         rows.append((i, [float(x) for x in v]))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    capped = embedding_near_dups(
-        df, threshold=0.99, dim=16, n_bits=4, n_tables=2, seed=1, max_bucket=100
-    ).toPandas()
+    monkeypatch.setattr(dedup, "EMB_MAX_BUCKET", 100)
+    capped = dedup.embedding_near_dups(df).toPandas()
     # the 270 identical vectors would alone emit 36315 pairs; capped plan
     # must not emit any of them (their buckets exceed the cap)
     ident = [
@@ -316,7 +296,7 @@ def test_connected_components_long_chain_converges(spark):
 
     edges = [(f"{i:04d}", f"{i+1:04d}") for i in range(199)]
     df = spark.createDataFrame(edges, "doc_a string, doc_b string")
-    out = connected_components(df, max_iter=12).toPandas()
+    out = connected_components(df).toPandas()
     assert (out.comp == "0000").all() and len(out) == 200
 
 
@@ -453,8 +433,7 @@ def test_duplicated_spans_merge_and_stats(spark):
         (4, boiler, "en", "t"),  # doc IS the boilerplate
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string, lang string, source string")
-    w = 10
-    spans = duplicated_spans(docs, w=w).toPandas()
+    spans = duplicated_spans(docs).toPandas()
     by_doc = {d: sorted(zip(g.span_start, g.span_end)) for d, g in spans.groupby("doc_id")}
     # every w-window of the 33-char boilerplate repeats -> ONE merged span
     # of exactly the boilerplate extent in each containing doc
@@ -463,7 +442,7 @@ def test_duplicated_spans_merge_and_stats(spark):
     assert by_doc["4"] == [(0, 33)]
     assert "3" not in by_doc
 
-    stats = substring_dedup_stats(docs, w=w).toPandas().set_index("doc_id")
+    stats = substring_dedup_stats(docs).toPandas().set_index("doc_id")
     assert len(stats) == 4  # span-free docs present with zeros
     assert stats.loc["3", "n_spans"] == 0 and stats.loc["3", "dup_tokens"] == 0
     assert stats.loc["4", "dup_tokens"] == 33 and stats.loc["4", "dup_frac"] == 1.0
@@ -483,7 +462,7 @@ def test_apply_substring_dedup_mask(spark):
         (4, "no duplicated content in here at all ok", "en", "t"),  # untouched
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string, lang string, source string")
-    out = apply_substring_dedup(docs, w=10).toPandas().set_index("doc_id")
+    out = apply_substring_dedup(docs).toPandas().set_index("doc_id")
     assert out.loc["1", "clean_text"] == "headA1" + "2tailA"
     assert out.loc["2", "clean_text"] == "headB3" + "4tailB"
     assert out.loc["3", "clean_text"] == "" and out.loc["3", "clean_len"] == 0
@@ -512,14 +491,10 @@ def test_substring_dedup_hot_window_stays_linear(spark):
         for i in range(n)
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string, lang string, source string")
-    spans = duplicated_spans(docs, w=20)
-    pd_spans = spans.toPandas()
+    pd_spans = duplicated_spans(docs).toPandas()
     # exactly one merged span per boilerplate doc; linear, not quadratic
     assert len(pd_spans) == n // 2
     assert set(pd_spans.doc_id) == {str(i) for i in range(n // 2)}
-    # and the dup-window row count the join materializes is the occurrence
-    # count (d rows for a window shared d ways)
-    from crossai_ts_spark.operators.dedup import _h64  # noqa: F401  (hash idiom)
 
 
 def test_keepfirst_mega_boilerplate_no_per_hash_sort(spark):
@@ -543,7 +518,7 @@ def test_keepfirst_mega_boilerplate_no_per_hash_sort(spark):
     n = 300
     rows = [(i, gibberish(i)[:6] + boiler, "en", "t") for i in range(n)]
     docs = spark.createDataFrame(rows, "doc_id long, text string, lang string, source string")
-    spans = duplicated_spans(docs, w=25, keep_first=True)
+    spans = duplicated_spans(docs, keep_first=True)
     plan = spans._jdf.queryExecution().executedPlan().toString() if False else \
         spans._jdf.queryExecution().optimizedPlan().toString()
     assert "row_number" not in plan.lower(), "keep_first must not sort per hash"
@@ -555,28 +530,15 @@ def test_keepfirst_mega_boilerplate_no_per_hash_sort(spark):
     assert len(got) == n - 1  # one merged span per non-canonical doc
 
 
-def test_connected_components_check_every(spark):
-    """Probing convergence every k rounds must not change the fixpoint."""
-    from crossai_ts_spark.operators.dedup import connected_components
-
-    edges = [(f"{i:04d}", f"{i+1:04d}") for i in range(63)] + [("9000", "9001")]
-    df = spark.createDataFrame(edges, "doc_a string, doc_b string")
-    base = connected_components(df, check_every=1).toPandas().set_index("node").comp.to_dict()
-    for k in (2, 3):
-        got = connected_components(df, check_every=k).toPandas().set_index("node").comp.to_dict()
-        assert got == base
-    assert base["0063"] == "0000" and base["9001"] == "9000"
-
-
 def test_contamination_scores_semantics(spark):
     import hashlib
 
-    from crossai_ts_spark.operators.dedup import contamination_scores
+    from crossai_ts_spark.operators.dedup import SUBSTR_W, contamination_scores
 
     def gib(tag):
         return hashlib.md5(tag.encode()).hexdigest() + hashlib.md5((tag + "x").encode()).hexdigest()
 
-    leak = "BENCHMARK-ANSWER-STRING-42"  # 26 chars, >= w
+    leak = "BENCHMARK-ANSWER-STRING-42"  # 26 chars, >= SUBSTR_W
     ev = spark.createDataFrame(
         [(100, gib("e1")[:10] + leak, "en", "eval")],
         "doc_id long, text string, lang string, source string",
@@ -589,12 +551,12 @@ def test_contamination_scores_semantics(spark):
         ],
         "doc_id long, text string, lang string, source string",
     )
-    w = 20
-    out = contamination_scores(tr, ev, w=w).toPandas().set_index("doc_id")
+    w = SUBSTR_W
+    out = contamination_scores(tr, ev).toPandas().set_index("doc_id")
     assert len(out) == 3
     n1 = len(tr.collect()[0].text) - w + 1
     assert out.loc["1", "n_windows"] == n1
-    # contaminated windows = those fully inside the 26-char leak = 26-20+1
+    # contaminated windows = those fully inside the 26-char leak = 26-w+1
     assert out.loc["1", "n_contaminated"] == len(leak) - w + 1
     assert 0 < out.loc["1", "contam_frac"] < 1
     assert out.loc["2", "n_contaminated"] == 0 and out.loc["2", "contam_frac"] == 0.0
@@ -631,7 +593,7 @@ def test_bm25_scores_semantics(spark):
 
 
 def test_substring_dedup_keep_first(spark):
-    from crossai_ts_spark.operators.dedup import apply_substring_dedup, duplicated_spans
+    from crossai_ts_spark.operators.dedup import duplicated_spans
 
     boiler = "KEEP-ONE-COPY-OF-THIS-REGION-99"  # 31 chars
     rows = [
@@ -640,18 +602,13 @@ def test_substring_dedup_keep_first(spark):
         (3, "headC5" + boiler + "6tailC", "en", "t"),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string, lang string, source string")
-    w = 10
     # both-copies variant marks the region in all three docs
-    both = duplicated_spans(docs, w=w).toPandas()
+    both = duplicated_spans(docs).toPandas()
     assert set(both.doc_id) == {"1", "2", "3"}
     # keep-first exempts the canonical occurrence: doc "1" (smallest
     # (doc_id, off) per window hash) keeps its copy untouched
-    kf = duplicated_spans(docs, w=w, keep_first=True).toPandas()
+    kf = duplicated_spans(docs, keep_first=True).toPandas()
     assert set(kf.doc_id) == {"2", "3"}
-    out = apply_substring_dedup(docs, w=w, keep_first=True).toPandas().set_index("doc_id")
-    assert out.loc["1", "clean_text"] == rows[0][1]          # canonical survives
-    assert out.loc["2", "clean_text"] == "headB3" + "4tailB"
-    assert out.loc["3", "clean_text"] == "headC5" + "6tailC"
 
 
 def test_gopher_rules_semantics(spark):
@@ -675,19 +632,20 @@ def test_gopher_rules_semantics(spark):
 
 
 def test_sequence_packing_semantics(spark):
-    from crossai_ts_spark.operators.packing import pack_sequences
+    from crossai_ts_spark.operators.packing import PACK_SEQ_LEN, pack_sequences
 
+    u = PACK_SEQ_LEN // 64  # sizes below in 64ths of a pack
     rows = [
-        ("a01", "s1", 30), ("a02", "s1", 30), ("a03", "s1", 50),  # s1: 110 toks
-        ("b01", "s2", 64), ("b02", "s2", 64),                      # s2: exact fits
+        ("a01", "s1", 30 * u), ("a02", "s1", 30 * u), ("a03", "s1", 50 * u),  # s1: 110/64 packs
+        ("b01", "s2", 64 * u), ("b02", "s2", 64 * u),                          # s2: exact fits
     ]
     seqs = spark.createDataFrame(rows, "doc_id string, source string, n_tok long")
-    out = pack_sequences(seqs, seq_len=64).toPandas().set_index("doc_id")
-    # s1: a01 [0,30) pack0; a02 [30,60) pack0; a03 [60,110) straddles 0->1
+    out = pack_sequences(seqs).toPandas().set_index("doc_id")
+    # s1: a01 [0,30u) pack0; a02 [30u,60u) pack0; a03 [60u,110u) straddles 0->1
     assert out.loc["a01", "pack_id"] == 0 and out.loc["a01", "pack_off"] == 0
-    assert out.loc["a02", "pack_id"] == 0 and out.loc["a02", "pack_off"] == 30
+    assert out.loc["a02", "pack_id"] == 0 and out.loc["a02", "pack_off"] == 30 * u
     assert bool(out.loc["a02", "spans_packs"]) is False
-    assert out.loc["a03", "pack_id"] == 0 and out.loc["a03", "pack_off"] == 60
+    assert out.loc["a03", "pack_id"] == 0 and out.loc["a03", "pack_off"] == 60 * u
     assert bool(out.loc["a03", "spans_packs"]) is True and out.loc["a03", "n_packs_touched"] == 2
     # s2: exact boundary — b02 starts cleanly in pack 1, no straddle
     assert out.loc["b01", "pack_id"] == 0 and bool(out.loc["b01", "spans_packs"]) is False
@@ -697,13 +655,10 @@ def test_sequence_packing_semantics(spark):
     # per-pack inventory of s1's pack 0: docs starting there, their tokens,
     # boundary straddlers
     s1p0 = out[(out.source == "s1") & (out.pack_id == 0)]
-    assert len(s1p0) == 3 and s1p0.n_tok.sum() == 110 and s1p0.spans_packs.sum() == 1
+    assert len(s1p0) == 3 and s1p0.n_tok.sum() == 110 * u and s1p0.spans_packs.sum() == 1
 
     # shards are independent: repartitioning must not change the packing
-    out13 = (
-        pack_sequences(seqs.repartition(13), seq_len=64)
-        .toPandas().set_index("doc_id")
-    )
+    out13 = pack_sequences(seqs.repartition(13)).toPandas().set_index("doc_id")
     assert out13.sort_index().equals(out.sort_index())
 
 
@@ -725,19 +680,16 @@ def test_packing_two_phase_equals_global_and_bounds_hot_shard(spark):
     seqs = spark.createDataFrame(rows, "doc_id string, source string, n_tok long")
     cols = ["doc_id", "source", "n_tok", "cum_start", "pack_id", "pack_off",
             "spans_packs", "n_packs_touched"]
-    got = (
-        pack_sequences(seqs, seq_len=512, n_buckets=64)
-        .toPandas().sort_values("doc_id").reset_index(drop=True)[cols]
-    )
+    got = pack_sequences(seqs).toPandas().sort_values("doc_id").reset_index(drop=True)[cols]
     want = (
-        _pack_sequences_global(seqs, seq_len=512)
+        _pack_sequences_global(seqs)
         .toPandas().sort_values("doc_id").reset_index(drop=True)[cols]
     )
     assert got.equals(want)
 
     # hot-shard boundedness: no (shard, bucket) group — i.e. no single
     # window task input — holds more than a few range-partitions' worth
-    bk = _bucketed_cumsum(seqs, 64)
+    bk = _bucketed_cumsum(seqs)
     per = bk.groupBy("source", "_bucket").count().toPandas()
     hot = per[per.source == "hot"]
     assert len(hot) >= 16, f"hot shard landed in only {len(hot)} buckets"
@@ -796,33 +748,12 @@ def test_segment_dedup_semantics(spark):
         (4, "u1 u2 u3", "en", "t"),                    # single short segment
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string, lang string, source string")
-    got = segment_dedup(docs, seg_words=10).toPandas().set_index("doc_id")
+    got = segment_dedup(docs).toPandas().set_index("doc_id")
     assert got.loc["1", "n_segs"] == 2 and got.loc["1", "n_dup_segs"] == 1
     assert got.loc["2", "n_segs"] == 2 and got.loc["2", "n_dup_segs"] == 1
     assert got.loc["1", "dup_seg_frac"] == 0.5
     assert got.loc["3", "n_dup_segs"] == 0
     assert got.loc["4", "n_segs"] == 1 and got.loc["4", "n_dup_segs"] == 0
-
-
-def test_segment_dedup_metachar_separators(spark):
-    """sep is a LITERAL separator (r6 fix): regex metachars ('.', '|', '+')
-    and quotes must neither break parsing nor silently mis-split — '|'
-    as a regex would split between EVERY character."""
-    from crossai_ts_spark.operators.dedup import segment_dedup
-
-    for sep in (".", "|", "+", "'", "\n"):
-        rows = [
-            (1, sep.join(["w1", "w2", "w3", "w4"]), "en", "t"),
-            (2, sep.join(["w1", "w2", "z3", "z4"]), "en", "t"),  # shares seg 1
-            (3, sep.join(["q1", "q2", "q3", "q4"]), "en", "t"),
-        ]
-        docs = spark.createDataFrame(
-            rows, "doc_id long, text string, lang string, source string"
-        )
-        got = segment_dedup(docs, seg_words=2, sep=sep).toPandas().set_index("doc_id")
-        assert got.loc["1", "n_segs"] == 2, f"sep={sep!r} mis-split"
-        assert got.loc["1", "n_dup_segs"] == 1, f"sep={sep!r} dup not found"
-        assert got.loc["3", "n_dup_segs"] == 0, f"sep={sep!r} false dup"
 
 
 def test_ngram_topk_counts_and_tiebreak(spark):
@@ -834,10 +765,10 @@ def test_ngram_topk_counts_and_tiebreak(spark):
         (3, "q", "en", "t"),           # shorter than n: contributes nothing
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string, lang string, source string")
-    got = ngram_topk(docs, k=3).toPandas()
-    assert list(got.ngram) == ["a b", "b a", "b c"]  # 3 then ties text-asc
-    assert list(got.cnt) == [3, 1, 1]
-    assert list(got["rank"]) == [1, 2, 3]
+    got = ngram_topk(docs).toPandas()
+    assert list(got.ngram) == ["a b", "b a", "b c", "b z", "z z"]  # 3 then ties text-asc
+    assert list(got.cnt) == [3, 1, 1, 1, 1]
+    assert list(got["rank"]) == [1, 2, 3, 4, 5]
 
 
 def test_centroid_distances_exact_vs_numpy(spark):
@@ -872,36 +803,36 @@ def test_centroid_distances_exact_vs_numpy(spark):
 
 
 def test_cms_one_sided_and_merge(spark):
-    """CMS cells are bounded (<= d*w rows, every cell in [0, w)) and sum
-    to d*n_items, estimates are >= exact counts always (one-sided error),
+    """CMS cells are bounded (<= CMS_D*CMS_W rows, every cell in [0, CMS_W))
+    and sum to CMS_D*n_items, estimates are >= exact counts always (one-sided error),
     exact for keys with no cell collisions at small load, and the sketch
     merges by elementwise addition (sum of two halves' sketches ==
     whole-stream sketch, bitwise)."""
     import pandas as pd
 
-    from crossai_ts_spark.operators.cms import cms_build, cms_lookup
+    from crossai_ts_spark.operators.cms import CMS_D, CMS_W, cms_build, cms_lookup
 
     rows = [(i, f"k{i % 37}") for i in range(1000)]
     items = spark.createDataFrame(rows, "i long, ngram string")
-    sk = cms_build(items, "ngram", d=4, w=512)
+    sk = cms_build(items, "ngram")
     spdf = sk.toPandas()
-    assert len(spdf) <= 4 * 512
-    assert spdf.cnt.sum() == 4 * 1000  # every item hit d cells
-    assert spdf.cell.between(0, 511).all()
+    assert len(spdf) <= CMS_D * CMS_W
+    assert spdf.cnt.sum() == CMS_D * 1000  # every item hit CMS_D cells
+    assert spdf.cell.between(0, CMS_W - 1).all()
     queries = items.select("ngram").distinct()
-    est = cms_lookup(sk, queries, "ngram", d=4, w=512).toPandas().set_index("ngram")
+    est = cms_lookup(sk, queries, "ngram").toPandas().set_index("ngram")
     exact = items.groupBy("ngram").count().toPandas().set_index("ngram")
     for k in exact.index:
         assert est.loc[k, "est"] >= exact.loc[k, "count"]
     # absent key estimates >= 0 (and usually 0 at this load)
     absent = cms_lookup(
-        sk, spark.createDataFrame([("zebra quux",)], "ngram string"), "ngram", d=4, w=512
+        sk, spark.createDataFrame([("zebra quux",)], "ngram string"), "ngram"
     ).toPandas()
     assert absent.est.iloc[0] >= 0
 
     # mergeability: sketch(first half) + sketch(second half) == sketch(all)
-    h1 = cms_build(items.filter("i < 500"), "ngram", d=4, w=512)
-    h2 = cms_build(items.filter("i >= 500"), "ngram", d=4, w=512)
+    h1 = cms_build(items.filter("i < 500"), "ngram")
+    h2 = cms_build(items.filter("i >= 500"), "ngram")
     merged = (
         h1.unionByName(h2).groupBy("row", "cell").agg(F.sum("cnt").alias("cnt"))
         .toPandas().sort_values(["row", "cell"]).reset_index(drop=True)

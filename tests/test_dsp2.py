@@ -41,7 +41,7 @@ def test_hpss_masks_sum_to_signal():
     H + P == S."""
     rng = np.random.default_rng(2)
     S = np.abs(rng.normal(size=(33, 40))) + 0.1
-    H, P = hpss(S, kernel_size=5)
+    H, P = hpss(S)
     np.testing.assert_allclose(H + P, S, rtol=1e-9)
 
 

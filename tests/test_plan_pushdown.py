@@ -48,7 +48,7 @@ def test_substring_dedup_plan_prunes_and_never_pairs(spark):
     from crossai_ts_spark.operators.dedup import substring_dedup_stats
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    plan = _plan(substring_dedup_stats(docs, w=25))
+    plan = _plan(substring_dedup_stats(docs))
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan, plan
     for rs in [seg.splitlines()[0] for seg in plan.split("ReadSchema:")[1:]]:
         assert "lang" not in rs and "n_chars" not in rs, rs
@@ -115,7 +115,7 @@ def test_bucketed_tables_join_without_exchange(spark, tmp_path):
 
 def test_cms_plan_map_side_combines_and_broadcasts_lookup(spark):
     """The sketch family's scale contract AS A PLAN: cms_build's shuffle
-    input is the partial aggregate (<= d*w cells per task, map-side
+    input is the partial aggregate (<= CMS_D*CMS_W cells per task, map-side
     combined before the exchange), and cms_lookup broadcasts the sketch
     side — the n-gram universe never shuffles for an estimate."""
     from crossai_ts_spark.operators.cms import cms_build, cms_lookup
@@ -124,15 +124,15 @@ def test_cms_plan_map_side_combines_and_broadcasts_lookup(spark):
         spark.read.parquet(f"{SF}/documents.parquet")
         .selectExpr("explode(split(text, ' ')) as k")
     )
-    sk = cms_build(items, key="k", d=4, w=1024)
+    sk = cms_build(items, key="k")
     plan = _plan(sk)
-    # partial_count before the exchange = map-side combine onto <= d*w cells
+    # partial_count before the exchange = map-side combine onto <= CMS_D*CMS_W cells
     pre, post = plan.split("Exchange hashpartitioning", 1)
     assert "partial_count" in post, plan  # upstream (printed below exchange)
     assert "HashAggregate" in pre, plan
 
     queries = items.limit(50).distinct()
-    est = cms_lookup(sk, queries, key="k", d=4, w=1024)
+    est = cms_lookup(sk, queries, key="k")
     lplan = _plan(est)
     assert "BroadcastHashJoin" in lplan, lplan
     assert "CartesianProduct" not in lplan and "BroadcastNestedLoopJoin" not in lplan
@@ -148,7 +148,7 @@ def test_hll_plan_map_side_combines_registers(spark):
     ev = spark.read.parquet(f"{SF}/events.parquet").select(
         F.col("ts").cast("timestamp").alias("ts"), "user_id"
     )
-    plan = _plan(hll_sketch(ev, window_sec=3600))
+    plan = _plan(hll_sketch(ev))
     pre, post = plan.split("Exchange hashpartitioning", 1)
     assert "partial_max" in post, plan
 
@@ -171,7 +171,7 @@ def test_kmv_prefilter_caches_hashed_events_and_threshold(spark):
     ev = spark.read.parquet(f"{SF}/events.parquet").select(
         F.col("ts").cast("timestamp").alias("ts"), "user_id"
     )
-    km = kmv_sketch(ev, k=8, n_salts=4)
+    km = kmv_sketch(ev)
     try:
         plan = _plan(km)
         # both the candidate pass and the threshold joins read caches

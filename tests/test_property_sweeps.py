@@ -11,6 +11,7 @@ import numpy as np
 import pytest
 
 from crossai_ts_spark.datagen import gen_local
+from crossai_ts_spark.operators import rollup, salted
 from crossai_ts_spark.operators.rollup import cascade, rollup_histogram
 from crossai_ts_spark.operators.salted import salted_tier_source_rollup
 from crossai_ts_spark.oracle.rollup import cascade_oracle
@@ -54,7 +55,7 @@ def test_partition_strategy_matrix(spark, sweep_df, sweep_docs, parts, strategy)
     _cmp(got, exp)
 
 
-def test_n_tok_disagreeing_with_tokens_rolls_up_every_token(spark):
+def test_n_tok_disagreeing_with_tokens_rolls_up_every_token(spark, monkeypatch):
     """Rows datagen never makes: ``n_tok`` shorter or longer than the array,
     an empty array with ``n_tok > 0`` and a null array. The cascade and
     rollup_histogram roll up exactly the tokens present, whatever ``n_tok``
@@ -68,7 +69,8 @@ def test_n_tok_disagreeing_with_tokens_rolls_up_every_token(spark):
     exp = cascade_oracle(docs, w=2, fanout=2, tiers=2)
     _cmp(cascade(df, w=2, fanout=2, tiers=2).toPandas(), exp)
     _cmp(cascade(df, w=2, tiers=1).toPandas(), exp[exp.tier == 1])
-    hist = rollup_histogram(df, w=2).toPandas()
+    monkeypatch.setattr(rollup, "HIST_W", 2)
+    hist = rollup_histogram(df).toPandas()
     t1 = exp[exp.tier == 1]
     assert sorted(zip(hist.doc_id, hist.window_start, hist.total)) == sorted(
         zip(t1.doc_id, t1.window_start, t1.t_cnt))
@@ -85,15 +87,16 @@ def test_null_token_element_is_a_named_error(spark):
     with pytest.raises(Exception, match=named):
         cascade(df, w=2, fanout=2, tiers=2).collect()
     with pytest.raises(Exception, match=named):
-        rollup_histogram(df, w=2).collect()
+        rollup_histogram(df).collect()
 
 
 @pytest.mark.parametrize("salts", [1, 4, 64])
-def test_salt_count_sweep(spark, sweep_df, salts):
+def test_salt_count_sweep(spark, sweep_df, salts, monkeypatch):
     """Salted source rollup identical at any salt count."""
     t1 = cascade(sweep_df, w=32, fanout=4, tiers=1)
-    base = salted_tier_source_rollup(t1, n_salts=2).toPandas()
-    got = salted_tier_source_rollup(t1, n_salts=salts).toPandas()
+    base = salted_tier_source_rollup(t1).toPandas()
+    monkeypatch.setattr(salted, "SALTS", salts)
+    got = salted_tier_source_rollup(t1).toPandas()
     key = ["source", "tier", "window_start"]
     base = base.sort_values(key).reset_index(drop=True)
     got = got.sort_values(key).reset_index(drop=True)
@@ -110,7 +113,6 @@ def test_round2_queries_partition_invariant(spark):
     run inside this one test so the comparison always executes (a
     parametrized version with cross-case state silently skipped the
     compare under -k / xdist)."""
-    import pandas as pd
     from pyspark.sql import functions as F
 
     from crossai_ts_spark.functions.iir import butterworth_docs
@@ -192,7 +194,6 @@ def test_round6_sketches_partition_invariant(spark):
     HLL registers/estimate, the CMS cells, and the dyadic-alpha mixing
     weights all depend only on values and deterministic hashes, never on
     physical layout."""
-    import pandas as pd
     from pyspark.sql import functions as F
 
     from crossai_ts_spark.operators.cms import cms_build
@@ -206,7 +207,7 @@ def test_round6_sketches_partition_invariant(spark):
         ev = base.repartition(parts).select(
             "event_id", F.to_timestamp("ts_s").alias("ts"), "user_id"
         )
-        km = kmv_sketch(ev, k=8, n_salts=4).toPandas().sort_values("window_start")
+        km = kmv_sketch(ev).toPandas().sort_values("window_start")
         kv = [(int(w), tuple(ks), float(e)) for w, ks, e in
               zip(km.window_start, km.ks, km.n_distinct_est)]
         hl = (
@@ -216,7 +217,7 @@ def test_round6_sketches_partition_invariant(spark):
         hv = [(int(w), int(v), float(e)) for w, v, e in
               zip(hl.window_start, hl.v_empty, hl.est_distinct)]
         cm = (
-            cms_build(ev.select(F.col("user_id").alias("k")), key="k", d=4, w=256)
+            cms_build(ev.select(F.col("user_id").alias("k")), key="k")
             .toPandas().sort_values(["row", "cell"])
         )
         cv = list(map(tuple, cm.itertuples(index=False)))
@@ -234,7 +235,7 @@ def test_round6_sketches_partition_invariant(spark):
         assert a == b, f"{name} results depend on partitioning!"
 
 
-def test_kmv_prefilter_fallback_partition_invariant(spark):
+def test_kmv_prefilter_fallback_partition_invariant(spark, monkeypatch):
     """VERDICT r6 #8: the KMV exactness-fallback branch (hll.py) is the one
     path the round-6 invariance sweep never drove — force it with a
     too-deep threshold (candidate_factor < 1 keeps ~0.8 expected hashes
@@ -244,7 +245,7 @@ def test_kmv_prefilter_fallback_partition_invariant(spark):
     partitions."""
     from pyspark.sql import functions as F
 
-    from crossai_ts_spark.operators.hll import kmv_sketch
+    from crossai_ts_spark.operators import hll
     from crossai_ts_spark.oracle.plans import kmv_sketch_unfiltered
 
     rows = [(i, f"2024-01-01 0{i % 3}:10:2{i % 5}", i * 7 % 311) for i in range(1500)]
@@ -259,10 +260,11 @@ def test_kmv_prefilter_fallback_partition_invariant(spark):
     old = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "2")
-        want = as_rows(kmv_sketch_unfiltered(ev, k=8, n_salts=4))
+        want = as_rows(kmv_sketch_unfiltered(ev))
+        monkeypatch.setattr(hll, "KMV_CANDIDATE_FACTOR", 0.1)  # every window -> redo
         for parts in (2, 8, 32):
             spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-            got = as_rows(kmv_sketch(ev, k=8, n_salts=4, candidate_factor=0.1))  # every window -> redo
+            got = as_rows(hll.kmv_sketch(ev))
             assert got == want, f"fallback diverges at {parts} partitions"
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)

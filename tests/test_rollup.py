@@ -94,16 +94,16 @@ def test_boundary_docs(spark, tiny_df):
 def test_rollup_histogram_counts_and_median(spark):
     import numpy as np
 
-    from crossai_ts_spark.operators.rollup import rollup_histogram
+    from crossai_ts_spark.operators.rollup import HIST_NB, HIST_VMAX, HIST_W, rollup_histogram
 
+    w, nb, vmax = HIST_W, HIST_NB, HIST_VMAX
     rng = np.random.default_rng(9)
-    toks = rng.integers(0, 1104, size=100, dtype=np.int32)
+    toks = rng.integers(0, vmax + vmax // 4, size=100, dtype=np.int32)  # some clamp to the top bucket
     df = spark.createDataFrame(
         [("d0", [int(t) for t in toks], 100, "s")],
         "doc_id string, tokens array<int>, n_tok int, source string",
     )
-    w, nb, vmax = 32, 16, 1104
-    got = rollup_histogram(df, w=w, n_buckets=nb, vmax=vmax).toPandas().set_index("window_start")
+    got = rollup_histogram(df).toPandas().set_index("window_start")
     assert sorted(got.index) == [0, 32, 64, 96]
     for ws in (0, 32, 64, 96):
         seg = toks[ws : ws + w]
@@ -118,61 +118,62 @@ def test_rollup_histogram_counts_and_median(spark):
 
 
 def test_histogram_wide_equals_numpy(spark):
-    """Full frame equality of rollup_histogram at nb=17 and nb=64 against
-    an independent numpy recomputation, including ragged tails."""
+    """Full frame equality of rollup_histogram (every bucket column)
+    against an independent numpy recomputation, including ragged tails."""
     import numpy as np
     import pandas as pd
 
-    from crossai_ts_spark.operators.rollup import rollup_histogram
+    from crossai_ts_spark.operators.rollup import HIST_NB, HIST_VMAX, HIST_W, rollup_histogram
 
+    w, nb, vmax = HIST_W, HIST_NB, HIST_VMAX
     rng = np.random.default_rng(23)
     rows = []
     for i, n in enumerate([257, 64, 100, 31, 1]):
-        toks = rng.integers(0, 1104, size=n, dtype=np.int32)
+        toks = rng.integers(0, 2 * vmax, size=n, dtype=np.int32)
         rows.append((f"d{i}", [int(t) for t in toks], n, "s"))
     df = spark.createDataFrame(
         rows, "doc_id string, tokens array<int>, n_tok int, source string"
     )
-    w, vmax = 32, 1104
-    for nb in (17, 64):
-        cols = ["doc_id", "window_start"] + [f"b{b}" for b in range(nb)] + [
-            "total", "median_bucket"
-        ]
-        got = (
-            rollup_histogram(df, w=w, n_buckets=nb, vmax=vmax)
-            .toPandas()[cols]
-            .sort_values(["doc_id", "window_start"]).reset_index(drop=True)
-        )
-        # independent numpy recomputation, window by window
-        expect_rows = []
-        for doc_id, toks, n, _src in rows:
-            a = np.asarray(toks, dtype=np.int64)
-            for ws in range(0, n, w):
-                seg = a[ws : ws + w]
-                counts = np.bincount(
-                    np.minimum(seg * nb // vmax, nb - 1), minlength=nb
-                )
-                cum = np.cumsum(counts)
-                expect_rows.append(
-                    [doc_id, ws, *counts.tolist(), len(seg),
-                     int(np.argmax(cum * 2 >= len(seg)))]
-                )
-        expect = (
-            pd.DataFrame(expect_rows, columns=cols)
-            .sort_values(["doc_id", "window_start"]).reset_index(drop=True)
-        )
-        pd.testing.assert_frame_equal(got, expect, check_dtype=False)
+    cols = ["doc_id", "window_start"] + [f"b{b}" for b in range(nb)] + [
+        "total", "median_bucket"
+    ]
+    got = (
+        rollup_histogram(df)
+        .toPandas()[cols]
+        .sort_values(["doc_id", "window_start"]).reset_index(drop=True)
+    )
+    # independent numpy recomputation, window by window
+    expect_rows = []
+    for doc_id, toks, n, _src in rows:
+        a = np.asarray(toks, dtype=np.int64)
+        for ws in range(0, n, w):
+            seg = a[ws : ws + w]
+            counts = np.bincount(
+                np.minimum(seg * nb // vmax, nb - 1), minlength=nb
+            )
+            cum = np.cumsum(counts)
+            expect_rows.append(
+                [doc_id, ws, *counts.tolist(), len(seg),
+                 int(np.argmax(cum * 2 >= len(seg)))]
+            )
+    expect = (
+        pd.DataFrame(expect_rows, columns=cols)
+        .sort_values(["doc_id", "window_start"]).reset_index(drop=True)
+    )
+    pd.testing.assert_frame_equal(got, expect, check_dtype=False)
 
 
-def test_hll_merge_identity_and_accuracy(spark):
+def test_hll_merge_identity_and_accuracy(spark, monkeypatch):
     """Tier-2 sketches merged from tier-1 registers equal sketching the
     raw events at the coarse window directly (bitwise — the mergeability
     contract); the estimate lands within the ~13% standard error band of
     the true distinct count for a 500-distinct-key window."""
     import pandas as pd
 
+    from crossai_ts_spark.operators import hll
     from crossai_ts_spark.operators.hll import (
         M_REGS,
+        WINDOW_SEC,
         hll_estimate,
         hll_merge,
         hll_sketch,
@@ -187,9 +188,11 @@ def test_hll_merge_identity_and_accuracy(spark):
     ev = spark.createDataFrame(rows, "event_id long, ts_s string, user_id long").select(
         "event_id", F.to_timestamp("ts_s").alias("ts"), "user_id"
     )
-    t1 = hll_sketch(ev, window_sec=3600)
+    t1 = hll_sketch(ev)
     t2 = hll_merge(t1, fanout=4)
-    direct = hll_sketch(ev, window_sec=14400)
+    # the direct side sketches the raw events at the 4x window
+    monkeypatch.setattr(hll, "WINDOW_SEC", 4 * WINDOW_SEC)
+    direct = hll_sketch(ev)
     key = ["window_start", "reg"]
     a = t2.toPandas().sort_values(key).reset_index(drop=True)
     b = direct.toPandas().sort_values(key).reset_index(drop=True)
@@ -203,48 +206,50 @@ def test_hll_merge_identity_and_accuracy(spark):
     true = 500
     assert abs(w0.est_distinct - true) / true < 3 * 1.04 / (64 ** 0.5)
     # determinism: same input -> identical doubles
-    est2 = hll_estimate(hll_sketch(ev, window_sec=14400)).toPandas()
+    est2 = hll_estimate(hll_sketch(ev)).toPandas()
     assert sorted(est.est_distinct) == sorted(est2.est_distinct)
 
 
-def test_kmv_merge_identity_and_estimate(spark):
+def test_kmv_merge_identity_and_estimate(spark, monkeypatch):
     """Bottom-k of a union == bottom-k of concatenated per-part bottom-ks
     (bitwise — the mergeability rule); the sketch IS the k smallest
     distinct hashes; estimate lands within a loose band of truth."""
     from pyspark.sql import functions as F
 
-    from crossai_ts_spark.operators.hll import kmv_sketch
+    from crossai_ts_spark.operators import hll
+    from crossai_ts_spark.operators.hll import KMV_K, kmv_sketch
 
     rows = [(i, f"2024-01-01 00:{i % 50:02d}:00", i * 31 % 400) for i in range(3000)]
     ev = spark.createDataFrame(rows, "event_id long, ts_s string, user_id long").select(
         "event_id", F.to_timestamp("ts_s").alias("ts"), "user_id"
     )
-    whole = kmv_sketch(ev, k=8).toPandas().iloc[0]
+    whole = kmv_sketch(ev).toPandas().iloc[0]
 
-    # exactness of the sample: recompute the 8 smallest distinct hashes
+    # exactness of the sample: recompute the KMV_K smallest distinct hashes
     import hashlib
 
     hs = sorted({
         int(hashlib.md5(str(u).encode()).hexdigest()[:15], 16)
         for u in {r[2] for r in rows}
-    })[:8]
+    })[:KMV_K]
     assert list(whole.ks) == hs
 
     # merge rule: split events, take per-half bottom-k, merge, compare
-    h1 = kmv_sketch(ev.filter("event_id < 1500"), k=8).toPandas().iloc[0]
-    h2 = kmv_sketch(ev.filter("event_id >= 1500"), k=8).toPandas().iloc[0]
-    merged = sorted(set(list(h1.ks) + list(h2.ks)))[:8]
+    h1 = kmv_sketch(ev.filter("event_id < 1500")).toPandas().iloc[0]
+    h2 = kmv_sketch(ev.filter("event_id >= 1500")).toPandas().iloc[0]
+    merged = sorted(set(list(h1.ks) + list(h2.ks)))[:KMV_K]
     assert merged == list(whole.ks)
 
     true_distinct = len({r[2] for r in rows})
     # k=8 has ~1/sqrt(k-2) ~ 40% sigma: only assert the right magnitude,
     # then check real accuracy at k=64 (~13% sigma, 3-sigma band)
     assert 0.2 < whole.n_distinct_est / true_distinct < 4
-    wide = kmv_sketch(ev, k=64).toPandas().iloc[0]
+    monkeypatch.setattr(hll, "KMV_K", 64)
+    wide = kmv_sketch(ev).toPandas().iloc[0]
     assert abs(wide.n_distinct_est - true_distinct) / true_distinct < 0.4
 
 
-def test_kmv_prefilter_hot_window_boundedness(spark):
+def test_kmv_prefilter_hot_window_boundedness(spark, monkeypatch):
     """r6 scale fix (hll.py kmv_sketch): in a hot window (10^6 distinct
     keys) the HLL-derived candidate pre-filter bounds the rows entering
     any bottom-k aggregation buffer to O(candidate_factor * k) — not
@@ -253,19 +258,22 @@ def test_kmv_prefilter_hot_window_boundedness(spark):
     < 1) proves the exactness fallback recomputes cut-too-deep windows."""
     from pyspark.sql import functions as F
 
+    from crossai_ts_spark.operators import hll
     from crossai_ts_spark.operators.hll import (
+        KMV_CANDIDATE_FACTOR,
+        KMV_K,
         _kmv_hashed,
         _kmv_thresholds,
         kmv_sketch,
     )
     from crossai_ts_spark.oracle.plans import kmv_sketch_unfiltered
 
-    k, c = 8, 64
+    k, c = KMV_K, KMV_CANDIDATE_FACTOR
     ev = spark.range(1_000_000).select(
         F.lit("2024-01-01 00:00:00").cast("timestamp").alias("ts"),
         F.col("id").alias("user_id"),
     )
-    e = _kmv_hashed(ev, 3600)
+    e = _kmv_hashed(ev)
     thr = _kmv_thresholds(e, k, c)
     trow = thr.toPandas().iloc[0]
     assert bool(trow.filtered)  # 10^6 >> c*k: the filter must engage
@@ -274,8 +282,8 @@ def test_kmv_prefilter_hot_window_boundedness(spark):
     # the HLL estimate's error band, and never fewer than k
     assert k <= n_cand <= 8 * c * k
 
-    filtered = kmv_sketch(ev, k=k, n_salts=16).toPandas()
-    plain = kmv_sketch_unfiltered(ev, k=k, n_salts=16).toPandas()
+    filtered = kmv_sketch(ev).toPandas()
+    plain = kmv_sketch_unfiltered(ev).toPandas()
     assert list(filtered.iloc[0].ks) == list(plain.iloc[0].ks)
     assert filtered.iloc[0].n_distinct_est == plain.iloc[0].n_distinct_est
 
@@ -284,9 +292,8 @@ def test_kmv_prefilter_hot_window_boundedness(spark):
     thr_starved = _kmv_thresholds(e, k, 0.1)
     n_starved = e.join(F.broadcast(thr_starved), "window_start").filter("h < thr").count()
     assert n_starved < k
-    starved = kmv_sketch(
-        ev, k=k, n_salts=16, candidate_factor=0.1
-    ).toPandas()
+    monkeypatch.setattr(hll, "KMV_CANDIDATE_FACTOR", 0.1)
+    starved = kmv_sketch(ev).toPandas()
     assert list(starved.iloc[0].ks) == list(plain.iloc[0].ks)
 
 
@@ -338,6 +345,6 @@ def test_kmv_drops_null_key_and_ts_rows(spark):
             for w, ks, e in sk.toPandas().itertuples(index=False)
         ]
 
-    want = rows(kmv_sketch(clean, k=8))
+    want = rows(kmv_sketch(clean))
     assert len(want) == 1
-    assert rows(kmv_sketch(dirty, k=8)) == want
+    assert rows(kmv_sketch(dirty)) == want

@@ -348,13 +348,13 @@ def test_streaming_packing_matches_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(in_dir) + "/*")
     )
-    run_to_memory(streaming_packing(stream, seq_len=512), "pack_stream_out")
+    run_to_memory(streaming_packing(stream), "pack_stream_out")
     got = (
         spark.sql("SELECT * FROM pack_stream_out")
         .toPandas().sort_values("doc_id").reset_index(drop=True)
     )
     batch = (
-        pack_sequences(spark.createDataFrame(b0 + b1, schema), seq_len=512)
+        pack_sequences(spark.createDataFrame(b0 + b1, schema))
         .toPandas().sort_values("doc_id").reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(got[batch.columns], batch, check_dtype=False)
@@ -384,7 +384,7 @@ def test_streaming_packing_multi_chunk_trigger(spark, tmp_path):
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "16")
     try:
         stream = spark.readStream.schema(schema).parquet(str(in_dir) + "/*")
-        run_to_memory(streaming_packing(stream, seq_len=256), "pack_chunk_out")
+        run_to_memory(streaming_packing(stream), "pack_chunk_out")
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
     got = (
@@ -392,7 +392,7 @@ def test_streaming_packing_multi_chunk_trigger(spark, tmp_path):
         .toPandas().sort_values("doc_id").reset_index(drop=True)
     )
     batch = (
-        pack_sequences(spark.createDataFrame(rows, schema), seq_len=256)
+        pack_sequences(spark.createDataFrame(rows, schema))
         .toPandas().sort_values("doc_id").reset_index(drop=True)
     )
     assert len(got) == 200
@@ -441,19 +441,21 @@ def test_incremental_tier1_multi_arrow_chunk_trigger(spark, tmp_path):
     pd.testing.assert_frame_equal(got[cols], want[cols], check_dtype=False)
 
 
-def test_streaming_cms_matches_batch(spark, tmp_path):
+def test_streaming_cms_matches_batch(spark, tmp_path, monkeypatch):
     """Continuous count-min sketch: the batch ``cms_build`` run on a stream
     is the streaming aggregation, whose state is the sketch itself (<= d*w
-    cells, bounded by construction), and after consuming the whole bounded
+    cells, bounded by construction; a 64-cell row here), and after consuming the whole bounded
     stream the complete-mode sink equals cms_build over the same items
     cell-for-cell — so cms_lookup estimates carry the batch one-sided
     guarantee at any point in the stream."""
     import pandas as pd
 
-    from crossai_ts_spark.operators.cms import cms_build, cms_lookup
+    from crossai_ts_spark.operators import cms
+    from crossai_ts_spark.operators.cms import CMS_D, cms_build, cms_lookup
     from crossai_ts_spark.streaming.rollup_stream import run_to_memory
 
-    d, w = 4, 64
+    d, w = CMS_D, 64
+    monkeypatch.setattr(cms, "CMS_W", w)
     # zipf-ish repeats so several keys share cells (collisions exercised)
     rows = [(f"k{(i * i) % 37}",) for i in range(500)]
     in_dir = tmp_path / "cms_stream"
@@ -467,7 +469,7 @@ def test_streaming_cms_matches_batch(spark, tmp_path):
     raw = spark.readStream.schema("key string").option("maxFilesPerTrigger", 1).parquet(
         str(in_dir) + "/*"
     )
-    run_to_memory(cms_build(raw, key="key", d=d, w=w), "cms_stream_out",
+    run_to_memory(cms_build(raw, key="key"), "cms_stream_out",
                   output_mode="complete")
     got = (
         spark.sql("SELECT * FROM cms_stream_out").toPandas()
@@ -477,7 +479,7 @@ def test_streaming_cms_matches_batch(spark, tmp_path):
 
     batch = spark.createDataFrame(rows, "key string")
     want = (
-        cms_build(batch, key="key", d=d, w=w).toPandas()
+        cms_build(batch, key="key").toPandas()
         .sort_values(["row", "cell"]).reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
@@ -485,7 +487,7 @@ def test_streaming_cms_matches_batch(spark, tmp_path):
     # identical sketches => identical estimates; spot the guarantee too
     queries = spark.createDataFrame([(f"k{j}",) for j in range(37)], "key string")
     stream_sketch = spark.sql("SELECT * FROM cms_stream_out")
-    est = cms_lookup(stream_sketch, queries, key="key", d=d, w=w).toPandas()
+    est = cms_lookup(stream_sketch, queries, key="key").toPandas()
     truth = pd.DataFrame(rows, columns=["key"]).value_counts("key")
     for _, r in est.iterrows():
         assert r["est"] >= truth.get(r["key"], 0)  # one-sided: est >= truth
@@ -495,8 +497,6 @@ def test_streaming_kmv_matches_batch(spark, tmp_path):
     """GroupState KMV: k longs of state per window across triggers; the
     LAST emission per window (max n_events) equals the batch kmv_sketch
     BITWISE — same md5 hash projection, same IEEE estimator op order."""
-    import pandas as pd
-
     from crossai_ts_spark.operators.hll import kmv_sketch
     from crossai_ts_spark.streaming.rollup_stream import run_until_rows, streaming_kmv
 
@@ -527,7 +527,7 @@ def test_streaming_kmv_matches_batch(spark, tmp_path):
         "event_id", F.to_timestamp("ts_s").alias("ts"), "user_id"
     )
     want = (
-        kmv_sketch(batch_ev, k=8)
+        kmv_sketch(batch_ev)
         .toPandas().sort_values("window_start").reset_index(drop=True)
     )
     got = final.sort_values("window_start").reset_index(drop=True)
@@ -638,7 +638,7 @@ def test_streaming_hll_native_matches_batch_bitwise(spark, tmp_path):
         "event_id", F.to_timestamp("ts_s").alias("ts"), "user_id"
     )
     want = (
-        hll_sketch(batch_ev, window_sec=3600)
+        hll_sketch(batch_ev)
         .toPandas()
         .sort_values(["window_start", "reg"])
         .reset_index(drop=True)
@@ -651,7 +651,7 @@ def test_streaming_hll_native_matches_batch_bitwise(spark, tmp_path):
         .toPandas().sort_values("window_start").reset_index(drop=True)
     )
     est_batch = (
-        hll_estimate(hll_sketch(batch_ev, window_sec=3600))
+        hll_estimate(hll_sketch(batch_ev))
         .toPandas().sort_values("window_start").reset_index(drop=True)
     )
     assert list(est_stream["est_distinct"]) == list(est_batch["est_distinct"])
@@ -689,7 +689,7 @@ def test_streaming_hll_native_drops_null_key_and_ts_rows(spark, tmp_path):
     clean = spark.createDataFrame(rows, schema).select(
         "event_id", F.to_timestamp("ts_s").alias("ts"), "user_id"
     )
-    want = hll_sketch(clean, window_sec=3600).toPandas().sort_values(key).reset_index(drop=True)
+    want = hll_sketch(clean).toPandas().sort_values(key).reset_index(drop=True)
     pd.testing.assert_frame_equal(got, want[got.columns], check_dtype=False)
 
 
@@ -705,10 +705,7 @@ def test_streaming_hll_native_append_mode_emits_after_watermark(spark, tmp_path)
     import pandas as pd
 
     from crossai_ts_spark.operators.hll import hll_sketch
-    from crossai_ts_spark.streaming.rollup_stream import (
-        run_until_rows,
-        streaming_hll_native,
-    )
+    from crossai_ts_spark.streaming.rollup_stream import streaming_hll_native
 
     early = [(i, f"2024-01-01 0{i % 2}:1{i % 5}:2{i % 3}", i * 13 % 41) for i in range(200)]
     late = [(1000 + i, f"2024-01-01 06:1{i % 5}:2{i % 3}", i % 17) for i in range(50)]
@@ -753,7 +750,7 @@ def test_streaming_hll_native_append_mode_emits_after_watermark(spark, tmp_path)
         "event_id", F.to_timestamp("ts_s").alias("ts"), "user_id"
     )
     want = (
-        hll_sketch(batch_ev, window_sec=3600)
+        hll_sketch(batch_ev)
         .toPandas().sort_values(["window_start", "reg"]).reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(got[want.columns], want, check_dtype=False)

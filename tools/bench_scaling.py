@@ -142,6 +142,16 @@ class _StepChild:
             self.p.kill()
 
 
+def at_floor(earlier: list[tuple[float, float]], pair: tuple[float, float]) -> bool:
+    """A warm-up pair is at floor when each level's wall lies within 8%,
+    either way, of that level's minimum over the pairs BEFORE it. A pair
+    that sets a new minimum by more than 8% is still warming up, so falling
+    walls never read as converged; the first pair has nothing to compare."""
+    if not earlier:
+        return False
+    return all(abs(w - m) <= 0.08 * m for w, m in zip(pair, map(min, zip(*earlier))))
+
+
 def run_interleaved(low: int, high: int, path: str, pairs: int,
                     warmup_pairs: int = 4) -> tuple[dict, dict, list]:
     """``warmup_pairs`` unrecorded pairs run first: on this microVM a fresh
@@ -158,8 +168,8 @@ def run_interleaved(low: int, high: int, path: str, pairs: int,
     # walls 14.2 -> 10.0 across 8 trials on identical code and input), so a
     # fixed small warm-up lets shakeout leak into the measured pairs and
     # depress their efficiency. Keep running unrecorded pairs until BOTH
-    # levels' walls have converged to their running floor (within 8%) on
-    # two consecutive pairs, capped at 12 pairs.
+    # levels' walls have converged to the floor of the pairs before them
+    # (``at_floor``) on two consecutive pairs, capped at 12 pairs.
     def timed_pair() -> tuple[float, float]:
         # each trial is followed by a synchronous full GC in ITS OWN JVM
         # plus a short settle, so neither JVM's deferred garbage is
@@ -171,16 +181,16 @@ def run_interleaved(low: int, high: int, path: str, pairs: int,
         wh = hi_c.trial(); hi_c.gc(); time.sleep(1.5)
         return wl, wh
 
-    wl_min = wh_min = float("inf")
+    warm: list[tuple[float, float]] = []
     converged_streak = 0
     for i in range(12):
         wl, wh = timed_pair()
-        wl_min, wh_min = min(wl_min, wl), min(wh_min, wh)
-        at_floor = wl <= 1.08 * wl_min and wh <= 1.08 * wh_min
-        converged_streak = converged_streak + 1 if at_floor else 0
+        floor = at_floor(warm, (wl, wh))
+        warm.append((wl, wh))
+        converged_streak = converged_streak + 1 if floor else 0
         print(f"warmup pair {i + 1}: local[{low}] {wl:.2f}s "
               f"local[{high}] {wh:.2f}s eff {(wl / wh) / ratio:.3f} "
-              f"(excluded{', at floor' if at_floor else ''})", flush=True)
+              f"(excluded{', at floor' if floor else ''})", flush=True)
         if i + 1 >= warmup_pairs and converged_streak >= 2:
             break
     def load1() -> float:
