@@ -1,22 +1,42 @@
-"""Round-8 optimization harness (guide §1): per-query noop-sink timing +
-``explain("formatted")`` dumps, separate from the frozen ``bench.py``.
+"""Per-query noop-sink timing + ``explain("formatted")`` dumps, separate
+from the frozen ``bench.py``.
 
 Usage:
   python bench_extra.py q1 q2 ...          # time named queries (min of N)
-  python bench_extra.py --plans q1 q2 ...  # also dump plans/r08/<q>_<tag>.txt
+  python bench_extra.py --plans q1 q2 ...  # also dump plans/<PLAN_TAG>/<q>.txt
   PLAN_TAG=before|after  BENCH_TRIALS=3  SPARK_GRAFT_SF_DIR=...
+
+Dumped plans have expression ids, plan ids, RDD ids, file paths and UUIDs
+replaced by placeholders, so two checkouts' plans compare with
+``diff -r plans/before plans/after``.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from crossai_ts_spark.session import get_spark
+
+# what differs between two runs of one plan: (pattern, placeholder)
+PLAN_VOLATILE = [
+    (re.compile(r"#\d+"), "#N"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+    (re.compile(r"file:[^\s,\])]+"), "file:PATH"),
+    (re.compile(r"[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}"), "UUID"),
+]
+
+
+def normalise_plan(text: str) -> str:
+    for pattern, placeholder in PLAN_VOLATILE:
+        text = pattern.sub(placeholder, text)
+    return text
 
 
 def main() -> int:
@@ -39,7 +59,7 @@ def main() -> int:
     from crossai_ts_spark.caching import release_tracked
 
     out: dict[str, dict] = {}
-    plan_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans", "r08")
+    plan_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans", tag)
     for name in names:
         if name not in qs:
             print(f"[bench_extra] unknown query {name}", file=sys.stderr)
@@ -47,9 +67,9 @@ def main() -> int:
         if dump_plans:
             os.makedirs(plan_dir, exist_ok=True)
             df = qs[name](spark, sf_dir)
-            with open(os.path.join(plan_dir, f"{name}_{tag}.txt"), "w") as f:
-                f.write(df._sc._jvm.PythonSQLUtils.explainString(
-                    df._jdf.queryExecution(), "formatted"))
+            with open(os.path.join(plan_dir, f"{name}.txt"), "w") as f:
+                f.write(normalise_plan(df._sc._jvm.PythonSQLUtils.explainString(
+                    df._jdf.queryExecution(), "formatted")))
             release_tracked()
         trials = []
         for _ in range(n_trials):

@@ -32,7 +32,9 @@ from .operators.dedup import (
     lsh_candidate_pairs, minhash_signatures, ngram_jaccard_pairs, segment_dedup, shingles,
     simhash_signatures, substring_dedup_stats,
 )
-from .operators.hll import KMV_K, WINDOW_SEC, hll_rollup, kmv_sketch
+from .operators.hll import (
+    HLL_T2_FANOUT, KMV_K, M_REGS, WINDOW_SEC, _ALPHA, _MAX_RANK, hll_rollup, kmv_sketch,
+)
 from .operators.packing import PACK_SEQ_LEN, pack_sequences
 from .operators.rollup import HIST_NB, HIST_VMAX, HIST_W, cascade, rollup_histogram
 from .operators.salted import salted_tier_source_rollup
@@ -4863,15 +4865,15 @@ WITH e AS (
          ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT AS h
   FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
 ), r AS (
-  SELECT window_start, h % 64 AS reg, h // 64 AS p FROM e
+  SELECT window_start, h % {M_REGS} AS reg, h // {M_REGS} AS p FROM e
 ), rk AS (
   SELECT window_start, reg,
-         CASE WHEN p = 0 THEN 55 ELSE length(bin(p & -p)) END AS rank
+         CASE WHEN p = 0 THEN {_MAX_RANK} ELSE length(bin(p & -p)) END AS rank
   FROM r
 ), s1 AS (
   SELECT window_start, reg, MAX(rank)::BIGINT AS M FROM rk GROUP BY window_start, reg
 ), s2 AS (
-  SELECT (window_start // {4 * WINDOW_SEC}) * {4 * WINDOW_SEC} AS window_start, reg, MAX(M) AS M
+  SELECT (window_start // {HLL_T2_FANOUT * WINDOW_SEC}) * {HLL_T2_FANOUT * WINDOW_SEC} AS window_start, reg, MAX(M) AS M
   FROM s1 GROUP BY 1, reg
 ), u AS (
   SELECT 1 AS tier, * FROM s1 UNION ALL SELECT 2 AS tier, * FROM s2
@@ -4880,11 +4882,11 @@ WITH e AS (
   FROM u GROUP BY tier, window_start
 )
 SELECT tier::INT AS tier, window_start,
-       (64 - np)::BIGINT AS v_empty,
-       (CAST('0.709' AS DOUBLE) * CAST(4096 AS DOUBLE)) /
+       ({M_REGS} - np)::BIGINT AS v_empty,
+       (CAST('{_ALPHA}' AS DOUBLE) * CAST({M_REGS * M_REGS} AS DOUBLE)) /
        (list_reduce(list_prepend(0.0::DOUBLE,
           list_transform(ms, x -> 1.0::DOUBLE / ((1::BIGINT << x)::DOUBLE))),
-          (acc, v) -> acc + v) + (64 - np)::DOUBLE) AS est_distinct
+          (acc, v) -> acc + v) + ({M_REGS} - np)::DOUBLE) AS est_distinct
 FROM est
 """
 

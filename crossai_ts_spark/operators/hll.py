@@ -25,8 +25,10 @@ from pyspark.sql import functions as F
 M_REGS = 64  # 2^6 registers; standard error 1.04/sqrt(64) ~ 13%
 _MAX_RANK = 55  # payload is 60 - 6 = 54 bits; all-zero payload -> 55
 _ALPHA = "0.709"  # alpha_64 (Flajolet et al. 2007, m = 64)
-# tier-1 window of every sketch, in seconds; the DuckDB oracles use it too
+# tier-1 window of every sketch, in seconds, and tier-1 windows per tier-2
+# window of hll_rollup; the DuckDB oracles use both too
 WINDOW_SEC = 3600
+HLL_T2_FANOUT = 4
 # kmv_sketch: distinct hashes kept per window, salt shards of the bottom-k,
 # and candidates kept per kept hash by the HLL threshold pass
 KMV_K, KMV_SALTS, KMV_CANDIDATE_FACTOR = 8, 16, 64.0
@@ -71,12 +73,12 @@ def _reg_rank_fold(e: DataFrame, *group_cols: str) -> DataFrame:
     )
 
 
-def hll_merge(sketch: DataFrame, fanout: int) -> DataFrame:
-    """Tier k+1 sketches from tier-1 (WINDOW_SEC) sketches: elementwise
-    register MAX per parent window — the exact re-aggregation identity
-    (equals sketching the raw events at the coarser window directly;
-    tested bitwise)."""
-    parent = WINDOW_SEC * fanout
+def hll_merge(sketch: DataFrame) -> DataFrame:
+    """Tier-2 sketches from tier-1 (WINDOW_SEC) sketches: elementwise
+    register MAX per HLL_T2_FANOUT-hour parent window — the exact
+    re-aggregation identity (equals sketching the raw events at the coarser
+    window directly; tested bitwise)."""
+    parent = WINDOW_SEC * HLL_T2_FANOUT
     ws = F.expr(f"window_start div {parent} * {parent}").alias("window_start")
     return sketch.groupBy(ws, "reg").agg(F.max("M").alias("M"))
 
@@ -108,11 +110,11 @@ def hll_estimate(sketch: DataFrame) -> DataFrame:
 
 
 def hll_rollup(events: DataFrame) -> DataFrame:
-    """Two-tier distinct-user rollup: tier 1 hourly, tier 2 (4 hours)
-    merged from tier 1 registers (never from raw events). Output:
+    """Two-tier distinct-user rollup: tier 1 hourly, tier 2 (HLL_T2_FANOUT
+    hours) merged from tier 1 registers (never from raw events). Output:
     (tier, window_start, v_empty, est_distinct)."""
     t1 = hll_sketch(events)
-    t2 = hll_merge(t1, 4)
+    t2 = hll_merge(t1)
     e1 = hll_estimate(t1).select(F.lit(1).cast("int").alias("tier"), "*")
     e2 = hll_estimate(t2).select(F.lit(2).cast("int").alias("tier"), "*")
     return e1.unionByName(e2)

@@ -16,6 +16,12 @@ Scale design (the part that matters at 10^12 sequences / 100 TB):
   relational groupBy re-aggregation of a stored tier is a test reference
   in ``oracle/rollup.py``. ``operators/salted.py`` holds the salted
   two-phase rollup for skewed global keys.
+* One tumbling-window layout, :func:`_window_layout`, serves every
+  kernel: :func:`tumbling_rollup` (cascade's tier 1, and the streaming
+  ``incremental_tier1`` on each trigger's full windows), cascade's tier
+  merges, and :func:`rollup_histogram`'s window ids. Each kernel makes one
+  pass per Arrow batch (per trigger and doc when streaming), never a
+  Python loop over windows or docs.
 
 Exactness: int64 sums of int32 tokens; mean = one float64 division
 t_sum/t_cnt ⇒ bitwise-stable under any partitioning or tier path
@@ -47,18 +53,58 @@ NONEMPTY = "size(tokens) > 0"
 HIST_W, HIST_NB, HIST_VMAX = 32, 16, 128
 
 
-def _reject_null_elements(flat: np.ndarray, doc_base: np.ndarray, doc_ids) -> None:
-    """Raise if a token array holds a null element.
+def _flat_tokens(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """A batch's ``tokens`` arrays concatenated, with each row's first index
+    and length in the concatenation. No dtype cast.
 
     Arrow hands a batch whose list child has nulls to pandas as float64
     arrays with NaN for the nulls; an int cast would turn each NaN into a
-    silent wrong number. ``flat`` is the batch's arrays concatenated,
-    ``doc_base`` each doc's first index in it."""
+    silent wrong number, so a null element raises ``ValueError`` naming the
+    row's ``doc_id``."""
+    toks = pdf["tokens"].tolist()
+    doc_len = np.fromiter(map(len, toks), dtype=np.int64, count=len(toks))
+    flat = np.concatenate(toks)
+    doc_base = np.concatenate(([0], np.cumsum(doc_len)[:-1]))
     if flat.dtype.kind == "f":
         nan = np.flatnonzero(np.isnan(flat))
         if nan.size:
-            doc = doc_ids[np.searchsorted(doc_base, nan[0], side="right") - 1]
+            doc = pdf["doc_id"].iloc[np.searchsorted(doc_base, nan[0], side="right") - 1]
             raise ValueError(f"doc_id {doc!r}: tokens array holds a null element")
+    return flat, doc_base, doc_len
+
+
+def _window_layout(base: np.ndarray, length: np.ndarray, width: int):
+    """The tumbling windows of adjacent runs, ragged tail included.
+
+    Run i covers ``[base[i], base[i] + length[i])`` of one flat array;
+    returns its window count ``nw[i]`` and, per window (run-major), its
+    index within its run ``widx`` and its span ``[starts, ends)``."""
+    nw = -(-length // width)  # ceil
+    base1 = np.concatenate(([0], np.cumsum(nw)[:-1]))
+    widx = np.arange(int(nw.sum()), dtype=np.int64) - np.repeat(base1, nw)
+    starts = np.repeat(base, nw) + widx * width
+    ends = np.minimum(starts + width, np.repeat(base + length, nw))
+    return nw, widx, starts, ends
+
+
+def tumbling_rollup(flat: np.ndarray, doc_base: np.ndarray, doc_len: np.ndarray,
+                    w: int) -> tuple[np.ndarray, dict[str, np.ndarray]]:
+    """Tier-1 stats of EVERY doc in one reduceat sweep.
+
+    Docs are adjacent in ``flat``; each doc's windows tile it exactly, so
+    the per-window start indices over the concatenation are strictly
+    increasing and reduceat's left-fold segments match the per-doc kernel
+    bit-for-bit (same adds in the same order). Stats keep ``flat``'s dtype
+    (sums in int64). Returns (per-doc window counts, stat dict)."""
+    nw, widx, starts, ends = _window_layout(doc_base, doc_len, w)
+    return nw, {
+        "window_start": widx * w,
+        "t_min": np.minimum.reduceat(flat, starts),
+        "t_max": np.maximum.reduceat(flat, starts),
+        "t_sum": np.add.reduceat(flat.astype(np.int64), starts),
+        "t_cnt": ends - starts,
+        "t_last": flat[ends - 1],
+    }
 
 
 def cascade(
@@ -93,38 +139,11 @@ def cascade(
             raise ValueError(f"{name} must be >= 1, got {v}")
     widths = [tier_width(k, w, fanout) for k in range(1, tiers + 1)]
 
-    def batch_rollup(flat_i32, doc_base, doc_len, width):
-        """Tumbling rollup of EVERY doc in one reduceat sweep.
-
-        Docs are adjacent in ``flat_i32``; each doc's windows tile it
-        exactly, so the per-window start indices over the concatenation are
-        strictly increasing and reduceat's left-fold segments match the
-        per-doc kernel bit-for-bit (same adds in the same order). Every doc
-        is non-empty (:data:`NONEMPTY`). Returns (per-doc window counts,
-        stat dict)."""
-        nw = -(-doc_len // width)  # ceil
-        base1 = np.concatenate(([0], np.cumsum(nw)[:-1]))
-        widx = np.arange(int(nw.sum()), dtype=np.int64) - np.repeat(base1, nw)
-        starts = np.repeat(doc_base, nw) + widx * width
-        ends = np.minimum(starts + width, np.repeat(doc_base + doc_len, nw))
-        return nw, {
-            "window_start": widx * width,
-            "t_min": np.minimum.reduceat(flat_i32, starts),
-            "t_max": np.maximum.reduceat(flat_i32, starts),
-            "t_sum": np.add.reduceat(flat_i32.astype(np.int64), starts),
-            "t_cnt": ends - starts,
-            "t_last": flat_i32[ends - 1],
-        }
-
     def batch_merge(r, nw_prev, fo, width):
         """Tier k -> k+1 over the whole batch: reduceat on the concatenated
         tier-k window arrays with per-doc boundaries (min∘min, Σ∘Σ, ...)."""
-        nw = -(-nw_prev // fo)
         basep = np.concatenate(([0], np.cumsum(nw_prev)[:-1]))
-        base1 = np.concatenate(([0], np.cumsum(nw)[:-1]))
-        widx = np.arange(int(nw.sum()), dtype=np.int64) - np.repeat(base1, nw)
-        starts = np.repeat(basep, nw) + widx * fo
-        ends = np.minimum(starts + fo, np.repeat(basep + nw_prev, nw))
+        nw, widx, starts, ends = _window_layout(basep, nw_prev, fo)
         return nw, {
             "window_start": widx * width,
             "t_min": np.minimum.reduceat(r["t_min"], starts),
@@ -141,16 +160,12 @@ def cascade(
         for pdf in batches:
             if not len(pdf):
                 continue
-            toks = pdf["tokens"].tolist()
-            doc_len = np.array([a.size for a in toks], dtype=np.int64)
             doc_np = pdf["doc_id"].to_numpy()
             src_np = pdf["source"].to_numpy()
-            flat = np.concatenate(toks)
-            doc_base = np.concatenate(([0], np.cumsum(doc_len)[:-1]))
-            _reject_null_elements(flat, doc_base, doc_np)
+            flat, doc_base, doc_len = _flat_tokens(pdf)
             flat = flat.astype(np.int32, copy=False)
             acc: dict[str, list] = {c: [] for c in ["doc_id", "source", "tier", *cols]}
-            nw, r = batch_rollup(flat, doc_base, doc_len, widths[0])
+            nw, r = tumbling_rollup(flat, doc_base, doc_len, widths[0])
             for k in range(1, tiers + 1):
                 if k > 1:
                     nw, r = batch_merge(r, nw, fanout, widths[k - 1])
@@ -160,7 +175,6 @@ def cascade(
                 for c in cols:
                     acc[c].append(r[c])
             out = {c: np.concatenate(v) for c, v in acc.items()}
-            out["t_cnt"] = out["t_cnt"].astype(np.int64)
             out["t_mean"] = out["t_sum"] / out["t_cnt"]
             yield pd.DataFrame(out)
 
@@ -180,42 +194,35 @@ def rollup_histogram(df: DataFrame) -> DataFrame:
     median_bucket is the first bucket whose cumulative count reaches half
     the window total.
 
-    One np.bincount pass per doc (window*nb + bucket as the flat key) in
-    mapInPandas: per-token cost is O(1) whatever n_buckets is, where a
-    native higher-order-function fold pays O(n_buckets) interpreted lambda
-    work per token (measured ~4x wall between nb=16 and nb=64 on 515 M
-    tokens). Narrow, no shuffle: raw tokens never cross an exchange. A null
-    element inside an array raises ``ValueError`` naming the doc."""
+    One np.bincount pass per Arrow batch over global window id * n_buckets
+    + bucket, with the windows laid out as in :func:`cascade`: per-token
+    cost is O(1) whatever n_buckets is, where a native
+    higher-order-function fold pays O(n_buckets) interpreted lambda work
+    per token (measured ~4x wall between nb=16 and nb=64 on 515 M tokens).
+    Narrow, no shuffle: raw tokens never cross an exchange. A null element
+    inside an array raises ``ValueError`` naming the doc."""
     # the kernel runs in Python workers: it closes over these locals, read
     # while the plan is built, so a test may monkeypatch the constants
     w, n_buckets, vmax = HIST_W, HIST_NB, HIST_VMAX
 
     @worker_kernel
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bcols = [f"b{b}" for b in range(n_buckets)]
         for pdf in batches:
-            out: dict[str, list] = {c: [] for c in
-                                    ["doc_id", "window_start", *bcols, "total", "median_bucket"]}
-            for row in pdf.itertuples(index=False):
-                _reject_null_elements(row.tokens, np.zeros(1, dtype=np.int64), [row.doc_id])
-                toks = np.asarray(row.tokens, dtype=np.int64)
-                n = toks.size
-                if n == 0:
-                    continue
-                nw = -(-n // w)
-                bid = np.minimum(toks * n_buckets // vmax, n_buckets - 1)
-                flat = (np.arange(n) // w) * n_buckets + bid
-                counts = np.bincount(flat, minlength=nw * n_buckets).reshape(nw, n_buckets)
-                total = counts.sum(axis=1)
-                med = (np.cumsum(counts, axis=1) * 2 < total[:, None]).sum(axis=1)
-                out["doc_id"].append(np.repeat(row.doc_id, nw))
-                out["window_start"].append(np.arange(nw, dtype=np.int64) * w)
-                for b in range(n_buckets):
-                    out[bcols[b]].append(counts[:, b].astype(np.int64))
-                out["total"].append(total.astype(np.int64))
-                out["median_bucket"].append(med.astype(np.int64))
-            if out["doc_id"]:
-                yield pd.DataFrame({c: np.concatenate(v) for c, v in out.items()})
+            if not len(pdf):
+                continue
+            flat, doc_base, doc_len = _flat_tokens(pdf)
+            nw, widx, starts, ends = _window_layout(doc_base, doc_len, w)
+            gw = np.repeat(np.arange(widx.size), ends - starts)
+            bid = np.minimum(flat.astype(np.int64) * n_buckets // vmax, n_buckets - 1)
+            counts = np.bincount(gw * n_buckets + bid,
+                                 minlength=widx.size * n_buckets).reshape(-1, n_buckets)
+            total = counts.sum(axis=1)
+            out = {"doc_id": np.repeat(pdf["doc_id"].to_numpy(), nw),
+                   "window_start": widx * w}
+            out.update({f"b{b}": counts[:, b] for b in range(n_buckets)})
+            out["total"] = total
+            out["median_bucket"] = (np.cumsum(counts, axis=1) * 2 < total[:, None]).sum(axis=1)
+            yield pd.DataFrame(out)
 
     schema = "doc_id string, window_start long, " + ", ".join(
         f"b{b} long" for b in range(n_buckets)

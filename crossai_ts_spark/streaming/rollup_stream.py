@@ -8,8 +8,9 @@ continuously at the 10^12 design point:
     array arrives whole in one row: the batch ``rollup.cascade(stream,
     w=w, tiers=1)`` runs on the stream unchanged — no watermark/state, the
     same shuffle-free property as the batch path.
-  * docs arriving in chunks carry the open window across triggers in
-    GroupState (:func:`incremental_tier1`).
+  * docs arriving in chunks carry the open window's raw tokens (fewer
+    than ``w``) across triggers in GroupState and roll up each trigger's
+    full windows with the batch tier-1 kernel (:func:`incremental_tier1`).
   * the sketches (HLL registers, KMV), sessions, dedup and packing have
     one streaming path each; the batch ``cms_build`` runs on a stream
     unchanged (its groupBy sum is an incremental aggregation).
@@ -22,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.rollup import _reject_null_elements
+from ..operators.rollup import _flat_tokens, tumbling_rollup
 from ..schema import SEQUENCES_SCHEMA
 from ..workers import worker_kernel
 
@@ -55,7 +56,8 @@ def run_until_rows(df: DataFrame, name: str, n_rows: int, timeout_sec: float = 2
     scheduling (empty) micro-batches so timers can fire, which means
     ``processAllAvailable()`` never observes quiescence and blocks
     forever — the sink row count is the only sound completion signal for
-    a bounded test input. Returns the stopped query."""
+    a bounded test input. Returns the stopped query; its ``lastProgress``
+    covers the trigger that filled the sink."""
     import time
 
     spark = df.sparkSession
@@ -66,14 +68,23 @@ def run_until_rows(df: DataFrame, name: str, n_rows: int, timeout_sec: float = 2
         .start()
     )
     deadline = time.monotonic() + timeout_sec
+
+    def wait(what: str) -> None:
+        if time.monotonic() > deadline:
+            raise TimeoutError(f"{what} within {timeout_sec}s")
+        time.sleep(0.25)
+
+    def batch_id() -> int:
+        return (q.lastProgress or {}).get("batchId", -1)
+
     try:
         while spark.sql(f"SELECT count(*) c FROM {name}").first()["c"] < n_rows:
-            if time.monotonic() > deadline:
-                raise TimeoutError(
-                    f"memory sink {name} did not reach {n_rows} rows "
-                    f"within {timeout_sec}s"
-                )
-            time.sleep(0.25)
+            wait(f"memory sink {name} did not reach {n_rows} rows")
+        # a trigger reports its progress after its rows land in the sink:
+        # wait until the trigger that filled it has reported
+        seen = batch_id()
+        while q.status["isTriggerActive"] and batch_id() <= seen:
+            wait(f"query {name} did not report its progress")
     finally:
         q.stop()
     return q
@@ -85,27 +96,30 @@ def run_until_rows(df: DataFrame, name: str, n_rows: int, timeout_sec: float = 2
 def incremental_tier1(chunked: DataFrame, w: int,
                       state_ttl_sec: int | None = None) -> DataFrame:
     """Stateful streaming tier-1: token arrays arrive in per-doc CHUNKS
-    (doc_id, chunk_idx, tokens, is_last); GroupState carries the open
-    window's partial aggregates across triggers; completed windows emit
-    immediately, the ragged tail emits on is_last. Exactly the batch
-    rollup identities (min/max/sum/cnt/last/mean) — parity with
-    the batch oracle is asserted in tests.
+    (doc_id, chunk_idx, tokens, is_last); completed windows emit on
+    arrival, the ragged tail on is_last. Each trigger appends the doc's
+    chunks, sorted by chunk_idx, to the open window's tokens and rolls up
+    every full window with one :func:`~..operators.rollup.tumbling_rollup`
+    call — the batch cascade's tier-1 kernel, so the stats are exactly the
+    batch rollup's (min/max/sum/cnt/last/mean; parity-tested).
+
+    GroupState per doc is ``(tail_start, tail, source)``: the open window's
+    raw tokens (fewer than ``w``) and its offset in the doc. Checkpoints
+    written with an earlier state layout do not resume; none was deployed.
 
     Ordering contract: chunks of one doc must arrive in chunk_idx order
     across triggers (in production: per-key ordered source partitions,
     e.g. keyed Kafka). Within a trigger, rows are chunk_idx-sorted
     globally across however many Arrow batches deliver them.
 
-    State lifecycle (r6): by default completion is is_last-driven
-    (NoTimeout) — a producer that dies mid-doc would leak that doc's
-    partial state forever on an unbounded stream. Pass ``state_ttl_sec``
-    to bound it: a doc whose chunks stop arriving for that much
-    PROCESSING time has its open ragged tail FLUSHED (emitted exactly as
-    an is_last would have emitted it) and its state dropped, so the
-    abandoned-doc failure mode degrades to "tail window emitted at
-    timeout" instead of "state leak". Late chunks after expiry restart
-    the doc's offset cursor from 0 (their windows are distinguishable by
-    window_start collisions downstream).
+    State lifecycle: by default completion is is_last-driven (NoTimeout) —
+    a producer that dies mid-doc would leak that doc's open tail forever on
+    an unbounded stream. Pass ``state_ttl_sec`` to bound it: a doc whose
+    chunks stop arriving for that much PROCESSING time has its open tail
+    FLUSHED (emitted exactly as an is_last would have emitted it) and its
+    state dropped. Late chunks after expiry restart the doc's offset from 0
+    (their windows are distinguishable by window_start collisions
+    downstream).
 
     A null element inside a chunk's ``tokens`` raises ``ValueError``
     naming the doc, as in the batch ``cascade``."""
@@ -115,86 +129,39 @@ def incremental_tier1(chunked: DataFrame, w: int,
     @worker_kernel
     def fn(key, pdfs, state):
         (doc_id,) = key
-        # state: (next_off, mn, mx, sm, cnt, lst, source) — the open
-        # partial window spans [next_off - cnt, next_off); cnt == 0 means
-        # "no partial, resume at next_off" (a trigger that ended exactly on
-        # a window boundary must still advance the offset cursor)
-        if state.exists:
-            next_off, mn, mx, sm, cnt, lst, source = state.get
-        else:
-            next_off, mn, mx, sm, cnt, lst, source = 0, 0, 0, 0, 0, 0, None
-        out = []
-        done = False
-
-        def emit(ws_, mn_, mx_, sm_, cnt_, lst_):
-            out.append(
-                (doc_id, source, ws_, mn_, mx_, sm_, cnt_, lst_, sm_ / cnt_)
-            )
-
-        if state.hasTimedOut:
-            # producer went silent: flush the open tail like an is_last
-            if cnt > 0:
-                emit(next_off - cnt, mn, mx, sm, cnt, lst)
-            state.remove()
-            cols = ["doc_id", "source", "window_start", "t_min", "t_max",
-                    "t_sum", "t_cnt", "t_last", "t_mean"]
-            yield pd.DataFrame(out, columns=cols)
-            return
-
+        tail_start, tail, source = state.get if state.exists else (0, [], None)
+        buf = np.asarray(tail, dtype=np.int64)
+        flush = state.hasTimedOut
         # one trigger's group data may arrive as MULTIPLE Arrow chunks
         # (past maxRecordsPerBatch): materialize and sort chunk_idx
         # globally, not per-chunk — the same fix streaming_packing carries
         chunks = [p for p in pdfs if len(p)]
         if chunks:
             pdf = pd.concat(chunks, ignore_index=True).sort_values("chunk_idx")
-            for toks, is_last, src in zip(pdf["tokens"], pdf["is_last"], pdf["source"]):
-                source = src if source is None else source
-                _reject_null_elements(toks, np.zeros(1, dtype=np.int64), [doc_id])
-                arr = np.asarray(toks, dtype=np.int64)
-                if arr.size:
-                    offs = next_off + np.arange(arr.size)
-                    ids = offs // w
-                    brk = np.nonzero(np.diff(ids))[0] + 1
-                    bounds = np.concatenate(([0], brk, [arr.size]))
-                    for s_, e_ in zip(bounds[:-1], bounds[1:]):
-                        seg = arr[s_:e_]
-                        if cnt == 0:
-                            mn, mx, sm, lst = int(seg.min()), int(seg.max()), int(seg.sum()), int(seg[-1])
-                            cnt = int(seg.size)
-                        else:
-                            mn = min(mn, int(seg.min()))
-                            mx = max(mx, int(seg.max()))
-                            sm += int(seg.sum())
-                            cnt += int(seg.size)
-                            lst = int(seg[-1])
-                        next_off += int(seg.size)
-                        if cnt == w:
-                            emit(next_off - cnt, mn, mx, sm, cnt, lst)
-                            mn = mx = sm = cnt = lst = 0
-                if is_last:
-                    if cnt > 0:
-                        emit(next_off - cnt, mn, mx, sm, cnt, lst)
-                        mn = mx = sm = cnt = lst = 0
-                    done = True
-        if done:
+            buf = np.concatenate([buf, _flat_tokens(pdf)[0]]).astype(np.int64, copy=False)
+            if source is None:
+                source = next(iter(pdf["source"].dropna()), None)
+            flush = bool(pdf["is_last"].any())
+        n = buf.size if flush else buf.size // w * w
+        _, r = tumbling_rollup(buf[:n], np.zeros(1, dtype=np.int64), np.array([n]), w)
+        if flush:
             state.remove()
         else:
-            state.update((next_off, mn, mx, sm, cnt, lst, source))
+            state.update((tail_start + n, buf[n:].tolist(), source))
             if state_ttl_sec is not None:
                 state.setTimeoutDuration(state_ttl_sec * 1000)
-        cols = ["doc_id", "source", "window_start", "t_min", "t_max", "t_sum", "t_cnt", "t_last", "t_mean"]
-        yield pd.DataFrame(out, columns=cols)
+        r["window_start"] = r["window_start"] + tail_start
+        r["t_mean"] = r["t_sum"] / r["t_cnt"]
+        yield pd.DataFrame({"doc_id": doc_id, "source": source, **r})
 
     out_schema = (
         "doc_id string, source string, window_start long, t_min long, t_max long, "
         "t_sum long, t_cnt long, t_last long, t_mean double"
     )
-    state_schema = (
-        "next_off long, mn long, mx long, sm long, cnt long, lst long, source string"
-    )
     timeout = "NoTimeout" if state_ttl_sec is None else "ProcessingTimeTimeout"
     return chunked.groupBy("doc_id").applyInPandasWithState(
-        fn, out_schema, state_schema, "append", timeout
+        fn, out_schema, "tail_start long, tail array<long>, source string",
+        "append", timeout
     )
 
 

@@ -119,7 +119,9 @@ def test_rollup_histogram_counts_and_median(spark):
 
 def test_histogram_wide_equals_numpy(spark):
     """Full frame equality of rollup_histogram (every bucket column)
-    against an independent numpy recomputation, including ragged tails."""
+    against an independent numpy recomputation, including ragged tails,
+    with every doc in one Arrow batch (windows of adjacent docs share the
+    batch's window ids) and a 0-token doc (dropped)."""
     import numpy as np
     import pandas as pd
 
@@ -128,12 +130,12 @@ def test_histogram_wide_equals_numpy(spark):
     w, nb, vmax = HIST_W, HIST_NB, HIST_VMAX
     rng = np.random.default_rng(23)
     rows = []
-    for i, n in enumerate([257, 64, 100, 31, 1]):
+    for i, n in enumerate([257, 64, 100, 31, 1, 0]):
         toks = rng.integers(0, 2 * vmax, size=n, dtype=np.int32)
         rows.append((f"d{i}", [int(t) for t in toks], n, "s"))
     df = spark.createDataFrame(
         rows, "doc_id string, tokens array<int>, n_tok int, source string"
-    )
+    ).coalesce(1)
     cols = ["doc_id", "window_start"] + [f"b{b}" for b in range(nb)] + [
         "total", "median_bucket"
     ]
@@ -189,9 +191,12 @@ def test_hll_merge_identity_and_accuracy(spark, monkeypatch):
         "event_id", F.to_timestamp("ts_s").alias("ts"), "user_id"
     )
     t1 = hll_sketch(ev)
-    t2 = hll_merge(t1, fanout=4)
-    # the direct side sketches the raw events at the 4x window
-    monkeypatch.setattr(hll, "WINDOW_SEC", 4 * WINDOW_SEC)
+    # hll_merge reads the fanout while the plan is built: 8 hours here,
+    # against the 4 of hll_rollup
+    monkeypatch.setattr(hll, "HLL_T2_FANOUT", 8)
+    t2 = hll_merge(t1)
+    # the direct side sketches the raw events at the 8x window
+    monkeypatch.setattr(hll, "WINDOW_SEC", 8 * WINDOW_SEC)
     direct = hll_sketch(ev)
     key = ["window_start", "reg"]
     a = t2.toPandas().sort_values(key).reset_index(drop=True)

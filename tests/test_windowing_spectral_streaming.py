@@ -92,6 +92,8 @@ def test_incremental_tier1_stateful_matches_batch(spark, tmp_path):
     )
     q.processAllAvailable()
     q.stop()
+    # every doc finished: each removed its state
+    assert q.lastProgress["stateOperators"][0]["numRowsTotal"] == 0
     got = (
         spark.sql("SELECT doc_id, window_start, t_min, t_max, t_sum, t_cnt, t_last, t_mean FROM inc_tier1")
         .toPandas()
@@ -207,6 +209,15 @@ def test_incremental_tier1_restart_from_checkpoint(spark, tmp_path):
     q1 = start_query()
     q1.processAllAvailable()
     q1.stop()
+    # the state store holds one row per open doc: its open window's raw
+    # tokens, fewer than w
+    open_docs = {d for _, pdf in staged[:half] for d in pdf.doc_id} - {
+        d for _, pdf in staged[:half] for d in pdf[pdf.is_last].doc_id}
+    state = spark.read.format("statestore").load(ckpt).select(
+        "key.doc_id", "value.groupState.tail_start", "value.groupState.tail").toPandas()
+    assert open_docs and sorted(state.doc_id) == sorted(open_docs)
+    assert (state["tail"].map(len) < w).all()
+    assert (state.tail_start % w == 0).all()
 
     # phase 2: remaining files appear; NEW query, SAME checkpoint
     for name, pdf in staged[half:]:
@@ -576,10 +587,12 @@ def test_incremental_tier1_state_ttl_flushes_tail(spark, tmp_path):
     # expect: A -> 0,8,16 (3 windows, 16 is the is_last tail of size 4);
     # B -> window 0 (full, emitted on arrival) + window 8 tail of size 3
     # flushed by the 2s TTL => 5 rows total
-    run_until_rows(
+    q = run_until_rows(
         incremental_tier1(stream, w=w, state_ttl_sec=2), "inc_ttl_out", 5,
         timeout_sec=120.0,
     )
+    # A finished and B was flushed: neither left state behind
+    assert q.lastProgress["stateOperators"][0]["numRowsTotal"] == 0
     got = (
         spark.sql("SELECT * FROM inc_ttl_out").toPandas()
         .sort_values(["doc_id", "window_start"]).reset_index(drop=True)
