@@ -4,11 +4,12 @@ from the frozen ``bench.py``.
 Usage:
   python bench_extra.py q1 q2 ...          # time named queries (min of N)
   python bench_extra.py --plans q1 q2 ...  # also dump plans/<PLAN_TAG>/<q>.txt
+                                           # and each oracle_sql() text to <q>.sql
   PLAN_TAG=before|after  BENCH_TRIALS=3  SPARK_GRAFT_SF_DIR=...
 
 Dumped plans have expression ids, plan ids, RDD ids, file paths and UUIDs
-replaced by placeholders, so two checkouts' plans compare with
-``diff -r plans/before plans/after``.
+replaced by placeholders, so two checkouts' plans and DuckDB oracle texts
+compare with ``diff -r plans/before plans/after``.
 """
 
 from __future__ import annotations
@@ -50,6 +51,7 @@ def main() -> int:
     import __spark_entry__ as e
 
     qs = e.queries()
+    sqls = e.oracle_sql()
     names = args or list(qs)
     # warm-up (uncounted): JVM codegen + Arrow + python workers
     try:
@@ -71,6 +73,9 @@ def main() -> int:
                 f.write(normalise_plan(df._sc._jvm.PythonSQLUtils.explainString(
                     df._jdf.queryExecution(), "formatted")))
             release_tracked()
+            if name in sqls:
+                with open(os.path.join(plan_dir, f"{name}.sql"), "w") as f:
+                    f.write(sqls[name])
         trials = []
         for _ in range(n_trials):
             spark.sparkContext.setJobDescription(f"bench_extra: {name}")

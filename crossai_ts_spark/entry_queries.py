@@ -23,6 +23,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .functions.multichannel import NATIVE_SR, TARGET_SR, magnitude_signal, resample_2d, sma_signal
 from .functions.spectral_exact import dsp_exact_sql, mfcc_stats_sql, spectral_exact_sql
 from .operators.cms import CMS_D, CMS_W, cms_build, cms_lookup
 from .operators.dedup import (
@@ -43,8 +44,8 @@ from .operators.similarity import (
     _hyperplanes, centroid_distances, ivf_topk, lsh_topk,
 )
 from .operators.textstats import (
-    BM25_TERM_Q, LANG_MARKERS, NGRAM_TOPK, _words, bm25_scores, gopher_rules, lm_bigram_nll,
-    ngram_topk,
+    BM25_TERM_Q, BM25_TERMS, LANG_MARKERS, NGRAM_TOPK, _words, bm25_scores, gopher_rules,
+    lm_bigram_nll, ngram_topk,
 )
 from .sources.tokenize import tokenize_documents
 from .workers import worker_kernel
@@ -58,6 +59,16 @@ def q(name: str, sql: str | None):
         return fn
 
     return deco
+
+
+# DuckDB DOUBLE literals, each explicitly cast so the parsed value is the
+# exact float64 the Spark plan embeds (repr() is shortest-round-trip)
+def _dbl(v: float) -> str:
+    return f"'{float(v)!r}'::DOUBLE"
+
+
+def _dbl_list(vs) -> str:
+    return "[" + ", ".join(map(_dbl, vs)) + "]"
 
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -1971,13 +1982,6 @@ def mfcc_stats_q(spark, sf_dir):
 # G. Round-2 additions: LSH-oracle similarity, rank correlation
 # =====================================================================
 
-# DuckDB literal hyperplane list: each element explicitly cast to DOUBLE so
-# the parsed value is the exact float64 the Spark plan embeds (repr() is
-# shortest-round-trip)
-def _plane_sql(p) -> str:
-    return "[" + ", ".join(f"'{float(x)!r}'::DOUBLE" for x in p) + "]"
-
-
 def _bucket_sql(n_bits: int, seed: int) -> str:
     """DuckDB expression computing the SAME random-hyperplane LSH bucket as
     operators/similarity.lsh_bucket_col: identical literals, identical
@@ -1985,7 +1989,7 @@ def _bucket_sql(n_bits: int, seed: int) -> str:
     engines."""
     planes = _hyperplanes(EMB_DIM, n_bits, seed)
     bits = [
-        f"(CASE WHEN {SQL_DOT.format(a='embedding', b=_plane_sql(p))} > 0 THEN {1 << i} ELSE 0 END)"
+        f"(CASE WHEN {SQL_DOT.format(a='embedding', b=_dbl_list(p))} > 0 THEN {1 << i} ELSE 0 END)"
         for i, p in enumerate(planes)
     ]
     return "(" + " + ".join(bits) + ")::BIGINT"
@@ -2292,9 +2296,6 @@ def _sosfilt_chk_sql(sos) -> str:
     states per section + the checksum; coefficient literals are repr()'d
     float64 so both engines compute identical IEEE doubles."""
 
-    def lit(v: float) -> str:
-        return f"'{float(v)!r}'::DOUBLE"
-
     ns = len(sos)
     # accumulator is a LIST [z1_0, z2_0, z1_1, z2_1, ..., chk] (1-indexed):
     # DuckDB 1.0's list_reduce mutates a STRUCT accumulator field-by-field
@@ -2313,14 +2314,14 @@ def _sosfilt_chk_sql(sos) -> str:
     y = "e[1]"
     ys = []
     for s, (b0, b1, b2, _, a1, a2) in enumerate(sos):
-        y = f"({lit(b0)} * {y} + {z1(s)})"
+        y = f"({_dbl(b0)} * {y} + {z1(s)})"
         ys.append(y)
     slots = []
     yin = "e[1]"
     for s, (b0, b1, b2, _, a1, a2) in enumerate(sos):
         y_s = ys[s]
-        slots.append(f"{lit(b1)} * {yin} - {lit(a1)} * {y_s} + {z2(s)}")
-        slots.append(f"{lit(b2)} * {yin} - {lit(a2)} * {y_s}")
+        slots.append(f"{_dbl(b1)} * {yin} - {_dbl(a1)} * {y_s} + {z2(s)}")
+        slots.append(f"{_dbl(b2)} * {yin} - {_dbl(a2)} * {y_s}")
         yin = y_s
     slots.append(f"acc[{chk_slot}] + floor({ys[-1]} * 1024.0)")
     zero_list = ", ".join(["0.0::DOUBLE"] * chk_slot)
@@ -2671,22 +2672,19 @@ def _ep3_sosfilt_fold(sos, zi, src: str) -> str:
     pads the init so slicing is uniform... no — states occupy 1..4; outputs
     start at 5). Callers slice [5:]."""
 
-    def lit(v: float) -> str:
-        return f"'{float(v)!r}'::DOUBLE"
-
     (b0, b1, b2, _, a1, a2), (c0, c1, c2, _, d1, d2) = sos
     (z00, z01), (z10, z11) = zi
     e0 = f"({src})[1]"
-    init = ", ".join(f"{lit(z)} * {e0}" for z in (z00, z01, z10, z11))
-    Y0 = f"({lit(b0)} * e[1] + acc[1])"
-    Y1 = f"({lit(c0)} * {Y0} + acc[3])"
+    init = ", ".join(f"{_dbl(z)} * {e0}" for z in (z00, z01, z10, z11))
+    Y0 = f"({_dbl(b0)} * e[1] + acc[1])"
+    Y1 = f"({_dbl(c0)} * {Y0} + acc[3])"
     return (
         f"(list_reduce(list_prepend([{init}], "
         f"list_transform({src}, v -> [v::DOUBLE])), "
-        f"(acc, e) -> [{lit(b1)} * e[1] - {lit(a1)} * {Y0} + acc[2], "
-        f"{lit(b2)} * e[1] - {lit(a2)} * {Y0}, "
-        f"{lit(c1)} * {Y0} - {lit(d1)} * {Y1} + acc[4], "
-        f"{lit(c2)} * {Y0} - {lit(d2)} * {Y1}] "
+        f"(acc, e) -> [{_dbl(b1)} * e[1] - {_dbl(a1)} * {Y0} + acc[2], "
+        f"{_dbl(b2)} * e[1] - {_dbl(a2)} * {Y0}, "
+        f"{_dbl(c1)} * {Y0} - {_dbl(d1)} * {Y1} + acc[4], "
+        f"{_dbl(c2)} * {Y0} - {_dbl(d2)} * {Y1}] "
         f"|| acc[5:] || [{Y1}]))[5:]"
     )
 
@@ -2710,9 +2708,6 @@ def _ep3_oracle_sql() -> str:
     sos = butter_sos(*SMOOTH)
     assert sos.shape[0] == 2
     zi = sosfilt_zi(sos)
-
-    def lit(v: float) -> str:
-        return f"'{float(v)!r}'::DOUBLE"
 
     # spline system constants, replicating functions/spline.spline_slopes
     # with h_i = 64.0 (numpy ops on plain doubles -> identical IEEE values)
@@ -2753,23 +2748,23 @@ def _ep3_oracle_sql() -> str:
             f"MAX(CASE WHEN rn = {i} THEN errors END)::DOUBLE"
             f" / MAX(CASE WHEN rn = {i} THEN total END)::DOUBLE AS f{i}"
         )
-    sl = [f"(y{i + 1} - y{i}) / {lit(h[i - 1])} AS d{i}" for i in range(1, n)]
-    sl.append(f"({lit(A1)} * d1 + {lit(B1)} * d2) / {lit(C1)} AS b1")
+    sl = [f"(y{i + 1} - y{i}) / {_dbl(h[i - 1])} AS d{i}" for i in range(1, n)]
+    sl.append(f"({_dbl(A1)} * d1 + {_dbl(B1)} * d2) / {_dbl(C1)} AS b1")
     for r in range(2, n):
-        sl.append(f"3.0 * ({lit(h[r - 1])} * d{r - 1} + {lit(h[r - 2])} * d{r}) AS b{r}")
-    sl.append(f"({lit(Bn)} * d{n - 2} + {lit(An)} * d{n - 1}) / {lit(Cn)} AS b{n}")
-    sl.append(f"b1 / {lit(di[0])} AS bp1")
+        sl.append(f"3.0 * ({_dbl(h[r - 1])} * d{r - 1} + {_dbl(h[r - 2])} * d{r}) AS b{r}")
+    sl.append(f"({_dbl(Bn)} * d{n - 2} + {_dbl(An)} * d{n - 1}) / {_dbl(Cn)} AS b{n}")
+    sl.append(f"b1 / {_dbl(di[0])} AS bp1")
     for k in range(2, n + 1):
-        sl.append(f"(b{k} - {lit(lo[k - 1])} * bp{k - 1}) / {lit(den[k - 1])} AS bp{k}")
+        sl.append(f"(b{k} - {_dbl(lo[k - 1])} * bp{k - 1}) / {_dbl(den[k - 1])} AS bp{k}")
     sl.append(f"bp{n} AS m{n}")
     for k in range(n - 1, 0, -1):
-        sl.append(f"bp{k} - {lit(cp[k - 1])} * m{k + 1} AS m{k}")
+        sl.append(f"bp{k} - {_dbl(cp[k - 1])} * m{k + 1} AS m{k}")
 
     # knot x-positions: xk_i = (i-1)*STEP + STEP//2, exactly-representable
     xk = [float(i * STEP + STEP // 2) for i in range(n)]
     iv = (
         "CASE "
-        + " ".join(f"WHEN td < {lit(xk[j])} THEN {j}" for j in range(1, n - 1))
+        + " ".join(f"WHEN td < {_dbl(xk[j])} THEN {j}" for j in range(1, n - 1))
         + f" ELSE {n - 1} END"
     )
 
@@ -2780,8 +2775,8 @@ def _ep3_oracle_sql() -> str:
             + " END"
         )
 
-    xi = "CASE iv " + " ".join(f"WHEN {j} THEN {lit(xk[j - 1])}" for j in range(1, n)) + " END"
-    hl = lit(64.0)
+    xi = "CASE iv " + " ".join(f"WHEN {j} THEN {_dbl(xk[j - 1])}" for j in range(1, n)) + " END"
+    hl = _dbl(64.0)
     n_samp = n * STEP  # 1024
     padlen = 15
     ext_len = n_samp + 2 * padlen
@@ -2838,7 +2833,7 @@ def _ep3_oracle_sql() -> str:
 ), sm AS (
   SELECT user_id, (list_reverse({bwd}))[{padlen + 1}:{ext_len - padlen}] AS smooth FROM fw
 ), thr AS (
-  SELECT user_id, i, CASE WHEN smooth[i + 1] >= {lit(PROB_TH)} THEN 1 ELSE 0 END AS onv
+  SELECT user_id, i, CASE WHEN smooth[i + 1] >= {_dbl(PROB_TH)} THEN 1 ELSE 0 END AS onv
   FROM sm, unnest(range(0, {n_samp})) AS tt(i)
 ), sbrk AS (
   SELECT user_id, i, onv,
@@ -2854,7 +2849,7 @@ def _ep3_oracle_sql() -> str:
   FROM sseg WHERE onv = 1 GROUP BY user_id, g HAVING COUNT(*) >= {DUR_MIN}
 ), gw AS (
   SELECT user_id, rn - 1 AS wi,
-         CASE WHEN errors::DOUBLE / total::DOUBLE >= {lit(GT_ERR_FRAC)} THEN 1 ELSE 0 END AS gon
+         CASE WHEN errors::DOUBLE / total::DOUBLE >= {_dbl(GT_ERR_FRAC)} THEN 1 ELSE 0 END AS gon
   FROM rk WHERE rn <= {n}
     AND user_id IN (SELECT user_id FROM k)
 ), gbrk AS (
@@ -2881,8 +2876,8 @@ def _ep3_oracle_sql() -> str:
   FROM pred p LEFT JOIN gt g ON p.user_id = g.user_id
   GROUP BY p.user_id, p.ps, p.pe
 ), cnt AS (
-  SELECT COALESCE(SUM(CASE WHEN best >= {lit(IOU_TH)} THEN 1 ELSE 0 END), 0)::BIGINT AS corrects,
-         COALESCE(SUM(CASE WHEN best > 0.0 AND best < {lit(IOU_TH)} THEN 1 ELSE 0 END), 0)::BIGINT AS deletions,
+  SELECT COALESCE(SUM(CASE WHEN best >= {_dbl(IOU_TH)} THEN 1 ELSE 0 END), 0)::BIGINT AS corrects,
+         COALESCE(SUM(CASE WHEN best > 0.0 AND best < {_dbl(IOU_TH)} THEN 1 ELSE 0 END), 0)::BIGINT AS deletions,
          0::BIGINT AS substitutions,
          COALESCE(SUM(CASE WHEN best = 0.0 THEN 1 ELSE 0 END), 0)::BIGINT AS insertions
   FROM cls
@@ -3375,7 +3370,7 @@ def augment_timewarp_stretch(spark, sf_dir):
                 seed = int(hashlib_md5_u32(doc_id))
                 tw = time_warp_np(x, seed=seed)
                 st = time_stretch_ts(x, 1.25)
-                ps = pitch_shift_ts(x, sr=1.0, n_steps=2)
+                ps = pitch_shift_ts(x)
                 h, p = hpss_signal(x[:512])
                 rows.append(
                     (
@@ -3415,15 +3410,12 @@ def _pcen_chk_sql() -> str:
     [M, chk] for the same struct-mutation reason as _sosfilt_chk_sql."""
     from .functions.dsp2 import PCEN_DELTA, PCEN_EPS, PCEN_Q, PCEN_S
 
-    def lit(v: float) -> str:
-        return f"'{float(v)!r}'::DOUBLE"
-
-    m_new = f"({lit(1.0 - PCEN_S)} * acc[1] + {lit(PCEN_S)} * e[1])"
-    v = f"(sqrt(e[1] / ({lit(PCEN_EPS)} + {m_new}) + {lit(PCEN_DELTA)}) - sqrt({lit(PCEN_DELTA)}))"
+    m_new = f"({_dbl(1.0 - PCEN_S)} * acc[1] + {_dbl(PCEN_S)} * e[1])"
+    v = f"(sqrt(e[1] / ({_dbl(PCEN_EPS)} + {m_new}) + {_dbl(PCEN_DELTA)}) - sqrt({_dbl(PCEN_DELTA)}))"
     return (
         "(list_reduce(list_prepend([0.0::DOUBLE, 0.0::DOUBLE], "
         "list_transform(toks, t -> [t::DOUBLE, 0.0::DOUBLE])), "
-        f"(acc, e) -> [{m_new}, acc[2] + floor({v} * {lit(PCEN_Q)})]))[2]::BIGINT"
+        f"(acc, e) -> [{m_new}, acc[2] + floor({v} * {_dbl(PCEN_Q)})]))[2]::BIGINT"
     )
 
 
@@ -3570,7 +3562,7 @@ def bloom_prune_orders(spark, sf_dir):
     from .operators.bloom import bloom_bitset, bloom_build, bloom_test_col
 
     cust = load(spark, sf_dir, "customer").filter(F.col("c_acctbal") > 5000)
-    bits = bloom_bitset(bloom_build(cust.select("c_custkey"), "c_custkey"))
+    bits = bloom_bitset(bloom_build(cust.select("c_custkey")))
     orders = load(spark, sf_dir, "orders").select("o_custkey")
     mem = cust.select("c_custkey").distinct()
     p = (
@@ -3740,12 +3732,11 @@ def _fir_exact_taps() -> list[float]:
 
 
 def _resample_fir_sql() -> str:
-    dlits = ", ".join(f"'{t!r}'::DOUBLE" for t in _fir_exact_taps())
     return (
         SQL_TOKLIST
         + f"""
 , f AS (
-  SELECT doc_id, toks[1:64] AS x, [{dlits}] AS h FROM tok WHERE n >= 64
+  SELECT doc_id, toks[1:64] AS x, {_dbl_list(_fir_exact_taps())} AS h FROM tok WHERE n >= 64
 ), y AS (
   SELECT doc_id,
     list_transform(range(0, 43), j ->
@@ -3963,16 +3954,14 @@ def shuffle_ranks(spark, sf_dir):
     )
 
 
-def _hann_literals(n: int) -> list[float]:
+def _hann_literals() -> list[float]:
     from .functions.dsp import hann
 
-    return [float(v) for v in hann(n)]
+    return [float(v) for v in hann(16)]
 
 
 def _hann_window_sql() -> str:
-    w = _hann_literals(16)
-    wsum = repr(float(sum(_hann_literals(16))))  # same left-to-right sum
-    lits = "[" + ", ".join(f"'{v!r}'::DOUBLE" for v in w) + "]"
+    w = _hann_literals()  # divided by sum(w), the Spark side's left-to-right sum
     return (
         SQL_TOKLIST
         + f"""
@@ -3982,8 +3971,8 @@ wins AS (
     list_transform(range(0, ((n - 16) // 8)::BIGINT + 1), wi ->
       list_reduce(list_prepend(0.0::DOUBLE,
         list_transform(range(1, 17), k ->
-          toks[wi * 8 + k]::DOUBLE * ({lits})[k])), (a, b) -> a + b)
-      / '{wsum}'::DOUBLE) AS wm
+          toks[wi * 8 + k]::DOUBLE * ({_dbl_list(w)})[k])), (a, b) -> a + b)
+      / {_dbl(sum(w))}) AS wm
   FROM f
 )
 SELECT doc_id, len(wm)::BIGINT AS n_windows,
@@ -4003,7 +3992,7 @@ def rolling_window_hann(spark, sf_dir):
     seqs = tokenize_documents(load(spark, sf_dir, "documents")).filter(
         F.expr("size(tokens) >= 16")
     )
-    w = _hann_literals(16)
+    w = _hann_literals()
     wsum = repr(float(sum(w)))
     arr = "array(" + ", ".join(f"cast('{v!r}' as double)" for v in w) + ")"
     expr = f"""
@@ -4102,21 +4091,18 @@ def _eepd_env_fold(bp, lp) -> str:
     mutation workaround; appending keeps it ONE O(n) fold per band, not a
     prefix-fold per element). Result slice [5:] is the envelope list."""
 
-    def lit(v: float) -> str:
-        return f"'{float(v)!r}'::DOUBLE"
-
     b0, b1, b2, _, a1, a2 = bp[0]
     c0, c1, c2, _, d1, d2 = lp[0]
-    YB = f"({lit(b0)} * e[1] + acc[1])"
+    YB = f"({_dbl(b0)} * e[1] + acc[1])"
     EE = f"({YB} * {YB})"
-    YL = f"({lit(c0)} * {EE} + acc[3])"
+    YL = f"({_dbl(c0)} * {EE} + acc[3])"
     return (
         "(list_reduce(list_prepend([0.0::DOUBLE, 0.0::DOUBLE, 0.0::DOUBLE, 0.0::DOUBLE], "
         "list_transform(xs, v -> [v])), "
-        f"(acc, e) -> [{lit(b1)} * e[1] - {lit(a1)} * {YB} + acc[2], "
-        f"{lit(b2)} * e[1] - {lit(a2)} * {YB}, "
-        f"{lit(c1)} * {EE} - {lit(d1)} * {YL} + acc[4], "
-        f"{lit(c2)} * {EE} - {lit(d2)} * {YL}] "
+        f"(acc, e) -> [{_dbl(b1)} * e[1] - {_dbl(a1)} * {YB} + acc[2], "
+        f"{_dbl(b2)} * e[1] - {_dbl(a2)} * {YB}, "
+        f"{_dbl(c1)} * {EE} - {_dbl(d1)} * {YL} + acc[4], "
+        f"{_dbl(c2)} * {EE} - {_dbl(d2)} * {YL}] "
         f"|| acc[5:] || [{YL}]))[5:]"
     )
 
@@ -4228,7 +4214,7 @@ def eepd_counts(spark, sf_dir):
 
 SQL_MULTICHANNEL = (
     SQL_TOKLIST
-    + """
+    + f"""
 , two AS (
   SELECT doc_id, n,
          list_transform(toks, t -> t::DOUBLE) AS ch0,
@@ -4238,7 +4224,7 @@ SQL_MULTICHANNEL = (
   SELECT doc_id, n, ch0, ch1,
          list_transform(range(1, n + 1), i -> sqrt(ch0[i] * ch0[i] + ch1[i] * ch1[i])) AS mag,
          list_transform(range(1, n + 1), i -> abs(ch0[i]) + abs(ch1[i])) AS sma,
-         floor(n::DOUBLE / 100.0::DOUBLE * 64.0::DOUBLE)::INT AS n_rs
+         floor(n::DOUBLE / {float(NATIVE_SR)!r}::DOUBLE * {float(TARGET_SR)!r}::DOUBLE)::INT AS n_rs
   FROM two
 ), ps AS (
   SELECT *, list_transform(range(0, n_rs), j ->
@@ -4279,8 +4265,6 @@ def multichannel_features(spark, sf_dir):
     array expressions (functions/multichannel.py), verified by quantized
     checksums (sqrt doubles are IEEE-identical cross-engine; SMA is exact
     integer)."""
-    from .functions.multichannel import magnitude_signal, resample_2d, sma_signal
-
     seqs = tokenize_documents(load(spark, sf_dir, "documents"))
     two = seqs.select(
         "doc_id",
@@ -4290,7 +4274,7 @@ def multichannel_features(spark, sf_dir):
     m = two.withColumn("mag", magnitude_signal("ch0", "ch1")).withColumn(
         "sma", sma_signal("ch0", "ch1")
     )
-    r = resample_2d(m, ["ch0", "ch1"], native_sr=100, target_sr=64)
+    r = resample_2d(m)
     qfold = (
         "aggregate(transform({a}, v -> cast(floor(v * 1048576.0) as bigint)), "
         "cast(0 as bigint), (x, y) -> x + y)"
@@ -4316,7 +4300,7 @@ def _convolve_sql() -> str:
     w = hann(size)
     w = w / w.sum()
     half = size // 2
-    lits = "[" + ", ".join(f"'{float(v)!r}'::DOUBLE" for v in w) + "]"
+    lits = _dbl_list(w)
     conv = (
         f"list_reduce(list_prepend(0.0::DOUBLE, list_transform(range(0, {size}), k -> "
         f"({lits})[k + 1] * "
@@ -4499,7 +4483,7 @@ def rollup_histogram_q(spark, sf_dir):
 # is the single source of truth for the nesting; alpha = ALPHA_Q16/2^16)
 from .operators.mixing import pow_alpha_sql as _pow_alpha_sql
 
-_POW_ALPHA_SQL = _pow_alpha_sql("n_tokens::DOUBLE")
+_POW_ALPHA_SQL = _pow_alpha_sql()
 
 
 @q(
@@ -4647,9 +4631,7 @@ def decontamination(spark, sf_dir):
     return contamination_scores(tr, ev)
 
 
-def _bm25_sql(terms: list[str]) -> str:
-    tl = ", ".join(f"'{t}'" for t in terms)
-    return f"""
+SQL_BM25 = f"""
 WITH base AS (
   SELECT CAST(doc_id AS VARCHAR) AS doc_id,
          list_filter(string_split(text, ' '), x -> x != '') AS ws
@@ -4662,7 +4644,7 @@ WITH base AS (
   SELECT doc_id, len(ws)::BIGINT AS dl, unnest(ws) AS w FROM base
 ), tf AS (
   SELECT doc_id, w, COUNT(*)::BIGINT AS tf, MIN(dl)::BIGINT AS dl
-  FROM ex WHERE w IN ({tl}) GROUP BY doc_id, w
+  FROM ex WHERE w IN ({", ".join(f"'{t}'" for t in BM25_TERMS)}) GROUP BY doc_id, w
 ), dft AS (
   SELECT w, COUNT(*)::BIGINT AS df FROM tf GROUP BY w
 ), scored AS (
@@ -4680,16 +4662,14 @@ FROM (SELECT DISTINCT doc_id FROM base) b LEFT JOIN per_doc p USING (doc_id)
 """
 
 
-@q("bm25_scores", _bm25_sql(["join", "scan", "slow", "merge"]))
+@q("bm25_scores", SQL_BM25)
 def bm25_scores_q(spark, sf_dir):
     """Okapi BM25 keyword relevance over the corpus for a fixed query-term
     set (operators/textstats.py bm25_scores) — Lucene idf + k1/b
     saturation, per-term contributions floor(x*2^20)-quantized before the
     per-doc sum; the scoring expression string is shared verbatim with the
     DuckDB oracle."""
-    return bm25_scores(
-        load(spark, sf_dir, "documents"), ["join", "scan", "slow", "merge"]
-    )
+    return bm25_scores(load(spark, sf_dir, "documents"))
 
 
 def _substr_clean_sql() -> str:
@@ -4843,7 +4823,7 @@ WITH e AS (
            (acc, x) -> acc + x) AS dist2
   FROM e JOIN cent USING (label)
 )
-SELECT vec_id, label, dist2, dist2 >= '{OUTLIER_DIST2!r}'::DOUBLE AS is_outlier FROM d
+SELECT vec_id, label, dist2, dist2 >= {_dbl(OUTLIER_DIST2)} AS is_outlier FROM d
 """
 
 
@@ -4969,9 +4949,9 @@ def cms_counts(spark, sf_dir):
     # vs 1.52 s) — caching 1.2M string rows costs more than recomputing
     # them. (Contrast the md5-heavy _windows table, where persist wins.)
     grams = _bigrams(docs)
-    cms = cms_build(grams, "ngram")
+    cms = cms_build(grams)
     queries = _bigrams(docs, F.col("doc_id") < 20).distinct()
-    est = cms_lookup(cms, queries, "ngram")
+    est = cms_lookup(cms, queries)
     # guide §3.2 shape: the exact branch only needs counts for the QUERY
     # ngrams (the left join discards the rest), so semi-filter with the
     # broadcast query set BEFORE the groupBy — at scale this turns an

@@ -105,6 +105,9 @@ def hpss_signal(x: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
 
 # --------------------------------------------------------- phase vocoder
 
+# pitch_shift_ts' shift in semitones
+PITCH_STEPS = 2
+
 
 def phase_vocoder(D: np.ndarray, rate: float) -> np.ndarray:
     """Speed up an N_FFT/HOP STFT by `rate` (caits/fe/core_spectrum/_phase.py:12-80,
@@ -138,11 +141,11 @@ def time_stretch_ts(x: np.ndarray, rate: float) -> np.ndarray:
     return istft(D2, length=int(round(x.size / rate)))
 
 
-def pitch_shift_ts(x: np.ndarray, sr: float, n_steps: float) -> np.ndarray:
-    """caits/augmentation/_augment_1d.py:743-800: time-stretch by
-    2^(-steps/12) (12 bins per octave) then resample back to the original
-    length."""
-    rate = 2.0 ** (-float(n_steps) / 12)
+def pitch_shift_ts(x: np.ndarray) -> np.ndarray:
+    """caits/augmentation/_augment_1d.py:743-800: shift up PITCH_STEPS
+    semitones — time-stretch by 2^(-PITCH_STEPS/12) (12 bins per octave)
+    then resample back to the original length."""
+    rate = 2.0 ** (-float(PITCH_STEPS) / 12)
     stretched = time_stretch_ts(x, rate)
     out = resample_poly_arbitrary(stretched, x.size)
     return out[: x.size]

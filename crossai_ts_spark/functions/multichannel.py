@@ -19,6 +19,9 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+# resample_2d's source and target rates; the DuckDB oracle reads them too
+NATIVE_SR, TARGET_SR = 100, 64
+
 
 def magnitude_signal(*chans: str) -> Column:
     """Per-sample magnitude across channels: sqrt(sum_c x_c^2) — an
@@ -42,43 +45,32 @@ def sma_signal(*chans: str) -> Column:
     )
 
 
-def _interp_expr(chan: str, n: str, pos: str) -> str:
+def _interp_expr(chan: str) -> str:
     # np.interp on index units: i0 = floor(p), i1 = min(i0+1, n-1),
     # v = fp[i0] + (p - i0) * (fp[i1] - fp[i0]); 1-based element_at
-    i0 = f"cast(floor({{p}}) as int) + 1"
-    i1 = f"least(cast(floor({{p}}) as int) + 2, {n})"
+    i0 = "cast(floor(p) as int) + 1"
+    i1 = "least(cast(floor(p) as int) + 2, _n2d)"
     return (
-        f"transform({pos}, p -> "
-        f"element_at({chan}, {i0.format(p='p')}) + (p - floor(p)) * "
-        f"(element_at({chan}, {i1.format(p='p')}) - element_at({chan}, {i0.format(p='p')})))"
+        f"transform(_pos2d, p -> element_at({chan}, {i0}) + (p - floor(p)) * "
+        f"(element_at({chan}, {i1}) - element_at({chan}, {i0})))"
     )
 
 
-def resample_2d(
-    df: DataFrame,
-    chans: list[str],
-    native_sr: int,
-    target_sr: int,
-) -> DataFrame:
-    """Per-channel linear resample (caits/preprocessing.py:63-100 /
-    resample_signal:24-60 semantics): duration = n/native_sr, output length
-    m = floor(duration * target_sr)  (the reference's int() truncation),
+def resample_2d(df: DataFrame) -> DataFrame:
+    """Per-channel linear resample of ``ch0`` and ``ch1`` from NATIVE_SR to
+    TARGET_SR (caits/preprocessing.py:63-100 / resample_signal:24-60
+    semantics): duration = n/NATIVE_SR, output length
+    m = floor(duration * TARGET_SR)  (the reference's int() truncation),
     sample positions = linspace over the source index axis, values =
     np.interp. Adds one ``<chan>_rs`` array column per channel plus
     ``n_rs`` (the output length). Pure native expressions; every channel
     shares the one materialized position array.
     """
-    if not chans:
-        raise ValueError("resample_2d needs at least one channel column")
-    nat, tgt = int(native_sr), int(target_sr)
-    if nat <= 0 or tgt <= 0:
-        raise ValueError("sampling rates must be positive")
-    n0 = F.size(F.col(chans[0]))
-    out = df.withColumn("_n2d", n0.cast("int"))
+    out = df.withColumn("_n2d", F.size(F.col("ch0")).cast("int"))
     out = out.withColumn(
         "n_rs",
         F.floor(
-            F.col("_n2d").cast("double") / F.lit(float(nat)) * F.lit(float(tgt))
+            F.col("_n2d").cast("double") / F.lit(float(NATIVE_SR)) * F.lit(float(TARGET_SR))
         ).cast("int"),
     )
     # guard: Spark's sequence(0, -1) DESCENDS — empty output needs array()
@@ -92,6 +84,6 @@ def resample_2d(
             "  ELSE cast(0 as double) END) END"
         ),
     )
-    for c in chans:
-        out = out.withColumn(f"{c}_rs", F.expr(_interp_expr(c, "_n2d", "_pos2d")))
+    for c in ("ch0", "ch1"):
+        out = out.withColumn(f"{c}_rs", F.expr(_interp_expr(c)))
     return out.drop("_n2d", "_pos2d")

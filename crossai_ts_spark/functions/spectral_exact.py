@@ -399,8 +399,8 @@ def _logmel_list_sql() -> str:
     return f"[{mels}]"
 
 
-def _mfcc_q_sql(logmel: str, c: int) -> str:
-    fold = _fold_sql(f"list_transform({logmel}, (v, i) -> ({_dbl_list(DCT[c])})[i] * v)")
+def _mfcc_q_sql(c: int) -> str:
+    fold = _fold_sql(f"list_transform(lm, (v, i) -> ({_dbl_list(DCT[c])})[i] * v)")
     return f"floor(({fold}) * {float(MFCC_Q)!r})::BIGINT"
 
 
@@ -411,7 +411,7 @@ def dsp_exact_sql() -> str:
         for m in range(N_MELS)
     )
     mfcc_cols = ",\n       ".join(
-        _mfcc_q_sql("lm", c) + f" AS mfcc_q_{c}" for c in range(N_MFCC)
+        _mfcc_q_sql(c) + f" AS mfcc_q_{c}" for c in range(N_MFCC)
     )
     return (
         _dft_ctes()
@@ -445,7 +445,7 @@ def mfcc_stats_sql() -> str:
         for c in range(N_MFCC)
     )
     qcols = ",\n         ".join(
-        _mfcc_q_sql("lm", c) + f" AS q_{c}" for c in range(N_MFCC)
+        _mfcc_q_sql(c) + f" AS q_{c}" for c in range(N_MFCC)
     )
     return f"""
 WITH docs AS (

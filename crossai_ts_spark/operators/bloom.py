@@ -37,10 +37,11 @@ def _positions(key_col):
     return F.array(*cols)
 
 
-def bloom_build(df: DataFrame, key: str) -> DataFrame:
-    """(block, bits) bitset rows — M/32 rows regardless of build size; one
-    map-side-combined groupBy (bit_or) over K rows per key."""
-    pos = _positions(F.col(key))
+def bloom_build(df: DataFrame) -> DataFrame:
+    """(block, bits) bitset rows of the ``c_custkey`` keys — M/32 rows
+    regardless of build size; one map-side-combined groupBy (bit_or) over
+    K rows per key."""
+    pos = _positions(F.col("c_custkey"))
     return (
         df.select(F.explode(pos).alias("pos"))
         .select(

@@ -39,39 +39,40 @@ def _cell(key_col, i: int):
     return h % CMS_W
 
 
-def _positions(key: str):
-    """The key's CMS_D (row, cell) positions as an array of structs."""
+def _positions():
+    """The ``ngram`` key's CMS_D (row, cell) positions as an array of structs."""
     return F.array(*[
-        F.struct(F.lit(i).alias("row"), _cell(F.col(key), i).alias("cell"))
+        F.struct(F.lit(i).alias("row"), _cell(F.col("ngram"), i).alias("cell"))
         for i in range(CMS_D)
     ])
 
 
-def cms_build(items: DataFrame, key: str) -> DataFrame:
-    """Sketch an item stream: one (row, cell, cnt) table of <= CMS_D*CMS_W rows.
+def cms_build(items: DataFrame) -> DataFrame:
+    """Sketch a stream of ``ngram`` items: one (row, cell, cnt) table of
+    <= CMS_D*CMS_W rows.
 
     One explode (CMS_D rows per item) into a map-side-combined groupBy —
     partial aggregation collapses each partition to <= CMS_D*CMS_W cells before
     the (tiny) shuffle, which is exactly how the sketch merges: cells
     from anywhere add elementwise."""
     return (
-        items.select(F.explode(_positions(key)).alias("p"))
+        items.select(F.explode(_positions()).alias("p"))
         .select("p.row", "p.cell")
         .groupBy("row", "cell")
         .agg(F.count("*").alias("cnt"))
     )
 
 
-def cms_lookup(cms: DataFrame, queries: DataFrame, key: str) -> DataFrame:
-    """Estimate each query key's count: min over the CMS_D rows' cells.
+def cms_lookup(cms: DataFrame, queries: DataFrame) -> DataFrame:
+    """Estimate each query ``ngram``'s count: min over the CMS_D rows' cells.
 
     The sketch side is <= CMS_D*CMS_W rows and is BROADCAST — the query side
     never shuffles; absent cells count 0 (a key the sketch never saw
     estimates 0 only if some cell stayed empty; estimate >= truth always)."""
-    q = queries.select(F.col(key), F.explode(_positions(key)).alias("p")).select(
-        key, "p.row", "p.cell"
+    q = queries.select(F.col("ngram"), F.explode(_positions()).alias("p")).select(
+        "ngram", "p.row", "p.cell"
     )
     joined = q.join(F.broadcast(cms), ["row", "cell"], "left").select(
-        key, F.coalesce("cnt", F.lit(0).cast("long")).alias("cnt")
+        "ngram", F.coalesce("cnt", F.lit(0).cast("long")).alias("cnt")
     )
-    return joined.groupBy(key).agg(F.min("cnt").alias("est"))
+    return joined.groupBy("ngram").agg(F.min("cnt").alias("est"))

@@ -253,11 +253,12 @@ def kmv_sketch(events: DataFrame) -> DataFrame:
 
 
 def _kmv_estimate(merged: DataFrame, k: int) -> DataFrame:
-    """(window_start, ks, n_distinct_est) from per-window bottom-k lists."""
+    """``merged``'s columns plus ``n_distinct_est`` from its per-window
+    bottom-k lists ``ks``."""
     kth = F.element_at("ks", k)
     est = F.when(
         F.size("ks") < k, F.size("ks").cast("double")
     ).otherwise(
         F.lit(float(k - 1)) / (kth.cast("double") / F.lit(float(_H60)))
     )
-    return merged.select("window_start", "ks", est.alias("n_distinct_est"))
+    return merged.select(*merged.columns, est.alias("n_distinct_est"))

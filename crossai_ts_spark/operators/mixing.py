@@ -42,11 +42,12 @@ def pow_alpha(n_col):
     return r
 
 
-def pow_alpha_sql(n_expr: str) -> str:
-    """The identical sqrt chain as ANSI/DuckDB SQL text (for oracles)."""
+def pow_alpha_sql() -> str:
+    """The identical sqrt chain over ``n_tokens`` as ANSI/DuckDB SQL text
+    (for oracles)."""
     expr = "CAST(1.0 AS DOUBLE)"
     for bit in reversed(ALPHA_BITS):
-        expr = f"sqrt({expr} * ({n_expr}))" if bit else f"sqrt({expr})"
+        expr = f"sqrt({expr} * (n_tokens::DOUBLE))" if bit else f"sqrt({expr})"
     return expr
 
 

@@ -60,9 +60,13 @@ def _flat_tokens(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]
     Arrow hands a batch whose list child has nulls to pandas as float64
     arrays with NaN for the nulls; an int cast would turn each NaN into a
     silent wrong number, so a null element raises ``ValueError`` naming the
-    row's ``doc_id``."""
+    row's ``doc_id``, as does a null ``tokens`` cell."""
     toks = pdf["tokens"].tolist()
-    doc_len = np.fromiter(map(len, toks), dtype=np.int64, count=len(toks))
+    try:
+        doc_len = np.fromiter(map(len, toks), dtype=np.int64, count=len(toks))
+    except TypeError:
+        doc = pdf["doc_id"].iloc[[t is None for t in toks].index(True)]
+        raise ValueError(f"doc_id {doc!r}: tokens cell is null") from None
     flat = np.concatenate(toks)
     doc_base = np.concatenate(([0], np.cumsum(doc_len)[:-1]))
     if flat.dtype.kind == "f":

@@ -185,6 +185,9 @@ def lm_bigram_nll(docs: DataFrame) -> DataFrame:
     return g.select("doc_id", "n_bigrams", nll_q.alias("nll_q"))
 
 
+# bm25_scores' query terms; the DuckDB oracle's IN list reads them too
+BM25_TERMS = ["join", "scan", "slow", "merge"]
+
 # Okapi BM25 term-score expression (k1 = 1.2, b = 0.75), shared VERBATIM
 # between the Spark plan and the DuckDB oracle so both engines evaluate the
 # identical double arithmetic (Lucene/Robertson idf, k1/b saturation,
@@ -201,8 +204,8 @@ BM25_TERM_Q = (
 )
 
 
-def bm25_scores(docs: DataFrame, terms: list[str]) -> DataFrame:
-    """Okapi BM25 relevance of every doc against a fixed term set — the
+def bm25_scores(docs: DataFrame) -> DataFrame:
+    """Okapi BM25 relevance of every doc against the BM25_TERMS set — the
     classic keyword-retrieval scorer a corpus-quality pipeline uses for
     topic filtering. idf = ln(1 + (N - df + 0.5)/(df + 0.5)) (Lucene's
     non-negative variant), saturation tf/(tf + k1*(1-b+b*dl/avgdl)).
@@ -216,13 +219,11 @@ def bm25_scores(docs: DataFrame, terms: list[str]) -> DataFrame:
     floor(x * 2^20)-quantized before the per-doc sum. Returns (doc_id,
     n_hit_terms, bm25_q) with zero rows for docs matching no term.
     """
-    if not terms:
-        raise ValueError("bm25_scores needs at least one term")
     words = _words()
     base = docs.select(F.col("doc_id").cast("string").alias("doc_id"), words.alias("ws"))
     ex = base.select(
         "doc_id", F.size("ws").cast("long").alias("dl"), F.explode("ws").alias("w")
-    ).filter(F.col("w").isin(*terms))
+    ).filter(F.col("w").isin(*BM25_TERMS))
     tf = ex.groupBy("doc_id", "w").agg(
         F.count("*").alias("tf"), F.first("dl").alias("dl")
     )

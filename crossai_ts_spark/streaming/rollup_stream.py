@@ -14,6 +14,10 @@ continuously at the 10^12 design point:
   * the sketches (HLL registers, KMV), sessions, dedup and packing have
     one streaming path each; the batch ``cms_build`` runs on a stream
     unchanged (its groupBy sum is an incremental aggregation).
+  * the stateful packing and KMV streams keep only their state in Python
+    (a shard's token cursor, a window's bottom-k) and run the batch
+    operator's own expressions on the stream for the rest
+    (``packing._pack_assign``, ``hll._kmv_estimate``).
 
 Local smoke: parquet-dir source -> memory sink -> processAllAvailable().
 """
@@ -121,8 +125,9 @@ def incremental_tier1(chunked: DataFrame, w: int,
     (their windows are distinguishable by window_start collisions
     downstream).
 
-    A null element inside a chunk's ``tokens`` raises ``ValueError``
-    naming the doc, as in the batch ``cascade``."""
+    A null element inside a chunk's ``tokens``, or a null ``tokens``
+    cell, raises ``ValueError`` naming the doc, as in the batch
+    ``cascade``."""
     import numpy as np
     import pandas as pd
 
@@ -225,59 +230,35 @@ def streaming_packing(stream: DataFrame) -> DataFrame:
     rows are doc_id-sorted for determinism. Feeding doc_id-ordered
     triggers reproduces the batch assignment exactly (parity-tested).
     State per shard is ONE long (the offset cursor) — bounded regardless
-    of stream length.
+    of stream length. The group function only extends the shard's running
+    sum; the pack columns are the batch ``_pack_assign`` expressions.
     """
+    import numpy as np
     import pandas as pd
 
-    from ..operators.packing import PACK_SEQ_LEN
-
-    seq_len = PACK_SEQ_LEN  # the worker-side kernel closes over this local
+    from ..operators.packing import _pack_assign
 
     @worker_kernel
     def fn(key, pdfs, state):
         (shard,) = key
         off = state.get[0] if state.exists else 0
-        rows = []
         # applyInPandasWithState delivers one trigger's group data as
         # MULTIPLE Arrow chunks once it exceeds maxRecordsPerBatch, so the
         # doc_id sort must be global over the trigger, not per-chunk —
         # materialize first, sort once (chunk-boundary parity is tested
         # with maxRecordsPerBatch=16)
-        chunks = [p for p in pdfs if len(p)]
-        if chunks:
-            pdf = pd.concat(chunks, ignore_index=True).sort_values("doc_id")
-            for doc_id, n_tok in zip(pdf["doc_id"], pdf["n_tok"]):
-                n = int(n_tok)
-                if n <= 0:
-                    continue
-                pack_id, pack_off = off // seq_len, off % seq_len
-                last_pack = (off + n - 1) // seq_len
-                rows.append(
-                    (
-                        str(doc_id),
-                        shard,
-                        n,
-                        off,
-                        pack_id,
-                        pack_off,
-                        last_pack != pack_id,
-                        last_pack - pack_id + 1,
-                    )
-                )
-                off += n
-        state.update((off,))
-        cols = [
-            "doc_id", "source", "n_tok", "cum_start", "pack_id", "pack_off",
-            "spans_packs", "n_packs_touched",
-        ]
-        yield pd.DataFrame(rows, columns=cols)
+        pdf = pd.concat(list(pdfs), ignore_index=True).sort_values("doc_id")
+        n_tok = pdf["n_tok"].to_numpy(dtype=np.int64)
+        cum_end = off + np.cumsum(n_tok)
+        state.update((off + int(n_tok.sum()),))
+        yield pd.DataFrame({"doc_id": pdf["doc_id"].to_numpy(), "source": shard, "n_tok": n_tok,
+                            "cum_start": cum_end - n_tok, "cum_end": cum_end})
 
-    out_schema = (
-        "doc_id string, source string, n_tok long, cum_start long, pack_id long, "
-        "pack_off long, spans_packs boolean, n_packs_touched long"
-    )
-    return stream.groupBy("source").applyInPandasWithState(
-        fn, out_schema, "off long", "append", "NoTimeout"
+    return _pack_assign(
+        stream.filter(F.col("n_tok") > 0).groupBy("source").applyInPandasWithState(
+            fn, "doc_id string, source string, n_tok long, cum_start long, cum_end long",
+            "off long", "append", "NoTimeout"
+        )
     )
 
 
@@ -328,8 +309,9 @@ def streaming_kmv(stream: DataFrame, state_ttl_sec: int = 6 * 3600) -> DataFrame
     `_kmv_hashed` expression itself (which drops null-key and null-
     timestamp rows before they reach pandas, where a null would arrive as
     a float64 NaN whose int64 cast terminates the query) and the
-    estimator repeats the batch IEEE op order, so the final emission per
-    window equals kmv_sketch(same events) BITWISE (parity-tested).
+    estimate is the batch ``_kmv_estimate`` expression on the stream, so
+    the final emission per window equals kmv_sketch(same events) BITWISE
+    (parity-tested).
 
     Ingest path (r7, replacing the per-event bisect insert): a stateless
     ``mapInPandas``
@@ -349,7 +331,7 @@ def streaming_kmv(stream: DataFrame, state_ttl_sec: int = 6 * 3600) -> DataFrame
     import numpy as np
     import pandas as pd
 
-    from ..operators.hll import KMV_K, _H60, _kmv_hashed
+    from ..operators.hll import KMV_K, _kmv_estimate, _kmv_hashed
 
     k = KMV_K  # the worker-side kernels close over this local
     hashed = _kmv_hashed(stream)
@@ -393,19 +375,13 @@ def streaming_kmv(stream: DataFrame, state_ttl_sec: int = 6 * 3600) -> DataFrame
             ks = np.unique(np.concatenate([ks, *fresh]))[:k]
         state.update((ks.tolist(), n))
         state.setTimeoutDuration(state_ttl_sec * 1000)
-        if len(ks) < k:
-            est = float(len(ks))
-        else:
-            est = float(k - 1) / (float(ks[k - 1]) / float(_H60))
-        yield pd.DataFrame(
-            [(ws, n, ks.tolist(), est)],
-            columns=["window_start", "n_events", "ks", "n_distinct_est"],
-        )
+        yield pd.DataFrame([(ws, n, ks.tolist())], columns=["window_start", "n_events", "ks"])
 
-    return part.groupBy("window_start").applyInPandasWithState(
+    sketch = part.groupBy("window_start").applyInPandasWithState(
         fn,
-        "window_start long, n_events long, ks array<long>, n_distinct_est double",
+        "window_start long, n_events long, ks array<long>",
         "ks array<long>, n long",
         "append",
         "ProcessingTimeTimeout",
     )
+    return _kmv_estimate(sketch, k)

@@ -379,9 +379,9 @@ def test_asof_join_matches_merge_asof(spark, direction):
 def test_bloom_build_prune_no_false_negatives(spark):
     from crossai_ts_spark.operators.bloom import bloom_bitset, bloom_build, bloom_test_col
 
-    build = spark.range(0, 2000, 2).withColumnRenamed("id", "key")  # evens < 2000
+    build = spark.range(0, 2000, 2).withColumnRenamed("id", "c_custkey")  # evens < 2000
     probe = spark.range(0, 8000).withColumnRenamed("id", "key")
-    bits = bloom_bitset(bloom_build(build, "key"))
+    bits = bloom_bitset(bloom_build(build))
     assert len(bits) == 512 and any(b != 0 for b in bits)
 
     pruned = probe.filter(bloom_test_col(bits, F.col("key")))
@@ -563,10 +563,13 @@ def test_contamination_scores_semantics(spark):
     assert out.loc["3", "n_windows"] == 0 and out.loc["3", "contam_frac"] == 0.0
 
 
-def test_bm25_scores_semantics(spark):
+def test_bm25_scores_semantics(spark, monkeypatch):
     import math
 
+    from crossai_ts_spark.operators import textstats
     from crossai_ts_spark.operators.textstats import bm25_scores
+
+    monkeypatch.setattr(textstats, "BM25_TERMS", ["join"])
 
     rows = [
         (1, "spark join join join fast", "en", "t"),   # tf(join)=3, dl=5
@@ -574,7 +577,7 @@ def test_bm25_scores_semantics(spark):
         (3, "nothing relevant at all", "en", "t"),     # no hits
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string, lang string, source string")
-    out = bm25_scores(docs, ["join"]).toPandas().set_index("doc_id")
+    out = bm25_scores(docs).toPandas().set_index("doc_id")
     assert len(out) == 3
     assert out.loc["3", "n_hit_terms"] == 0 and out.loc["3", "bm25_q"] == 0
 
@@ -814,25 +817,25 @@ def test_cms_one_sided_and_merge(spark):
 
     rows = [(i, f"k{i % 37}") for i in range(1000)]
     items = spark.createDataFrame(rows, "i long, ngram string")
-    sk = cms_build(items, "ngram")
+    sk = cms_build(items)
     spdf = sk.toPandas()
     assert len(spdf) <= CMS_D * CMS_W
     assert spdf.cnt.sum() == CMS_D * 1000  # every item hit CMS_D cells
     assert spdf.cell.between(0, CMS_W - 1).all()
     queries = items.select("ngram").distinct()
-    est = cms_lookup(sk, queries, "ngram").toPandas().set_index("ngram")
+    est = cms_lookup(sk, queries).toPandas().set_index("ngram")
     exact = items.groupBy("ngram").count().toPandas().set_index("ngram")
     for k in exact.index:
         assert est.loc[k, "est"] >= exact.loc[k, "count"]
     # absent key estimates >= 0 (and usually 0 at this load)
     absent = cms_lookup(
-        sk, spark.createDataFrame([("zebra quux",)], "ngram string"), "ngram"
+        sk, spark.createDataFrame([("zebra quux",)], "ngram string")
     ).toPandas()
     assert absent.est.iloc[0] >= 0
 
     # mergeability: sketch(first half) + sketch(second half) == sketch(all)
-    h1 = cms_build(items.filter("i < 500"), "ngram")
-    h2 = cms_build(items.filter("i >= 500"), "ngram")
+    h1 = cms_build(items.filter("i < 500"))
+    h2 = cms_build(items.filter("i >= 500"))
     merged = (
         h1.unionByName(h2).groupBy("row", "cell").agg(F.sum("cnt").alias("cnt"))
         .toPandas().sort_values(["row", "cell"]).reset_index(drop=True)
@@ -889,11 +892,11 @@ def test_mixing_pow_agreement(spark):
     )
     got = {r["n"]: r["w_q"] for r in sdf.collect()}
     con = duckdb.connect()
-    chain = pow_alpha_sql("n::DOUBLE")
+    chain = pow_alpha_sql()
     want = dict(
         con.execute(
-            f"SELECT n, floor({chain} * 1048576.0)::BIGINT "
-            "FROM (SELECT UNNEST(?::BIGINT[]) AS n)",
+            f"SELECT n_tokens, floor({chain} * 1048576.0)::BIGINT "
+            "FROM (SELECT UNNEST(?::BIGINT[]) AS n_tokens)",
             [ns],
         ).fetchall()
     )

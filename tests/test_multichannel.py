@@ -40,14 +40,17 @@ def test_magnitude_and_sma_match_numpy(spark):
     np.testing.assert_allclose(got["sma"], np.sum(np.abs(sig), axis=1), rtol=0, atol=1e-12)
 
 
-def test_resample_2d_matches_np_interp(spark):
+def test_resample_2d_matches_np_interp(spark, monkeypatch):
+    from crossai_ts_spark.functions import multichannel
     from crossai_ts_spark.functions.multichannel import resample_2d
 
     rng = np.random.default_rng(4)
     for n, nat, tgt in [(100, 100, 64), (137, 50, 80), (64, 16000, 8000), (257, 100, 100)]:
         sig = rng.normal(0, 5, (n, 2))
-        df, chans = _mk(spark, sig)
-        out = resample_2d(df, chans, nat, tgt).collect()[0]
+        df, _ = _mk(spark, sig)
+        monkeypatch.setattr(multichannel, "NATIVE_SR", nat)
+        monkeypatch.setattr(multichannel, "TARGET_SR", tgt)
+        out = resample_2d(df).collect()[0]
         for c in range(2):
             ref = _ref_resample(sig[:, c], nat, tgt)
             got = np.asarray(out[f"ch{c}_rs"])
@@ -57,18 +60,23 @@ def test_resample_2d_matches_np_interp(spark):
             np.testing.assert_array_equal(np.asarray(out["ch0_rs"]), sig[:, 0])
 
 
-def test_resample_2d_edges(spark):
+def test_resample_2d_edges(spark, monkeypatch):
+    from crossai_ts_spark.functions import multichannel
     from crossai_ts_spark.functions.multichannel import resample_2d
 
     # single-sample signal: np.interp returns fp[0] everywhere
-    df, chans = _mk(spark, np.array([[7.0, -3.0]]))
-    out = resample_2d(df, chans, 1, 4).collect()[0]
+    df, _ = _mk(spark, np.array([[7.0, -3.0]]))
+    monkeypatch.setattr(multichannel, "NATIVE_SR", 1)
+    monkeypatch.setattr(multichannel, "TARGET_SR", 4)
+    out = resample_2d(df).collect()[0]
     assert out["n_rs"] == 4 and out["ch0_rs"] == [7.0] * 4 and out["ch1_rs"] == [-3.0] * 4
 
     # target too low for even one output sample -> empty arrays, not a
     # descending Spark sequence()
-    df2, chans2 = _mk(spark, np.arange(6, dtype=float).reshape(3, 2))
-    out2 = resample_2d(df2, chans2, 100, 20).collect()[0]
+    df2, _ = _mk(spark, np.arange(6, dtype=float).reshape(3, 2))
+    monkeypatch.setattr(multichannel, "NATIVE_SR", 100)
+    monkeypatch.setattr(multichannel, "TARGET_SR", 20)
+    out2 = resample_2d(df2).collect()[0]
     assert out2["n_rs"] == 0 and out2["ch0_rs"] == [] and out2["ch1_rs"] == []
 
 

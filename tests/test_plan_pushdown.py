@@ -54,12 +54,14 @@ def test_substring_dedup_plan_prunes_and_never_pairs(spark):
         assert "lang" not in rs and "n_chars" not in rs, rs
 
 
-def test_bm25_plan_broadcasts_stats_not_corpus(spark):
+def test_bm25_plan_broadcasts_stats_not_corpus(spark, monkeypatch):
     """df/stats sides broadcast; the corpus is never nested-loop joined."""
+    from crossai_ts_spark.operators import textstats
     from crossai_ts_spark.operators.textstats import bm25_scores
 
+    monkeypatch.setattr(textstats, "BM25_TERMS", ["join", "scan"])
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    plan = _plan(bm25_scores(docs, ["join", "scan"]))
+    plan = _plan(bm25_scores(docs))
     assert "CartesianProduct" not in plan, plan
     # the 1-row stats cross join must be a broadcast, not a shuffle join
     assert "BroadcastNestedLoopJoin BuildRight, Cross" in plan or "BroadcastExchange" in plan, plan
@@ -122,9 +124,9 @@ def test_cms_plan_map_side_combines_and_broadcasts_lookup(spark):
 
     items = (
         spark.read.parquet(f"{SF}/documents.parquet")
-        .selectExpr("explode(split(text, ' ')) as k")
+        .selectExpr("explode(split(text, ' ')) as ngram")
     )
-    sk = cms_build(items, key="k")
+    sk = cms_build(items)
     plan = _plan(sk)
     # partial_count before the exchange = map-side combine onto <= CMS_D*CMS_W cells
     pre, post = plan.split("Exchange hashpartitioning", 1)
@@ -132,7 +134,7 @@ def test_cms_plan_map_side_combines_and_broadcasts_lookup(spark):
     assert "HashAggregate" in pre, plan
 
     queries = items.limit(50).distinct()
-    est = cms_lookup(sk, queries, key="k")
+    est = cms_lookup(sk, queries)
     lplan = _plan(est)
     assert "BroadcastHashJoin" in lplan, lplan
     assert "CartesianProduct" not in lplan and "BroadcastNestedLoopJoin" not in lplan

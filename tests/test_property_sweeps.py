@@ -217,7 +217,7 @@ def test_round6_sketches_partition_invariant(spark):
         hv = [(int(w), int(v), float(e)) for w, v, e in
               zip(hl.window_start, hl.v_empty, hl.est_distinct)]
         cm = (
-            cms_build(ev.select(F.col("user_id").alias("k")), key="k")
+            cms_build(ev.select(F.col("user_id").alias("ngram")))
             .toPandas().sort_values(["row", "cell"])
         )
         cv = list(map(tuple, cm.itertuples(index=False)))

@@ -1,6 +1,6 @@
 """Every package module, and every top-level symbol in it, is reached from
 a production root; every keyword option of a package function takes two
-values somewhere in the repo.
+values somewhere in the repo, and no required parameter takes one literal.
 
 Walks ``import`` / ``from ... import`` statements and name references
 (``ast``, no Spark) from the entry points that run the engine:
@@ -282,16 +282,18 @@ def test_symbol_walk_flags_each_form(tmp_path):
     ]
 
 
-# -- options that take one value ---------------------------------------------
+# -- parameters that take one value ------------------------------------------
 #
 # An option is a defaulted parameter of a top-level package function outside
 # oracle/. Each call outside tests/ (the package with oracle/, jobs/, tools/,
 # perfbench/, bench*.py, and the Python programs scripts hold in strings)
-# gives it a value: the literal it passes, the default when it omits it, the
-# values of the caller's own parameter when it forwards that unchanged, and a
-# value of its own for anything else. An option every such call sets alike is
-# a constant; a value only tests pass does not count, as tests steer through
-# fixtures, Spark conf, oracle/ or a monkeypatched module constant.
+# gives a parameter a value: the literal it passes, the default when it omits
+# it, the values of the caller's own parameter when it forwards that
+# unchanged (none of its own when that parameter is exempt), and a value of
+# its own for anything else, a module constant included. An option every such
+# call sets alike is a constant, and so is a required parameter whose one
+# value is a literal; a value only tests pass does not count, as tests steer
+# through fixtures, Spark conf, oracle/ or a monkeypatched module constant.
 
 OPTION_EXEMPT = {
     "operators.rollup:cascade(strategy)":
@@ -375,7 +377,8 @@ def _bound(fn: ast.AST, call: ast.Call, p: str):
 
 def option_report(root: pathlib.Path = ROOT) -> list[str]:
     """One ``module:function(param)`` line per option that every call site
-    sets to one value, outside :data:`OPTION_EXEMPT`."""
+    sets to one value, and per required parameter that every call site
+    passes one literal, outside :data:`OPTION_EXEMPT`."""
     package = root / "crossai_ts_spark"
     oracle = package / "oracle"
     mods: dict[pathlib.Path, _Module] = {}
@@ -405,6 +408,10 @@ def option_report(root: pathlib.Path = ROOT) -> list[str]:
 
     def fdef(key):
         return [d for d in mod(key[0]).tops[key[1]] if isinstance(d, _FUNCS)][-1]
+
+    def label(f: pathlib.Path, name: str, p: str) -> str:
+        rel = ".".join(x for x in f.relative_to(package).with_suffix("").parts if x != "__init__")
+        return f"{rel}:{name}({p})"
 
     calls: dict[tuple, list] = defaultdict(list)  # (file, name) -> [(module, call, scope)]
     escaped: set[tuple] = set()  # functions passed around as values
@@ -454,7 +461,8 @@ def option_report(root: pathlib.Path = ROOT) -> list[str]:
         default = _defaults(fn).get(p)
         dflt = set() if default is None else {_literal(default) or ("expr", str(f), ast.dump(default))}
         sites = calls.get((f, name), [])
-        if (f, name) in escaped or (not sites and default is None):
+        if (f, name) in escaped or (not sites and default is None) \
+                or (package in f.parents and label(f, name, p) in OPTION_EXEMPT):
             out = {("opaque", key)}
         elif not sites:
             out = dflt
@@ -475,21 +483,23 @@ def option_report(root: pathlib.Path = ROOT) -> list[str]:
     for f in sorted(package.rglob("*.py")):
         if oracle in f.parents:
             continue
-        rel = ".".join(p for p in f.relative_to(package).with_suffix("").parts if p != "__init__")
         for name in sorted(mod(f).tops):
             if not any(isinstance(d, _FUNCS) for d in mod(f).tops[name]):
                 continue
             fn = fdef((f, name))
-            for p in _defaults(fn):
-                line = f"{rel}:{name}({p})"
-                if len(values((f, name, p))) <= 1 and line not in OPTION_EXEMPT:
+            defaults = _defaults(fn)
+            for p in [a.arg for a in _params(fn)]:
+                line, vals = label(f, name, p), values((f, name, p))
+                one = len(vals) <= 1 if p in defaults else \
+                    len(vals) == 1 and next(iter(vals))[0] == "lit"
+                if one and line not in OPTION_EXEMPT:
                     lines.append(line)
     return lines
 
 
 def test_every_option_takes_two_values():
     lines = option_report()
-    assert not lines, ("options every call site sets alike; make each a constant:\n"
+    assert not lines, ("parameters every call site sets alike; make each a constant:\n"
                        + "\n".join(lines))
 
 
@@ -498,28 +508,41 @@ def test_option_walk_flags_each_form(tmp_path):
     a test passes it a second value and when it reaches the option through
     a caller's forwarded parameter; one that gets a second value from a
     jobs/ caller through an aliased import, and one whose caller forwards
-    its own two-valued parameter, are not."""
+    its own two-valued parameter, are not. A required parameter every call
+    passes one literal is flagged; one fed a module constant, and one
+    forwarded from an exempt option, are not."""
     pkg = tmp_path / "crossai_ts_spark"
     pkg.mkdir()
     (tmp_path / "jobs").mkdir()
     (tmp_path / "tests").mkdir()
     (pkg / "__init__.py").write_text("")
     (pkg / "mod.py").write_text(
+        "N = 3\n\n\n"
         "def planted(x, w=4):\n    return x * w\n\n\n"
         "def aliased(x, k=8):\n    return x + k\n\n\n"
         "def forwarded(x, n=2):\n    return x - n\n\n\n"
         "def outer(x, n=2):\n    return forwarded(x, n=n)\n\n\n"
         "def relay(x, m=1):\n    return x + m\n\n\n"
-        "def outer_one(x, m=1):\n    return relay(x, m)\n"
+        "def outer_one(x, m=1):\n    return relay(x, m)\n\n\n"
+        "def keyed(x, key):\n    return x[key]\n\n\n"
+        "def const_fed(x, n):\n    return x * n\n"
+    )
+    (pkg / "datagen.py").write_text(
+        "def _doc(i, max_tok):\n    return i\n\n\n"
+        "def gen_local(seed, max_tok=None):\n    return _doc(seed, max_tok)\n"
     )
     (tmp_path / "jobs" / "job.py").write_text(
         "import crossai_ts_spark.mod as cm\n"
-        "from crossai_ts_spark.mod import aliased, outer, outer_one, planted\n\n"
-        "planted(1, w=4)\naliased(1)\ncm.aliased(2, k=16)\nouter(1)\ncm.outer(2, n=3)\n"
-        "outer_one(1, m=1)\n"
+        "from crossai_ts_spark.datagen import gen_local\n"
+        "from crossai_ts_spark.mod import N, aliased, const_fed, keyed, outer, outer_one, planted\n\n"
+        "X = object()\n"
+        "planted(X, w=4)\naliased(X)\ncm.aliased(X, k=16)\nouter(X)\ncm.outer(X, n=3)\n"
+        "outer_one(X, m=1)\nkeyed(X, 'k')\ncm.keyed(X, 'k')\nconst_fed(X, N)\ngen_local(X)\n"
     )
     (tmp_path / "tests" / "test_mod.py").write_text(
         "import crossai_ts_spark.mod as m\n\n\n"
-        "def test_it():\n    m.planted(2, w=5)\n    m.relay(2, m=3)\n"
+        "def test_it():\n    m.planted(2, w=5)\n    m.relay(2, m=3)\n    m.keyed({}, 'j')\n"
     )
-    assert option_report(tmp_path) == ["mod:outer_one(m)", "mod:planted(w)", "mod:relay(m)"]
+    assert option_report(tmp_path) == [
+        "mod:keyed(key)", "mod:outer_one(m)", "mod:planted(w)", "mod:relay(m)",
+    ]

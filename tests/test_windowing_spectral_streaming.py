@@ -132,6 +132,33 @@ def test_incremental_tier1_null_token_element_is_a_named_error(spark, tmp_path):
     assert spark.sql("SELECT count(*) c FROM inc_tier1_holed").first()["c"] == 0
 
 
+def test_incremental_tier1_null_chunk_is_a_named_error(spark, tmp_path):
+    """A null ``tokens`` cell in a doc's chunks fails the query with an
+    error that names the doc, not an unnamed TypeError."""
+    import pytest
+
+    from crossai_ts_spark.streaming.rollup_stream import incremental_tier1
+
+    schema = "doc_id string, chunk_idx long, tokens array<int>, is_last boolean, source string"
+    in_dir = tmp_path / "null_chunk"
+    spark.createDataFrame([("gappy", 0, [1, 2, 3], False, "s"), ("gappy", 1, None, True, "s")],
+                          schema).coalesce(1).write.parquet(str(in_dir / "t000"))
+    stream = spark.readStream.schema(schema).parquet(str(in_dir / "t*"))
+    q = (
+        incremental_tier1(stream, w=2)
+        .writeStream.outputMode("append")
+        .format("memory")
+        .queryName("inc_tier1_null_chunk")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    try:
+        with pytest.raises(Exception, match=r"doc_id 'gappy': tokens cell is null"):
+            q.processAllAvailable()
+    finally:
+        q.stop()
+
+
 def test_incremental_tier1_restart_from_checkpoint(spark, tmp_path):
     """Exactly-once across a query RESTART: the stateful incremental rollup
     is stopped mid-stream (half the trigger files processed), then a new
@@ -470,17 +497,17 @@ def test_streaming_cms_matches_batch(spark, tmp_path, monkeypatch):
     # zipf-ish repeats so several keys share cells (collisions exercised)
     rows = [(f"k{(i * i) % 37}",) for i in range(500)]
     in_dir = tmp_path / "cms_stream"
-    spark.createDataFrame(rows[:250], "key string").coalesce(1).write.parquet(
+    spark.createDataFrame(rows[:250], "ngram string").coalesce(1).write.parquet(
         str(in_dir / "b0")
     )
-    spark.createDataFrame(rows[250:], "key string").coalesce(1).write.parquet(
+    spark.createDataFrame(rows[250:], "ngram string").coalesce(1).write.parquet(
         str(in_dir / "b1")
     )
 
-    raw = spark.readStream.schema("key string").option("maxFilesPerTrigger", 1).parquet(
+    raw = spark.readStream.schema("ngram string").option("maxFilesPerTrigger", 1).parquet(
         str(in_dir) + "/*"
     )
-    run_to_memory(cms_build(raw, key="key"), "cms_stream_out",
+    run_to_memory(cms_build(raw), "cms_stream_out",
                   output_mode="complete")
     got = (
         spark.sql("SELECT * FROM cms_stream_out").toPandas()
@@ -488,20 +515,20 @@ def test_streaming_cms_matches_batch(spark, tmp_path, monkeypatch):
     )
     assert len(got) <= d * w  # bounded state, never keyed by stream size
 
-    batch = spark.createDataFrame(rows, "key string")
+    batch = spark.createDataFrame(rows, "ngram string")
     want = (
-        cms_build(batch, key="key").toPandas()
+        cms_build(batch).toPandas()
         .sort_values(["row", "cell"]).reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
 
     # identical sketches => identical estimates; spot the guarantee too
-    queries = spark.createDataFrame([(f"k{j}",) for j in range(37)], "key string")
+    queries = spark.createDataFrame([(f"k{j}",) for j in range(37)], "ngram string")
     stream_sketch = spark.sql("SELECT * FROM cms_stream_out")
-    est = cms_lookup(stream_sketch, queries, key="key").toPandas()
-    truth = pd.DataFrame(rows, columns=["key"]).value_counts("key")
+    est = cms_lookup(stream_sketch, queries).toPandas()
+    truth = pd.DataFrame(rows, columns=["ngram"]).value_counts("ngram")
     for _, r in est.iterrows():
-        assert r["est"] >= truth.get(r["key"], 0)  # one-sided: est >= truth
+        assert r["est"] >= truth.get(r["ngram"], 0)  # one-sided: est >= truth
 
 
 def test_streaming_kmv_matches_batch(spark, tmp_path):
