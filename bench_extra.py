@@ -3,9 +3,12 @@ from the frozen ``bench.py``.
 
 Usage:
   python bench_extra.py q1 q2 ...          # time named queries (min of N)
-  python bench_extra.py --plans q1 q2 ...  # also dump plans/<PLAN_TAG>/<q>.txt
+  python bench_extra.py --plans q1 q2 ...  # only dump plans/<PLAN_TAG>/<q>.txt
                                            # and each oracle_sql() text to <q>.sql
   PLAN_TAG=before|after  BENCH_TRIALS=3  SPARK_GRAFT_SF_DIR=...
+
+No query names means every registered query. ``--plans`` runs no query;
+timing needs ``BENCH_TRIALS`` >= 1.
 
 Dumped plans have expression ids, plan ids, RDD ids, file paths and UUIDs
 replaced by placeholders, so two checkouts' plans and DuckDB oracle texts
@@ -46,6 +49,9 @@ def main() -> int:
     tag = os.environ.get("PLAN_TAG", "before")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     n_trials = int(os.environ.get("BENCH_TRIALS", "3"))
+    if n_trials < 1 and not dump_plans:
+        print(f"[bench_extra] BENCH_TRIALS={n_trials}: nothing to time (>= 1, or --plans)", file=sys.stderr)
+        return 2
     spark = get_spark(app_name="bench_extra")
 
     import __spark_entry__ as e
@@ -53,12 +59,14 @@ def main() -> int:
     qs = e.queries()
     sqls = e.oracle_sql()
     names = args or list(qs)
-    # warm-up (uncounted): JVM codegen + Arrow + python workers
-    try:
-        qs["tokenize_stats"](spark, sf_dir).write.format("noop").mode("overwrite").save()
-    except Exception:
-        pass
     from crossai_ts_spark.caching import release_tracked
+
+    if not dump_plans:
+        # warm-up (uncounted): JVM codegen + Arrow + python workers
+        try:
+            qs["tokenize_stats"](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        except Exception:
+            pass
 
     out: dict[str, dict] = {}
     plan_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans", tag)
@@ -76,6 +84,7 @@ def main() -> int:
             if name in sqls:
                 with open(os.path.join(plan_dir, f"{name}.sql"), "w") as f:
                     f.write(sqls[name])
+            continue
         trials = []
         for _ in range(n_trials):
             spark.sparkContext.setJobDescription(f"bench_extra: {name}")
@@ -87,7 +96,8 @@ def main() -> int:
             release_tracked()
         out[name] = {"min": min(trials), "trials": trials}
         print(f"[bench_extra] {name}: min={min(trials)} trials={trials}", file=sys.stderr)
-    print(json.dumps(out))
+    if not dump_plans:
+        print(json.dumps(out))
     return 0
 
 

@@ -25,6 +25,9 @@ from pyspark.sql import functions as F
 
 from .functions.multichannel import NATIVE_SR, TARGET_SR, magnitude_signal, resample_2d, sma_signal
 from .functions.spectral_exact import dsp_exact_sql, mfcc_stats_sql, spectral_exact_sql
+from .literals import duck_double as _dbl
+from .literals import duck_doubles as _dbl_list
+from .literals import spark_doubles
 from .operators.cms import CMS_D, CMS_W, cms_build, cms_lookup
 from .operators.dedup import (
     EMB_BITS, EMB_COS_MIN, EMB_MAX_BUCKET, EMB_SEED, EMB_TABLES, LSH_BAND, LSH_MAX_BUCKET,
@@ -59,16 +62,6 @@ def q(name: str, sql: str | None):
         return fn
 
     return deco
-
-
-# DuckDB DOUBLE literals, each explicitly cast so the parsed value is the
-# exact float64 the Spark plan embeds (repr() is shortest-round-trip)
-def _dbl(v: float) -> str:
-    return f"'{float(v)!r}'::DOUBLE"
-
-
-def _dbl_list(vs) -> str:
-    return "[" + ", ".join(map(_dbl, vs)) + "]"
 
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -3766,7 +3759,7 @@ def resample_fir_exact(spark, sf_dir):
     and input slice are materialized as columns so the HOF lambdas read
     them per row instead of re-building per element."""
     taps = _fir_exact_taps()
-    h_arr = "array(" + ", ".join(f"cast('{t!r}' as double)" for t in taps) + ")"
+    h_arr = spark_doubles(taps)
     seqs = tokenize_documents(load(spark, sf_dir, "documents"))
     d = seqs.filter(F.size("tokens") >= 64).select(
         "doc_id",
@@ -3994,7 +3987,7 @@ def rolling_window_hann(spark, sf_dir):
     )
     w = _hann_literals()
     wsum = repr(float(sum(w)))
-    arr = "array(" + ", ".join(f"cast('{v!r}' as double)" for v in w) + ")"
+    arr = spark_doubles(w)
     expr = f"""
     transform(sequence(0, cast((size(tokens) - 16) / 8 as int)), wi ->
       aggregate(zip_with(slice(tokens, wi * 8 + 1, 16), {arr},

@@ -29,7 +29,10 @@ arithmetic).
 The Spark surface is ``compress_tiers`` / ``decompress_tiers``: one
 ``mapInPandas`` pass over rows sorted by (doc_id, tier, window_start)
 inside each doc_id partition (SURVEY §4.3.3), so encoded blobs are
-deterministic under any partitioning. Every kernel makes one call per codec
+deterministic under any partitioning. The checkpointed job's bucket commit
+(``plans/checkpoint.commit_bucket``) needs no sort: it encodes each doc's
+tier windows in the batch the cascade made them in. Both build their rows
+with :func:`encode_segments`. Every kernel makes one call per codec
 per Arrow batch to the batch codecs in functions/codecs_fast.py, which
 write bit for bit what the golden per-value encoders in oracle/codecs.py
 write (the golden decoders are there too).
@@ -44,6 +47,23 @@ from ..workers import worker_kernel
 from .codecs_fast import dod_decode_batch, dod_encode_batch, gorilla_decode_batch, gorilla_encode_batch
 
 # --------------------------------------------------------- spark surface
+
+
+def encode_segments(keys: dict[str, np.ndarray], window_start: np.ndarray, t_mean: np.ndarray,
+                    n: np.ndarray) -> dict[str, np.ndarray]:
+    """The segment columns of a batch of groups: one row per group.
+
+    Group i is the next ``n[i]`` points of ``window_start`` / ``t_mean``,
+    in window order; ``keys`` holds one value per group for each key column
+    (``doc_id``, ``source`` and, where the tier is not in the path, ``tier``).
+    One encode call per codec covers every group."""
+    return {
+        **keys,
+        "n_points": n,
+        "codec": np.repeat("gorilla+dod/v1", n.size),
+        "ts_blob": dod_encode_batch(window_start.astype(np.int64, copy=False), n),
+        "val_blob": gorilla_encode_batch(t_mean.astype(np.float64, copy=False), n),
+    }
 
 
 def compress_tiers(tier_df):
@@ -77,17 +97,12 @@ def compress_tiers(tier_df):
     def encode(pdf: pd.DataFrame, starts: np.ndarray) -> pd.DataFrame:
         """The groups starting at rows ``starts`` of ``pdf`` -> segments."""
         n = np.diff(np.append(starts, len(pdf)))
-        return pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"].to_numpy()[starts],
-                "source": pdf["source"].to_numpy()[starts],
-                "tier": pdf["tier"].to_numpy()[starts].astype(np.int32),
-                "n_points": n,
-                "codec": np.repeat("gorilla+dod/v1", starts.size),
-                "ts_blob": dod_encode_batch(pdf["window_start"].to_numpy(dtype=np.int64), n),
-                "val_blob": gorilla_encode_batch(pdf["t_mean"].to_numpy(dtype=np.float64), n),
-            }
-        )
+        keys = {
+            "doc_id": pdf["doc_id"].to_numpy()[starts],
+            "source": pdf["source"].to_numpy()[starts],
+            "tier": pdf["tier"].to_numpy()[starts].astype(np.int32),
+        }
+        return pd.DataFrame(encode_segments(keys, pdf["window_start"].to_numpy(), pdf["t_mean"].to_numpy(), n))
 
     @worker_kernel
     def kernel(batches):

@@ -35,6 +35,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..literals import duck_doubles
 from ..workers import worker_kernel
 
 N = 64  # frame length
@@ -300,14 +301,6 @@ def _int_list(arr) -> str:
     return "[" + ", ".join(str(int(v)) for v in arr) + "]::BIGINT[]"
 
 
-def _dbl_list(arr) -> str:
-    # string-cast, NOT a bare numeric literal: DuckDB parses bare decimals
-    # as DECIMAL and the DECIMAL->DOUBLE conversion double-rounds (measured
-    # 1-ULP off on 17-digit values); '…'::DOUBLE parses straight to the
-    # nearest double, matching Python repr round-trip exactly
-    return "[" + ", ".join(f"'{float(v)!r}'::DOUBLE" for v in arr) + "]::DOUBLE[]"
-
-
 def _fold_sql(lst: str) -> str:
     return f"list_reduce(list_prepend(0.0::DOUBLE, {lst}), (a, b) -> a + b)"
 
@@ -392,7 +385,7 @@ FROM f4 JOIN rq ON rq.doc_id = f4.doc_id
 def _logmel_list_sql() -> str:
     mels = ", ".join(
         "ln("
-        + _fold_sql(f"list_transform(psd, (v, i) -> ({_dbl_list(MEL_W[m])})[i] * v)")
+        + _fold_sql(f"list_transform(psd, (v, i) -> ({duck_doubles(MEL_W[m])}::DOUBLE[])[i] * v)")
         + " + 1e-10)"
         for m in range(N_MELS)
     )
@@ -400,13 +393,13 @@ def _logmel_list_sql() -> str:
 
 
 def _mfcc_q_sql(c: int) -> str:
-    fold = _fold_sql(f"list_transform(lm, (v, i) -> ({_dbl_list(DCT[c])})[i] * v)")
+    fold = _fold_sql(f"list_transform(lm, (v, i) -> ({duck_doubles(DCT[c])}::DOUBLE[])[i] * v)")
     return f"floor(({fold}) * {float(MFCC_Q)!r})::BIGINT"
 
 
 def dsp_exact_sql() -> str:
     mel_cols = ",\n       ".join(
-        _fold_sql(f"list_transform(psd, (v, i) -> ({_dbl_list(MEL_W[m])})[i] * v)")
+        _fold_sql(f"list_transform(psd, (v, i) -> ({duck_doubles(MEL_W[m])}::DOUBLE[])[i] * v)")
         + f" AS mel_{m}"
         for m in range(N_MELS)
     )

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..literals import spark_doubles
+
 # (md5 of "<doc_id>:<i>") first 8 hex chars -> uniform bigint in [0, 2^32)
 _HASH_U32 = "conv(substring(md5(cast(concat({key}, ':', {i}) as binary)), 1, 8), 16, 10)"
 
@@ -169,11 +171,10 @@ def convolve_hann(df: DataFrame) -> DataFrame:
     w = hann(CONV_SIZE)
     w = w / w.sum()  # tsaug normalizes the window
     half = CONV_SIZE // 2
-    lits = ", ".join(f"cast('{float(v)!r}' as double)" for v in w)
     expr = f"""
     transform(tokens, (x, i) ->
       aggregate(sequence(0, {CONV_SIZE - 1}), cast(0.0 as double), (a, k) ->
-        a + element_at(array({lits}), k + 1)
+        a + element_at({spark_doubles(w)}, k + 1)
           * if(i + k - {half} >= 0 and i + k - {half} < size(tokens),
                cast(element_at(tokens, i + k - {half} + 1) as double), cast(0.0 as double))))
     """

@@ -11,8 +11,10 @@ Scale design (the part that matters at 10^12 sequences / 100 TB):
   last∘last. So the entire 3-tier rollup of 100 TB of tokens is one narrow
   map stage; only the (tiny) tier rows are ever shuffled — and only if a
   later op asks for it.
-* :func:`cascade` is the only tier rollup: the checkpointed job runs it
-  per bucket and bench.py times tier k as ``cascade(..., tiers=k)``. The
+* :func:`cascade_batch` is the only tier rollup kernel: :func:`cascade`
+  runs it per Arrow batch (bench.py times tier k as ``cascade(...,
+  tiers=k)``), and so does the checkpointed job's bucket commit
+  (``plans/checkpoint.commit_bucket``), which writes the tiers itself. The
   relational groupBy re-aggregation of a stored tier is a test reference
   in ``oracle/rollup.py``. ``operators/salted.py`` holds the salted
   two-phase rollup for skewed global keys.
@@ -111,6 +113,57 @@ def tumbling_rollup(flat: np.ndarray, doc_base: np.ndarray, doc_len: np.ndarray,
     }
 
 
+def tier_widths(w: int, fanout: int, tiers: int) -> list[int]:
+    """The window width of each tier 1..``tiers``; ``w``, ``fanout`` or
+    ``tiers`` below 1 raises ``ValueError`` naming the argument."""
+    for name, v in (("w", w), ("fanout", fanout), ("tiers", tiers)):
+        if v < 1:
+            raise ValueError(f"{name} must be >= 1, got {v}")
+    return [tier_width(k, w, fanout) for k in range(1, tiers + 1)]
+
+
+def _merge_tier(r: dict[str, np.ndarray], nw_prev: np.ndarray, fanout: int,
+                width: int) -> tuple[np.ndarray, dict[str, np.ndarray]]:
+    """Tier k -> k+1 over the whole batch: reduceat on the concatenated
+    tier-k window arrays with per-doc boundaries (min∘min, Σ∘Σ, ...)."""
+    basep = np.concatenate(([0], np.cumsum(nw_prev)[:-1]))
+    nw, widx, starts, ends = _window_layout(basep, nw_prev, fanout)
+    return nw, {
+        "window_start": widx * width,
+        "t_min": np.minimum.reduceat(r["t_min"], starts),
+        "t_max": np.maximum.reduceat(r["t_max"], starts),
+        "t_sum": np.add.reduceat(r["t_sum"], starts),
+        "t_cnt": np.add.reduceat(r["t_cnt"], starts),
+        "t_last": r["t_last"][ends - 1],
+    }
+
+
+def cascade_batch(pdf: pd.DataFrame, widths: list[int],
+                  fanout: int) -> Iterator[tuple[np.ndarray, dict[str, np.ndarray]]]:
+    """The cascade of one batch of non-empty ``sequences`` rows, tier by tier.
+
+    Yields per tier (1 first) each row's window count and the tier's
+    :data:`~crossai_ts_spark.schema.TIER_SCHEMA` columns. A row's windows
+    are contiguous and in ``window_start`` order within its tier. Tier 1 is
+    reduceat over the raw tokens; tier k+1 merges tier k's arrays, so the
+    raw tokens are scanned once. A null element raises ``ValueError``
+    naming the doc."""
+    flat, doc_base, doc_len = _flat_tokens(pdf)
+    flat = flat.astype(np.int32, copy=False)
+    doc_np, src_np = pdf["doc_id"].to_numpy(), pdf["source"].to_numpy()
+    nw, r = tumbling_rollup(flat, doc_base, doc_len, widths[0])
+    for k, width in enumerate(widths, start=1):
+        if k > 1:
+            nw, r = _merge_tier(r, nw, fanout, width)
+        yield nw, {
+            "doc_id": np.repeat(doc_np, nw),
+            "source": np.repeat(src_np, nw),
+            "tier": np.full(int(nw.sum()), k, dtype=np.int32),
+            **r,
+            "t_mean": r["t_sum"] / r["t_cnt"],
+        }
+
+
 def cascade(
     df: DataFrame,
     w: int = DEFAULT_W,
@@ -121,10 +174,8 @@ def cascade(
 ) -> DataFrame:
     """All tiers via one vectorized numpy kernel in mapInPandas (Arrow).
 
-    Tier 1 is reduceat over raw tokens; tier k+1 is the MERGE of tier k's
-    arrays (min∘min, Σ∘Σ, ...) — raw tokens are scanned exactly once per
-    doc, and the cascade touches only the (fanout x smaller per level) tier
-    arrays. Output columns are assembled per Arrow batch, not per doc.
+    Each Arrow batch goes through :func:`cascade_batch` and its tiers are
+    concatenated into one output batch, assembled per batch, not per doc.
     Tier 1 alone is ``cascade(df, w=w, tiers=1)``.
 
     Rows with null or empty ``tokens`` drop (:data:`NONEMPTY`); windows are
@@ -138,49 +189,15 @@ def cascade(
     """
     if strategy != "pandas":
         raise ValueError(f"unknown strategy {strategy!r}")
-    for name, v in (("w", w), ("fanout", fanout), ("tiers", tiers)):
-        if v < 1:
-            raise ValueError(f"{name} must be >= 1, got {v}")
-    widths = [tier_width(k, w, fanout) for k in range(1, tiers + 1)]
-
-    def batch_merge(r, nw_prev, fo, width):
-        """Tier k -> k+1 over the whole batch: reduceat on the concatenated
-        tier-k window arrays with per-doc boundaries (min∘min, Σ∘Σ, ...)."""
-        basep = np.concatenate(([0], np.cumsum(nw_prev)[:-1]))
-        nw, widx, starts, ends = _window_layout(basep, nw_prev, fo)
-        return nw, {
-            "window_start": widx * width,
-            "t_min": np.minimum.reduceat(r["t_min"], starts),
-            "t_max": np.maximum.reduceat(r["t_max"], starts),
-            "t_sum": np.add.reduceat(r["t_sum"], starts),
-            "t_cnt": np.add.reduceat(r["t_cnt"], starts),
-            "t_last": r["t_last"][ends - 1],
-        }
-
-    cols = ["window_start", "t_min", "t_max", "t_sum", "t_cnt", "t_last"]
+    widths = tier_widths(w, fanout, tiers)
 
     @worker_kernel
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if not len(pdf):
                 continue
-            doc_np = pdf["doc_id"].to_numpy()
-            src_np = pdf["source"].to_numpy()
-            flat, doc_base, doc_len = _flat_tokens(pdf)
-            flat = flat.astype(np.int32, copy=False)
-            acc: dict[str, list] = {c: [] for c in ["doc_id", "source", "tier", *cols]}
-            nw, r = tumbling_rollup(flat, doc_base, doc_len, widths[0])
-            for k in range(1, tiers + 1):
-                if k > 1:
-                    nw, r = batch_merge(r, nw, fanout, widths[k - 1])
-                acc["doc_id"].append(np.repeat(doc_np, nw))
-                acc["source"].append(np.repeat(src_np, nw))
-                acc["tier"].append(np.full(int(nw.sum()), k, dtype=np.int32))
-                for c in cols:
-                    acc[c].append(r[c])
-            out = {c: np.concatenate(v) for c, v in acc.items()}
-            out["t_mean"] = out["t_sum"] / out["t_cnt"]
-            yield pd.DataFrame(out)
+            per_tier = [cols for _, cols in cascade_batch(pdf, widths, fanout)]
+            yield pd.DataFrame({c: np.concatenate([t[c] for t in per_tier]) for c in per_tier[0]})
 
     return df.filter(NONEMPTY).mapInPandas(kernel, schema=TIER_SCHEMA)
 

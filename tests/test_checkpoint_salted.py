@@ -2,8 +2,10 @@
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import shutil
 import threading
 
 import numpy as np
@@ -19,6 +21,10 @@ from crossai_ts_spark.plans.checkpoint import (
     pending_buckets,
     with_bucket,
 )
+
+
+def _params(tiers: int) -> dict:
+    return {"w": 64, "fanout": 8, "n_tiers": tiers}
 
 
 def test_salted_tier_rollup_invariance(spark, tiny_df, monkeypatch):
@@ -43,9 +49,8 @@ def test_checkpoint_commit_and_resume(spark, tiny_df, tmp_path):
 
     # commit buckets 0 and 2 only
     for b in (0, 2):
-        sub = seqs.filter(F.col("bucket") == b).drop("bucket")
-        m = commit_bucket(cascade(sub, w=64, fanout=8, tiers=2), out, b, "test-input",
-                          params={"n_tiers": 2})
+        sub = seqs.filter(F.col("bucket") == b)
+        m = commit_bucket(sub, out, b, "test-input", params=_params(2))
         assert m["bucket"] == b
         assert m["tiers"]  # per-tier lineage metrics present
         for t in m["tiers"].values():
@@ -61,8 +66,8 @@ def test_checkpoint_commit_and_resume(spark, tiny_df, tmp_path):
     assert m0["code_version"]
 
     # re-commit of an already-done bucket is idempotent
-    sub = seqs.filter(F.col("bucket") == 0).drop("bucket")
-    commit_bucket(cascade(sub, w=64, fanout=8, tiers=2), out, 0, "test-input", params={"n_tiers": 2})
+    sub = seqs.filter(F.col("bucket") == 0)
+    commit_bucket(sub, out, 0, "test-input", params=_params(2))
     assert completed_buckets(out) == {0, 2}
 
     # committed data is readable and tier-partitioned
@@ -73,13 +78,12 @@ def test_checkpoint_commit_and_resume(spark, tiny_df, tmp_path):
 def test_commit_bucket_uri_guard(spark, tiny_df, tmp_path):
     """Remote schemes rejected; file:// and Hadoop-style file:/ both land in
     the same local directory instead of a relative './file:...' dir."""
-    tiers = cascade(tiny_df, w=64, fanout=8, tiers=1)
     for bad in ("hdfs://nn/x", "s3a://bucket/x", "hdfs:/x"):
         with pytest.raises(ValueError, match="driver-local"):
-            commit_bucket(tiers, bad, 0, "t", params={"n_tiers": 1})
+            commit_bucket(tiny_df, bad, 0, "t", params=_params(1))
     out = str(tmp_path / "uri_out")
-    commit_bucket(tiers, f"file://{out}", 0, "t", params={"n_tiers": 1})
-    commit_bucket(tiers, f"file:{out}", 1, "t", params={"n_tiers": 1})  # single-slash Hadoop form
+    commit_bucket(tiny_df, f"file://{out}", 0, "t", params=_params(1))
+    commit_bucket(tiny_df, f"file:{out}", 1, "t", params=_params(1))  # single-slash Hadoop form
     assert completed_buckets(out) == {0, 1}
     assert not os.path.exists("file:")  # no relative junk dir
 
@@ -113,8 +117,7 @@ def test_recommit_killed_before_rename_leaves_bucket_pending(spark, tiny_df, tmp
     """A re-commit dropped between removing the old data and renaming the new
     data in must not leave the old manifest claiming the bucket."""
     out = str(tmp_path / "kill_out")
-    tiers = cascade(tiny_df, w=64, fanout=8, tiers=1)
-    commit_bucket(tiers, out, 0, "t", params={"n_tiers": 1})
+    commit_bucket(tiny_df, out, 0, "t", params=_params(1))
     assert pending_buckets(out, 1, {}) == []
 
     def killed(src, dst):
@@ -122,7 +125,7 @@ def test_recommit_killed_before_rename_leaves_bucket_pending(spark, tiny_df, tmp
 
     monkeypatch.setattr(os, "replace", killed)
     with pytest.raises(OSError, match="killed"):
-        commit_bucket(tiers, out, 0, "t", params={"n_tiers": 1})
+        commit_bucket(tiny_df, out, 0, "t", params=_params(1))
     assert pending_buckets(out, 1, {}) == [0]
     assert not os.path.exists(os.path.join(out, "_manifests", "0.json"))
 
@@ -148,10 +151,31 @@ def test_resume_with_other_bucket_count_raises(spark, tmp_path):
     assert job(4, resume=True) == 0  # same settings: nothing pending
 
 
-def _reread_tiers(spark, path):
-    """Test-only second read: the manifest's per-tier figures by groupBy."""
+def test_resume_refuses_an_out_of_another_layout(spark, tmp_path):
+    """A manifest without this layout (one written while the segments were
+    one global table after all buckets) is refused by name, not resumed
+    into a mix of the two layouts."""
+    from jobs.rollup_job import main
+
+    out = str(tmp_path / "job_out")
+    args = ["--input", "synthetic:12", "--out", out, "--buckets", "2", "--w", "64", "--fanout", "8",
+            "--tiers", "2", "--master", "local[4]"]
+    assert main(args) == 0
+    path = os.path.join(out, "_manifests", "1.json")
+    with open(path) as f:
+        m = json.load(f)
+    del m["layout"]
+    with open(path, "w") as f:
+        json.dump(m, f)
+    with pytest.raises(ValueError, match="layout=None"):
+        main([*args, "--resume"])
+
+
+def _reread_tiers(spark, out, bucket):
+    """Test-only second read: the manifest's per-tier figures by groupBy over
+    both tables, and the sizes of the files on disk."""
     rows = (
-        spark.read.parquet(path)
+        spark.read.parquet(f"{out}/data/bucket={bucket}")
         .groupBy("tier")
         .agg(
             F.count("*").alias("rows"),
@@ -160,9 +184,26 @@ def _reread_tiers(spark, path):
             F.min("window_start").alias("min_window_start"),
             F.max("window_start").alias("max_window_start"),
         )
+        .join(
+            spark.read.parquet(f"{out}/compressed/bucket={bucket}")
+            .groupBy("tier")
+            .agg(
+                F.count("*").alias("segments"),
+                F.sum(F.length("ts_blob") + F.length("val_blob")).alias("segment_bytes"),
+            ),
+            "tier",
+        )
         .collect()
     )
-    return {str(r.tier): {k: int(v) for k, v in r.asDict().items() if k != "tier"} for r in rows}
+    figs = {str(r.tier): {k: int(v) for k, v in r.asDict().items() if k != "tier"} for r in rows}
+    for k, t in figs.items():
+        t["bytes_written"] = sum(
+            os.path.getsize(os.path.join(d, f))
+            for table in ("data", "compressed")
+            for d in [os.path.join(out, table, f"bucket={bucket}", f"tier={k}")]
+            for f in os.listdir(d)
+        )
+    return figs
 
 
 @pytest.mark.parametrize("tiers", [2, 3])
@@ -171,11 +212,11 @@ def test_manifest_matches_reread(spark, tiny_df, tmp_path, tiers):
     n_buckets = 3
     seqs = with_bucket(tiny_df, n_buckets)
     for b in range(n_buckets):
-        sub = seqs.filter(F.col("bucket") == b).drop("bucket")
-        m = commit_bucket(cascade(sub, w=64, fanout=8, tiers=tiers), out, b, "t",
-                          params={"n_tiers": tiers})
+        sub = seqs.filter(F.col("bucket") == b)
+        m = commit_bucket(sub, out, b, "t", params=_params(tiers))
         assert sorted(m["tiers"]) == [str(k) for k in range(1, tiers + 1)]
-        assert m["tiers"] == _reread_tiers(spark, f"{out}/data/bucket={b}")
+        assert m["tiers"] == _reread_tiers(spark, out, b)
+        assert m["input_rows"] == sub.count()
         with open(os.path.join(out, "_manifests", f"{b}.json")) as f:
             assert json.load(f)["tiers"] == m["tiers"]
 
@@ -188,27 +229,52 @@ def test_manifest_docs_counts_series_not_ids(spark, tiny_docs, tmp_path):
     doc = tiny_docs[tiny_docs["n_tok"] > 0].iloc[[0]]
     twice = spark.createDataFrame(pd.concat([doc, doc], ignore_index=True), schema=SEQUENCES_SCHEMA)
     out = str(tmp_path / "dup_out")
-    m = commit_bucket(cascade(twice, w=64, fanout=8, tiers=2), out, 0, "t", params={"n_tiers": 2})
+    m = commit_bucket(twice, out, 0, "t", params=_params(2))
     assert {k: t["docs"] for k, t in m["tiers"].items()} == {"1": 2, "2": 2}
-    assert {k: t["docs"] for k, t in _reread_tiers(spark, f"{out}/data").items()} == {"1": 1, "2": 1}
+    assert {k: t["docs"] for k, t in _reread_tiers(spark, out, 0).items()} == {"1": 1, "2": 1}
+
+
+def test_repeated_doc_id_gives_one_segment_per_series(spark, tiny_docs, tmp_path):
+    """Each input row's windows are encoded where the cascade made them, so
+    two series under one doc_id are two segments per tier, each the one
+    series' points (a sort of all tier rows by doc_id would merge them)."""
+    from crossai_ts_spark.functions.codecs import decompress_tiers
+    from crossai_ts_spark.schema import SEQUENCES_SCHEMA
+
+    doc = tiny_docs[tiny_docs["n_tok"] > 64].iloc[[0]]
+    twice = spark.createDataFrame(pd.concat([doc, doc], ignore_index=True), schema=SEQUENCES_SCHEMA)
+    out = str(tmp_path / "dup_out")
+    m = commit_bucket(twice, out, 0, "t", params=_params(2))
+    segs = spark.read.parquet(f"{out}/compressed")
+    assert {k: t["segments"] for k, t in m["tiers"].items()} == {"1": 2, "2": 2}
+    for k, t in m["tiers"].items():
+        pts = [r.n_points for r in segs.filter(F.col("tier") == int(k)).collect()]
+        assert pts == [t["rows"] // 2] * 2
+    back = decompress_tiers(segs).toPandas().sort_values(["tier", "window_start"])
+    one = cascade(twice.limit(1), w=64, fanout=8, tiers=2).toPandas().sort_values(["tier", "window_start"])
+    assert back["window_start"].tolist() == np.repeat(one["window_start"].to_numpy(), 2).tolist()
+    assert back["value"].tolist() == np.repeat(one["t_mean"].to_numpy(), 2).tolist()
 
 
 def test_empty_bucket_commits_with_no_tiers(spark, tiny_df, tmp_path):
-    """A bucket no doc hashes to (more buckets than docs) still commits."""
+    """A bucket no doc hashes to (more buckets than docs) still commits, and
+    so does one whose rows have no tokens; ``input_rows`` counts those."""
     out = str(tmp_path / "empty_out")
-    m = commit_bucket(cascade(tiny_df.filter("false"), w=64, fanout=8, tiers=2), out, 0, "t",
-                      params={"n_tiers": 2})
-    assert m["tiers"] == {}
-    assert completed_buckets(out) == {0}
+    m = commit_bucket(tiny_df.filter("false"), out, 0, "t", params=_params(2))
+    assert m["tiers"] == {} and m["input_rows"] == 0
+    hollow = spark.createDataFrame([("d0", [], 0, "s"), ("d1", None, 0, "s")],
+                                   "doc_id string, tokens array<int>, n_tok int, source string")
+    m = commit_bucket(hollow, out, 1, "t", params=_params(2))
+    assert m["tiers"] == {} and m["input_rows"] == 2
+    assert completed_buckets(out) == {0, 1}
 
 
 def test_commit_is_one_spark_job(spark, tiny_df, tmp_path):
     sc = spark.sparkContext
-    tiers = cascade(tiny_df, w=64, fanout=8, tiers=3)
     group = f"commit-{tmp_path.name}"
     sc.setJobGroup(group, "commit_bucket")
     try:
-        commit_bucket(tiers, str(tmp_path / "jobs_out"), 0, "t", params={"n_tiers": 3})
+        commit_bucket(tiny_df, str(tmp_path / "jobs_out"), 0, "t", params=_params(3))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
@@ -217,15 +283,18 @@ def test_commit_is_one_spark_job(spark, tiny_df, tmp_path):
 
 
 def test_failed_write_raises_and_leaves_bucket_pending(spark, tiny_df, tmp_path):
-    """A tier_df that fails at execution time: commit_bucket raises (does not
-    wait on the observation forever) and writes no manifest."""
+    """A bucket whose kernel fails (a null token element in one task, after
+    the other tasks wrote their files): commit_bucket raises (does not hang)
+    and leaves no manifest and no bucket directory in data/ or compressed/."""
     out = str(tmp_path / "fail_out")
-    bad = cascade(tiny_df, w=64, fanout=8, tiers=1).withColumn("t_cnt", F.expr("t_cnt div 0"))
+    null_elem = spark.createDataFrame([("doc-null", [1, None, 3], 3, "s")],
+                                      "doc_id string, tokens array<int>, n_tok int, source string")
+    bad = tiny_df.unionByName(null_elem).repartition(3)
     err = []
 
     def run():
         try:
-            commit_bucket(bad, out, 0, "t", params={"n_tiers": 1})
+            commit_bucket(bad, out, 0, "t", params=_params(1))
         except Exception as e:  # noqa: BLE001 - inspected below
             err.append(e)
 
@@ -233,15 +302,17 @@ def test_failed_write_raises_and_leaves_bucket_pending(spark, tiny_df, tmp_path)
     t.start()
     t.join(300)
     assert not t.is_alive(), "commit_bucket hung after a failed write"
-    assert err and "DIVIDE_BY_ZERO" in str(err[0])
+    assert err and "'doc-null': tokens array holds a null element" in str(err[0])
     assert pending_buckets(out, 1, {}) == [0]
     assert not os.path.exists(os.path.join(out, "_manifests", "0.json"))
     assert not os.path.exists(os.path.join(out, "data", "bucket=0"))
+    assert not os.path.exists(os.path.join(out, "compressed", "bucket=0"))
 
 
 def test_rerun_with_fewer_buckets_drops_the_rest(spark, tmp_path):
     """A run without --resume into the output of a run with more buckets:
-    the extra buckets go, and --compress encodes only what this run wrote."""
+    the extra buckets go from data/ and compressed/, and so does a global
+    compressed/ table left by the layout before per-bucket segments."""
     from jobs.rollup_job import main
 
     out = str(tmp_path / "job_out")
@@ -251,8 +322,13 @@ def test_rerun_with_fewer_buckets_drops_the_rest(spark, tmp_path):
                      "--fanout", "8", "--tiers", "2", "--compress", "--master", "local[4]"])
 
     assert job(4) == 0
+    old = os.path.join(out, "compressed", "tier=1")
+    os.makedirs(old)
+    shutil.copy(glob.glob(os.path.join(out, "compressed", "bucket=0", "tier=1", "*.parquet"))[0], old)
+    open(os.path.join(out, "compressed", "_SUCCESS"), "w").close()
     assert job(3) == 0
     assert completed_buckets(out) == {0, 1, 2}
+    assert sorted(os.listdir(os.path.join(out, "compressed"))) == [f"bucket={b}" for b in range(3)]
     assert not os.path.exists(os.path.join(out, "data", "bucket=3"))
     rows = 0
     for b in range(3):
@@ -262,46 +338,98 @@ def test_rerun_with_fewer_buckets_drops_the_rest(spark, tmp_path):
     assert pts == rows
 
 
-@pytest.mark.parametrize("earlier_input", [None, "synthetic:25"], ids=["fresh_out", "stale_compressed"])
-def test_resume_redoes_a_compress_step_killed_after_every_bucket_committed(spark, tmp_path, monkeypatch,
-                                                                           earlier_input):
-    """A kill after the last bucket commit and before the compress write
-    finishes leaves every bucket committed: the resume has no pending bucket
-    but must still write the segments, byte for byte what an uninterrupted
-    run writes. With ``stale_compressed`` the --out already holds a finished
-    compressed/ (and its _SUCCESS) from a run over another input, which the
-    killed run must not leave standing as if it were its own."""
-    from crossai_ts_spark.sources import io
+def test_resume_after_a_kill_between_bucket_commits_reencodes_only_pending(spark, tmp_path, monkeypatch):
+    """A kill after one of three bucket commits, inside the second (its
+    tables renamed in, its manifest not yet written): the resume commits,
+    and so encodes, only the two pending buckets, and its tier rows and
+    segments are byte for byte those of an uninterrupted run."""
+    from crossai_ts_spark.plans import checkpoint
     from jobs.rollup_job import main
 
-    def job(out, *extra, input="synthetic:40"):
-        return main(["--input", input, "--out", out, "--buckets", "3", "--w", "64",
-                     "--fanout", "8", "--tiers", "2", "--compress", "--master", "local[4]", *extra])
+    def job(out, *extra):
+        return main(["--input", "synthetic:40", "--out", out, "--buckets", "3", "--w", "64",
+                     "--fanout", "8", "--tiers", "2", "--master", "local[4]", *extra])
 
-    def segments(out):
-        return sorted((r.doc_id, r.tier, r.n_points, bytes(r.ts_blob), bytes(r.val_blob))
-                      for r in spark.read.parquet(f"{out}/compressed").collect())
+    def table(out, name, cols):
+        return sorted(tuple(bytes(v) if isinstance(v, bytearray) else v for v in r)
+                      for r in spark.read.parquet(f"{out}/{name}").select(*cols).collect())
+
+    def tables(out):
+        return (table(out, "data", ["doc_id", "tier", "window_start", "t_sum", "t_cnt", "t_mean"]),
+                table(out, "compressed", ["doc_id", "tier", "n_points", "ts_blob", "val_blob"]))
 
     whole, killed = str(tmp_path / "whole"), str(tmp_path / "killed")
     assert job(whole) == 0
-    if earlier_input:
-        assert job(killed, input=earlier_input) == 0
-        assert segments(killed) != segments(whole)
-    real = io.write_table
+    real_manifest, real_commit = checkpoint.write_manifest, checkpoint.commit_bucket
 
-    def dies_on_compress(df, location, *a, **kw):
-        if location.endswith("/compressed"):
-            raise OSError("killed in the compress write")
-        return real(df, location, *a, **kw)
+    def dies_on_second(out_dir, bucket, payload):
+        if len(checkpoint.completed_buckets(out_dir)) == 1:
+            raise OSError("killed before the manifest")
+        real_manifest(out_dir, bucket, payload)
 
-    monkeypatch.setattr(io, "write_table", dies_on_compress)
+    monkeypatch.setattr(checkpoint, "write_manifest", dies_on_second)
     with pytest.raises(OSError, match="killed"):
         job(killed)
-    monkeypatch.setattr(io, "write_table", real)
-    assert completed_buckets(killed) == {0, 1, 2}
-    assert not os.path.exists(os.path.join(killed, "compressed", "_SUCCESS"))
+    monkeypatch.setattr(checkpoint, "write_manifest", real_manifest)
+    assert completed_buckets(killed) == {0}
+    assert os.path.isdir(os.path.join(killed, "compressed", "bucket=1"))  # renamed in, not vouched for
+
+    committed = []
+
+    def counting(seqs_df, out_dir, bucket, **kw):
+        committed.append(real_commit(seqs_df, out_dir, bucket, **kw))
+        return committed[-1]
+
+    monkeypatch.setattr(checkpoint, "commit_bucket", counting)
     assert job(killed, "--resume") == 0
-    assert segments(killed) == segments(whole)
+    assert [m["bucket"] for m in committed] == [1, 2]
+    segs = {b: json.load(open(os.path.join(whole, "_manifests", f"{b}.json")))["tiers"] for b in range(3)}
+    assert sum(t["segments"] for m in committed for t in m["tiers"].values()) == sum(
+        t["segments"] for b in (1, 2) for t in segs[b].values())
+    assert tables(killed) == tables(whole)
+
+
+def test_commit_segments_match_the_grouped_oracle(spark, tiny_df, tmp_path):
+    """The segments a bucket commit encodes in the cascade's batches are
+    bitwise the per-(doc, tier) oracle's over the same tier rows; the input
+    holds every pinned boundary doc (1, 63, 64, 65, 4096 and 65536 tokens)."""
+    from crossai_ts_spark.oracle.codecs import compress_tiers_grouped
+
+    assert tiny_df.filter(F.col("doc_id").contains("bnd")).count() == 6
+    out = str(tmp_path / "oracle_out")
+    commit_bucket(tiny_df.repartition(3), out, 0, "t", params=_params(3))
+    cols = ["doc_id", "source", "tier", "n_points", "codec", "ts_blob", "val_blob"]
+    got = spark.read.parquet(f"{out}/compressed").select(*cols)
+    want = compress_tiers_grouped(cascade(tiny_df, w=64, fanout=8, tiers=3)).select(*cols)
+    assert got.count() == want.count()
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+
+
+def test_commit_files_are_one_set_per_partition(spark, tiny_df, tmp_path):
+    """Retry safety: a partition run twice leaves one file per table and
+    tier, byte for byte the first run's, and a leftover hidden temp file of
+    a dead attempt is not read."""
+    from crossai_ts_spark.plans.checkpoint import FIGURES_SCHEMA, _bucket_kernel
+    from crossai_ts_spark.workers import worker_kernel
+
+    tmp = str(tmp_path / "tmp")
+    one = tiny_df.select("doc_id", "source", "tokens").coalesce(1)
+    kernel = worker_kernel(_bucket_kernel(tmp, [64, 512], 8))
+
+    def files():
+        return {os.path.relpath(os.path.join(d, f), tmp): open(os.path.join(d, f), "rb").read()
+                for d, _, fs in os.walk(tmp) for f in fs}
+
+    first = one.mapInPandas(kernel, FIGURES_SCHEMA).collect()
+    before = files()
+    assert sorted(before) == [f"{t}/tier={k}/part-00000.parquet" for t in ("compressed", "data") for k in (1, 2)]
+    assert one.mapInPandas(kernel, FIGURES_SCHEMA).collect() == first
+    assert files() == before
+
+    n = spark.read.parquet(f"{tmp}/data").count()
+    shutil.copy(os.path.join(tmp, "data", "tier=1", "part-00000.parquet"),
+                os.path.join(tmp, "data", "tier=1", ".part-00000-1.tmp"))
+    assert spark.read.parquet(f"{tmp}/data").count() == n
 
 
 def test_rollup_job_rejects_counts_below_one(spark, tmp_path):

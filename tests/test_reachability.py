@@ -180,6 +180,13 @@ class _Module:
         return {h[1:] for h in hits if h is not None and h[0] == "sym"}
 
 
+# symbols kept though nothing calls them, each with its reason
+SYMBOL_EXEMPT = {
+    "sources.io:write_table":
+        "perfbench/workloads.py wraps it by name until a benchmark change drops the wrap",
+}
+
+
 def symbol_report(root: pathlib.Path = ROOT, roots: list[pathlib.Path] | None = None) -> list[str]:
     """One line per package symbol outside ``oracle/`` that no production
     root reaches; a symbol only ``oracle/`` reaches says to move it there.
@@ -237,7 +244,7 @@ def symbol_report(root: pathlib.Path = ROOT, roots: list[pathlib.Path] | None = 
             continue
         rel = ".".join(p for p in f.relative_to(package).with_suffix("").parts if p != "__init__")
         for n in sorted(mod(f).tops):
-            if n.startswith("__") or (f, n) in reached:
+            if n.startswith("__") or (f, n) in reached or f"{rel}:{n}" in SYMBOL_EXEMPT:
                 continue
             if (f, n) in by_oracle:
                 lines.append(f"{rel}:{n}: only oracle/ reaches it; move it to oracle/")
